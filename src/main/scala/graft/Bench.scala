@@ -40,7 +40,7 @@ object Bench {
         .select(graft.functions.MisraGries.misra_gries(col("s"), 4))
         .collect()
       spark.range(256)
-        .select(approx_count_distinct(col("id")),
+        .select(graft.queries.PipelineQueries.ndvSketch(col("id")),
           percentile_approx(col("id"), lit(0.5), lit(100)))
         .collect()
     }

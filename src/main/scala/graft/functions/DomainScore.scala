@@ -25,10 +25,17 @@ import java.security.MessageDigest
   * per-row interpreted dispatch was the residual constant factor the
   * round-14 map-side rewrite left in place). The feature value is the
   * first md5 OUTPUT byte (= the first two hex chars read base-16);
-  * f*p+q never goes negative, so `%` equals `pmod`. Ties follow
+  * weights are required non-negative, so f*p+q never goes negative and
+  * `%` equals `pmod`. Ties follow
   * `greatest`'s struct order exactly: larger score, then binary-larger
   * class name. An empty token array scores 0 for every class and
   * returns the binary-largest class, as the fold form does.
+  *
+  * Null contract: the token array and its elements must be non-null
+  * (`words()` over non-null text guarantees both). A null array yields
+  * a NULL struct, where the fold form returns a class with a null
+  * score; a null element is undefined. Coalesce the array to empty at
+  * the call site if null text can reach it.
   *
   * The class list rides the expression as a literal (formula-derived
   * weights need no table at inference — see the query's comment).
@@ -38,6 +45,8 @@ case class DomainScore(child: Expression,
   extends RefCallCodegen {
 
   require(classes.nonEmpty, "classes must be non-empty")
+  require(classes.forall { case (_, p, q) => p >= 0 && q >= 0 },
+    s"class weights must be non-negative (% equals pmod only then): $classes")
 
   override def dataType: DataType = StructType(Seq(
     StructField("score", LongType, nullable = false),

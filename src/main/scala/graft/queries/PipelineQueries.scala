@@ -39,6 +39,17 @@ object PipelineQueries {
   def seqPackTargetBuckets(s: SparkSession): Int =
     s.sparkContext.defaultParallelism * 8
 
+  /** The distinct-count sketch `approx_stats` ships (ApproxStatsSpec
+    * gates this same expression): DataSketches HLL at lgConfigK 14,
+    * nominal rsd 1.04/sqrt(2^14) ~ 0.81%. Its aggregation buffer is ONE
+    * binary value; HLL++ (`approx_count_distinct`) at rsd 0.01 keeps
+    * 1,639 LongType buffer attributes, far past
+    * `spark.sql.codegen.maxFields` (PipelinePlanSpec guards the width),
+    * and cost about 2 s of executor CPU per run on a 2,000-doc corpus.
+    */
+  private[graft] def ndvSketch(c: Column): Column =
+    hll_sketch_estimate(hll_sketch_agg(c, 14))
+
   // ---- shared text plumbing (word 3-gram shingles + md5 minhash) ----
 
   private def words(c: Column): Column = split(lower(c), " ")
@@ -2270,24 +2281,25 @@ object PipelineQueries {
         Seq("jaccard" -> false, "dst" -> true), 2)
     }),
 
-    // sketch-based corpus profiling: HLL++ distinct counts and GK
-    // approximate percentiles — mergeable partial aggregates, the
-    // profiling shape that stays one pass at 100 TB where exact
-    // distinct/percentile would shuffle the corpus. Sketch INTERNALS
-    // differ by engine, so the oracle is TOLERANCE-BANDED: each engine
-    // computes its own sketches AND its own exact anchors, and emits
-    // booleans (estimate within ±5% of exact NDV; approx percentile
-    // within ±5% RANK of its target — integer rank counting, so no
-    // float-edge flakiness) plus the exact anchors. Hash-comparing the
-    // booleans + anchors is a REAL cross-engine check: a broken sketch
-    // on either side flips a boolean. In-engine error-bound gates live
-    // in ApproxStatsSpec.
+    // sketch-based corpus profiling: DataSketches HLL distinct counts
+    // (ndvSketch — not HLL++, whose 1,639-column buffer at rsd 0.01
+    // dominated this query's cost) and GK approximate percentiles —
+    // mergeable partial aggregates, the profiling shape that stays one
+    // pass at 100 TB where exact distinct/percentile would shuffle the
+    // corpus. Sketch INTERNALS differ by engine, so the oracle is
+    // TOLERANCE-BANDED: each engine computes its own sketches AND its
+    // own exact anchors, and emits booleans (estimate within ±5% of
+    // exact NDV; approx percentile within ±5% RANK of its target —
+    // integer rank counting, so no float-edge flakiness) plus the exact
+    // anchors. Hash-comparing the booleans + anchors is a REAL
+    // cross-engine check: a broken sketch on either side flips a
+    // boolean. In-engine error-bound gates live in ApproxStatsSpec.
     "approx_stats" -> ((s, d) => {
       val base = Tables.documents(s, d).select("lang", "text", "n_chars")
       val sk = base.groupBy("lang").agg(
         count(lit(1)).as("n_docs"),
         countDistinct(col("text")).as("distinct_texts"),
-        approx_count_distinct(col("text"), 0.01).as("andv"),
+        ndvSketch(col("text")).as("andv"),
         percentile_approx(col("n_chars").cast("double"), lit(0.5),
           lit(10000)).as("p50a"),
         percentile_approx(col("n_chars").cast("double"), lit(0.95),

@@ -195,10 +195,21 @@ object FileBloomIndex {
       fs.delete(hp(tmpRoot(path)), true)
       staged.foreach { case (lo, _) => swapShard(fs, path, lo, bps) }
     }
+    afterSidecarSwap(path)
     // data LAST: see the crash-discipline note above
     withB.repartition(col("fbib"))
       .write.partitionBy("fbib").mode("append").parquet(s"$path/data")
+    // a lookup between the swap and the data write may have memoized a
+    // listing WITHOUT the batch's new bucket dirs under the post-swap
+    // digest; no later digest change would evict it, so drop it here
+    // (uncontended, the swap already rotated the digest: no extra list)
+    presentMemo.remove(path)
   }
+
+  /** Test seam: runs between an append's sidecar swap and its data
+    * write — the window a concurrent lookup can land in.
+    */
+  @volatile private[graft] var afterSidecarSwap: String => Unit = _ => ()
 
   /** TOMBSTONE delete — the deletion-vector verb mirrored from the IVF
     * index ([[graft.operators.SimilarityOps.deleteFromIvfIndex]]):
@@ -463,8 +474,9 @@ object FileBloomIndex {
     * sidecar fingerprint digest (see [[loadFiltersFp]]): the bucket
     * dir SET only changes through verbs that also swap sidecar shard
     * dirs, so an unchanged digest serves the listing with zero
-    * metadata round-trips. The purge verb additionally drops the
-    * entry around its data-dir deletes (same-JVM crash window).
+    * metadata round-trips. Append drops the entry after its data
+    * write and purge around its data-dir deletes, so a lookup racing
+    * either verb cannot pin a stale listing under the new digest.
     */
   private val presentMemo =
     TrieMap.empty[String, (String, Set[String])]

@@ -43,4 +43,11 @@ class DomainScoreSpec extends SparkTestBase {
       .select(col("m.score"), col("m.cls")).collect().head
     assert(out.getLong(0) == 0L && out.getString(1) == "wiki")
   }
+
+  test("negative weights are rejected: % equals pmod only for f*p+q >= 0") {
+    for (bad <- Seq(("neg_p", -3L, 5L), ("neg_q", 3L, -5L)))
+      intercept[IllegalArgumentException] {
+        DomainScore.domain_score(col("w"), classes :+ bad)
+      }
+  }
 }

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * driver hash-gates it like every other query. This spec keeps the
   * sharper IN-ENGINE trust gates: the raw sketch estimates must respect
   * their configured error bounds against exact answers in the same
-  * session — HLL++ within its relative standard deviation,
-  * percentile_approx within its rank-error guarantee — and the banded
-  * query itself must come back all-green.
+  * session — the query's own NDV sketch (`PipelineQueries.ndvSketch`,
+  * DataSketches HLL at lgConfigK 14) within 1% relative standard
+  * deviation, percentile_approx within its rank-error guarantee — and
+  * the banded query itself must come back all-green.
   */
 class ApproxStatsSpec extends SparkTestBase {
 
@@ -19,7 +20,7 @@ class ApproxStatsSpec extends SparkTestBase {
   private def sketches = graft.Tables.documents(spark, sf)
     .groupBy("lang")
     .agg(
-      approx_count_distinct(col("text"), 0.01).as("andv"),
+      PipelineQueries.ndvSketch(col("text")).as("andv"),
       percentile_approx(col("n_chars").cast("double"), lit(0.5),
         lit(10000)).as("p50"),
       percentile_approx(col("n_chars").cast("double"), lit(0.95),
@@ -39,7 +40,7 @@ class ApproxStatsSpec extends SparkTestBase {
     }
   }
 
-  test("HLL++ distinct estimates stay within the configured rsd") {
+  test("DataSketches HLL distinct estimates stay within the configured rsd") {
     val got = sketches
     assert(got.nonEmpty)
     val exact = graft.Tables.documents(spark, sf)
@@ -48,11 +49,12 @@ class ApproxStatsSpec extends SparkTestBase {
     assert(got.keySet == exact.keySet)
     exact.foreach { case (lang, nd) =>
       val est = got(lang)._1
-      // rsd 0.01 configured; 5 sigma of slack keeps the gate meaningful
-      // (a broken sketch is off by far more) and never flaky
+      // rsd 0.01 gated (lgConfigK 14 is nominally 0.0081); 5 sigma of
+      // slack keeps the gate meaningful (a broken sketch is off by far
+      // more) and never flaky
       val tol = math.max(5.0 * 0.01 * nd, 1.0)
       assert(math.abs(est - nd) <= tol,
-        s"$lang: HLL++ estimate $est vs exact $nd (tol $tol)")
+        s"$lang: HLL estimate $est vs exact $nd (tol $tol)")
     }
   }
 

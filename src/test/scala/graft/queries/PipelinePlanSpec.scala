@@ -344,6 +344,27 @@ class PipelinePlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       s"schema drift: ${df.schema.toDDL} vs pinned ${expected.toDDL}")
   }
 
+  test("approx_stats: every aggregate buffer fits codegen maxFields") {
+    // HLL++ at rsd 0.01 carries 1,639 LongType buffer attributes, and
+    // its partial aggregate's output schema then exceeds maxFields
+    // (no whole-stage codegen). The NDV sketch must keep a narrow
+    // (DataSketches: one binary) buffer.
+    val df = SparkEntry.queries("approx_stats")(spark, sf)
+    df.collect()
+    val maxFields = spark.conf.get("spark.sql.codegen.maxFields").toInt
+    val aggs = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+    }
+    assert(aggs.nonEmpty, s"no aggregate in:\n${df.queryExecution.executedPlan}")
+    aggs.foreach { a =>
+      val width = a.aggregateExpressions
+        .flatMap(_.aggregateFunction.aggBufferAttributes).length
+      assert(width <= maxFields,
+        s"aggregate buffer of $width attributes > maxFields $maxFields:\n" +
+          a.simpleString(200))
+    }
+  }
+
   test("ngram_dup_spans: one posting shuffle, windowed df, no join") {
     // round-14 shape: per-doc-distinct CharWindows -> ONE
     // hashpartitioning(gram) exchange -> count-only window (bounded

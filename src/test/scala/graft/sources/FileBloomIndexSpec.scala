@@ -379,6 +379,28 @@ class FileBloomIndexSpec extends SparkTestBase {
     assert(bloomsOf(p) == bloomsOf(full))
   }
 
+  test("a lookup racing append's swap-to-data window keeps new buckets") {
+    val sqlc = spark
+    import sqlc.implicits._
+    val p = graft.queries.QueryTmp.dir("fbloomrace") + "/idx"
+    def rows(r: Range, b: Int) =
+      r.map(i => (i.toLong, b)).toDF("id", "b")
+    FileBloomIndex.write(rows(0 until 8, 0).union(rows(8 until 16, 1)),
+      "id", col("b"), p, 64L)
+    // the racing reader: the swapped sidecar already names bucket 20,
+    // but its data dir does not exist yet, so the listing it memoizes
+    // under the post-swap digest lacks fbib=20
+    FileBloomIndex.afterSidecarSwap = _ =>
+      assert(FileBloomIndex.lookup(spark, p, "id", "20").count() == 0)
+    try FileBloomIndex.append(rows(16 until 24, 20), "id", col("b"), p)
+    finally FileBloomIndex.afterSidecarSwap = _ => ()
+    val hit = FileBloomIndex.lookup(spark, p, "id", "20")
+      .select("id").collect().map(_.getLong(0)).toSeq
+    assert(hit == Seq(20L), s"new-bucket key hidden after append: $hit")
+    assert(FileBloomIndex.existingKeys(spark, p, "id", Seq("17", "3")) ==
+      Set("17", "3"))
+  }
+
   test("delete masks every read path; purge removes rows physically " +
       "and rebuilds only the touched blooms") {
     val base = graft.queries.QueryTmp.dir("fbloomdel")
