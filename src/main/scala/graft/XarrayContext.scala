@@ -1,6 +1,6 @@
 package graft
 
-import graft.grid.{BinaryGridStore, ChunkGrid, GridStore, VarDef}
+import graft.grid.{ChunkGrid, GridStore, VarDef, ZarrGridStore}
 import graft.sources.GridSource
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 
@@ -96,7 +96,7 @@ class XarrayContext(val spark: SparkSession) {
       budgetBytes: Long = ChunkGrid.AutoBudgetBytes,
       tableNames: Map[Seq[String], String] = Map.empty): Seq[String] = {
     val existing = store match {
-      case b: BinaryGridStore => b.chunks
+      case z: ZarrGridStore => z.chunkMap
       case _ => Map.empty[String, Int]
     }
     fromDataset(name, store,
@@ -164,38 +164,25 @@ class XarrayContext(val spark: SparkSession) {
     s"$catalog.$table"
   }
 
-  /** Distributed re-chunk ("compaction"): stream `store` through the
-    * DSv2 scan and rewrite it under `newChunks` at `dest`. The 100 TB
+  /** Distributed re-chunk ("compaction"): rewrite the Zarr tree
+    * `store` under `newChunks` at `dest` as a v2 tree. The 100 TB
     * operational fix for chunk-size drift — appends and fine-grained
     * writers accumulate small chunk files whose per-file open cost and
     * per-chunk planning rows eventually dominate (the object-store
     * small-files problem); compaction restores the 64–256 MB target.
-    * Everything stays distributed: input chunks stream through the
-    * columnar scan, output chunk files assemble through GridWriter's
-    * normal executor-side scatter (shuffle keyed on output chunk id),
-    * and per-chunk value stats + sums are recomputed at write time so
-    * zone-map pruning and metadata-answered aggregates survive the
-    * rewrite unchanged.
+    * Everything stays distributed ([[ZarrGridStore.writeDistributed]]):
+    * each output chunk is one executor task assembling its block from
+    * the source's chunk files, and per-chunk value stats + sums are
+    * recomputed at write time so zone-map pruning and
+    * metadata-answered aggregates survive the rewrite unchanged. The
+    * source's compressor is inherited — compaction must not silently
+    * re-encode.
     */
-  def rechunk(store: graft.grid.BinaryGridStore,
-      newChunks: Map[String, Int], dest: String,
-      codec: String = ""): graft.grid.BinaryGridStore = {
-    // codec "" = inherit — compaction must not silently re-encode
-    // (append preserves existing.codec for the same reason)
-    val effCodec = if (codec.isEmpty) store.codec else codec
-    // one scan PER DIM-GROUP: a var over (time, lat) and one over
-    // (time, lat, level) pivot to different tables (GridSource serves
-    // vars whose dims match the group exactly), so the writer pulls
-    // each var's rows from its own group's scan
-    val groups = store.schema.vars.map(_.dims).distinct
-    val dfByGroup = groups.map { dims =>
-      dims -> scratchDataFrame(s"rechunk@$dest/${dims.mkString("_")}",
-        store, store.chunks.filter { case (d, _) => dims.contains(d) },
-        dims)
-    }.toMap
-    graft.grid.GridWriter.writeGrouped(v => dfByGroup(v.dims),
-      store.schema, newChunks, dest, effCodec)
-  }
+  def rechunk(store: ZarrGridStore, newChunks: Map[String, Int],
+      dest: String): ZarrGridStore =
+    ZarrGridStore.writeDistributed(store, dest, newChunks,
+      ZarrGridStore.compressorSpec(
+        store.arrays(store.schema.vars.head.name)))
 
   /** API parity with the reference's legacy `from_map` (SURVEY §2A A17,
     * df.py:120-207): map a row-generating function over items, one task

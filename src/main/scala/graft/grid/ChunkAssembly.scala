@@ -4,10 +4,10 @@ package graft.grid
   * requested region overlaps, obtain the chunk's payload from a caller
   * callback, and copy the intersection into one flat C-order output —
   * innermost-dimension runs via System.arraycopy (type-agnostic on
-  * primitive arrays). Used by both on-disk stores ([[BinaryGridStore]],
-  * [[ZarrGridStore]]); the callback decides the chunk's stored shape, so
-  * exact-size edge chunks (binary store) and padded-to-full edge chunks
-  * (Zarr v2) both assemble through the same odometer.
+  * primitive arrays). Used by [[ZarrGridStore]] for plain chunk grids
+  * (edge chunks stored padded to the full chunk shape) and for the
+  * inner chunks of v3 shards; the callback decides the chunk's stored
+  * shape.
   */
 /** Inner-chunk geometry of an outer block — the single home of the
   * row-offset arithmetic every shard encoder/decoder shares
@@ -70,49 +70,6 @@ private[grid] object ChunkAssembly {
     // vlen string chunks (zarr v3): object arrays copy through the same
     // System.arraycopy odometer as primitives
     case GString => new Array[String](n)
-  }
-
-  /** Copy `src` — flat C-order of shape `dstShape` except axis
-    * `axisPos` where its extent is `srcAxisLen` — into `dst` (flat
-    * C-order of `dstShape`) starting at axis offset `dstAxisOff`. The
-    * concatenation primitive unaligned appends use to rebuild a store's
-    * partial edge chunk: old planes at offset 0, the slab's planes
-    * after them.
-    */
-  private[grid] def copyAxisSlab(dst: AnyRef, dstShape: Array[Int],
-      src: AnyRef, srcAxisLen: Int, axisPos: Int, dstAxisOff: Int): Unit = {
-    val nd = dstShape.length
-    val srcShape = dstShape.clone()
-    srcShape(axisPos) = srcAxisLen
-    val dstStride = strides(dstShape)
-    val srcStride = strides(srcShape)
-    val run = srcShape(nd - 1)
-    val axisShift = dstAxisOff * dstStride(axisPos)
-    // odometer over the SRC outer dims; inner runs via arraycopy
-    val pos = new Array[Int](nd)
-    var rows = 1
-    var k = 0
-    while (k < nd - 1) { rows *= srcShape(k); k += 1 }
-    var r = 0
-    while (r < rows) {
-      var srcOff = 0
-      var dstOff = axisShift
-      var d = 0
-      while (d < nd - 1) {
-        srcOff += pos(d) * srcStride(d)
-        dstOff += pos(d) * dstStride(d)
-        d += 1
-      }
-      System.arraycopy(src, srcOff, dst, dstOff, run)
-      var j = nd - 2
-      var carry = true
-      while (carry && j >= 0) {
-        pos(j) += 1
-        if (pos(j) < srcShape(j)) carry = false
-        else { pos(j) = 0; j -= 1 }
-      }
-      if (carry) r = rows else r += 1
-    }
   }
 
   /** Gather `ranges` (start, length per dim) of an array with dimension

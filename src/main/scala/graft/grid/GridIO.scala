@@ -23,11 +23,12 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   }
 }
 
-/** All BinaryGridStore / GridWriter byte I/O goes through the Hadoop
-  * FileSystem API, so one code path serves local disk (`file:` or bare
-  * paths), HDFS, S3A and GCS — the storage reality of a 100 TB deployment
-  * (the reference gets this for free from fsspec inside Zarr;
-  * reference xarray_sql/reader.py:192-337 reads through the Zarr store
+/** All store byte I/O (Zarr reads, [[GridWriter]] sinks, append
+  * commits) goes through the Hadoop FileSystem API, so one code path
+  * serves local disk (`file:` or bare paths), HDFS, S3A and GCS — the
+  * storage reality of a 100 TB deployment (the reference gets this for
+  * free from fsspec inside Zarr; reference
+  * xarray_sql/reader.py:192-337 reads through the Zarr store
   * abstraction for the same reason).
   *
   * The active session's `hadoopConfiguration` is used when present (it
@@ -164,15 +165,15 @@ object GridIO {
   }
 
   /** Delete every `.staging-*` sibling of a store root (residue of
-    * crashed appends; see GridWriter.append's single-writer contract —
-    * no live writer owns one when this runs). Before deleting, HEAL
-    * the replace phase a crashed append may have left half-done: the
-    * staging tree's `.replace-manifest` lists the store files it was
-    * about to replace through [[replaceWithBackup]]; any destination
-    * whose `.appendbak` survives is restored (crash hit between backup
-    * and replace — the store would otherwise silently serve fill for
-    * that chunk) or has its backup dropped (crash hit after the
-    * replace landed). Returns deleted staging names.
+    * crashed appends; see ZarrGridStore.appendFromRows' single-writer
+    * contract — no live writer owns one when this runs). Before deleting,
+    * HEAL the replace phase a crashed append may have left half-done: the
+    * staging tree's `.replace-manifest` lists the store files it was about
+    * to replace through [[replaceWithBackup]]; any destination whose
+    * `.appendbak` survives is restored (crash hit between backup and
+    * replace — the store would otherwise silently serve fill for that
+    * chunk) or has its backup dropped (crash hit after the replace landed).
+    * Returns deleted staging names.
     */
   def sweepStaging(root: String, conf: Configuration): Seq[String] = {
     val cleanRoot = new Path(root.stripSuffix("/"))
@@ -266,9 +267,9 @@ object GridIO {
   }
 
   /** Commit staged append files into the store — the shared protocol
-    * of all three append paths. `pairs` are (absolute src, absolute
-    * dst); `mkdirParents` creates nested destination dirs (the v3 `c/`
-    * layout).
+    * of the Zarr v2 and v3 append paths. `pairs` are (absolute src,
+    * absolute dst); `mkdirParents` creates nested destination dirs (the
+    * v3 `c/` layout).
     *
     * Rename mode (atomic-rename filesystems): EVERY destination is
     * recorded in the staging tree's `.replace-manifest` first, then

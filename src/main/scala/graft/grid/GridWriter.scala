@@ -16,21 +16,23 @@ import org.apache.spark.sql.types._
   *      coordinate->index tables — a narrow projection, no shuffle yet;
   *   2. one hash repartition on chunk id co-locates each chunk's cells;
   *   3. each task scatters its chunks into dense arrays (NaN prefill for
-  *      float kinds, duplicate cells rejected via a bitset) and writes
-  *      the BinaryGridStore chunk files directly from the executor.
+  *      float kinds, duplicate cells rejected via a bitset) and hands
+  *      each one to a [[GridWriter.ChunkSink]] that encodes and writes
+  *      the Zarr chunk file directly from the executor.
   *
   * Shuffle volume = one (long, long, value) triple per cell; peak task
   * memory = the chunks co-hashed into that task, not the grid. The
-  * driver writes only metadata. Executors write through the Hadoop
-  * FileSystem API ([[GridIO]]) with the driver's Hadoop conf shipped in
-  * the task closure, so the same code targets local disk, HDFS, S3A or
-  * GCS shared storage.
+  * driver writes only metadata ([[ZarrGridStore.writeFromRows]],
+  * [[ZarrGridStore.appendFromRows]] and their v3 faces in [[ZarrV3]]).
+  * Executors write through the Hadoop FileSystem API ([[GridIO]]) with
+  * the driver's Hadoop conf shipped in the task closure, so the same
+  * code targets local disk, HDFS, S3A or GCS shared storage.
   */
 object GridWriter {
 
-  /** Where a scattered chunk lands: the binary store's `.bin` files
-    * with stats, or a Zarr tree's padded encoded chunks. Executors call
-    * `write`; it must be Serializable and thread-agnostic.
+  /** Where a scattered chunk lands: a Zarr v2 or v3 tree's padded
+    * encoded chunks. Executors call `write`; it must be Serializable
+    * and thread-agnostic.
     */
   trait ChunkSink extends Serializable {
     /** Persist one dense chunk. `eff` is the per-dim effective
@@ -44,49 +46,6 @@ object GridWriter {
         eff: Array[Int],
         conf: org.apache.hadoop.conf.Configuration)
         : Seq[(String, Option[(Any, Any)], Option[Double])]
-  }
-
-  private final case class BinarySink(root: String,
-      codec: String) extends ChunkSink {
-    def write(varName: String, ciDotted: String, arr: AnyRef,
-        eff: Array[Int],
-        conf: org.apache.hadoop.conf.Configuration)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] = {
-      GridIO.write(s"$root/$varName/$ciDotted.bin",
-        BinaryGridStore.encodeChunk(arr, codec), conf)
-      Seq((ciDotted,
-        BinaryGridStore.chunkStats(arr), BinaryGridStore.chunkSum(arr)))
-    }
-  }
-
-  /** Binary-store face of the unaligned-append read-modify-write (see
-    * ZarrGridStore.EdgeMergeSink for the rationale): a staged chunk
-    * landing on the store's partial edge chunk first copies in the
-    * existing clipped chunk's planes (axis index < `edgeLen`), so the
-    * rewritten file — and its recomputed stats/sums — carry old + new
-    * data. Executor-side: the shipped store reads its own chunk there.
-    */
-  private final case class BinaryEdgeMergeSink(base: BinarySink,
-      store: BinaryGridStore, axisPos: Int, edgeChunk: Int,
-      edgeLen: Int) extends ChunkSink {
-    def write(varName: String, ciDotted: String, arr: AnyRef,
-        eff: Array[Int],
-        conf: org.apache.hadoop.conf.Configuration)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] = {
-      val ci = ciDotted.split('.').map(_.toInt)
-      if (ci(axisPos) == edgeChunk) {
-        val v = store.schema.vars.find(_.name == varName).get
-        val ranges = v.dims.indices.map { d =>
-          val cs = store.chunks.getOrElse(v.dims(d),
-            math.max(store.schema.dim(v.dims(d)).size, 1))
-          val start = ci(d) * cs
-          if (d == axisPos) (start, edgeLen) else (start, eff(d))
-        }
-        graft.grid.ChunkAssembly.copyAxisSlab(arr, eff,
-          store.readVar(varName, ranges), edgeLen, axisPos, 0)
-      }
-      base.write(varName, ciDotted, arr, eff, conf)
-    }
   }
 
   /** Zarr v2 chunk files: padded to the full chunk shape per the spec,
@@ -110,7 +69,7 @@ object GridWriter {
       // value stats on the EFFECTIVE cells (padding is storage, not
       // data) — feeds the .graft-stats.json sidecar
       Seq((ciDotted,
-        BinaryGridStore.chunkStats(arr), BinaryGridStore.chunkSum(arr)))
+        StatsSource.chunkStats(arr), StatsSource.chunkSum(arr)))
     }
   }
 
@@ -157,7 +116,7 @@ object GridWriter {
         payload, conf)
       innerSz match {
         case None => Seq((ciDotted,
-          BinaryGridStore.chunkStats(arr), BinaryGridStore.chunkSum(arr)))
+          StatsSource.chunkStats(arr), StatsSource.chunkSum(arr)))
         case Some(inner) =>
           // per-INNER-chunk stats with GLOBAL inner-grid keys — the
           // granularity the scan plans (and prunes) sharded arrays on
@@ -165,126 +124,6 @@ object GridWriter {
             ciDotted.split('.').map(_.toInt), chunkSz, inner)
       }
     }
-  }
-
-  def write(df: DataFrame, schema: GridSchema, chunks: Map[String, Int],
-      root: String, codec: String = "none"): BinaryGridStore =
-    writeGrouped(_ => df, schema, chunks, root, codec)
-
-  /** [[write]] with a per-variable row source — the form a MULTI
-    * dim-group store needs (a surface var over (time, lat) and a cube
-    * var over (time, lat, level) pivot to different tables, so no one
-    * DataFrame carries every var's cells). `dfFor(v)` must hold v's
-    * dim columns and v's value column; vars sharing a dim group may
-    * share a DataFrame. Metadata still commits ONCE with all stats.
-    */
-  def writeGrouped(dfFor: VarDef => DataFrame, schema: GridSchema,
-      chunks: Map[String, Int], root: String,
-      codec: String = "none"): BinaryGridStore = {
-    // directory skeleton only — metadata commits ONCE, with stats, so
-    // a concurrent open never observes a stats-less store (and remote
-    // stores don't pay a doomed extra metadata PUT)
-    val conf = GridIO.driverConf()
-    GridIO.mkdirs(root, conf)
-    // fail before any staging work: the binary store has no string
-    // chunk layout (Zarr sinks encode vlen-utf8; this format does not)
-    schema.vars.foreach(v => require(v.dtype != GString,
-      s"${v.name}: string variables unsupported in the binary store"))
-    schema.vars.foreach(v => require(v.dims.nonEmpty,
-      s"${v.name}: writing 0-d (scalar) variables is unsupported"))
-    schema.vars.foreach(v => GridIO.mkdirs(s"$root/${v.name}", conf))
-    // executors return per-chunk (min, max) and value sums alongside
-    // writing the chunk files; the driver folds them into the final
-    // metadata so the store prunes on variable predicates — and answers
-    // metadata SUMs — like a driver-side write does
-    val perChunk = schema.vars
-      .flatMap(v => writeVar(dfFor(v), schema, chunks,
-        BinarySink(root, codec), v))
-    val stats = perChunk.flatMap { case (k, mm, _) => mm.map(k -> _) }.toMap
-    val sums = perChunk.flatMap { case (k, _, sm) => sm.map(k -> _) }.toMap
-    BinaryGridStore.writeMetadataOnly(root, schema, chunks, codec, stats,
-      sums)
-    BinaryGridStore(root, schema, chunks, codec, stats = stats, sums = sums)
-  }
-
-  /** Distributed bulk append: the slab's rows scatter/write through the
-    * normal distributed path into a staging directory beside the store,
-    * then every chunk file renames to its shifted index (a pure
-    * metadata op on HDFS/local; object stores copy) and the store
-    * metadata commits once — coords concatenated, shifted stats merged.
-    * Same preconditions as [[BinaryGridStore.appendAlong]]
-    * (identical invariant dims/vars; an unaligned existing extent is
-    * handled by read-modify-writing the edge chunk);
-    * use that for driver-sized drips and this for backfills at any
-    * size — the driver never touches cell data here.
-    *
-    * Concurrency contract: SINGLE WRITER per store, shared with
-    * [[BinaryGridStore.appendAlong]] — both validate against the same
-    * committed extent, so two concurrent appends would write the same
-    * shifted chunk indices and the last metadata commit would orphan
-    * the other's chunks. The staging directory is uniquely suffixed
-    * per invocation (and cleaned on success), so a crashed append
-    * leaves only an inert `.staging-*` tree, never a half-renamed
-    * store; serialize appends externally (one ingest job per store).
-    */
-  def append(df: DataFrame, slabSchema: GridSchema, root: String,
-      along: String): BinaryGridStore = {
-    val conf = GridIO.driverConf()
-    // optimistic concurrency key, same contract as the zarr appends
-    // (captured BEFORE open so a competing commit in between merely
-    // aborts this append spuriously): commitAppend rewrites
-    // metadata.txt, so its (length, mtime) stamps the extent this
-    // append validated against
-    val versionKey = GridIO.statusOf(
-      s"${root.stripSuffix("/")}/metadata.txt", conf)
-    val existing = BinaryGridStore.open(root)
-    val oldN =
-      BinaryGridStore.validateAppend(existing, slabSchema, along)
-    // sweep residue of CRASHED prior appends before staging anew — the
-    // single-writer contract guarantees no live append owns any
-    // existing .staging-* tree, so deleting them all is safe and keeps
-    // retried ingests from permanently leaking slab-sized trees
-    val cleanRoot = root.stripSuffix("/")
-    GridIO.sweepStaging(cleanRoot, conf)
-    val staging = cleanRoot + ".staging-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    // stage ONLY the vars that grow with the axis: invariant vars'
-    // chunks already exist in the store. The scatter runs straight on
-    // the store-global chunk grid (globalAlong), so staged files carry
-    // their final keys and need no post-scatter shifting; when the old
-    // extent ends inside a chunk, the owning executor read-modify-
-    // writes that edge chunk (BinaryEdgeMergeSink) and its stats/sums
-    // are recomputed from the merged data.
-    val growing = slabSchema.vars.filter(_.dims.contains(along))
-    val axisChunk = existing.chunks(along)
-    val edgeLen = oldN % axisChunk
-    val globalSize = oldN + slabSchema.dim(along).size
-    val perChunk = growing.flatMap { v =>
-      GridIO.mkdirs(s"$staging/${v.name}", conf)
-      val base = BinarySink(staging, existing.codec)
-      val sink =
-        if (edgeLen > 0) BinaryEdgeMergeSink(base, existing,
-          v.dims.indexOf(along), oldN / axisChunk, edgeLen)
-        else base
-      writeVar(df, slabSchema, existing.chunks, sink, v,
-        globalAlong = Some((along, oldN, globalSize)))
-    }
-    ZarrGridStore.appendTestHook(cleanRoot)
-    ZarrGridStore.checkNoConcurrentAppend(cleanRoot, staging,
-      s"$cleanRoot/metadata.txt", versionKey, conf)
-    // shared crash-healable, retry-idempotent commit protocol
-    GridIO.commitStaged(staging,
-      growing.flatMap { v =>
-        GridIO.listNames(s"$staging/${v.name}", conf)
-          .filter(_.endsWith(".bin")).map(fn =>
-            (s"$staging/${v.name}/$fn", s"$cleanRoot/${v.name}/$fn"))
-      }, mkdirParents = false, conf)
-    val stats = perChunk.flatMap { case (k, mm, _) => mm.map(k -> _) }.toMap
-    val sums = perChunk.flatMap { case (k, _, sm) => sm.map(k -> _) }.toMap
-    GridIO.delete(staging, conf)
-    BinaryGridStore.commitAppend(root, existing,
-      slabSchema.dim(along).coords, along, stats, sums,
-      touched = perChunk.map(_._1).toSet)
   }
 
   /** Normalized dim column (what the coord->index maps are keyed on). */

@@ -192,9 +192,8 @@ final case class ShardMeta(
   * stored-axis permutation); numcodecs `shuffle`, `delta` and
   * `vlen-utf8` (`|O` string arrays) filters; missing chunk
   * files read as `fill_value`; edge chunks stored PADDED to the full
-  * chunk shape (the v2 rule — [[BinaryGridStore]] stores them clipped,
-  * which is why both share [[ChunkAssembly]] with different
-  * `storedShape` callbacks). CF time axes decode through the same
+  * chunk shape (the v2 rule; [[ChunkAssembly]] gathers them through
+  * its `storedShape` callback). CF time axes decode through the same
   * two-tier [[graft.time.CfCalendar]] bridge as every other source:
   * Gregorian-like `units`/`calendar` attributes become real timestamps,
   * non-Gregorian calendars keep int64 offsets with the metadata that
@@ -212,7 +211,7 @@ final case class ZarrGridStore(root: String, schema: GridSchema,
     hconf: SerializableHadoopConf = GridIO.shippable(),
     /** Per-chunk (min,max) / sums recorded by THIS engine's writers in
       * the `.graft-stats.json` sidecar (keys `"<var> <ci.dotted>"`,
-      * same contract as BinaryGridStore), loaded lazily per variable
+      * the [[GridStore.varBounds]] contract), loaded lazily per variable
       * under format v2 ([[StatsSource]]). Parquet-footer rules apply:
       * the sidecar is part of the written format — rewriting chunk
       * files by hand without dropping it is corruption. Foreign trees
@@ -522,17 +521,18 @@ object ZarrGridStore {
       }
       val key = (0 until nd).map(d =>
         outerCi(d) * innersPerOuter(d) + pos(d)).mkString(".")
-      out += ((key, BinaryGridStore.chunkStats(slice),
-        BinaryGridStore.chunkSum(slice)))
+      out += ((key, StatsSource.chunkStats(slice),
+        StatsSource.chunkSum(slice)))
       k += 1
     }
     out.result()
   }
 
-  /** Sidecar carrying per-chunk value stats for zarr trees — the same
-    * (min,max)/sum law BinaryGridStore records in metadata.txt, keyed
-    * `"<var> <ci.dotted>"`. zarr-python ignores unknown files, so the
-    * tree stays a perfectly ordinary zarr archive. Absent on foreign
+  /** Sidecar carrying per-chunk value stats for zarr trees — the
+    * (min,max)/sum law of [[StatsSource.chunkStats]] and
+    * [[StatsSource.chunkSum]], keyed `"<var> <ci.dotted>"`. zarr-python
+    * ignores unknown files, so the tree stays a perfectly ordinary zarr
+    * archive. Absent on foreign
     * trees (no stats, no pruning — always sound).
     *
     * Format v2: the ROOT file of this name is a manifest
@@ -554,7 +554,7 @@ object ZarrGridStore {
     */
   private[grid] val StatsSidecar = ".graft-stats.json"
 
-  /** `kind` tag per dtype, mirroring BinaryGridStore.chunkStats boxing:
+  /** `kind` tag per dtype, mirroring StatsSource.chunkStats boxing:
     * long-kind arrays carry (Long, Long) (exact past 2^53), everything
     * else (Double, Double).
     */
@@ -2216,7 +2216,7 @@ object ZarrGridStore {
         else compress(toLE(padded, dtype), comp, dtype.byteWidth)
       GridIO.write(s"$dir/${ci.mkString(".")}", payload, conf)
       (s"$varName ${ci.mkString(".")}",
-        BinaryGridStore.chunkStats(data), BinaryGridStore.chunkSum(data))
+        StatsSource.chunkStats(data), StatsSource.chunkSum(data))
     }
   }
 
@@ -2334,7 +2334,8 @@ object ZarrGridStore {
     * Hadoop conf. At 10⁵–10⁶ chunks the driver-side loop of [[write]]
     * is the bottleneck; here wall-clock is chunks / cluster-cores. The
     * store-to-store shape also makes this the distributed
-    * format-conversion path (binary → Zarr, Zarr → rechunked Zarr).
+    * format-conversion path (foreign layout → v2, Zarr → rechunked
+    * Zarr — see [[graft.XarrayContext.rechunk]]).
     */
   def writeDistributed(source: GridStore, root: String,
       chunks: Map[String, Int],
@@ -2366,12 +2367,11 @@ object ZarrGridStore {
     * materialization and no intermediate store. [[GridWriter]]'s
     * machinery does the heavy lifting — one (chunk, offset, value)
     * triple per cell, one hash repartition, executors assemble dense
-    * chunks — but the sink writes PADDED little-endian compressed v2
-    * chunk files instead of `.bin`s; the driver writes only group/array
-    * metadata + coordinate arrays and consolidates. Same row contract
-    * as `GridWriter.write`: `df` carries the schema's dim columns and
-    * each variable's value column. Unset cells become the declared
-    * fill (NaN for float kinds, 0 for ints).
+    * chunks, and the sink writes PADDED little-endian compressed v2
+    * chunk files; the driver writes only group/array metadata +
+    * coordinate arrays and consolidates. `df` carries the schema's dim
+    * columns and each variable's value column. Unset cells become the
+    * declared fill (NaN for float kinds, 0 for ints).
     */
   def writeFromRows(df: org.apache.spark.sql.DataFrame, schema: GridSchema,
       chunks: Map[String, Int], root: String,
@@ -2412,9 +2412,9 @@ object ZarrGridStore {
     * encoding for every growing variable (anything else fails loudly
     * up front — staged chunks are encoded plain, and silently mixing
     * encodings inside one array corrupts it). Appended edge chunks pad
-    * with NaN/0 like every other write. SINGLE WRITER per store (same
-    * contract as the binary-store append): staging is uniquely
-    * suffixed, so a crashed append leaves an inert `.staging-*` tree —
+    * with NaN/0 like every other write. SINGLE WRITER per store:
+    * staging is uniquely suffixed, so a crashed append leaves an inert
+    * `.staging-*` tree (swept by the next append) —
     * plus, if the crash hit the commit phase of an UNALIGNED append,
     * at most a half-replaced edge chunk protected by a `.appendbak`
     * backup, which the next append's staging sweep restores (a reader
@@ -2758,9 +2758,8 @@ object ZarrGridStore {
   /** Appending a slab whose `along` coordinates overlap the store
     * would silently DUPLICATE axis labels (the coordinate array just
     * concatenates) and double-count those steps in every later scan —
-    * the binary store's validateAppend rejects this; both zarr append
-    * faces call this to do the same. Compares internal values, so no
-    * external-box mismatch can slip an overlap through.
+    * both zarr append faces call this to reject it. Compares internal
+    * values, so no external-box mismatch can slip an overlap through.
     */
   private[grid] def rejectOverlappingSlab(exDim: DimDef, slabDim: DimDef,
       along: String): Unit = {
@@ -2928,6 +2927,19 @@ object ZarrGridStore {
       case _ => throw new IllegalArgumentException(
         s"bad compressor '$s' (none | zlib[:level] | gzip[:level] | " +
           "zstd[:level] | blosc[:cname][:clevel][:bit|:byte|:noshuffle])")
+    }
+
+  /** The [[parseCompressor]] string of an array's stored compressor
+    * (the inner one for v3 shards) — what a rewrite passes back to the
+    * writers to keep the source's encoding.
+    */
+  private[graft] def compressorSpec(a: ZarrArrayMeta): String =
+    a.sharding.map(_.innerCompressor).getOrElse(a.compressor) match {
+      case None => "none"
+      case Some((id, lvl)) if id.startsWith("blosc") =>
+        val Array(_, cname, mode) = id.split("/") // blosc/<cname>/<mode>
+        s"blosc:$cname:$lvl:${if (mode == "none") "noshuffle" else mode}"
+      case Some((id, lvl)) => s"$id:$lvl"
     }
 
   /** (cname, shuffle mode) of a `blosc/<cname>/<mode>` id (defaults for

@@ -68,6 +68,10 @@ object GraphOps {
             .as("cluster"),
           bump(coalesce(col("nbr"), col("cluster")) < col("cluster"))
             .as("chg"))
+        // EAGER: the accumulator is read on the next line, so this
+        // checkpoint must run the round before it (a lazy one would
+        // read 0 and stop after one round with wrong labels — pinned
+        // by GraphOpsSpec's multi-hop round-count test)
         .localCheckpoint(true)
       converged = acc.value == 0L
       labels = next.select("id", "cluster")

@@ -18,14 +18,15 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * beyond the reference: the reference keeps no value statistics at
   * all, reader.py:279-335 prunes on dim bounds only).
   *
-  * A store that records chunk sums at write time (BinaryGridStore
-  * `sumstat` lines) can answer `SUM(var) [WHERE dim-predicates]`
-  * without opening any chunk that falls provably inside the predicate
-  * region: the included chunks contribute their metadata sums, and the
-  * scan is restricted to the straddling (boundary) chunks alone. At
-  * 100 TB, a zonal total over a large space/time range reads only the
-  * boundary chunks of the range — O(surface) instead of O(volume)
-  * I/O, the same asymptotics the metadata COUNT rewrite gets.
+  * A store that records chunk sums at write time (the Zarr
+  * `.graft-stats.json` sidecar, [[graft.grid.StatsSource]]) can answer
+  * `SUM(var) [WHERE dim-predicates]` without opening any chunk that falls
+  * provably inside the predicate region: the included chunks contribute
+  * their metadata sums, and the scan is restricted to the straddling
+  * (boundary) chunks alone. At 100 TB, a zonal total over a large
+  * space/time range reads only the boundary chunks of the range —
+  * O(surface) instead of O(volume) I/O, the same asymptotics the metadata
+  * COUNT rewrite gets.
   *
   * Soundness gates, all conservative:
   *   - only DATA VARIABLES of float/double kind (Spark's SUM output is

@@ -597,12 +597,12 @@ object GridQueries {
           col("air"))
     }),
 
-    // append-only ingest: the first 9 hours land as one store write,
-    // the rest arrive later as two BinaryGridStore.appendAlong calls at
+    // append-only ingest: the first 9 hours land as one Zarr write,
+    // the rest arrive later as two distributed appendFromRows calls at
     // UNALIGNED boundaries (9 and 19 are not multiples of the t=6
     // chunk): each append read-modify-writes the partial edge chunk —
     // the xarray to_zarr(append_dim) ingest shape — and lays new chunks
-    // past it, with one small metadata rewrite. The query straddles
+    // past it, with one small metadata commit. The query straddles
     // both boundaries (t 8..20), proving scans, pruning and the
     // RECOMPUTED edge-chunk stats see one seamless grid. The reference
     // has no incremental ingest — a 100 TB archive needs one.
@@ -610,17 +610,22 @@ object GridQueries {
       // unique per invocation (QueryTmp: race-free under concurrent
       // evaluation, tree deleted at exit instead of accumulating)
       val root = QueryTmp.dir("graft_append_grid") + "/store"
-      graft.grid.BinaryGridStore.write(Fixtures.linearGridSlice(0, 9),
+      graft.grid.ZarrGridStore.write(Fixtures.linearGridSlice(0, 9),
         root, Map("t" -> 6), "zstd")
-      graft.grid.BinaryGridStore.appendAlong(root,
-        Fixtures.linearGridSlice(9, 19), "t")
-      val appended = graft.grid.BinaryGridStore.appendAlong(root,
-        Fixtures.linearGridSlice(19, 24), "t")
-      new XarrayContext(s)
-        // registry key carries the unique store root (concurrent
-        // evaluations must not cross-resolve) and is dropped after load
-        .scratchDataFrame(s"append_grid@$root", appended, appended.chunks,
-          Seq("t", "lat", "lon"))
+      val ctx = new XarrayContext(s)
+      // registry keys carry the unique store root (concurrent
+      // evaluations must not cross-resolve) and are dropped after load
+      def append(lo: Int, hi: Int) = {
+        val slab = Fixtures.linearGridSlice(lo, hi)
+        graft.grid.ZarrGridStore.appendFromRows(
+          ctx.scratchDataFrame(s"append_slab@$root/$lo", slab,
+            Map("t" -> 6), Seq("t", "lat", "lon")),
+          slab.schema, root, "t")
+      }
+      append(9, 19)
+      val appended = append(19, 24)
+      ctx.scratchDataFrame(s"append_grid@$root", appended, appended.chunkMap,
+        Seq("t", "lat", "lon"))
         .filter(col("t").between(8, 20))
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -673,14 +678,14 @@ object GridQueries {
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))),
 
-    // data-variable zone maps end-to-end: the on-disk store records
+    // data-variable zone maps end-to-end: the Zarr store records
     // per-chunk (min, max) of every variable at write time, so a
     // predicate on the VALUE column prunes chunk files like Parquet
     // row-group stats (beyond the reference, whose bounds cover dims
     // only). air per t-chunk k spans [200+6k, 254+6k]: air >= 255
     // provably excludes chunk 0 (asserted in GridQueryE2ESpec).
     // metadata SUM surface (beyond the reference, which keeps no value
-    // stats): the disk store records per-chunk value sums at write
+    // stats): the Zarr store records per-chunk value sums at write
     // time; under GraftExtensions, MetadataSumRule answers this
     // unaligned t-range SUM from metadata plus the two boundary chunks
     // (zero-/boundary-read behavior plan-pinned in MetadataSumRuleSpec
@@ -688,11 +693,11 @@ object GridQueries {
     // the scanned plan, which is what the oracle gates)
     "pivot_grid_metasum" -> ((s, _) => {
       val root = QueryTmp.staged("graft_metasum_grid")(base =>
-        graft.grid.BinaryGridStore.write(Fixtures.linearGrid,
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
           s"$base/store", Map("t" -> 6))) + "/store"
-      val store = graft.grid.BinaryGridStore.open(root)
+      val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"metasum_grid@$root", store, store.chunks,
+        .scratchDataFrame(s"metasum_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t").between(3, 20))
         .agg(sum(col("air")).as("sum_air"))
@@ -704,11 +709,11 @@ object GridQueries {
     // (MetadataSumRuleSpec pins the 2-of-4-chunks read behavior)
     "pivot_grid_metamean" -> ((s, _) => {
       val root = QueryTmp.staged("graft_metamean_grid")(base =>
-        graft.grid.BinaryGridStore.write(Fixtures.linearGrid,
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
           s"$base/store", Map("t" -> 6))) + "/store"
-      val store = graft.grid.BinaryGridStore.open(root)
+      val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"metamean_grid@$root", store, store.chunks,
+        .scratchDataFrame(s"metamean_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t").between(3, 20))
         .agg(avg(col("air")).as("mean_air"))
@@ -716,12 +721,12 @@ object GridQueries {
 
     "pivot_grid_varstats" -> ((s, _) => {
       val root = QueryTmp.staged("graft_varstats_grid")(base =>
-        graft.grid.BinaryGridStore.write(Fixtures.linearGrid,
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
           s"$base/store", Map("t" -> 6))) + "/store"
-      val store = graft.grid.BinaryGridStore.open(root)
+      val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"varstats_linear_grid@$root", store, store.chunks,
-          Seq("t", "lat", "lon"))
+        .scratchDataFrame(s"varstats_linear_grid@$root", store,
+          store.chunkMap, Seq("t", "lat", "lon"))
         .filter(col("air") >= 255.0)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -899,17 +904,18 @@ object GridQueries {
 
     // the production on-disk path end-to-end: distributed reverse pivot
     // (GridWriter scatters cells from executors through the Hadoop FS
-    // API) -> zstd-compressed BinaryGridStore chunk files -> metadata
+    // API) -> zstd-compressed Zarr chunk files -> metadata
     // re-open -> DSv2 scan with zone-map pruning (t >= 12 keeps 2 of 4
     // chunk partitions) + zstd decode. Mirrors the reference's Zarr write
     // + read round trip (reference xarray_sql/reader.py:192-337).
     "pivot_grid_disk" -> ((s, _) => {
       val root = QueryTmp.staged("graft_disk_grid")(base =>
-        graft.grid.GridWriter.write(grid(s), Fixtures.linearGrid.schema,
-          Map("t" -> 6), s"$base/store", "zstd")) + "/store"
-      val store = graft.grid.BinaryGridStore.open(root)
+        graft.grid.ZarrGridStore.writeFromRows(grid(s),
+          Fixtures.linearGrid.schema, Map("t" -> 6), s"$base/store",
+          "zstd")) + "/store"
+      val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"disk_linear_grid@$root", store, store.chunks,
+        .scratchDataFrame(s"disk_linear_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -920,7 +926,7 @@ object GridQueries {
     // round-trips through numpy's fixed-width "<U<n>" UTF-32 layout
     // (write + parse), the timestamp axis through the CF bridge, and
     // the residual string IN filter evaluates on the decoded coords —
-    // the same query shape as pivot_grid_station on the binary store
+    // the same query shape as pivot_grid_station on the in-memory store
     "pivot_grid_station_zarr" -> ((s, _) => {
       val root = QueryTmp.staged("graft_zarr_station")(base =>
         graft.grid.ZarrGridStore.write(Fixtures.stationGrid,
@@ -1382,13 +1388,12 @@ object GridQueries {
     "pivot_grid_rechunk" -> ((s, _) => {
       val base = QueryTmp.dir("graft_rechunk_grid")
       val srcRoot = base + "/frag"
-      graft.grid.GridWriter.write(grid(s), Fixtures.linearGrid.schema,
-        Map("t" -> 3), srcRoot, "zstd")
-      val frag = graft.grid.BinaryGridStore.open(srcRoot)
+      val frag = graft.grid.ZarrGridStore.writeFromRows(grid(s),
+        Fixtures.linearGrid.schema, Map("t" -> 3), srcRoot, "zstd")
       val compact = new XarrayContext(s)
         .rechunk(frag, Map("t" -> 12), base + "/compact")
       new XarrayContext(s)
-        .scratchDataFrame(s"compact_grid@$base", compact, compact.chunks,
+        .scratchDataFrame(s"compact_grid@$base", compact, compact.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),

@@ -6,28 +6,25 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** Format-heterogeneous concatenation: one concat view over a binary
-  * store, a blosc Zarr v2 tree, and a SHARDED Zarr v3 tree — the
-  * GridStore trait is the only thing the scan layer sees, so each
-  * member plans against its own chunk grid and zone maps regardless of
-  * on-disk format. A real fleet migrates formats over time; the view
-  * must not care.
+/** Layout-heterogeneous concatenation: one concat view over a blosc
+  * Zarr v2 tree and a SHARDED Zarr v3 tree — the GridStore trait is the
+  * only thing the scan layer sees, so each member plans against its own
+  * chunk grid and zone maps regardless of on-disk layout. A real fleet
+  * migrates layouts over time; the view must not care.
   */
 class MixedConcatSpec extends SparkTestBase {
 
-  test("binary + zarr v2 + sharded v3 members concat and prune per member") {
+  test("zarr v2 + sharded v3 members concat and prune per member") {
     val base = Files.createTempDirectory("mixed_concat")
     base.toFile.deleteOnExit()
-    // three t-slabs of the same 24x12x10 linear grid, three formats
-    val m0 = BinaryGridStore.write(Fixtures.linearGridSlice(0, 8),
-      base.resolve("bin").toString, Map("t" -> 4), "zstd")
-    val m1 = ZarrGridStore.write(Fixtures.linearGridSlice(8, 16),
+    // two t-slabs of the same 24x12x10 linear grid, two layouts
+    val m1 = ZarrGridStore.write(Fixtures.linearGridSlice(0, 16),
       base.resolve("z2").toString, Map("t" -> 4), "blosc")
     val m2 = ZarrV3.write(Fixtures.linearGridSlice(16, 24),
       base.resolve("z3").toString, Map("t" -> 4), "zstd:3",
       shardInner = Map("t" -> 2))
     val df = new graft.XarrayContext(spark).concatDataFrame("mixed",
-      Seq(m0 -> Map("t" -> 4), m1 -> Map("t" -> 4), m2 -> Map("t" -> 4)),
+      Seq(m1 -> Map("t" -> 4), m2 -> Map("t" -> 4)),
       Seq("t", "lat", "lon"))
 
     // full union matches the one-store source exactly
@@ -37,8 +34,8 @@ class MixedConcatSpec extends SparkTestBase {
       yield 200.0 + t + 2.0 * i + 3.0 * j).sum
     assert(whole.getDouble(1) == expectAll)
 
-    // a one-slab predicate opens ONLY the v3 member's shards: the
-    // binary and v2 members prune to zero via their own zone maps
+    // a one-slab predicate opens ONLY the v3 member's shards: the v2
+    // member prunes to zero via its own zone maps
     ReadCounters.reset()
     val rows = df.filter(col("t") >= 16)
       .agg(sum("air").as("s"), count(lit(1)).as("n")).collect()

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** Full-circle: disk store -> SQL -> reverse pivot (template + fill) ->
-  * array store -> disk store. The "sinks" surface of SURVEY §2B.
+/** Full-circle: Zarr tree -> SQL -> reverse pivot (template + fill) ->
+  * array store -> Zarr tree. The "sinks" surface of SURVEY §2B.
   */
 class RoundTripSpec extends SparkTestBase {
 
@@ -36,27 +36,33 @@ class RoundTripSpec extends SparkTestBase {
     assert(bad.getMessage.contains("not on the template grid"))
   }
 
+  /** Chunk-file names of a v2 variable dir (metadata files excluded). */
+  private def chunkFiles(dir: String): Set[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.matches("\\d+(\\.\\d+)*")).toSet
+
   test("distributed reverse pivot: executors write the grid, driver only metadata") {
     val ctx = new XarrayContext(spark)
     val df = ctx.dataFrame("gw_src", Fixtures.linearGrid, Map("t" -> 6),
       Seq("t", "lat", "lon"))
     // SQL transform: double the variable, then scatter back to a NEW
-    // chunked disk grid without collecting it
+    // chunked Zarr tree without collecting it
     val out = Files.createTempDirectory("graft-gw").toString
     val schema = GridSchema(
       Fixtures.linearGrid.schema.dims,
       Seq(VarDef("air2", Seq("t", "lat", "lon"), GDouble)))
-    val store = GridWriter.write(
+    ZarrGridStore.writeFromRows(
       df.select(col("t"), col("lat"), col("lon"),
         (col("air") * 2.0).as("air2")),
-      schema, Map("t" -> 6, "lat" -> 7), out)
+      schema, Map("t" -> 6, "lat" -> 7), out, "none")
     // every chunk file exists (4 t-chunks x 2 lat-chunks) and the
     // reopened store serves exact values through the DSv2 scan
-    assert(Files.list(java.nio.file.Paths.get(out, "air2")).count() == 8L)
-    val reopened = BinaryGridStore.open(out)
-    assert(reopened.codec == "none" && reopened.chunks == Map("t" -> 6, "lat" -> 7))
+    assert(chunkFiles(s"$out/air2").size == 8)
+    val reopened = ZarrGridStore.open(out)
+    assert(reopened.arrays("air2").compressor.isEmpty &&
+      reopened.chunkMap == Map("t" -> 6, "lat" -> 7, "lon" -> 10))
     val law = Fixtures.linearGrid.laws("air")
-    val df2 = ctx.dataFrame("gw_out", reopened, reopened.chunks,
+    val df2 = ctx.dataFrame("gw_out", reopened, reopened.chunkMap,
       Seq("t", "lat", "lon"))
     val got = df2.filter(col("t") === 7 && col("lat") === 70.0 &&
       col("lon") === 205.0).select("air2").collect()(0).getDouble(0)
@@ -71,7 +77,7 @@ class RoundTripSpec extends SparkTestBase {
 
     // missing cells prefill NaN; duplicate cells reject
     val sparseOut = Files.createTempDirectory("graft-gw2").toString
-    val sparse = GridWriter.write(
+    val sparse = ZarrGridStore.writeFromRows(
       df.filter(col("t") < 2).select(col("t"), col("lat"), col("lon"),
         col("air").as("air2")),
       schema, Map("t" -> 6), sparseOut)
@@ -80,7 +86,7 @@ class RoundTripSpec extends SparkTestBase {
     assert(chunk0(0) == law(Array(0, 0, 0)))
     assert(chunk0(2 * 120).isNaN) // t=2 filtered away
     val dup = intercept[org.apache.spark.SparkException] {
-      GridWriter.write(
+      ZarrGridStore.writeFromRows(
         df.select(col("t"), col("lat"), col("lon"), col("air").as("air2"))
           .union(df.select(col("t"), col("lat"), col("lon"),
             col("air").as("air2"))),
@@ -93,27 +99,32 @@ class RoundTripSpec extends SparkTestBase {
   test("distributed append: staged chunks rename past the extent") {
     val ctx = new XarrayContext(spark)
     val root = Files.createTempDirectory("graft-gwappend").toString + "/store"
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), root,
+    ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 6), "zstd")
     val airDir = new java.io.File(root, "air")
-    val before = airDir.listFiles().map(f => f.getName -> f.lastModified).toMap
+    def chunkMtimes = airDir.listFiles()
+      .filter(f => chunkFiles(airDir.getPath)(f.getName))
+      .map(f => f.getName -> f.lastModified).toMap
+    val before = chunkMtimes
+    assert(before.keySet == Set("0.0.0", "1.0.0"))
     // the backfill slab arrives as a DataFrame — executors scatter and
     // write it, the driver renames + commits metadata
-    val slab = ctx.dataFrame("gw_slab", Fixtures.linearGridSlice(12, 24),
-      Map("t" -> 6), Seq("t", "lat", "lon"))
-    val appended = GridWriter.append(slab,
+    def slabDf(lo: Int, hi: Int) = ctx.dataFrame(s"gw_slab$lo",
+      Fixtures.linearGridSlice(lo, hi), Map("t" -> 6),
+      Seq("t", "lat", "lon"))
+    val appended = ZarrGridStore.appendFromRows(slabDf(12, 24),
       Fixtures.linearGridSlice(12, 24).schema, root, "t")
     assert(appended.schema.dim("t").size == 24)
-    val after = airDir.listFiles().map(f => f.getName -> f.lastModified).toMap
+    // old chunk files untouched (same mtime), two new ones
+    val after = chunkMtimes
     before.foreach { case (n, m) => assert(after(n) == m, s"$n rewritten") }
-    assert(after.keySet ==
-      Set("0.0.0.bin", "1.0.0.bin", "2.0.0.bin", "3.0.0.bin"))
+    assert(after.keySet == Set("0.0.0", "1.0.0", "2.0.0", "3.0.0"))
     // no staging residue (unique .staging-* suffix per invocation)
     val parent = new java.io.File(root).getParentFile
     assert(!parent.listFiles().exists(_.getName.contains(".staging")),
       parent.listFiles().map(_.getName).mkString(","))
-    // reopened store serves the seamless grid with shifted stats
-    val store = BinaryGridStore.open(root)
+    // reopened store serves the seamless grid with the appended stats
+    val store = ZarrGridStore.open(root)
     val law = Fixtures.linearGrid.laws("air")
     val got = store.readVar("air", Seq((6, 12), (0, 12), (0, 10)))
       .asInstanceOf[Array[Double]]
@@ -121,6 +132,23 @@ class RoundTripSpec extends SparkTestBase {
       assert(got(t * 120 + i * 10 + j) == law(Array(6 + t, i, j)))
     assert(store.varBounds("air", Seq((18, 6), (0, 12), (0, 10)))
       .contains((218.0, 272.0)))
+    // misuse is rejected before anything is staged: a retried
+    // (overlapping) slab would double-count, shifted invariant coords
+    // would misplace every cell
+    val dup = intercept[IllegalArgumentException] {
+      ZarrGridStore.appendFromRows(slabDf(12, 24),
+        Fixtures.linearGridSlice(12, 24).schema, root, "t")
+    }
+    assert(dup.getMessage.contains("overlap"))
+    val next = Fixtures.linearGridSlice(24, 30).schema
+    val shifted = next.copy(dims = next.dims.map(d =>
+      if (d.name == "lat") d.copy(coords = DoubleCoords(
+        (0 until 12).map(i => 80.0 - 2.5 * i).toArray)) else d))
+    val bad = intercept[IllegalArgumentException] {
+      ZarrGridStore.appendFromRows(slabDf(24, 30), shifted, root, "t")
+    }
+    assert(bad.getMessage.contains("lat"))
+    assert(ZarrGridStore.open(root).schema.dim("t").size == 24)
   }
 
   test("distributed write of a duration-dim grid round-trips with stats") {
@@ -128,16 +156,15 @@ class RoundTripSpec extends SparkTestBase {
     val df = ctx.dataFrame("fc_gw_src", Fixtures.forecastGrid,
       Map("lead" -> 2), Seq("time", "lead"))
     val out = Files.createTempDirectory("graft-gw-dur").toString
-    // executors encode with the composed codec; open() recovers it
-    GridWriter.write(df.select(col("time"), col("lead"), col("fc")),
-      Fixtures.forecastGrid.schema, Map("lead" -> 2), out,
-      codec = "delta+zstd")
-    val reopened = BinaryGridStore.open(out)
-    assert(reopened.codec == "delta+zstd")
+    // executors encode with the declared compressor; open() recovers it
+    ZarrGridStore.writeFromRows(df.select(col("time"), col("lead"), col("fc")),
+      Fixtures.forecastGrid.schema, Map("lead" -> 2), out, "zstd")
+    val reopened = ZarrGridStore.open(out)
+    assert(reopened.arrays("fc").compressor.exists(_._1 == "zstd"))
     // the distributed writer records per-chunk variable stats too
     assert(reopened.stats.nonEmpty)
     assert(reopened.varBounds("fc", Seq((0, 4), (0, 2))).isDefined)
-    val df2 = ctx.dataFrame("fc_gw_rt", reopened, reopened.chunks,
+    val df2 = ctx.dataFrame("fc_gw_rt", reopened, reopened.chunkMap,
       Seq("time", "lead"))
     assert(df2.count() == 4L * 6)
     // law fc = 10 + t + 0.25*l at (t=1 -> 06:00, l=3 -> 18h)
@@ -151,9 +178,9 @@ class RoundTripSpec extends SparkTestBase {
   test("disk -> SQL -> grid -> store -> disk round trip") {
     val ctx = new XarrayContext(spark)
     val dir1 = Files.createTempDirectory("graft-rt1").toString
-    BinaryGridStore.write(Fixtures.linearGrid, dir1, Map("t" -> 6))
-    val disk = BinaryGridStore.open(dir1)
-    val df = ctx.dataFrame("rt_disk", disk, disk.chunks, Seq("t", "lat", "lon"))
+    val disk = ZarrGridStore.write(Fixtures.linearGrid, dir1, Map("t" -> 6))
+    val df = ctx.dataFrame("rt_disk", disk, disk.chunkMap,
+      Seq("t", "lat", "lon"))
 
     // SQL: halve the grid along t, keep values
     val res = GridResult.toGrid(
@@ -173,7 +200,7 @@ class RoundTripSpec extends SparkTestBase {
 
     // and it persists back to disk losslessly
     val dir2 = Files.createTempDirectory("graft-rt2").toString
-    val disk2 = BinaryGridStore.write(mem, dir2, Map("t" -> 4))
+    val disk2 = ZarrGridStore.write(mem, dir2, Map("t" -> 4))
     val a = mem.readVar("air", Seq((4, 4), (0, 12), (0, 10)))
       .asInstanceOf[Array[Double]]
     val b = disk2.readVar("air", Seq((4, 4), (0, 12), (0, 10)))
@@ -185,29 +212,30 @@ class RoundTripSpec extends SparkTestBase {
     val ctx = new XarrayContext(spark)
     val base = Files.createTempDirectory("graft-rechunk").toString
     // fragmented: 24 t-steps in 8 chunks of 3 (the post-append shape)
-    val frag = GridWriter.write(
+    val frag = ZarrGridStore.writeFromRows(
       ctx.dataFrame("rc_src", Fixtures.linearGrid, Map("t" -> 6),
         Seq("t", "lat", "lon")),
       Fixtures.linearGrid.schema, Map("t" -> 3), s"$base/frag", "zstd")
     val compact = ctx.rechunk(frag, Map("t" -> 12), s"$base/compact")
     // 8 chunk files per var became 2
-    assert(compact.chunks == Map("t" -> 12))
-    val files = new java.io.File(s"$base/compact/air").listFiles()
-      .filter(_.getName.endsWith(".bin"))
-    assert(files.length == 2, s"expected 2 chunk files, got ${files.length}")
+    assert(compact.chunkMap == Map("t" -> 12, "lat" -> 12, "lon" -> 10))
+    val files = chunkFiles(s"$base/compact/air")
+    assert(files.size == 2, s"expected 2 chunk files, got $files")
     // values identical across the rewrite
-    val a = ctx.dataFrame("rc_frag", frag, frag.chunks, Seq("t", "lat", "lon"))
-      .orderBy("t", "lat", "lon").collect()
-    val b = ctx.dataFrame("rc_comp", compact, compact.chunks,
+    val a = ctx.dataFrame("rc_frag", frag, frag.chunkMap,
+      Seq("t", "lat", "lon")).orderBy("t", "lat", "lon").collect()
+    val b = ctx.dataFrame("rc_comp", compact, compact.chunkMap,
       Seq("t", "lat", "lon")).orderBy("t", "lat", "lon").collect()
     assert(a.sameElements(b), "rechunk changed cell values")
     // recomputed zone maps still prune: t >= 12 opens 1 of 2 partitions
     graft.sources.ReadCounters.reset()
-    val n = ctx.dataFrame("rc_prune", compact, compact.chunks,
+    val n = ctx.dataFrame("rc_prune", compact, compact.chunkMap,
       Seq("t", "lat", "lon")).filter(col("t") >= 12).collect().length
     assert(n == 12 * 12 * 10)
     assert(graft.sources.ReadCounters.partitionsOpened.sum() == 1L,
       "rechunked store lost its pruning stats")
+    assert(compact.varBounds("air", Seq((12, 12), (0, 12), (0, 10)))
+      .isDefined, "rechunked store lost its value stats")
   }
 
   test("rechunk round-trips values for randomized chunk specs") {
@@ -227,10 +255,11 @@ class RoundTripSpec extends SparkTestBase {
         Seq(VarDef("v", Seq("t", "x"), GDouble)))
       val src = SyntheticGridStore(schema,
         Map("v" -> Fixtures.AffineLaw(7.0 + case_, Seq(3.0, 11.0))))
-      val s0 = BinaryGridStore.write(src, s"$base/s$case_", spec(),
-        codec = if (rnd.nextBoolean()) "zstd" else "none")
+      val s0 = ZarrGridStore.write(src, s"$base/s$case_", spec(),
+        if (rnd.nextBoolean()) "zstd" else "none")
       val s1 = ctx.rechunk(s0, spec(), s"$base/d$case_")
-      assert(s1.codec == s0.codec, s"case $case_: codec drift")
+      assert(s1.arrays("v").compressor == s0.arrays("v").compressor,
+        s"case $case_: compressor drift")
       val block = Seq((0, nT), (0, nX))
       assert(s1.readVar("v", block).asInstanceOf[Array[Double]].toSeq ==
         s0.readVar("v", block).asInstanceOf[Array[Double]].toSeq,
@@ -243,11 +272,12 @@ class RoundTripSpec extends SparkTestBase {
     val base = Files.createTempDirectory("graft-rechunk-mixed").toString
     // t2m over (time, lat), pressure over (time, lat, level) — two
     // pivot tables, one store
-    val src = BinaryGridStore.write(Fixtures.mixedDims, s"$base/src",
-      Map("time" -> 1), codec = "zstd")
+    val src = ZarrGridStore.write(Fixtures.mixedDims, s"$base/src",
+      Map("time" -> 1), "blosc:zstd:3:bit")
     val compact = ctx.rechunk(src, Map("time" -> 4), s"$base/dst")
-    assert(compact.codec == "zstd", "compaction must not re-encode")
     for (v <- Seq("t2m", "pressure")) {
+      assert(compact.arrays(v).compressor == src.arrays(v).compressor,
+        s"$v: compaction must not re-encode")
       val dims = src.schema.vars.find(_.name == v).get.dims
       val block = dims.map(d => (0, src.schema.dim(d).size))
       assert(compact.readVar(v, block).asInstanceOf[Array[Double]].toSeq ==

@@ -243,4 +243,153 @@ class ZarrGridStoreSpec extends SparkTestBase {
       yield 200.0 + t + 2.0 * i + 3.0 * j).sum
     assert(rows.head.getDouble(0) == expect)
   }
+
+  test("tail block spanning several disk chunks: assembled, stats withheld") {
+    // time 12 at chunk 5 -> chunks of 5, 5, 2 steps (the last stored
+    // padded). Block (5, 7) starts chunk-aligned and ends at the dim
+    // size but covers chunks 1 AND 2 — it must assemble both and must
+    // get NO single-chunk stats (unsound bounds would feed pruning)
+    val store = ZarrGridStore.write(Fixtures.airSmall,
+      tmp().resolve("tail").toString, Map("time" -> 5))
+    val law = Fixtures.airSmall.laws("air")
+    val got = store.readVar("air", Seq((5, 7), (0, 11), (0, 10)))
+      .asInstanceOf[Array[Double]]
+    assert(got.length == 7 * 11 * 10)
+    for (t <- 0 until 7; i <- 0 until 11; j <- 0 until 10)
+      assert(got(t * 110 + i * 10 + j) == law(Array(5 + t, i, j)),
+        s"cell ($t,$i,$j)")
+    assert(store.varBounds("air", Seq((5, 7), (0, 11), (0, 10))).isEmpty)
+    // the genuinely ragged FINAL chunk still serves its stats
+    assert(store.varBounds("air", Seq((10, 2), (0, 11), (0, 10))).nonEmpty)
+  }
+
+  test("DSv2 scan over a zarr store: pruning and projection skip chunk files") {
+    val ctx = new graft.XarrayContext(spark)
+    val store = ZarrGridStore.write(Fixtures.pruneGrid,
+      tmp().resolve("scan").toString, Map("time" -> 25))
+    val df = ctx.dataFrame("zdisk1", store, store.chunkMap, Seq("time", "lat"))
+    ReadCounters.reset()
+    // collect, not count(): the filtered count is metadata-answered and
+    // would open zero chunk files
+    val n = df.filter(col("time") >= to_timestamp(lit("2020-03-16 00:00:00")))
+      .collect().length
+    assert(n == 125)
+    assert(ReadCounters.partitionsOpened.sum() == 1L)
+
+    // projection pushdown means the chunk files of an unprojected
+    // variable are never opened: two-var store, select one
+    val dir2 = tmp().resolve("proj").toString
+    val store2 = ZarrGridStore.write(Fixtures.twoVarGrid, dir2,
+      Map("time" -> 5))
+    val df2 = ctx.dataFrame("zdisk2", store2, store2.chunkMap,
+      Seq("time", "lat"))
+    ReadCounters.reset()
+    df2.select("temperature").collect()
+    assert(ReadCounters.varReadCount("temperature") == 2L)
+    assert(ReadCounters.varReadCount("precipitation") == 0L)
+    // the files exist on disk but were not needed
+    assert(Files.exists(Paths.get(dir2, "precipitation", "0.0")))
+  }
+
+  test("fromDatasetAuto: byte budget picks the chunk spec end-to-end") {
+    // (lat,lon) slice = 110 doubles = 880 B; 2000 B budget -> time -> 2
+    // (the on-disk time chunk of 1 divides it)
+    val ctx = new graft.XarrayContext(spark)
+    val store = ZarrGridStore.write(Fixtures.airSmall,
+      tmp().resolve("auto").toString, Map("time" -> 1))
+    ctx.fromDatasetAuto("air_auto", store, budgetBytes = 2000)
+    ReadCounters.reset()
+    val n = spark.sql("SELECT time, lat, lon, air FROM air_auto")
+      .collect().length
+    assert(n == 12 * 11 * 10)
+    assert(ReadCounters.partitionsOpened.sum() == 6L) // 12 days / 2
+  }
+
+  test("fromDatasetAuto snaps the spec to a zarr store's on-disk chunks") {
+    // (lat,lon) slice = 120 doubles = 960 B; an 8000 B budget alone
+    // would pick t -> 8, which straddles the on-disk t=6 chunks (every
+    // partition would decode two files); snapping picks a whole
+    // multiple of 6 instead: 24 steps / 6 = 4 partitions
+    val ctx = new graft.XarrayContext(spark)
+    val store = ZarrGridStore.write(Fixtures.linearGrid,
+      tmp().resolve("snap").toString, Map("t" -> 6))
+    ctx.fromDatasetAuto("lin_auto", store, budgetBytes = 8000)
+    ReadCounters.reset()
+    val n = spark.sql("SELECT t, lat, lon, air FROM lin_auto")
+      .collect().length
+    assert(n == 24 * 12 * 10)
+    val parts = ReadCounters.partitionsOpened.sum()
+    assert(parts == 4L, s"$parts partitions: the auto t chunk of " +
+      s"${24 / parts} is not a whole multiple of the on-disk 6")
+  }
+
+  test("attrs + calendar metadata round-trip: store, pivot, template recovery") {
+    val base = Fixtures.airSmall
+    val schema = base.schema.copy(
+      dims = base.schema.dims.map(d => if (d.name == "time")
+        d.copy(attrs = Map("axis" -> "T", "long name" -> "time of obs"))
+      else d),
+      vars = base.schema.vars.map(_.copy(attrs = Map("units" -> "K"))),
+      attrs = Map("title" -> "air small", "institution" -> "graft test"))
+    val re = ZarrGridStore.write(SyntheticGridStore(schema, base.laws),
+      tmp().resolve("attrs").toString, Map("time" -> 6))
+    // dataset / dim / var attrs survive the on-disk metadata (incl. the
+    // space in "long name")
+    assert(re.schema.attrs == schema.attrs)
+    assert(re.schema.dim("time").attrs ==
+      Map("axis" -> "T", "long name" -> "time of obs"))
+    assert(re.schema.vars.head.attrs == Map("units" -> "K"))
+    // ...and flow onto the pivoted Spark columns
+    val df = new graft.XarrayContext(spark).dataFrame("attrs_grid", re,
+      Map("time" -> 6), Seq("time", "lat", "lon"))
+    assert(df.schema("air").metadata.getString("xarray:attr:units") == "K")
+    assert(df.schema("time").metadata.getString("xarray:attr:axis") == "T")
+    // ...and template recovery restores them after grid -> SQL -> grid
+    // (reference ds.py:72-147)
+    val res = GridResult.toGrid(
+      df.filter(col("lat") > 60).select("time", "lat", "lon", "air"),
+      Seq("time", "lat", "lon"))
+    val mem = ArrayGridStore.fromResult(res, re.schema)
+    assert(mem.schema.attrs == schema.attrs)
+    assert(mem.schema.dim("time").attrs("axis") == "T")
+    assert(mem.schema.vars.find(_.name == "air").get.attrs("units") == "K")
+    // calendar/units also persist (360_day fixture)
+    val cal = ZarrGridStore.write(Fixtures.cal360Grid,
+      tmp().resolve("cal").toString, Map("time" -> 90)).schema.dim("time")
+    assert(cal.calendar.contains("360_day") &&
+      cal.units.contains("days since 2000-01-01"))
+  }
+
+  test("values round-trip exactly for all numeric dtypes") {
+    val time = TimeCoords(Array(0L, 86400000000L))
+    val x = IntCoords(Array(0, 1, 2))
+    val schema = GridSchema(
+      Seq(DimDef("time", time), DimDef("x", x)),
+      Seq(
+        VarDef("d", Seq("time", "x"), GDouble),
+        VarDef("f", Seq("time", "x"), GFloat),
+        VarDef("i", Seq("time", "x"), GInt),
+        VarDef("l", Seq("time", "x"), GLong)))
+    import ZarrGridStoreSpec.Law
+    val src = SyntheticGridStore(schema,
+      Map("d" -> Law(1.25), "f" -> Law(0.5), "i" -> Law(2.0), "l" -> Law(3.0)))
+    for (comp <- Seq("none", "zstd", "blosc")) {
+      val store = ZarrGridStore.write(src,
+        tmp().resolve(s"dtypes_$comp").toString, Map("time" -> 1), comp)
+      for (v <- Seq("d", "f", "i", "l")) {
+        assert(store.schema.vars.find(_.name == v).get.dtype ==
+          schema.vars.find(_.name == v).get.dtype, s"$comp $v")
+        val a = src.readVar(v, Seq((1, 1), (0, 3)))
+        val b = store.readVar(v, Seq((1, 1), (0, 3)))
+        assert(a.asInstanceOf[Array[_]].toSeq ==
+          b.asInstanceOf[Array[_]].toSeq, s"$comp $v")
+      }
+    }
+  }
+}
+
+object ZarrGridStoreSpec {
+  final case class Law(m: Double) extends GridFun {
+    def apply(idx: Array[Int]): Double = m * (idx(0) * 3 + idx(1)) - 2.5
+  }
 }

@@ -28,6 +28,25 @@ class GraphOpsSpec extends SparkTestBase {
     assert(cc.values.forall(_ == 80L))
   }
 
+  test("connected components: a multi-hop chain converges in more than one round") {
+    val sqlc = spark
+    import sqlc.implicits._
+    // path 5-4-3-2-1 (diameter 4): the min label walks one hop per
+    // round, so rounds 1-4 each relabel and round 5 is the first quiet
+    // one. The convergence bit comes from an accumulator bumped while
+    // each round's checkpoint materializes; were that checkpoint lazy,
+    // round 1 would read zero changes and stop with wrong labels —
+    // the maxIter = 4 run below would then return instead of throwing
+    val edges = (2L to 5L).map(i => (i, i - 1)).toDF("a", "b")
+    val short = intercept[IllegalStateException] {
+      GraphOps.connectedComponents(edges, "a", "b", maxIter = 4)
+    }
+    assert(short.getMessage.contains("did not converge"))
+    val cc = GraphOps.connectedComponents(edges, "a", "b", maxIter = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc == (1L to 5L).map(_ -> 1L).toMap)
+  }
+
   test("pointer jumping matches propagation on mixed graphs") {
     val sqlc = spark
     import sqlc.implicits._

@@ -92,11 +92,10 @@ class MetadataCountRuleSpec extends SparkTestBase {
 
   test("variable-predicate counts answer from per-chunk stats") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vstat").toString
-    graft.grid.BinaryGridStore.write(Fixtures.pruneGrid, dir,
+    val store = graft.grid.ZarrGridStore.write(Fixtures.pruneGrid, dir,
       Map("time" -> 25))
-    val store = graft.grid.BinaryGridStore.open(dir)
     val ctx = new XarrayContext(session)
-    val df = ctx.dataFrame("metacount4", store, store.chunks,
+    val df = ctx.dataFrame("metacount4", store, store.chunkMap,
       Seq("time", "lat"))
     // temperature = t*10 + lat_idx; chunk [min,max]: [0,244] [250,494]
     // [500,744] [750,994]. >= 500: chunks 2+3 fully included, 0+1

@@ -4,7 +4,7 @@ import graft.{SparkEntry, SparkTestBase}
 import graft.sources.ReadCounters
 
 /** End-to-end pins for the oracle-gated grid queries that exercise the
-  * production paths: the on-disk zstd store round trip and the
+  * production paths: the on-disk zstd Zarr round trip and the
   * non-Gregorian cftime predicate (both driver-gated in SparkEntry).
   */
 class GridQueryE2ESpec extends SparkTestBase {
@@ -35,10 +35,12 @@ class GridQueryE2ESpec extends SparkTestBase {
     val root = graft.queries.QueryTmp.stagedLookup("graft_disk_grid")
       .getOrElse(fail("disk fixture was not staged")) + "/store"
     val files = new java.io.File(root, "air").listFiles()
-    assert(files != null && files.count(_.getName.endsWith(".bin")) == 4)
-    val meta = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(root, "metadata.txt"))
-    assert(meta.contains("codec zstd"))
+    assert(files != null &&
+      files.count(_.getName.matches("\\d+\\.\\d+\\.\\d+")) == 4)
+    val zarray = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(root, "air", ".zarray")))
+    assert(zarray.path("compressor").path("id").asText() == "zstd")
   }
 
   test("pivot_grid_join: mask grid broadcasts; cube side never shuffles pre-join") {

@@ -31,19 +31,27 @@ class GridStreamsSpec extends SparkTestBase {
     } yield Cell(t, 75.0 - 2.5 * i, 200.0 + 2.5 * j,
       200.0 + t + 2.0 * i + 3.0 * j)
 
+  private def cellsDf(cells: Seq[Cell]) = {
+    import spark.implicits._
+    cells.map(c => (c.t, c.lat, c.lon, c.air)).toDF("t", "lat", "lon", "air")
+  }
+
+  /** A distributed append of linear-grid slab [t0, t1) to `root`. */
+  private def appendSlab(root: String, t0: Int, t1: Int): ZarrGridStore =
+    ZarrGridStore.appendFromRows(cellsDf(slab(t0, t1)),
+      Fixtures.linearGridSlice(t0, t1).schema, root, "t")
+
   test("streaming append sink: micro-batches extend the store along t") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
     val root = java.nio.file.Files
       .createTempDirectory("graft-stream-append").toString + "/store"
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), root,
+    ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 6), "zstd")
 
     val input = MemoryStream[Cell]
-    val q = GridStreams.appendSink(input.toDF(), root,
-        Fixtures.linearGrid.schema, Seq("t", "lat", "lon"), "t")
-      .start()
+    val q = GridStreams.appendSink(input.toDF(), root, "t").start()
     // two micro-batches, one 6-step chunk each
     input.addData(slab(12, 18): _*)
     q.processAllAvailable()
@@ -51,13 +59,14 @@ class GridStreamsSpec extends SparkTestBase {
     q.processAllAvailable()
     q.stop()
 
-    val store = BinaryGridStore.open(root)
+    val store = ZarrGridStore.open(root)
     assert(store.schema.dim("t").size == 24)
     // a query straddling the two streamed batches sees one seamless
     // grid and still prunes: t >= 15 opens only the two streamed
     // chunks (2: t 12-17 boundary, 3: t 18-23) — 2 of 4
     val df = new XarrayContext(spark)
-      .dataFrame("streamed_grid", store, store.chunks, Seq("t", "lat", "lon"))
+      .dataFrame("streamed_grid", store, store.chunkMap,
+        Seq("t", "lat", "lon"))
     ReadCounters.reset()
     val rows = df.filter(col("t") >= 15).collect()
     assert(rows.length == 9 * 12 * 10)
@@ -74,30 +83,16 @@ class GridStreamsSpec extends SparkTestBase {
 
     // at-least-once replay: re-delivering an already-appended batch is
     // a no-op, not a duplicated slab
-    GridStreams.appendBatch(
-      slab(18, 24).map(c => (c.t, c.lat, c.lon, c.air))
-        .toDF("t", "lat", "lon", "air"),
-      root, Fixtures.linearGrid.schema, Seq("t", "lat", "lon"), "t")
-    assert(BinaryGridStore.open(root).schema.dim("t").size == 24)
+    GridStreams.appendBatch(cellsDf(slab(18, 24)), root, "t")
+    assert(ZarrGridStore.open(root).schema.dim("t").size == 24)
 
-    def cellsDf(cells: Seq[Cell]) =
-      cells.map(c => (c.t, c.lat, c.lon, c.air))
-        .toDF("t", "lat", "lon", "air")
     // an INCOMPLETE slab must fail fast — NaN-filling it and dropping
     // the remainder as a "replay" next batch would lose data silently
     val part = intercept[IllegalArgumentException] {
-      GridStreams.appendBatch(cellsDf(slab(24, 30).drop(7)), root,
-        Fixtures.linearGrid.schema, Seq("t", "lat", "lon"), "t")
+      GridStreams.appendBatch(cellsDf(slab(24, 30).drop(7)), root, "t")
     }
     assert(part.getMessage.contains("cells"))
-    // a batch not closing whole chunks would poison every LATER batch;
-    // fail THIS one with the actionable message
-    val ragged = intercept[IllegalArgumentException] {
-      GridStreams.appendBatch(cellsDf(slab(24, 27)), root,
-        Fixtures.linearGrid.schema, Seq("t", "lat", "lon"), "t")
-    }
-    assert(ragged.getMessage.contains("chunk"))
-    assert(BinaryGridStore.open(root).schema.dim("t").size == 24) // intact
+    assert(ZarrGridStore.open(root).schema.dim("t").size == 24) // intact
   }
 
   test("zarr streaming append: unaligned batches, replay-safe, on s3a") {
@@ -112,16 +107,13 @@ class GridStreamsSpec extends SparkTestBase {
       val dir = java.nio.file.Files.createTempDirectory("graft-szarr")
       dir.toFile.deleteOnExit()
       val root = "s3a:" + dir.toString + "/store"
-      def cdf(cells: Seq[Cell]) =
-        cells.map(c => (c.t, c.lat, c.lon, c.air))
-          .toDF("t", "lat", "lon", "air")
       ZarrGridStore.writeFromRows(
-        cdf(slab(0, 7)), Fixtures.linearGridSlice(0, 7).schema,
+        cellsDf(slab(0, 7)), Fixtures.linearGridSlice(0, 7).schema,
         Map("t" -> 6), root, "zstd:3")
       MockS3FileSystem.reset() // count the streamed appends only
 
       val input = MemoryStream[Cell]
-      val q = GridStreams.appendSinkZarr(input.toDF(), root, "t").start()
+      val q = GridStreams.appendSink(input.toDF(), root, "t").start()
       // UNALIGNED batches (7 -> 13 -> 24 with chunk 6): each append
       // read-modify-writes the edge chunk — no whole-chunk batch rule
       input.addData(slab(7, 13): _*)
@@ -147,11 +139,11 @@ class GridStreamsSpec extends SparkTestBase {
         assert(r.getDouble(3) == law(Array(t, i, j)), s"cell ($t,$i,$j)")
       }
       // replay: an already-appended slab is a no-op
-      GridStreams.appendBatchZarr(cdf(slab(13, 24)), root, "t")
+      GridStreams.appendBatch(cellsDf(slab(13, 24)), root, "t")
       assert(ZarrGridStore.open(root).schema.dim("t").size == 24)
       // incomplete slabs still fail fast
       val part = intercept[IllegalArgumentException] {
-        GridStreams.appendBatchZarr(cdf(slab(24, 26)).limit(100),
+        GridStreams.appendBatch(cellsDf(slab(24, 26)).limit(100),
           root, "t")
       }
       assert(part.getMessage.contains("cells"))
@@ -165,7 +157,7 @@ class GridStreamsSpec extends SparkTestBase {
       Seq(DimDef("t", IntCoords((0 until 8).toArray))),
       Seq(VarDef("obs_ts", Seq("t"), GTimestamp),
         VarDef("lag", Seq("t"), GDuration)))
-    BinaryGridStore.write(
+    ZarrGridStore.write(
       SyntheticGridStore(schema, Map(
         "obs_ts" -> GridStreamsSpec.TsLaw(),
         "lag" -> GridStreamsSpec.DurLaw())),
@@ -202,7 +194,7 @@ class GridStreamsSpec extends SparkTestBase {
       .createTempDirectory("graft-tail-restart").toString
     val root = base + "/store"
     val ckpt = base + "/ckpt"
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), root,
+    ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 6), "zstd")
     val out = base + "/out"
     def startQuery() = GridStreams.tailCells(spark, root, "air")
@@ -216,7 +208,7 @@ class GridStreamsSpec extends SparkTestBase {
     q1.processAllAvailable(); q1.stop()
     assert(cells().length == 12 * 12 * 10)
     // the archive grows while the query is down
-    BinaryGridStore.appendAlong(root, Fixtures.linearGridSlice(12, 24), "t")
+    appendSlab(root, 12, 24)
     // run 2: same checkpoint — must deliver ONLY the new chunks (no
     // re-delivery of checkpointed files, no gaps)
     val q2 = startQuery()
@@ -230,28 +222,42 @@ class GridStreamsSpec extends SparkTestBase {
       "pre-restart chunks re-delivered or dropped")
   }
 
-  test("tailCells: torn append heals once the metadata commit lands") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val base = Files.createTempDirectory("graft-tail-torn").toString
+  /** A `live` store (t 0-11) whose chunk file for t 12-17 has landed
+    * ahead of its metadata commit — the state an appendFromRows leaves
+    * between moving its staged chunks in and rewriting the metadata —
+    * plus `twin`, the same store after that append committed (the
+    * donor of the metadata files the commit writes).
+    */
+  private def tornStore(tag: String): (String, String) = {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory(tag).toString
     val live = base + "/live"
     val twin = base + "/twin"
-    // live store: 2 committed chunks (t 0-11). twin: the same store
-    // with one more chunk appended (t 12-17) — the donor of a "torn"
-    // state: its chunk FILE copied into live ahead of any metadata
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), live,
+    ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), live,
       Map("t" -> 6), "zstd")
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), twin,
+    ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), twin,
       Map("t" -> 6), "zstd")
-    BinaryGridStore.appendAlong(twin, Fixtures.linearGridSlice(12, 18), "t")
-    Files.copy(Paths.get(twin, "air", "2.0.0.bin"),
-      Paths.get(live, "air", "2.0.0.bin"))
+    appendSlab(twin, 12, 18)
+    Files.copy(Paths.get(twin, "air", "2.0.0"),
+      Paths.get(live, "air", "2.0.0"))
+    (live, twin)
+  }
+
+  test("tailCells: torn append heals once the metadata commit lands") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val (live, twin) = tornStore("graft-tail-torn")
     // the stream sees the file; decode blocks in the metadata-refresh
-    // backoff; 1.5 s later the "writer" commits (metadata copy) and the
-    // batch completes instead of dying
+    // backoff. From 1 s on, the "writer" commits file by file in
+    // appendFromRows' order, slowly enough that a re-open lands on the
+    // half-written commit (grown coordinate chunk, old array
+    // metadata); the batch then completes instead of dying
     val committer = new Thread(() => {
-      Thread.sleep(1500L)
-      Files.copy(Paths.get(twin, "metadata.txt"),
-        Paths.get(live, "metadata.txt"), StandardCopyOption.REPLACE_EXISTING)
+      Thread.sleep(1000L)
+      Seq("t/0", "t/.zarray", "air/.zarray", ".zmetadata").foreach { rel =>
+        Files.copy(Paths.get(twin, rel), Paths.get(live, rel),
+          StandardCopyOption.REPLACE_EXISTING)
+        Thread.sleep(300L)
+      }
     })
     committer.start()
     val q = GridStreams.tailCells(spark, live, "air")
@@ -271,17 +277,7 @@ class GridStreamsSpec extends SparkTestBase {
   }
 
   test("tailCells: a commit that never lands fails the query, not silently") {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft-tail-dead").toString
-    val live = base + "/live"
-    val twin = base + "/twin"
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), live,
-      Map("t" -> 6), "zstd")
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), twin,
-      Map("t" -> 6), "zstd")
-    BinaryGridStore.appendAlong(twin, Fixtures.linearGridSlice(12, 18), "t")
-    Files.copy(Paths.get(twin, "air", "2.0.0.bin"),
-      Paths.get(live, "air", "2.0.0.bin"))
+    val (live, _) = tornStore("graft-tail-dead")
     val q = GridStreams.tailCells(spark, live, "air")
       .writeStream.outputMode("append").format("memory")
       .queryName("tail_dead").start()
@@ -299,15 +295,16 @@ class GridStreamsSpec extends SparkTestBase {
   test("tailCells: appended chunks arrive as later stream batches") {
     val root = java.nio.file.Files
       .createTempDirectory("graft-tail").toString + "/store"
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), root,
+    ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 6), "zstd")
     val q = GridStreams.tailCells(spark, root, "air")
       .writeStream.outputMode("append").format("memory")
       .queryName("tail_out").start()
     q.processAllAvailable()
     assert(spark.table("tail_out").count() == 12L * 12 * 10)
-    // the archive grows; the stream picks up exactly the new chunks
-    BinaryGridStore.appendAlong(root, Fixtures.linearGridSlice(12, 24), "t")
+    // the archive grows by whole chunks; the stream picks up exactly
+    // the new chunk files
+    appendSlab(root, 12, 24)
     q.processAllAvailable()
     q.stop()
     val rows = spark.table("tail_out").collect()
@@ -324,14 +321,14 @@ class GridStreamsSpec extends SparkTestBase {
       .distinct.length == rows.length)
   }
 
-  test("tailCellsZarr: blosc tree streams cells; padded edges dropped") {
+  test("tailCells: blosc tree streams cells; padded edges dropped") {
     val root = java.nio.file.Files
       .createTempDirectory("graft-ztail").toString + "/store"
     // ragged t edge (12 = 5+5+2): the stored edge chunk is PADDED per
     // the v2 spec; the stream must drop the padding cells
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 5), "blosc")
-    val q = GridStreams.tailCellsZarr(spark, root, "air")
+    val q = GridStreams.tailCells(spark, root, "air")
       .writeStream.outputMode("append").format("memory")
       .queryName("ztail_out").start()
     q.processAllAvailable(); q.stop()
@@ -348,17 +345,17 @@ class GridStreamsSpec extends SparkTestBase {
       .distinct.length == rows.length)
   }
 
-  test("tailCellsZarr: appended chunk files arrive as later batches") {
+  test("tailCells: hand-copied forecast cycle arrives as a later batch") {
     val base = java.nio.file.Files.createTempDirectory("graft-ztail2")
     val root = base.resolve("store").toString
     val full = base.resolve("full").toString
-    // chunk-aligned initial extent (the same contract as binary
-    // appends: file streams never re-deliver a rewritten edge chunk)
+    // chunk-aligned initial extent (file streams never re-deliver a
+    // rewritten edge chunk)
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 6), "zstd")
     ZarrGridStore.write(Fixtures.linearGrid, full,
       Map("t" -> 6), "zstd")
-    val q = GridStreams.tailCellsZarr(spark, root, "air")
+    val q = GridStreams.tailCells(spark, root, "air")
       .writeStream.outputMode("append").format("memory")
       .queryName("ztail_grow").start()
     q.processAllAvailable()
