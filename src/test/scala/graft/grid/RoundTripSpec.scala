@@ -132,23 +132,6 @@ class RoundTripSpec extends SparkTestBase {
       assert(got(t * 120 + i * 10 + j) == law(Array(6 + t, i, j)))
     assert(store.varBounds("air", Seq((18, 6), (0, 12), (0, 10)))
       .contains((218.0, 272.0)))
-    // misuse is rejected before anything is staged: a retried
-    // (overlapping) slab would double-count, shifted invariant coords
-    // would misplace every cell
-    val dup = intercept[IllegalArgumentException] {
-      ZarrGridStore.appendFromRows(slabDf(12, 24),
-        Fixtures.linearGridSlice(12, 24).schema, root, "t")
-    }
-    assert(dup.getMessage.contains("overlap"))
-    val next = Fixtures.linearGridSlice(24, 30).schema
-    val shifted = next.copy(dims = next.dims.map(d =>
-      if (d.name == "lat") d.copy(coords = DoubleCoords(
-        (0 until 12).map(i => 80.0 - 2.5 * i).toArray)) else d))
-    val bad = intercept[IllegalArgumentException] {
-      ZarrGridStore.appendFromRows(slabDf(24, 30), shifted, root, "t")
-    }
-    assert(bad.getMessage.contains("lat"))
-    assert(ZarrGridStore.open(root).schema.dim("t").size == 24)
   }
 
   test("distributed write of a duration-dim grid round-trips with stats") {

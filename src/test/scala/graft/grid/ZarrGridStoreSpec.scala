@@ -263,6 +263,75 @@ class ZarrGridStoreSpec extends SparkTestBase {
     assert(store.varBounds("air", Seq((10, 2), (0, 11), (0, 10))).nonEmpty)
   }
 
+  test("appendFromRows: new chunks past the extent, old files untouched") {
+    val ctx = new graft.XarrayContext(spark)
+    def slabDf(lo: Int, hi: Int) = ctx.dataFrame(s"zappend_slab$lo",
+      Fixtures.linearGridSlice(lo, hi), Map("t" -> 6),
+      Seq("t", "lat", "lon"))
+    def append(root: String, lo: Int, hi: Int) =
+      ZarrGridStore.appendFromRows(slabDf(lo, hi),
+        Fixtures.linearGridSlice(lo, hi).schema, root, "t")
+    val root = tmp().resolve("append").toString
+    ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
+      Map("t" -> 6), "zstd")
+    val airDir = new java.io.File(root, "air")
+    def chunkMtimes = airDir.listFiles()
+      .filter(_.getName.matches("\\d+(\\.\\d+)*"))
+      .map(f => f.getName -> f.lastModified).toMap
+    val before = chunkMtimes
+    assert(before.keySet == Set("0.0.0", "1.0.0"))
+    append(root, 12, 24)
+    // old chunk files untouched (same mtime), two new ones
+    val after = chunkMtimes
+    assert(after.keySet == Set("0.0.0", "1.0.0", "2.0.0", "3.0.0"))
+    before.foreach { case (n, m) => assert(after(n) == m, s"$n rewritten") }
+    // reopened store sees the seamless 24-step grid with merged stats
+    val store = ZarrGridStore.open(root)
+    assert(store.schema.dim("t").size == 24)
+    val law = Fixtures.linearGrid.laws("air")
+    val got = store.readVar("air", Seq((6, 12), (0, 12), (0, 10)))
+      .asInstanceOf[Array[Double]] // spans the append boundary
+    for (t <- 0 until 12; i <- 0 until 12; j <- 0 until 10)
+      assert(got(t * 120 + i * 10 + j) == law(Array(6 + t, i, j)))
+    // appended chunks carry value stats: chunk 3 = t 18..23
+    assert(store.varBounds("air", Seq((18, 6), (0, 12), (0, 10)))
+      .contains((200.0 + 18.0, 200.0 + 23.0 + 22.0 + 27.0)))
+    // misuse is rejected: wrong invariant coords, then a retried
+    // (overlapping) slab that would otherwise be silently doubled
+    val next = Fixtures.linearGridSlice(24, 30).schema
+    val shifted = next.copy(dims = next.dims.map(d =>
+      if (d.name == "lat") d.copy(coords = DoubleCoords(
+        (0 until 12).map(i => 80.0 - 2.5 * i).toArray)) else d))
+    intercept[IllegalArgumentException] {
+      ZarrGridStore.appendFromRows(slabDf(24, 30), shifted, root, "t")
+    }
+    val dup = intercept[IllegalArgumentException](append(root, 12, 24))
+    assert(dup.getMessage.contains("overlap"))
+    append(root, 24, 27)
+    // 27 % 6 != 0: appending onto the ragged extent read-modify-writes
+    // the partial edge chunk (t 24..26 + t 27..29 merge into chunk 4)
+    val grown = append(root, 27, 30)
+    assert(grown.schema.dim("t").size == 30)
+    val merged = grown.readVar("air", Seq((24, 6), (0, 12), (0, 10)))
+      .asInstanceOf[Array[Double]]
+    for (t <- 0 until 6; i <- 0 until 12; j <- 0 until 10)
+      assert(merged(t * 120 + i * 10 + j) == law(Array(24 + t, i, j)),
+        s"edge cell ($t,$i,$j)")
+    // the merged edge chunk's stats were recomputed over old + new data
+    assert(grown.varBounds("air", Seq((24, 6), (0, 12), (0, 10)))
+      .contains((200.0 + 24.0, 200.0 + 29.0 + 22.0 + 27.0)))
+    // an UNCHUNKED axis grows too: `.zarray` pins its chunk length at
+    // the original extent, so the appended slab lands in a new chunk
+    val uroot = tmp().resolve("append-unchunked").toString
+    ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), uroot, Map.empty)
+    val ugrown = append(uroot, 12, 24)
+    assert(ugrown.arrays("air").chunkShape.head == 12)
+    val ugot = ugrown.readVar("air", Seq((0, 24), (0, 12), (0, 10)))
+      .asInstanceOf[Array[Double]]
+    for (t <- 0 until 24; i <- 0 until 12; j <- 0 until 10)
+      assert(ugot(t * 120 + i * 10 + j) == law(Array(t, i, j)))
+  }
+
   test("DSv2 scan over a zarr store: pruning and projection skip chunk files") {
     val ctx = new graft.XarrayContext(spark)
     val store = ZarrGridStore.write(Fixtures.pruneGrid,
