@@ -22,17 +22,17 @@ import org.apache.spark.sql.types._
   *
   * Shuffle volume = one (long, long, value) triple per cell; peak task
   * memory = the chunks co-hashed into that task, not the grid. The
-  * driver writes only metadata ([[ZarrGridStore.writeFromRows]],
-  * [[ZarrGridStore.appendFromRows]] and their v3 faces in [[ZarrV3]]).
+  * driver writes only metadata ([[ZarrGridStore.writeFromRows]] and
+  * [[ZarrGridStore.appendFromRows]], for every [[ZarrLayout]]).
   * Executors write through the Hadoop FileSystem API ([[GridIO]]) with
   * the driver's Hadoop conf shipped in the task closure, so the same
   * code targets local disk, HDFS, S3A or GCS shared storage.
   */
 object GridWriter {
 
-  /** Where a scattered chunk lands: a Zarr v2 or v3 tree's padded
-    * encoded chunks. Executors call `write`; it must be Serializable
-    * and thread-agnostic.
+  /** Where a scattered chunk lands: a Zarr tree's padded encoded
+    * chunks. Executors call `write`; it must be Serializable and
+    * thread-agnostic.
     */
   trait ChunkSink extends Serializable {
     /** Persist one dense chunk. `eff` is the per-dim effective
@@ -48,44 +48,17 @@ object GridWriter {
         : Seq[(String, Option[(Any, Any)], Option[Double])]
   }
 
-  /** Zarr v2 chunk files: padded to the full chunk shape per the spec,
-    * little-endian, compressed.
+  /** Zarr chunk (or whole SHARD) files: padded to the full chunk shape
+    * per the spec, little-endian (vlen-utf8 for strings), compressed.
+    * `innerSz` turns each scattered outer chunk into a v3
+    * `sharding_indexed` shard (per-inner-chunk compression + index)
+    * encoded entirely on the executor. `key` maps the dotted chunk
+    * index to the file name under the variable's dir: the layout's key
+    * for fresh writes, the dotted name itself for append staging.
     */
   private[grid] final case class ZarrSink(root: String, dtype: GridType,
-      chunkSz: Seq[Int], comp: Option[(String, Int)]) extends ChunkSink {
-    def write(varName: String, ciDotted: String, arr: AnyRef,
-        eff: Array[Int],
-        conf: org.apache.hadoop.conf.Configuration)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] = {
-      val padded = ZarrGridStore.padChunk(arr, eff, chunkSz.toArray, dtype)
-      val payload =
-        if (dtype == GString) // |O + vlen-utf8 layout
-          ZarrGridStore.compress(
-            ZarrGridStore.encodeVlen(padded.asInstanceOf[Array[String]]),
-            comp, 1)
-        else ZarrGridStore.compress(ZarrGridStore.toLE(padded, dtype),
-          comp, dtype.byteWidth)
-      GridIO.write(s"$root/$varName/$ciDotted", payload, conf)
-      // value stats on the EFFECTIVE cells (padding is storage, not
-      // data) — feeds the .graft-stats.json sidecar
-      Seq((ciDotted,
-        StatsSource.chunkStats(arr), StatsSource.chunkSum(arr)))
-    }
-  }
-
-  /** Zarr v3 chunk (or whole SHARD) files: default `c/<i>/<j>` keys;
-    * `innerSz` turns each scattered outer chunk into a
-    * `sharding_indexed` shard (per-inner-chunk compression + index)
-    * encoded entirely on the executor; string variables encode
-    * vlen-utf8.
-    */
-  private[grid] final case class V3Sink(root: String, dtype: GridType,
       chunkSz: Seq[Int], innerSz: Option[Seq[Int]],
-      comp: Option[(String, Int)],
-      /** Dotted staging names instead of nested `c/` keys — the append
-        * path stages flat so shifted renames stay one-level.
-        */
-      flatKeys: Boolean = false) extends ChunkSink {
+      comp: Option[(String, Int)], key: String => String) extends ChunkSink {
     def write(varName: String, ciDotted: String, arr: AnyRef,
         eff: Array[Int],
         conf: org.apache.hadoop.conf.Configuration)
@@ -110,11 +83,10 @@ object GridWriter {
               ZarrV3.encodeShard(le, chunkSz, inner, dtype.byteWidth, comp)
           }
         }
-      GridIO.write(
-        if (flatKeys) s"$root/$varName/$ciDotted"
-        else s"$root/$varName/c/${ciDotted.split('.').mkString("/")}",
-        payload, conf)
+      GridIO.write(s"$root/$varName/${key(ciDotted)}", payload, conf)
       innerSz match {
+        // value stats on the EFFECTIVE cells (padding is storage, not
+        // data) — feeds the .graft-stats.json sidecar
         case None => Seq((ciDotted,
           StatsSource.chunkStats(arr), StatsSource.chunkSum(arr)))
         case Some(inner) =>

@@ -2169,81 +2169,149 @@ object ZarrGridStore {
 
   // ---- write ---------------------------------------------------------
 
-  /** Materialize `source` as a real Zarr v2 tree (one array per dim
-    * coordinate + one per variable, xarray `_ARRAY_DIMENSIONS`
-    * convention, little-endian, edge chunks padded per the spec) and
-    * re-open it. `compressor` grammar: `none | zlib[:level] |
-    * gzip[:level] | zstd[:level]`. Timestamp coordinates encode as
-    * int64 microseconds since the epoch on the proleptic Gregorian
-    * calendar (they hold real-timeline instants by construction);
-    * non-Gregorian axes keep their original offsets/units/calendar, so
-    * they round-trip exactly. Doubles as the engine's Zarr SINK — the
-    * written tree is consumable by any v2 reader.
+  /** Materialize `source` as a real Zarr tree in `layout`'s format
+    * version (one array per dim coordinate + one per variable,
+    * little-endian, edge chunks padded per the spec) and re-open it.
+    * `compressor` grammar: `none | zlib[:level] | gzip[:level] |
+    * zstd[:level] | blosc[...]` ([[parseCompressor]]; v3 has no zlib
+    * codec). [[ZarrLayout.V2]] follows the xarray `_ARRAY_DIMENSIONS`
+    * convention; [[ZarrLayout.V3]] writes `zarr.json` nodes with
+    * `dimension_names`, and its `shardInner` turns on
+    * `sharding_indexed` (inner chunks compressed individually, the
+    * crc32c'd index at the shard end — the zarr-python default
+    * framing). Timestamp coordinates encode as int64 microseconds since
+    * the epoch on the proleptic Gregorian calendar (they hold
+    * real-timeline instants by construction); non-Gregorian axes keep
+    * their original offsets/units/calendar, so they round-trip exactly.
+    * Doubles as the engine's Zarr SINK — the written tree is consumable
+    * by any reader of its version.
     */
   def write(source: GridStore, root: String, chunks: Map[String, Int],
-      compressor: String = "zlib"): ZarrGridStore = {
+      compressor: String = "zlib",
+      layout: ZarrLayout = ZarrLayout.V2): ZarrGridStore = {
     val conf = GridIO.driverConf()
-    val cleanRoot = root.stripSuffix("/")
-    val comp = parseCompressor(compressor)
-    val tasks = writeShell(source.schema, cleanRoot, chunks, comp, conf)
-    val entries = tasks.map(_.run(source, comp, conf))
-    source.schema.vars.filter(_.dims.isEmpty).foreach(v =>
-      writeScalarChunk(cleanRoot, v, source.readVar(v.name, Seq.empty),
-        comp, "0", conf))
-    writeStatsSidecar(cleanRoot, source.schema, entries, conf)
-    consolidate(cleanRoot, conf)
-    open(cleanRoot) // takes the consolidated path it just wrote
+    writeStore(source, root, chunks, compressor, layout)(
+      _.flatMap(_.run(source, conf)))
   }
 
-  /** One data chunk's write work: read the block from the source, pad
-    * to the full chunk shape, encode, write the chunk file; returns
-    * the chunk's sidecar stats entry. Small and Serializable so
-    * [[writeDistributed]] ships it to executors.
+  /** [[write]] with EXECUTOR-side chunk encoding and writes — the scale
+    * path for materializing a large grid as Zarr. The driver writes
+    * only metadata and coordinate arrays; the chunk task list
+    * parallelizes across the cluster, each task reading its block from
+    * the (serializable) source store and writing through the shipped
+    * Hadoop conf. At 10⁵–10⁶ chunks the driver-side loop of [[write]]
+    * is the bottleneck; here wall-clock is chunks / cluster-cores
+    * (shard encoding — per-inner-chunk compression + index — is
+    * exactly what should not run in a driver loop). The store-to-store
+    * shape also makes this the distributed format-conversion path
+    * (foreign layout → Zarr, Zarr → rechunked Zarr — see
+    * [[graft.XarrayContext.rechunk]]).
     */
-  private[grid] final case class ChunkWriteTask(dir: String, varName: String,
-      dtype: GridType, chunkSz: Seq[Int],
-      block: Seq[(Int, Int)]) extends Serializable {
-    def run(source: GridStore, comp: Option[(String, Int)],
-        conf: org.apache.hadoop.conf.Configuration)
-        : (String, Option[(Any, Any)], Option[Double]) = {
-      val ci = block.zip(chunkSz).map(b => b._1._1 / b._2)
-      val eff = block.map(_._2).toArray
-      val data = source.readVar(varName, block)
-      val padded = padChunk(data, eff, chunkSz.toArray, dtype)
-      val payload =
-        if (dtype == GString) // |O + vlen-utf8 layout
-          compress(encodeVlen(padded.asInstanceOf[Array[String]]), comp, 1)
-        else compress(toLE(padded, dtype), comp, dtype.byteWidth)
-      GridIO.write(s"$dir/${ci.mkString(".")}", payload, conf)
-      (s"$varName ${ci.mkString(".")}",
-        StatsSource.chunkStats(data), StatsSource.chunkSum(data))
+  def writeDistributed(source: GridStore, root: String,
+      chunks: Map[String, Int], compressor: String = "zlib",
+      layout: ZarrLayout = ZarrLayout.V2): ZarrGridStore = {
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    writeStore(source, root, chunks, compressor, layout) { tasks =>
+      val hconf = GridIO.shippable()
+      val bSource = sc.broadcast(source)
+      val parts = math.max(1, math.min(tasks.size, sc.defaultParallelism * 2))
+      // stats entries are tiny ((key, min, max, sum) per chunk) — the
+      // collect is metadata-sized, never data-sized
+      val entries = sc.parallelize(tasks, parts)
+        .flatMap(t => t.run(bSource.value, hconf.value)).collect().toSeq
+      bSource.destroy()
+      entries
     }
   }
 
-  /** Driver-side shell of a v2 write: group metadata, coordinate
-    * arrays, per-variable `.zarray`/`.zattrs` — everything except the
-    * data chunks, which come back as the task list.
+  /** The store-to-store body of [[write]] and [[writeDistributed]]:
+    * one [[ChunkWriteTask]] per data chunk, run by `runTasks`.
     */
-  private def writeShell(schema: GridSchema, cleanRoot: String,
-      chunks: Map[String, Int], comp: Option[(String, Int)],
-      conf: org.apache.hadoop.conf.Configuration): Seq[ChunkWriteTask] = {
+  private def writeStore(source: GridStore, root: String,
+      chunks: Map[String, Int], compressor: String, layout: ZarrLayout)(
+      runTasks: Seq[ChunkWriteTask] => Seq[StatsEntry]): ZarrGridStore =
+    writeTree(source.schema, root, chunks, compressor, layout,
+      v => source.readVar(v.name, Seq.empty)) { sinks =>
+      runTasks(sinks.flatMap { case (v, sink) =>
+        val sub = GridSchema(v.dims.map(source.schema.dim), Seq.empty)
+        ChunkGrid.blocks(sub, chunks).map(ChunkWriteTask(v.name, _, sink))
+      })
+    }
+
+  /** Every fresh write: the layout's metadata shell, the data chunks
+    * (`writeChunks` gets each data variable's sink and returns the
+    * stats entries), the 0-d variables' single chunks, the stats
+    * sidecar, the layout's consolidation, and the re-open.
+    */
+  private def writeTree(schema: GridSchema, root: String,
+      chunks: Map[String, Int], compressor: String, layout: ZarrLayout,
+      scalarValue: VarDef => AnyRef)(
+      writeChunks: Seq[(VarDef, GridWriter.ZarrSink)] => Seq[StatsEntry])
+      : ZarrGridStore = {
+    val conf = GridIO.driverConf()
+    val cleanRoot = root.stripSuffix("/")
+    val comp = layout.parseCompressor(compressor)
     GridIO.mkdirs(cleanRoot, conf)
     // a re-write into an existing root must drop the old sidecar
     // BEFORE any chunk lands: a crash mid-write then leaves no stats
     // (sound) instead of old bounds next to new data
     GridIO.delete(s"$cleanRoot/$StatsSidecar", conf)
+    layout.writeShell(schema, cleanRoot, chunks, comp, conf)
+    val entries = writeChunks(schema.vars.filter(_.dims.nonEmpty).map { v =>
+      val chunkSz = chunkShape(schema, chunks, v)
+      v -> GridWriter.ZarrSink(cleanRoot, v.dtype, chunkSz,
+        layout.innerShape(v, chunkSz), comp, layout.chunkKey)
+    })
+    schema.vars.filter(_.dims.isEmpty).foreach(v =>
+      writeScalarChunk(cleanRoot, v, scalarValue(v), comp, layout.scalarKey,
+        conf))
+    writeStatsSidecar(cleanRoot, schema, entries, conf)
+    layout.consolidateWritten(cleanRoot, conf)
+    open(cleanRoot) // takes the consolidated path it just wrote
+  }
+
+  /** One sidecar stats entry: (`"<var> <chunk key>"`, (min, max), sum). */
+  private[grid] type StatsEntry = (String, Option[(Any, Any)], Option[Double])
+
+  /** One data chunk of a store-to-store write: read the block from the
+    * source and hand it to the sink. Small and Serializable so
+    * [[writeDistributed]] ships it to executors.
+    */
+  private[grid] final case class ChunkWriteTask(varName: String,
+      block: Seq[(Int, Int)], sink: GridWriter.ZarrSink) {
+    def run(source: GridStore,
+        conf: org.apache.hadoop.conf.Configuration): Seq[StatsEntry] = {
+      val ci = block.zip(sink.chunkSz).map(b => b._1._1 / b._2)
+      sink.write(varName, ci.mkString("."), source.readVar(varName, block),
+        block.map(_._2).toArray, conf)
+        .map { case (k, mm, sm) => (s"$varName $k", mm, sm) }
+    }
+  }
+
+  /** Stored chunk shape of `v`: the `chunks` entry per dim, the whole
+    * axis where it has none.
+    */
+  private[grid] def chunkShape(schema: GridSchema, chunks: Map[String, Int],
+      v: VarDef): Seq[Int] =
+    v.dims.map(d => chunks.getOrElse(d, math.max(schema.dim(d).size, 1)))
+
+  /** Driver-side shell of a v2 write: group metadata, coordinate
+    * arrays, per-variable `.zarray`/`.zattrs` — everything except the
+    * data chunks.
+    */
+  private[grid] def writeShell(schema: GridSchema, cleanRoot: String,
+      chunks: Map[String, Int], comp: Option[(String, Int)],
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
     GridIO.writeString(s"$cleanRoot/.zgroup", """{"zarr_format":2}""", conf)
     if (schema.attrs.nonEmpty)
       GridIO.writeString(s"$cleanRoot/.zattrs", attrsJson(schema.attrs), conf)
 
     schema.dims.foreach(d => writeCoord(cleanRoot, d, conf))
 
-    schema.vars.flatMap { v =>
+    schema.vars.foreach { v =>
       val dir = s"$cleanRoot/${v.name}"
       GridIO.mkdirs(dir, conf)
       val dimSz = v.dims.map(d => schema.dim(d).size)
-      val chunkSz = v.dims.map(d =>
-        chunks.getOrElse(d, math.max(schema.dim(d).size, 1)))
       val fillJson = v.dtype match {
         case GDouble | GFloat => "\"NaN\""
         case GString => "\"\""
@@ -2254,19 +2322,13 @@ object ZarrGridStore {
       }
       val filtersJson = // zarr-python 2's string-array convention
         if (v.dtype == GString) """[{"id":"vlen-utf8"}]""" else "null"
-      GridIO.writeString(s"$dir/.zarray", zarrayJson(dimSz, chunkSz,
-        dtypeString(v.dtype), comp, fillJson, filtersJson), conf)
+      // 0-d (scalar) variables: shape []/chunks [] metadata; the single
+      // chunk ("0") is written driver-side via writeScalarChunk
+      GridIO.writeString(s"$dir/.zarray", zarrayJson(dimSz,
+        chunkShape(schema, chunks, v), dtypeString(v.dtype), comp, fillJson,
+        filtersJson), conf)
       GridIO.writeString(s"$dir/.zattrs",
         attrsJson(v.attrs, Some(v.dims)), conf)
-      // 0-d (scalar) variables: shape []/chunks [] metadata above; the
-      // single chunk ("0") is metadata-sized and written driver-side by
-      // the caller via writeScalarChunk — no distributed task
-      if (v.dims.isEmpty) Seq.empty
-      else {
-        val sub = GridSchema(v.dims.map(schema.dim), Seq.empty)
-        ChunkGrid.blocks(sub, chunks).map(block =>
-          ChunkWriteTask(dir, v.name, v.dtype, chunkSz, block))
-      }
     }
   }
 
@@ -2326,95 +2388,55 @@ object ZarrGridStore {
     }
   }
 
-  /** [[write]] with EXECUTOR-side chunk encoding and writes — the scale
-    * path for materializing a large grid as Zarr. The driver writes
-    * only metadata and coordinate arrays; the chunk task list
-    * parallelizes across the cluster, each task reading its block from
-    * the (serializable) source store and writing through the shipped
-    * Hadoop conf. At 10⁵–10⁶ chunks the driver-side loop of [[write]]
-    * is the bottleneck; here wall-clock is chunks / cluster-cores. The
-    * store-to-store shape also makes this the distributed
-    * format-conversion path (foreign layout → v2, Zarr → rechunked
-    * Zarr — see [[graft.XarrayContext.rechunk]]).
-    */
-  def writeDistributed(source: GridStore, root: String,
-      chunks: Map[String, Int],
-      compressor: String = "zlib"): ZarrGridStore = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val conf = GridIO.driverConf()
-    val cleanRoot = root.stripSuffix("/")
-    val comp = parseCompressor(compressor)
-    val tasks = writeShell(source.schema, cleanRoot, chunks, comp, conf)
-    val sc = spark.sparkContext
-    val hconf = GridIO.shippable()
-    val bSource = sc.broadcast(source)
-    val parts = math.max(1, math.min(tasks.size, sc.defaultParallelism * 2))
-    // stats entries are tiny ((key, min, max, sum) per chunk) — the
-    // collect is metadata-sized, never data-sized
-    val entries = sc.parallelize(tasks, parts)
-      .map(t => t.run(bSource.value, comp, hconf.value)).collect().toSeq
-    bSource.destroy()
-    source.schema.vars.filter(_.dims.isEmpty).foreach(v =>
-      writeScalarChunk(cleanRoot, v, source.readVar(v.name, Seq.empty),
-        comp, "0", conf))
-    writeStatsSidecar(cleanRoot, source.schema, entries, conf)
-    consolidate(cleanRoot, conf)
-    open(cleanRoot)
-  }
-
-  /** Distributed DataFrame → Zarr v2 reverse pivot: scatter a
-    * relational result STRAIGHT into a Zarr tree with no driver
-    * materialization and no intermediate store. [[GridWriter]]'s
-    * machinery does the heavy lifting — one (chunk, offset, value)
-    * triple per cell, one hash repartition, executors assemble dense
-    * chunks, and the sink writes PADDED little-endian compressed v2
-    * chunk files; the driver writes only group/array metadata +
-    * coordinate arrays and consolidates. `df` carries the schema's dim
-    * columns and each variable's value column. Unset cells become the
-    * declared fill (NaN for float kinds, 0 for ints).
+  /** Distributed DataFrame → Zarr reverse pivot: scatter a relational
+    * result STRAIGHT into a Zarr tree in `layout`'s format version with
+    * no driver materialization and no intermediate store.
+    * [[GridWriter]]'s machinery does the heavy lifting — one (chunk,
+    * offset, value) triple per cell, one hash repartition, executors
+    * assemble dense chunks, and the sink writes PADDED little-endian
+    * compressed chunk files (whole shards for a sharded
+    * [[ZarrLayout.V3]]: object count stays one file per SHARD while
+    * readers keep inner-chunk-granular ranged reads); the driver writes
+    * only group/array metadata + coordinate arrays and consolidates.
+    * `df` carries the schema's dim columns and each variable's value
+    * column. Unset cells become the declared fill (NaN for float
+    * kinds, 0 for ints).
     */
   def writeFromRows(df: org.apache.spark.sql.DataFrame, schema: GridSchema,
       chunks: Map[String, Int], root: String,
-      compressor: String = "zlib"): ZarrGridStore = {
-    val conf = GridIO.driverConf()
-    val cleanRoot = root.stripSuffix("/")
-    val comp = parseCompressor(compressor)
-    writeShell(schema, cleanRoot, chunks, comp, conf) // data via scatter
-    val entries = schema.vars.filter(_.dims.nonEmpty).flatMap { v =>
-      val chunkSz = v.dims.map(d =>
-        chunks.getOrElse(d, math.max(schema.dim(d).size, 1)))
-      GridWriter.writeVar(df, schema, chunks,
-        GridWriter.ZarrSink(cleanRoot, v.dtype, chunkSz, comp), v)
+      compressor: String = "zlib",
+      layout: ZarrLayout = ZarrLayout.V2): ZarrGridStore =
+    writeTree(schema, root, chunks, compressor, layout,
+      scalarValueFromRows(df, _)) { sinks =>
+      sinks.flatMap { case (v, sink) =>
+        GridWriter.writeVar(df, schema, chunks, sink, v)
+      }
     }
-    schema.vars.filter(_.dims.isEmpty).foreach(v =>
-      writeScalarChunk(cleanRoot, v, scalarValueFromRows(df, v), comp,
-        "0", conf))
-    writeStatsSidecar(cleanRoot, schema, entries, conf)
-    consolidate(cleanRoot, conf)
-    open(cleanRoot)
-  }
 
-  /** Distributed DataFrame → Zarr v2 APPEND along one dimension: the
-    * slab's rows scatter through [[GridWriter.writeVar]]'s one-shuffle
-    * reverse pivot STRAIGHT onto the store-global chunk grid in a
-    * staging tree beside the store (executors write the chunk files),
-    * then every staged chunk renames into place, the growing
-    * dimension's coordinate array and each growing variable's `.zarray`
-    * shape are rewritten, and the tree re-consolidates — the
-    * incremental-ingest path `df.write.format("zarr").mode("append")`
-    * rides on. The existing extent need NOT be chunk-aligned: when the
-    * old extent ends inside a chunk, the owning executor read-modify-
-    * writes that edge chunk ([[EdgeMergeSink]]) exactly as xarray's
-    * `to_zarr(append_dim=...)` does, and the result is byte-identical
-    * to a one-shot write. Non-growing dims must carry identical
-    * coordinates; the tree must use this writer's layout ("."
-    * separators, v2 keys) and a plain little-endian C-order unpacked
-    * encoding for every growing variable (anything else fails loudly
-    * up front — staged chunks are encoded plain, and silently mixing
-    * encodings inside one array corrupts it). Appended edge chunks pad
-    * with NaN/0 like every other write. SINGLE WRITER per store:
-    * staging is uniquely suffixed, so a crashed append leaves an inert
-    * `.staging-*` tree (swept by the next append) —
+  /** Distributed DataFrame → Zarr APPEND along one dimension, for v2
+    * and v3 trees alike (the tree's own [[ZarrLayout]] is detected):
+    * the slab's rows scatter through [[GridWriter.writeVar]]'s
+    * one-shuffle reverse pivot STRAIGHT onto the store-global chunk
+    * grid in a staging tree beside the store (executors write the
+    * chunk files, flat-named), then every staged chunk moves to its
+    * layout key, the growing dimension's coordinate array and each
+    * growing variable's metadata shape are rewritten, and the tree
+    * re-consolidates — the incremental-ingest path
+    * `df.write.format("zarr").mode("append")` rides on. The existing
+    * extent need NOT be chunk-aligned: when the old extent ends inside
+    * a chunk, the owning executor read-modify-writes that edge chunk
+    * ([[EdgeMergeSink]]) exactly as xarray's `to_zarr(append_dim=...)`
+    * does, and the result is byte-identical to a one-shot write.
+    * Sharded variables stage whole SHARDS (stored-file granularity), so
+    * an unaligned old extent costs one decode + re-encode per edge
+    * SHARD. Non-growing dims must carry identical coordinates; the tree
+    * must use this writer's chunk keys and a plain little-endian
+    * C-order unpacked encoding for every growing variable (anything
+    * else fails loudly up front — staged chunks are encoded plain, and
+    * silently mixing encodings inside one array corrupts it). Appended
+    * edge chunks pad with NaN/0 like every other write. SINGLE WRITER
+    * per store: staging is uniquely suffixed, so a crashed append
+    * leaves an inert `.staging-*` tree (swept by the next append) —
     * plus, if the crash hit the commit phase of an UNALIGNED append,
     * at most a half-replaced edge chunk protected by a `.appendbak`
     * backup, which the next append's staging sweep restores (a reader
@@ -2427,23 +2449,18 @@ object ZarrGridStore {
       along: String): ZarrGridStore = {
     val conf = GridIO.driverConf()
     val cleanRoot = root.stripSuffix("/")
-    if (GridIO.exists(s"$cleanRoot/zarr.json", conf))
-      return ZarrV3.appendFromRows(df, slabSchema, cleanRoot, along)
+    val layout = ZarrLayout.of(cleanRoot, conf)
     // optimistic concurrency key, captured BEFORE open reads the
     // store's metadata: a competing append that commits between the
     // stamp and the open merely aborts this one spuriously (retry),
     // never slips past the check
-    val versionKey = GridIO.statusOf(s"$cleanRoot/$along/.zarray", conf)
+    val versionPath = s"$cleanRoot/$along/${layout.metaFile}"
+    val versionKey = GridIO.statusOf(versionPath, conf)
     val existing = open(cleanRoot)
     val exDim = existing.schema.dim(along)
     val slabDim = slabSchema.dim(along)
     require(slabDim.size > 0, s"empty slab on $along")
     rejectOverlappingSlab(exDim, slabDim, along)
-    existing.arrays.values.foreach { a =>
-      require(a.keyPrefix.isEmpty && a.dimSep == ".",
-        s"appendFromRows supports this writer's layouts only " +
-          s"(${a.name} uses keyPrefix='${a.keyPrefix}' sep='${a.dimSep}')")
-    }
     // non-growing dims must match coordinate-for-coordinate
     slabSchema.dims.filterNot(_.name == along).foreach { d =>
       val ex = existing.schema.dim(d.name)
@@ -2459,6 +2476,7 @@ object ZarrGridStore {
         s"store variable ${sv.name} spans $along but is missing from " +
           "the slab")
     }
+    layout.requireAppendKeys(existing, growing)
     growing.foreach { v =>
       val a = existing.arrays.getOrElse(v.name,
         throw new IllegalArgumentException(
@@ -2471,24 +2489,32 @@ object ZarrGridStore {
       require(a.dims == v.dims,
         s"${v.name}: slab dims (${v.dims.mkString(",")}) must equal " +
           s"stored dims (${a.dims.mkString(",")})")
-      // staged chunks are encoded plain little-endian, unfiltered,
-      // C-order, unpacked, unscaled (string variables: the vlen-utf8
-      // |O layout this writer emits) — reject trees declaring anything
-      // else so a mismatch fails loudly instead of corrupting
+      // staged chunks/shards are encoded plain little-endian,
+      // unfiltered, C-order, unpacked, unscaled (string variables: the
+      // vlen-utf8 layout this writer emits) — reject trees declaring
+      // anything else so a mismatch fails loudly instead of corrupting
+      val plain = !a.bigEndian && a.filters.isEmpty &&
+        a.transposeOrder.isEmpty && !a.sharding.exists(_.innerBigEndian)
       if (v.dtype == GString)
-        require(a.stored.contains(StoredVlenStr) &&
-          a.transposeOrder.isEmpty,
+        require(plain && a.stored.contains(StoredVlenStr),
           s"${v.name}: append supports C-order vlen-utf8 string " +
             "layouts only")
       else
-        require(!a.bigEndian && a.filters.isEmpty &&
+        require(plain && !scaledVar(a) &&
           // µs time dtypes are THIS writer's own time layout — staged
           // chunks carry identical int64-µs payloads; any other stored
           // encoding would decode appended chunks as garbage
-          (a.stored.isEmpty || a.stored.contains(StoredTime64(1L, 1L))) &&
-          a.transposeOrder.isEmpty && !scaledVar(a),
+          (a.stored.isEmpty || a.stored.contains(StoredTime64(1L, 1L))),
           s"${v.name}: append supports plain little-endian C-order " +
             "unpacked unscaled layouts only")
+      // staged shards are framed by encodeShard/encodeShardVlen: index
+      // at the END, crc32c'd — a tree declaring index_location:'start'
+      // or an uncrc'd index would mis-parse every appended shard
+      a.sharding.foreach { sh =>
+        require(sh.indexAtEnd && sh.indexCrc32c,
+          s"${v.name}: append supports the default shard index layout " +
+            "only (index at end, crc32c)")
+      }
     }
 
     GridIO.sweepStaging(cleanRoot, conf)
@@ -2498,12 +2524,17 @@ object ZarrGridStore {
     val newEntries = growing.flatMap { v =>
       GridIO.mkdirs(s"$staging/${v.name}", conf)
       val a = existing.arrays(v.name)
+      // the stored-file grid (= shard grid when sharded) keys the
+      // scatter; per-var, so variables may chunk the axis differently
       val varChunks = v.dims.zip(a.chunkShape).toMap
       val axisPos = v.dims.indexOf(along)
       val alongChunk = a.chunkShape(axisPos)
       val edgeLen = exDim.size % alongChunk
+      // flat staging names: the commit below maps them to layout keys
       val base = GridWriter.ZarrSink(staging, v.dtype, a.chunkShape,
-        a.compressor)
+        a.sharding.map(_.innerShape),
+        a.sharding.map(_.innerCompressor).getOrElse(a.compressor),
+        identity)
       val sink =
         if (edgeLen > 0) EdgeMergeSink(base, cleanRoot, a, axisPos,
           exDim.size / alongChunk, edgeLen)
@@ -2512,8 +2543,8 @@ object ZarrGridStore {
         globalAlong = Some((along, exDim.size, globalSize)))
     }
     appendTestHook(cleanRoot)
-    checkNoConcurrentAppend(cleanRoot, staging,
-      s"$cleanRoot/$along/.zarray", versionKey, conf)
+    checkNoConcurrentAppend(cleanRoot, staging, versionPath, versionKey,
+      conf)
     // stats sidecar: the open's StatsSource already indexes the
     // pre-append stats. fp-manifest sources verify the very bytes they
     // serve, so their lazy loads stay valid after the manifest
@@ -2541,35 +2572,36 @@ object ZarrGridStore {
     GridIO.commitStaged(staging,
       growing.flatMap { v =>
         GridIO.listNames(s"$staging/${v.name}", conf).map(fn =>
-          (s"$staging/${v.name}/$fn", s"$cleanRoot/${v.name}/$fn"))
-      }, mkdirParents = false, conf)
+          (s"$staging/${v.name}/$fn",
+            s"$cleanRoot/${v.name}/${layout.chunkKey(fn)}"))
+      }, mkdirParents = layout.nestedKeys, conf)
     GridIO.delete(staging, conf)
-    // grow the coordinate array: overwrite IN PLACE (single chunk "0"
-    // + metadata) — no delete first, so there is no crash window where
+    // grow the coordinate array: overwrite IN PLACE (single chunk +
+    // metadata) — no delete first, so there is no crash window where
     // the tree has no coordinate array at all. A stale extra chunk
     // file from a foreign multi-chunk coord is ignored by readers (the
-    // rewritten .zarray declares one chunk).
+    // rewritten metadata declares one chunk).
     val combined = DimDef(along, concatCoords(exDim.coords, slabDim.coords),
       exDim.calendar, exDim.units, exDim.attrs)
-    writeCoord(cleanRoot, combined, conf)
+    layout.writeCoord(cleanRoot, combined, conf)
     growing.foreach { v =>
       val a = existing.arrays(v.name)
       val axisPos = v.dims.indexOf(along)
-      val za = parseJson(GridIO.readAllBytes(
-        s"$cleanRoot/${v.name}/.zarray", conf)).asInstanceOf[
+      val metaPath = s"$cleanRoot/${v.name}/${layout.metaFile}"
+      val za = parseJson(GridIO.readAllBytes(metaPath, conf)).asInstanceOf[
         com.fasterxml.jackson.databind.node.ObjectNode]
       val sh = za.putArray("shape")
       a.shape.updated(axisPos, a.shape(axisPos) + slabDim.size)
         .foreach(sh.add)
-      GridIO.writeString(s"$cleanRoot/${v.name}/.zarray",
-        new ObjectMapper().writeValueAsString(za), conf)
+      GridIO.writeString(metaPath, new ObjectMapper().writeValueAsString(za),
+        conf)
     }
     // merged sidecar: untouched chunks keep their entries, the merged
     // edge chunk and new chunks take the append's recomputed stats
     // (same key -> the new entry wins)
     mergeStatsSidecar(cleanRoot, existing.schema, oldSource,
       newEntries, conf)
-    consolidate(cleanRoot, conf)
+    layout.consolidateAppended(cleanRoot, existing.schema, conf)
     open(cleanRoot)
   }
 
@@ -2758,7 +2790,7 @@ object ZarrGridStore {
   /** Appending a slab whose `along` coordinates overlap the store
     * would silently DUPLICATE axis labels (the coordinate array just
     * concatenates) and double-count those steps in every later scan —
-    * both zarr append faces call this to reject it. Compares internal
+    * [[appendFromRows]] calls this to reject it. Compares internal
     * values, so no external-box mismatch can slip an overlap through.
     */
   private[grid] def rejectOverlappingSlab(exDim: DimDef, slabDim: DimDef,
@@ -2851,7 +2883,7 @@ object ZarrGridStore {
         s"${d.name}: string coordinates unsupported in Zarr stores")
     }
 
-  private def writeCoord(root: String, d: DimDef,
+  private[grid] def writeCoord(root: String, d: DimDef,
       conf: org.apache.hadoop.conf.Configuration): Unit = {
     val dir = s"$root/${d.name}"
     GridIO.mkdirs(dir, conf)

@@ -41,9 +41,14 @@ import scala.jdk.CollectionConverters._
   *
   * Opens cost ONE metadata read when the root `zarr.json` embeds
   * zarr-python's inline `consolidated_metadata`; otherwise a listing
-  * plus one read per array. [[write]] emits consolidated metadata plus
-  * per-array `zarr.json` files, so both this reader and standard v3
-  * readers open its output.
+  * plus one read per array.
+  *
+  * Writes go through [[ZarrGridStore]]'s one writer with the
+  * [[ZarrLayout.V3]] layout value; this object keeps only what is v3's
+  * own there: the metadata shell (consolidated metadata plus per-array
+  * `zarr.json` files, so both this reader and standard v3 readers open
+  * the output), the coordinate-array writer, the shard encoders and
+  * the root re-consolidation after an append.
   */
 object ZarrV3 {
 
@@ -396,279 +401,13 @@ object ZarrV3 {
 
   // ---- write ---------------------------------------------------------
 
-  /** Materialize `source` as a Zarr v3 tree (default chunk-key
-    * encoding, little-endian `bytes` codec, consolidated metadata
-    * inlined in the root `zarr.json` AND per-array `zarr.json` files)
-    * and re-open it. `compressor`: `none | gzip[:level] | zstd[:level]
-    * | blosc[:clevel]` (v3 has no zlib codec).
-    *
-    * `shardInner` non-empty turns on `sharding_indexed` for the data
-    * variables: the `chunks` grid becomes the SHARD (stored-file) grid
-    * and `shardInner` the inner chunk sizes within each shard (dims
-    * omitted there default to the full shard extent). Inner chunks are
-    * compressed individually; the index (little-endian uint64 pairs,
-    * crc32c-framed) sits at the shard end — the zarr-python default
-    * framing. Sharding keeps the stored-file count low (one object per
-    * shard) while preserving sub-chunk read granularity for readers
-    * that fetch ranges.
-    */
-  def write(source: GridStore, root: String, chunks: Map[String, Int],
-      compressor: String = "zstd",
-      shardInner: Map[String, Int] = Map.empty): ZarrGridStore =
-    writeImpl(source, root, chunks, compressor, shardInner,
-      distributed = false)
-
-  /** [[write]] with EXECUTOR-side chunk/shard encoding and writes (the
-    * driver keeps only metadata + coordinates) — same scale rationale
-    * as [[ZarrGridStore.writeDistributed]]; shard encoding is the
-    * expensive part here (per-inner-chunk compression + index), so it
-    * is exactly what should not run in a driver loop.
-    */
-  def writeDistributed(source: GridStore, root: String,
-      chunks: Map[String, Int], compressor: String = "zstd",
-      shardInner: Map[String, Int] = Map.empty): ZarrGridStore =
-    writeImpl(source, root, chunks, compressor, shardInner,
-      distributed = true)
-
-  /** One v3 data chunk (or shard): read, pad, encode, write; returns
-    * the chunk's sidecar stats entry (None for shards — the scan plans
-    * on the inner grid).
-    */
-  private final case class V3ChunkTask(dir: String, varName: String,
-      dtype: GridType, chunkSz: Seq[Int], innerSz: Option[Seq[Int]],
-      block: Seq[(Int, Int)]) extends Serializable {
-    def run(source: GridStore, comp: Option[(String, Int)],
-        conf: org.apache.hadoop.conf.Configuration)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] = {
-      val ci = block.zip(chunkSz).map(b => b._1._1 / b._2)
-      val eff = block.map(_._2).toArray
-      val data = source.readVar(varName, block)
-      val padded = ZarrGridStore.padChunk(data, eff, chunkSz.toArray, dtype)
-      val payload =
-        if (dtype == GString) innerSz match {
-          case None => ZarrGridStore.compress(
-            ZarrGridStore.encodeVlen(padded.asInstanceOf[Array[String]]),
-            comp, 1)
-          case Some(inner) =>
-            encodeShardVlen(padded.asInstanceOf[Array[String]],
-              chunkSz, inner, comp)
-        }
-        else {
-          val leBytes = ZarrGridStore.toLE(padded, dtype)
-          innerSz match {
-            case None => ZarrGridStore.compress(leBytes, comp, dtype.byteWidth)
-            case Some(inner) =>
-              encodeShard(leBytes, chunkSz, inner, dtype.byteWidth, comp)
-          }
-        }
-      GridIO.write(s"$dir/c/${ci.mkString("/")}", payload, conf)
-      innerSz match {
-        case None => Seq((s"$varName ${ci.mkString(".")}",
-          StatsSource.chunkStats(data),
-          StatsSource.chunkSum(data)))
-        case Some(inner) =>
-          ZarrGridStore.innerChunkStats(data, eff, ci.toArray, chunkSz,
-            inner).map { case (k, mm, sm) => (s"$varName $k", mm, sm) }
-      }
-    }
-  }
-
-  /** Distributed DataFrame → Zarr v3 reverse pivot — the v3 (and
-    * SHARDED) face of [[ZarrGridStore.writeFromRows]]: metadata +
-    * coordinates from the driver, then one [[GridWriter.writeVar]]
-    * scatter per variable with executors encoding whole shards (inner
-    * chunk compression + index) or plain chunks. Sharding from SQL
-    * results is the 100 TB write shape: object count stays one file
-    * per SHARD while readers keep inner-chunk-granular ranged reads.
-    */
-  def writeFromRows(df: org.apache.spark.sql.DataFrame, schema: GridSchema,
-      chunks: Map[String, Int], root: String,
-      compressor: String = "zstd",
-      shardInner: Map[String, Int] = Map.empty): ZarrGridStore = {
-    val comp = parseV3Compressor(compressor)
-    val conf = GridIO.driverConf()
-    val cleanRoot = root.stripSuffix("/")
-    writeMetadataShell(schema, cleanRoot, chunks, comp, shardInner, conf)
-    val entries = schema.vars.filter(_.dims.nonEmpty).flatMap { v =>
-      val chunkSz = v.dims.map(d =>
-        chunks.getOrElse(d, math.max(schema.dim(d).size, 1)))
-      val innerSz =
-        if (shardInner.isEmpty) None
-        else Some(v.dims.zip(chunkSz).map { case (d, outer) =>
-          shardInner.getOrElse(d, outer) })
-      GridWriter.writeVar(df, schema, chunks,
-        GridWriter.V3Sink(cleanRoot, v.dtype, chunkSz, innerSz, comp), v)
-    }
-    schema.vars.filter(_.dims.isEmpty).foreach(v =>
-      ZarrGridStore.writeScalarChunk(cleanRoot, v,
-        ZarrGridStore.scalarValueFromRows(df, v), comp, "c", conf))
-    ZarrGridStore.writeStatsSidecar(cleanRoot, schema, entries, conf)
-    open(cleanRoot)
-  }
-
-  /** The v3 face of [[ZarrGridStore.appendFromRows]] — same staged
-    * distributed scatter straight onto the store-global grid + rename +
-    * metadata rewrite, but on the `c/`-keyed layout: sharded variables
-    * stage whole SHARDS (stored-file granularity), so the scatter and
-    * the edge read-modify-write run on the shard grid — an unaligned
-    * old extent costs one decode + re-encode per edge SHARD, on the
-    * executor that owns it. The coordinate array and every growing
-    * variable's `zarr.json` shape are rewritten and the inline
-    * consolidated root is rebuilt.
-    */
-  def appendFromRows(df: org.apache.spark.sql.DataFrame,
-      slabSchema: GridSchema, root: String,
-      along: String): ZarrGridStore = {
-    val conf = GridIO.driverConf()
-    val cleanRoot = root.stripSuffix("/")
-    // concurrency stamp BEFORE open (see the v2 path's rationale)
-    val versionKey = GridIO.statusOf(s"$cleanRoot/$along/zarr.json", conf)
-    val existing = open(cleanRoot)
-    val exDim = existing.schema.dim(along)
-    val slabDim = slabSchema.dim(along)
-    require(slabDim.size > 0, s"empty slab on $along")
-    ZarrGridStore.rejectOverlappingSlab(exDim, slabDim, along)
-    slabSchema.dims.filterNot(_.name == along).foreach { d =>
-      val ex = existing.schema.dim(d.name)
-      require(ZarrGridStore.coordValues(ex.coords) ==
-        ZarrGridStore.coordValues(d.coords),
-        s"dim ${d.name} of the slab differs from the store")
-    }
-    val growing = slabSchema.vars.filter(_.dims.contains(along))
-    require(growing.nonEmpty, s"no slab variable spans $along")
-    existing.schema.vars.filter(_.dims.contains(along)).foreach { sv =>
-      require(growing.exists(_.name == sv.name),
-        s"store variable ${sv.name} spans $along but is missing from " +
-          "the slab")
-    }
-    growing.foreach { v =>
-      val a = existing.arrays.getOrElse(v.name,
-        throw new IllegalArgumentException(
-          s"variable ${v.name} does not exist in the store"))
-      require(a.dtype == v.dtype,
-        s"${v.name}: slab dtype ${v.dtype} vs stored ${a.dtype}")
-      require(a.dims == v.dims,
-        s"${v.name}: slab dims (${v.dims.mkString(",")}) must equal " +
-          s"stored dims (${a.dims.mkString(",")})")
-      // this writer's layout and a plain encoding only — staged chunks/
-      // shards are encoded little-endian, unpacked, C-order, so any
-      // other declared encoding must fail loudly instead of corrupting
-      require(a.keyPrefix == "c" && a.dimSep == "/",
-        s"${v.name}: append supports the default v3 chunk-key encoding " +
-          s"only (keyPrefix='${a.keyPrefix}' sep='${a.dimSep}')")
-      if (v.dtype == GString)
-        require(a.stored.contains(StoredVlenStr) && !a.bigEndian &&
-          a.filters.isEmpty && a.transposeOrder.isEmpty &&
-          !a.sharding.exists(_.innerBigEndian),
-          s"${v.name}: append supports vlen-utf8 string layouts only")
-      else
-        require(!a.bigEndian && a.filters.isEmpty &&
-          // µs time dtypes are this writer's own time layout (int64-µs
-          // payloads, same as the staged chunks)
-          (a.stored.isEmpty || a.stored.contains(StoredTime64(1L, 1L))) &&
-          a.transposeOrder.isEmpty && !ZarrGridStore.scaledVar(a) &&
-          !a.sharding.exists(_.innerBigEndian),
-          s"${v.name}: append supports plain little-endian C-order " +
-            "unpacked unscaled layouts only")
-      // staged shards are framed by encodeShard/encodeShardVlen: index
-      // at the END, crc32c'd — a tree declaring index_location:'start'
-      // or an uncrc'd index would mis-parse every appended shard
-      a.sharding.foreach { sh =>
-        require(sh.indexAtEnd && sh.indexCrc32c,
-          s"${v.name}: append supports the default shard index layout " +
-            "only (index at end, crc32c)")
-      }
-    }
-
-    GridIO.sweepStaging(cleanRoot, conf)
-    val staging = cleanRoot + ".staging-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val globalSize = exDim.size + slabDim.size
-    val newEntries = growing.flatMap { v =>
-      val a = existing.arrays(v.name)
-      GridIO.mkdirs(s"$staging/${v.name}", conf)
-      // the stored-file grid (= shard grid when sharded) keys the
-      // scatter; per-var, so variables may chunk the axis differently
-      val varChunks = v.dims.zip(a.chunkShape).toMap
-      val axisPos = v.dims.indexOf(along)
-      val alongChunk = a.chunkShape(axisPos)
-      val edgeLen = exDim.size % alongChunk
-      val base = GridWriter.V3Sink(staging, v.dtype, a.chunkShape,
-        a.sharding.map(_.innerShape),
-        a.sharding.map(_.innerCompressor).getOrElse(a.compressor),
-        flatKeys = true)
-      val sink =
-        if (edgeLen > 0) ZarrGridStore.EdgeMergeSink(base, cleanRoot, a,
-          axisPos, exDim.size / alongChunk, edgeLen)
-        else base
-      GridWriter.writeVar(df, slabSchema, varChunks, sink, v,
-        globalAlong = Some((along, exDim.size, globalSize)))
-    }
-    ZarrGridStore.appendTestHook(cleanRoot)
-    ZarrGridStore.checkNoConcurrentAppend(cleanRoot, staging,
-      s"$cleanRoot/$along/zarr.json", versionKey, conf)
-    // stats sidecar: fp-guarded sources skip the eager pre-force (the
-    // bytes-served check is manifest-independent, and skipping it is
-    // what keeps the suffix merge's prefix shards unread end-to-end);
-    // legacy fp-less manifests must force-load the growing variables
-    // NOW before the manifest deletion invalidates their guard. The
-    // MANIFEST deletes before chunk moves either way (crash
-    // mid-commit -> no manifest -> no stats, never stale bounds)
-    val oldSource = existing.statsSource
-    oldSource match {
-      case lp: StatsSource.LazyPerVar
-          if growing.forall(v => lp.fpCovered(v.name)) => ()
-      case _ => growing.foreach(v => oldSource.entriesFor(v.name))
-    }
-    GridIO.delete(s"$cleanRoot/${ZarrGridStore.StatsSidecar}", conf)
-    // staged flat keys (already store-global) -> nested `c/` keys via
-    // the shared crash-healable, retry-idempotent commit protocol
-    GridIO.commitStaged(staging,
-      growing.flatMap { v =>
-        GridIO.listNames(s"$staging/${v.name}", conf).map { fn =>
-          (s"$staging/${v.name}/$fn",
-            (s"$cleanRoot/${v.name}/c" +: fn.split('.').toSeq)
-              .mkString("/"))
-        }
-      }, mkdirParents = true, conf)
-    GridIO.delete(staging, conf)
-
-    val mapper = new ObjectMapper()
-    val combined = DimDef(along,
-      ZarrGridStore.concatCoords(exDim.coords, slabDim.coords),
-      exDim.calendar, exDim.units, exDim.attrs)
-    // overwrite in place — no delete-first crash window (see the v2
-    // append's coordinate rewrite)
-    writeCoordArray(cleanRoot, combined, mapper, conf)
-    growing.foreach { v =>
-      val a = existing.arrays(v.name)
-      val axisPos = v.dims.indexOf(along)
-      val za = ZarrGridStore.parseJson(GridIO.readAllBytes(
-        s"$cleanRoot/${v.name}/zarr.json", conf)).asInstanceOf[ObjectNode]
-      val sh = za.putArray("shape")
-      a.shape.updated(axisPos, a.shape(axisPos) + slabDim.size)
-        .foreach(sh.add)
-      GridIO.writeString(s"$cleanRoot/${v.name}/zarr.json",
-        mapper.writeValueAsString(za), conf)
-    }
-    // merged sidecar (new entries win on the shared edge-chunk key)
-    ZarrGridStore.mergeStatsSidecar(cleanRoot, existing.schema,
-      oldSource, newEntries, conf)
-    // the writer's metadata order (dims, then vars) keeps the rebuilt
-    // root byte-identical to a one-shot write of the grown dataset
-    reconsolidateRoot(cleanRoot,
-      existing.schema.dims.map(_.name) ++ existing.schema.vars.map(_.name),
-      mapper, conf)
-    open(cleanRoot)
-  }
-
   /** Rebuild the root `zarr.json` (group attributes preserved, inline
     * consolidated metadata refreshed from the per-array files, in the
     * given array order).
     */
-  private def reconsolidateRoot(cleanRoot: String, order: Seq[String],
-      mapper: ObjectMapper,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
+  private[grid] def reconsolidateRoot(cleanRoot: String,
+      order: Seq[String], conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val mapper = new ObjectMapper()
     val rootMeta = ZarrGridStore.parseJson(
       GridIO.readAllBytes(s"$cleanRoot/zarr.json", conf))
     val top = mapper.createObjectNode()
@@ -692,53 +431,12 @@ object ZarrV3 {
       mapper.writeValueAsString(top), conf)
   }
 
-  private def parseV3Compressor(compressor: String): Option[(String, Int)] = {
+  private[grid] def parseV3Compressor(
+      compressor: String): Option[(String, Int)] = {
     val comp = ZarrGridStore.parseCompressor(compressor)
     require(!comp.exists(_._1 == "zlib"),
       "zarr v3 has no zlib codec; use gzip, zstd, blosc or none")
     comp
-  }
-
-  private def writeImpl(source: GridStore, root: String,
-      chunks: Map[String, Int], compressor: String,
-      shardInner: Map[String, Int], distributed: Boolean): ZarrGridStore = {
-    val comp = parseV3Compressor(compressor)
-    val conf = GridIO.driverConf()
-    val schema = source.schema
-    val cleanRoot = root.stripSuffix("/")
-    writeMetadataShell(schema, cleanRoot, chunks, comp, shardInner, conf)
-    val tasks = schema.vars.filter(_.dims.nonEmpty).flatMap { v =>
-      val chunkSz = v.dims.map(d =>
-        chunks.getOrElse(d, math.max(schema.dim(d).size, 1)))
-      val innerSz =
-        if (shardInner.isEmpty) None
-        else Some(v.dims.zip(chunkSz).map { case (d, outer) =>
-          shardInner.getOrElse(d, outer) })
-      val sub = GridSchema(v.dims.map(schema.dim), Seq.empty)
-      ChunkGrid.blocks(sub, chunks).map(block =>
-        V3ChunkTask(s"$cleanRoot/${v.name}", v.name, v.dtype, chunkSz,
-          innerSz, block))
-    }
-    val entries =
-      if (!distributed) tasks.flatMap(_.run(source, comp, conf))
-      else {
-        val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-        val hconf = GridIO.shippable()
-        val bSource = sc.broadcast(source)
-        val parts = math.max(1,
-          math.min(tasks.size, sc.defaultParallelism * 2))
-        // stats entries are metadata-sized; the collect never carries data
-        val es = sc.parallelize(tasks, parts)
-          .flatMap(t => t.run(bSource.value, comp, hconf.value))
-          .collect().toSeq
-        bSource.destroy()
-        es
-      }
-    schema.vars.filter(_.dims.isEmpty).foreach(v =>
-      ZarrGridStore.writeScalarChunk(cleanRoot, v,
-        source.readVar(v.name, Seq.empty), comp, "c", conf))
-    ZarrGridStore.writeStatsSidecar(cleanRoot, schema, entries, conf)
-    open(cleanRoot)
   }
 
   /** Driver-side metadata shell of a v3 write: coordinate arrays,
@@ -748,13 +446,10 @@ object ZarrV3 {
     * variables get shape-[] metadata here; their single `c` chunk is
     * written driver-side by the caller.
     */
-  private def writeMetadataShell(schema: GridSchema, cleanRoot: String,
+  private[grid] def writeMetadataShell(schema: GridSchema, cleanRoot: String,
       chunks: Map[String, Int], comp: Option[(String, Int)],
-      shardInner: Map[String, Int],
+      layout: ZarrLayout.V3,
       conf: org.apache.hadoop.conf.Configuration): Unit = {
-    GridIO.mkdirs(cleanRoot, conf)
-    // drop any stale sidecar before chunks land (see v2 writeShell)
-    GridIO.delete(s"$cleanRoot/${ZarrGridStore.StatsSidecar}", conf)
     val mapper = new ObjectMapper()
     val arrayMetaNodes = scala.collection.mutable.LinkedHashMap
       .empty[String, ObjectNode]
@@ -769,17 +464,8 @@ object ZarrV3 {
       val dir = s"$cleanRoot/${v.name}"
       GridIO.mkdirs(dir, conf)
       val dimSz = v.dims.map(d => schema.dim(d).size)
-      val chunkSz = v.dims.map(d =>
-        chunks.getOrElse(d, math.max(schema.dim(d).size, 1)))
-      val innerSz: Option[Seq[Int]] =
-        if (shardInner.isEmpty || v.dims.isEmpty) None // scalars: no shards
-        else Some(v.dims.zip(chunkSz).map { case (d, outer) =>
-          val in = shardInner.getOrElse(d, outer)
-          require(in > 0 && outer % in == 0,
-            s"${v.name}: inner chunk $in must evenly divide shard $outer " +
-              s"on dim $d")
-          in
-        })
+      val chunkSz = ZarrGridStore.chunkShape(schema, chunks, v)
+      val innerSz = layout.innerShape(v, chunkSz)
       val meta = arrayJson(mapper, dimSz, chunkSz, v.dtype, comp,
         v.dims, v.attrs, innerSz)
       arrayMetaNodes += v.name -> meta
@@ -807,7 +493,7 @@ object ZarrV3 {
     * string coords). Returns the array's metadata node for the
     * consolidated root.
     */
-  private def writeCoordArray(cleanRoot: String, d: DimDef,
+  private[grid] def writeCoordArray(cleanRoot: String, d: DimDef,
       mapper: ObjectMapper,
       conf: org.apache.hadoop.conf.Configuration): ObjectNode = {
     val n = d.size

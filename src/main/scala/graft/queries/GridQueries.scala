@@ -986,8 +986,9 @@ object GridQueries {
     // version
     "pivot_grid_zarr_v3" -> ((s, _) => {
       val root = QueryTmp.staged("graft_zarr_v3_grid")(base =>
-        graft.grid.ZarrV3.write(Fixtures.linearGrid, s"$base/store",
-          Map("t" -> 6, "lat" -> 5), "zstd:3")) + "/store"
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, s"$base/store",
+          Map("t" -> 6, "lat" -> 5), "zstd:3",
+          graft.grid.ZarrLayout.V3())) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
         .scratchDataFrame(s"zarr_v3_grid@$root", store, store.chunkMap,
@@ -1065,9 +1066,9 @@ object GridQueries {
     // shard decodes through the index/inner-codec path
     "pivot_grid_zarr_sharded" -> ((s, _) => {
       val root = QueryTmp.staged("graft_zarr_shard_grid")(base =>
-        graft.grid.ZarrV3.write(Fixtures.linearGrid, s"$base/store",
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, s"$base/store",
           Map("t" -> 6, "lat" -> 5), "zstd:3",
-          shardInner = Map("t" -> 2, "lat" -> 5))) + "/store"
+          graft.grid.ZarrLayout.V3(Map("t" -> 2, "lat" -> 5)))) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
         .scratchDataFrame(s"zarr_shard_grid@$root", store, store.chunkMap,
@@ -1156,8 +1157,9 @@ object GridQueries {
     // for any string array
     "pivot_grid_zarr_vlen" -> ((s, _) => {
       val root = QueryTmp.staged("graft_zarr_vlen")(base =>
-        graft.grid.ZarrV3.write(Fixtures.stationQualityGrid,
-          s"$base/store", Map("station" -> 4, "time" -> 5), "zstd:3")) + "/store"
+        graft.grid.ZarrGridStore.write(Fixtures.stationQualityGrid,
+          s"$base/store", Map("station" -> 4, "time" -> 5), "zstd:3",
+          graft.grid.ZarrLayout.V3())) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
         .scratchDataFrame(s"zarr_vlen@$root", store, store.chunkMap,
@@ -1191,9 +1193,9 @@ object GridQueries {
     // byte-adjacent entries coalesced into single GETs) on the way back
     "pivot_grid_zarr_vlen_sharded" -> ((s, _) => {
       val root = QueryTmp.staged("graft_zarr_vlen_sh")(base =>
-        graft.grid.ZarrV3.write(Fixtures.stationQualityGrid,
+        graft.grid.ZarrGridStore.write(Fixtures.stationQualityGrid,
           s"$base/store", Map("station" -> 4, "time" -> 5), "zstd:3",
-          shardInner = Map("station" -> 2))) + "/store"
+          graft.grid.ZarrLayout.V3(Map("station" -> 2)))) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
         .scratchDataFrame(s"zarr_vlen_sh@$root", store, store.chunkMap,

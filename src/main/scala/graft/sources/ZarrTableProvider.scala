@@ -44,7 +44,11 @@ import scala.jdk.CollectionConverters._
   * Writes ride the DISTRIBUTED reverse pivot
   * ([[graft.grid.ZarrGridStore.writeFromRows]] — executors scatter and
   * encode the chunk files; byte-identical to the API path), so the
-  * output is a plain v2 tree any zarr reader opens. `mode("overwrite")`
+  * output is a plain tree any zarr reader opens: v2 by default,
+  * `.option("format", "v3")` for v3 and `.option("shards", "time=6")`
+  * for a sharded v3 tree (the [[graft.grid.ZarrLayout]] value the API
+  * path takes). `chunks`/`shards` keys must name `dims` columns and
+  * sizes must be positive integers. `mode("overwrite")`
   * replaces the tree; `mode("append")` creates it when absent and
   * otherwise grows it along `appendDim`
   * ([[graft.grid.ZarrGridStore.appendFromRows]]). Spark's DSv2 path
@@ -123,6 +127,25 @@ class ZarrTable(options: CaseInsensitiveStringMap,
   */
 private[sources] object ZarrWrite {
 
+  /** A `d=n,...` size option (`chunks`, `shards`): every key must be one
+    * of `dims` and every size a positive integer.
+    */
+  private def dimSizes(options: CaseInsensitiveStringMap, name: String,
+      dims: Seq[String]): Map[String, Int] =
+    Option(options.get(name)).map(_.split(",").map(_.trim)
+      .filter(_.nonEmpty).map { kv =>
+        kv.split("=").map(_.trim) match {
+          case Array(k, _) if !dims.contains(k) =>
+            throw new IllegalArgumentException(
+              s"zarr write: $name entry '$kv' names no dim " +
+                s"(dims: ${dims.mkString(",")})")
+          case Array(k, n) if n.toIntOption.exists(_ > 0) => k -> n.toInt
+          case _ => throw new IllegalArgumentException(
+            s"zarr write: bad $name entry '$kv' (use d=n,... with n a " +
+              "positive integer)")
+        }
+      }.toMap).getOrElse(Map.empty)
+
   def run(df: DataFrame, options: CaseInsensitiveStringMap,
       overwrite: Boolean): Unit = {
     val path = Option(options.get("path")).getOrElse(
@@ -139,15 +162,7 @@ private[sources] object ZarrWrite {
     require(dims.nonEmpty, "zarr write: empty dims")
     dims.foreach(d => require(df.columns.contains(d),
       s"zarr write: dim column '$d' not in ${df.columns.mkString(", ")}"))
-    val chunks: Map[String, Int] =
-      Option(options.get("chunks")).map(_.split(",").map(_.trim)
-        .filter(_.nonEmpty).map { kv =>
-          kv.split("=") match {
-            case Array(k, v) => k.trim -> v.trim.toInt
-            case _ => throw new IllegalArgumentException(
-              s"zarr write: bad chunks entry '$kv' (use d=n,...)")
-          }
-        }.toMap).getOrElse(Map.empty)
+    val chunks = dimSizes(options, "chunks", dims)
     val compressor = Option(options.get("compressor")).getOrElse("zstd:3")
     // format v2 (default) | v3; "shards" turns on sharding_indexed for
     // v3: the chunks option becomes the SHARD (stored-file) grid and
@@ -156,15 +171,7 @@ private[sources] object ZarrWrite {
     val format = Option(options.get("format")).getOrElse("v2")
     require(format == "v2" || format == "v3",
       s"zarr write: bad format '$format' (v2 | v3)")
-    val shardInner: Map[String, Int] =
-      Option(options.get("shards")).map(_.split(",").map(_.trim)
-        .filter(_.nonEmpty).map { kv =>
-          kv.split("=") match {
-            case Array(k, v) => k.trim -> v.trim.toInt
-            case _ => throw new IllegalArgumentException(
-              s"zarr write: bad shards entry '$kv' (use d=n,...)")
-          }
-        }.toMap).getOrElse(Map.empty)
+    val shardInner = dimSizes(options, "shards", dims)
     require(shardInner.isEmpty || format == "v3",
       "zarr write: shards requires .option(\"format\", \"v3\")")
     val conf = GridIO.driverConf()
@@ -186,10 +193,8 @@ private[sources] object ZarrWrite {
 
     val schema = inferGridSchema(df, dims, scalarVars)
     def create(): Unit = {
-      if (format == "v3")
-        ZarrV3.writeFromRows(df, schema, chunks, root, compressor,
-          shardInner)
-      else ZarrGridStore.writeFromRows(df, schema, chunks, root, compressor)
+      ZarrGridStore.writeFromRows(df, schema, chunks, root, compressor,
+        if (format == "v3") ZarrLayout.V3(shardInner) else ZarrLayout.V2)
       ()
     }
     if (overwrite) {

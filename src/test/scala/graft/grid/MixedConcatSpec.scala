@@ -1,6 +1,7 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.ZarrLayout.V3
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
 
@@ -20,9 +21,9 @@ class MixedConcatSpec extends SparkTestBase {
     // two t-slabs of the same 24x12x10 linear grid, two layouts
     val m1 = ZarrGridStore.write(Fixtures.linearGridSlice(0, 16),
       base.resolve("z2").toString, Map("t" -> 4), "blosc")
-    val m2 = ZarrV3.write(Fixtures.linearGridSlice(16, 24),
+    val m2 = ZarrGridStore.write(Fixtures.linearGridSlice(16, 24),
       base.resolve("z3").toString, Map("t" -> 4), "zstd:3",
-      shardInner = Map("t" -> 2))
+      V3(Map("t" -> 2)))
     val df = new graft.XarrayContext(spark).concatDataFrame("mixed",
       Seq(m1 -> Map("t" -> 4), m2 -> Map("t" -> 4)),
       Seq("t", "lat", "lon"))

@@ -1,6 +1,7 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.ZarrLayout.V3
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.functions._
 
@@ -132,11 +133,11 @@ class ObjectStoreCommitSpec extends SparkTestBase {
     withMockS3 {
       val dir = tmp()
       val root = "s3a:" + dir.toString + "/storev3"
-      ZarrV3.writeFromRows(rows(0, 7), schema(0, 7), Map("t" -> 4),
-        root, "zstd:3")
+      ZarrGridStore.writeFromRows(rows(0, 7), schema(0, 7), Map("t" -> 4),
+        root, "zstd:3", V3())
       MockS3FileSystem.reset()
       val grown = ZarrGridStore.appendFromRows(rows(7, 10), schema(7, 10),
-        root, "t") // dispatches to ZarrV3.appendFromRows
+        root, "t") // the tree's v3 layout is detected
       assert(MockS3FileSystem.renameCalls.get() == 0)
       assert(grown.readVar("x", Seq((0, 10))).asInstanceOf[Array[Double]]
         .toSeq == (0 until 10).map(_ * 2.0))

@@ -95,62 +95,6 @@ class ZarrConsolidatedSpec extends AnyFunSuite {
         .asInstanceOf[Array[Double]]))
   }
 
-  test("writeDistributed produces a byte-identical tree to write") {
-    // needs an active session for the executor-side path
-    val spark = graft.SparkTestBase.spark
-    assert(spark.sparkContext.defaultParallelism >= 1)
-    val serial = freshTree()
-    val distRoot = tmp().resolve("dist").toString
-    val dist = ZarrGridStore.writeDistributed(Fixtures.linearGrid, distRoot,
-      Map("t" -> 6, "lat" -> 5), "zlib")
-    // same values back
-    val full = Seq((0, 24), (0, 12), (0, 10))
-    assert(dist.readVar("air", full).asInstanceOf[Array[Double]]
-      .sameElements(ZarrGridStore.open(serial)
-        .readVar("air", full).asInstanceOf[Array[Double]]))
-    // same FILES: every chunk + metadata byte-identical (deterministic
-    // encode; proves the executor path is the same write, just moved)
-    def walk(r: String): Map[String, Seq[Byte]] = {
-      val base = java.nio.file.Paths.get(r)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(p => base.relativize(p).toString ->
-          java.nio.file.Files.readAllBytes(p).toSeq)
-        .toMap
-    }
-    val a = walk(serial)
-    val b = walk(distRoot)
-    assert(a.keySet == b.keySet, a.keySet.diff(b.keySet))
-    a.keys.foreach(k => assert(a(k) == b(k), s"file $k differs"))
-  }
-
-  test("writeFromRows: rows scatter to a byte-identical zarr tree") {
-    val spark = graft.SparkTestBase.spark
-    val rows = new graft.XarrayContext(spark).scratchDataFrame(
-      "zfr_src", Fixtures.linearGrid, Map("t" -> 6),
-      Seq("t", "lat", "lon"))
-    val viaRows = tmp().resolve("rows").toString
-    ZarrGridStore.writeFromRows(rows, Fixtures.linearGrid.schema,
-      Map("t" -> 6, "lat" -> 5), viaRows, "zlib")
-    val viaStore = tmp().resolve("store").toString
-    ZarrGridStore.write(Fixtures.linearGrid, viaStore,
-      Map("t" -> 6, "lat" -> 5), "zlib")
-    def walk(r: String): Map[String, Seq[Byte]] = {
-      val base = java.nio.file.Paths.get(r)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(p => base.relativize(p).toString ->
-          java.nio.file.Files.readAllBytes(p).toSeq)
-        .toMap
-    }
-    val a = walk(viaRows)
-    val b = walk(viaStore)
-    assert(a.keySet == b.keySet, a.keySet.diff(b.keySet))
-    a.keys.foreach(k => assert(a(k) == b(k), s"file $k differs"))
-  }
-
   test("malformed consolidated metadata raises clear errors") {
     val root = freshTree()
     val zm = java.nio.file.Paths.get(root, ".zmetadata")

@@ -1,6 +1,7 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.ZarrLayout.V3
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path}
@@ -71,8 +72,8 @@ class ZarrNestedGroupSpec extends SparkTestBase {
   test("v3: grouped root errors helpfully; group option opens the subgroup") {
     val root = tmp().resolve("h3").toString
     val conf = GridIO.driverConf()
-    ZarrV3.writeFromRows(subDf(300.0), subSchema, Map("t" -> 3),
-      s"$root/obs", "zstd:3")
+    ZarrGridStore.writeFromRows(subDf(300.0), subSchema, Map("t" -> 3),
+      s"$root/obs", "zstd:3", V3())
     // root group node whose inline consolidated metadata holds only
     // NESTED array entries
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -106,8 +107,8 @@ class ZarrNestedGroupSpec extends SparkTestBase {
       root, "zstd:3")
     ZarrGridStore.writeFromRows(subDf(10.0), subSchema, Map("t" -> 3),
       s"$root/a", "zstd:3")
-    ZarrV3.writeFromRows(subDf(20.0), subSchema, Map("t" -> 3),
-      s"$root/b/c", "zstd:3")
+    ZarrGridStore.writeFromRows(subDf(20.0), subSchema, Map("t" -> 3),
+      s"$root/b/c", "zstd:3", V3())
     GridIO.writeString(s"$root/b/.zgroup", """{"zarr_format":2}""", conf)
     val views = new graft.XarrayContext(spark).fromZarrTree("reg9", root)
     assert(views.toSet == Set("reg9", "reg9_a", "reg9_b_c"), views)

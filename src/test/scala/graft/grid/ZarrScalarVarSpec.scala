@@ -1,6 +1,7 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.ZarrLayout.V3
 import org.apache.spark.sql.functions._
 
 import java.nio.ByteBuffer
@@ -66,7 +67,8 @@ class ZarrScalarVarSpec extends SparkTestBase {
       "v2" -> (r => ZarrGridStore.write(source, r, Map("t" -> 3), "zlib")),
       "v2dist" -> (r =>
         ZarrGridStore.writeDistributed(source, r, Map("t" -> 3), "zstd:3")),
-      "v3" -> (r => ZarrV3.write(source, r, Map("t" -> 3), "zstd:3")))) {
+      "v3" -> (r =>
+        ZarrGridStore.write(source, r, Map("t" -> 3), "zstd:3", V3())))) {
       val root = tmp().resolve(label).toString
       val rt = write(root)
       val sv = rt.schema.vars.find(_.name == "spatial_ref").get

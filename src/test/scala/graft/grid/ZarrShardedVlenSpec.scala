@@ -1,13 +1,14 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.ZarrLayout.V3
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path}
 
 /** Sharded v3 vlen-utf8 string arrays (write + read), the row-scatter
-  * string path (V3Sink/ZarrSink vlen branches live from
+  * string path (the sink's vlen branches, plain and sharded, live from
   * `writeFromRows`), and the COALESCED ranged-read pin: byte-adjacent
   * inner-chunk index entries of one shard merge into a single range
   * GET.
@@ -23,9 +24,9 @@ class ZarrShardedVlenSpec extends SparkTestBase {
   test("sharded v3 string array round-trips store-to-store") {
     val root = tmp().resolve("st").toString
     val fx = Fixtures.stationQualityGrid
-    val store = ZarrV3.write(fx, root,
+    val store = ZarrGridStore.write(fx, root,
       Map("station" -> 4, "time" -> 5), "zstd:3",
-      shardInner = Map("station" -> 2))
+      V3(Map("station" -> 2)))
     // the string variable is genuinely sharded
     assert(store.arrays("quality").sharding.exists(
       _.innerShape == Seq(2, 5)))
@@ -66,14 +67,14 @@ class ZarrShardedVlenSpec extends SparkTestBase {
     assert(v2.readVar("label", Seq((0, 12))).asInstanceOf[Array[String]]
       .sameElements(expect))
 
-    val v3 = ZarrV3.writeFromRows(df, schema, Map("t" -> 5),
-      tmp().resolve("v3").toString, "zstd:3")
+    val v3 = ZarrGridStore.writeFromRows(df, schema, Map("t" -> 5),
+      tmp().resolve("v3").toString, "zstd:3", V3())
     assert(v3.readVar("label", Seq((0, 12))).asInstanceOf[Array[String]]
       .sameElements(expect))
 
-    val sharded = ZarrV3.writeFromRows(df, schema, Map("t" -> 6),
+    val sharded = ZarrGridStore.writeFromRows(df, schema, Map("t" -> 6),
       tmp().resolve("v3sh").toString, "zstd:3",
-      shardInner = Map("t" -> 2))
+      V3(Map("t" -> 2)))
     assert(sharded.arrays("label").sharding.exists(_.innerShape == Seq(2)))
     assert(sharded.readVar("label", Seq((0, 12))).asInstanceOf[Array[String]]
       .sameElements(expect))
@@ -104,8 +105,8 @@ class ZarrShardedVlenSpec extends SparkTestBase {
     // chunk 0 only) and all t selects k = {0, 2, 4} — non-adjacent in
     // the file, separated by the skipped k=1,3 byte ranges, each far
     // below the 64 KiB gap cap -> ONE merged GET, holes discarded.
-    val store = ZarrV3.write(Fixtures.linearGrid, root,
-      Map("t" -> 6), "zstd:3", shardInner = Map("t" -> 2, "lat" -> 6))
+    val store = ZarrGridStore.write(Fixtures.linearGrid, root,
+      Map("t" -> 6), "zstd:3", V3(Map("t" -> 2, "lat" -> 6)))
     store.readVar("air", Seq((0, 2), (0, 6), (0, 10))) // warm index cache
     GridIO.Counters.reset()
     val got = store.readVar("air", Seq((0, 6), (0, 6), (0, 10)))
@@ -121,8 +122,8 @@ class ZarrShardedVlenSpec extends SparkTestBase {
   test("adjacent inner chunks of one shard coalesce into ONE range GET") {
     val root = tmp().resolve("coalesce").toString
     // one shard spans full lat/lon; inner chunks split t (6 = 3 x 2)
-    val store = ZarrV3.write(Fixtures.linearGrid, root,
-      Map("t" -> 6), "zstd:3", shardInner = Map("t" -> 2))
+    val store = ZarrGridStore.write(Fixtures.linearGrid, root,
+      Map("t" -> 6), "zstd:3", V3(Map("t" -> 2)))
     // warm the shard-index cache (a partial read fetches + caches it)
     store.readVar("air", Seq((0, 2), (0, 12), (0, 10)))
     GridIO.Counters.reset()

@@ -1,6 +1,7 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.ZarrLayout.V3
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path}
@@ -77,15 +78,15 @@ class ZarrTimeVarWriteSpec extends SparkTestBase {
   }
 
   test("v3 and sharded v3 row scatter round-trip time variables") {
-    val v3 = ZarrV3.writeFromRows(df, schema, Map("t" -> 5),
-      tmp().resolve("v3").toString, "zstd:3")
+    val v3 = ZarrGridStore.writeFromRows(df, schema, Map("t" -> 5),
+      tmp().resolve("v3").toString, "zstd:3", V3())
     assert(v3.arrays("obs").dtype == GTimestamp)
     assert(v3.arrays("obs").stored.contains(StoredTime64(1L, 1L)))
     checkStore(v3)
 
-    val sh = ZarrV3.writeFromRows(df, schema, Map("t" -> 6),
+    val sh = ZarrGridStore.writeFromRows(df, schema, Map("t" -> 6),
       tmp().resolve("v3sh").toString, "zstd:3",
-      shardInner = Map("t" -> 2))
+      V3(Map("t" -> 2)))
     assert(sh.arrays("obs").sharding.exists(_.innerShape == Seq(2)))
     checkStore(sh)
   }

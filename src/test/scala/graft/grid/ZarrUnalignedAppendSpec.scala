@@ -1,6 +1,8 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.TreeBytes.assertTreesEqual
+import graft.grid.ZarrLayout.V3
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path, Paths}
@@ -24,22 +26,6 @@ class ZarrUnalignedAppendSpec extends SparkTestBase {
 
   private def gridDf = new graft.XarrayContext(spark).dataFrame(
     "ua_grid", Fixtures.linearGrid, Map("t" -> 6), Seq("t", "lat", "lon"))
-
-  private def walk(r: String): Map[String, Seq[Byte]] = {
-    val base = Paths.get(r)
-    Files.walk(base).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .map(p => base.relativize(p).toString -> Files.readAllBytes(p).toSeq)
-      .toMap
-  }
-
-  private def assertTreesEqual(oneShot: String, appended: String): Unit = {
-    val a = walk(oneShot)
-    val b = walk(appended)
-    assert(a.keySet == b.keySet,
-      (a.keySet.diff(b.keySet), b.keySet.diff(a.keySet)))
-    a.keys.foreach(k => assert(a(k) == b(k), s"file $k differs"))
-  }
 
   /** Write t-slices [0,c1), [c1,c2), [c2,24) via the format surface and
     * byte-compare against a one-shot write with the same options.
@@ -153,16 +139,16 @@ class ZarrUnalignedAppendSpec extends SparkTestBase {
     // inner chunks
     val d3 = tmp()
     val v3root = d3.resolve("grow").toString
-    ZarrV3.writeFromRows(df(0, 7), schema(0, 7), Map("t" -> 6),
-      v3root, "zstd:3", shardInner = Map("t" -> 2))
+    ZarrGridStore.writeFromRows(df(0, 7), schema(0, 7), Map("t" -> 6),
+      v3root, "zstd:3", V3(Map("t" -> 2)))
     val v3 = ZarrGridStore.appendFromRows(df(7, 12), schema(7, 12),
       v3root, "t")
     assert(v3.readVar("label", Seq((0, 12))).asInstanceOf[Array[String]]
       .sameElements(expect))
     assert(v3.arrays("label").sharding.isDefined)
-    ZarrV3.writeFromRows(df(0, 12), schema(0, 12), Map("t" -> 6),
+    ZarrGridStore.writeFromRows(df(0, 12), schema(0, 12), Map("t" -> 6),
       d3.resolve("oneshot").toString, "zstd:3",
-      shardInner = Map("t" -> 2))
+      V3(Map("t" -> 2)))
     assertTreesEqual(d3.resolve("oneshot").toString, v3root)
   }
 
@@ -175,8 +161,8 @@ class ZarrUnalignedAppendSpec extends SparkTestBase {
       Seq(VarDef("x", Seq("t"), GDouble)))
     for (v3 <- Seq(false, true)) {
       val root = tmp().resolve(if (v3) "ccv3" else "ccv2").toString
-      if (v3) ZarrV3.writeFromRows(df(0, 7), schema(0, 7),
-        Map("t" -> 5), root, "zstd:3")
+      if (v3) ZarrGridStore.writeFromRows(df(0, 7), schema(0, 7),
+        Map("t" -> 5), root, "zstd:3", V3())
       else ZarrGridStore.writeFromRows(df(0, 7), schema(0, 7),
         Map("t" -> 5), root, "zstd:3")
       // the hook interleaves a COMPETING append (extent 7 -> 12) after
@@ -294,8 +280,8 @@ class ZarrUnalignedAppendSpec extends SparkTestBase {
     val schema = GridSchema(
       Seq(DimDef("t", IntCoords((0 until 6).toArray))),
       Seq(VarDef("x", Seq("t"), GDouble)))
-    ZarrV3.writeFromRows(df, schema, Map("t" -> 6), root, "zstd:3",
-      shardInner = Map("t" -> 2))
+    ZarrGridStore.writeFromRows(df, schema, Map("t" -> 6), root, "zstd:3",
+      V3(Map("t" -> 2)))
     // claim index_location "start" in the metadata (array + root):
     // staged shards are always framed with an END index, so the append
     // must refuse rather than mix layouts inside one array

@@ -1,6 +1,7 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.ZarrLayout.V3
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
 
@@ -98,8 +99,8 @@ class ZarrV3Spec extends SparkTestBase {
     for (comp <- Seq("none", "gzip", "zstd:3", "blosc",
       "blosc:blosclz:bit")) {
       val root = tmp().resolve(s"w_${comp.replace(':', '_')}").toString
-      val store = ZarrV3.write(Fixtures.linearGrid, root,
-        Map("t" -> 6, "lat" -> 5), comp)
+      val store = ZarrGridStore.write(Fixtures.linearGrid, root,
+        Map("t" -> 6, "lat" -> 5), comp, V3())
       assert(store.schema.dimNames == Seq("t", "lat", "lon"), comp)
       assert(store.chunkMap == Map("t" -> 6, "lat" -> 5, "lon" -> 10))
       val full = Seq((0, 24), (0, 12), (0, 10))
@@ -113,14 +114,14 @@ class ZarrV3Spec extends SparkTestBase {
           .asInstanceOf[Array[Double]]), comp)
     }
     intercept[IllegalArgumentException] {
-      ZarrV3.write(Fixtures.maskGrid, tmp().resolve("z").toString,
-        Map.empty, "zlib") // v3 has no zlib codec
+      ZarrGridStore.write(Fixtures.maskGrid, tmp().resolve("z").toString,
+        Map.empty, "zlib", V3()) // v3 has no zlib codec
     }
   }
 
   test("consolidated v3 open costs one metadata read; listing fallback works") {
     val root = tmp().resolve("cons").toString
-    ZarrV3.write(Fixtures.linearGrid, root, Map("t" -> 6), "gzip")
+    ZarrGridStore.write(Fixtures.linearGrid, root, Map("t" -> 6), "gzip", V3())
     GridIO.Counters.reset()
     ZarrGridStore.open(root)
     // exists(.zmetadata) + exists(zarr.json) + 1 HEAD on the stats
@@ -147,8 +148,8 @@ class ZarrV3Spec extends SparkTestBase {
 
   test("registered v3 store prunes chunk opens on a dim predicate") {
     val root = tmp().resolve("reg").toString
-    val store = ZarrV3.write(Fixtures.linearGrid, root,
-      Map("t" -> 6), "blosc")
+    val store = ZarrGridStore.write(Fixtures.linearGrid, root,
+      Map("t" -> 6), "blosc", V3())
     val df = new graft.XarrayContext(spark)
       .scratchDataFrame(s"zarr_v3_prune@$root", store, store.chunkMap,
         Seq("t", "lat", "lon"))
@@ -209,9 +210,9 @@ class ZarrV3Spec extends SparkTestBase {
 
   test("sharded write/open round trip; partitioning is inner-chunk-granular") {
     val root = tmp().resolve("sh").toString
-    val store = ZarrV3.write(Fixtures.linearGrid, root,
+    val store = ZarrGridStore.write(Fixtures.linearGrid, root,
       Map("t" -> 6, "lat" -> 5), "zstd:3",
-      shardInner = Map("t" -> 2, "lat" -> 5))
+      V3(Map("t" -> 2, "lat" -> 5)))
     // stored files are SHARDS: 4 t-shards x 3 lat-shards x 1 = 12 files
     assert(store.arrays("air").sharding.exists(
       _.innerShape == Seq(2, 5, 10)))
@@ -246,9 +247,9 @@ class ZarrV3Spec extends SparkTestBase {
 
   test("pruned sharded scan fetches k-of-n inner chunks' BYTES, not shards") {
     val root = tmp().resolve("shbytes").toString
-    val store = ZarrV3.write(Fixtures.linearGrid, root,
+    val store = ZarrGridStore.write(Fixtures.linearGrid, root,
       Map("t" -> 6, "lat" -> 5), "zstd:3",
-      shardInner = Map("t" -> 2, "lat" -> 5))
+      V3(Map("t" -> 2, "lat" -> 5)))
     val df = new graft.XarrayContext(spark)
       .scratchDataFrame(s"zarr_v3_shbytes@$root", store, store.chunkMap,
         Seq("t", "lat", "lon"))
@@ -280,25 +281,15 @@ class ZarrV3Spec extends SparkTestBase {
 
   test("writeDistributed emits a byte-identical sharded tree") {
     assert(spark.sparkContext.defaultParallelism >= 1) // session up
+    // inner chunks split both chunked dims (the layout matrix in
+    // ZarrWriteIdentitySpec splits only t)
     val serial = tmp().resolve("ser").toString
-    ZarrV3.write(Fixtures.linearGrid, serial,
-      Map("t" -> 6, "lat" -> 5), "zstd:3", shardInner = Map("t" -> 2))
+    ZarrGridStore.write(Fixtures.linearGrid, serial,
+      Map("t" -> 6, "lat" -> 5), "zstd:3", V3(Map("t" -> 3, "lat" -> 1)))
     val dist = tmp().resolve("dist").toString
-    ZarrV3.writeDistributed(Fixtures.linearGrid, dist,
-      Map("t" -> 6, "lat" -> 5), "zstd:3", shardInner = Map("t" -> 2))
-    def walk(r: String): Map[String, Seq[Byte]] = {
-      val base = java.nio.file.Paths.get(r)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(p => base.relativize(p).toString ->
-          java.nio.file.Files.readAllBytes(p).toSeq)
-        .toMap
-    }
-    val a = walk(serial)
-    val b = walk(dist)
-    assert(a.keySet == b.keySet, a.keySet.diff(b.keySet))
-    a.keys.foreach(k => assert(a(k) == b(k), s"file $k differs"))
+    ZarrGridStore.writeDistributed(Fixtures.linearGrid, dist,
+      Map("t" -> 6, "lat" -> 5), "zstd:3", V3(Map("t" -> 3, "lat" -> 1)))
+    TreeBytes.assertTreesEqual(serial, dist)
   }
 
   test("v3 transpose codec: stored axis permutation inverts on read") {
@@ -384,16 +375,16 @@ class ZarrV3Spec extends SparkTestBase {
       .sameElements(Array("böse", "n/a")))
     // round trip through the writer: string coord + string var re-emit
     // as data_type "string" with vlen-utf8 chunks and re-open
-    val rt = ZarrV3.write(store, tmp().resolve("rt").toString,
-      Map("station" -> 2), "zstd:3")
+    val rt = ZarrGridStore.write(store, tmp().resolve("rt").toString,
+      Map("station" -> 2), "zstd:3", V3())
     assert(rt.schema.dim("station").coords.asInstanceOf[StringCoords]
       .values.sameElements(Array("alpha", "bē", "丙")))
     assert(rt.readVar("q", Seq((0, 3))).asInstanceOf[Array[String]]
       .sameElements(Array("good", "böse", "n/a")))
     // sharded string arrays: vlen inner chunks under the shard index
     // (the full matrix lives in ZarrShardedVlenSpec)
-    val sh = ZarrV3.write(store, tmp().resolve("sh").toString,
-      Map("station" -> 2), "zstd:3", shardInner = Map("station" -> 1))
+    val sh = ZarrGridStore.write(store, tmp().resolve("sh").toString,
+      Map("station" -> 2), "zstd:3", V3(Map("station" -> 1)))
     assert(sh.arrays("q").sharding.exists(_.innerShape == Seq(1)))
     assert(sh.readVar("q", Seq((0, 3))).asInstanceOf[Array[String]]
       .sameElements(Array("good", "böse", "n/a")))
@@ -401,8 +392,8 @@ class ZarrV3Spec extends SparkTestBase {
 
   test("string variable serves through the registered scan") {
     val root = tmp().resolve("vlenscan").toString
-    val store = ZarrV3.write(Fixtures.stationQualityGrid, root,
-      Map("station" -> 4, "time" -> 5), "zstd:3")
+    val store = ZarrGridStore.write(Fixtures.stationQualityGrid, root,
+      Map("station" -> 4, "time" -> 5), "zstd:3", V3())
     val df = new graft.XarrayContext(spark)
       .scratchDataFrame(s"zarr_vlen_scan@$root", store, store.chunkMap,
         Seq("station", "time"))

@@ -1,6 +1,7 @@
 package graft.grid
 
 import graft.SparkTestBase
+import graft.grid.ZarrLayout.V3
 import graft.XarrayContext
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
@@ -27,8 +28,8 @@ class ZarrVarStatsSpec extends SparkTestBase {
         (r, ZarrGridStore.write(Fixtures.pruneGrid, r,
           Map("time" -> 25), "zlib")) },
       { val r = tmp().resolve("v3").toString
-        (r, ZarrV3.write(Fixtures.pruneGrid, r,
-          Map("time" -> 25), "zstd:3")) })) {
+        (r, ZarrGridStore.write(Fixtures.pruneGrid, r,
+          Map("time" -> 25), "zstd:3", V3())) })) {
       assert(Files.exists(Paths.get(root, ".graft-stats.json")), root)
       // temperature = t*10 + lat_idx -> chunk maxima 244 / ... / 994
       assert(store.varBounds("temperature", Seq((0, 25), (0, 5)))
@@ -56,7 +57,8 @@ class ZarrVarStatsSpec extends SparkTestBase {
       { val r = tmp().resolve("v2s").toString
         (r, ZarrGridStore.write(store0, r, Map("time" -> 25), "zlib")) },
       { val r = tmp().resolve("v3s").toString
-        (r, ZarrV3.write(store0, r, Map("time" -> 25), "zstd:3")) })) {
+        (r, ZarrGridStore.write(store0, r, Map("time" -> 25), "zstd:3",
+          V3())) })) {
       assert(store.varBounds("grade", Seq((0, 25), (0, 5)))
         .contains(("g0", "g0")), root)
       assert(store.varBounds("grade", Seq((75, 25), (0, 5)))
@@ -393,8 +395,8 @@ class ZarrVarStatsSpec extends SparkTestBase {
     // shards of 6 t-steps, inner chunks of 2 -> the scan plans (and
     // the sidecar keys) 12 inner chunks along t
     val shRoot = tmp().resolve("sh").toString
-    val sh = ZarrV3.write(Fixtures.linearGrid, shRoot,
-      Map("t" -> 6), "zstd:3", shardInner = Map("t" -> 2))
+    val sh = ZarrGridStore.write(Fixtures.linearGrid, shRoot,
+      Map("t" -> 6), "zstd:3", V3(Map("t" -> 2)))
     // inner chunk t=22..23 (global inner index 11): min at (22,0,0),
     // max at (23,11,9)
     assert(sh.varBounds("air", Seq((22, 2), (0, 12), (0, 10)))
@@ -415,10 +417,10 @@ class ZarrVarStatsSpec extends SparkTestBase {
     val rsRoot = tmp().resolve("rs").toString
     import spark.implicits._
     val rdf = (0 until 12).map(t => (t, t * 2.0)).toDF("t", "x")
-    val rs = ZarrV3.writeFromRows(rdf,
+    val rs = ZarrGridStore.writeFromRows(rdf,
       GridSchema(Seq(DimDef("t", IntCoords((0 until 12).toArray))),
         Seq(VarDef("x", Seq("t"), GDouble))),
-      Map("t" -> 6), rsRoot, "zstd:3", shardInner = Map("t" -> 2))
+      Map("t" -> 6), rsRoot, "zstd:3", V3(Map("t" -> 2)))
     assert(rs.varBounds("x", Seq((10, 2))).contains((20.0, 22.0)))
   }
 }

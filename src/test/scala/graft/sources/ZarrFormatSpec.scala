@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkTestBase
-import graft.grid.{Fixtures, ZarrGridStore, ZarrV3}
+import graft.grid.{Fixtures, ZarrGridStore, ZarrLayout}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -46,8 +46,8 @@ class ZarrFormatSpec extends SparkTestBase {
     val root = Files.createTempDirectory("zarr_fmt_v3")
     root.toFile.deleteOnExit()
     val p = root.resolve("store").toString
-    ZarrV3.write(Fixtures.linearGrid, p, Map("t" -> 6), "zstd:3",
-      shardInner = Map("t" -> 2))
+    ZarrGridStore.write(Fixtures.linearGrid, p, Map("t" -> 6), "zstd:3",
+      ZarrLayout.V3(Map("t" -> 2)))
     val df = spark.read.format("zarr").load(p)
     assert(df.filter(col("lat") === 75.0).count() == 24L * 10)
   }

@@ -1,12 +1,12 @@
 package graft.sources
 
 import graft.SparkTestBase
-import graft.grid.{Fixtures, GridIO, ZarrGridStore}
+import graft.grid.{Fixtures, GridIO, ZarrGridStore, ZarrLayout}
+import graft.grid.TreeBytes.assertTreesEqual
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path}
 
 /** The plain-Spark WRITE surface: `df.write.format("zarr")` — output
   * byte-identical to the `writeFromRows` API path, overwrite/append
@@ -23,15 +23,6 @@ class ZarrWriteFormatSpec extends SparkTestBase {
   private def gridDf = new graft.XarrayContext(spark).dataFrame(
     "wfmt_grid", Fixtures.linearGrid, Map("t" -> 6), Seq("t", "lat", "lon"))
 
-  private def walk(r: String): Map[String, Seq[Byte]] = {
-    val base = Paths.get(r)
-    Files.walk(base).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .map(p => base.relativize(p).toString ->
-        Files.readAllBytes(p).toSeq)
-      .toMap
-  }
-
   test("df.write.format(\"zarr\") output is byte-identical to writeFromRows") {
     val apiRoot = tmp().resolve("api").toString
     val fmtRoot = tmp().resolve("fmt").toString
@@ -45,11 +36,7 @@ class ZarrWriteFormatSpec extends SparkTestBase {
       .option("chunks", "t=6,lat=5")
       .option("compressor", "zstd:3")
       .mode("overwrite").save(fmtRoot)
-    val a = walk(apiRoot)
-    val b = walk(fmtRoot)
-    assert(a.keySet == b.keySet,
-      (a.keySet.diff(b.keySet), b.keySet.diff(a.keySet)))
-    a.keys.foreach(k => assert(a(k) == b(k), s"file $k differs"))
+    assertTreesEqual(apiRoot, fmtRoot)
     // read-back: every cell of the original pivot survives
     val back = spark.read.format("zarr").load(fmtRoot)
     assert(back.count() == 24L * 12 * 10)
@@ -77,11 +64,7 @@ class ZarrWriteFormatSpec extends SparkTestBase {
     df.write.format("zarr")
       .option("dims", "t,lat,lon").option("chunks", "t=6,lat=5")
       .mode("overwrite").save(oneShot)
-    val a = walk(oneShot)
-    val b = walk(root)
-    assert(a.keySet == b.keySet,
-      (a.keySet.diff(b.keySet), b.keySet.diff(a.keySet)))
-    a.keys.foreach(k => assert(a(k) == b(k), s"file $k differs after append"))
+    assertTreesEqual(oneShot, root)
     // a straddling filter scans seamlessly across the append boundary
     val r = back.filter(col("t").between(8, 15))
       .agg(count(lit(1)), sum("air")).collect().head
@@ -93,9 +76,9 @@ class ZarrWriteFormatSpec extends SparkTestBase {
     val fmtRoot = tmp().resolve("v3fmt").toString
     val df = gridDf
     val schema = ZarrWrite.inferGridSchema(df, Seq("t", "lat", "lon"))
-    graft.grid.ZarrV3.writeFromRows(df, schema,
+    ZarrGridStore.writeFromRows(df, schema,
       Map("t" -> 6, "lat" -> 5), apiRoot, "zstd:3",
-      shardInner = Map("t" -> 2))
+      ZarrLayout.V3(Map("t" -> 2)))
     df.write.format("zarr")
       .option("dims", "t,lat,lon")
       .option("chunks", "t=6,lat=5")
@@ -103,11 +86,7 @@ class ZarrWriteFormatSpec extends SparkTestBase {
       .option("shards", "t=2")
       .option("compressor", "zstd:3")
       .mode("overwrite").save(fmtRoot)
-    val a = walk(apiRoot)
-    val b = walk(fmtRoot)
-    assert(a.keySet == b.keySet,
-      (a.keySet.diff(b.keySet), b.keySet.diff(a.keySet)))
-    a.keys.foreach(k => assert(a(k) == b(k), s"file $k differs"))
+    assertTreesEqual(apiRoot, fmtRoot)
     // stored files are shards; the reader partitions on inner chunks
     val store = ZarrGridStore.open(fmtRoot)
     assert(store.arrays("air").sharding.exists(_.innerShape.head == 2))
@@ -143,11 +122,7 @@ class ZarrWriteFormatSpec extends SparkTestBase {
       .option("dims", "t,lat,lon").option("chunks", "t=6,lat=5")
       .option("format", "v3").option("shards", "t=2")
       .mode("overwrite").save(oneShot)
-    val a = walk(oneShot)
-    val b = walk(root)
-    assert(a.keySet == b.keySet,
-      (a.keySet.diff(b.keySet), b.keySet.diff(a.keySet)))
-    a.keys.foreach(k => assert(a(k) == b(k), s"file $k differs after append"))
+    assertTreesEqual(oneShot, root)
     // straddling filter reads seamlessly, on inner-chunk partitions
     val back = spark.read.format("zarr").load(root)
     ReadCounters.reset()
@@ -178,6 +153,16 @@ class ZarrWriteFormatSpec extends SparkTestBase {
       gridDf.write.format("zarr").option("dims", "t,lat,lon").save(root))
     assert(e3.getMessage.toLowerCase.contains("errorifexists"),
       e3.getMessage)
+    // chunks/shards: a key that names no dim, or a size that is not a
+    // positive integer, fails with the option named
+    for ((opt, spec) <- Seq("chunks" -> "time=6", "chunks" -> "t=x",
+        "chunks" -> "t=0", "shards" -> "lev=2", "shards" -> "t=-2")) {
+      val e = intercept[Exception](
+        gridDf.write.format("zarr").option("dims", "t,lat,lon")
+          .option("format", "v3").option(opt, spec)
+          .mode("overwrite").save(tmp().resolve("opt").toString))
+      assert(e.getMessage.contains(s"$opt entry '$spec'"), e.getMessage)
+    }
     // duplicate cells fail loudly, not last-write-wins
     val dup = gridDf.union(gridDf.limit(1))
     val e4 = intercept[Exception](
