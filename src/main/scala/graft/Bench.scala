@@ -5,18 +5,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.ui.enabled", "false")
-      // the production extension set: the metadata-answer rules fire in
-      // the driver-measured plans, and the oracle gate exercises them
-      // against every query
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
     // warm the JVM/codegen once so session init doesn't land on the
     // first timed query: a tiny parquet read initializes the Hadoop FS +
     // column-reader machinery, and a small join+agg compiles the common
@@ -207,5 +196,23 @@ object Bench {
       System.err.println(s"[bench] could not write round-stamped copy: $e")
     }
     spark.stop()
+  }
+
+  /** The session of Bench, Verify and the introspection tool:
+    * `cpus` local cores and shuffle partitions, UTC, and the production
+    * extension set — the metadata-answer rules fire in the measured
+    * plans, and the oracle gate exercises them against every query.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

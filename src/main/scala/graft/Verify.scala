@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Path, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -24,19 +23,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // legacy events.ts
-      .config("spark.ui.enabled", "false")
-      // the production extension set: the metadata-answer rules fire in
-      // the driver-measured plans, and the oracle gate exercises them
-      // against every query
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // local iteration aid (driver never sets it): run only the named
     // queries, comma-separated

@@ -206,27 +206,15 @@ object LazyGridView {
       case _ => discoverCoords(df, groupDims, varCols)
     }
 
-  /** The registered store behind `df` iff the analyzed plan is nothing
-    * but (aliases / attribute-only projections over) one grid relation.
+  /** The store behind `df` iff the analyzed plan is nothing but
+    * (aliases / attribute-only projections over) one grid relation —
+    * registered or `format("zarr")`.
     */
-  private def pureScanStore(df: DataFrame): Option[GridStore] = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(_, child) => strip(child)
-      case Project(exprs, child)
-        if exprs.forall(_.isInstanceOf[AttributeReference]) => strip(child)
-      case other => other
-    }
-    strip(df.queryExecution.analyzed) match {
-      case r: DataSourceV2Relation => r.table match {
-        case t: graft.sources.GridTable => Some(t.store)
-        case _ => None
-      }
+  private def pureScanStore(df: DataFrame): Option[GridStore] =
+    df.queryExecution.analyzed match {
+      case graft.sources.GridRelation(Seq(), _, gt) => Some(gt.store)
       case _ => None
     }
-  }
 
   /** External (Row-level) coordinate value at index i. */
   private[graft] def externalCoord(c: CoordArray, i: Int): Any = c match {

@@ -1,13 +1,12 @@
 package graft.plans
 
-import graft.sources.{GridPlanIndex, GridTable, ZoneMapPruning}
+import graft.sources.{GridPlanIndex, GridRelation, SeparableDimFilters}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Add, Alias, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftinterop.FilterInterop
 
 /** Filtered COUNT(*) from chunk metadata (SURVEY §2A A9 extended to the
@@ -51,70 +50,43 @@ case class MetadataCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     })
 
-  private def stripProjects(p: LogicalPlan): LogicalPlan = p match {
-    case Project(_, c) => stripProjects(c)
-    case other => other
-  }
-
   private def rewrite(agg: Aggregate, alias: Alias): Option[LogicalPlan] =
-    stripProjects(agg.child) match {
-      case Filter(cond, rest) =>
-        stripProjects(rest) match {
-          case rel: DataSourceV2Relation =>
-            rel.table match {
-              case gt: GridTable if gt.onlyBlocks.isEmpty =>
-                FilterInterop.translate(cond).flatMap { f =>
-                  val schema = gt.store.schema
-                  if (graft.sources.SeparableDimFilters
-                      .isSeparable(f, schema, gt.groupDims))
-                    // the scan's exact filtered meta-aggregate pushdown
-                    // answers separable counts with zero reads already —
-                    // bail before walking the (possibly 10^5+) blocks
-                    None
-                  else {
-                  val groupVars = schema.vars.filter(_.dims == gt.groupDims)
-                  // per-(dim, chunk) bounds precomputed once; per-block
-                  // classification is O(n_dims), no coordinate slicing
-                  val pidx = new GridPlanIndex(gt.store, gt.groupDims,
-                    gt.chunks, groupVars, Nil)
-                  val refVars =
-                    groupVars.filter(v => f.references.contains(v.name))
-                  var total = 0L
-                  val straddling = Seq.newBuilder[Seq[(Int, Int)]]
-                  pidx.allBlockIdx.foreach { ci =>
-                    // dim bounds + variable chunk stats: counts under
-                    // variable predicates become metadata-answerable
-                    // when the store records per-chunk min/max
-                    val bounds = pidx.boundsMap(ci, refVars)
-                    if (ZoneMapPruning.excludes(f, bounds)) ()
-                    else if (ZoneMapPruning.includes(f, bounds))
-                      total += pidx.fullRows(ci)
-                    else straddling += pidx.slices(ci)
-                  }
-                  val boundary = straddling.result()
-                  if (boundary.isEmpty)
-                    // fully decidable: a pure-metadata constant
-                    Some(LocalRelation(Seq(alias.toAttribute),
-                      Seq(new GenericInternalRow(
-                        Array[Any](total)): InternalRow)))
-                  else if (total > 0L) {
-                    // partial: metadata count for included blocks + a
-                    // real COUNT over ONLY the straddling blocks.
-                    val restricted = rel.copy(table = gt.restrictedTo(boundary))
-                    val cnt = Alias(AggregateExpression(
-                      Count(Seq(Literal(1))), Complete, isDistinct = false),
-                      "boundary_cnt")()
-                    val inner = Aggregate(Nil, Seq(cnt),
-                      Filter(cond, restricted))
-                    Some(Project(Seq(Alias(
-                      Add(cnt.toAttribute, Literal(total)), alias.name)(
-                      exprId = alias.exprId)), inner))
-                  } else None // nothing saved: keep the normal scan
-                  }
-                }
-              case _ => None
-            }
-          case _ => None
+    agg.child match {
+      case GridRelation(conds, rel, gt) if conds.nonEmpty =>
+        val cond = conds.reduce(And)
+        FilterInterop.translate(cond).flatMap { f =>
+          val schema = gt.store.schema
+          if (SeparableDimFilters.isSeparable(f, schema, gt.groupDims))
+            // the scan's exact filtered meta-aggregate pushdown answers
+            // separable counts with zero reads already — bail before
+            // walking the (possibly 10^5+) blocks
+            None
+          else {
+            // dim bounds + variable chunk stats: counts under variable
+            // predicates become metadata-answerable when the store
+            // records per-chunk min/max
+            val pidx = new GridPlanIndex(gt.store, gt.groupDims, gt.chunks,
+              schema.vars.filter(_.dims == gt.groupDims), Nil)
+            val (inside, boundary) =
+              pidx.metadataSplit(Some(f))(ci => Some(pidx.fullRows(ci)))
+            val total = inside.sum
+            if (boundary.isEmpty)
+              // fully decidable: a pure-metadata constant
+              Some(LocalRelation(Seq(alias.toAttribute),
+                Seq(new GenericInternalRow(Array[Any](total)): InternalRow)))
+            else if (total > 0L) {
+              // partial: metadata count for included blocks + a real
+              // COUNT over ONLY the straddling blocks.
+              val restricted = rel.copy(table = gt.restrictedTo(boundary))
+              val cnt = Alias(AggregateExpression(
+                Count(Seq(Literal(1))), Complete, isDistinct = false),
+                "boundary_cnt")()
+              val inner = Aggregate(Nil, Seq(cnt), Filter(cond, restricted))
+              Some(Project(Seq(Alias(
+                Add(cnt.toAttribute, Literal(total)), alias.name)(
+                exprId = alias.exprId)), inner))
+            } else None // nothing saved: keep the normal scan
+          }
         }
       case _ => None
     }

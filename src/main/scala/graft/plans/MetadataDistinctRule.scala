@@ -1,13 +1,11 @@
 package graft.plans
 
-import graft.grid.{DoubleCoords, DurationCoords, FloatCoords, GridSchema, IntCoords, LongCoords, StringCoords, TimeCoords}
-import graft.sources.{GridTable, SeparableDimFilters}
+import graft.sources.{GridRelation, MetaAggScan, SeparableDimFilters}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GenericInternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftinterop.FilterInterop
 
 /** DISTINCT over dimension columns answered from the store's
@@ -22,15 +20,15 @@ import org.apache.spark.sql.graftinterop.FilterInterop
   * (it requires at least one AggregateFunc) — so a coordinate-spine
   * lookup (nearest-neighbor tables, reindex targets, stack ordinals)
   * pays a full O(cells) scan + Exchange to learn the O(dim) values
-  * already sitting in [[GridSchema]]'s coord arrays. At 10¹² cells
+  * already sitting in [[graft.grid.GridSchema]]'s coord arrays. At 10¹² cells
   * that cost class is wrong even with projection pushdown reading
   * zero data-variable bytes.
   *
   * The rewrite: a dims-only DISTINCT over an unrestricted grid
   * relation, under at most attribute-projections and separable-exact
   * dimension filters, becomes a [[LocalRelation]] holding the cross
-  * product of the projected dims' SURVIVING coordinates (the same
-  * per-dim filter evaluation [[graft.sources.MetaAggScan]] uses).
+  * product of the projected dims' SURVIVING coordinates — the rows of
+  * a [[graft.sources.MetaAggScan]] grouped by them with no aggregates.
   * Density makes this exact: every coordinate combination is realized
   * by at least one cell unless ANY dimension's surviving set is empty
   * (then the table has no rows and the DISTINCT is empty). Dimension
@@ -68,74 +66,28 @@ case class MetadataDistinctRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (groupIds.length != agg.groupingExpressions.length ||
       groupIds.toSet != outs.map(_.exprId).toSet) return None
 
-    // walk down through attribute-only projections, collecting filters
-    var conds = List.empty[Expression]
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
-        strip(c)
-      case Filter(f, c) => conds ::= f; strip(c)
-      case other => other
-    }
-    strip(agg.child) match {
-      case rel: DataSourceV2Relation => rel.table match {
-        case gt: GridTable if gt.onlyBlocks.isEmpty =>
-          val schema = gt.store.schema
-          val names = outs.map(_.name)
-          if (!names.forall(gt.groupDims.contains)) return None
-          // a repeated output column (select("lat", "lat").distinct())
-          // would turn the cross product below into size^2 rows — the
-          // duplicate column carries the SAME value per row, not an
-          // independent axis. Rare shape; keep the scan.
-          if (names.distinct.length != names.length) return None
-          val translated = conds.map(FilterInterop.translate)
-          if (translated.exists(_.isEmpty)) return None
-          val fs = translated.flatten
-          if (!fs.forall(f =>
-            SeparableDimFilters.isSeparable(f, schema, gt.groupDims)))
-            return None
-          // surviving coords per dim — ALL dims, not just projected
-          // ones: a filter emptying any dim empties the whole table
-          val surviving = gt.groupDims.map(d =>
-            d -> SeparableDimFilters.survivingIndices(fs, schema,
-              gt.groupDims, d, 0, schema.dim(d).size)).toMap
-          if (surviving.values.exists(_.isEmpty))
-            return Some(LocalRelation(outs))
-          // capped fold, not a raw product: enough huge axes could
-          // overflow a Long product past the cap and let the rule try
-          // to materialize an astronomically large LocalRelation
-          val rowCount = names.map(d => surviving(d).length.toLong)
-            .foldLeft(1L)((acc, n) =>
-              if (acc > (1L << 20)) acc else acc * n)
-          if (rowCount > (1L << 20)) return None
-          val rows: Seq[InternalRow] = names
-            .map(d => surviving(d).toSeq)
-            .foldLeft(Seq(Seq.empty[Int]))((acc, idxs) =>
-              acc.flatMap(prefix => idxs.map(prefix :+ _)))
-            .map { combo =>
-              new GenericInternalRow(names.zip(combo).map { case (d, i) =>
-                coordInternal(schema, d, i)
-              }.toArray): InternalRow
-            }
-          Some(LocalRelation(outs, rows))
-        case _ => None
-      }
+    agg.child match {
+      case GridRelation(conds, _, gt) =>
+        val names = outs.map(_.name)
+        if (!names.forall(gt.groupDims.contains)) return None
+        // a repeated output column (select("lat", "lat").distinct())
+        // would turn the cross product into size^2 rows — the duplicate
+        // column carries the SAME value per row, not an independent
+        // axis. Rare shape; keep the scan.
+        if (names.distinct.length != names.length) return None
+        val translated = conds.map(FilterInterop.translate)
+        if (translated.exists(_.isEmpty)) return None
+        val fs = translated.flatten
+        if (!fs.forall(f => SeparableDimFilters.isSeparable(f,
+          gt.store.schema, gt.groupDims))) return None
+        // the grouped cross product of the surviving coordinates,
+        // without aggregates: exactly the DISTINCT rows
+        val spine = new MetaAggScan(gt.store, gt.chunks, gt.groupDims, Nil,
+          fs.toArray, names)
+        if (spine.groupCount > (1L << 20)) None
+        else Some(LocalRelation(outs, spine.rows.toSeq.map(r =>
+          new GenericInternalRow(r): InternalRow)))
       case _ => None
     }
   }
-
-  /** Spark-internal representation of coordinate i of `dim`
-    * (UTF8String for string axes; time/duration micros already ARE the
-    * internal long forms) — the MetaAggScan convention.
-    */
-  private def coordInternal(schema: GridSchema, dim: String, i: Int): Any =
-    schema.dim(dim).coords match {
-      case DoubleCoords(v) => v(i)
-      case FloatCoords(v) => v(i)
-      case IntCoords(v) => v(i)
-      case LongCoords(v) => v(i)
-      case TimeCoords(v) => v(i)
-      case DurationCoords(v) => v(i)
-      case StringCoords(v) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(v(i))
-    }
 }

@@ -1,13 +1,12 @@
 package graft.plans
 
-import graft.sources.{GridPlanIndex, GridTable, ZoneMapPruning}
+import graft.sources.{GridPlanIndex, GridRelation}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Add, Alias, AttributeReference, Cast, Coalesce, Divide, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, AttributeReference, Cast, Coalesce, Divide, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftinterop.FilterInterop
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 
@@ -75,109 +74,69 @@ case class MetadataSumRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def stripProjects(p: LogicalPlan): LogicalPlan = p match {
-    // only column-pruning projects are safe to look through; a Project
-    // that computes the summed column would change its meaning, but then
-    // the summed attr would not resolve to a store variable below
-    case Project(_, c) => stripProjects(c)
-    case other => other
-  }
-
   private def rewrite(agg: Aggregate, alias: Alias,
       ae: AggregateExpression,
-      attr: AttributeReference, isAvg: Boolean): Option[LogicalPlan] = {
-    val (cond, relPlan) = stripProjects(agg.child) match {
-      case Filter(c, rest) => (Some(c), stripProjects(rest))
-      case other => (None, other)
-    }
-    relPlan match {
-      case rel: DataSourceV2Relation =>
-        rel.table match {
-          case gt: GridTable if gt.onlyBlocks.isEmpty =>
-            val schema = gt.store.schema
-            val groupVars = schema.vars.filter(_.dims == gt.groupDims)
-            if (!groupVars.exists(_.name == attr.name)) return None
-            val translated = cond.map(FilterInterop.translate)
-            if (translated.exists(_.isEmpty)) return None // untranslatable
-            val f = translated.flatten
-            val pidx = new GridPlanIndex(gt.store, gt.groupDims,
-              gt.chunks, groupVars, Nil)
-            val refVars = groupVars.filter(v =>
-              f.exists(_.references.contains(v.name)))
-            var total = 0.0
-            var rows = 0L // row count behind the metadata sums
-            var includedBlocks = 0L
-            val boundary = Seq.newBuilder[Seq[(Int, Int)]]
-            pidx.allBlockIdx.foreach { ci =>
-              // tri-state: None = excluded, Some(true) = fully included,
-              // Some(false) = straddles the predicate boundary
-              val verdict: Option[Boolean] = f match {
-                case None => Some(true)
-                case Some(flt) =>
-                  val bounds = pidx.boundsMap(ci, refVars)
-                  if (ZoneMapPruning.excludes(flt, bounds)) None
-                  else Some(ZoneMapPruning.includes(flt, bounds))
-              }
-              verdict match {
-                case None => () // excluded: contributes nothing
-                case Some(true) =>
-                  gt.store.varSums(attr.name, pidx.slices(ci)) match {
-                    case Some(s) =>
-                      total += s; rows += pidx.fullRows(ci)
-                      includedBlocks += 1
-                    case None => boundary += pidx.slices(ci)
-                  }
-                case Some(false) => boundary += pidx.slices(ci)
-              }
-            }
-            val bnd = boundary.result()
-            if (bnd.isEmpty) {
-              // fully metadata-decidable; zero included rows => NULL
-              // (AVG divides the metadata sums by the exact metadata
-              // row count — the same one final double division the
-              // normal Average evaluator performs)
-              val v: Any =
-                if (includedBlocks == 0) null
-                else if (isAvg) total / rows.toDouble
-                else total
-              Some(LocalRelation(Seq(alias.toAttribute),
-                Seq(new GenericInternalRow(Array[Any](v)): InternalRow)))
-            } else if (includedBlocks > 0) {
-              // metadata sums for included chunks + a real aggregate
-              // over ONLY the boundary chunks; COALESCE because an
-              // empty boundary result must not null out the metadata
-              // part. For AVG the boundary contributes (sum, count)
-              // partials and ONE final division combines them with the
-              // metadata partials — the evaluator's own shape.
-              val restricted = rel.copy(table = gt.restrictedTo(bnd))
-              val innerChild =
-                cond.map(Filter(_, restricted)).getOrElse(restricted)
-              if (!isAvg) {
-                val inner = Alias(ae, "boundary_sum")()
-                Some(Project(Seq(Alias(
-                  Add(Coalesce(Seq(inner.toAttribute,
-                    Literal(0.0, DoubleType))), Literal(total, DoubleType)),
-                  alias.name)(exprId = alias.exprId)),
-                  Aggregate(Nil, Seq(inner), innerChild)))
-              } else {
-                val bSum = Alias(AggregateExpression(Sum(attr),
-                  Complete, isDistinct = false), "boundary_sum")()
-                // Count(attr), not Count(*): exactly Average's non-null
-                // semantics (grid values are non-null by construction,
-                // but stay aligned with the evaluator regardless)
-                val bCnt = Alias(AggregateExpression(Count(Seq(attr)),
-                  Complete, isDistinct = false), "boundary_cnt")()
-                Some(Project(Seq(Alias(Divide(
-                  Add(Coalesce(Seq(bSum.toAttribute,
-                    Literal(0.0, DoubleType))), Literal(total, DoubleType)),
-                  Cast(Add(bCnt.toAttribute, Literal(rows)), DoubleType)),
-                  alias.name)(exprId = alias.exprId)),
-                  Aggregate(Nil, Seq(bSum, bCnt), innerChild)))
-              }
-            } else None // nothing saved: keep the normal pruned scan
-          case _ => None
-        }
+      attr: AttributeReference, isAvg: Boolean): Option[LogicalPlan] =
+    agg.child match {
+      case GridRelation(conds, rel, gt) =>
+        val groupVars = gt.store.schema.vars.filter(_.dims == gt.groupDims)
+        if (!groupVars.exists(_.name == attr.name)) return None
+        val cond = conds.reduceOption(And)
+        val translated = cond.map(FilterInterop.translate)
+        if (translated.exists(_.isEmpty)) return None // untranslatable
+        val pidx = new GridPlanIndex(gt.store, gt.groupDims, gt.chunks,
+          groupVars, Nil)
+        // inside blocks without a recorded sum (non-finite values) are
+        // boundary blocks: the real aggregate propagates NaN/Inf
+        val (inside, bnd) = pidx.metadataSplit(translated.flatten)(ci =>
+          gt.store.varSums(attr.name, pidx.slices(ci))
+            .map(_ -> pidx.fullRows(ci)))
+        val total = inside.map(_._1).sum
+        val rows = inside.map(_._2).sum // row count behind the metadata sums
+        if (bnd.isEmpty) {
+          // fully metadata-decidable; zero included rows => NULL
+          // (AVG divides the metadata sums by the exact metadata
+          // row count — the same one final double division the
+          // normal Average evaluator performs)
+          val v: Any =
+            if (inside.isEmpty) null
+            else if (isAvg) total / rows.toDouble
+            else total
+          Some(LocalRelation(Seq(alias.toAttribute),
+            Seq(new GenericInternalRow(Array[Any](v)): InternalRow)))
+        } else if (inside.nonEmpty) {
+          // metadata sums for included chunks + a real aggregate
+          // over ONLY the boundary chunks; COALESCE because an
+          // empty boundary result must not null out the metadata
+          // part. For AVG the boundary contributes (sum, count)
+          // partials and ONE final division combines them with the
+          // metadata partials — the evaluator's own shape.
+          val restricted = rel.copy(table = gt.restrictedTo(bnd))
+          val innerChild =
+            cond.map(Filter(_, restricted)).getOrElse(restricted)
+          if (!isAvg) {
+            val inner = Alias(ae, "boundary_sum")()
+            Some(Project(Seq(Alias(
+              Add(Coalesce(Seq(inner.toAttribute,
+                Literal(0.0, DoubleType))), Literal(total, DoubleType)),
+              alias.name)(exprId = alias.exprId)),
+              Aggregate(Nil, Seq(inner), innerChild)))
+          } else {
+            val bSum = Alias(AggregateExpression(Sum(attr),
+              Complete, isDistinct = false), "boundary_sum")()
+            // Count(attr), not Count(*): exactly Average's non-null
+            // semantics (grid values are non-null by construction,
+            // but stay aligned with the evaluator regardless)
+            val bCnt = Alias(AggregateExpression(Count(Seq(attr)),
+              Complete, isDistinct = false), "boundary_cnt")()
+            Some(Project(Seq(Alias(Divide(
+              Add(Coalesce(Seq(bSum.toAttribute,
+                Literal(0.0, DoubleType))), Literal(total, DoubleType)),
+              Cast(Add(bCnt.toAttribute, Literal(rows)), DoubleType)),
+              alias.name)(exprId = alias.exprId)),
+              Aggregate(Nil, Seq(bSum, bCnt), innerChild)))
+          }
+        } else None // nothing saved: keep the normal pruned scan
       case _ => None
     }
-  }
 }

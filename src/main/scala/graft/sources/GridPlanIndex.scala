@@ -172,7 +172,8 @@ final class GridPlanIndex(
     * plus per-chunk variable statistics for `vars` — O(n_dims + |vars|),
     * no coordinate access.
     */
-  def boundsMap(idx: Array[Int], vars: Seq[VarDef]): Map[String, DimBounds] = {
+  private def boundsMap(idx: Array[Int],
+      vars: Seq[VarDef]): Map[String, DimBounds] = {
     val b = Map.newBuilder[String, DimBounds]
     var di = 0
     while (di < nd) {
@@ -188,12 +189,37 @@ final class GridPlanIndex(
     b.result()
   }
 
-  /** Every block of the grid (no pruning), C-order — last dim fastest,
-    * matching `ChunkGrid.blocks`. The returned array is reused between
-    * iterations; clone to retain.
+  /** One walk that gives every block its zone-map verdict under `f`
+    * (None: no predicate, so every block is inside) — the metadata
+    * rewrites' chunk classification:
+    *   - excluded: bounds prove no row passes; the block drops;
+    *   - inside: bounds prove every row passes; `answer` serves it from
+    *     metadata, its results come back first;
+    *   - boundary: the rest, straddling blocks and inside blocks
+    *     `answer` refuses, come back second as the slices a restricted
+    *     scan (`GridTable.restrictedTo`) reads.
     */
-  def allBlockIdx: Iterator[Array[Int]] = odometer(
-    Array.tabulate(nd)(di => Array.range(0, dimChunks(di).length)))
+  def metadataSplit[A](f: Option[Filter])(answer: Array[Int] => Option[A])
+      : (Seq[A], Seq[Seq[(Int, Int)]]) = {
+    val refVars =
+      groupVars.filter(v => f.exists(_.references.contains(v.name)))
+    val inside = Seq.newBuilder[A]
+    val boundary = Seq.newBuilder[Seq[(Int, Int)]]
+    // every block, unpruned, C-order; `ci` is reused between blocks
+    val all = Array.tabulate(nd)(di => Array.range(0, dimChunks(di).length))
+    odometer(all).foreach { ci =>
+      val bounds = if (f.isEmpty) Map.empty[String, DimBounds]
+        else boundsMap(ci, refVars)
+      if (f.exists(ZoneMapPruning.excludes(_, bounds))) ()
+      else if (f.forall(ZoneMapPruning.includes(_, bounds)))
+        answer(ci) match {
+          case Some(a) => inside += a
+          case None => boundary += slices(ci)
+        }
+      else boundary += slices(ci)
+    }
+    (inside.result(), boundary.result())
+  }
 
   /** Chunk-index tuples of the blocks that survive pruning, C-order.
     *

@@ -384,31 +384,29 @@ class MetaAggScan(store: GridStore, chunks: Map[String, Int],
     }
   }
 
-  // Spark-internal representation of coordinate i of `dim` (UTF8String
-  // for string axes; micros already ARE the internal long forms)
-  private def coordInternal(dim: String, i: Int): Any =
-    store.schema.dim(dim).coords match {
-      case DoubleCoords(v) => v(i)
-      case FloatCoords(v) => v(i)
-      case IntCoords(v) => v(i)
-      case LongCoords(v) => v(i)
-      case TimeCoords(v) => v(i)
-      case DurationCoords(v) => v(i)
-      case StringCoords(v) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(v(i))
-    }
+  /** Result row count: one per surviving group (none when no cell
+    * matches), one for a global aggregate. A capped fold, not a raw
+    * product: past 2^20 it stops multiplying, so enough huge axes
+    * cannot overflow a Long back under a caller's cap.
+    */
+  private[graft] def groupCount: Long =
+    if (groupBy.isEmpty) 1L
+    else if (totalCount == 0L) 0L
+    else groupBy.map(d => surviving(d).length.toLong).foldLeft(1L)(
+      (acc, n) => if (acc > (1L << 20)) acc else acc * n)
 
   /** All result rows (group keys ++ aggregates), driver-computed from
     * coordinate metadata only. Global aggregate = the empty-group case.
     */
-  private lazy val rows: Array[Array[Any]] = {
+  private[graft] lazy val rows: Array[Array[Any]] = {
+    def coord(d: String, i: Int): Any = store.schema.dim(d).coords.internal(i)
     def aggValues(groupIdx: Map[String, Int]): Array[Any] = aggs.map {
       case MetaCountStar =>
         (if (groupBy.isEmpty) totalCount else groupCellCount): java.lang.Long
       case MetaMinDim(d) => groupIdx.get(d)
-        .map(coordInternal(d, _)).getOrElse(coordExtreme(d, wantMax = false))
+        .map(coord(d, _)).getOrElse(coordExtreme(d, wantMax = false))
       case MetaMaxDim(d) => groupIdx.get(d)
-        .map(coordInternal(d, _)).getOrElse(coordExtreme(d, wantMax = true))
+        .map(coord(d, _)).getOrElse(coordExtreme(d, wantMax = true))
     }.toArray
     if (groupBy.isEmpty) Array(aggValues(Map.empty))
     else if (totalCount == 0L) Array.empty // no rows -> no groups
@@ -419,7 +417,7 @@ class MetaAggScan(store: GridStore, chunks: Map[String, Int],
           acc.flatMap(prefix => idxs.map(prefix :+ _)))
         .map { combo =>
           val gi = groupBy.zip(combo).toMap
-          groupBy.zip(combo).map { case (d, i) => coordInternal(d, i) }
+          groupBy.zip(combo).map { case (d, i) => coord(d, i) }
             .toArray ++ aggValues(gi)
         }.toArray
     }

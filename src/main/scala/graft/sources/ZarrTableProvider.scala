@@ -35,9 +35,10 @@ import scala.jdk.CollectionConverters._
   * (version auto-detected, consolidated metadata preferred), partitions
   * by the store's own chunk grid, and serves the same pruning /
   * projection / metadata-aggregate scan as the registered path
-  * ([[GridTable]]). By default the table exposes the dimension group of
-  * the first (name-sorted) data variable; `dims` selects another group
-  * on multi-group datasets. The reference's analog is its SQL-context
+  * ([[GridTable]]); the metadata COUNT/SUM/AVG/DISTINCT rewrites fire
+  * on both alike ([[GridRelation]] resolves either). By default the
+  * table exposes the dimension group of the first (name-sorted) data
+  * variable; `dims` selects another group on multi-group datasets. The reference's analog is its SQL-context
   * dataset registration (xarray_sql/sql.py:105-125) — this surface cuts
   * the context out entirely.
   *
@@ -90,7 +91,13 @@ class ZarrTable(options: CaseInsensitiveStringMap,
     providedSchema: StructType)
   extends Table with SupportsRead with SupportsWrite {
 
-  private lazy val resolved = ZarrTableProvider.resolve(options)
+  /** The read side: this tree's dim group as a [[GridTable]], resolved
+    * once per table — the scan and [[GridRelation]] share it.
+    */
+  private[sources] lazy val grid: GridTable = {
+    val (store, chunks, groupDims) = ZarrTableProvider.resolve(options)
+    new GridTable(name(), store, chunks, groupDims)
+  }
 
   override def name(): String = s"zarr:${options.get("path")}"
 
@@ -102,10 +109,8 @@ class ZarrTable(options: CaseInsensitiveStringMap,
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE).asJava
 
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    val (store, chunks, groupDims) = resolved
-    new GridTable(name(), store, chunks, groupDims).newScanBuilder(opts)
-  }
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
+    grid.newScanBuilder(opts)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {

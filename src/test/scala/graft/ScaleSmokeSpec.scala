@@ -3,7 +3,6 @@ package graft
 import graft.grid._
 import graft.sources.ReadCounters
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke over a 10^7-cell grid (the reference's `large_ds` scale,
@@ -92,67 +91,56 @@ class ScaleSmokeSpec extends SparkTestBase {
   }
 
   test("GraftExtensions registers SQL-callable native functions") {
-    // a fresh session picks up the extensions; the shared context is reused
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val dot = s2.sql(
-        "SELECT dot_f64(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
-        .collect()(0).getDouble(0)
-      assert(dot == 11.0)
-      val mh = s2.sql(
-        "SELECT minhash_md5(array('a','b','c'), '2') AS sig")
-        .collect()(0).getSeq[String](0)
-      assert(mh.length == 2 && mh.forall(_.length == 8))
-      val ct = s2.sql(
-        "SELECT cftime('2000-07-01', 'days since 2000-01-01', '360_day') AS o")
+    // a second session picks up the extensions; the shared context is reused
+    val s2 = SparkTestBase.withExtensions
+    val dot = s2.sql(
+      "SELECT dot_f64(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
+      .collect()(0).getDouble(0)
+    assert(dot == 11.0)
+    val mh = s2.sql(
+      "SELECT minhash_md5(array('a','b','c'), '2') AS sig")
+      .collect()(0).getSeq[String](0)
+    assert(mh.length == 2 && mh.forall(_.length == 8))
+    val ct = s2.sql(
+      "SELECT cftime('2000-07-01', 'days since 2000-01-01', '360_day') AS o")
+      .collect()(0).getLong(0)
+    assert(ct == 180L)
+    val ws = s2.sql(
+      "SELECT word_shingles(array('a','b','c','d'), '3') AS sh")
+      .collect()(0).getSeq[String](0)
+    assert(ws == Seq("a b c", "b c d"))
+    // non-literal / NULL parameter args fail with messages that name
+    // the argument and say what IS accepted
+    val eNull = intercept[Exception](
+      s2.sql("SELECT minhash_md5(array('a'), NULL)").collect())
+    assert(eNull.getMessage.contains("'k'") &&
+      eNull.getMessage.contains("non-NULL literal"), eNull.getMessage)
+    val eCol = intercept[Exception](s2.sql(
+      "SELECT word_shingles(array(w), id + 1) FROM " +
+        "(SELECT 'x' AS w, 2 AS id)").collect())
+    assert(eCol.getMessage.contains("'n'") &&
+      eCol.getMessage.contains("literal constant"), eCol.getMessage)
+    val sh64 = s2.sql(
+      "SELECT simhash64(array('a', 'b')) AS h").collect()(0).getLong(0)
+    val sh64Native = {
+      import org.apache.spark.sql.functions.{array, lit => slit}
+      s2.range(1).select(graft.functions.SimHash64
+        .simhash64(array(slit("a"), slit("b"))).as("h"))
         .collect()(0).getLong(0)
-      assert(ct == 180L)
-      val ws = s2.sql(
-        "SELECT word_shingles(array('a','b','c','d'), '3') AS sh")
-        .collect()(0).getSeq[String](0)
-      assert(ws == Seq("a b c", "b c d"))
-      // non-literal / NULL parameter args fail with messages that name
-      // the argument and say what IS accepted
-      val eNull = intercept[Exception](
-        s2.sql("SELECT minhash_md5(array('a'), NULL)").collect())
-      assert(eNull.getMessage.contains("'k'") &&
-        eNull.getMessage.contains("non-NULL literal"), eNull.getMessage)
-      val eCol = intercept[Exception](s2.sql(
-        "SELECT word_shingles(array(w), id + 1) FROM " +
-          "(SELECT 'x' AS w, 2 AS id)").collect())
-      assert(eCol.getMessage.contains("'n'") &&
-        eCol.getMessage.contains("literal constant"), eCol.getMessage)
-      val sh64 = s2.sql(
-        "SELECT simhash64(array('a', 'b')) AS h").collect()(0).getLong(0)
-      val sh64Native = {
-        import org.apache.spark.sql.functions.{array, lit => slit}
-        s2.range(1).select(graft.functions.SimHash64
-          .simhash64(array(slit("a"), slit("b"))).as("h"))
-          .collect()(0).getLong(0)
-      }
-      assert(sh64 == sh64Native, "SQL simhash64 != native column form")
-      val cd = s2.sql(
-        """SELECT k, capped_distinct_longs(v, '2') AS ids
-          |FROM VALUES ('a', 1L), ('a', 2L), ('a', 1L),
-          |            ('b', 1L), ('b', 2L), ('b', 3L) AS t(k, v)
-          |GROUP BY k ORDER BY k""".stripMargin).collect()
-      assert(cd(0).getSeq[Long](1) == Seq(1L, 2L))
-      assert(cd(1).isNullAt(1), "3 distinct past cap 2 must be NULL")
-      val mg = s2.sql(
-        """SELECT misra_gries(t, '4') AS mg
-          |FROM VALUES ('x'), ('x'), ('x'), ('y') AS v(t)""".stripMargin)
-        .collect()(0).getSeq[String](0)
-      assert(mg.toSet == Set("x", "y"), s"SQL misra_gries: $mg")
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
+    assert(sh64 == sh64Native, "SQL simhash64 != native column form")
+    val cd = s2.sql(
+      """SELECT k, capped_distinct_longs(v, '2') AS ids
+        |FROM VALUES ('a', 1L), ('a', 2L), ('a', 1L),
+        |            ('b', 1L), ('b', 2L), ('b', 3L) AS t(k, v)
+        |GROUP BY k ORDER BY k""".stripMargin).collect()
+    assert(cd(0).getSeq[Long](1) == Seq(1L, 2L))
+    assert(cd(1).isNullAt(1), "3 distinct past cap 2 must be NULL")
+    val mg = s2.sql(
+      """SELECT misra_gries(t, '4') AS mg
+        |FROM VALUES ('x'), ('x'), ('x'), ('y') AS v(t)""".stripMargin)
+      .collect()(0).getSeq[String](0)
+    assert(mg.toSet == Set("x", "y"), s"SQL misra_gries: $mg")
   }
 }
 

@@ -14,6 +14,26 @@ object SparkTestBase {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.adaptive.enabled", "true")
     .getOrCreate()
+
+  /** A second session on the shared context with [[GraftExtensions]]
+    * installed — graft's optimizer rules and SQL functions, which the
+    * shared session lacks. The shared session stays the active and
+    * default one.
+    */
+  lazy val withExtensions: SparkSession = {
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = SparkSession.builder()
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    SparkSession.setActiveSession(shared)
+    SparkSession.setDefaultSession(shared)
+    s
+  }
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
@@ -22,4 +42,8 @@ abstract class SparkTestBase extends AnyFunSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` once per read surface, failures labelled with it. */
+  def onBothSurfaces(body: GridSurface => Unit): Unit =
+    GridSurface.both.foreach(s => withClue(s"[$s] ")(body(s)))
 }

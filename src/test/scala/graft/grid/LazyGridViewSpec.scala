@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.{SparkTestBase, XarrayContext}
+import graft.{GridSurface, SparkTestBase, XarrayContext}
 import graft.functions.RollingFingerprint
 import graft.operators.SkewOps
 import graft.sources.ReadCounters
@@ -107,28 +107,30 @@ class LazyGridViewSpec extends SparkTestBase {
     // airSmall's lat axis DESCENDS (75 -> 50): the store fast path
     // preserves that order, discovery sorts ascending — an observable
     // discriminator for which strategy auto picked
-    val store = Fixtures.airSmall
-    val df = ctx.dataFrame("lazyauto", store, Map("time" -> 6),
-      Seq("time", "lat", "lon"))
-    val pure = LazyGridView.auto(df, Seq("time", "lat", "lon"), Seq("air"))
-    assert(pure.shape == Seq(12, 11, 10))
-    val latsPure = pure.select(Map("time" -> LazyGridView.Point(0)))
-      .dims.find(_._1 == "lat").get._2.map(_.asInstanceOf[Double])
-    assert(latsPure.head == 75.0 && latsPure.last == 50.0,
-      s"store order not preserved: $latsPure")
-    // an attribute-only projection is still a pure scan
-    val projected = LazyGridView.auto(df.select("time", "lat", "lon", "air"),
-      Seq("time", "lat", "lon"), Seq("air"))
-    assert(projected.shape == Seq(12, 11, 10))
-    // a filter is NOT: discovery reflects the filtered extents
-    // (sparsity='result') and sorts ascending
-    val filtered = LazyGridView.auto(df.filter(col("lat") > 60.0),
-      Seq("time", "lat", "lon"), Seq("air"))
-    val lats = filtered.select(Map("time" -> LazyGridView.Point(0)))
-      .dims.find(_._1 == "lat").get._2.map(_.asInstanceOf[Double])
-    assert(lats.forall(_ > 60.0) && lats == lats.sorted,
-      s"discovery extents wrong: $lats")
-    assert(filtered.shape(1) == lats.size && lats.size < 11)
+    val tree = GridSurface.tree(Fixtures.airSmall, Map("time" -> 6))
+    onBothSurfaces { s =>
+      val df = s.read(spark, tree, Seq("time", "lat", "lon"))
+      val pure = LazyGridView.auto(df, Seq("time", "lat", "lon"), Seq("air"))
+      assert(pure.shape == Seq(12, 11, 10))
+      val latsPure = pure.select(Map("time" -> LazyGridView.Point(0)))
+        .dims.find(_._1 == "lat").get._2.map(_.asInstanceOf[Double])
+      assert(latsPure.head == 75.0 && latsPure.last == 50.0,
+        s"store order not preserved: $latsPure")
+      // an attribute-only projection is still a pure scan
+      val projected = LazyGridView.auto(
+        df.select("time", "lat", "lon", "air"), Seq("time", "lat", "lon"),
+        Seq("air"))
+      assert(projected.shape == Seq(12, 11, 10))
+      // a filter is NOT: discovery reflects the filtered extents
+      // (sparsity='result') and sorts ascending
+      val filtered = LazyGridView.auto(df.filter(col("lat") > 60.0),
+        Seq("time", "lat", "lon"), Seq("air"))
+      val lats = filtered.select(Map("time" -> LazyGridView.Point(0)))
+        .dims.find(_._1 == "lat").get._2.map(_.asInstanceOf[Double])
+      assert(lats.forall(_ > 60.0) && lats == lats.sorted,
+        s"discovery extents wrong: $lats")
+      assert(filtered.shape(1) == lats.size && lats.size < 11)
+    }
   }
 
   test("salted aggregation equals direct groupBy on a skewed key") {

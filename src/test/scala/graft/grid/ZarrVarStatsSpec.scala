@@ -88,32 +88,15 @@ class ZarrVarStatsSpec extends SparkTestBase {
     assert(store.varSums("temperature", Seq((0, 25), (0, 5))).nonEmpty)
     // the SUM rewrite is an injected optimizer rule — needs a session
     // built with GraftExtensions (the shared test session has none)
-    spark // force the shared context first
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val session = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    try {
-      val df = new XarrayContext(session).dataFrame(s"zvsum@$root", store,
-        Map("time" -> 25), Seq("time", "lat"))
-      ReadCounters.reset()
-      val s = df.agg(sum("temperature")).collect().head.getDouble(0)
-      val expect = (for (t <- 0 until 100; i <- 0 until 5)
-        yield t * 10.0 + i).sum
-      assert(s == expect)
-      assert(ReadCounters.varReadCount("temperature") == 0L)
-      assert(ReadCounters.partitionsOpened.sum() == 0L)
-    } finally {
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
-    }
+    val df = new XarrayContext(SparkTestBase.withExtensions).dataFrame(
+      s"zvsum@$root", store, Map("time" -> 25), Seq("time", "lat"))
+    ReadCounters.reset()
+    val s = df.agg(sum("temperature")).collect().head.getDouble(0)
+    val expect = (for (t <- 0 until 100; i <- 0 until 5)
+      yield t * 10.0 + i).sum
+    assert(s == expect)
+    assert(ReadCounters.varReadCount("temperature") == 0L)
+    assert(ReadCounters.partitionsOpened.sum() == 0L)
   }
 
   test("row-scatter writes record stats; append merges the edge entry") {

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{GraftExtensions, SparkTestBase, XarrayContext}
+import graft.{GridSurface, SparkTestBase}
 import graft.grid.Fixtures
 import graft.sources.ReadCounters
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,25 +15,14 @@ import org.apache.spark.sql.functions._
   */
 class MetadataDistinctRuleSpec extends SparkTestBase {
 
-  private lazy val session: SparkSession = {
-    spark // force the shared context first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  private lazy val session: SparkSession = SparkTestBase.withExtensions
 
-  private lazy val df: DataFrame = {
-    val ctx = new XarrayContext(session)
-    // pruneGrid: 100 days x 5 lats (-90, -45, 0, 45, 90), 4 time chunks
-    ctx.dataFrame("metadistinct", Fixtures.pruneGrid,
-      Map("time" -> 25), Seq("time", "lat"))
-  }
+  // pruneGrid: 100 days x 5 lats (-90, -45, 0, 45, 90), 4 time chunks
+  private lazy val pruneTree = GridSurface.tree(Fixtures.pruneGrid,
+    Map("time" -> 25))
+
+  private def df(s: GridSurface): DataFrame =
+    s.read(session, pruneTree, Seq("time", "lat"))
 
   private def scanless(q: DataFrame): Boolean =
     q.queryExecution.optimizedPlan.collect {
@@ -41,101 +30,118 @@ class MetadataDistinctRuleSpec extends SparkTestBase {
     }.isEmpty
 
   test("DISTINCT dim is a LocalRelation: no scan, no Exchange, zero partitions") {
-    ReadCounters.reset()
-    val q = df.select("lat").distinct()
-    assert(scanless(q), s"expected no scan:\n${q.queryExecution.optimizedPlan}")
-    // the whole spine subtree is a LocalRelation: no Exchange either
-    val exchanges = q.queryExecution.executedPlan.collect {
-      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    onBothSurfaces { s =>
+      ReadCounters.reset()
+      val q = df(s).select("lat").distinct()
+      assert(scanless(q),
+        s"expected no scan:\n${q.queryExecution.optimizedPlan}")
+      // the whole spine subtree is a LocalRelation: no Exchange either
+      val exchanges = q.queryExecution.executedPlan.collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }
+      assert(exchanges.isEmpty,
+        s"spine must not shuffle:\n${q.queryExecution.executedPlan}")
+      val got = q.collect().map(_.getDouble(0)).sorted.toSeq
+      assert(got == Seq(-90.0, -45.0, 0.0, 45.0, 90.0))
+      assert(ReadCounters.partitionsOpened.sum() == 0L,
+        s"opened ${ReadCounters.partitionsOpened.sum()}")
     }
-    assert(exchanges.isEmpty,
-      s"spine must not shuffle:\n${q.queryExecution.executedPlan}")
-    val got = q.collect().map(_.getDouble(0)).sorted.toSeq
-    assert(got == Seq(-90.0, -45.0, 0.0, 45.0, 90.0))
-    assert(ReadCounters.partitionsOpened.sum() == 0L,
-      s"opened ${ReadCounters.partitionsOpened.sum()}")
   }
 
   test("two-dim DISTINCT is the coordinate cross product, still scanless") {
-    ReadCounters.reset()
-    val q = df.select("time", "lat").distinct()
-    assert(scanless(q))
-    // collect() keeps the rewritten plan (a count() would re-plan the
-    // shape as count(DISTINCT ...) over the scan, which the rule
-    // rightly leaves alone)
-    val rows = q.collect().map(r => (r.getTimestamp(0), r.getDouble(1)))
-    assert(rows.length == 500 && rows.distinct.length == 500)
-    assert(rows.count(_._2 == 45.0) == 100)
-    assert(ReadCounters.partitionsOpened.sum() == 0L)
+    onBothSurfaces { s =>
+      ReadCounters.reset()
+      val q = df(s).select("time", "lat").distinct()
+      assert(scanless(q))
+      // collect() keeps the rewritten plan (a count() would re-plan the
+      // shape as count(DISTINCT ...) over the scan, which the rule
+      // rightly leaves alone)
+      val rows = q.collect().map(r => (r.getTimestamp(0), r.getDouble(1)))
+      assert(rows.length == 500 && rows.distinct.length == 500)
+      assert(rows.count(_._2 == 45.0) == 100)
+      assert(ReadCounters.partitionsOpened.sum() == 0L)
+    }
   }
 
   test("separable dim filter restricts the spine; emptying filter empties it") {
-    ReadCounters.reset()
-    val got = df.filter(col("lat") > 0.0).select("lat").distinct()
-      .collect().map(_.getDouble(0)).sorted.toSeq
-    assert(got == Seq(45.0, 90.0))
-    // a filter on ANOTHER dim that empties the table empties the spine
-    val none = df.filter(col("time") > to_timestamp(lit("2099-01-01")))
-      .select("lat").distinct()
-    assert(scanless(none) && none.count() == 0L)
-    assert(ReadCounters.partitionsOpened.sum() == 0L)
+    onBothSurfaces { s =>
+      ReadCounters.reset()
+      val got = df(s).filter(col("lat") > 0.0).select("lat").distinct()
+        .collect().map(_.getDouble(0)).sorted.toSeq
+      assert(got == Seq(45.0, 90.0))
+      // a filter on ANOTHER dim that empties the table empties the spine
+      val none = df(s).filter(col("time") > to_timestamp(lit("2099-01-01")))
+        .select("lat").distinct()
+      assert(scanless(none) && none.count() == 0L)
+      assert(ReadCounters.partitionsOpened.sum() == 0L)
+    }
   }
 
   test("data-variable filter or projection bails to the scan, stays exact") {
-    // predicate on a data variable: not metadata-answerable
-    ReadCounters.reset()
-    val got = df.filter(col("temperature") >= 800.0).select("lat")
-      .distinct().collect().map(_.getDouble(0)).toSet
-    assert(got.nonEmpty)
-    assert(ReadCounters.partitionsOpened.sum() > 0L,
-      "a data-variable predicate must scan")
-    // DISTINCT over a data variable: never rewritten
-    ReadCounters.reset()
-    assert(df.select("temperature").distinct().count() > 0L)
-    assert(ReadCounters.partitionsOpened.sum() > 0L)
+    onBothSurfaces { s =>
+      // predicate on a data variable: not metadata-answerable
+      ReadCounters.reset()
+      val got = df(s).filter(col("temperature") >= 800.0).select("lat")
+        .distinct().collect().map(_.getDouble(0)).toSet
+      assert(got.nonEmpty)
+      assert(ReadCounters.partitionsOpened.sum() > 0L,
+        "a data-variable predicate must scan")
+      // DISTINCT over a data variable: never rewritten
+      ReadCounters.reset()
+      assert(df(s).select("temperature").distinct().count() > 0L)
+      assert(ReadCounters.partitionsOpened.sum() > 0L)
+    }
   }
 
   test("the selnearest spine shape plans without any grid scan") {
-    import session.implicits._
-    ReadCounters.reset()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q").orderBy("dist", "lat")
-    val nearest = Seq(-50.0, 10.0).toDF("q")
-      .crossJoin(df.select("lat").distinct())
-      .select(col("q"), col("lat"), abs(col("lat") - col("q")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).select("q", "lat")
-    assert(scanless(nearest),
-      s"spine subtree must not scan:\n${nearest.queryExecution.optimizedPlan}")
-    val got = nearest.collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    assert(got == Map(-50.0 -> -45.0, 10.0 -> 0.0))
-    assert(ReadCounters.partitionsOpened.sum() == 0L)
+    onBothSurfaces { s =>
+      import session.implicits._
+      ReadCounters.reset()
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("q").orderBy("dist", "lat")
+      val nearest = Seq(-50.0, 10.0).toDF("q")
+        .crossJoin(df(s).select("lat").distinct())
+        .select(col("q"), col("lat"), abs(col("lat") - col("q")).as("dist"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).select("q", "lat")
+      assert(scanless(nearest),
+        "spine subtree must not scan:\n" +
+          nearest.queryExecution.optimizedPlan)
+      val got = nearest.collect()
+        .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+      assert(got == Map(-50.0 -> -45.0, 10.0 -> 0.0))
+      assert(ReadCounters.partitionsOpened.sum() == 0L)
+    }
   }
 
   test("repeated output column bails (the value repeats, the axis does not)") {
-    val q = df.select(col("lat"), col("lat").as("lat"))
-    val dd = q.distinct()
-    // 5 rows, never 25: either the rule bailed (scan) or — if a future
-    // change rewrites it — the cross product must not square
-    assert(dd.count() == 5L)
+    onBothSurfaces { s =>
+      val q = df(s).select(col("lat"), col("lat").as("lat"))
+      val dd = q.distinct()
+      // 5 rows, never 25: either the rule bailed (scan) or — if a future
+      // change rewrites it — the cross product must not square
+      assert(dd.count() == 5L)
+    }
   }
 
   test("STRING-dim DISTINCT: UTF8String coords, filtered, scanless") {
-    val ctx = new XarrayContext(session)
     // stationGrid: 8 string stations x 10 timestamps
-    val sg = ctx.dataFrame("metadistinct_str", Fixtures.stationGrid,
-      Map("time" -> 5), Seq("station", "time"))
-    ReadCounters.reset()
-    val q = sg.select("station").distinct()
-    assert(scanless(q), s"expected no scan:\n${q.queryExecution.optimizedPlan}")
-    val got = q.collect().map(_.getString(0)).sorted.toSeq
-    assert(got == (0 until 8).map(i => s"st_$i"))
-    // separable string predicate restricts the spine (UTF-8 binary
-    // order, the Utf8Order contract)
-    val f = sg.filter(col("station") >= "st_5").select("station")
-      .distinct().collect().map(_.getString(0)).sorted.toSeq
-    assert(f == Seq("st_5", "st_6", "st_7"))
-    assert(ReadCounters.partitionsOpened.sum() == 0L,
-      s"opened ${ReadCounters.partitionsOpened.sum()}")
+    val store = GridSurface.tree(Fixtures.stationGrid, Map("time" -> 5))
+    onBothSurfaces { s =>
+      val sg = s.read(session, store, Seq("station", "time"))
+      ReadCounters.reset()
+      val q = sg.select("station").distinct()
+      assert(scanless(q),
+        s"expected no scan:\n${q.queryExecution.optimizedPlan}")
+      val got = q.collect().map(_.getString(0)).sorted.toSeq
+      assert(got == (0 until 8).map(i => s"st_$i"))
+      // separable string predicate restricts the spine (UTF-8 binary
+      // order, the Utf8Order contract)
+      val f = sg.filter(col("station") >= "st_5").select("station")
+        .distinct().collect().map(_.getString(0)).sorted.toSeq
+      assert(f == Seq("st_5", "st_6", "st_7"))
+      assert(ReadCounters.partitionsOpened.sum() == 0L,
+        s"opened ${ReadCounters.partitionsOpened.sum()}")
+    }
   }
 }
