@@ -1,8 +1,11 @@
 package graft
 
 import graft.grid.{ChunkGrid, GridStore, VarDef, ZarrGridStore}
-import graft.sources.GridSource
+import graft.sources.GridTable
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftinterop.PlanInterop
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** SQL-context façade over grid datasets — the Spark analogue of the
   * reference's `XarrayContext` (xarray_sql/sql.py:12-178).
@@ -103,28 +106,14 @@ class XarrayContext(val spark: SparkSession) {
       ChunkGrid.autoChunks(store.schema, budgetBytes, existing), tableNames)
   }
 
-  /** A DataFrame over one dim-group of the dataset, without registration. */
-  def dataFrame(key: String, store: GridStore, chunks: Map[String, Int],
-      groupDims: Seq[String]): DataFrame = {
-    GridSource.register(key, store, chunks, groupDims)
-    spark.read.format(GridSource.FORMAT).option("dataset", key).load()
-  }
-
-  /** [[dataFrame]] for throwaway per-invocation stores: the registry
-    * entry is dropped as soon as `load()` has captured the table, so
-    * unique scratch keys do not grow the registry for the life of the
-    * driver (partitions serialize the store itself; nothing consults
-    * the registry after load). The caller's key gets a per-invocation
-    * nonce: callers over STAGED (build-once) fixtures share the same
-    * human key, and without the nonce one invocation's unregister
-    * could land between a concurrent invocation's register and load.
+  /** A DataFrame over one dim-group of the dataset, without registration:
+    * a relation over its [[GridTable]] (`key` names the table).
     */
-  def scratchDataFrame(key: String, store: GridStore,
-      chunks: Map[String, Int], groupDims: Seq[String]): DataFrame = {
-    val k = key + "#" + java.util.UUID.randomUUID().toString.take(8)
-    try dataFrame(k, store, chunks, groupDims)
-    finally GridSource.unregister(k)
-  }
+  def dataFrame(key: String, store: GridStore, chunks: Map[String, Int],
+      groupDims: Seq[String]): DataFrame =
+    PlanInterop.ofRows(spark, DataSourceV2Relation.create(
+      new GridTable(key, store, chunks, groupDims), None, None,
+      CaseInsensitiveStringMap.empty))
 
   def sql(query: String): DataFrame = spark.sql(query)
 
@@ -142,7 +131,7 @@ class XarrayContext(val spark: SparkSession) {
       groupDims: Seq[String]): DataFrame = {
     require(parts.nonEmpty, "concat of zero stores")
     parts.zipWithIndex.map { case ((st, ch), i) =>
-      scratchDataFrame(s"$keyPrefix#$i", st, ch, groupDims)
+      dataFrame(s"$keyPrefix#$i", st, ch, groupDims)
     }.reduce(_ unionByName _)
   }
 

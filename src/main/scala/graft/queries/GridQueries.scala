@@ -183,7 +183,7 @@ object GridQueries {
         Map("a" -> Fixtures.AffineLaw(200.0, Seq(1.0, 2.0)),
           "b" -> Fixtures.QuadLaw(1.0)))
       new XarrayContext(s)
-        .scratchDataFrame("corr_grid", st, Map("t" -> 6), Seq("t", "lat"))
+        .dataFrame("corr_grid", st, Map("t" -> 6), Seq("t", "lat"))
         .groupBy("lat")
         .agg(count(lit(1)).cast("double").as("n"),
           sum(col("a")).as("sa"), sum(col("b")).as("sb"),
@@ -216,7 +216,7 @@ object GridQueries {
           Seq(VarDef("b", Seq("t", "lat"), GDouble))),
         Map("b" -> Fixtures.QuadLaw(1.0)))
       val g = new XarrayContext(s)
-        .scratchDataFrame("detrend_grid", st, Map("t" -> 6), Seq("t", "lat"))
+        .dataFrame("detrend_grid", st, Map("t" -> 6), Seq("t", "lat"))
         .select(col("t").cast("double").as("x"), col("lat"), col("b"))
       val coef = g.groupBy("lat")
         .agg(count(lit(1)).cast("double").as("n"),
@@ -613,18 +613,16 @@ object GridQueries {
       graft.grid.ZarrGridStore.write(Fixtures.linearGridSlice(0, 9),
         root, Map("t" -> 6), "zstd")
       val ctx = new XarrayContext(s)
-      // registry keys carry the unique store root (concurrent
-      // evaluations must not cross-resolve) and are dropped after load
       def append(lo: Int, hi: Int) = {
         val slab = Fixtures.linearGridSlice(lo, hi)
         graft.grid.ZarrGridStore.appendFromRows(
-          ctx.scratchDataFrame(s"append_slab@$root/$lo", slab,
+          ctx.dataFrame(s"append_slab@$root/$lo", slab,
             Map("t" -> 6), Seq("t", "lat", "lon")),
           slab.schema, root, "t")
       }
       append(9, 19)
       val appended = append(19, 24)
-      ctx.scratchDataFrame(s"append_grid@$root", appended, appended.chunkMap,
+      ctx.dataFrame(s"append_grid@$root", appended, appended.chunkMap,
         Seq("t", "lat", "lon"))
         .filter(col("t").between(8, 20))
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -697,7 +695,7 @@ object GridQueries {
           s"$base/store", Map("t" -> 6))) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"metasum_grid@$root", store, store.chunkMap,
+        .dataFrame(s"metasum_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t").between(3, 20))
         .agg(sum(col("air")).as("sum_air"))
@@ -713,7 +711,7 @@ object GridQueries {
           s"$base/store", Map("t" -> 6))) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"metamean_grid@$root", store, store.chunkMap,
+        .dataFrame(s"metamean_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t").between(3, 20))
         .agg(avg(col("air")).as("mean_air"))
@@ -725,7 +723,7 @@ object GridQueries {
           s"$base/store", Map("t" -> 6))) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"varstats_linear_grid@$root", store,
+        .dataFrame(s"varstats_linear_grid@$root", store,
           store.chunkMap, Seq("t", "lat", "lon"))
         .filter(col("air") >= 255.0)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -742,7 +740,7 @@ object GridQueries {
           s"$base/store", Map("t" -> 6), "zlib")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_varstats@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_varstats@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("air") >= 255.0)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -760,7 +758,7 @@ object GridQueries {
           s"$base/store", Map("time" -> 25), "zlib")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_strstats@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_strstats@$root", store, store.chunkMap,
           Seq("time", "lat"))
         .filter(col("grade") >= "g2" && col("grade").startsWith("g"))
         .select(col("time"), col("lat"), col("grade"))
@@ -915,7 +913,7 @@ object GridQueries {
           "zstd")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"disk_linear_grid@$root", store, store.chunkMap,
+        .dataFrame(s"disk_linear_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -951,7 +949,7 @@ object GridQueries {
         Fixtures.linearGrid.schema, Map("t" -> 6, "lat" -> 5), root,
         "zstd:3")
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_fromrows@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_fromrows@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -973,7 +971,7 @@ object GridQueries {
           s"$base/store", Map("t" -> 6, "lat" -> 5), "zlib")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_grid@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -991,7 +989,7 @@ object GridQueries {
           graft.grid.ZarrLayout.V3())) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_v3_grid@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_v3_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -1054,7 +1052,7 @@ object GridQueries {
       }
       val store = graft.grid.ZarrGridStore.open(root.toString)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_packed@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_packed@$root", store, store.chunkMap,
           Seq("t"))
         .select(col("t").cast("long").as("t"),
           when(isnan(col("v")), lit(null)).otherwise(col("v")).as("v"))
@@ -1071,7 +1069,7 @@ object GridQueries {
           graft.grid.ZarrLayout.V3(Map("t" -> 2, "lat" -> 5)))) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_shard_grid@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_shard_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -1087,7 +1085,7 @@ object GridQueries {
           s"$base/store", Map("t" -> 6, "lat" -> 5), "blosc")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_blosc_grid@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_blosc_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -1103,7 +1101,7 @@ object GridQueries {
           s"$base/store", Map("t" -> 6, "lat" -> 5), "blosc:blosclz:bit")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_blosclz_grid@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_blosclz_grid@$root", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -1162,7 +1160,7 @@ object GridQueries {
           graft.grid.ZarrLayout.V3())) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_vlen@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_vlen@$root", store, store.chunkMap,
           Seq("station", "time"))
         .filter(col("quality") =!= "bad" &&
           col("time") >= lit("2020-01-04").cast("timestamp"))
@@ -1179,7 +1177,7 @@ object GridQueries {
           s"$base/store", Map("station" -> 4, "time" -> 5), "zstd:3")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_vlen_v2@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_vlen_v2@$root", store, store.chunkMap,
           Seq("station", "time"))
         .filter(col("quality") =!= "bad" &&
           col("time") >= lit("2020-01-04").cast("timestamp"))
@@ -1198,7 +1196,7 @@ object GridQueries {
           graft.grid.ZarrLayout.V3(Map("station" -> 2)))) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"zarr_vlen_sh@$root", store, store.chunkMap,
+        .dataFrame(s"zarr_vlen_sh@$root", store, store.chunkMap,
           Seq("station", "time"))
         .filter(col("quality") =!= "bad" &&
           col("time") >= lit("2020-01-04").cast("timestamp"))
@@ -1263,7 +1261,7 @@ object GridQueries {
         Fixtures.writeM8Tree(s"$base/store")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"m8time@$root", store, store.chunkMap,
+        .dataFrame(s"m8time@$root", store, store.chunkMap,
           Seq("time"))
         .filter(col("time") >= lit("2021-01-01 12:00:00").cast("timestamp"))
         .select(col("time"), col("temp"))
@@ -1277,7 +1275,7 @@ object GridQueries {
         Fixtures.writeBoolMaskTree(s"$base/store")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"boolmask@$root", store, store.chunkMap,
+        .dataFrame(s"boolmask@$root", store, store.chunkMap,
           Seq("t"))
         .filter(col("mask") === 1)
         .agg(count(lit(1)).as("n_masked"),
@@ -1318,7 +1316,7 @@ object GridQueries {
         Fixtures.writeCfTimeVarTree(s"$base/store")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"cfvar@$root", store, store.chunkMap,
+        .dataFrame(s"cfvar@$root", store, store.chunkMap,
           Seq("t"))
         .filter(col("obs").isNull ||
           col("obs") < lit("2021-01-01 12:00:00").cast("timestamp"))
@@ -1345,7 +1343,7 @@ object GridQueries {
       val store = graft.grid.ZarrGridStore.writeFromRows(src, schema,
         Map("t" -> 6), root, "zstd:3")
       new XarrayContext(s)
-        .scratchDataFrame(s"m8write@$root", store, store.chunkMap,
+        .dataFrame(s"m8write@$root", store, store.chunkMap,
           Seq("t"))
         .filter(col("obs").isNull ||
           col("obs") < lit("2021-01-01 12:00:00").cast("timestamp"))
@@ -1361,7 +1359,7 @@ object GridQueries {
         Fixtures.writeM8NatTree(s"$base/store")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"m8nat@$root", store, store.chunkMap,
+        .dataFrame(s"m8nat@$root", store, store.chunkMap,
           Seq("time"))
         .filter(col("obs").isNull ||
           col("obs") < lit("2021-01-01 12:00:00").cast("timestamp"))
@@ -1376,7 +1374,7 @@ object GridQueries {
         Fixtures.writeU8Tree(s"$base/store")) + "/store"
       val store = graft.grid.ZarrGridStore.open(root)
       new XarrayContext(s)
-        .scratchDataFrame(s"u8@$root", store, store.chunkMap, Seq("i"))
+        .dataFrame(s"u8@$root", store, store.chunkMap, Seq("i"))
         .filter(col("i") >= 2)
         .select(col("i"), col("cnt"))
     }),
@@ -1395,7 +1393,7 @@ object GridQueries {
       val compact = new XarrayContext(s)
         .rechunk(frag, Map("t" -> 12), base + "/compact")
       new XarrayContext(s)
-        .scratchDataFrame(s"compact_grid@$base", compact, compact.chunkMap,
+        .dataFrame(s"compact_grid@$base", compact, compact.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -1429,13 +1427,8 @@ object GridQueries {
     }),
 
     "pivot_grid_concat" -> ((s, _) => {
-      // unique registry key prefix per evaluation: concurrent
-      // evaluations must not race register/unregister on shared keys
-      // (ConcurrentEvalSpec pins this)
-      val key = "concat_grid@" +
-        java.util.UUID.randomUUID().toString.take(8)
       new XarrayContext(s)
-        .concatDataFrame(key, Seq(
+        .concatDataFrame("concat_grid", Seq(
           (Fixtures.linearGridSlice(0, 12), Map("t" -> 6)),
           (Fixtures.linearGridSlice(12, 24), Map("t" -> 6))),
           Seq("t", "lat", "lon"))

@@ -127,21 +127,14 @@ class ConcatGridScan(scans: Seq[Scan]) extends Scan with Batch
   override def planInputPartitions(): Array[InputPartition] =
     scans.flatMap(_.toBatch.planInputPartitions()).toArray
 
+  // members are all grid scans or all metadata scans (`pushAggregation`
+  // is all-or-nothing), so the head speaks for every member: its reader
+  // factory serves every partition, in its read mode
   override def createReaderFactory(): PartitionReaderFactory =
-    // member factories are partition-driven (GridPartitionReaderFactory
-    // or the metadata-row reader); the first serves every member's
-    // partitions of the same scan kind
     scans.head.toBatch.createReaderFactory()
 
-  // row mode unless EVERY member plans pure columnar batches (Spark
-  // requires one mode per scan; the row reader serves any partition)
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (scans.forall {
-      case g: GridScan => g.columnarSupportMode() ==
-        Scan.ColumnarSupportMode.SUPPORTED
-      case _ => false
-    }) Scan.ColumnarSupportMode.SUPPORTED
-    else Scan.ColumnarSupportMode.UNSUPPORTED
+    scans.head.columnarSupportMode()
 
   override def estimateStatistics(): Statistics = {
     val memberStats = scans.collect {

@@ -81,7 +81,7 @@ class GridCatalog extends TableCatalog with SupportsNamespaces {
 
 object GridCatalog {
   /** (catalog, table) -> grid binding; instances are created reflectively
-    * by Spark, so the registry is driver-global like GridSource's.
+    * by Spark, so the registry is driver-global.
     */
   private val registry =
     new ConcurrentHashMap[String, (GridStore, Map[String, Int], Seq[String])]()

@@ -157,8 +157,8 @@ final class GridPlanIndex(
   }
 
   /** Per-dim RELATIVE surviving indices for shipping to the reader;
-    * Nil when every dim survives in full (the reader then iterates
-    * C-order without enumeration).
+    * Nil when every dim survives in full (the reader then copies the
+    * block as one run).
     */
   def relKeep(idx: Array[Int]): Seq[Array[Int]] =
     if (!anyPartial(idx)) Nil
@@ -184,9 +184,20 @@ final class GridPlanIndex(
     if (vars.nonEmpty) {
       val sl = slices(idx)
       vars.foreach(v => store.varBounds(v.name, sl)
-        .foreach(s => b += v.name -> GridBounds.fromVarStats(s)))
+        .foreach(s => b += v.name -> fromVarStats(s)))
     }
     b.result()
+  }
+
+  /** Store-reported variable stats -> pruning bounds (Long-boxed stats
+    * keep exact long/timestamp comparisons beyond 2^53).
+    */
+  private def fromVarStats(s: (Any, Any)): DimBounds = s match {
+    case (mn: java.lang.Long, mx: java.lang.Long) => LongBounds(mn, mx)
+    case (mn: java.lang.Number, mx: java.lang.Number) =>
+      NumBounds(mn.doubleValue(), mx.doubleValue())
+    case (mn: String, mx: String) => StrBounds(mn, mx)
+    case other => throw new IllegalArgumentException(s"bad var stats $other")
   }
 
   /** One walk that gives every block its zone-map verdict under `f`
@@ -223,7 +234,7 @@ final class GridPlanIndex(
 
   /** Chunk-index tuples of the blocks that survive pruning, C-order.
     *
-    * Two pruning layers, matching the legacy per-block walk exactly:
+    * Two pruning layers:
     *   - per-dim EXACT pruning: a chunk whose surviving coordinate list
     *     is empty removes every block through it (cross-product
     *     structure), which subsumes the zone-map check for separable

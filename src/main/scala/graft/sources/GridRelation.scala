@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** The one matcher that decides a logical plan reads an unrestricted
   * grid: aliases, attribute-only projections and filters over a
-  * [[DataSourceV2Relation]] whose table is a registered [[GridTable]]
+  * [[DataSourceV2Relation]] whose table is a [[GridTable]]
   * or a `format("zarr")` [[ZarrTable]] (resolved to its grid once per
   * table). Both read surfaces therefore get every metadata rewrite
   * (`graft.plans.Metadata*Rule`) and the lazy view's store fast path.

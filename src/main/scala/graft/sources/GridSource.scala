@@ -7,64 +7,14 @@ import java.util.concurrent.atomic.LongAdder
 import graft.grid._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import scala.jdk.CollectionConverters._
-
-/** DataSource V2 connector that pivots a chunked N-D grid into a lazy,
-  * partition-pruned relational table — the Spark re-expression of the
-  * reference's custom TableProvider (SURVEY §2A A1-A9; reference
-  * src/lib.rs:161-917 + xarray_sql/reader.py:192-337).
-  *
-  * Architecture (scale-first):
-  *   - one `InputPartition` per chunk block, carrying only slice offsets,
-  *     per-dim bounds and an exact row count — O(metadata) planning, zero
-  *     data reads before execution (the reference's 4-stage laziness
-  *     invariant, tests/test_reader.py:254-305);
-  *   - zone-map pruning of partitions happens at `planInputPartitions`
-  *     using the filters Spark pushed down (all filters stay residual, so
-  *     pruning only needs soundness — the analogue of DataFusion Inexact);
-  *   - projection pushdown reaches storage: the partition reader reads
-  *     only requested variables from the store (A8), and a COUNT(*)-style
-  *     empty projection reads no variable data at all (A9/lib.rs:609-614);
-  *   - `estimateStatistics` reports exact post-pruning row counts so
-  *     Catalyst/AQE picks broadcast joins from real cardinalities.
-  */
-object GridSource {
-  /** Driver-side registry: datasets are handed to the provider by key
-    * because DSv2 options are strings. Partitions serialize the store
-    * itself, so executors never consult the registry.
-    */
-  private val registry = new ConcurrentHashMap[String, (GridStore, Map[String, Int], Seq[String])]()
-
-  def register(key: String, store: GridStore, chunks: Map[String, Int],
-      groupDims: Seq[String]): Unit =
-    registry.put(key, (store, chunks, groupDims))
-
-  /** Drop a registration. Safe once the DataFrame has been `load()`ed:
-    * the provider resolves the table (capturing the store) eagerly at
-    * load, and partitions serialize the store itself — nothing consults
-    * the registry afterwards. Lets per-invocation scratch keys avoid
-    * growing the registry for the life of the driver.
-    */
-  def unregister(key: String): Unit = {
-    registry.remove(key)
-    ()
-  }
-
-  def lookup(key: String): (GridStore, Map[String, Int], Seq[String]) = {
-    val v = registry.get(key)
-    require(v != null, s"no grid dataset registered under key '$key'")
-    v
-  }
-
-  val FORMAT = "graft.sources.GridTableProvider"
-}
 
 /** Test/ops instrumentation: exact partition-open and variable-read counts
   * (the Spark analogue of the reference's `_iteration_callback` hook,
@@ -72,7 +22,7 @@ object GridSource {
   */
 object ReadCounters {
   val partitionsOpened = new LongAdder
-  val rowsEmitted = new LongAdder // row-mode readers only (columnar skips)
+  val rowsEmitted = new LongAdder // every row the grid reader emits
   private val varReads = new ConcurrentHashMap[String, LongAdder]()
   def recordVarRead(name: String): Unit =
     varReads.computeIfAbsent(name, _ => new LongAdder).increment()
@@ -83,23 +33,32 @@ object ReadCounters {
   }
 }
 
-class GridTableProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val (store, _, groupDims) = GridSource.lookup(options.get("dataset"))
-    val groupVars = store.schema.vars.filter(_.dims == groupDims)
-    store.schema.tableSchema(groupDims, groupVars)
-  }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val key = properties.get("dataset")
-    val (store, chunks, groupDims) = GridSource.lookup(key)
-    new GridTable(key, store, chunks, groupDims)
-  }
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
+/** DataSource V2 table that pivots one dim group of a chunked N-D grid
+  * into a lazy, partition-pruned relational table — the Spark
+  * re-expression of the reference's custom TableProvider (SURVEY §2A
+  * A1-A9; reference src/lib.rs:161-917 + xarray_sql/reader.py:192-337).
+  * `XarrayContext.dataFrame` wraps one in a relation directly;
+  * `format("zarr")` and the catalogs resolve to one too.
+  *
+  * Architecture (scale-first):
+  *   - one plan walk, [[GridPlanIndex]]: one `InputPartition` per
+  *     surviving chunk block, carrying only slice offsets and the
+  *     per-dim keep lists of exact dim filters — O(metadata) planning,
+  *     zero data reads before execution (the reference's 4-stage
+  *     laziness invariant, tests/test_reader.py:254-305). A restricted
+  *     table and runtime filters only narrow that walk;
+  *   - zone-map pruning of partitions happens at `planInputPartitions`
+  *     using the filters Spark pushed down (non-separable filters stay
+  *     residual, so pruning only needs soundness — the analogue of
+  *     DataFusion Inexact);
+  *   - one reader, [[GridColumnarReader]]: every partition, dense,
+  *     dim-filtered or TopN, streams `ColumnarBatch`es;
+  *   - projection pushdown reaches storage: the reader reads only
+  *     requested variables from the store (A8), and a COUNT(*)-style
+  *     empty projection reads no variable data at all (A9/lib.rs:609-614);
+  *   - `estimateStatistics` reports exact post-pruning row counts so
+  *     Catalyst/AQE picks broadcast joins from real cardinalities.
+  */
 class GridTable(key: String, val store: GridStore,
     val chunks: Map[String, Int], val groupDims: Seq[String],
     val onlyBlocks: Option[Seq[Seq[(Int, Int)]]] = None)
@@ -269,60 +228,6 @@ class GridScanBuilder(store: GridStore, chunks: Map[String, Int],
   }
 }
 
-/** Per-block coordinate bounds — shared by scan-time pruning and the
-  * logical-plan metadata-count rewrite.
-  */
-object GridBounds {
-  def forBlock(schema: GridSchema, groupDims: Seq[String],
-      block: Seq[(Int, Int)]): Map[String, DimBounds] =
-    groupDims.zip(block).flatMap { case (dimName, (start, len)) =>
-      schema.dim(dimName).coords match {
-        case DoubleCoords(v) =>
-          val s = v.slice(start, start + len)
-          if (s.isEmpty) None else Some(dimName -> NumBounds(s.min, s.max))
-        case FloatCoords(v) =>
-          val s = v.slice(start, start + len).map(_.toDouble)
-          if (s.isEmpty) None else Some(dimName -> NumBounds(s.min, s.max))
-        case IntCoords(v) =>
-          val s = v.slice(start, start + len).map(_.toDouble)
-          if (s.isEmpty) None else Some(dimName -> NumBounds(s.min, s.max))
-        case LongCoords(v) =>
-          val s = v.slice(start, start + len)
-          if (s.isEmpty) None else Some(dimName -> LongBounds(s.min, s.max))
-        case TimeCoords(v) =>
-          val s = v.slice(start, start + len)
-          if (s.isEmpty) None else Some(dimName -> LongBounds(s.min, s.max))
-        case DurationCoords(v) =>
-          val s = v.slice(start, start + len)
-          if (s.isEmpty) None else Some(dimName -> LongBounds(s.min, s.max))
-        case StringCoords(v) =>
-          if (len <= 0) None
-          else Some(dimName -> StrBounds.of(v, start, len))
-      }
-    }.toMap
-
-  /** Store-reported variable stats -> pruning bounds (Long-boxed stats
-    * keep exact long/timestamp comparisons beyond 2^53).
-    */
-  def fromVarStats(s: (Any, Any)): DimBounds = s match {
-    case (mn: java.lang.Long, mx: java.lang.Long) =>
-      LongBounds(mn, mx)
-    case (mn: java.lang.Number, mx: java.lang.Number) =>
-      NumBounds(mn.doubleValue(), mx.doubleValue())
-    case (mn: String, mx: String) => StrBounds(mn, mx)
-    case other => throw new IllegalArgumentException(s"bad var stats $other")
-  }
-
-  /** Dim bounds + data-variable bounds (when the store has chunk stats)
-    * for one block — the full zone map a predicate can prune against.
-    */
-  def forBlockWithVars(store: graft.grid.GridStore, groupDims: Seq[String],
-      groupVars: Seq[VarDef], block: Seq[(Int, Int)]): Map[String, DimBounds] =
-    forBlock(store.schema, groupDims, block) ++
-      groupVars.flatMap(v =>
-        store.varBounds(v.name, block).map(s => v.name -> fromVarStats(s)))
-}
-
 sealed trait MetaAgg extends Serializable
 case object MetaCountStar extends MetaAgg
 final case class MetaMinDim(dim: String) extends MetaAgg
@@ -469,8 +374,8 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
     * completed broadcast side, and partition planning re-prunes with
     * them — a grid×dim-table join reads only the chunks holding matching
     * coordinates. Runtime filters prune BLOCKS only (never the cells
-    * within a surviving block), so the planned columnar/row mode and
-    * statistics — both fixed before runtime filters exist — stay valid.
+    * within a surviving block), so the statistics and the shipped keep
+    * lists — both fixed before runtime filters exist — stay valid.
     */
   override def filterAttributes(): Array[
       org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -488,51 +393,28 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
   private def filters: Array[Filter] = staticFilters ++ runtimeFilters
 
   // per-(dim, chunk) planning index — O(total coords) once per scan,
-  // O(n_dims) per block afterwards. Explicit block whitelists
-  // (metadata-count boundary scans; always few blocks) keep the direct
-  // per-block walk instead of the cross-product enumeration.
-  private lazy val planIndex: Option[GridPlanIndex] =
-    if (onlyBlocks.isDefined) None
-    else Some(new GridPlanIndex(store, groupDims, chunks, groupVars,
-      staticFilters.toSeq))
+  // O(n_dims) per block afterwards
+  private lazy val planIndex =
+    new GridPlanIndex(store, groupDims, chunks, groupVars, staticFilters.toSeq)
 
-  /** Whitelist path: per-block bounds + keep, exactly the legacy walk.
-    * `pruneWith` decides exclusion (static + runtime filters); shipped
-    * keep lists always come from the STATIC filters only.
+  private lazy val whitelist: Option[Set[Seq[(Int, Int)]]] =
+    onlyBlocks.map(_.toSet)
+
+  /** The blocks `ix` keeps that the restriction (when any) lists, each
+    * shipped with the STATIC index's keep lists and row counts: `ix`
+    * may carry runtime filters, which prune blocks but never the cells
+    * within a surviving block.
     */
-  private def plannedWhitelist(pruneWith: Array[Filter]): IndexedSeq[Planned] =
-    onlyBlocks.get.iterator.map { b =>
-      val bounds = GridBounds.forBlockWithVars(store, groupDims, groupVars, b)
-      val pruneKeep = blockKeep(b, pruneWith)
-      if (pruneWith.exists(f => ZoneMapPruning.excludes(f, bounds)) ||
-        pruneKeep.exists(_.isEmpty)) None
-      else {
-        val keep = blockKeep(b, staticFilters)
-        val full = keep.zip(b).forall { case (k, (_, l)) => k.length == l }
-        Some(Planned(b, if (full) Nil else keep,
-          keep.foldLeft(1L)(_ * _.length)))
-      }
-    }.flatten.toIndexedSeq
+  private def planned(ix: GridPlanIndex): IndexedSeq[Planned] =
+    ix.surviving.iterator
+      .map(i => Planned(planIndex.slices(i), planIndex.relKeep(i),
+        planIndex.blockRows(i)))
+      .filter(p => whitelist.forall(_.contains(p.block)))
+      .toIndexedSeq
 
-  // static view: what's known at planning time (stats, explain, the
-  // columnar-vs-row decision); runtime filters only prune further
-  private lazy val staticPlanned: IndexedSeq[Planned] = planIndex match {
-    case Some(ix) => ix.surviving.map(i =>
-      Planned(ix.slices(i), ix.relKeep(i), ix.blockRows(i)))
-    case None => plannedWhitelist(staticFilters)
-  }
-
-  /** Per-dim surviving RELATIVE indices within a block under the
-    * separable dim predicates (full range when none apply). An empty
-    * list on any dim empties the whole block (dense cross product).
-    * Whitelist path only — the index precomputes these per chunk.
-    */
-  private def blockKeep(block: Seq[(Int, Int)],
-      fs: Array[Filter]): Seq[Array[Int]] =
-    groupDims.zip(block).map { case (d, (start, len)) =>
-      SeparableDimFilters.survivingIndices(fs.toSeq, store.schema,
-        groupDims, d, start, len).map(_ - start)
-    }
+  // static view: what's known at planning time (stats, explain);
+  // runtime filters only prune further
+  private lazy val staticPlanned: IndexedSeq[Planned] = planned(planIndex)
 
   private lazy val anyDimFilter: Boolean = staticPlanned.exists(_.keep.nonEmpty)
 
@@ -547,24 +429,13 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
     org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(store)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // block pruning uses static + runtime filters; the shipped cell
-    // lists use only the static ones so the planned columnar/row mode
-    // still matches every partition (runtime pruning never changes rows
-    // within a surviving chunk, only which chunks are read)
-    val planned: IndexedSeq[Planned] =
+    // runtime filters are arbitrary, so re-index with them included
+    // (O(total coords), cheap); both indexes share one chunk grid
+    val blocks =
       if (runtimeFilters.isEmpty) staticPlanned
-      else planIndex match {
-        case Some(stat) =>
-          // runtime filters are arbitrary, so re-index with them included
-          // (O(total coords), cheap) — surviving refs share the same
-          // chunk grid, and shipped keep comes from the static index
-          val rt = new GridPlanIndex(store, groupDims, chunks, groupVars,
-            filters.toSeq)
-          rt.surviving.map(i =>
-            Planned(stat.slices(i), stat.relKeep(i), stat.blockRows(i)))
-        case None => plannedWhitelist(filters)
-      }
-    planned.map(p =>
+      else planned(new GridPlanIndex(store, groupDims, chunks, groupVars,
+        filters.toSeq))
+    blocks.map(p =>
       GridInputPartition(storeBc, groupDims, p.block, required.fieldNames,
         limit,
         topKeys.map { case (d, desc) => (groupDims.indexOf(d), desc) },
@@ -572,12 +443,10 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GridPartitionReaderFactory
+    GridReaderFactory
 
-  // top-N / dim-filtered partitions use the enumerating row reader
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (topKeys.nonEmpty || anyDimFilter) Scan.ColumnarSupportMode.UNSUPPORTED
-    else Scan.ColumnarSupportMode.SUPPORTED
+    Scan.ColumnarSupportMode.SUPPORTED
 
   /** Exact statistics from chunk metadata (A9): row count = sum of block
     * products after pruning; bytes = rows x fixed width of the pruned
@@ -600,10 +469,6 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
       .getOrElse(8)
 
   override def description(): String = {
-    // arithmetic, not enumeration: the full grid may have 10^5+ blocks
-    val total = ChunkGrid.resolve(
-      GridSchema(groupDims.map(store.schema.dim), Seq.empty), chunks)
-      .foldLeft(1L)(_ * _._2.length.toLong)
     val tn = if (topKeys.isEmpty) ""
     else s" pushedTopN=[${topKeys.map { case (d, desc) =>
       d + (if (desc) " DESC" else " ASC") }.mkString(",")} limit=$limit]"
@@ -612,7 +477,7 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
       SeparableDimFilters.isSeparable(f, store.schema, groupDims))
       .mkString("[", ",", "]")
     s"GridScan dims=[${groupDims.mkString(",")}] " +
-      s"partitions=${staticPlanned.size}/$total cols=[${required.fieldNames.mkString(",")}]$tn$ef"
+      s"partitions=${staticPlanned.size}/${planIndex.totalBlocks} cols=[${required.fieldNames.mkString(",")}]$tn$ef"
   }
 }
 
@@ -632,48 +497,50 @@ final case class GridInputPartition(
   def store: GridStore = storeBc.value
 }
 
-class GridPartitionReaderFactory extends PartitionReaderFactory {
+/** Grid scans read columnar batches only ([[GridColumnarReader]]). */
+object GridReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GridPartitionReader(partition.asInstanceOf[GridInputPartition])
-
-  /** The store is columnar already — emit `ColumnarBatch`es of at most
-    * 65,536 rows (the reference's batch size, df.py:278-280): data
-    * variables bulk-copy into vectors, coordinates fill by stride.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean = {
-    val p = partition.asInstanceOf[GridInputPartition]
-    p.topKeys.isEmpty && p.dimKeep.isEmpty
-  }
+    throw new UnsupportedOperationException("grid scans read columnar batches")
 
   override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+      partition: InputPartition): PartitionReader[ColumnarBatch] =
     new GridColumnarReader(partition.asInstanceOf[GridInputPartition])
 }
 
-/** Columnar pivot: per batch of <=64Ki cells, each coordinate column is
-  * filled with its strided repeat pattern and each variable column is a
-  * bulk copy out of the chunk's flat C-order array.
+/** The one reader over a [[GridInputPartition]]: `ColumnarBatch`es of
+  * at most 65,536 rows (the reference's batch size, df.py:278-280).
+  *
+  * Cells come from one walk that yields runs of flat C-order offsets
+  * into the block. Each dim iterates over a RELATIVE index list: the
+  * surviving indices of exactly-pushed dim filters (all indices when
+  * none), sorted by coordinate for TopN sort-key dims. Sort-key dims
+  * are the outermost loops (priority order) and the rest stay in
+  * C-order, so a TopN partition emits its local top-N first and stops
+  * at `limit`. The trailing dims that are walked whole and in storage
+  * order fold into one contiguous run (a dense block is a single run);
+  * otherwise the innermost walked dim splits into runs of consecutive
+  * indices. Data variables bulk-copy each unit-step run out of the
+  * chunk's flat array, and coordinates fill from the flat offset by
+  * stride (flat f -> per-dim index (f / stride_k) % shape_k; reference
+  * df.py:241-250,331-336). Only the requested variables are read (A8),
+  * none at all for an empty projection (COUNT(*), A9).
   */
 class GridColumnarReader(part: GridInputPartition)
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  extends PartitionReader[ColumnarBatch] {
 
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
 
   ReadCounters.partitionsOpened.increment()
 
-  private val BatchRows = 65536
   private val schema = part.store.schema
   private val shape: Array[Int] = part.block.map(_._2).toArray
   private val starts: Array[Int] = part.block.map(_._1).toArray
-  private val total: Long = {
-    val t = shape.foldLeft(1L)(_ * _.toLong)
-    if (part.limit >= 0) math.min(t, part.limit.toLong) else t
-  }
+  private val nd = shape.length
+  // C-order strides over the block shape (last dim fastest)
   private val strides: Array[Long] = {
-    val s = new Array[Long](shape.length)
+    val s = new Array[Long](nd)
     var acc = 1L
-    var k = shape.length - 1
+    var k = nd - 1
     while (k >= 0) { s(k) = acc; acc *= shape(k); k -= 1 }
     s
   }
@@ -699,270 +566,189 @@ class GridColumnarReader(part: GridInputPartition)
       }
     }
 
+  // --- the walk: sort-key dims first, then the rest in C-order ---------
+  private val order: Array[Int] = {
+    val keys = part.topKeys.map(_._1)
+    (keys ++ (0 until nd).filterNot(keys.contains)).toArray
+  }
+  private val lists: Array[Array[Int]] = order.map { d =>
+    val base =
+      if (part.dimKeep.isEmpty) Array.range(0, shape(d)) else part.dimKeep(d)
+    part.topKeys.find(_._1 == d).fold(base)(k => sortedByCoord(d, base, k._2))
+  }
+
+  private def sortedByCoord(d: Int, base: Array[Int], desc: Boolean): Array[Int] = {
+    val st = starts(d)
+    def sorted[T](v: Array[T])(implicit ord: Ordering[T]): Array[Int] =
+      base.sortBy(j => v(st + j))(if (desc) ord.reverse else ord)
+    schema.dim(part.groupDims(d)).coords match {
+      case DoubleCoords(v) => sorted(v)
+      case FloatCoords(v) => sorted(v)
+      case IntCoords(v) => sorted(v)
+      case LongCoords(v) => sorted(v)
+      case TimeCoords(v) => sorted(v)
+      case DurationCoords(v) => sorted(v)
+      case StringCoords(v) =>
+        // pre-encode once per index: comparator-side getBytes would
+        // re-encode both strings O(n log n) times
+        val enc = base.map(j => v(st + j)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val byBytes = Ordering.fromLessThan[Int]((a, b) =>
+          java.util.Arrays.compareUnsigned(enc(a), enc(b)) < 0)
+        base.indices.sortBy(identity)(if (desc) byBytes.reverse else byBytes)
+          .map(base).toArray
+    }
+  }
+
+  // trailing walked dims that are the block's own trailing dims, whole
+  // and in storage order: one contiguous run per outer position
+  private val folded: Int = {
+    var k = 0
+    while (k < nd && order(nd - 1 - k) == nd - 1 - k &&
+      lists(nd - 1 - k).sameElements(0 until shape(nd - 1 - k))) k += 1
+    k
+  }
+  private val split = folded == 0 && nd > 0 // innermost dim splits into runs
+  private val outer = if (split) nd - 1 else nd - folded
+  // inner runs, relative to the outer position: flat start and length;
+  // consecutive cells of a run are `step` apart
+  private val (runStart, runLen, step): (Array[Long], Array[Int], Long) =
+    if (!split)
+      (Array(0L), Array((nd - folded until nd).foldLeft(1)(_ * shape(_))), 1L)
+    else {
+      val l = lists(nd - 1)
+      val cuts = (0 until l.length).filter(i => i == 0 || l(i) != l(i - 1) + 1)
+      val st = strides(order(nd - 1))
+      (cuts.map(l(_) * st).toArray,
+        (cuts :+ l.length).sliding(2).map(p => p(1) - p(0)).toArray, st)
+    }
+
+  private val total: Long = {
+    val cells = lists.take(outer).foldLeft(runLen.sum.toLong)(_ * _.length)
+    if (part.limit >= 0) math.min(cells, part.limit.toLong) else cells
+  }
+
+  private val counter = new Array[Int](outer) // odometer over outer dims
+  private var base = outerBase()
+  private var run = 0
+  private var pos = 0 // cells of `run` already emitted
+  private var emitted = 0L
+
+  private def outerBase(): Long = {
+    var f = 0L
+    var j = 0
+    while (j < outer) { f += lists(j)(counter(j)) * strides(order(j)); j += 1 }
+    f
+  }
+
+  private def advanceOuter(): Unit = {
+    var j = outer - 1
+    var carry = true
+    while (carry && j >= 0) {
+      counter(j) += 1
+      if (counter(j) < lists(j).length) carry = false
+      else { counter(j) = 0; j -= 1 }
+    }
+    base = outerBase()
+  }
+
+  // sized to the partition: a 3-row TopN partition needs 3-row vectors
+  private val batchRows = math.min(65536L, total).toInt
   private val vectors: Array[OnHeapColumnVector] =
-    cols.map { case (_, dt) => new OnHeapColumnVector(BatchRows, dt) }
+    cols.map { case (_, dt) => new OnHeapColumnVector(batchRows, dt) }
   private var batch: ColumnarBatch = _
-  private var offset: Long = 0L
 
   override def next(): Boolean = {
-    if (offset >= total) return false
-    val m = math.min(BatchRows.toLong, total - offset).toInt
+    if (emitted >= total) return false
+    val m = math.min(batchRows.toLong, total - emitted).toInt
+    vectors.foreach(_.reset())
+    var row = 0
+    while (row < m) {
+      val len = math.min(runLen(run) - pos, m - row)
+      fill(row, base + runStart(run) + pos * step, len)
+      row += len
+      pos += len
+      if (pos == runLen(run)) {
+        pos = 0
+        run += 1
+        if (run == runLen.length) { run = 0; advanceOuter() }
+      }
+    }
+    emitted += m
+    ReadCounters.rowsEmitted.add(m)
+    batch = new ColumnarBatch(vectors.map(v =>
+      v: org.apache.spark.sql.vectorized.ColumnVector), m)
+    true
+  }
+
+  /** Rows `row until row + len` <- the cells at flat offsets
+    * `start + r * step` (block row counts are bounded by chunk sizing).
+    */
+  private def fill(row: Int, start: Long, len: Int): Unit = {
+    def flat(r: Int): Int = (start + r * step).toInt
     var c = 0
     while (c < cols.length) {
       val vec = vectors(c)
-      vec.reset()
       cols(c)._1 match {
         case DimCol(d, coords) =>
           val stride = strides(d)
           val size = shape(d)
-          val start = starts(d)
+          val st = starts(d)
+          def at(r: Int): Int = st + (((start + r * step) / stride) % size).toInt
           var r = 0
           coords match {
-            case DoubleCoords(v) =>
-              while (r < m) {
-                vec.putDouble(r, v(start + (((offset + r) / stride) % size).toInt)); r += 1
-              }
-            case FloatCoords(v) =>
-              while (r < m) {
-                vec.putFloat(r, v(start + (((offset + r) / stride) % size).toInt)); r += 1
-              }
-            case IntCoords(v) =>
-              while (r < m) {
-                vec.putInt(r, v(start + (((offset + r) / stride) % size).toInt)); r += 1
-              }
-            case LongCoords(v) =>
-              while (r < m) {
-                vec.putLong(r, v(start + (((offset + r) / stride) % size).toInt)); r += 1
-              }
-            case TimeCoords(v) =>
-              while (r < m) {
-                vec.putLong(r, v(start + (((offset + r) / stride) % size).toInt)); r += 1
-              }
-            case DurationCoords(v) =>
-              while (r < m) {
-                vec.putLong(r, v(start + (((offset + r) / stride) % size).toInt)); r += 1
-              }
+            case DoubleCoords(v) => while (r < len) { vec.putDouble(row + r, v(at(r))); r += 1 }
+            case FloatCoords(v) => while (r < len) { vec.putFloat(row + r, v(at(r))); r += 1 }
+            case IntCoords(v) => while (r < len) { vec.putInt(row + r, v(at(r))); r += 1 }
+            case LongCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
+            case TimeCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
+            case DurationCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
             case StringCoords(v) =>
-              while (r < m) {
-                val b = v(start + (((offset + r) / stride) % size).toInt)
-                  .getBytes("UTF-8")
-                vec.putByteArray(r, b, 0, b.length); r += 1
+              while (r < len) {
+                val b = v(at(r)).getBytes("UTF-8")
+                vec.putByteArray(row + r, b, 0, b.length); r += 1
               }
           }
         case VarCol(data, natNull) =>
-          val off = offset.toInt
+          val bulk = step == 1L
+          val off = start.toInt
+          var r = 0
           data match {
-            case a: Array[Double] => vec.putDoubles(0, m, a, off)
-            case a: Array[Float] => vec.putFloats(0, m, a, off)
-            case a: Array[Int] => vec.putInts(0, m, a, off)
-            case a: Array[Long] if natNull =>
-              // pre-scan for NaT: clean batches (the usual case) keep
-              // the bulk copy; any sentinel takes the per-cell path
-              var hasNat = false
-              var r = 0
-              while (r < m && !hasNat) {
-                hasNat = a(off + r) == Long.MinValue; r += 1
+            case a: Array[Double] =>
+              if (bulk) vec.putDoubles(row, len, a, off)
+              else while (r < len) { vec.putDouble(row + r, a(flat(r))); r += 1 }
+            case a: Array[Float] =>
+              if (bulk) vec.putFloats(row, len, a, off)
+              else while (r < len) { vec.putFloat(row + r, a(flat(r))); r += 1 }
+            case a: Array[Int] =>
+              if (bulk) vec.putInts(row, len, a, off)
+              else while (r < len) { vec.putInt(row + r, a(flat(r))); r += 1 }
+            case a: Array[Long] =>
+              // clean runs (the usual case) keep the bulk copy; a run
+              // holding the NaT sentinel takes the per-cell path
+              if (bulk && !(natNull &&
+                (0 until len).exists(i => a(off + i) == Long.MinValue)))
+                vec.putLongs(row, len, a, off)
+              else while (r < len) {
+                val x = a(flat(r))
+                if (natNull && x == Long.MinValue) vec.putNull(row + r)
+                else vec.putLong(row + r, x)
+                r += 1
               }
-              if (!hasNat) vec.putLongs(0, m, a, off)
-              else {
-                r = 0
-                while (r < m) {
-                  val x = a(off + r)
-                  if (x == Long.MinValue) vec.putNull(r)
-                  else vec.putLong(r, x)
-                  r += 1
-                }
-              }
-            case a: Array[Long] => vec.putLongs(0, m, a, off)
             case a: Array[String] => // vlen string variables (zarr v3)
-              var r = 0
-              while (r < m) {
-                val b = a(off + r).getBytes("UTF-8")
-                vec.putByteArray(r, b, 0, b.length); r += 1
+              while (r < len) {
+                val b = a(flat(r)).getBytes("UTF-8")
+                vec.putByteArray(row + r, b, 0, b.length); r += 1
               }
           }
       }
       c += 1
     }
-    batch = new ColumnarBatch(vectors.map(v =>
-      v: org.apache.spark.sql.vectorized.ColumnVector), m)
-    offset += m
-    true
   }
 
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = vectors.foreach(_.close())
-}
-
-/** Streams the pivoted rows of one chunk block: strided coordinate
-  * arithmetic over the block shape (flat row i -> per-dim index
-  * (i / stride_k) % shape_k; reference df.py:241-250,331-336), with data
-  * variables read once per partition — only the requested ones (A8), and
-  * none at all for an empty projection (COUNT(*), A9).
-  */
-class GridPartitionReader(part: GridInputPartition)
-  extends PartitionReader[InternalRow] {
-
-  ReadCounters.partitionsOpened.increment()
-
-  private val schema = part.store.schema
-  private val shape: Array[Int] = part.block.map(_._2).toArray
-  private val starts: Array[Int] = part.block.map(_._1).toArray
-  private val n: Long = {
-    val t = shape.foldLeft(1L)(_ * _.toLong)
-    if (part.limit >= 0) math.min(t, part.limit.toLong) else t
-  }
-
-  // C-order strides over the block shape (last dim fastest)
-  private val strides: Array[Long] = {
-    val s = new Array[Long](shape.length)
-    var acc = 1L
-    var k = shape.length - 1
-    while (k >= 0) { s(k) = acc; acc *= shape(k); k -= 1 }
-    s
-  }
-
-  // per required column: either a dim (coord lookup) or a var (flat array)
-  private sealed trait ColSrc
-  private case class DimCol(dimIdx: Int, coords: CoordArray) extends ColSrc
-  // natNull: see GridColumnarReader — NaT sentinel -> SQL NULL, but
-  // only for time/duration variables
-  private case class VarCol(data: AnyRef, natNull: Boolean) extends ColSrc
-
-  private val cols: Array[ColSrc] = part.requiredCols.map { c =>
-    val di = part.groupDims.indexOf(c)
-    if (di >= 0) DimCol(di, schema.dim(c).coords)
-    else {
-      ReadCounters.recordVarRead(c)
-      val v = schema.vars.find(_.name == c).get
-      VarCol(part.store.readVar(c, part.block),
-        v.dtype == GTimestamp || v.dtype == GDuration)
-    }
-  }
-
-  private var i: Long = -1L
-  private val dimIdx = new Array[Int](shape.length)
-
-  // --- enumerated cell iteration (pushed TopN and/or exact filters) --
-  // Each dim iterates over an explicit RELATIVE index list: the
-  // surviving indices of exactly-pushed dim filters (all indices when
-  // none), sorted by coordinate for TopN sort-key dims. Sort-key dims
-  // become the outermost loops (priority order); remaining dims stay
-  // innermost in C-order, so plain filtered scans keep C-order and TopN
-  // scans emit their local top-N first and stop at `limit`.
-  private val enumMode = part.topKeys.nonEmpty || part.dimKeep.nonEmpty
-  private val enumOrder: Array[Int] =
-    if (!enumMode) Array.empty
-    else (part.topKeys.map(_._1) ++
-      shape.indices.filterNot(part.topKeys.map(_._1).toSet)).toArray
-  private val perm: Array[Array[Int]] =
-    if (!enumMode) Array.empty
-    else enumOrder.map { d =>
-      val base: Array[Int] =
-        if (part.dimKeep.isEmpty) Array.range(0, shape(d))
-        else part.dimKeep(d)
-      part.topKeys.find(_._1 == d) match {
-        case None => base // C-order within the surviving indices
-        case Some((_, desc)) =>
-          val st = starts(d)
-          def sorted[T](v: Array[T])(implicit ord: Ordering[T]): Array[Int] =
-            base.sortBy(j => v(st + j))(if (desc) ord.reverse else ord)
-          schema.dim(part.groupDims(d)).coords match {
-            case DoubleCoords(v) => sorted(v)
-            case FloatCoords(v) => sorted(v)
-            case IntCoords(v) => sorted(v)
-            case LongCoords(v) => sorted(v)
-            case TimeCoords(v) => sorted(v)
-            case DurationCoords(v) => sorted(v)
-            case StringCoords(v) =>
-              // pre-encode once per index: comparator-side getBytes
-              // would re-encode both strings O(n log n) times
-              val enc = base.map(j => v(st + j)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              val byBytes = Ordering.fromLessThan[Int]((a, b) =>
-                java.util.Arrays.compareUnsigned(enc(a), enc(b)) < 0)
-              base.indices.sortBy(identity)(
-                if (desc) byBytes.reverse else byBytes)
-                .map(base).toArray
-          }
-      }
-    }
-  private val counts: Array[Int] = perm.map(_.length)
-  private val counter = new Array[Int](enumOrder.length)
-  private var flat: Long = 0L
-
-  // cap n at the enumerated cell count (fewer cells when filters prune)
-  private val nEnum: Long =
-    if (!enumMode) n
-    else {
-      val cells = counts.foldLeft(1L)(_ * _.toLong)
-      if (part.limit >= 0) math.min(cells, part.limit.toLong) else cells
-    }
-
-  override def next(): Boolean = {
-    i += 1
-    if (i >= (if (enumMode) nEnum else n)) return false
-    ReadCounters.rowsEmitted.increment()
-    if (enumMode) {
-      if (i > 0) { // odometer step over the reordered dims
-        var j = enumOrder.length - 1
-        var carry = true
-        while (carry && j >= 0) {
-          counter(j) += 1
-          if (counter(j) < counts(j)) carry = false
-          else { counter(j) = 0; j -= 1 }
-        }
-      }
-      var j = 0
-      while (j < enumOrder.length) {
-        val d = enumOrder(j)
-        dimIdx(d) = perm(j)(counter(j))
-        j += 1
-      }
-      var f = 0L
-      var k = 0
-      while (k < shape.length) { f += dimIdx(k).toLong * strides(k); k += 1 }
-      flat = f
-    }
-    true
-  }
-
-  override def get(): InternalRow = {
-    if (!enumMode) {
-      var k = 0
-      while (k < shape.length) {
-        dimIdx(k) = ((i / strides(k)) % shape(k)).toInt
-        k += 1
-      }
-      flat = i
-    }
-    val row = new GenericInternalRow(cols.length)
-    var c = 0
-    while (c < cols.length) {
-      cols(c) match {
-        case DimCol(d, coords) =>
-          row.update(c, coords.internal(starts(d) + dimIdx(d)))
-        case VarCol(data, natNull) =>
-          val fi = flat.toInt // block row counts are bounded by chunk sizing
-          data match {
-            case a: Array[Double] => row.update(c, a(fi))
-            case a: Array[Float] => row.update(c, a(fi))
-            case a: Array[Int] => row.update(c, a(fi))
-            case a: Array[Long] =>
-              val x = a(fi)
-              if (natNull && x == Long.MinValue) row.setNullAt(c)
-              else row.update(c, x)
-            case a: Array[String] => row.update(c,
-              org.apache.spark.unsafe.types.UTF8String.fromString(a(fi)))
-          }
-      }
-      c += 1
-    }
-    row
-  }
-
-  override def close(): Unit = {}
 }
 
 /** One planned (surviving) block of a grid scan: slices, shipped

@@ -57,7 +57,7 @@ class CrashRecoverySpec extends SparkTestBase {
       val base = Files.createTempDirectory(s"crash_$trial")
       base.toFile.deleteOnExit()
       val root = base.resolve("store").toString
-      def rows(lo: Int, hi: Int) = ctx.scratchDataFrame(
+      def rows(lo: Int, hi: Int) = ctx.dataFrame(
         s"crash$trial@$root/$lo", Fixtures.linearGridSlice(lo, hi),
         Map("t" -> 6), Seq("t", "lat", "lon"))
 
@@ -111,7 +111,7 @@ class CrashRecoverySpec extends SparkTestBase {
       assert(reopened.readVar("air", oldFull).asInstanceOf[Array[Double]]
         .sameElements(Fixtures.linearGridSlice(0, cut).readVar("air", oldFull)
           .asInstanceOf[Array[Double]]), s"$desc: values changed")
-      assert(ctx.scratchDataFrame(s"crash$trial@$root", reopened,
+      assert(ctx.dataFrame(s"crash$trial@$root", reopened,
         reopened.chunkMap, Seq("t", "lat", "lon")).collect().length ==
         cut * 12 * 10, s"$desc: scan left the committed extent")
 

@@ -230,7 +230,7 @@ class ZarrGridStoreSpec extends SparkTestBase {
     val store = ZarrGridStore.write(Fixtures.linearGrid, root,
       Map("t" -> 6), "zlib")
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"zarr_prune@$root", store, store.chunkMap,
+      .dataFrame(s"zarr_prune@$root", store, store.chunkMap,
         Seq("t", "lat", "lon"))
     ReadCounters.reset()
     val rows = df.filter(col("t") >= 12)

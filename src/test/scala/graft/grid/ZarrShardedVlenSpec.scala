@@ -140,7 +140,7 @@ class ZarrShardedVlenSpec extends SparkTestBase {
     assert(GridIO.Counters.reads.sum() == 0L) // no whole-file fetch
     // and the registered scan still prunes/answers across the change
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"zarr_coalesce@$root", store, store.chunkMap,
+      .dataFrame(s"zarr_coalesce@$root", store, store.chunkMap,
         Seq("t", "lat", "lon"))
     ReadCounters.reset()
     val rows = df.filter(col("t") < 4)

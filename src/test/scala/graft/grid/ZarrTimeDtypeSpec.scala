@@ -37,7 +37,7 @@ class ZarrTimeDtypeSpec extends SparkTestBase {
     // registered scan: a BETWEEN over the M8 axis prunes to the chunks
     // whose µs zone maps survive (hours 18.. = 1 of 4 t-chunks)
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"m8@$root", store, store.chunkMap, Seq("time"))
+      .dataFrame(s"m8@$root", store, store.chunkMap, Seq("time"))
     ReadCounters.reset()
     val rows = df.filter(col("time") >=
         lit("2021-01-01 18:00:00").cast("timestamp"))
@@ -113,8 +113,8 @@ class ZarrTimeDtypeSpec extends SparkTestBase {
     Fixtures.writeM8NatTree(root)
     val store = ZarrGridStore.open(root)
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"m8nat@$root", store, store.chunkMap, Seq("time"))
-    // columnar path: plain scan — 3 NaT cells (k = 3, 10, 17) are
+      .dataFrame(s"m8nat@$root", store, store.chunkMap, Seq("time"))
+    // dense walk: plain scan — 3 NaT cells (k = 3, 10, 17) are
     // NULL; count/min/max skip them like any SQL null
     val agg = df.agg(
       count(col("obs")).as("n_obs"),
@@ -130,8 +130,8 @@ class ZarrTimeDtypeSpec extends SparkTestBase {
     val epochMs = 1609459200L * 1000L
     assert(natHours.sameElements(
       Array(3L, 10L, 17L).map(epochMs + _ * 3600000L)))
-    // row (enumerating) path: a pushed dim filter forces the
-    // non-columnar reader — same null surface
+    // enumerated walk: a pushed dim filter reads only the kept cells,
+    // one short run each — same null surface
     val viaRows = df.filter(col("time") === lit("2021-01-01 03:00:00")
         .cast("timestamp") || col("time") === lit("2021-01-01 04:00:00")
         .cast("timestamp"))
@@ -216,7 +216,7 @@ class ZarrTimeDtypeSpec extends SparkTestBase {
     assert(dt(3) == 3600L * 1000000L)
     // and the scan serves TIMESTAMP/NULL through SQL
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"cfvar@$root", store, store.chunkMap, Seq("i"))
+      .dataFrame(s"cfvar@$root", store, store.chunkMap, Seq("i"))
     val got = df.orderBy("i").select("ts").collect()
     assert(got(2).isNullAt(0))
     assert(got(1).getTimestamp(0).getTime ==

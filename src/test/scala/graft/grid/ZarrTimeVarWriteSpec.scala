@@ -47,7 +47,7 @@ class ZarrTimeVarWriteSpec extends SparkTestBase {
     }
     // the registered scan surfaces NaT as NULL
     val rows = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"m8w@${store.hashCode}", store,
+      .dataFrame(s"m8w@${store.hashCode}", store,
         Map("t" -> 5), Seq("t"))
       .orderBy("t").select("obs").collect()
     (0 until 12).foreach { t =>

@@ -151,7 +151,7 @@ class ZarrV3Spec extends SparkTestBase {
     val store = ZarrGridStore.write(Fixtures.linearGrid, root,
       Map("t" -> 6), "blosc", V3())
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"zarr_v3_prune@$root", store, store.chunkMap,
+      .dataFrame(s"zarr_v3_prune@$root", store, store.chunkMap,
         Seq("t", "lat", "lon"))
     ReadCounters.reset()
     val rows = df.filter(col("t") >= 12)
@@ -235,7 +235,7 @@ class ZarrV3Spec extends SparkTestBase {
     // registered scan prunes at INNER-chunk granularity (sum forces
     // data reads — a bare count() is answered from chunk metadata)
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"zarr_v3_shard@$root", store, store.chunkMap,
+      .dataFrame(s"zarr_v3_shard@$root", store, store.chunkMap,
         Seq("t", "lat", "lon"))
     ReadCounters.reset()
     val rows = df.filter(col("t") >= 18)
@@ -251,7 +251,7 @@ class ZarrV3Spec extends SparkTestBase {
       Map("t" -> 6, "lat" -> 5), "zstd:3",
       V3(Map("t" -> 2, "lat" -> 5)))
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"zarr_v3_shbytes@$root", store, store.chunkMap,
+      .dataFrame(s"zarr_v3_shbytes@$root", store, store.chunkMap,
         Seq("t", "lat", "lon"))
     // t >= 22 keeps ONE of the three inner chunks of the last t-shard
     // (x 3 lat-shards); the read path must fetch each shard's index +
@@ -395,7 +395,7 @@ class ZarrV3Spec extends SparkTestBase {
     val store = ZarrGridStore.write(Fixtures.stationQualityGrid, root,
       Map("station" -> 4, "time" -> 5), "zstd:3", V3())
     val df = new graft.XarrayContext(spark)
-      .scratchDataFrame(s"zarr_vlen_scan@$root", store, store.chunkMap,
+      .dataFrame(s"zarr_vlen_scan@$root", store, store.chunkMap,
         Seq("station", "time"))
     val rows = df.filter(col("quality") === "good")
       .agg(count(lit(1)).as("n"), sum("reading").as("s")).collect()

@@ -16,7 +16,7 @@ class ZarrWriteIdentitySpec extends SparkTestBase {
 
   private val chunks = Map("t" -> 6, "lat" -> 5)
 
-  private lazy val rows = new graft.XarrayContext(spark).scratchDataFrame(
+  private lazy val rows = new graft.XarrayContext(spark).dataFrame(
     "zwi_src", Fixtures.linearGrid, Map("t" -> 6), Seq("t", "lat", "lon"))
 
   private val layouts: Seq[(String, ZarrLayout, String)] = Seq(

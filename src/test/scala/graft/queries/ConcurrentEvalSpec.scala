@@ -18,7 +18,7 @@ class ConcurrentEvalSpec extends SparkTestBase {
   for (q <- Seq("pivot_grid_disk", "pivot_grid_varstats",
     "pivot_grid_append", "ann_ivf_bucketed",
     // round-6 store-lifecycle queries: rechunk writes a second store
-    // from a scratch scan; concat registers two scratch member scans
+    // from a scratch scan; concat builds two member scans
     "pivot_grid_rechunk", "pivot_grid_concat",
     // round-11 STAGED fixtures: two concurrent FIRST evaluations must
     // serialize the build (QueryTmp.staged) and share one committed

@@ -287,7 +287,7 @@ class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // a non-dim sort key is NOT pushed: full blocks are read
     counted {
       df.orderBy(col("temperature").desc).limit(3).collect()
-      assert(ReadCounters.rowsEmitted.sum() == 0L) // columnar path = no push
+      assert(ReadCounters.rowsEmitted.sum() == 500L) // 4 blocks x 125 cells
     }
   }
 
@@ -299,14 +299,17 @@ class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     q.collect()
     assert(q.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
       q.queryExecution.executedPlan.toString)
-    // a dim filter switches to the enumerating row reader (only matching
-    // cells are pivoted; the filter is exact at the scan, no re-filter)
+    // a dim filter stays columnar: only matching cells are pivoted and
+    // the filter is exact at the scan, so no Filter re-applies it
     val f = df.filter(col("lat") > 60.0).select("t", "lat", "air")
     val rows = f.collect()
     assert(rows.nonEmpty && rows.forall(_.getDouble(1) > 60.0))
     val plan = f.queryExecution.executedPlan.toString
     assert(plan.contains("exactDimFilters"), plan)
-    assert(!plan.contains("ColumnarToRow"), plan)
+    assert(plan.contains("ColumnarToRow"), plan)
+    assert(collect(f.queryExecution.executedPlan) {
+      case x: org.apache.spark.sql.execution.FilterExec => x
+    }.isEmpty, plan)
   }
 
   test("tables are re-queryable: fresh scan per query, same results") {
@@ -484,4 +487,147 @@ class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
     assert(dup.getMessage.contains("duplicate cell"))
   }
+
+  test("one reader: dense, dim-filtered, TopN and limit scans match brute force") {
+    import java.sql.Timestamp
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    import graft.grid._
+
+    // time x x grid whose timestamp variable holds NaT; t-chunk 0 is
+    // 36 x 2000 = 72,000 cells, so a 65,536-row batch ends inside it
+    val t0 = 1609459200L * 1000000L
+    val timeGrid = SyntheticGridStore(
+      GridSchema(
+        Seq(DimDef("time", TimeCoords(Array.tabulate(40)(k => t0 + k * 3600000000L))),
+          DimDef("x", IntCoords(Array.range(0, 2000)))),
+        Seq(VarDef("obs", Seq("time", "x"), GTimestamp))),
+      Map("obs" -> NatTimeLaw(t0)))
+    val day2 = (18262L + 2) * 86400000000L // stationGrid's third day
+
+    // per grid: chunks, an exact dim filter (as a Column and as the same
+    // predicate over brute-force cells) and the TopN / scan limit
+    case class G(name: String, store: GridStore, chunks: Map[String, Int],
+        filter: Column, keep: Seq[Any] => Boolean, k: Int)
+    val grids = Seq(
+      G("linearGrid", Fixtures.linearGrid, Map("t" -> 6, "lat" -> 5),
+        col("t") =!= 2 && col("lat") < 70.0 && col("lon") =!= 205.0,
+        c => c(0) != 2 && c(1).asInstanceOf[Double] < 70.0 && c(2) != 205.0,
+        7),
+      G("stationGrid", Fixtures.stationGrid, Map("station" -> 3),
+        col("station") =!= "st_4" && col("time") > lit(new Timestamp(day2 / 1000)),
+        c => c(0) != "st_4" && c(1).asInstanceOf[Long] > day2, 5),
+      G("timeGrid", timeGrid, Map("time" -> 36),
+        col("time") =!= lit(new Timestamp((t0 + 3 * 3600000000L) / 1000)) &&
+          col("x") =!= 500,
+        c => c(0) != t0 + 3 * 3600000000L && c(1) != 500, 66000))
+
+    def compare(a: Any, b: Any): Int = (a, b) match {
+      case (x: Int, y: Int) => x.compare(y)
+      case (x: Double, y: Double) => x.compare(y)
+      case (x: Long, y: Long) => x.compare(y)
+      case (x: String, y: String) => x.compareTo(y)
+      case _ => fail(s"unexpected key types $a, $b")
+    }
+
+    grids.foreach { g =>
+      val dims = g.store.schema.dimNames
+      val vars = g.store.schema.vars.map(_.name)
+      // brute force: every cell of the full extent, C-order
+      val full = dims.map(d => (0, g.store.schema.dim(d).size))
+      val data = vars.map(g.store.readVar(_, full))
+      val cells: Seq[Seq[Any]] = full.map(r => 0 until r._2)
+        .foldLeft(Seq(Seq.empty[Int]))((acc, r) => acc.flatMap(p => r.map(p :+ _)))
+        .zipWithIndex.map { case (idx, flat) =>
+          dims.zip(idx).map { case (d, i) =>
+            g.store.schema.dim(d).coords match {
+              case IntCoords(v) => v(i)
+              case DoubleCoords(v) => v(i)
+              case StringCoords(v) => v(i)
+              case TimeCoords(v) => v(i)
+              case other => fail(s"unexpected coords $other")
+            }
+          } ++ data.map {
+            case a: Array[Double] => a(flat)
+            case a: Array[Long] => if (a(flat) == Long.MinValue) null else a(flat)
+            case other => fail(s"unexpected var $other")
+          }
+        }
+      val df = ctx.dataFrame(s"reader_${g.name}", g.store, g.chunks, dims)
+      def got(q: DataFrame): Seq[Seq[Any]] = q.collect().toSeq.map(_.toSeq.map {
+        case t: Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+        case v => v
+      })
+      // TopN keyed on every dim (a total order), all ascending or all
+      // descending
+      def topN(q: DataFrame, keys: Seq[String], desc: Boolean) = {
+        val t = q.orderBy(keys.map(k =>
+          if (desc) col(k).desc else col(k).asc): _*).limit(g.k)
+        assert(t.queryExecution.executedPlan.toString.contains("pushedTopN"))
+        got(t)
+      }
+      def sorted(rows: Seq[Seq[Any]], keys: Seq[String], desc: Boolean) = {
+        val ix = keys.map(dims.indexOf)
+        rows.sortWith { (a, b) =>
+          val c = ix.iterator.map(i => compare(a(i), b(i))).find(_ != 0)
+            .getOrElse(0)
+          if (desc) c > 0 else c < 0
+        }.take(g.k)
+      }
+      def byString(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
+      withClue(s"[${g.name}] ") {
+        assert(byString(got(df)) == byString(cells), "dense")
+        val f = df.filter(g.filter)
+        assert(f.queryExecution.executedPlan.toString
+          .contains("exactDimFilters"))
+        assert(byString(got(f)) == byString(cells.filter(g.keep)), "filter")
+        assert(topN(df, dims, desc = false) ==
+          sorted(cells, dims, desc = false), "TopN asc")
+        assert(topN(df, dims, desc = true) ==
+          sorted(cells, dims, desc = true), "TopN desc")
+        // the last dim leading: the walk's innermost dim is then strided
+        // (and, filtered, split into runs)
+        assert(topN(df, dims.reverse, desc = false) ==
+          sorted(cells, dims.reverse, desc = false), "TopN last dim first")
+        assert(topN(f, dims.reverse, desc = true) ==
+          sorted(cells.filter(g.keep), dims.reverse, desc = true),
+          "TopN + filter")
+        val lim = got(df.limit(g.k))
+        assert(lim.size == math.min(g.k, cells.size), "limit")
+        assert(byString(lim).toSet.subsetOf(byString(cells).toSet), "limit")
+      }
+    }
+  }
+
+  test("restricted scan under a variable predicate plans like the full walk") {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    // linearGrid t-chunks of 6 with value stats: air = 200 + t + 2i + 3j,
+    // so chunk c spans [200 + 6c, 254 + 6c] and air < 215 excludes c = 3
+    val store = graft.GridSurface.tree(Fixtures.linearGrid, Map("t" -> 6))
+    val gt = new GridTable("restricted", store, store.chunkMap,
+      Seq("t", "lat", "lon"))
+    val blocks = (1 to 3).map(c => Seq((6 * c, 6), (0, 12), (0, 10)))
+    val df = org.apache.spark.sql.graftinterop.PlanInterop.ofRows(spark,
+      DataSourceV2Relation.create(gt.restrictedTo(blocks), None, None,
+        CaseInsensitiveStringMap.empty)).filter(col("air") < 215.0)
+    counted {
+      val n = df.collect().length
+      val law = Fixtures.linearGrid.laws("air")
+      assert(n == (for (t <- 6 until 24; i <- 0 until 12; j <- 0 until 10
+        if law(Array(t, i, j)) < 215.0) yield 1).size)
+      assert(ReadCounters.partitionsOpened.sum() == 2L)
+    }
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("partitions=2/4"), plan)
+  }
+}
+
+/** Timestamp observations, hourly in t and by the second in x from
+  * `t0`, with NaT wherever (7t + x) % 11 == 3.
+  */
+private final case class NatTimeLaw(t0: Long) extends graft.grid.GridFun {
+  def apply(i: Array[Int]): Double =
+    if ((i(0) * 7 + i(1)) % 11 == 3) Long.MinValue.toDouble
+    else (t0 + i(0) * 3600000000L + i(1) * 1000000L).toDouble
 }

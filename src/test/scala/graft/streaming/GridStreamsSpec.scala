@@ -128,7 +128,7 @@ class GridStreamsSpec extends SparkTestBase {
       assert(store.schema.dim("t").size == 24)
       val law = Fixtures.linearGrid.laws("air")
       val rows = new XarrayContext(spark)
-        .scratchDataFrame("szarr", store, store.chunkMap,
+        .dataFrame("szarr", store, store.chunkMap,
           Seq("t", "lat", "lon"))
         .filter(col("t") >= 5).collect()
       assert(rows.length == 19 * 12 * 10)
