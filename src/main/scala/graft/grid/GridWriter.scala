@@ -44,8 +44,7 @@ object GridWriter {
       */
     def write(varName: String, ciDotted: String, arr: AnyRef,
         eff: Array[Int],
-        conf: org.apache.hadoop.conf.Configuration)
-        : Seq[(String, Option[(Any, Any)], Option[Double])]
+        conf: org.apache.hadoop.conf.Configuration): Seq[StatsSource.Entry]
   }
 
   /** Zarr chunk (or whole SHARD) files: padded to the full chunk shape
@@ -61,8 +60,7 @@ object GridWriter {
       comp: Option[(String, Int)], key: String => String) extends ChunkSink {
     def write(varName: String, ciDotted: String, arr: AnyRef,
         eff: Array[Int],
-        conf: org.apache.hadoop.conf.Configuration)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] = {
+        conf: org.apache.hadoop.conf.Configuration): Seq[StatsSource.Entry] = {
       val padded = ZarrGridStore.padChunk(arr, eff, chunkSz.toArray, dtype)
       val payload =
         if (dtype == GString) innerSz match {
@@ -92,7 +90,7 @@ object GridWriter {
         case Some(inner) =>
           // per-INNER-chunk stats with GLOBAL inner-grid keys — the
           // granularity the scan plans (and prunes) sharded arrays on
-          ZarrGridStore.innerChunkStats(arr, eff,
+          StatsSource.innerChunkStats(arr, eff,
             ciDotted.split('.').map(_.toInt), chunkSz, inner)
       }
     }
@@ -139,7 +137,7 @@ object GridWriter {
         * addressed directly (see ZarrGridStore.EdgeMergeSink).
         */
       globalAlong: Option[(String, Int, Int)] = None)
-      : Seq[(String, Option[(Any, Any)], Option[Double])] = {
+      : Seq[StatsSource.Entry] = {
     val dims = v.dims.map(schema.dim)
     val nd = dims.length
     // planning-side chunk arithmetic, shipped to executors via closures
@@ -280,8 +278,7 @@ object GridWriter {
             case a: Array[String] => a(off) = r.getString(2)
           }
         }
-        val stats =
-          Seq.newBuilder[(String, Option[(Any, Any)], Option[Double])]
+        val stats = Seq.newBuilder[StatsSource.Entry]
         open.foreach { case (chunkId, (arr, _)) =>
           val name = {
             val ci = new Array[Long](nd)

@@ -1,60 +1,247 @@
 package graft.grid
 
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
 
-/** Per-chunk value stats of a zarr tree, abstracted over the sidecar
-  * format so readers never pay more I/O than the variables they touch:
+/** Per-chunk value stats of a zarr tree, read from the `.graft-stats.json`
+  * sidecar so readers never pay more I/O than the variables they touch.
   *
-  *  - format v1 (legacy, still readable): ONE root `.graft-stats.json`
-  *    holding every variable's entries — fine at thousands of chunks,
-  *    a GB-scale single driver read at 10⁸ inner chunks (SCALE.md does
-  *    the math);
-  *  - format v2 (written since round 11): the root file is a tiny
-  *    MANIFEST (`{"version":2,"vars":[...],"fp":{...}}`) and each
-  *    listed variable carries its own `<root>/<var>/.graft-stats.json`.
-  *    Opening a tree reads only the manifest; a variable's stats file
-  *    is fetched on first [[bounds]]/[[sum]] touch and memoized, so a
-  *    query over one variable of a 300-array archive loads one stats
-  *    file, not 300;
-  *  - per-var format v3 (written since round 12, for variables whose
-  *    OWN entry list is huge — the skew-heavy single-dominant-variable
-  *    tree): the per-var file is a directory of leading-chunk-index
-  *    range shards, each shard a separate file loaded only when a key
-  *    in its range is touched, so a tail filter reads O(touched-range)
-  *    stats bytes even when one variable owns 10⁸ chunks.
+  * The root file is a MANIFEST (`{"version":2,"vars":[...],"fp":{...}}`)
+  * and each listed variable carries its own `<root>/<var>/.graft-stats.json`.
+  * Opening a tree reads only the manifest; a variable's stats file is
+  * fetched on first [[bounds]]/[[sum]] touch and memoized, so a query
+  * over one variable of a 300-array archive loads one stats file, not
+  * 300. A per-var file is either a version-2 body (`kind`/`stats`/`sums`)
+  * or, for a variable whose OWN entry list exceeds [[ShardEntriesKey]]
+  * (the skew-heavy single-dominant-variable tree), a version-3 directory
+  * of leading-chunk-index range shards, each shard a separate file
+  * loaded only when a key in its range is touched, so a tail filter
+  * reads O(touched-range) stats bytes even when one variable owns 10⁸
+  * chunks.
   *
-  * Stats are purely an optimization: a corrupt or future-versioned
-  * sidecar degrades to "no stats" with a warning instead of failing the
-  * open (the tree itself is intact; only pruning/metadata-aggregates
-  * lose their shortcut).
+  * Staleness guard: the manifest's `fp` maps each variable to the
+  * content fingerprint of its stats file, and every shard ref carries
+  * its shard file's fingerprint and entry count `n`. A load hashes the
+  * bytes it just read and compares, so the guard covers the EXACT bytes
+  * served: an append that changed one variable's stats flips that
+  * variable's fingerprint (untouched variables keep serving), and a
+  * retried byte-identical rewrite still passes. A mismatch degrades
+  * that variable to "no stats" with a warning — a handle opened before
+  * an append must never serve a merged edge-chunk SUM covering rows it
+  * does not scan.
+  *
+  * Stats are purely an optimization: any sidecar that is not this
+  * format — corrupt, future-versioned, the single-file `"version":1`
+  * body or a manifest without an `fp` for every listed variable —
+  * opens as "no stats" with a warning instead of failing the open (the
+  * tree itself is intact; only pruning and metadata aggregates lose
+  * their shortcut, and serving no bounds is always sound).
   *
   * Keys follow the store contract: `"<var> <ci.dotted>"` on the
   * variable's effective (inner, for sharded v3) chunk grid.
   */
-sealed trait StatsSource extends Serializable {
-  def bounds(key: String): Option[(Any, Any)]
-  def sum(key: String): Option[Double]
+final class StatsSource private (root: String, fps: Map[String, String],
+    hconf: SerializableHadoopConf) extends Serializable {
+  import StatsSource._
+
+  @transient private lazy val cache =
+    scala.collection.concurrent.TrieMap.empty[String, VarStats]
+  @transient private lazy val shardCache =
+    scala.collection.concurrent.TrieMap.empty[(String, Int), Maps]
+
   /** Variables known to carry stats (no per-var loads). */
-  def varNames: Set[String]
+  def varNames: Set[String] = fps.keySet
+
+  /** The manifest fingerprint of `v`'s stats file — carried forward
+    * unread by append merges for untouched variables.
+    */
+  private[grid] def fpOf(v: String): String = fps(v)
+
+  private def guarded[T](p: String, fp: String, none: T)(
+      parse: JsonNode => T): T =
+    try {
+      val bytes = GridIO.readAllBytes(p, hconf.value)
+      if (statsFp(bytes) != fp) {
+        warn(s"$p: stats content changed since this handle opened " +
+          "(concurrent append?) — serving no stats")
+        none
+      } else parse(parseJson(bytes))
+    } catch {
+      case _: java.io.FileNotFoundException =>
+        // manifest listed it but the file is gone (e.g. hand-pruned
+        // tree): stats are optional, serve none
+        none
+      case scala.util.control.NonFatal(e) =>
+        warn(s"$p: unreadable stats file (${e.getMessage}) — ignoring")
+        none
+    }
+
+  private def load(v: String): VarStats =
+    cache.getOrElseUpdate(v,
+      guarded(s"$root/$v/$Sidecar", fps(v), NoStats: VarStats) { node =>
+        node.path("version").asInt(0) match {
+          case 2 => Full(parseVarStats(v, node))
+          case 3 =>
+            Sharded(node.path("shards").elements().asScala.map { s =>
+              require(s.has("n"), s"$v: shard ref without an entry count")
+              ShardRef(s.path("lo").asLong(), s.path("hi").asLong(),
+                s.path("file").asText(), s.path("fp").asText(),
+                s.path("n").asLong())
+            }.toIndexedSeq.sortBy(_.lo))
+          case _ =>
+            warn(s"$root/$v: unsupported per-var stats version — ignoring")
+            NoStats
+        }
+      })
+
+  private def loadShard(v: String, idx: Int, s: ShardRef): Maps =
+    shardCache.getOrElseUpdate((v, idx),
+      guarded(s"$root/$v/${s.file}", s.fp, NoMaps)(parseVarStats(v, _)))
+
+  /** The shard whose [lo, hi] leading-index range covers `ci`'s
+    * leading chunk index, loaded on demand; keys outside every range
+    * have no stats. Binary search over the sorted shard list.
+    */
+  private def shardMaps(v: String, sh: Sharded, ci: String): Maps = {
+    val lead = ci.takeWhile(_ != '.') match {
+      case s if s.nonEmpty && s.forall(_.isDigit) => s.toLong
+      case _ => return NoMaps
+    }
+    var lo = 0
+    var hi = sh.shards.length - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val s = sh.shards(mid)
+      if (lead < s.lo) hi = mid - 1
+      else if (lead > s.hi) lo = mid + 1
+      else return loadShard(v, mid, s)
+    }
+    NoMaps
+  }
+
+  /** Append-merge accessor: split a sharded variable at the smallest
+    * touched leading index `minLead` into (preserved prefix shard
+    * refs, loaded suffix entries). The cut steps one shard EARLIER
+    * than the first shard whose range reaches `minLead`, because the
+    * one-shot greedy packer could let that earlier shard absorb a
+    * shrunk or gap-filling first suffix group — everything before it
+    * packs from untouched groups only and is provably byte-stable.
+    * None when the variable is absent or not sharded.
+    */
+  private[grid] def suffixSplit(v: String, minLead: Long)
+      : Option[(IndexedSeq[ShardRef], Seq[Entry])] =
+    if (!fps.contains(v)) None
+    else load(v) match {
+      case sh: Sharded if sh.shards.nonEmpty =>
+        val first = sh.shards.indexWhere(_.hi >= minLead)
+        val cut =
+          if (first == -1) sh.shards.length - 1
+          else math.max(0, first - 1)
+        Some((sh.shards.take(cut), entryList(foldShards(v, sh, from = cut))))
+      case _ => None
+    }
+
+  /** Load and fold shards [from, end) into one (bounds, sums) pair —
+    * the one fold entriesFor (full range) and suffixSplit (suffix
+    * only) share, so entry-list semantics cannot diverge between the
+    * full-load and suffix-merge paths.
+    */
+  private def foldShards(v: String, sh: Sharded, from: Int): Maps = {
+    val all = (from until sh.shards.length).map(i =>
+      loadShard(v, i, sh.shards(i)))
+    (all.map(_._1).fold(Map.empty[String, (Any, Any)])(_ ++ _),
+      all.map(_._2).fold(Map.empty[String, Double])(_ ++ _))
+  }
+
+  private def mapsFor(key: String): Maps = {
+    val parts = key.split(" ", 2)
+    val v = parts(0)
+    if (!fps.contains(v)) NoMaps
+    else load(v) match {
+      case Full(m) => m
+      case sh: Sharded if parts.length == 2 => shardMaps(v, sh, parts(1))
+      case _: Sharded => NoMaps
+    }
+  }
+
+  def bounds(key: String): Option[(Any, Any)] = mapsFor(key)._1.get(key)
+  def sum(key: String): Option[Double] = mapsFor(key)._2.get(key)
+
   /** One variable's full entry list (key, bounds, sum) — forces that
     * variable's load only. Append merges ride on this: untouched
     * variables' files are never read or rewritten.
     */
-  def entriesFor(v: String): Seq[(String, Option[(Any, Any)], Option[Double])]
+  def entriesFor(v: String): Seq[Entry] =
+    if (!fps.contains(v)) Seq.empty
+    else entryList(load(v) match {
+      case Full(m) => m
+      // merge/inspection surface: force every shard
+      case sh: Sharded => foldShards(v, sh, from = 0)
+    })
+
   /** Everything, eagerly — test/inspection surface, O(all files). */
-  final def allBounds: Map[String, (Any, Any)] =
+  def allBounds: Map[String, (Any, Any)] =
     varNames.toSeq.flatMap(v =>
       entriesFor(v).flatMap(e => e._2.map(e._1 -> _))).toMap
-  final def allSums: Map[String, Double] =
+  def allSums: Map[String, Double] =
     varNames.toSeq.flatMap(v =>
       entriesFor(v).flatMap(e => e._3.map(e._1 -> _))).toMap
 }
 
 object StatsSource {
 
+  /** One sidecar stats entry: (`"<var> <chunk key>"`, (min, max), sum). */
+  type Entry = (String, Option[(Any, Any)], Option[Double])
+
+  private type Maps = (Map[String, (Any, Any)], Map[String, Double])
+  private val NoMaps: Maps = (Map.empty, Map.empty)
+
+  /** One loaded variable's stats: the full maps (a version-2 per-var
+    * file) or a shard directory (version 3).
+    */
+  private sealed trait VarStats
+  private final case class Full(m: Maps) extends VarStats
+  /** `shards` sorted by `lo`; ranges are disjoint. `fp` is the shard
+    * file's content fingerprint recorded at write time — the same
+    * bytes-served guard the manifest applies to the per-var file,
+    * chained one level down. `n` is the shard's entry count — what lets
+    * an append merge keep prefix shards UNLOADED (`n` sums stand in for
+    * loading them when re-deciding the sharded-vs-not threshold).
+    */
+  private[grid] final case class ShardRef(lo: Long, hi: Long,
+      file: String, fp: String, n: Long)
+  private final case class Sharded(shards: IndexedSeq[ShardRef])
+    extends VarStats
+  private val NoStats: VarStats = Full(NoMaps)
+
+  /** A tree without a sidecar: no variable carries stats. */
+  val Empty: StatsSource = new StatsSource("", Map.empty, null)
+
+  /** File name of the root manifest and of every per-var stats file.
+    * zarr-python ignores unknown files, so the tree stays an ordinary
+    * zarr archive; foreign trees have none and serve no bounds.
+    */
+  private[grid] val Sidecar = ".graft-stats.json"
+
+  /** Entry-count threshold above which one variable's stats split into
+    * leading-chunk-index range shards (per-var version 3). The per-var
+    * split already keeps a 300-variable archive from paying one giant
+    * read, but a SKEW-HEAVY tree — one dominant 100 TB data variable
+    * plus tiny coords — concentrates everything back into one file;
+    * sharding bounds any single stats read by this many entries
+    * (~40 B/entry of JSON, so the default keeps files a few MB).
+    */
+  val ShardEntriesKey = "graft.zarr.stats.shardEntries"
+  private val DefaultShardEntries = 65536
+
+  private val mapper = new ObjectMapper()
+
+  private def parseJson(bytes: Array[Byte]): JsonNode = mapper.readTree(bytes)
+
   private def warn(msg: String): Unit =
     org.slf4j.LoggerFactory.getLogger(classOf[StatsSource]).warn(msg)
+
+  private def varOf(e: Entry): String = e._1.split(" ", 2)(0)
 
   /** (min, max) of one chunk payload — Long-boxed for long kinds, Double
     * otherwise; None when any value is non-finite (NaN chunks must not
@@ -127,271 +314,197 @@ object StatsSource {
     case _ => None
   }
 
-  case object Empty extends StatsSource {
-    def bounds(key: String): Option[(Any, Any)] = None
-    def sum(key: String): Option[Double] = None
-    def varNames: Set[String] = Set.empty
-    def entriesFor(v: String)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] = Seq.empty
-  }
-
-  /** Fully-materialized maps — the v1 single-file format, and the
-    * in-memory form tests build directly.
+  /** Per-INNER-chunk stats of one scattered outer shard: `arr` is the
+    * flat C-order EFFECTIVE cells of outer chunk `outerCi` (shape
+    * `eff`, clipped at the array extent), `inner` the shard's inner
+    * chunk shape. Returns one sidecar entry per intersecting inner
+    * chunk, keyed on the GLOBAL inner grid — exactly the blocks the
+    * scan plans sharded arrays on, so shard trees prune and
+    * metadata-aggregate at the same granularity they read.
     */
-  final case class Eager(stats: Map[String, (Any, Any)],
-      sums: Map[String, Double]) extends StatsSource {
-    def bounds(key: String): Option[(Any, Any)] = stats.get(key)
-    def sum(key: String): Option[Double] = sums.get(key)
-    def varNames: Set[String] =
-      (stats.keysIterator ++ sums.keysIterator)
-        .map(_.split(" ", 2)(0)).toSet
-    def entriesFor(v: String)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] = {
-      val p = v + " "
-      (stats.keysIterator ++ sums.keysIterator).filter(_.startsWith(p))
-        .toSeq.distinct.sorted
-        .map(k => (k, stats.get(k), sums.get(k)))
+  private[grid] def innerChunkStats(arr: AnyRef, eff: Array[Int],
+      outerCi: Array[Int], chunkSz: Seq[Int], inner: Seq[Int]): Seq[Entry] = {
+    arr match {
+      case _: Array[String] => return Nil // vlen: no numeric stats
+      case _ => ()
     }
-  }
-
-  /** One loaded variable's stats: either the full maps (per-var format
-    * v2) or a shard directory (format v3 — skew-heavy variables whose
-    * entry list is itself huge split into leading-chunk-index ranges,
-    * each range a separate file loaded only when a key in it is
-    * touched).
-    */
-  private sealed trait VarStats
-  private final case class Full(st: Map[String, (Any, Any)],
-      su: Map[String, Double]) extends VarStats
-  /** `shards` sorted by `lo`; ranges are disjoint. `fp` is the shard
-    * file's content fingerprint recorded at write time — the same
-    * bytes-served guard the manifest applies to the per-var file,
-    * chained one level down. `n` is the shard's entry count (-1 when
-    * written before counts existed) — what lets an append merge keep
-    * prefix shards UNLOADED (ShardRef.n sums stand in for loading
-    * them when re-deciding the sharded-vs-not threshold).
-    */
-  private[grid] final case class ShardRef(lo: Long, hi: Long,
-      file: String, fp: String, n: Long)
-  private final case class Sharded(shards: IndexedSeq[ShardRef])
-    extends VarStats
-
-  private val NoStats = Full(Map.empty, Map.empty)
-
-  /** Format v2/v3: per-variable files loaded on first touch. The cache
-    * is transient — a store shipped to executors re-reads lazily there
-    * (executors only readVar today, so in practice nothing loads).
-    *
-    * Staleness guard, two tiers:
-    *  - `fps` (manifests written since round 12) maps each variable to
-    *    the content fingerprint of its stats file at manifest-write
-    *    time. A load hashes the bytes it just read and compares — the
-    *    guard covers the EXACT bytes served, so there is no window at
-    *    all: an append that changed this variable's stats flips its
-    *    fingerprint (and only its — untouched variables keep serving),
-    *    and a retried byte-identical rewrite correctly still passes.
-    *  - legacy v2 manifests (no `fp`) fall back to comparing the
-    *    manifest's (length, mtime) `manifestKey` captured at OPEN —
-    *    coarse (mtime granularity) but only for pre-fp trees.
-    *
-    * Either mismatch degrades that variable to "no stats" with a
-    * warning: v1's eager open-time parse could never serve post-append
-    * stats against a pre-append extent (e.g. a merged edge-chunk SUM
-    * covering rows the handle doesn't scan), and the lazy form must
-    * not either.
-    */
-  final class LazyPerVar(root: String, vars: Set[String],
-      hconf: SerializableHadoopConf,
-      manifestKey: Option[(Long, Long)],
-      fps: Map[String, String]) extends StatsSource {
-    @transient private lazy val cache =
-      scala.collection.concurrent.TrieMap.empty[String, VarStats]
-    @transient private lazy val shardCache =
-      scala.collection.concurrent.TrieMap
-        .empty[(String, Int), (Map[String, (Any, Any)], Map[String, Double])]
-
-    /** Carried forward by append merges for untouched variables. */
-    private[grid] def fpOf(v: String): Option[String] = fps.get(v)
-
-    /** True when this variable's lazy loads are manifest-independent:
-      * either it has no stats at all, or its file is fp-guarded (the
-      * bytes-served check needs no manifest). Append paths use this to
-      * SKIP the eager pre-force before deleting the manifest — the
-      * skip is what lets the suffix merge keep prefix shards unread
-      * end-to-end, not just in the merge unit.
-      */
-    private[grid] def fpCovered(v: String): Boolean =
-      !vars(v) || fps.contains(v)
-
-    private def guarded(p: String, expectFp: Option[String])(
-        parse: com.fasterxml.jackson.databind.JsonNode => VarStats)
-        : VarStats =
-      try {
-        val bytes = GridIO.readAllBytes(p, hconf.value)
-        expectFp match {
-          case Some(fp) if ZarrGridStore.statsFp(bytes) != fp =>
-            warn(s"$p: stats content changed since this handle opened " +
-              "(concurrent append?) — serving no stats")
-            NoStats
-          case Some(_) => parse(ZarrGridStore.parseJson(bytes))
-          case None =>
-            // legacy manifest: coarse (length, mtime) guard
-            val manifest = s"$root/${ZarrGridStore.StatsSidecar}"
-            if (GridIO.statusOf(manifest, hconf.value) != manifestKey) {
-              warn(s"$p: stats manifest changed since this handle " +
-                "opened (concurrent append?) — serving no stats")
-              NoStats
-            } else parse(ZarrGridStore.parseJson(bytes))
+    val nd = eff.length
+    val effStrides = ChunkAssembly.strides(eff)
+    val perDim = Array.tabulate(nd)(d =>
+      (eff(d) + inner(d) - 1) / inner(d)) // intersecting inner chunks
+    val innersPerOuter = Array.tabulate(nd)(d => chunkSz(d) / inner(d))
+    val nInner = perDim.product
+    val out = Seq.newBuilder[Entry]
+    val pos = new Array[Int](nd)
+    var k = 0
+    while (k < nInner) {
+      var rest = k
+      var d = nd - 1
+      while (d >= 0) { pos(d) = rest % perDim(d); rest /= perDim(d); d -= 1 }
+      val start = Array.tabulate(nd)(d => pos(d) * inner(d))
+      val len = Array.tabulate(nd)(d =>
+        math.min(inner(d), eff(d) - start(d)))
+      val cells = len.product
+      // gather the box into a dense slice (runs of the last dim)
+      val slice = java.lang.reflect.Array.newInstance(
+        arr.getClass.getComponentType, cells)
+      val run = len(nd - 1)
+      val nRuns = cells / run
+      // strides of the leading dims' run counter (C-order over
+      // len(0..nd-2): last leading dim varies fastest)
+      val leadStrides = ChunkAssembly.strides(
+        if (nd == 1) Array(1) else len.init)
+      var r = 0
+      while (r < nRuns) {
+        var srcOff = start(nd - 1)
+        var rem = r
+        var j = 0
+        while (j < nd - 1) {
+          val lj = rem / leadStrides(j)
+          rem %= leadStrides(j)
+          srcOff += (start(j) + lj) * effStrides(j)
+          j += 1
         }
-      } catch {
-        case _: java.io.FileNotFoundException =>
-          // manifest listed it but the file is gone (e.g. hand-pruned
-          // tree): stats are optional, serve none
-          NoStats
-        case scala.util.control.NonFatal(e) =>
-          warn(s"$p: unreadable stats file (${e.getMessage}) — ignoring")
-          NoStats
+        System.arraycopy(arr, srcOff, slice, r * run, run)
+        r += 1
       }
-
-    private def load(v: String): VarStats =
-      cache.getOrElseUpdate(v,
-        guarded(s"$root/$v/${ZarrGridStore.StatsSidecar}", fps.get(v)) {
-          node =>
-            node.path("version").asInt(0) match {
-              case 2 =>
-                val (st, su) = parseVarStats(v, node)
-                Full(st, su)
-              case 3 =>
-                val shards = node.path("shards").elements().asScala.map {
-                  s => ShardRef(s.path("lo").asLong(),
-                    s.path("hi").asLong(), s.path("file").asText(),
-                    s.path("fp").asText(), s.path("n").asLong(-1L))
-                }.toIndexedSeq.sortBy(_.lo)
-                Sharded(shards)
-              case _ =>
-                warn(s"$root/$v: unsupported per-var stats version — " +
-                  "ignoring")
-                NoStats
-            }
-        })
-
-    private def loadShard(v: String, idx: Int, file: String, fp: String)
-        : (Map[String, (Any, Any)], Map[String, Double]) =
-      shardCache.getOrElseUpdate((v, idx),
-        guarded(s"$root/$v/$file", Some(fp)) { node =>
-          val (st, su) = parseVarStats(v, node)
-          Full(st, su)
-        } match {
-          case Full(st, su) => (st, su)
-          case _ => (Map.empty, Map.empty)
-        })
-
-    /** The shard whose [lo, hi] leading-index range covers `ci`'s
-      * leading chunk index, loaded on demand; keys outside every range
-      * have no stats. Binary search over the sorted shard list.
-      */
-    private def shardMaps(v: String, sh: Sharded, ci: String)
-        : (Map[String, (Any, Any)], Map[String, Double]) = {
-      val lead = ci.takeWhile(_ != '.') match {
-        case s if s.nonEmpty && s.forall(_.isDigit) => s.toLong
-        case _ => return (Map.empty, Map.empty)
-      }
-      var lo = 0
-      var hi = sh.shards.length - 1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val s = sh.shards(mid)
-        if (lead < s.lo) hi = mid - 1
-        else if (lead > s.hi) lo = mid + 1
-        else return loadShard(v, mid, s.file, s.fp)
-      }
-      (Map.empty, Map.empty)
+      val key = (0 until nd).map(d =>
+        outerCi(d) * innersPerOuter(d) + pos(d)).mkString(".")
+      out += ((key, chunkStats(slice), chunkSum(slice)))
+      k += 1
     }
+    out.result()
+  }
 
-    /** Append-merge accessor: split a sharded variable at the smallest
-      * touched leading index `minLead` into (preserved prefix shard
-      * refs, loaded suffix entries). The cut steps one shard EARLIER
-      * than the first shard whose range reaches `minLead`, because the
-      * one-shot greedy packer could let that earlier shard absorb a
-      * shrunk or gap-filling first suffix group — everything before it
-      * packs from untouched groups only and is provably byte-stable.
-      * None when the variable is not sharded, or any prefix shard
-      * predates entry counts (the caller then falls back to the full
-      * load; counts are needed to re-decide the sharded-vs-not
-      * threshold without reading the prefix).
-      */
-    private[grid] def suffixSplit(v: String, minLead: Long)
-        : Option[(IndexedSeq[ShardRef],
-          Seq[(String, Option[(Any, Any)], Option[Double])])] =
-      load(v) match {
-        case sh: Sharded if sh.shards.nonEmpty =>
-          val first = sh.shards.indexWhere(_.hi >= minLead)
-          val cut =
-            if (first == -1) sh.shards.length - 1
-            else math.max(0, first - 1)
-          val preserved = sh.shards.take(cut)
-          if (preserved.exists(_.n < 0L)) None
-          else {
-            val (st, su) = foldShards(v, sh, from = cut)
-            Some((preserved, entryList(st, su)))
-          }
-        case _ => None
-      }
+  // ---- the sidecar format ----
 
-    /** Load and fold shards [from, end) into one (bounds, sums) pair —
-      * the one fold entriesFor (full range) and suffixSplit (suffix
-      * only) share, so entry-list semantics cannot diverge between the
-      * full-load and suffix-merge paths.
-      */
-    private def foldShards(v: String, sh: Sharded, from: Int)
-        : (Map[String, (Any, Any)], Map[String, Double]) = {
-      val all = (from until sh.shards.length).map { i =>
-        val s = sh.shards(i)
-        loadShard(v, i, s.file, s.fp)
-      }
-      (all.map(_._1).fold(Map.empty[String, (Any, Any)])(_ ++ _),
-        all.map(_._2).fold(Map.empty[String, Double])(_ ++ _))
-    }
-
-    private def entryList(st: Map[String, (Any, Any)],
-        su: Map[String, Double])
-        : Seq[(String, Option[(Any, Any)], Option[Double])] =
-      (st.keysIterator ++ su.keysIterator).toSeq.distinct.sorted
-        .map(k => (k, st.get(k), su.get(k)))
-
-    private def mapsFor(key: String)
-        : (Map[String, (Any, Any)], Map[String, Double]) = {
-      val parts = key.split(" ", 2)
-      val v = parts(0)
-      if (!vars(v)) (Map.empty, Map.empty)
-      else load(v) match {
-        case Full(st, su) => (st, su)
-        case sh: Sharded if parts.length == 2 => shardMaps(v, sh, parts(1))
-        case _: Sharded => (Map.empty, Map.empty)
-      }
-    }
-
-    def bounds(key: String): Option[(Any, Any)] = mapsFor(key)._1.get(key)
-    def sum(key: String): Option[Double] = mapsFor(key)._2.get(key)
-    def varNames: Set[String] = vars
-    def entriesFor(v: String)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] =
-      if (!vars(v)) Seq.empty
+  /** Open-time stats resolution: only an fp-guarded version-2 manifest
+    * is served (per-var files load lazily on first touch); no sidecar
+    * is [[Empty]], and anything else degrades to [[Empty]] with a
+    * warning instead of bricking an otherwise-valid tree.
+    */
+  def open(root: String, hconf: SerializableHadoopConf): StatsSource = {
+    val p = s"$root/$Sidecar"
+    val bytes =
+      try GridIO.readAllBytes(p, hconf.value)
+      catch { case _: java.io.FileNotFoundException => return Empty }
+    try {
+      val node = parseJson(bytes)
+      val fps = node.path("vars").elements().asScala.map { v =>
+        v.asText() -> node.path("fp").path(v.asText()) }.toMap
+      if (node.path("version").asInt(0) == 2 && fps.values.forall(_.isTextual))
+        new StatsSource(root, fps.map { case (v, fp) => v -> fp.asText() },
+          hconf)
       else {
-        val (st, su) = load(v) match {
-          case Full(st, su) => (st, su)
-          // merge/inspection surface: force every shard
-          case sh: Sharded => foldShards(v, sh, from = 0)
-        }
-        entryList(st, su)
+        warn(s"$p: unsupported stats sidecar (not a version-2 manifest " +
+          "with an fp per variable) — ignoring (no pruning bounds served)")
+        Empty
       }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        warn(s"$p: unreadable stats sidecar (${e.getMessage}) — ignoring " +
+          "(no pruning bounds served)")
+        Empty
+    }
   }
 
-  /** Parse one variable's v2 stats node (`kind`/`stats`/`sums`) into
-    * store-keyed maps.
+  /** Drop the root manifest. Writers call this BEFORE any chunk moves
+    * and write the manifest LAST, and readers consult per-var files
+    * only through the manifest, so a crash can only LOSE stats, never
+    * serve stale bounds.
     */
-  private[grid] def parseVarStats(name: String, vn: JsonNode)
-      : (Map[String, (Any, Any)], Map[String, Double]) = {
+  def dropManifest(root: String,
+      conf: org.apache.hadoop.conf.Configuration): Unit =
+    GridIO.delete(s"$root/$Sidecar", conf)
+
+  /** Full-tree stats write (one-shot writers): per-var files for every
+    * variable with entries, stale files dropped for those without,
+    * manifest last. Entries group by variable ONCE — handing the full
+    * list to every per-var write would rescan E entries V times, a
+    * real driver cost at 10⁸ entries.
+    */
+  def write(root: String, schema: GridSchema, entries: Seq[Entry],
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val byVar = entries.groupBy(varOf)
+    writeManifest(root, schema.vars.flatMap(v =>
+      writeVar(root, v, byVar.getOrElse(v.name, Seq.empty), conf)
+        .map(v.name -> _)), conf)
+  }
+
+  /** Rewrite the sidecar after an append: per TOUCHED variable, old
+    * entries ++ new entries (new wins on the shared edge-chunk key).
+    * Only the growing variables' files are read and rewritten —
+    * untouched variables' files stay on disk unread and their
+    * fingerprints carry forward, which is what keeps append O(slab),
+    * not O(tree), at 10⁸ chunks. Appending to a foreign tree that never
+    * had a sidecar still creates one covering the appended chunks
+    * (partial coverage is sound: absent keys serve no bounds).
+    */
+  def merge(root: String, schema: GridSchema, old: StatsSource,
+      newEntries: Seq[Entry], conf: org.apache.hadoop.conf.Configuration)
+      : Unit = {
+    val touched = newEntries.map(varOf).toSet
+    val threshold = conf.getInt(ShardEntriesKey, DefaultShardEntries)
+    val rewritten = touched.toSeq.sorted.flatMap { vn =>
+      schema.vars.find(_.name == vn).flatMap { v =>
+        val news = newEntries.filter(varOf(_) == vn)
+        val replaced = news.map(_._1).toSet
+        // SUFFIX merge for sharded variables: the slab's smallest
+        // touched leading index bounds what can change; shards before
+        // the (safety-stepped) cut stay on disk unread and re-enter
+        // the manifest verbatim, so a tail append into a 10⁸-entry
+        // variable loads and rewrites O(touched-suffix) stats, never
+        // O(var). Falls back to the full load when the variable is
+        // unsharded, the merged total could cross below the shard
+        // threshold, or the suffix would empty out.
+        val minLead = news.flatMap(
+          _._1.split(" ", 2)(1).takeWhile(_ != '.').toLongOption).minOption
+        val suffixPath = minLead.flatMap(old.suffixSplit(vn, _)).flatMap {
+          case (pres, sufOld) =>
+            val suffix = sufOld.filterNot(e => replaced(e._1)) ++ news
+            val live = suffix.count(e => e._2.isDefined || e._3.isDefined)
+            if (live == 0 || pres.map(_.n).sum + live <= threshold) None
+            else Some((pres, suffix))
+        }
+        (suffixPath match {
+          case Some((pres, suffix)) => writeVar(root, v, suffix, conf, pres)
+          case None =>
+            writeVar(root, v,
+              old.entriesFor(vn).filterNot(e => replaced(e._1)) ++ news, conf)
+        }).map(vn -> _)
+      }
+    }
+    writeManifest(root, rewritten ++
+      (old.varNames -- touched).toSeq.map(vn => vn -> old.fpOf(vn)), conf)
+  }
+
+  /** `kind` tag per dtype, mirroring chunkStats boxing: long-kind
+    * arrays carry (Long, Long) (exact past 2^53), strings their UTF-8
+    * binary-order extrema, everything else (Double, Double).
+    */
+  private def kindOf(dtype: GridType): String = dtype match {
+    case GLong | GTimestamp | GDuration => "long"
+    case GString => "string"
+    case _ => "double"
+  }
+
+  /** Content fingerprint of a stats file — the bytes-served staleness
+    * guard: truncated SHA-256, hex. Purely content-derived so the
+    * append-equals-one-shot byte identity of the sidecar tree holds
+    * (a random token would break it) and a retried byte-identical
+    * rewrite still validates.
+    */
+  private def statsFp(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .take(8).map(b => f"$b%02x").mkString
+
+  private def fpOfString(s: String): String =
+    statsFp(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** Parse one variable's version-2 stats node (`kind`/`stats`/`sums`)
+    * into store-keyed maps.
+    */
+  private def parseVarStats(name: String, vn: JsonNode): Maps = {
     val kind = vn.path("kind").asText("double")
     val stats = Map.newBuilder[String, (Any, Any)]
     val sums = Map.newBuilder[String, Double]
@@ -408,5 +521,163 @@ object StatsSource {
     vn.path("sums").properties().asScala.foreach(s =>
       sums += s"$name ${s.getKey}" -> s.getValue.asDouble())
     (stats.result(), sums.result())
+  }
+
+  private def entryList(m: Maps): Seq[Entry] =
+    (m._1.keysIterator ++ m._2.keysIterator).toSeq.distinct.sorted
+      .map(k => (k, m._1.get(k), m._2.get(k)))
+
+  /** One variable's version-2 stats CONTENT (also the per-shard file
+    * body under version 3). Entries sorted by chunk key — scatter
+    * results arrive in executor map order and the bytes must be
+    * deterministic (the append byte-identity property pins it).
+    */
+  private def varStatsJson(v: VarDef, es: Seq[Entry]): String = {
+    val vn = mapper.createObjectNode()
+    vn.put("version", 2)
+    vn.put("kind", kindOf(v.dtype))
+    val st = vn.putObject("stats")
+    val su = vn.putObject("sums")
+    es.foreach { case (ci, mm, sm) =>
+      mm.foreach { case (mn, mx) =>
+        val arr = st.putArray(ci)
+        Seq(mn, mx).foreach {
+          case l: Long => arr.add(l)
+          case d: Double => arr.add(d)
+          case s: String => arr.add(s)
+          case other => throw new IllegalStateException(
+            s"${v.name}: unexpected stats box ${other.getClass}")
+        }
+      }
+      sm.foreach(s => su.put(ci, s))
+    }
+    mapper.writeValueAsString(vn)
+  }
+
+  /** Write one variable's stats from its (key, bounds, sum) entries;
+    * deletes stale files when there is nothing to record. Small entry
+    * lists write the single version-2 per-var file; lists over
+    * [[ShardEntriesKey]] split by leading chunk index into range shard
+    * files plus a version-3 shard directory, so a reader pruning a
+    * range of a skew-heavy variable reads O(touched shards), not the
+    * whole list. Shard packing is a pure function of the entry set
+    * (numeric-sorted leading-index groups, greedily packed), so a
+    * merge rewrite stays byte-identical to a one-shot write. Returns
+    * the written per-var file's content fingerprint, or None when no
+    * file exists for the variable.
+    */
+  private def writeVar(root: String, v: VarDef, entries: Seq[Entry],
+      conf: org.apache.hadoop.conf.Configuration,
+      preserved: Seq[ShardRef] = Seq.empty): Option[String] = {
+    val p = s"$root/${v.name}/$Sidecar"
+    val es = entries.flatMap { case (key, mm, sm) =>
+      key.split(" ", 2) match {
+        case Array(nm, ci) if nm == v.name &&
+          (mm.isDefined || sm.isDefined) => Some((ci, mm, sm))
+        case _ => None
+      }
+    }.sortBy(_._1)
+    // suffix-merge contract (merge): `preserved` prefix shards stay on
+    // disk UNREAD and re-enter the shard directory verbatim; `entries`
+    // covers only the repacked suffix, whose greedy packing is
+    // independent of the prefix (packing restarts at each shard
+    // boundary), so the result is byte-identical to a full one-shot
+    // write of prefix+suffix. The caller guarantees the combined entry
+    // count exceeds the shard threshold when preserved is non-empty.
+    require(preserved.isEmpty || es.nonEmpty,
+      s"${v.name}: preserved prefix with empty suffix")
+    // a previous version-3 write's shard layout, (file -> fp): shard
+    // files must not outlive a rewrite that shards differently (or not
+    // at all) — the no-longer-referenced ones delete LAST (after the
+    // new per-var file is in place, so a crash window can only lose
+    // stats) — and a rewrite producing a byte-identical shard (same
+    // name, same fingerprint) SKIPS the write: greedy packing is a
+    // pure function of the entry set, so an append touching only the
+    // tail leaves every prefix shard's (lo, hi, bytes) unchanged and
+    // the merge pays O(touched-suffix) shard writes, not O(var)
+    val oldShards: Map[String, String] =
+      try {
+        val node = parseJson(GridIO.readAllBytes(p, conf))
+        if (node.path("version").asInt(0) == 3)
+          node.path("shards").elements().asScala
+            .map(s => s.path("file").asText() -> s.path("fp").asText())
+            .toMap
+        else Map.empty
+      } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    if (es.isEmpty) {
+      GridIO.delete(p, conf)
+      oldShards.keys.foreach(f => GridIO.delete(s"$root/${v.name}/$f", conf))
+      return None
+    }
+    val threshold = conf.getInt(ShardEntriesKey, DefaultShardEntries)
+    val (json, newShards) =
+      if (preserved.isEmpty && es.size <= threshold)
+        (varStatsJson(v, es), Seq.empty[String])
+      else {
+        // group by leading chunk index (groups stay whole so a range
+        // lookup is unambiguous; one index's group exceeding the
+        // threshold just yields one oversized shard), pack greedily
+        val groups = es.groupBy(_._1.takeWhile(_ != '.').toLong)
+          .toSeq.sortBy(_._1)
+        val shards = scala.collection.mutable.ArrayBuffer
+          .empty[(Long, Long, Seq[Entry])]
+        groups.foreach { case (lead, ges) =>
+          shards.lastOption match {
+            case Some((lo, _, acc))
+                if acc.size + ges.size <= threshold =>
+              shards(shards.length - 1) = (lo, lead, acc ++ ges)
+            case _ => shards += ((lead, lead, ges))
+          }
+        }
+        val top = mapper.createObjectNode()
+        top.put("version", 3)
+        top.put("kind", kindOf(v.dtype))
+        val arr = top.putArray("shards")
+        def addRef(s: ShardRef): Unit = {
+          val e = arr.addObject()
+          e.put("lo", s.lo)
+          e.put("hi", s.hi)
+          e.put("file", s.file)
+          e.put("fp", s.fp)
+          e.put("n", s.n)
+        }
+        // preserved prefix re-enters the shard directory verbatim, unread
+        preserved.foreach(addRef)
+        val files = shards.map { case (lo, hi, ses) =>
+          val file = f".graft-stats.$lo%012d-$hi%012d.json"
+          val body = varStatsJson(v, ses.sortBy(_._1))
+          val fp = fpOfString(body)
+          // byte-identical shard already on disk: skip the PUT
+          if (!oldShards.get(file).contains(fp))
+            GridIO.writeString(s"$root/${v.name}/$file", body, conf)
+          addRef(ShardRef(lo, hi, file, fp, ses.size.toLong))
+          file
+        }
+        (mapper.writeValueAsString(top),
+          preserved.map(_.file) ++ files.toSeq)
+      }
+    GridIO.writeString(p, json, conf)
+    oldShards.keysIterator.filterNot(newShards.toSet).foreach(f =>
+      GridIO.delete(s"$root/${v.name}/$f", conf))
+    Some(fpOfString(json))
+  }
+
+  /** Root manifest — written LAST so readers never consult a per-var
+    * file the writer has not finished. `vars` carries each variable's
+    * per-var-file fingerprint, which readers use as the bytes-served
+    * staleness guard. No variable with stats: no manifest.
+    */
+  private def writeManifest(root: String, vars: Seq[(String, String)],
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    if (vars.isEmpty) { dropManifest(root, conf); return }
+    val top = mapper.createObjectNode()
+    top.put("version", 2)
+    val sorted = vars.sortBy(_._1)
+    val arr = top.putArray("vars")
+    sorted.foreach(v => arr.add(v._1))
+    val fo = top.putObject("fp")
+    sorted.foreach { case (n, fp) => fo.put(n, fp) }
+    GridIO.writeString(s"$root/$Sidecar", mapper.writeValueAsString(top),
+      conf)
   }
 }

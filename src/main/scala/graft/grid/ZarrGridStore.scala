@@ -212,10 +212,10 @@ final case class ZarrGridStore(root: String, schema: GridSchema,
     /** Per-chunk (min,max) / sums recorded by THIS engine's writers in
       * the `.graft-stats.json` sidecar (keys `"<var> <ci.dotted>"`,
       * the [[GridStore.varBounds]] contract), loaded lazily per variable
-      * under format v2 ([[StatsSource]]). Parquet-footer rules apply:
-      * the sidecar is part of the written format — rewriting chunk
-      * files by hand without dropping it is corruption. Foreign trees
-      * have no sidecar and simply serve no bounds.
+      * ([[StatsSource]]). Parquet-footer rules apply: the sidecar is
+      * part of the written format — rewriting chunk files by hand
+      * without dropping it is corruption. Foreign trees have no sidecar
+      * and simply serve no bounds.
       */
     statsSource: StatsSource = StatsSource.Empty) extends GridStore {
 
@@ -461,375 +461,8 @@ object ZarrGridStore {
       }
 
     ZarrGridStore(cleanRoot, GridSchema(dims, vars, dsAttrs), metas2, hconf,
-      statsSource = readStatsManifest(cleanRoot, hconf))
+      statsSource = StatsSource.open(cleanRoot, hconf))
   }
-
-  /** Per-INNER-chunk stats of one scattered outer shard: `arr` is the
-    * flat C-order EFFECTIVE cells of outer chunk `outerCi` (shape
-    * `eff`, clipped at the array extent), `inner` the shard's inner
-    * chunk shape. Returns one sidecar entry per intersecting inner
-    * chunk, keyed on the GLOBAL inner grid — exactly the blocks the
-    * scan plans sharded arrays on, so shard trees prune and
-    * metadata-aggregate at the same granularity they read.
-    */
-  private[grid] def innerChunkStats(arr: AnyRef, eff: Array[Int],
-      outerCi: Array[Int], chunkSz: Seq[Int], inner: Seq[Int])
-      : Seq[(String, Option[(Any, Any)], Option[Double])] = {
-    arr match {
-      case _: Array[String] => return Nil // vlen: no numeric stats
-      case _ => ()
-    }
-    val nd = eff.length
-    val effStrides = ChunkAssembly.strides(eff)
-    val perDim = Array.tabulate(nd)(d =>
-      (eff(d) + inner(d) - 1) / inner(d)) // intersecting inner chunks
-    val innersPerOuter = Array.tabulate(nd)(d => chunkSz(d) / inner(d))
-    val nInner = perDim.product
-    val out = Seq.newBuilder[(String, Option[(Any, Any)], Option[Double])]
-    val pos = new Array[Int](nd)
-    var k = 0
-    while (k < nInner) {
-      var rest = k
-      var d = nd - 1
-      while (d >= 0) { pos(d) = rest % perDim(d); rest /= perDim(d); d -= 1 }
-      val start = Array.tabulate(nd)(d => pos(d) * inner(d))
-      val len = Array.tabulate(nd)(d =>
-        math.min(inner(d), eff(d) - start(d)))
-      val cells = len.product
-      // gather the box into a dense slice (runs of the last dim)
-      val slice = java.lang.reflect.Array.newInstance(
-        arr.getClass.getComponentType, cells)
-      val run = len(nd - 1)
-      val nRuns = cells / run
-      // strides of the leading dims' run counter (C-order over
-      // len(0..nd-2): last leading dim varies fastest)
-      val leadStrides = ChunkAssembly.strides(
-        if (nd == 1) Array(1) else len.init)
-      var r = 0
-      while (r < nRuns) {
-        var srcOff = start(nd - 1)
-        var rem = r
-        var j = 0
-        while (j < nd - 1) {
-          val lj = rem / leadStrides(j)
-          rem %= leadStrides(j)
-          srcOff += (start(j) + lj) * effStrides(j)
-          j += 1
-        }
-        System.arraycopy(arr, srcOff, slice, r * run, run)
-        r += 1
-      }
-      val key = (0 until nd).map(d =>
-        outerCi(d) * innersPerOuter(d) + pos(d)).mkString(".")
-      out += ((key, StatsSource.chunkStats(slice),
-        StatsSource.chunkSum(slice)))
-      k += 1
-    }
-    out.result()
-  }
-
-  /** Sidecar carrying per-chunk value stats for zarr trees — the
-    * (min,max)/sum law of [[StatsSource.chunkStats]] and
-    * [[StatsSource.chunkSum]], keyed `"<var> <ci.dotted>"`. zarr-python
-    * ignores unknown files, so the tree stays a perfectly ordinary zarr
-    * archive. Absent on foreign
-    * trees (no stats, no pruning — always sound).
-    *
-    * Format v2: the ROOT file of this name is a manifest
-    * (`{"version":2,"vars":[...],"fp":{...}}`) and each listed
-    * variable carries its own `<var>/.graft-stats.json` — a 100 TB
-    * tree's stats are no longer one GB-scale driver read
-    * ([[StatsSource]]). The `fp` object records each per-var file's
-    * content fingerprint so readers validate the exact bytes they
-    * serve against the manifest they opened (no staleness window). A
-    * variable whose entry list alone exceeds [[StatsShardEntriesKey]]
-    * (the skew-heavy one-dominant-variable tree) writes per-var format
-    * v3 instead: its file becomes a shard directory over leading-
-    * chunk-index ranges, each range a separate fingerprinted file
-    * loaded only when pruning touches it. v1 single-file sidecars
-    * remain readable. Writers order commits so a crash can only LOSE
-    * stats, never serve stale bounds: the manifest deletes before any
-    * chunk moves and rewrites LAST, and readers consult per-var files
-    * only through the manifest.
-    */
-  private[grid] val StatsSidecar = ".graft-stats.json"
-
-  /** `kind` tag per dtype, mirroring StatsSource.chunkStats boxing:
-    * long-kind arrays carry (Long, Long) (exact past 2^53), everything
-    * else (Double, Double).
-    */
-  private def statsKind(dtype: GridType): String = dtype match {
-    case GLong | GTimestamp | GDuration => "long"
-    case GString => "string" // UTF-8 binary order (Utf8Order)
-    case _ => "double"
-  }
-
-  /** Content fingerprint of a stats file — the bytes-served staleness
-    * guard (StatsSource.LazyPerVar): truncated SHA-256, hex. Purely
-    * content-derived so the append-equals-one-shot byte identity of
-    * the sidecar tree is preserved (a random token would break it) and
-    * a retried byte-identical rewrite correctly still validates.
-    */
-  private[grid] def statsFp(bytes: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
-      .take(8).map(b => f"$b%02x").mkString
-
-  /** Entry-count threshold above which one variable's stats split into
-    * leading-chunk-index range shards (per-var format v3). The v2
-    * per-var split already keeps a 300-variable archive from paying
-    * one giant read, but a SKEW-HEAVY tree — one dominant 100 TB data
-    * variable plus tiny coords — concentrates everything back into one
-    * file; v3 bounds any single stats read by this many entries
-    * (~40 B/entry of JSON, so the default keeps files a few MB).
-    */
-  val StatsShardEntriesKey = "graft.zarr.stats.shardEntries"
-  private val DefaultStatsShardEntries = 65536
-
-  /** One variable's v2-format stats CONTENT (also the per-shard file
-    * body under v3). Entries sorted by chunk key — scatter results
-    * arrive in executor map order and the bytes must be deterministic
-    * (the append byte-identity property pins it).
-    */
-  private def varStatsJson(v: VarDef,
-      es: Seq[(String, Option[(Any, Any)], Option[Double])]): String = {
-    val mapper = new ObjectMapper()
-    val vn = mapper.createObjectNode()
-    vn.put("version", 2)
-    vn.put("kind", statsKind(v.dtype))
-    val st = vn.putObject("stats")
-    val su = vn.putObject("sums")
-    es.foreach { case (ci, mm, sm) =>
-      mm.foreach { case (mn, mx) =>
-        val arr = st.putArray(ci)
-        Seq(mn, mx).foreach {
-          case l: Long => arr.add(l)
-          case d: Double => arr.add(d)
-          case s: String => arr.add(s)
-          case other => throw new IllegalStateException(
-            s"${v.name}: unexpected stats box ${other.getClass}")
-        }
-      }
-      sm.foreach(s => su.put(ci, s))
-    }
-    mapper.writeValueAsString(vn)
-  }
-
-  /** Write one variable's stats from its (key, bounds, sum) entries;
-    * deletes stale files when there is nothing to record. Small entry
-    * lists write the single v2 per-var file; lists over
-    * [[StatsShardEntriesKey]] split by leading chunk index into range
-    * shard files plus a v3 shard directory, so a reader pruning a
-    * range of a skew-heavy variable reads O(touched shards), not the
-    * whole list. Shard packing is a pure function of the entry set
-    * (numeric-sorted leading-index groups, greedily packed), so a
-    * merge rewrite stays byte-identical to a one-shot write. Returns
-    * the written per-var file's content fingerprint, or None when no
-    * file exists for the variable.
-    */
-  private[grid] def writeVarStats(root: String, v: VarDef,
-      entries: Seq[(String, Option[(Any, Any)], Option[Double])],
-      conf: org.apache.hadoop.conf.Configuration,
-      preserved: Seq[StatsSource.ShardRef] = Seq.empty)
-      : Option[String] = {
-    val p = s"$root/${v.name}/$StatsSidecar"
-    val es = entries.flatMap { case (key, mm, sm) =>
-      key.split(" ", 2) match {
-        case Array(nm, ci) if nm == v.name &&
-          (mm.isDefined || sm.isDefined) => Some((ci, mm, sm))
-        case _ => None
-      }
-    }.sortBy(_._1)
-    // suffix-merge contract (mergeStatsSidecar): `preserved` prefix
-    // shards stay on disk UNREAD and re-enter the manifest verbatim;
-    // `entries` covers only the repacked suffix, whose greedy packing
-    // is independent of the prefix (packing restarts at each shard
-    // boundary), so the result is byte-identical to a full one-shot
-    // write of prefix+suffix. The caller guarantees the combined
-    // entry count exceeds the shard threshold when preserved is
-    // non-empty.
-    require(preserved.isEmpty || es.nonEmpty,
-      s"${v.name}: preserved prefix with empty suffix")
-    // a previous v3 write's shard layout, (file -> fp): shard files
-    // must not outlive a rewrite that shards differently (or not at
-    // all) — the no-longer-referenced ones delete LAST (after the new
-    // per-var file is in place, so a crash window can only lose
-    // stats) — and a rewrite producing a byte-identical shard (same
-    // name, same fingerprint) SKIPS the write: greedy packing is a
-    // pure function of the entry set, so an append touching only the
-    // tail leaves every prefix shard's (lo, hi, bytes) unchanged and
-    // the merge pays O(touched-suffix) shard writes, not O(var)
-    val oldShards: Map[String, String] =
-      try {
-        val node = parseJson(GridIO.readAllBytes(p, conf))
-        if (node.path("version").asInt(0) == 3)
-          node.path("shards").elements().asScala
-            .map(s => s.path("file").asText() -> s.path("fp").asText())
-            .toMap
-        else Map.empty
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    if (es.isEmpty) {
-      GridIO.delete(p, conf)
-      oldShards.keys.foreach(f => GridIO.delete(s"$root/${v.name}/$f", conf))
-      return None
-    }
-    val threshold = conf.getInt(StatsShardEntriesKey,
-      DefaultStatsShardEntries)
-    val (json, newShards) =
-      if (preserved.isEmpty && es.size <= threshold)
-        (varStatsJson(v, es), Seq.empty[String])
-      else {
-        // group by leading chunk index (groups stay whole so a range
-        // lookup is unambiguous; one index's group exceeding the
-        // threshold just yields one oversized shard), pack greedily
-        val groups = es.groupBy(_._1.takeWhile(_ != '.').toLong)
-          .toSeq.sortBy(_._1)
-        val shards = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Seq[(String, Option[(Any, Any)],
-            Option[Double])])]
-        groups.foreach { case (lead, ges) =>
-          shards.lastOption match {
-            case Some((lo, _, acc))
-                if acc.size + ges.size <= threshold =>
-              shards(shards.length - 1) = (lo, lead, acc ++ ges)
-            case _ => shards += ((lead, lead, ges))
-          }
-        }
-        val mapper = new ObjectMapper()
-        val top = mapper.createObjectNode()
-        top.put("version", 3)
-        top.put("kind", statsKind(v.dtype))
-        val arr = top.putArray("shards")
-        // preserved prefix re-enters the manifest verbatim, unread
-        preserved.foreach { s =>
-          val e = arr.addObject()
-          e.put("lo", s.lo)
-          e.put("hi", s.hi)
-          e.put("file", s.file)
-          e.put("fp", s.fp)
-          e.put("n", s.n)
-        }
-        val files = shards.map { case (lo, hi, ses) =>
-          val file = f".graft-stats.$lo%012d-$hi%012d.json"
-          val body = varStatsJson(v, ses.sortBy(_._1))
-          val fp = statsFp(body.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-          // byte-identical shard already on disk: skip the PUT
-          if (!oldShards.get(file).contains(fp))
-            GridIO.writeString(s"$root/${v.name}/$file", body, conf)
-          val e = arr.addObject()
-          e.put("lo", lo)
-          e.put("hi", hi)
-          e.put("file", file)
-          e.put("fp", fp)
-          e.put("n", ses.size.toLong)
-          file
-        }
-        (mapper.writeValueAsString(top),
-          preserved.map(_.file) ++ files.toSeq)
-      }
-    GridIO.writeString(p, json, conf)
-    oldShards.keysIterator.filterNot(newShards.toSet).foreach(f =>
-      GridIO.delete(s"$root/${v.name}/$f", conf))
-    Some(statsFp(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-  }
-
-  /** Root manifest (format v2) — written LAST so readers never consult
-    * a per-var file the writer has not finished. `vars` carries each
-    * variable's per-var-file fingerprint where known (None only for
-    * entries carried forward from a pre-fp manifest by a merge);
-    * readers use it as the bytes-served staleness guard.
-    */
-  private[grid] def writeStatsManifest(root: String,
-      vars: Seq[(String, Option[String])],
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    if (vars.isEmpty) { GridIO.delete(s"$root/$StatsSidecar", conf); return }
-    val mapper = new ObjectMapper()
-    val top = mapper.createObjectNode()
-    top.put("version", 2)
-    val sorted = vars.sortBy(_._1)
-    val arr = top.putArray("vars")
-    sorted.foreach(v => arr.add(v._1))
-    if (sorted.exists(_._2.isDefined)) {
-      val fo = top.putObject("fp")
-      sorted.foreach { case (n, fp) => fp.foreach(fo.put(n, _)) }
-    }
-    GridIO.writeString(s"$root/$StatsSidecar",
-      mapper.writeValueAsString(top), conf)
-  }
-
-  /** Full-tree stats write (one-shot writers): per-var files for every
-    * variable with entries, stale files dropped for those without,
-    * manifest last. Entries group by variable ONCE — handing the full
-    * list to every per-var write would rescan E entries V times, a
-    * real driver cost at the 10⁸-entry scale format v2 targets.
-    */
-  private[grid] def writeStatsSidecar(root: String, schema: GridSchema,
-      entries: Seq[(String, Option[(Any, Any)], Option[Double])],
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val byVar = entries.groupBy(_._1.split(" ", 2)(0))
-    val withFiles = schema.vars.flatMap(v =>
-      writeVarStats(root, v, byVar.getOrElse(v.name, Seq.empty), conf)
-        .map(fp => v.name -> Option(fp)))
-    writeStatsManifest(root, withFiles, conf)
-  }
-
-  /** Open-time stats resolution: the root sidecar is either a v1
-    * full-content file (parsed eagerly) or a v2 manifest (per-var files
-    * load lazily on first touch). Stats are an optimization — any
-    * corrupt or future-versioned sidecar degrades to "no stats" with a
-    * warning instead of bricking an otherwise-valid tree.
-    */
-  private[grid] def readStatsManifest(root: String,
-      hconf: SerializableHadoopConf): StatsSource = {
-    val conf = hconf.value
-    val p = s"$root/$StatsSidecar"
-    val raw =
-      try Some(GridIO.readAllBytes(p, conf))
-      catch { case _: java.io.FileNotFoundException => None }
-    raw match {
-      case None => StatsSource.Empty
-      case Some(bytes) =>
-        try {
-          val node = parseJson(bytes)
-          node.path("version").asInt(0) match {
-            case 1 =>
-              var stats = Map.empty[String, (Any, Any)]
-              var sums = Map.empty[String, Double]
-              node.path("vars").properties().asScala.foreach { e =>
-                val (st, su) =
-                  StatsSource.parseVarStats(e.getKey, e.getValue)
-                stats ++= st; sums ++= su
-              }
-              StatsSource.Eager(stats, sums)
-            case 2 =>
-              val vars = node.path("vars").elements().asScala
-                .map(_.asText()).toSet
-              // per-var content fingerprints (bytes-served staleness
-              // guard); absent on pre-fp manifests, which fall back to
-              // the open-time (length, mtime) key — see LazyPerVar
-              val fpNode = node.path("fp")
-              val fps =
-                if (!fpNode.isObject) Map.empty[String, String]
-                else fpNode.properties().asScala
-                  .map(e => e.getKey -> e.getValue.asText()).toMap
-              new StatsSource.LazyPerVar(root, vars, hconf,
-                GridIO.statusOf(p, conf), fps)
-            case v =>
-              statsWarn(s"$p: unsupported stats sidecar version $v — " +
-                "ignoring (no pruning bounds served)")
-              StatsSource.Empty
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            statsWarn(s"$p: unreadable stats sidecar " +
-              s"(${e.getMessage}) — ignoring (no pruning bounds served)")
-            StatsSource.Empty
-        }
-    }
-  }
-
-  private def statsWarn(msg: String): Unit =
-    org.slf4j.LoggerFactory.getLogger(ZarrGridStore.getClass).warn(msg)
 
   /** Rewrite one DATA array's meta when it is CF-encoded time: int
     * offsets + `units` attr ("<step> since <date>" under a
@@ -2229,7 +1862,8 @@ object ZarrGridStore {
     */
   private def writeStore(source: GridStore, root: String,
       chunks: Map[String, Int], compressor: String, layout: ZarrLayout)(
-      runTasks: Seq[ChunkWriteTask] => Seq[StatsEntry]): ZarrGridStore =
+      runTasks: Seq[ChunkWriteTask] => Seq[StatsSource.Entry])
+      : ZarrGridStore =
     writeTree(source.schema, root, chunks, compressor, layout,
       v => source.readVar(v.name, Seq.empty)) { sinks =>
       runTasks(sinks.flatMap { case (v, sink) =>
@@ -2246,8 +1880,8 @@ object ZarrGridStore {
   private def writeTree(schema: GridSchema, root: String,
       chunks: Map[String, Int], compressor: String, layout: ZarrLayout,
       scalarValue: VarDef => AnyRef)(
-      writeChunks: Seq[(VarDef, GridWriter.ZarrSink)] => Seq[StatsEntry])
-      : ZarrGridStore = {
+      writeChunks: Seq[(VarDef, GridWriter.ZarrSink)] =>
+        Seq[StatsSource.Entry]): ZarrGridStore = {
     val conf = GridIO.driverConf()
     val cleanRoot = root.stripSuffix("/")
     val comp = layout.parseCompressor(compressor)
@@ -2255,7 +1889,7 @@ object ZarrGridStore {
     // a re-write into an existing root must drop the old sidecar
     // BEFORE any chunk lands: a crash mid-write then leaves no stats
     // (sound) instead of old bounds next to new data
-    GridIO.delete(s"$cleanRoot/$StatsSidecar", conf)
+    StatsSource.dropManifest(cleanRoot, conf)
     layout.writeShell(schema, cleanRoot, chunks, comp, conf)
     val entries = writeChunks(schema.vars.filter(_.dims.nonEmpty).map { v =>
       val chunkSz = chunkShape(schema, chunks, v)
@@ -2265,13 +1899,10 @@ object ZarrGridStore {
     schema.vars.filter(_.dims.isEmpty).foreach(v =>
       writeScalarChunk(cleanRoot, v, scalarValue(v), comp, layout.scalarKey,
         conf))
-    writeStatsSidecar(cleanRoot, schema, entries, conf)
+    StatsSource.write(cleanRoot, schema, entries, conf)
     layout.consolidateWritten(cleanRoot, conf)
     open(cleanRoot) // takes the consolidated path it just wrote
   }
-
-  /** One sidecar stats entry: (`"<var> <chunk key>"`, (min, max), sum). */
-  private[grid] type StatsEntry = (String, Option[(Any, Any)], Option[Double])
 
   /** One data chunk of a store-to-store write: read the block from the
     * source and hand it to the sink. Small and Serializable so
@@ -2280,7 +1911,7 @@ object ZarrGridStore {
   private[grid] final case class ChunkWriteTask(varName: String,
       block: Seq[(Int, Int)], sink: GridWriter.ZarrSink) {
     def run(source: GridStore,
-        conf: org.apache.hadoop.conf.Configuration): Seq[StatsEntry] = {
+        conf: org.apache.hadoop.conf.Configuration): Seq[StatsSource.Entry] = {
       val ci = block.zip(sink.chunkSz).map(b => b._1._1 / b._2)
       sink.write(varName, ci.mkString("."), source.readVar(varName, block),
         block.map(_._2).toArray, conf)
@@ -2545,26 +2176,13 @@ object ZarrGridStore {
     appendTestHook(cleanRoot)
     checkNoConcurrentAppend(cleanRoot, staging, versionPath, versionKey,
       conf)
-    // stats sidecar: the open's StatsSource already indexes the
-    // pre-append stats. fp-manifest sources verify the very bytes they
-    // serve, so their lazy loads stay valid after the manifest
-    // deletion below AND the merge can keep prefix shards unread (the
-    // suffix-merge path) — for them the eager pre-force is skipped;
-    // it would load O(var) shards and defeat the suffix bound. Legacy
-    // sources (v2 manifests without fp) guard on the manifest key,
-    // which the deletion invalidates: force-load the GROWING
-    // variables' entries NOW or their stats would be lost. Either
-    // way the manifest DELETES before any chunk moves — a crash
-    // mid-commit leaves no manifest (per-var files unreachable, no
-    // stats, sound) instead of stale bounds for the replaced edge
-    // chunk.
-    val oldSource = existing.statsSource
-    oldSource match {
-      case lp: StatsSource.LazyPerVar
-          if growing.forall(v => lp.fpCovered(v.name)) => ()
-      case _ => growing.foreach(v => oldSource.entriesFor(v.name))
-    }
-    GridIO.delete(s"$cleanRoot/$StatsSidecar", conf)
+    // the manifest DELETES before any chunk moves — a crash mid-commit
+    // leaves no manifest (per-var files unreachable, no stats, sound)
+    // instead of stale bounds for the replaced edge chunk. The open's
+    // StatsSource keeps serving the merge below: its loads check the
+    // very bytes they read against the fingerprints it opened with,
+    // so they need no manifest, and prefix shards stay unread
+    StatsSource.dropManifest(cleanRoot, conf)
     // staged chunks already carry store-global keys; the shared commit
     // protocol (manifest + replaceWithBackup) makes the move crash-
     // healable and retry-idempotent — merged edge chunks and orphans
@@ -2599,84 +2217,10 @@ object ZarrGridStore {
     // merged sidecar: untouched chunks keep their entries, the merged
     // edge chunk and new chunks take the append's recomputed stats
     // (same key -> the new entry wins)
-    mergeStatsSidecar(cleanRoot, existing.schema, oldSource,
+    StatsSource.merge(cleanRoot, existing.schema, existing.statsSource,
       newEntries, conf)
     layout.consolidateAppended(cleanRoot, existing.schema, conf)
     open(cleanRoot)
-  }
-
-  /** Rewrite the stats sidecar after an append: per TOUCHED variable,
-    * old entries ++ new entries (new wins on the shared edge-chunk
-    * key). Under format v2 only the growing variables' files are read
-    * and rewritten — untouched variables' files stay on disk unread,
-    * which is what keeps append O(slab), not O(tree), at 10⁸ chunks. A
-    * v1 source (pre-v2 tree) migrates every variable to per-var files
-    * here. Appending to a foreign tree that never had a sidecar still
-    * creates one covering the appended chunks (partial coverage is
-    * sound: absent keys serve no bounds).
-    */
-  private[grid] def mergeStatsSidecar(root: String, schema: GridSchema,
-      old: StatsSource,
-      newEntries: Seq[(String, Option[(Any, Any)], Option[Double])],
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val touched = newEntries.map(_._1.split(" ", 2)(0)).toSet
-    val threshold = conf.getInt(StatsShardEntriesKey,
-      DefaultStatsShardEntries)
-    val withFiles = Seq.newBuilder[(String, Option[String])]
-    touched.toSeq.sorted.foreach { vn =>
-      schema.vars.find(_.name == vn).foreach { v =>
-        val prefix = vn + " "
-        val news = newEntries.filter(_._1.startsWith(prefix))
-        val replaced = news.map(_._1).toSet
-        // SUFFIX merge for sharded variables: the slab's smallest
-        // touched leading index bounds what can change; shards before
-        // the (safety-stepped) cut stay on disk unread and re-enter
-        // the manifest verbatim, so a tail append into a 10⁸-entry
-        // variable loads and rewrites O(touched-suffix) stats, never
-        // O(var). Falls back to the full load when the variable is
-        // unsharded, counts are missing, the merged total could cross
-        // below the shard threshold, or the suffix would empty out.
-        val minLead = news.flatMap(
-          _._1.split(" ", 2)(1).takeWhile(_ != '.').toLongOption)
-          .minOption
-        val suffixPath = (old, minLead) match {
-          case (lp: StatsSource.LazyPerVar, Some(ml)) =>
-            lp.suffixSplit(vn, ml).flatMap { case (pres, sufOld) =>
-              val suffix = sufOld.filterNot(e => replaced(e._1)) ++ news
-              val live = suffix.count(e => e._2.isDefined || e._3.isDefined)
-              if (live == 0 ||
-                  pres.map(_.n).sum + live <= threshold) None
-              else Some((pres, suffix))
-            }
-          case _ => None
-        }
-        val written = suffixPath match {
-          case Some((pres, suffix)) =>
-            writeVarStats(root, v, suffix, conf, pres)
-          case None =>
-            val olds = old.entriesFor(vn).filterNot(e => replaced(e._1))
-            writeVarStats(root, v, olds ++ news, conf)
-        }
-        written.foreach(fp => withFiles += vn -> Some(fp))
-      }
-    }
-    val untouched = old.varNames -- touched
-    old match {
-      case lp: StatsSource.LazyPerVar =>
-        // v2/v3 files already on disk, untouched — carry their
-        // fingerprints forward unread (None only for pre-fp manifests,
-        // where readers keep the coarse manifest-key guard)
-        untouched.toSeq.sorted.foreach(vn =>
-          withFiles += vn -> lp.fpOf(vn))
-      case _ =>
-        untouched.toSeq.sorted.foreach { vn =>
-          schema.vars.find(_.name == vn).foreach { v =>
-            writeVarStats(root, v, old.entriesFor(vn), conf).foreach(fp =>
-              withFiles += vn -> Some(fp))
-          }
-        }
-    }
-    writeStatsManifest(root, withFiles.result(), conf)
   }
 
   /** In place on `arr` (flat C-order of shape `eff`): every position
@@ -2745,8 +2289,7 @@ object ZarrGridStore {
       edgeLen: Int) extends GridWriter.ChunkSink {
     def write(varName: String, ciDotted: String, arr: AnyRef,
         eff: Array[Int],
-        conf: org.apache.hadoop.conf.Configuration)
-        : Seq[(String, Option[(Any, Any)], Option[Double])] = {
+        conf: org.apache.hadoop.conf.Configuration): Seq[StatsSource.Entry] = {
       val ci = ciDotted.split('.').map(_.toInt).toSeq
       if (ci(axisPos) == edgeChunk)
         overlayEdge(arr, readChunk(root, a, ci, conf), eff,

@@ -1283,8 +1283,8 @@ object SimilarityOps {
           "multi-probe support; rebuild it with buildIvfIndex", e)
     }
 
-  /** Per-JVM `_codebook` memo, fingerprint-guarded (file names +
-    * mtimes + lengths from one listStatus — metadata only): repeated
+  /** Per-JVM `_codebook` memo, guarded by the directory fingerprint
+    * ([[graft.sources.FileBloomIndex.fingerprint]]): repeated
     * probes in a session stop re-reading the codebook parquet, and a
     * [[retrainIvfIndex]]/[[buildIvfIndex]] rewrite flips every
     * fingerprint facet, so the next probe reloads. The FileBloomIndex
@@ -1302,9 +1302,7 @@ object SimilarityOps {
       throw new IllegalArgumentException(
         s"$dir has no _codebook sidecar — the index predates " +
           "multi-probe support; rebuild it with buildIvfIndex")
-    val fp = fs.listStatus(p).toSeq
-      .map(s => (s.getPath.getName, s.getModificationTime, s.getLen))
-      .sortBy(_._1)
+    val fp = graft.sources.FileBloomIndex.fingerprint(fs, p)
     codebookMemo.get(dir) match {
       case Some((cached, arr)) if cached == fp => arr
       case _ =>

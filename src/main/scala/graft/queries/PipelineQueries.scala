@@ -358,7 +358,7 @@ object PipelineQueries {
     * discipline: the iterative min-label loop runs in ONE job chain
     * and its consumers read the materialized (id, cluster) table
     * (nested staged build: pairs stage inside the cluster stage,
-    * reentrant on the stage-registry monitor). The oracle still
+    * reentrant on the QueryTmp.staged monitor). The oracle still
     * replays the whole chain relationally, so the gate is unchanged.
     */
   private def stagedDhashClusters(s: SparkSession, d: String): DataFrame =
@@ -368,22 +368,6 @@ object PipelineQueries {
         .select(col("id").cast("long").as("id"),
           col("cluster").cast("long").as("cluster"))
     }
-
-  /** Stage `build`'s result to scratch parquet once per (application,
-    * corpus dir, name); every later call reads the staged table. Two
-    * jobs: (a) expensive intermediates shared by several queries are
-    * paid once — the shape a production pipeline ships anyway (a
-    * materialized table written by one job, read by its consumers);
-    * (b) repeated evaluations in a long-lived driver stop accumulating
-    * one scratch tree per invocation (one per corpus instead).
-    * A reentrant monitor serializes concurrent first use — reentrant
-    * because one staged build may consume another staged table (cand
-    * pairs read the sigs table), which ConcurrentHashMap.computeIfAbsent
-    * forbids. Staged results are deterministic, so every consumer reads
-    * identical rows.
-    */
-  private val stageRegistry =
-    scala.collection.mutable.HashMap.empty[String, String]
 
   /** Driver-object twin of [[stagedPath]]: a small derived structure
     * (e.g. a bloom filter over a release's fingerprints) built once
@@ -409,30 +393,25 @@ object PipelineQueries {
     }
   }
 
-  /** The path form of [[staged]], for builds that need control over the
-    * write (e.g. `partitionBy` index materializations): `build` writes
-    * whatever layout it wants at the path it is handed; later calls get
-    * the same committed path back without rebuilding.
+  /** Build-once staging per (application, corpus dir, name) through
+    * [[QueryTmp.staged]]: `build` writes whatever layout it wants (e.g.
+    * `partitionBy` index materializations) at the path it is handed —
+    * a leaf that does not exist yet, as parquet's default save mode
+    * requires — and later calls get the same committed path back
+    * without rebuilding. Expensive intermediates shared by several
+    * queries are paid once, and repeated evaluations in a long-lived
+    * driver stop accumulating one temp tree per invocation. Staged
+    * results are deterministic, so every consumer reads identical rows.
     */
   private def stagedPath(s: SparkSession, d: String, name: String)(
-      build: String => Unit): String = {
-    val key = s.sparkContext.applicationId + "|" + d + "|" + name
-    stageRegistry.synchronized {
-      stageRegistry.get(key) match {
-        case Some(p) => p
-        case None =>
-          val p = QueryTmp.dir(s"graft_$name") + "/" + name
-          build(p)
-          stageRegistry.put(key, p)
-          p
-      }
-    }
-  }
+      build: String => Unit): String =
+    QueryTmp.staged(s"graft_$name", s.sparkContext.applicationId + "|" + d)(
+      p => build(s"$p/$name")) + "/" + name
 
   private def staged(s: SparkSession, d: String, name: String)(
       build: => DataFrame): DataFrame =
-    // staged paths are write-once per JVM (the registry serializes the
-    // build), so the resolved relation is memoizable like a base table
+    // staged paths are write-once per JVM (QueryTmp.staged serializes
+    // the build), so the resolved relation is memoizable like a base table
     Tables.readParquet(s, stagedPath(s, d, name)(p => build.write.parquet(p)))
 
   /** The jaccardPairs -> connected-components labelling, staged once

@@ -30,29 +30,30 @@ object QueryTmp {
   }
 
   private val stagedDirs =
-    scala.collection.mutable.HashMap.empty[String, String]
+    scala.collection.mutable.HashMap.empty[(String, String), String]
 
-  /** Build-once fixture staging: the first call for `name` creates a
-    * fresh dir, runs `build` against it, and every later call returns
-    * the same committed path. For queries whose GATE is a read path
-    * over a deterministic fixture: the fixture write is paid once per
-    * JVM instead of once per bench rep, so the benched number is the
-    * read cost, not fixture I/O (the round-10 verdict flagged
-    * `pivot_grid_group`'s number as mostly fixture writes). Queries
-    * whose gate IS a write keep per-invocation [[dir]]s. The monitor
-    * serializes concurrent first builds — same contract as
-    * PipelineQueries' stage registry.
+  /** Build-once staging: the first call for (`scope`, `name`) creates a
+    * fresh dir (temp-dir prefix `name`), runs `build` against it, and
+    * every later call returns the same committed path. For queries whose
+    * GATE is a read path over a deterministic fixture: the fixture write
+    * is paid once per JVM (or per `scope`, e.g. one application and
+    * corpus) instead of once per bench rep, so the benched number is
+    * the read cost, not fixture I/O. Queries whose gate IS a write keep
+    * per-invocation [[dir]]s. The monitor serializes concurrent first
+    * builds, and is reentrant: one staged build may consume another.
     */
-  def staged(name: String)(build: String => Unit): String = synchronized {
-    stagedDirs.getOrElseUpdate(name, { val p = dir(name); build(p); p })
+  def staged(name: String, scope: String = "")(
+      build: String => Unit): String = synchronized {
+    stagedDirs.getOrElseUpdate((scope, name),
+      { val p = dir(name); build(p); p })
   }
 
-  /** The committed staged dir for `name`, if built in this JVM — test
-    * introspection (a tmpdir prefix listing would be flaky against
-    * residue of killed JVMs or concurrent suites).
+  /** The committed JVM-wide staged dir for `name`, if built in this JVM
+    * — test introspection (a tmpdir prefix listing would be flaky
+    * against residue of killed JVMs or concurrent suites).
     */
   private[graft] def stagedLookup(name: String): Option[String] =
-    synchronized(stagedDirs.get(name))
+    synchronized(stagedDirs.get(("", name)))
 
   private def deleteTree(p: Path): Unit =
     try {

@@ -35,10 +35,10 @@ import scala.collection.concurrent.TrieMap
   * for an O(batch) ingest. Range shards bound the append to the
   * shards its batch touches; untouched shards are never read or
   * rewritten (byte-identical across appends, pinned in
-  * FileBloomIndexSpec). The legacy single `path/_blooms` format (v1)
-  * stays readable; the first append to a v1 index reshards it —
-  * a one-time rewrite costing exactly what every v1 append already
-  * cost.
+  * FileBloomIndexSpec). `_blooms.d` is the only sidecar format: an
+  * index root that holds a single-directory `path/_blooms` sidecar
+  * (the format of earlier builds) is rejected by every verb, naming
+  * [[write]], rather than served or extended.
   *
   * Read paths deserialize each shard once per JVM: a
   * fingerprint-guarded memo (file names + mtimes + lengths from one
@@ -99,14 +99,12 @@ object FileBloomIndex {
     val fs = fsFor(df.sparkSession, path)
     val staged = stageShards(blooms, path, bucketsPerShard)
     // fresh build: assemble the COMPLETE new root under _blooms.stage,
-    // clear any previous sidecar (either format), then adopt the stage
-    // with ONE rename — readers see the old sidecar, nothing (loud), or
-    // the complete new root, never a partial shard set (a crash inside
-    // a per-shard adoption loop would otherwise serve partial filters
-    // silently = false negatives)
+    // clear the previous root, then adopt the stage with ONE rename —
+    // readers see the old sidecar, nothing (loud), or the complete new
+    // root, never a partial shard set (a crash inside a per-shard
+    // adoption loop would otherwise serve partial filters silently =
+    // false negatives)
     val stage = assembleStage(fs, path, staged, bucketsPerShard)
-    Seq("_blooms", "_blooms.next", "_blooms.old")
-      .foreach(n => fs.delete(hp(s"$path/$n"), true))
     val root = shardRoot(path)
     fs.delete(root, true)
     checkedRename(fs, stage, root)
@@ -136,8 +134,8 @@ object FileBloomIndex {
   def append(batch: DataFrame, keyCol: String,
       layout: org.apache.spark.sql.Column, path: String): Unit = {
     val spark = batch.sparkSession
-    upgradeV1(spark, path, keyCol)
     val fs = fsFor(spark, path)
+    rejectLegacy(fs, path)
     val shards = listShards(fs, path)
     require(shards.nonEmpty, s"no bloom sidecar at $path — write() first")
     val bps = shards.head._2
@@ -235,6 +233,7 @@ object FileBloomIndex {
     require(keys.nonEmpty, "empty delete keys")
     require(!keys.contains(null), "null keys are never indexed — " +
       "nothing to delete")
+    rejectLegacy(fsFor(spark, path), path)
     import spark.implicits._
     keys.distinct.toDF("k")
       .coalesce(1)
@@ -289,6 +288,7 @@ object FileBloomIndex {
       maxFilesPerBucket: Int = 1): Unit = {
     require(maxFilesPerBucket >= 1, s"maxFilesPerBucket=$maxFilesPerBucket")
     val fs = fsFor(spark, path)
+    rejectLegacy(fs, path)
     purgeTombstones(spark, fs, path)
     val dataRoot = hp(s"$path/data")
     def parquetCount(p: org.apache.hadoop.fs.Path): Int =
@@ -317,27 +317,12 @@ object FileBloomIndex {
       fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
     val tsPath = hp(s"$path/_tombstones")
     if (!fs.exists(tsPath)) return
-    healV1(fs, path)
-    if (v1Authoritative(fs, path))
-      // covers both the legacy v1 format and the coexistence state of
-      // an incomplete upgrade — either way the shard root is not yet
-      // trustworthy, and purging against it could strand dead rows
-      throw new IllegalArgumentException(
-        s"$path carries pending tombstones on a legacy v1 sidecar " +
-          "(or an incomplete upgrade) — run append once (or rebuild " +
-          "with write()) to finish the sharded format, then compact")
     val shards = listShards(fs, path)
     if (shards.isEmpty)
       throw new IllegalArgumentException(
         s"no bloom sidecar at $path — write() first")
-    val head = spark.read.parquet(shards.head._3.toString)
-    require(head.columns.contains("key_col"),
-      s"$path sidecar predates key_col — rebuild with write() (or " +
-        "append once) before purging tombstones")
-    val params = head.select("expected_items", "fpp", "key_col").head()
-    require(!params.isNullAt(2),
-      s"$path sidecar has a null key_col (mixed-era shards?) — " +
-        "rebuild with write() before purging tombstones")
+    val params = spark.read.parquet(shards.head._3.toString)
+      .select("expected_items", "fpp", "key_col").head()
     val expected = params.getLong(0)
     val fppV = params.getDouble(1)
     val keyCol = params.getString(2)
@@ -590,9 +575,8 @@ object FileBloomIndex {
       .sortBy(_._1)
   }
 
-  /** cur -> `<name>.old`, `<name>.next` -> cur, drop old — the v1
-    * whole-sidecar swap applied per shard; [[healShards]] completes an
-    * interrupted swap from either side.
+  /** cur -> `<name>.old`, `<name>.next` -> cur, drop old;
+    * [[healShards]] completes an interrupted swap from either side.
     */
   private def swapShard(fs: org.apache.hadoop.fs.FileSystem, path: String,
       lo: Int, bps: Int): Unit = {
@@ -622,7 +606,7 @@ object FileBloomIndex {
     names.filter(_.endsWith(".next")).foreach { n =>
       val cur = n.stripSuffix(".next")
       // cur present: serving it stays correct (the writer re-stages on
-      // replay) — leave residues alone, matching the v1 heal contract
+      // replay) — leave residues alone
       if (!names(cur)) {
         renameOrHealed(fs, hp(s"$root/$n"), hp(s"$root/$cur"))
         fs.delete(hp(s"$root/$cur.old"), true)
@@ -636,7 +620,7 @@ object FileBloomIndex {
   }
 
   /** Live shards as (lo, bucketsPerShard, dir), healed and sorted.
-    * Empty when the index still carries (only) a v1 sidecar.
+    * Empty when the index has no shard root.
     */
   private def listShards(fs: org.apache.hadoop.fs.FileSystem, path: String)
       : Seq[(Int, Int, org.apache.hadoop.fs.Path)] = {
@@ -658,81 +642,25 @@ object FileBloomIndex {
       .sortBy(_._1)
   }
 
-  /** One-time reshard of a legacy single-file `_blooms` sidecar into
-    * the sharded layout — costs one full sidecar rewrite, exactly
-    * what every append to the v1 format already paid. The complete
-    * resharded root is assembled under `_blooms.stage` and adopted
-    * with ONE rename, and `_blooms` is deleted LAST: every crash
-    * window leaves either the intact v1 alone, v1 + a complete root
-    * (the COEXISTENCE state — v1 stays authoritative on every read
-    * path and the next append redoes the reshard), or the finished
-    * sharded state. No window serves a partial shard set.
+  /** The one legacy check every verb makes (a single existence
+    * check): a `_blooms` directory is the single-directory sidecar of
+    * earlier builds, which no verb reads, upgrades or extends.
     */
-  private def upgradeV1(spark: SparkSession, path: String,
-      keyCol: String): Unit = {
-    val fs = fsFor(spark, path)
-    healV1(fs, path)
-    val hasV1 = fs.exists(hp(s"$path/_blooms"))
-    if (fs.exists(shardRoot(path))) {
-      if (!hasV1) return // fully upgraded (or natively sharded)
-      // coexistence = incomplete upgrade (crash between the root
-      // adoption and the v1 delete, or a partial root left by a
-      // pre-atomic build): the intact _blooms is authoritative —
-      // drop the root and redo the reshard from it
-      fs.delete(shardRoot(path), true)
-      filterMemo.keys.filter(_._1 == path).foreach(filterMemo.remove)
-    }
-    if (!hasV1) return
-    val v1raw = spark.read.parquet(s"$path/_blooms")
-    // v1 sidecars predate key_col: attach it during the reshard
-    val v1 =
-      if (v1raw.columns.contains("key_col")) v1raw
-      else v1raw.withColumn("key_col", lit(keyCol))
-    val staged = stageShards(v1, path, DefaultBucketsPerShard)
-    val stage = assembleStage(fs, path, staged, DefaultBucketsPerShard)
-    checkedRename(fs, stage, shardRoot(path))
-    // residues first, the authoritative _blooms LAST — a crash here
-    // leaves coexistence, which the next append redoes idempotently
-    Seq("_blooms.next", "_blooms.old", "_blooms")
-      .foreach(n => fs.delete(hp(s"$path/$n"), true))
-    filterMemo.remove((path, "_blooms")) // the retired v1 entry
-  }
+  private def rejectLegacy(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Unit =
+    require(!fs.exists(hp(s"$path/_blooms")),
+      s"$path holds a legacy _blooms sidecar, a format this index no " +
+        s"longer reads — delete $path and rebuild it with write()")
 
-  /** v1 whole-sidecar heal (legacy indexes only). */
-  private def healV1(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    val cur = hp(s"$path/_blooms")
-    if (fs.exists(cur)) return
-    val next = hp(s"$path/_blooms.next")
-    val oldP = hp(s"$path/_blooms.old")
-    if (fs.exists(next)) { renameOrHealed(fs, next, cur); fs.delete(oldP, true) }
-    else if (fs.exists(oldP)) renameOrHealed(fs, oldP, cur)
-  }
-
-  /** `_blooms.d` + `_blooms` coexistence marks an INCOMPLETE upgrade
-    * (the reshard adopted its root but crashed before the v1 delete,
-    * or a pre-atomic build left a partial root): the v1 file is
-    * authoritative until the next append finishes the upgrade, so
-    * every read path checks this before trusting the shard root —
-    * serving a possibly-partial shard set would break the
-    * no-false-negative law silently.
-    */
-  private def v1Authoritative(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Boolean = fs.exists(hp(s"$path/_blooms"))
-
-  /** All sidecar rows (bucket, bloom, expected_items, fpp), either
-    * format — the inspection/test surface.
+  /** All sidecar rows (bucket, bloom, expected_items, fpp, key_col) —
+    * the inspection/test surface.
     */
   private[graft] def sidecarDf(spark: SparkSession, path: String): DataFrame = {
     val fs = fsFor(spark, path)
-    val shards =
-      if (v1Authoritative(fs, path)) Seq.empty else listShards(fs, path)
-    if (shards.nonEmpty)
-      spark.read.parquet(shards.map(_._3.toString): _*)
-    else {
-      healV1(fs, path)
-      spark.read.parquet(s"$path/_blooms")
-    }
+    rejectLegacy(fs, path)
+    val shards = listShards(fs, path)
+    require(shards.nonEmpty, s"no bloom sidecar shards at $path")
+    spark.read.parquet(shards.map(_._3.toString): _*)
   }
 
   // ---- per-JVM filter memo ----
@@ -750,31 +678,18 @@ object FileBloomIndex {
     TrieMap.empty[(String, String), (Seq[(String, Long, Long)],
       Array[(Int, BloomFilter)])]
 
-  private def fingerprint(fs: org.apache.hadoop.fs.FileSystem,
+  /** A directory's fingerprint: (name, mtime, length) of every entry
+    * from one listStatus — metadata only. The guard of every per-JVM
+    * sidecar memo (this filter memo, the IVF codebook memo).
+    */
+  private[graft] def fingerprint(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
     fs.listStatus(dir).toSeq
       .map(s => (s.getPath.getName, s.getModificationTime, s.getLen))
       .sortBy(_._1)
 
-  private def loadDir(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, indexPath: String,
-      dir: org.apache.hadoop.fs.Path): Array[(Int, BloomFilter)] = {
-    val key = (indexPath, dir.getName)
-    val fp = fingerprint(fs, dir)
-    filterMemo.get(key) match {
-      case Some((cachedFp, filters)) if cachedFp == fp => filters
-      case _ =>
-        val filters = spark.read.parquet(dir.toString).collect().map { r =>
-          r.getAs[Int]("bucket") -> BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        }.sortBy(_._1)
-        filterMemo.put(key, (fp, filters))
-        filters
-    }
-  }
-
   /** Every bucket's filter, memoized per shard (see [[filterMemo]]).
-    * Loud when the index has no sidecar in either format.
+    * Loud when the index has no sidecar.
     */
   private[graft] def loadFilters(spark: SparkSession,
       path: String): Array[(Int, BloomFilter)] =
@@ -794,8 +709,8 @@ object FileBloomIndex {
   private def loadFiltersFp(spark: SparkSession,
       path: String): (String, Array[(Int, BloomFilter)]) = {
     val fs = fsFor(spark, path)
-    val v1Wins = v1Authoritative(fs, path)
-    val shards = if (v1Wins) Seq.empty else listShards(fs, path)
+    rejectLegacy(fs, path)
+    val shards = listShards(fs, path)
     if (shards.nonEmpty) {
       val withFp = shards.map { case (lo, cnt, dir) =>
         (lo, cnt, dir, fingerprint(fs, dir)) }
@@ -827,16 +742,11 @@ object FileBloomIndex {
     }
     // a present-but-empty shard root is the LEGAL all-purged state
     // (every key deleted, every shard dropped): zero filters, every
-    // probe a provable miss — not a missing index. Coexistence never
-    // reaches here (v1Wins routed it to the v1 branch).
-    else if (!v1Wins && fs.exists(shardRoot(path))) ("v2:empty", Array.empty)
+    // probe a provable miss — not a missing index
     else {
-      healV1(fs, path)
-      require(fs.exists(hp(s"$path/_blooms")),
+      require(fs.exists(shardRoot(path)),
         s"no bloom sidecar at $path — write() first")
-      val dir = hp(s"$path/_blooms")
-      ("v1:" + fingerprint(fs, dir).mkString("[", ",", "]"),
-        loadDir(spark, fs, path, dir))
+      ("empty", Array.empty)
     }
   }
 

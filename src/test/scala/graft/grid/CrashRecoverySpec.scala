@@ -84,7 +84,7 @@ class CrashRecoverySpec extends SparkTestBase {
         val k = rnd.nextInt(pairs.size + 2)
         manifestDropped = k > 0
         if (manifestDropped) {
-          GridIO.delete(s"$cleanRoot/${ZarrGridStore.StatsSidecar}", conf)
+          GridIO.delete(s"$cleanRoot/${StatsSource.Sidecar}", conf)
           GridIO.writeString(s"$staging/.replace-manifest",
             pairs.map(_._2).mkString("\n"), conf)
           pairs.take(k - 1).foreach { case (src, dst) =>
@@ -129,7 +129,7 @@ class CrashRecoverySpec extends SparkTestBase {
       val oneShot = base.resolve("oneshot").toString
       val expect = ZarrGridStore.writeFromRows(rows(0, 24),
         Fixtures.linearGrid.schema, Map("t" -> axisChunk), oneShot, comp)
-      def isSidecar(rel: String) = rel.endsWith(ZarrGridStore.StatsSidecar)
+      def isSidecar(rel: String) = rel.endsWith(StatsSource.Sidecar)
       val want = tree(oneShot)
       val got = tree(root)
       assert(want.keySet == got.keySet,

@@ -22,7 +22,7 @@ class StatsSidecarPropertySpec extends AnyFunSuite {
   /** Forces per-var format v3 at the spec's tiny entry counts. */
   private val shardedConf = {
     val c = new org.apache.hadoop.conf.Configuration()
-    c.setInt(ZarrGridStore.StatsShardEntriesKey, 2)
+    c.setInt(StatsSource.ShardEntriesKey, 2)
     c
   }
 
@@ -80,10 +80,8 @@ class StatsSidecarPropertySpec extends AnyFunSuite {
           org.scalacheck.Gen.Parameters.default,
           org.scalacheck.rng.Seed(rnd.nextLong())))
       val root = freshRoot()
-      ZarrGridStore.writeStatsSidecar(root, schemaOf(vars, longKind),
-        entries, c)
-      val src = ZarrGridStore.readStatsManifest(root,
-        new SerializableHadoopConf(c))
+      StatsSource.write(root, schemaOf(vars, longKind), entries, c)
+      val src = StatsSource.open(root, new SerializableHadoopConf(c))
       val wantBounds = entries.flatMap(e => e._2.map(e._1 -> _)).toMap
       val wantSums = entries.flatMap(e => e._3.map(e._1 -> _)).toMap
       src.allBounds == wantBounds && src.allSums == wantSums &&
@@ -125,12 +123,11 @@ class StatsSidecarPropertySpec extends AnyFunSuite {
       // same values here so bytes cannot differ)
       val (oldE, newE) = all.partition(_ => rnd.nextBoolean())
       val oneShot = freshRoot()
-      ZarrGridStore.writeStatsSidecar(oneShot, schema, all, c)
+      StatsSource.write(oneShot, schema, all, c)
       val merged = freshRoot()
-      ZarrGridStore.writeStatsSidecar(merged, schema, oldE, c)
-      val oldSrc = ZarrGridStore.readStatsManifest(merged,
-        new SerializableHadoopConf(c))
-      ZarrGridStore.mergeStatsSidecar(merged, schema, oldSrc, newE, c)
+      StatsSource.write(merged, schema, oldE, c)
+      val oldSrc = StatsSource.open(merged, new SerializableHadoopConf(c))
+      StatsSource.merge(merged, schema, oldSrc, newE, c)
       allStatsBytes(merged) == allStatsBytes(oneShot)
     }
 
@@ -151,7 +148,7 @@ class StatsSidecarPropertySpec extends AnyFunSuite {
     // and the merged tree must be byte-identical to a one-shot write
     // of the union (the packing prefix-stability this rests on).
     val c = new org.apache.hadoop.conf.Configuration()
-    c.setInt(ZarrGridStore.StatsShardEntriesKey, 8)
+    c.setInt(StatsSource.ShardEntriesKey, 8)
     def entry(lead: Int, value: Double)
         : (String, Option[(Any, Any)], Option[Double]) =
       (s"alpha $lead", Some((value, value)), Some(value))
@@ -159,11 +156,10 @@ class StatsSidecarPropertySpec extends AnyFunSuite {
     val news = Seq(entry(62, 620.0), entry(64, 640.0), entry(65, 650.0))
     val schema = schemaOf(Seq("alpha"), Map("alpha" -> false))
     val merged = freshRoot()
-    ZarrGridStore.writeStatsSidecar(merged, schema, base, c)
-    val src = ZarrGridStore.readStatsManifest(merged,
-      new SerializableHadoopConf(c))
+    StatsSource.write(merged, schema, base, c)
+    val src = StatsSource.open(merged, new SerializableHadoopConf(c))
     GridIO.Counters.reset()
-    ZarrGridStore.mergeStatsSidecar(merged, schema, src, news, c)
+    StatsSource.merge(merged, schema, src, news, c)
     // reads: per-var shard dir (suffixSplit) + 2 suffix shards + the
     // writer's own stale-layout re-read of the shard dir = 4, never
     // the 1 + 8 a full load pays
@@ -171,7 +167,7 @@ class StatsSidecarPropertySpec extends AnyFunSuite {
     assert(reads <= 4, s"suffix merge read $reads files")
     val oneShot = freshRoot()
     val union = base.filterNot(e => news.exists(_._1 == e._1)) ++ news
-    ZarrGridStore.writeStatsSidecar(oneShot, schema, union, c)
+    StatsSource.write(oneShot, schema, union, c)
     assert(allStatsBytes(merged) == allStatsBytes(oneShot))
   }
 
@@ -182,14 +178,13 @@ class StatsSidecarPropertySpec extends AnyFunSuite {
     // plus exactly the one shard covering the key — never the other 7
     val root = freshRoot()
     val c = new org.apache.hadoop.conf.Configuration()
-    c.setInt(ZarrGridStore.StatsShardEntriesKey, 8)
+    c.setInt(StatsSource.ShardEntriesKey, 8)
     val entries = (0 until 64).map(i => (s"alpha $i",
       Some((i.toDouble, i.toDouble)): Option[(Any, Any)],
       Some(i.toDouble): Option[Double]))
-    ZarrGridStore.writeStatsSidecar(root,
+    StatsSource.write(root,
       schemaOf(Seq("alpha"), Map("alpha" -> false)), entries, c)
-    val src = ZarrGridStore.readStatsManifest(root,
-      new SerializableHadoopConf(c))
+    val src = StatsSource.open(root, new SerializableHadoopConf(c))
     GridIO.Counters.reset()
     assert(src.bounds("alpha 60").contains((60.0, 60.0)))
     assert(GridIO.Counters.reads.sum() == 2,

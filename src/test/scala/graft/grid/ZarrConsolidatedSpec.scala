@@ -27,13 +27,11 @@ class ZarrConsolidatedSpec extends AnyFunSuite {
     val conf = GridIO.driverConf()
     GridIO.Counters.reset()
     val store = ZarrGridStore.open(root)
-    // 1 exists(.zmetadata) + 1 HEAD on the stats manifest (its
-    // open-time version key — per-var stats loads verify against it so
-    // a concurrent append can never serve post-append sums to this
-    // handle's extent); 3 extra reads are the eager coordinate DATA
-    // chunks (t, lat, lon) + 1 the stats manifest. No directory
-    // listing, no per-array metadata round trips.
-    assert(GridIO.Counters.existChecks.sum() == 2L)
+    // 1 exists(.zmetadata); 3 extra reads are the eager coordinate
+    // DATA chunks (t, lat, lon) + 1 the stats manifest (its per-var
+    // fingerprints need no HEAD). No directory listing, no per-array
+    // metadata round trips.
+    assert(GridIO.Counters.existChecks.sum() == 1L)
     assert(GridIO.Counters.reads.sum() == 1L + 3L + 1L)
     assert(GridIO.Counters.lists.sum() == 0L)
     assert(store.schema.dimNames == Seq("t", "lat", "lon"))

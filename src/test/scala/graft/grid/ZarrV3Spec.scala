@@ -124,11 +124,10 @@ class ZarrV3Spec extends SparkTestBase {
     ZarrGridStore.write(Fixtures.linearGrid, root, Map("t" -> 6), "gzip", V3())
     GridIO.Counters.reset()
     ZarrGridStore.open(root)
-    // exists(.zmetadata) + exists(zarr.json) + 1 HEAD on the stats
-    // manifest (its open-time version key; see ZarrConsolidatedSpec) +
-    // read(zarr.json with inline consolidated metadata) + 3 coordinate
-    // chunk reads + the .graft-stats.json manifest (one read)
-    assert(GridIO.Counters.existChecks.sum() == 3L)
+    // exists(.zmetadata) + exists(zarr.json) + read(zarr.json with
+    // inline consolidated metadata) + 3 coordinate chunk reads + the
+    // .graft-stats.json manifest (one read, no HEAD)
+    assert(GridIO.Counters.existChecks.sum() == 2L)
     assert(GridIO.Counters.reads.sum() == 1L + 3L + 1L)
     assert(GridIO.Counters.lists.sum() == 0L)
     // strip consolidation -> per-array listing walk, same store

@@ -179,27 +179,6 @@ class ZarrVarStatsSpec extends SparkTestBase {
     assert(GridIO.Counters.reads.sum() == 2L, "second var = one more")
   }
 
-  test("format v1 sidecars remain readable") {
-    val root = tmp().resolve("v1compat").toString
-    import spark.implicits._
-    val df = (0 until 8).map(t => (t, t * 3.0)).toDF("t", "x")
-    ZarrGridStore.writeFromRows(df,
-      GridSchema(Seq(DimDef("t", IntCoords((0 until 8).toArray))),
-        Seq(VarDef("x", Seq("t"), GDouble))),
-      Map("t" -> 4), root, "zlib")
-    // rewrite the sidecar as a pre-round-11 v1 single file
-    GridIO.delete(s"$root/x/.graft-stats.json", GridIO.driverConf())
-    Files.write(Paths.get(root, ".graft-stats.json"),
-      """{"version":1,"vars":{"x":{"kind":"double",
-        |"stats":{"0":[0.0,9.0],"1":[12.0,21.0]},
-        |"sums":{"0":18.0,"1":66.0}}}}""".stripMargin
-        .getBytes("UTF-8"))
-    val store = ZarrGridStore.open(root)
-    assert(store.varBounds("x", Seq((0, 4))).contains((0.0, 9.0)))
-    assert(store.varBounds("x", Seq((4, 4))).contains((12.0, 21.0)))
-    assert(store.varSums("x", Seq((4, 4))).contains(66.0))
-  }
-
   test("corrupt or future-versioned sidecars degrade to no stats") {
     val conf = GridIO.driverConf()
     def freshTree(name: String): String = {
@@ -215,12 +194,18 @@ class ZarrVarStatsSpec extends SparkTestBase {
     val s1 = ZarrGridStore.open(r1)
     assert(s1.varBounds("temperature", Seq((0, 25), (0, 5))).isEmpty)
     assert(s1.readVar("temperature", Seq((0, 1), (0, 1))) != null)
-    // future version: open succeeds, no bounds
-    val r2 = freshTree("future")
-    Files.write(Paths.get(r2, ".graft-stats.json"),
-      """{"version":99,"opaque":true}""".getBytes("UTF-8"))
-    assert(ZarrGridStore.open(r2)
-      .varBounds("temperature", Seq((0, 25), (0, 5))).isEmpty)
+    // future version, the old single-file v1 body, an fp-less v2
+    // manifest: each opens, and no bounds are served
+    for (body <- Seq("""{"version":99,"opaque":true}""",
+      """{"version":1,"vars":{"temperature":{"kind":"double",
+        |"stats":{"0.0":[0.0,244.0]},"sums":{"0.0":1.0}}}}""".stripMargin,
+      """{"version":2,"vars":["temperature"]}""")) {
+      val r2 = freshTree("old")
+      Files.write(Paths.get(r2, ".graft-stats.json"), body.getBytes("UTF-8"))
+      val s2 = ZarrGridStore.open(r2)
+      assert(s2.varBounds("temperature", Seq((0, 25), (0, 5))).isEmpty, body)
+      assert(s2.varSums("temperature", Seq((0, 25), (0, 5))).isEmpty, body)
+    }
     // valid manifest, corrupt PER-VAR file: open succeeds, that var
     // serves no bounds (and the read is attempted once, not fatal)
     val r3 = freshTree("varcorrupt")
@@ -283,11 +268,9 @@ class ZarrVarStatsSpec extends SparkTestBase {
         "y" -> Fixtures.AffineLaw(0.0, Seq(5.0)))),
       root, Map("t" -> 4), "zlib")
     // handle opened BEFORE the append; its lazy stats must belong to
-    // the pre-append extent forever. The manifest-key (length, mtime)
-    // guard had a window here — an append landing within the same
-    // mtime tick passed it and served merged edge-chunk stats against
-    // the old extent; the content-fingerprint guard compares the very
-    // bytes served, so no filesystem timing can fool it.
+    // the pre-append extent forever. The content-fingerprint guard
+    // compares the very bytes served, so no filesystem timing (an
+    // append within the same mtime tick) can fool it.
     val before = ZarrGridStore.open(root)
     val slab = GridSchema(
       Seq(DimDef("t", IntCoords((7 until 10).toArray)),
@@ -301,8 +284,7 @@ class ZarrVarStatsSpec extends SparkTestBase {
     assert(before.varBounds("x", Seq((4, 3))).isEmpty,
       "pre-append handle served post-append stats")
     // ...and the guard is content-based: no statusOf HEAD happened
-    assert(GridIO.Counters.existChecks.sum() == 0,
-      "fp guard fell back to the legacy manifest HEAD")
+    assert(GridIO.Counters.existChecks.sum() == 0, "fp guard made a HEAD")
     // untouched y keeps serving — only the changed variable degrades
     assert(before.varBounds("y", Seq((0, 3))).contains((0.0, 10.0)))
     // a FRESH open serves the merged stats (chunk 1 now spans t=4..7)
@@ -312,7 +294,7 @@ class ZarrVarStatsSpec extends SparkTestBase {
 
   test("sharded per-var stats (v3) serve a zarr tree end-to-end") {
     val hconf = spark.sparkContext.hadoopConfiguration
-    hconf.setInt(ZarrGridStore.StatsShardEntriesKey, 2)
+    hconf.setInt(StatsSource.ShardEntriesKey, 2)
     val root = tmp().resolve("sharded").toString
     try {
       // 8 chunks along t -> 8 stats entries for x, forced into 4
@@ -363,7 +345,7 @@ class ZarrVarStatsSpec extends SparkTestBase {
       before.foreach { case (f, t) =>
         assert(after(f) == t, s"prefix shard $f rewritten by append")
       }
-    } finally hconf.unset(ZarrGridStore.StatsShardEntriesKey)
+    } finally hconf.unset(StatsSource.ShardEntriesKey)
   }
 
   test("foreign trees (no sidecar) serve no bounds") {

@@ -27,14 +27,14 @@ class ConcurrentEvalSpec extends SparkTestBase {
     "pivot_grid_group", "pivot_grid_zarr",
     // round-12 continuation staged fixtures: the z-ordered events
     // table, the PQ codebook+codes pair (whose first build NESTS a
-    // second staged build — reentrant on the stage-registry monitor),
+    // second staged build — reentrant on the QueryTmp.staged monitor),
     // and the composed IVF-PQ consumer of both kmeans and PQ stages
     "zorder_prune", "embed_pq", "ann_ivfpq",
     // round-12 fourth continuation staged fixtures: the bloom index
     // (point build; the incremental and compacted variants NEST a
     // write+append(+compact) sequence in one staged build) and the
     // SQ8 probe (whose codes stage nests the quantizer stage —
-    // reentrant on the stage-registry monitor)
+    // reentrant on the QueryTmp.staged monitor)
     "bloom_point_lookup", "bloom_lookup_incremental",
     "bloom_lookup_compacted", "ann_sq8",
     // round-13 staged fixtures: the retrained IVF index (build +

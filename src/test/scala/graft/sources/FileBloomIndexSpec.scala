@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * Round 13 adds the SHARDED sidecar laws: appends rewrite only the
   * shards their batch touches (untouched shards byte-identical),
   * merge == one-shot rebuild per bucket, shard swaps heal from either
-  * residue, legacy v1 sidecars upgrade on first append, and the
-  * per-JVM filter memo serves repeated lookups without re-reading a
+  * residue, a legacy `_blooms` sidecar is rejected, and the per-JVM
+  * filter memo serves repeated lookups without re-reading a
   * byte of sidecar data.
   */
 class FileBloomIndexSpec extends SparkTestBase {
@@ -203,81 +203,30 @@ class FileBloomIndexSpec extends SparkTestBase {
       "the forward roll must clear the stale old copy")
   }
 
-  test("legacy v1 sidecar: readable as-is, resharded on first append") {
-    val base = graft.queries.QueryTmp.dir("fbloomv1")
+  test("a legacy _blooms sidecar is rejected by every verb, naming write()") {
     val docs = Tables.documents(spark, sf)
     val layout = pmod(hash(col("text")), lit(16))
-    val p = s"$base/idx"
+    val p = graft.queries.QueryTmp.dir("fbloomv1") + "/idx"
     FileBloomIndex.write(docs.filter(col("doc_id") < 250),
       "doc_id", layout, p, 64L)
-    // demote the sharded sidecar to the legacy single-dir v1 format
-    val rows = FileBloomIndex.sidecarDf(spark, p).localCheckpoint()
-    rows.coalesce(1).write.mode("overwrite").parquet(s"$p/_blooms")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/_blooms.d"), true)
-    // v1 reads work unchanged
-    assert(FileBloomIndex.lookup(spark, p, "doc_id", "7")
-      .select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(7L))
-    // first append upgrades: shards appear, the v1 file is gone, and
-    // the sidecar equals a one-shot rebuild over the union
-    FileBloomIndex.append(docs.filter(col("doc_id") >= 250),
-      "doc_id", layout, p)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$p/_blooms.d")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/_blooms")),
-      "the upgrade must retire the v1 sidecar")
-    val full = s"$base/full"
-    FileBloomIndex.write(docs, "doc_id", layout, full, 64L)
-    assert(bloomsOf(p) == bloomsOf(full))
-    assert(FileBloomIndex.lookup(spark, p, "doc_id", "300")
-      .select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(300L))
-  }
-
-  test("incomplete upgrade: a partial _blooms.d beside an intact v1 " +
-      "is ignored by reads and redone by the next append") {
-    val base = graft.queries.QueryTmp.dir("fbloomcoexist")
-    val docs = Tables.documents(spark, sf)
-    val layout = pmod(hash(col("text")), lit(16))
-    val p = s"$base/idx"
-    FileBloomIndex.write(docs.filter(col("doc_id") < 250),
-      "doc_id", layout, p, 64L)
-    val rows = FileBloomIndex.sidecarDf(spark, p).localCheckpoint()
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
-    // demote to v1, then plant a PARTIAL shard root (only buckets 0-7)
-    // — the residue a crashed pre-atomic reshard could leave
-    rows.coalesce(1).write.mode("overwrite").parquet(s"$p/_blooms")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/_blooms.d"), true)
-    rows.filter(col("bucket") < 8).coalesce(1)
-      .write.parquet(s"$p/_blooms.d/0-7")
-    // a key living in a bucket the partial root LACKS must still be a
-    // candidate: the intact v1 is authoritative over the partial root
-    val byBucket = docs.filter(col("doc_id") < 250)
-      .select(col("doc_id"), layout.as("b"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1))
-    val (hiId, hiB) = byBucket.find(_._2 >= 8).get
-    assert(FileBloomIndex.candidateBuckets(spark, p, hiId.toString)
-        .contains(hiB),
-      "coexistence must serve the v1 sidecar, not the partial root")
-    assert(FileBloomIndex.lookup(spark, p, "doc_id", hiId.toString)
-      .select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(hiId))
-    // compact with pending tombstones refuses until the upgrade lands
-    FileBloomIndex.delete(spark, p, Seq(hiId.toString))
-    val ex = intercept[IllegalArgumentException] {
-      FileBloomIndex.compact(spark, p)
+    // coexistence first (`_blooms` beside the shard root), then v1 only
+    FileBloomIndex.sidecarDf(spark, p).write.parquet(s"$p/_blooms")
+    for (v1Only <- Seq(false, true)) {
+      if (v1Only) fs.delete(new org.apache.hadoop.fs.Path(s"$p/_blooms.d"),
+        true)
+      Seq[() => Any](
+        () => FileBloomIndex.lookup(spark, p, "doc_id", "7"),
+        () => FileBloomIndex.append(docs.filter(col("doc_id") >= 250),
+          "doc_id", layout, p),
+        () => FileBloomIndex.delete(spark, p, Seq("7")),
+        () => FileBloomIndex.compact(spark, p)).foreach { verb =>
+        val ex = intercept[IllegalArgumentException](verb())
+        assert(ex.getMessage.contains("write()"), ex.getMessage)
+      }
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/_tombstones")))
     }
-    assert(ex.getMessage.contains("incomplete upgrade"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/_tombstones"), true)
-    // the next append drops the partial root and redoes the reshard:
-    // sidecar equals a one-shot rebuild over the union
-    FileBloomIndex.append(docs.filter(col("doc_id") >= 250),
-      "doc_id", layout, p)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/_blooms")),
-      "the redone upgrade must retire the v1 sidecar")
-    val full = s"$base/full"
-    FileBloomIndex.write(docs, "doc_id", layout, full, 64L)
-    assert(bloomsOf(p) == bloomsOf(full),
-      "the redone reshard must equal the one-shot rebuild")
   }
 
   test("filter memo: a repeat lookup reads zero sidecar data bytes") {
