@@ -2,14 +2,12 @@ package graft.grid
 
 import graft.SparkTestBase
 import graft.grid.ZarrLayout.{V2, V3}
-import graft.sources.FileBloomIndex
-import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-/** The writer-format invariant the sidecar readers rest on: every writer
-  * emits only the current stats format and the bloom index only `_blooms.d`.
+/** The writer-format invariant the stats reader rests on: every writer
+  * emits only the current stats format.
   */
 class SidecarFormatSpec extends SparkTestBase {
 
@@ -54,24 +52,5 @@ class SidecarFormatSpec extends SparkTestBase {
         checkStats(rs)
       }
     } finally hconf.unset(StatsSource.ShardEntriesKey)
-  }
-
-  test("every bloom-index verb leaves _blooms.d as the only sidecar") {
-    val docs = spark.range(40).selectExpr("id doc_id", "string(id * 7) text")
-    val layout = pmod(hash(col("text")), lit(8))
-    val p = graft.queries.QueryTmp.dir("fbloomfmt") + "/idx"
-    val verbs = Seq[() => Unit](
-      () => FileBloomIndex.write(docs.filter(col("doc_id") < 20), "doc_id",
-        layout, p, 16L),
-      () => FileBloomIndex.append(docs.filter(col("doc_id") >= 20),
-        "doc_id", layout, p),
-      () => FileBloomIndex.delete(spark, p, Seq("3")),
-      () => FileBloomIndex.compact(spark, p))
-    verbs.foreach { verb =>
-      verb()
-      Seq("_blooms", "_blooms.next", "_blooms.old").foreach(n =>
-        assert(!Files.exists(java.nio.file.Paths.get(p, n)), n))
-    }
-    assert(FileBloomIndex.lookup(spark, p, "doc_id", "3").count() == 0)
   }
 }

@@ -71,6 +71,11 @@ class FileBloomIndexSpec extends SparkTestBase {
     }.toMap
   }
 
+  /** The writers leave `_blooms.d` as the only sidecar. */
+  private def onlyShardRoot(p: String): Unit =
+    Seq("_blooms", "_blooms.next", "_blooms.old").foreach(n =>
+      assert(!new java.io.File(s"$p/$n").exists(), n))
+
   private def bloomsOf(d: String): Map[Int, Seq[Byte]] =
     FileBloomIndex.sidecarDf(spark, d)
       .collect().map(r => r.getAs[Int]("bucket") ->
@@ -84,9 +89,11 @@ class FileBloomIndexSpec extends SparkTestBase {
     val inc = s"$base/inc"
     FileBloomIndex.write(docs.filter(col("doc_id") < 250),
       "doc_id", layout, inc, 64L)
+    onlyShardRoot(inc)
     val before = fileHashes(new java.io.File(s"$inc/data"))
     FileBloomIndex.append(docs.filter(col("doc_id") >= 250),
       "doc_id", layout, inc)
+    onlyShardRoot(inc)
     val after = fileHashes(new java.io.File(s"$inc/data"))
     before.foreach { case (p, h) =>
       assert(after.get(p).contains(h),
@@ -361,6 +368,7 @@ class FileBloomIndexSpec extends SparkTestBase {
     val dataBefore = fileHashes(new java.io.File(s"$p/data"))
     val dead = Seq("7", "300", "999999") // the last is absent: no-op
     FileBloomIndex.delete(spark, p, dead)
+    onlyShardRoot(p)
     // the delete itself rewrites nothing
     assert(fileHashes(new java.io.File(s"$p/data")) == dataBefore,
       "delete must be a sidecar append, not a data rewrite")
@@ -377,6 +385,7 @@ class FileBloomIndexSpec extends SparkTestBase {
     val touched = Seq("7", "300")
       .map(k => FileBloomIndex.candidateBuckets(spark, p, k))
     FileBloomIndex.compact(spark, p)
+    onlyShardRoot(p)
     assert(!new java.io.File(s"$p/_tombstones").exists(),
       "purge must clear the tombstone sidecar")
     val ids = spark.read.parquet(s"$p/data").select("doc_id")
