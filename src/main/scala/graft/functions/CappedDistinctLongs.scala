@@ -60,15 +60,15 @@ final class CappedLongSet(val cap: Int) {
   * (default 128) distinct keys per partition degrades to SORT-based
   * aggregation. For this aggregate that degradation is graceful — the
   * buffer is <= cap+1 longs, so the sorted stream carries no large
-  * objects — and measured at sf0.1 (graft.NgramProbe, warm medians)
-  * the threshold makes no material difference (6.1 s at 128 vs 6.8 s
-  * at 1M for the full ngram_dup_spans), while a raised threshold
-  * risks large boxed hash maps under AQE-coalesced partitions. Leave
-  * the default alone.
+  * objects — and measured at sf0.1 (warm medians, DESIGN_NOTES
+  * "ngram_dup_spans shape decision") the threshold makes no material
+  * difference (6.1 s at 128 vs 6.8 s at 1M for the full
+  * ngram_dup_spans), while a raised threshold risks large boxed hash
+  * maps under AQE-coalesced partitions. Leave the default alone.
   *
-  * Measured trade vs the Tungsten alternative (NgramProbe, sf0.1 warm
-  * medians): the 4-shuffle distinct + df-count + semi-join shape runs
-  * ~4-4.7 s against this shape's ~5.5-6.6 s on local[32], because its
+  * Measured trade vs the Tungsten alternative (same DESIGN_NOTES
+  * entry, sf0.1 warm medians): the 4-shuffle distinct + df-count +
+  * semi-join shape runs ~4-4.7 s against this shape's ~5.5-6.6 s on local[32], because its
   * big aggregates stay in whole-stage codegen while ObjectHashAggregate
   * does not. It pays for that by shuffling the posting volume ~3 times
   * (distinct, df re-key, join re-key) against ONE here. Local mode is

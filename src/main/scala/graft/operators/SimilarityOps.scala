@@ -476,14 +476,6 @@ object SimilarityOps {
       .select("id", "bucket"), dir, overwrite = true)
   }
 
-  /** The id→bucket lookup sidecar: (id, bucket) range-partitioned and
-    * sorted by id, so every parquet file/row-group carries tight
-    * min/max id stats BY CONSTRUCTION (not layout luck) and a probe's
-    * `id = ?` lookup is footer-metadata plus one row group — a
-    * metadata-sized read no matter the index size. Appends add files
-    * covering only the new batch's id range; per-file pruning is
-    * unaffected by how many appends landed.
-    */
   /** Append (id, bucket) rows to the `_ids` sidecar without touching
     * data files — the ingest sink's crash-window repair (see
     * [[graft.streaming.AnnStreams.ingestBatch]]).
@@ -492,12 +484,20 @@ object SimilarityOps {
       dir: String): Unit =
     writeIdsSidecar(entries, dir, overwrite = false)
 
-  private def writeIdsSidecar(assigned: DataFrame, dir: String,
+  /** The id→bucket lookup sidecar `<root>/_ids`: (id, bucket)
+    * range-partitioned and sorted by id, so every parquet file/row-group
+    * carries tight min/max id stats BY CONSTRUCTION (not layout luck)
+    * and a probe's `id = ?` lookup is footer-metadata plus one row
+    * group — a metadata-sized read no matter the index size. Appends
+    * add files covering only the new batch's id range; per-file pruning
+    * is unaffected by how many appends landed.
+    */
+  private def writeIdsSidecar(assigned: DataFrame, root: String,
       overwrite: Boolean): Unit =
     assigned.select(col("id"), col("bucket"))
       .repartitionByRange(col("id")).sortWithinPartitions(col("id"))
       .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"$dir/_ids")
+      .parquet(s"$root/_ids")
 
   /** INCREMENTAL index append — the daily-ingest shape
     * (dedup_incremental's ANN counterpart): quantize ONLY the new
@@ -514,18 +514,27 @@ object SimilarityOps {
     * dedup_incremental).
     */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
-      dir: String): Unit =
+      dir: String): Unit = {
+    val cb = openIndex(newVecs.sparkSession, dir)
     appendAssigned(assignForIndex(
-      newVecs.select(col(idCol).as("id"), col(vecCol).as("v")), dir), dir)
+      newVecs.select(col(idCol).as("id"), col(vecCol).as("v")), cb), dir)
+  }
 
-  /** Quantize (id, v) rows against the index's own `_codebook` — the
+  /** Quantize (id, v) rows against an opened index's codebook — the
     * shared assignment step of every append path.
     */
-  private[graft] def assignForIndex(e: DataFrame, dir: String): DataFrame = {
-    healRetrain(e.sparkSession, dir)
-    val cents = e.sparkSession.read.parquet(s"$dir/_codebook")
-      .select(col("id").as("cid"), col("v").as("cv"))
-    assignToCodebook(e, cents).withColumn("bucket", col("bucket").cast("int"))
+  private[graft] def assignForIndex(e: DataFrame,
+      cb: Codebook): DataFrame =
+    assignToCodebook(e, centroidsDf(e.sparkSession, cb))
+      .withColumn("bucket", col("bucket").cast("int"))
+
+  /** An opened codebook as the (cid, cv) frame [[assignToCodebook]]
+    * and the batch probe broadcast.
+    */
+  private def centroidsDf(spark: org.apache.spark.sql.SparkSession,
+      cb: Codebook): DataFrame = {
+    import spark.implicits._
+    cb.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
   }
 
   /** Append pre-assigned (id, v, bucket) rows: data files, then the
@@ -558,6 +567,7 @@ object SimilarityOps {
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, deleteIds: Seq[Long]): Unit = {
     require(deleteIds.nonEmpty, "empty deleteIds")
+    openIndex(spark, dir)
     import spark.implicits._
     deleteIds.distinct.toDF("id")
       .coalesce(1)
@@ -565,28 +575,76 @@ object SimilarityOps {
   }
 
   /** The `_tombstones` sidecar as a distinct id set; None when the
-    * index has no pending deletes.
+    * index has no pending deletes (one existence check).
     */
-  private def tombstonesDf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(s"$dir/_tombstones")
-      df.schema // force resolution so a missing dir lands HERE
-      Some(df.select("id").distinct())
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
+  private[graft] def tombstonesDf(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[DataFrame] = {
+    val ts = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
+    if (!ts.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(ts))
+      None
+    else Some(spark.read.parquet(ts.toString).select("id").distinct())
+  }
+
+  /** The one entry of every IVF verb. It heals — rolls back a crashed
+    * retrain ([[healRetrain]]), resolves sidecar swap residues and
+    * applies a pending split ([[applySplit]]), so a crashed writer
+    * never takes traffic down — then rejects an index still lacking
+    * `_codebook` or `_ids` ([[rejectLegacy]]), and returns the codebook
+    * every verb uses for both the [[liveIndex]] bucket filter and its
+    * cell ranking. Clean, it costs four existence checks and a listing:
+    * the codebook comes from a per-JVM memo guarded by the `_codebook`
+    * fingerprint ([[graft.sources.FileBloomIndex.fingerprint]]), which
+    * every retrain, split or rebuild flips.
+    */
+  private[graft] def openIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Codebook = {
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val fs = p(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    healRetrain(fs, dir)
+    val cbPath = p(s"$dir/_codebook")
+    def sidecars = fs.exists(cbPath) && fs.exists(p(s"$dir/_ids"))
+    if (fs.exists(p(s"$dir/_split.next")) || !sidecars) {
+      applySplit(spark, fs, dir)
+      if (!sidecars) rejectLegacy(dir)
+    }
+    val fp = graft.sources.FileBloomIndex.fingerprint(fs, cbPath)
+    codebookMemo.get(dir) match {
+      case Some((cached, arr)) if cached == fp => arr
+      case _ =>
+        val arr = spark.read.parquet(cbPath.toString)
+          .select(col("id"), col("v")).collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+          .sortBy(_._1)
+        codebookMemo.put(dir, (fp, arr))
+        arr
+    }
+  }
+
+  private val codebookMemo = scala.collection.concurrent.TrieMap
+    .empty[String, (Seq[(String, Long, Long)], Codebook)]
+
+  /** An opened codebook: (cid, centroid) rows sorted by cid. */
+  private[graft] type Codebook = Array[(Long, Array[Double])]
+
+  /** The one legacy-index rejection: an index lacking the `_codebook`
+    * or `_ids` sidecar (or no index at all) is a format no verb reads,
+    * upgrades or extends.
+    */
+  private def rejectLegacy(dir: String): Nothing =
+    throw new IllegalArgumentException(
+      s"$dir is not an IVF index in the current format (it lacks the " +
+        "_codebook or _ids sidecar) — delete it and rebuild it with " +
+        "buildIvfIndex")
 
   /** Roll back a crashed [[retrainIvfIndex]] (the live dir renamed
-    * aside, the staged copy not yet in place): EVERY index verb calls
-    * this on entry — the bloom sidecar's read-side-heal discipline —
-    * so a retrain that dies between its two renames never takes probe
-    * or ingest traffic down until someone re-runs retrain. Tolerant of
+    * aside, the staged copy not yet in place), so a retrain that dies
+    * between its two renames heals on the next verb. Tolerant of
     * concurrent healers (the loser's failed rename finds the dir
     * already restored).
     */
-  private def healRetrain(spark: org.apache.spark.sql.SparkSession,
+  private def healRetrain(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) {
       val old = new org.apache.hadoop.fs.Path(s"$dir.retrain.old")
       if (fs.exists(old)) {
@@ -604,41 +662,22 @@ object SimilarityOps {
         }
       }
     }
-    // a committed-but-unapplied hot-cell split resumes here too
-    if (fs.exists(p)) applySplit(spark, dir)
   }
 
   /** The stored index minus tombstoned rows — what every probe path
     * scans. The anti-join side is the tombstone set (compaction-
     * bounded), broadcast so candidate scans stay partition-pruned
-    * single-pass reads.
+    * single-pass reads. Rows whose bucket the codebook `cb` does not
+    * name are hidden: a hot-cell split renames child dirs in BEFORE its
+    * codebook swap and drops parent dirs AFTER it, so this filter makes
+    * every crash/race window show each id exactly once (children
+    * invisible before the swap, orphaned parents invisible after). The
+    * cid list is partition-prunable.
     */
   private[graft] def liveIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    healRetrain(spark, dir)
-    val stored0 = spark.read.parquet(dir)
-    // hide rows whose bucket the codebook does not name: a hot-cell
-    // split renames child dirs in BEFORE its codebook swap and drops
-    // parent dirs AFTER it, so this filter makes every crash/race
-    // window show each id exactly once (children invisible before the
-    // swap, orphaned parents invisible after). The cid list is
-    // memoized ([[codebookArr]]) and partition-prunable. "Modern" is
-    // decided by ANY codebook artifact — live, mid-swap `.old`, or a
-    // pending split marker — so a concurrent swap's
-    // momentarily-missing `_codebook` routes through codebookArr
-    // (which heals, and fails LOUDLY if the codebook is truly gone)
-    // instead of silently dropping the filter and serving the split
-    // rows twice. Only genuinely legacy pre-codebook indexes skip it.
-    val cbPath = new org.apache.hadoop.fs.Path(s"$dir/_codebook")
-    val fs = cbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val modern = fs.exists(cbPath) ||
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_codebook.old")) ||
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_split.next"))
-    val stored =
-      if (modern)
-        stored0.filter(col("bucket")
-          .isin(codebookArr(spark, dir).map(_._1.toInt).toSeq: _*))
-      else stored0
+      dir: String, cb: Codebook): DataFrame = {
+    val stored = spark.read.parquet(dir)
+      .filter(col("bucket").isin(cb.map(_._1.toInt).toSeq: _*))
     tombstonesDf(spark, dir) match {
       case Some(ts) => stored.join(broadcast(ts), Seq("id"), "left_anti")
       case None => stored
@@ -658,7 +697,7 @@ object SimilarityOps {
     * repeated-query form of [[annIvfMultiProbe]]: the probe's `nprobe`
     * nearest cells are computed DRIVER-SIDE against the index's own
     * `_codebook` sidecar (for nprobe=1 the probe row's stored bucket
-    * is reused and no codebook read happens), and the scan filter is
+    * is reused), and the scan filter is
     * `bucket IN (<cells>)` — still directory-level partition pruning,
     * now over nprobe directories. Cell scoring matches [[ivfAssign]]
     * (dot(pv,c)/|c|, ties to the lowest cid), so results equal the
@@ -667,29 +706,26 @@ object SimilarityOps {
   def annIvfFromIndexMultiProbe(spark: org.apache.spark.sql.SparkSession,
       dir: String, probeId: Long, k: Int, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe=$nprobe")
-    val stored = liveIndex(spark, dir)
-    // probe row: through the `_ids` sidecar when the index carries one
-    // (a metadata-sized id lookup, then ONE partition-pruned bucket
-    // directory read for the vector); pre-sidecar indexes fall back to
-    // the old index-wide id filter. The old path's footprint was the
-    // whole index's footers+row-groups at 10⁹ rows — the sidecar makes
-    // a probe O(row group), not O(index). A tombstoned probe id fails
-    // loudly here — the live scan has no row for it even when the
-    // (unrewritten) sidecar still lists its bucket.
-    val probe = (probeBucketLookup(spark, dir, probeId) match {
-      case Some(b) =>
-        stored.filter(col("bucket") === b && col("id") === probeId)
-          .select(col("bucket"), col("v")).collect()
-      case None =>
-        stored.filter(col("id") === probeId)
-          .select(col("bucket"), col("v")).collect()
-    }).headOption.getOrElse(throw new IllegalArgumentException(
-      s"probe id $probeId not in index $dir (absent or deleted)"))
+    val cb = openIndex(spark, dir)
+    val stored = liveIndex(spark, dir, cb)
+    // probe row: a metadata-sized `_ids` lookup, then ONE
+    // partition-pruned bucket directory read for the vector — a probe
+    // is O(row group), not O(index). An id the sidecar lacks (an append
+    // that died between its data and `_ids` writes) falls back to an
+    // index-wide id filter. A tombstoned probe id fails loudly here —
+    // the live scan has no row for it even when the (unrewritten)
+    // sidecar still lists its bucket.
+    val probe = probeBucketLookup(spark, dir, probeId)
+      .fold(stored)(b => stored.filter(col("bucket") === b))
+      .filter(col("id") === probeId)
+      .select(col("bucket"), col("v")).collect()
+      .headOption.getOrElse(throw new IllegalArgumentException(
+        s"probe id $probeId not in index $dir (absent or deleted)"))
     val pv = probe.getSeq[Double](1).toArray
     val pn = math.sqrt(pv.map(x => x * x).sum)
     val cells: Seq[Int] =
       if (nprobe == 1) Seq(probe.getInt(0))
-      else codebookCells(spark, dir, pv, nprobe)
+      else codebookCells(cb, pv, nprobe)
     scoreCells(stored, cells, pv, pn, k, excludeId = Some(probeId))
   }
 
@@ -705,10 +741,10 @@ object SimilarityOps {
       dir: String, probeVec: Array[Double], k: Int,
       nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe=$nprobe")
+    val cb = openIndex(spark, dir)
     val pn = math.sqrt(probeVec.map(x => x * x).sum)
-    val cells = codebookCells(spark, dir, probeVec, nprobe)
-    scoreCells(liveIndex(spark, dir), cells, probeVec, pn, k,
-      excludeId = None)
+    scoreCells(liveIndex(spark, dir, cb), codebookCells(cb, probeVec, nprobe),
+      probeVec, pn, k, excludeId = None)
   }
 
   /** BATCH multi-probe over a [[buildIvfIndex]] materialization — the
@@ -716,8 +752,8 @@ object SimilarityOps {
     * form of [[annIvfMultiProbeBatch]], bit-identical tie-breaks).
     * Probe rows are located through the `_ids` sidecar (P driver-side
     * (id, bucket) pairs, then ONE scan pruned to the probes' own
-    * bucket directories — never an index-wide id filter; pre-sidecar
-    * indexes fall back to the full join). Cell ranking and per-probe
+    * bucket directories — never an index-wide id filter while the
+    * sidecar covers every probe). Cell ranking and per-probe
     * exact top-k run entirely executor-side through GroupedTopK, and
     * the candidate scan joins `bucket === cid` against the broadcast
     * (probe, cell) list — on the bucket-partitioned layout Spark's
@@ -730,11 +766,17 @@ object SimilarityOps {
     require(nprobe >= 1, s"nprobe=$nprobe")
     require(probeIds.nonEmpty, "empty probeIds")
     val dot = GraftFunctions.dot_f64 _
+    // the memoized codebook (nCentroids rows by construction) serves
+    // the nprobe guard, the bucket filter and the broadcast side — no
+    // count() job, and repeat batches read no codebook parquet at all
+    val cb = openIndex(spark, dir)
+    require(cb.length >= nprobe,
+      s"codebook has ${cb.length} centroids < nprobe=$nprobe")
     // tombstone-masked: deleted rows never appear as candidates, and a
     // tombstoned PROBE id contributes no probe row — its pid is simply
     // absent from the output (the batch contract; the single-probe
     // path errors loudly instead)
-    val stored = liveIndex(spark, dir)
+    val stored = liveIndex(spark, dir, cb)
     // DISTINCT ids throughout — a duplicated probe id would otherwise
     // duplicate its probe row and fill that probe's top-k with
     // repeated (pid, id) candidates
@@ -751,63 +793,34 @@ object SimilarityOps {
     // sidecar once, which at that probe count IS the lookup's amortized
     // cost (2 longs/row — a sliver of the vector payload it replaces).
     val probeRows = {
-      val viaSidecar =
-        try {
-          val ids = spark.read.parquet(s"$dir/_ids")
-          val matched =
-            (if (distinctPids.length <= 1000)
-              ids.filter(col("id").isin(distinctPids: _*))
-            else ids.join(broadcast(pidDf), "id")).collect()
-          // distinct on the MATCHED ids: duplicate probeIds must not
-          // mask ids the sidecar is missing
-          val matchedIds = matched.map(_.getLong(0)).distinct
-          if (matchedIds.length == distinctPids.length)
-            Some(matched.map(_.getInt(1)).distinct.toSeq)
-          else {
-            // ids the sidecar lacks: if every one is TOMBSTONED the
-            // matched buckets are still exactly right (a deleted probe
-            // contributes no rows anyway) — don't degrade the whole
-            // batch to the index-wide fallback for a stale probe list.
-            // A genuinely unknown id (legacy pre-sidecar append) still
-            // falls back conservatively.
-            val missing = distinctPids.toSet -- matchedIds
-            // broadcast the (probe-bounded) missing set rather than an
-            // isin literal: at the 10^6-probe workload a large stale
-            // fraction would otherwise build a planning-killing In list
-            val allDead = tombstonesDf(spark, dir).exists { ts =>
-              val missingDf = {
-                import spark.implicits._
-                missing.toSeq.toDF("id")
-              }
-              ts.join(broadcast(missingDf), "id").count() == missing.size
-            }
-            if (allDead) Some(matched.map(_.getInt(1)).distinct.toSeq)
-            else None
-          }
-        } catch {
-          case _: org.apache.spark.sql.AnalysisException => None
+      val ids = spark.read.parquet(s"$dir/_ids")
+      val matched =
+        (if (distinctPids.length <= 1000)
+          ids.filter(col("id").isin(distinctPids: _*))
+        else ids.join(broadcast(pidDf), "id")).collect()
+      val missing = distinctPids.toSet -- matched.map(_.getLong(0))
+      // ids the sidecar lacks: if every one is TOMBSTONED the matched
+      // buckets are still exactly right (a deleted probe contributes
+      // no rows anyway) — don't degrade the whole batch to the
+      // index-wide fallback for a stale probe list. An id a crashed
+      // append left out of `_ids` falls back conservatively. The
+      // missing set broadcasts rather than an isin literal: at the
+      // 10^6-probe workload a large stale fraction would otherwise
+      // build a planning-killing In list.
+      val allDead = missing.isEmpty || tombstonesDf(spark, dir).exists { ts =>
+        val missingDf = {
+          import spark.implicits._
+          missing.toSeq.toDF("id")
         }
-      viaSidecar match {
-        case Some(buckets) =>
-          stored.filter(col("bucket").isin(buckets: _*))
-            .join(broadcast(pidDf), "id")
-        case None => stored.join(broadcast(pidDf), "id")
+        ts.join(broadcast(missingDf), "id").count() == missing.size
       }
+      (if (allDead) stored.filter(col("bucket")
+        .isin(matched.map(_.getInt(1)).distinct.toSeq: _*))
+      else stored).join(broadcast(pidDf), "id")
     }
     val probes = probeRows.select(col("id").as("pid"), col("v").as("pv"),
       sqrt(dot(col("v"), col("v"))).as("pn"))
-    // codebook: the per-JVM memo (nCentroids rows by construction)
-    // serves both the nprobe guard and the broadcast side — no
-    // count() job, and repeat batches read no codebook parquet at all
-    val centArr = codebookArr(spark, dir)
-    require(centArr.length >= nprobe,
-      s"codebook has ${centArr.length} centroids < nprobe=$nprobe")
-    val cents = {
-      import spark.implicits._
-      centArr.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-        .toDF("cid", "cv")
-    }
-    val cellScores = probes.crossJoin(broadcast(cents))
+    val cellScores = probes.crossJoin(broadcast(centroidsDf(spark, cb)))
       .select(col("pid"), col("cid"),
         (dot(col("cv"), col("pv")) / sqrt(dot(col("cv"), col("cv"))))
           .as("score"))
@@ -841,25 +854,24 @@ object SimilarityOps {
     * in AnnIndexSpec). Pending [[deleteFromIvfIndex]] tombstones are
     * physically PURGED first — only the buckets holding deleted ids
     * are rewritten, emptied bucket directories are removed, and the
-    * tombstone sidecar is cleared.
+    * tombstone sidecar is cleared. Both `_ids` rewrites go through
+    * [[replaceIds]], never an in-place overwrite.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxFilesPerBucket: Int = 4): Unit = {
     require(maxFilesPerBucket >= 1, s"maxFilesPerBucket=$maxFilesPerBucket")
-    // apply any crashed retrain rollback / pending split first: compact
-    // reads the data dirs and `_ids` directly, and a half-applied split
-    // (children renamed in, parents not yet dropped) would otherwise
-    // double-count the split rows
-    healRetrain(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
+    // the open applies any crashed retrain rollback / pending split
+    // first: compact reads the data dirs and `_ids` directly, and a
+    // half-applied split (children renamed in, parents not yet dropped)
+    // would otherwise double-count the split rows
+    openIndex(spark, dir)
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def parquetCount(p: org.apache.hadoop.fs.Path): Int =
       fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
     // PURGE pending tombstones first: rewrite ONLY the buckets that
     // hold deleted ids (located through the `_ids` sidecar — a
-    // metadata-sized lookup; pre-sidecar indexes fall back to an
-    // index-wide locate, correct but wider), drop the rows, remove
+    // metadata-sized lookup), drop the rows, remove
     // bucket directories the purge emptied (dynamic overwrite only
     // replaces partitions it WRITES, so an empty result leaves the
     // stale directory behind), rewrite `_ids` without the deleted
@@ -874,23 +886,14 @@ object SimilarityOps {
         df.join(broadcast(ts), "id")
           .select("bucket").distinct().collect().map(_.getInt(0))
       // the sidecar locate is only sound when the sidecar is COMPLETE
-      // — a legacy index (built pre-sidecar, then appended) has an
-      // _ids covering only the appended batches, and trusting it
-      // would SKIP the original rows' buckets, leave deleted rows in
-      // place, and still clear the tombstones (silent resurrection).
-      // Completeness is a metadata-sized check: both counts answer
-      // from parquet footers.
-      val completeSidecar: Option[DataFrame] =
-        try {
-          val ids = spark.read.parquet(s"$dir/_ids")
-          ids.schema // force resolution: missing sidecar lands HERE
-          if (ids.count() == spark.read.parquet(dir).count()) Some(ids)
-          else None // incomplete (legacy) sidecar: locate index-wide
-        } catch { case _: org.apache.spark.sql.AnalysisException =>
-          None
-        }
-      val touched: Array[Int] = completeSidecar.map(locate)
-        .getOrElse(locate(spark.read.parquet(dir)))
+      // — an append that died between its data and `_ids` writes
+      // leaves rows `_ids` lacks, and trusting it would SKIP their
+      // buckets, leave deleted rows in place, and still clear the
+      // tombstones (silent resurrection). Completeness is a
+      // metadata-sized check: both counts answer from parquet footers.
+      val ids = spark.read.parquet(s"$dir/_ids")
+      val complete = ids.count() == spark.read.parquet(dir).count()
+      val touched = locate(if (complete) ids else spark.read.parquet(dir))
       if (touched.nonEmpty) {
         val kept = spark.read.parquet(dir)
           .filter(col("bucket").isin(touched.toSeq: _*)) // pruned read
@@ -905,19 +908,14 @@ object SimilarityOps {
             .partitionBy("bucket").parquet(dir)
         (touched.toSet -- surviving).foreach(b =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$dir/bucket=$b"), true))
-        // complete sidecar: drop the dead ids; incomplete or missing:
-        // REBUILD it from the post-purge data (same column-pruned read
-        // buildIvfIndex uses) — the purge is the natural moment to
-        // heal a legacy index into the metadata-sized-lookup layout
-        writeIdsSidecar(
-          completeSidecar match {
-            case Some(ids0) =>
-              ids0.join(broadcast(ts), Seq("id"), "left_anti")
-                .localCheckpoint()
-            case None => spark.read.parquet(dir).select("id", "bucket")
-          },
-          dir, overwrite = true)
       }
+      // complete sidecar: drop the dead ids; incomplete: REBUILD it
+      // from the post-purge data (same column-pruned read
+      // buildIvfIndex uses), which also repairs the crash window
+      if (touched.nonEmpty || !complete)
+        replaceIds(fs, dir,
+          if (complete) ids.join(broadcast(ts), Seq("id"), "left_anti")
+          else spark.read.parquet(dir).select("id", "bucket"))
       fs.delete(tsPath, true)
     }
     val fat = fs.listStatus(root).toSeq
@@ -937,13 +935,27 @@ object SimilarityOps {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket").parquet(dir)
     }
-    val idsPath = new org.apache.hadoop.fs.Path(s"$dir/_ids")
-    if (fs.exists(idsPath) && parquetCount(idsPath) > maxFilesPerBucket) {
-      // content unchanged by bucket compaction; rewrite only to
-      // restore the sorted few-files layout the point lookup relies on
-      val ids = spark.read.parquet(s"$dir/_ids").localCheckpoint()
-      writeIdsSidecar(ids, dir, overwrite = true)
-    }
+    // content unchanged by bucket compaction; rewrite only to restore
+    // the sorted few-files layout the point lookup relies on
+    if (parquetCount(new org.apache.hadoop.fs.Path(s"$dir/_ids")) >
+        maxFilesPerBucket)
+      replaceIds(fs, dir, spark.read.parquet(s"$dir/_ids"))
+  }
+
+  /** Replace the live `_ids` with `entries`: the complete copy stages
+    * under `_compact.tmp` and swaps in through [[swapSidecar]], so
+    * `_ids` is never partly written. A crash mid-swap leaves the live
+    * copy moved aside; [[openIndex]] rolls it back, which answers as
+    * before the compaction (a purge's ids stay tombstoned until the
+    * swap completes, and the next purge rebuilds the then-incomplete
+    * sidecar).
+    */
+  private def replaceIds(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      entries: DataFrame): Unit = {
+    val staged = s"$dir/_compact.tmp"
+    writeIdsSidecar(entries, staged, overwrite = true)
+    swapSidecar(fs, dir, "_ids", new org.apache.hadoop.fs.Path(s"$staged/_ids"))
+    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
   }
 
   /** SPLIT hot cells in place — the incremental lever between
@@ -971,8 +983,8 @@ object SimilarityOps {
     * `_split.tmp` (underscore: invisible to data reads), commits by
     * ONE rename to `_split.next`, and [[applySplit]] applies it
     * idempotently: child dirs rename in, `_codebook` swaps, `_ids`
-    * swaps, parent dirs drop, marker clears LAST. Every index read
-    * path heals a pending `_split.next` first (via [[healRetrain]]),
+    * swaps, parent dirs drop, marker clears LAST. Every index verb
+    * heals a pending `_split.next` first (via [[openIndex]]),
     * and [[liveIndex]] hides rows whose bucket is absent from the
     * codebook — so every window shows each id EXACTLY once: before
     * the codebook swap the parent rows are live and the renamed-in
@@ -992,13 +1004,7 @@ object SimilarityOps {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val fs = p(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healRetrain(spark, dir) // also applies any pending split
-    require(fs.exists(p(s"$dir/_codebook")),
-      s"$dir has no _codebook sidecar — rebuild with buildIvfIndex " +
-        "before splitting")
-    require(fs.exists(p(s"$dir/_ids")),
-      s"$dir has no _ids sidecar — rebuild with buildIvfIndex " +
-        "before splitting")
+    val cb = openIndex(spark, dir) // also applies any pending split
     // per-bucket row counts: a scan pruned to the partition column
     val hot = spark.read.parquet(dir)
       .groupBy(col("bucket").cast("int").as("bucket"))
@@ -1007,7 +1013,7 @@ object SimilarityOps {
         r.getLong(1) >= subK => r.getInt(0) }
       .sorted
     if (hot.isEmpty) return Seq.empty
-    val maxCid = codebookArr(spark, dir).map(_._1).max
+    val maxCid = cb.map(_._1).max
     val tmp = s"$dir/_split.tmp"
     val next = s"$dir/_split.next"
     fs.delete(p(tmp), true) // stale staging from a crashed run
@@ -1029,15 +1035,13 @@ object SimilarityOps {
         .parquet(s"$tmp/data")
       (b, childCids, cents.map(_._2))
     }
-    // post-split codebook: parents out, trained children in — written
-    // against the LIVE sidecars (nothing live is overwritten until
-    // applySplit, so no checkpoint is needed)
-    val childCb = mapping.flatMap { case (_, kids, cvs) => kids.zip(cvs) }
+    // post-split codebook: parents out, trained children in. It and
+    // the `_ids` below are written against the LIVE sidecars (nothing
+    // live is overwritten until applySplit, so no checkpoint is needed)
+    (cb.toSeq.collect { case (cid, cv) if !hot.contains(cid.toInt) =>
+      (cid, cv.toSeq) } ++
+      mapping.flatMap { case (_, kids, cvs) => kids.zip(cvs) })
       .toDF("id", "v")
-    spark.read.parquet(s"$dir/_codebook")
-      .filter(!col("id").isin(hot.map(_.toLong).toSeq: _*))
-      .select(col("id"), col("v"))
-      .unionByName(childCb)
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/_codebook")
     // post-split _ids: hot rows re-pointed at their child cell (stale
     // rows impossible by construction — every row of a hot bucket is
@@ -1057,44 +1061,40 @@ object SimilarityOps {
     require(!fs.exists(p(next)),
       s"$next still pending after heal — concurrent writer?")
     require(fs.rename(p(tmp), p(next)), s"rename failed: $tmp -> $next")
-    applySplit(spark, dir)
+    applySplit(spark, fs, dir)
     mapping.map { case (b, kids, _) => b -> kids.map(_.toInt) }
   }
 
-  /** Apply a committed `_split.next` idempotently — run by the writer
-    * right after its commit rename and by every read path that finds
-    * the marker (the heal): child bucket dirs rename in, `_codebook`
-    * and `_ids` swap through a `<name>.old` aside-move (the shard-swap
-    * discipline — losing a rename race to a concurrent healer is
-    * success when the destination exists), parent dirs drop once the
-    * codebook no longer names them, and the marker clears LAST so any
-    * crash resumes from here.
+  /** Resolve sidecar swap residues, then apply a committed
+    * `_split.next` idempotently — run by the writer right after its
+    * commit rename and by every verb that finds the marker or a live
+    * sidecar missing (the heal, via [[openIndex]]).
+    *
+    * Residues: a crash between a [[swapSidecar]] aside-move and its
+    * rename leaves the live copy missing and `<name>.old` present. A
+    * pending split's staged copy rolls forward in step (2) below;
+    * anything else (a compaction's `_ids` swap) rolls back to `.old`.
+    * A lingering `.old` beside a present live copy is dropped.
+    *
+    * The apply: child bucket dirs rename in, `_codebook` and `_ids`
+    * swap, parent dirs drop once the codebook no longer names them,
+    * and the marker clears LAST so any crash resumes from here.
     */
   private def applySplit(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
+      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = p(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val next = p(s"$dir/_split.next")
-    val hasMarker = fs.exists(next)
-    // cheap when clean: the sidecar residue scan (a crash between an
-    // aside-move and the swap rename leaves live missing + .old
-    // present) only runs when something is visibly off — the marker is
-    // present or a live sidecar is missing. A lingering .old beside a
-    // present live is harmless and gets swept on the next real heal.
-    if (hasMarker || !fs.exists(p(s"$dir/_codebook")) ||
-        !fs.exists(p(s"$dir/_ids"))) {
-      for (sc <- Seq("_codebook", "_ids")) {
-        val live = p(s"$dir/$sc")
-        val old = p(s"$dir/$sc.old")
-        if (fs.exists(old)) {
-          if (!fs.exists(live) && !fs.exists(p(s"$dir/_split.next/$sc"))) {
-            if (!fs.rename(old, live))
-              require(fs.exists(live), s"split rollback failed for $live")
-          } else if (fs.exists(live)) fs.delete(old, true)
-        }
+    for (sc <- Seq("_codebook", "_ids")) {
+      val live = p(s"$dir/$sc")
+      val old = p(s"$dir/$sc.old")
+      if (fs.exists(old)) {
+        if (!fs.exists(live) && !fs.exists(p(s"$dir/_split.next/$sc"))) {
+          if (!fs.rename(old, live))
+            require(fs.exists(live), s"sidecar rollback failed for $live")
+        } else if (fs.exists(live)) fs.delete(old, true)
       }
     }
-    if (!hasMarker) return
+    if (!fs.exists(next)) return
     // a concurrent healer may finish the whole apply (marker deleted)
     // between our exists check and this read — a healthy state, not an
     // error. The race can surface at ANALYSIS time (AnalysisException)
@@ -1121,16 +1121,7 @@ object SimilarityOps {
     // swapped; the codebook swap is the COMMIT POINT for visibility
     for (sc <- Seq("_codebook", "_ids")) {
       val src = p(s"$dir/_split.next/$sc")
-      if (fs.exists(src)) {
-        val live = p(s"$dir/$sc")
-        val old = p(s"$dir/$sc.old")
-        fs.delete(old, true) // stale residue
-        if (fs.exists(live) && !fs.rename(live, old))
-          require(!fs.exists(live), s"rename failed: $live -> $old")
-        if (!fs.rename(src, live))
-          require(fs.exists(live), s"rename failed: $src -> $live")
-        fs.delete(old, true)
-      }
+      if (fs.exists(src)) swapSidecar(fs, dir, sc, src)
     }
     // (3) parent dirs out — unreachable since the codebook swap
     // (cell probes rank codebook cids; liveIndex hides
@@ -1139,6 +1130,24 @@ object SimilarityOps {
       fs.delete(p(s"$dir/bucket=$b"), true))
     // (4) the marker clears LAST: any earlier crash resumes here
     fs.delete(next, true)
+  }
+
+  /** Replace the live sidecar `<dir>/<sc>` by the complete staged copy
+    * `src` through a `<sc>.old` aside-move — the one way to replace an
+    * IVF sidecar (the shard-swap discipline: losing a rename race to a
+    * concurrent healer is success when the destination exists).
+    * [[applySplit]] resolves the residue of a crash between the renames.
+    */
+  private def swapSidecar(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      sc: String, src: org.apache.hadoop.fs.Path): Unit = {
+    val live = new org.apache.hadoop.fs.Path(s"$dir/$sc")
+    val old = new org.apache.hadoop.fs.Path(s"$dir/$sc.old")
+    fs.delete(old, true) // stale residue
+    if (fs.exists(live) && !fs.rename(live, old))
+      require(!fs.exists(live), s"rename failed: $live -> $old")
+    if (!fs.rename(src, live))
+      require(fs.exists(live), s"rename failed: $src -> $live")
+    fs.delete(old, true)
   }
 
   /** RETRAIN the coarse quantizer in place — the codebook-drift verb
@@ -1178,13 +1187,11 @@ object SimilarityOps {
     // heal a crashed earlier retrain (the shared read-side rollback),
     // then clear residues; staging is never adopted — the replay
     // rebuilds it
-    healRetrain(spark, dir)
-    require(fs.exists(p(dir)),
-      s"$dir missing with no $oldDir to roll back — index corrupt")
+    val cb = openIndex(spark, dir)
     fs.delete(oldDir, true)
     val tmp = s"$dir.retrain.tmp"
     fs.delete(p(tmp), true) // stale staging from a crashed run
-    val live = liveIndex(spark, dir).select(col("id"), col("v"))
+    val live = liveIndex(spark, dir, cb).select(col("id"), col("v"))
     val cents = KMeans.centroids(live, "id", "v", k, iters)
       .select(col("cid").as("id"), col("cv").as("v"))
       .localCheckpoint() // k rows — pinned before the source dir moves
@@ -1206,7 +1213,7 @@ object SimilarityOps {
     // and the unreadable window shrinks from the whole rewrite to the
     // instant between the renames (healed above on replay)
     require(fs.rename(p(dir), oldDir), s"rename failed: $dir -> $oldDir")
-    // between the two renames a concurrent reader's healRetrain can
+    // between the two renames a concurrent reader's open can
     // restore `dir` from the .old copy; Hadoop FileSystems then treat
     // rename(tmp, dir) as move-INTO (the staging nests inside the
     // restored old index) rather than failing. Adopt in a guarded
@@ -1236,93 +1243,39 @@ object SimilarityOps {
   }
 
   /** id→bucket point lookup against the `_ids` sidecar; None when the
-    * index predates the sidecar or the id is absent. The sidecar is
-    * sorted/range-partitioned by id, so the filter prunes to one row
-    * group via parquet min/max stats.
+    * id is absent. The sidecar is sorted/range-partitioned by id, so
+    * the filter prunes to one row group via parquet min/max stats.
     */
   private[graft] def probeBucketLookup(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probeId: Long): Option[Int] = {
     val ids = new org.apache.hadoop.fs.Path(s"$dir/_ids")
-    val fs = ids.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(ids)) None // pre-sidecar index: caller falls back
-    else
-      try spark.read.parquet(ids.toString).filter(col("id") === probeId)
-        .collect().headOption.map(_.getInt(1))
-      catch { case scala.util.control.NonFatal(e) =>
-        // not control flow — the exists() above answered the
-        // missing-sidecar branch; this guards the race where a
-        // concurrent sidecar SWAP (split/compact) renames _ids away
-        // between the check and the read, which can surface at
-        // analysis OR execution time (FileNotFound inside a
-        // SparkException). Sidecar verifiably mid-swap (gone again) =
-        // the safe index-wide fallback; sidecar present but unreadable
-        // = real corruption, rethrown loud.
-        if (!fs.exists(ids)) None else throw e
-      }
+    try spark.read.parquet(ids.toString).filter(col("id") === probeId)
+      .collect().headOption.map(_.getInt(1))
+    catch { case scala.util.control.NonFatal(e) =>
+      // a concurrent sidecar SWAP (split/compact) can rename _ids away
+      // between the open and this read, surfacing at analysis OR
+      // execution time (FileNotFound inside a SparkException). Sidecar
+      // verifiably mid-swap (gone) = the safe index-wide fallback;
+      // sidecar present but unreadable = real corruption, rethrown.
+      if (!ids.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(ids)) None
+      else throw e
+    }
   }
 
   /** The probe vector's `nprobe` nearest cells, ranked driver-side
-    * against the index's `_codebook` sidecar. The sequential fold
-    * order matches the executor fold, so the ranking equals
-    * ivfAssign's (dot(pv,c)/|c|, ties to the lowest cid).
+    * against an opened codebook. The sequential fold order matches the
+    * executor fold, so the ranking equals ivfAssign's (dot(pv,c)/|c|,
+    * ties to the lowest cid).
     */
-  /** The index's `_codebook` sidecar as a DataFrame; loud error for
-    * pre-multi-probe indexes — the one loader every from-index path
-    * shares.
-    */
-  private def codebookDf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    try {
-      val df = spark.read.parquet(s"$dir/_codebook")
-      df.schema // force resolution so a missing dir fails HERE
-      df
-    } catch { case e: org.apache.spark.sql.AnalysisException =>
-      throw new IllegalArgumentException(
-        s"$dir has no _codebook sidecar — the index predates " +
-          "multi-probe support; rebuild it with buildIvfIndex", e)
-    }
-
-  /** Per-JVM `_codebook` memo, guarded by the directory fingerprint
-    * ([[graft.sources.FileBloomIndex.fingerprint]]): repeated
-    * probes in a session stop re-reading the codebook parquet, and a
-    * [[retrainIvfIndex]]/[[buildIvfIndex]] rewrite flips every
-    * fingerprint facet, so the next probe reloads. The FileBloomIndex
-    * filter-memo discipline.
-    */
-  private val codebookMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, Long, Long)], Array[(Long, Array[Double])])]
-
-  private def codebookArr(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Array[(Long, Array[Double])] = {
-    healRetrain(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_codebook")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      throw new IllegalArgumentException(
-        s"$dir has no _codebook sidecar — the index predates " +
-          "multi-probe support; rebuild it with buildIvfIndex")
-    val fp = graft.sources.FileBloomIndex.fingerprint(fs, p)
-    codebookMemo.get(dir) match {
-      case Some((cached, arr)) if cached == fp => arr
-      case _ =>
-        val arr = codebookDf(spark, dir).select(col("id"), col("v"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-        codebookMemo.put(dir, (fp, arr))
-        arr
-    }
-  }
-
-  private def codebookCells(spark: org.apache.spark.sql.SparkSession,
-      dir: String, pv: Array[Double], nprobe: Int): Seq[Int] = {
+  private def codebookCells(cb: Codebook,
+      pv: Array[Double], nprobe: Int): Seq[Int] = {
     def d(a: Array[Double], b: Array[Double]) =
       a.indices.foldLeft(0.0)((s, i) => s + a(i) * b(i))
-    val cents = codebookArr(spark, dir)
-    require(cents.length >= nprobe,
-      s"codebook has ${cents.length} centroids < nprobe=$nprobe")
-    cents.map { case (cid, cv) =>
+    require(cb.length >= nprobe,
+      s"codebook has ${cb.length} centroids < nprobe=$nprobe")
+    cb.map { case (cid, cv) =>
       (cid, d(cv, pv) / math.sqrt(d(cv, cv)))
     }.sortBy { case (cid, s) => (-s, cid) }.take(nprobe)
       .map(_._1.toInt).toSeq

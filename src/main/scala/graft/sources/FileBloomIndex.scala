@@ -241,15 +241,12 @@ object FileBloomIndex {
   }
 
   /** The `_tombstones` sidecar as a distinct key set; None when the
-    * index has no pending deletes.
+    * index has no pending deletes (one existence check).
     */
   private[graft] def tombstonesDf(spark: SparkSession,
       path: String): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(s"$path/_tombstones")
-      df.schema // force resolution so a missing dir lands HERE
-      Some(df.select("k").distinct())
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
+    if (!fsFor(spark, path).exists(hp(s"$path/_tombstones"))) None
+    else Some(spark.read.parquet(s"$path/_tombstones").select("k").distinct())
 
   /** Mask tombstoned keys out of a frame whose `keyExpr` renders the
     * index key as string — the one mask every read path shares.

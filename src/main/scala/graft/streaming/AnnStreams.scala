@@ -51,28 +51,16 @@ object AnnStreams {
   /** One ingest micro-batch; see [[ingestSink]]. */
   def ingestBatch(batch: DataFrame, indexDir: String): Unit = {
     import graft.operators.SimilarityOps
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
+    val cb = SimilarityOps.openIndex(spark, indexDir)
+    if (batch.isEmpty) return
     import spark.implicits._
-    val known =
-      try {
-        val ids = spark.read.parquet(s"$indexDir/_ids")
-        ids.schema // force resolution so a missing sidecar lands HERE
-        ids.select("id")
-      } catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$indexDir has no _ids sidecar — the streaming ingest needs " +
-            "it for replay detection; rebuild with buildIvfIndex", e)
-      }
-    val dead =
-      try spark.read.parquet(s"$indexDir/_tombstones").select("id")
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        Seq.empty[Long].toDF("id")
-      }
+    val known = spark.read.parquet(s"$indexDir/_ids").select("id")
     // batch-bounded driver-side id list; one row kept per id
     val deduped = batch.dropDuplicates("id").localCheckpoint()
     val batchIdSeq = deduped.select("id").collect().map(_.getLong(0)).toSeq
-    val candidates = known.union(dead)
+    val candidates =
+      SimilarityOps.tombstonesDf(spark, indexDir).fold(known)(known.union)
     val drop = (if (batchIdSeq.length <= 1000)
       candidates.filter(col("id").isin(batchIdSeq: _*))
     else candidates.join(broadcast(batchIdSeq.toDF("id")), "id"))
@@ -82,7 +70,7 @@ object AnnStreams {
     val freshDf = fresh0.toDF("id")
     val assigned = SimilarityOps.assignForIndex(
       deduped.join(broadcast(freshDf), "id").select(col("id"), col("v")),
-      indexDir).localCheckpoint()
+      cb).localCheckpoint()
     // crash-window check: ids whose DATA landed but whose sidecar
     // extension did not — look only in the predicted buckets
     // (partition-pruned; assignment is deterministic, so that is the
@@ -135,16 +123,10 @@ object AnnStreams {
     require(nprobe >= 1, s"nprobe=$nprobe")
     val spark = probes.sparkSession
     import spark.implicits._
-    val cents: Array[(Int, Array[Double])] =
-      try spark.read.parquet(s"$indexDir/_codebook")
-        .select(col("id"), col("v")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$indexDir has no _codebook sidecar — the index predates " +
-            "multi-probe support; rebuild it with buildIvfIndex", e)
-      }
+    // the open heals first, so cells rank against the codebook the
+    // healed index actually serves
+    val cb = graft.operators.SimilarityOps.openIndex(spark, indexDir)
+    val cents = cb.map { case (cid, cv) => (cid.toInt, cv) }
     require(cents.length >= nprobe,
       s"codebook has ${cents.length} centroids < nprobe=$nprobe")
     val bc = spark.sparkContext.broadcast(cents)
@@ -165,7 +147,7 @@ object AnnStreams {
     // tombstone-masked (deleted rows never surface as candidates);
     // note the mask is resolved at PLAN time like the static scan
     // itself — deletes landing mid-stream apply from the next (re)start
-    val stored = graft.operators.SimilarityOps.liveIndex(spark, indexDir)
+    val stored = graft.operators.SimilarityOps.liveIndex(spark, indexDir, cb)
     val cand = probes
       .select(col("pid"), col("pv"))
       .withColumn("pn", sqrt(dot(col("pv"), col("pv"))))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -21,38 +20,14 @@ import scala.jdk.CollectionConverters._
   *    metrics), instead of filtering the whole index;
   *  - probe-by-vector needs no lookup at all and matches the by-id
   *    path modulo self-exclusion;
-  *  - indexes that predate the sidecar still answer (fallback scan).
+  *  - every writer leaves the one format (`_codebook` and an `_ids`
+  *    that matches the stored rows), and every verb rejects an index
+  *    lacking either sidecar before it reads or writes anything.
   */
-class AnnIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+class AnnIndexSpec extends SparkTestBase with IvfFixtures
+    with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
-
-  private val dim = 4
-
-  /** Deterministic synthetic vectors; ids 0..n-1, first `nc` double as
-    * the codebook (the ivfAssign contract).
-    */
-  private def vecs(ids: Range): DataFrame =
-    ids.map { i =>
-      val r = new scala.util.Random(i * 7919L + 13)
-      (i.toLong, Array.fill(dim)(r.nextDouble() * 2 - 1))
-    }.toDF("id", "v")
-
-  private def tmp(prefix: String): String = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    s"$p/idx"
-  }
-
-  private def filesUnder(dir: String): Map[String, Seq[Byte]] = {
-    val root = Paths.get(dir)
-    val walk = Files.walk(root)
-    val all = try walk.iterator().asScala.toSeq finally walk.close()
-    all.filter(p => Files.isRegularFile(p) &&
-        !p.getFileName.toString.startsWith(".")) // local-fs .crc noise
-      .map(p => root.relativize(p).toString ->
-        Files.readAllBytes(p).toSeq).toMap
-  }
 
   test("append: pre-append files byte-identical; index == full rebuild") {
     val appended = tmp("ann_append")
@@ -93,10 +68,14 @@ class AnnIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val stored = spark.read.parquet(dir)
     val truth = stored.select("id", "bucket").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // sidecar agrees with the stored assignment for every id
-    truth.foreach { case (id, b) =>
-      assert(SimilarityOps.probeBucketLookup(spark, dir, id).contains(b))
-    }
+    // sidecar agrees with the stored assignment for every id (one row
+    // per id), and the point lookup answers from it
+    val sidecar = spark.read.parquet(s"$dir/_ids").collect()
+      .map(r => r.getLong(0) -> r.getInt(1))
+    assert(sidecar.length == truth.size && sidecar.toMap == truth)
+    Seq(truth.keys.min, 80L, truth.keys.max).foreach(id =>
+      assert(SimilarityOps.probeBucketLookup(spark, dir, id)
+        .contains(truth(id))))
     assert(SimilarityOps.probeBucketLookup(spark, dir, 99999L).isEmpty)
     // the vector fetch is partition-pruned to ONE bucket directory:
     // scan metrics count only that directory's files
@@ -137,36 +116,26 @@ class AnnIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       bytesOf(Paths.get(dir)) / 2)
   }
 
-  test("pre-sidecar index: probe falls back to the id filter") {
-    val dir = tmp("ann_legacy")
-    SimilarityOps.buildIvfIndex(vecs(0 until 80), "id", "v", 4, dir)
-    val expect = SimilarityOps
-      .annIvfFromIndexMultiProbe(spark, dir, 20L, 5, 2).collect().toSeq
-    // simulate an index written before the sidecar existed
-    val ids = Paths.get(dir, "_ids")
-    val walk = Files.walk(ids)
-    val all = try walk.iterator().asScala.toSeq finally walk.close()
-    all.reverseIterator.foreach(Files.deleteIfExists(_))
-    assert(SimilarityOps.probeBucketLookup(spark, dir, 20L).isEmpty)
-    val got = SimilarityOps
-      .annIvfFromIndexMultiProbe(spark, dir, 20L, 5, 2).collect().toSeq
-    assert(got == expect)
-  }
-
   test("from-index batch == one-shot batch; DPP prunes the candidate scan") {
     val rows = vecs(0 until 160)
     val dir = tmp("ann_batch")
     SimilarityOps.buildIvfIndex(rows, "id", "v", 4, dir)
     val probes = Seq(10L, 77L, 140L)
-    val fromIndex = SimilarityOps
-      .annIvfFromIndexBatch(spark, dir, probes, k = 5, nprobe = 2)
+    val ((fromIndex, fromIndexRows), logged) = graft.LogCapture.lines {
+      val df = SimilarityOps
+        .annIvfFromIndexBatch(spark, dir, probes, k = 5, nprobe = 2)
+      (df, df.collect())
+    }
+    // the pending-delete check is an existence check: no failed
+    // parquet resolution and its WARNs on an index without deletes
+    assert(!logged.exists(_.contains("_tombstones")), logged.mkString("\n"))
     // GroupedTopK emits a group's rows in heap order (unordered set
     // semantics, like the driver's sorted-rows hash gate): compare as
     // sorted rows
     def sorted(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2)).toSeq
-    val got = sorted(fromIndex.collect())
+    val got = sorted(fromIndexRows)
     val expect = sorted(SimilarityOps
       .annIvfMultiProbeBatch(rows, "id", "v", 4, probes, k = 5,
         nprobe = 2).collect())
@@ -277,32 +246,41 @@ class AnnIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(sidecarIds == storedIds)
   }
 
-  test("purge with an incomplete legacy sidecar still removes the rows") {
-    val dir = tmp("ann_legacy_purge")
+  test("append crash window: probes fall back, purge removes rows, " +
+      "heals _ids") {
+    val dir = tmp("ann_crash_window")
     SimilarityOps.buildIvfIndex(vecs(0 until 80), "id", "v", 4, dir)
-    // legacy state: the original build's sidecar is gone; a later
-    // append recreates _ids covering ONLY its own batch
-    deleteRecursively(Paths.get(s"$dir/_ids"))
+    // an append that died between its data write and its _ids write:
+    // append, then remove exactly the _ids files the append created
+    def idsFiles() = {
+      val l = Files.list(Paths.get(s"$dir/_ids"))
+      try l.iterator().asScala.toSet finally l.close()
+    }
+    def single() = SimilarityOps
+      .annIvfFromIndexMultiProbe(spark, dir, 90L, 5, 2).collect().toSeq
+    def batch() = SimilarityOps
+      .annIvfFromIndexBatch(spark, dir, Seq(10L, 90L), 5, 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val before = idsFiles()
     SimilarityOps.appendToIvfIndex(vecs(80 until 100), "id", "v", dir)
-    // delete an ORIGINAL row (absent from the incomplete sidecar) —
+    val want = (single(), batch())
+    (idsFiles() -- before).foreach(Files.delete)
+    assert(SimilarityOps.probeBucketLookup(spark, dir, 90L).isEmpty)
+    // both absent-id fallbacks answer as the sidecar route did
+    assert((single(), batch()) == want)
+    // delete a crash-window row (absent from the incomplete sidecar) —
     // trusting the sidecar to locate its bucket would skip the purge
     // and silently resurrect it once the tombstones clear
-    SimilarityOps.deleteFromIvfIndex(spark, dir, Seq(10L))
+    SimilarityOps.deleteFromIvfIndex(spark, dir, Seq(90L))
     SimilarityOps.compactIvfIndex(spark, dir)
     val storedIds = spark.read.parquet(dir).select("id")
       .collect().map(_.getLong(0)).toSet
-    assert(!storedIds.contains(10L), "deleted row resurrected")
+    assert(!storedIds.contains(90L), "deleted row resurrected")
     assert(!Files.exists(Paths.get(s"$dir/_tombstones")))
-    // ...and the purge healed the sidecar to full coverage
+    // ...and the purge rebuilt the sidecar to full coverage
     val sidecarIds = spark.read.parquet(s"$dir/_ids").select("id")
       .collect().map(_.getLong(0)).toSet
     assert(sidecarIds == storedIds)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    val walk = Files.walk(p)
-    val all = try walk.iterator().asScala.toSeq finally walk.close()
-    all.sortBy(-_.getNameCount).foreach(Files.delete)
   }
 
   test("purge removes a bucket directory it empties") {
@@ -511,40 +489,11 @@ class AnnIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val dir = tmp("ann_split_crash")
     SimilarityOps.buildIvfIndex(vecs(0 until 160), "id", "v", 4, dir)
     val preSplit = filesUnder(dir)
-    val counts = spark.read.parquet(dir).groupBy("bucket").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val m = counts.values.max
-    val mapping = SimilarityOps.splitHotCells(spark, dir, m - 1,
-      subK = 2, iters = 1)
+    val mapping = splitLargest(dir)
     val want = SimilarityOps
       .annIvfFromIndexMultiProbe(spark, dir, 42L, 5, 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // reconstruct the crash window "children renamed in, sidecars not
-    // yet swapped, parents not yet dropped, marker present": move the
-    // live (new) sidecars back into _split.next and restore the
-    // pre-split sidecars and parent dirs from the captured bytes
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mv(a: String, b: String): Unit =
-      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/$a"),
-        new org.apache.hadoop.fs.Path(s"$dir/$b")))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_split.next"))
-    mv("_codebook", "_split.next/_codebook")
-    mv("_ids", "_split.next/_ids")
-    import spark.implicits._
-    mapping.flatMap { case (b, kids) => kids.map(k => (b, k)) }
-      .toDF("parent", "child").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/_split.next/_manifest")
-    preSplit.foreach { case (rel, bytes) =>
-      val touched = mapping.exists { case (b, _) =>
-        rel.startsWith(s"bucket=$b/") } ||
-        rel.startsWith("_codebook/") || rel.startsWith("_ids/")
-      if (touched) {
-        val p = Paths.get(s"$dir/$rel")
-        Files.createDirectories(p.getParent)
-        Files.write(p, bytes.toArray)
-      }
-    }
+    rewindSplit(dir, preSplit, mapping)
     // a fresh probe must heal the whole window and answer identically
     val got = SimilarityOps
       .annIvfFromIndexMultiProbe(spark, dir, 42L, 5, 3)
@@ -572,5 +521,129 @@ class AnnIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(math.abs(byVec.head.getDouble(1) - 1.0) < 1e-12)
     // ...and the rest is exactly the by-id answer
     assert(byVec.tail.toSeq == byId.toSeq)
+  }
+
+  test("writer-format invariant: every verb leaves _codebook and an " +
+      "_ids equal to the stored (id, bucket) set") {
+    val dir = tmp("ann_format")
+    def pairs(d: String) = spark.read.parquet(d).select("id", "bucket")
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    def assertFormat(after: String): Unit = {
+      assert(Files.exists(Paths.get(s"$dir/_codebook")), s"$after: _codebook")
+      assert(pairs(s"$dir/_ids") == pairs(dir), s"$after: _ids != stored")
+      Seq("_ids.old", "_codebook.old", "_compact.tmp", "_split.next")
+        .foreach(n => assert(!Files.exists(Paths.get(s"$dir/$n")),
+          s"$after left $n"))
+    }
+    SimilarityOps.buildIvfIndex(vecs(0 until 100), "id", "v", 4, dir)
+    assertFormat("build")
+    SimilarityOps.appendToIvfIndex(vecs(100 until 140), "id", "v", dir)
+    assertFormat("append")
+    SimilarityOps.compactIvfIndex(spark, dir, maxFilesPerBucket = 1)
+    assertFormat("compact")
+    // the re-sort ran: _ids is one file again
+    assert(filesUnder(s"$dir/_ids").keys.count(_.endsWith(".parquet")) == 1)
+    SimilarityOps.deleteFromIvfIndex(spark, dir, Seq(5L, 120L))
+    assertFormat("delete")
+    SimilarityOps.compactIvfIndex(spark, dir)
+    assertFormat("purge")
+    assert(!pairs(dir).exists(r => r._1 == 5L || r._1 == 120L))
+    splitLargest(dir)
+    assertFormat("split")
+    SimilarityOps.retrainIvfIndex(spark, dir, k = 3, iters = 1)
+    assertFormat("retrain")
+  }
+
+  test("a legacy index (no _codebook, or no _ids) is rejected by every " +
+      "verb naming buildIvfIndex, and nothing is written") {
+    val dir = tmp("ann_legacy")
+    SimilarityOps.buildIvfIndex(vecs(0 until 80), "id", "v", 4, dir)
+    def tree(p: Path): Set[String] = {
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.map(_.toString).toSet finally walk.close()
+    }
+    val pv = Array.fill(dim)(0.5)
+    val verbs = Seq[(String, () => Any)](
+      "append" -> (() =>
+        SimilarityOps.appendToIvfIndex(vecs(80 until 90), "id", "v", dir)),
+      "delete" -> (() =>
+        SimilarityOps.deleteFromIvfIndex(spark, dir, Seq(10L))),
+      "compact" -> (() => SimilarityOps.compactIvfIndex(spark, dir)),
+      "split" -> (() => SimilarityOps.splitHotCells(spark, dir, 1L)),
+      "retrain" -> (() => SimilarityOps.retrainIvfIndex(spark, dir, 3, 1)),
+      "probe" -> (() => SimilarityOps.annIvfFromIndex(spark, dir, 10L, 5)),
+      "multi-probe" -> (() =>
+        SimilarityOps.annIvfFromIndexMultiProbe(spark, dir, 10L, 5, 2)),
+      "vector probe" -> (() =>
+        SimilarityOps.annIvfFromIndexVector(spark, dir, pv, 5, 2)),
+      "batch probe" -> (() =>
+        SimilarityOps.annIvfFromIndexBatch(spark, dir, Seq(10L), 5, 2)),
+      "stream ingest" -> (() =>
+        graft.streaming.AnnStreams.ingestBatch(vecs(80 until 90), dir)),
+      "stream probe" -> (() => graft.streaming.AnnStreams.probeStream(
+        Seq((1L, pv.toSeq)).toDF("pid", "pv"), dir, 5, 2)))
+    for (sidecar <- Seq("_codebook", "_ids")) {
+      // moved OUT of the index: a `<sidecar>.old` inside it would be a
+      // swap residue, which the open rolls back
+      val aside = Paths.get(s"$dir.$sidecar")
+      Files.move(Paths.get(s"$dir/$sidecar"), aside)
+      val before = (filesUnder(dir), tree(Paths.get(dir).getParent))
+      verbs.foreach { case (name, verb) =>
+        val e = intercept[IllegalArgumentException](verb())
+        assert(e.getMessage.contains("buildIvfIndex"),
+          s"without $sidecar, $name: ${e.getMessage}")
+        assert((filesUnder(dir), tree(Paths.get(dir).getParent)) == before,
+          s"without $sidecar, $name wrote")
+      }
+      Files.move(aside, Paths.get(s"$dir/$sidecar"))
+    }
+  }
+
+  test("delete after a crashed retrain heals first; no data is lost") {
+    val dir = tmp("ann_delete_crash")
+    SimilarityOps.buildIvfIndex(vecs(0 until 80), "id", "v", 4, dir)
+    def probe() = SimilarityOps
+      .annIvfFromIndexMultiProbe(spark, dir, 20L, 8, 2)
+      .collect().map(_.getLong(0)).toSeq
+    val full = probe()
+    // the retrain crash window: dir renamed aside, staging never adopted
+    assert(new java.io.File(dir).renameTo(new java.io.File(s"$dir.retrain.old")))
+    SimilarityOps.deleteFromIvfIndex(spark, dir, Seq(full.head))
+    assert(!Files.exists(Paths.get(s"$dir.retrain.old")))
+    val masked = probe()
+    assert(masked.take(full.length - 1) == full.tail && masked.length == 8,
+      s"delete not applied: $full -> $masked")
+    // every row is back in `dir`, so no later retrain can drop it with
+    // the `.retrain.old` copy
+    assert(spark.read.parquet(dir).select("id").collect()
+      .map(_.getLong(0)).toSet == (4L until 80L).toSet)
+  }
+
+  test("a reader shown either residue of compact's _ids swap answers " +
+      "as before the compaction") {
+    val dir = tmp("ann_ids_swap")
+    SimilarityOps.buildIvfIndex(vecs(0 until 100), "id", "v", 4, dir)
+    SimilarityOps.deleteFromIvfIndex(spark, dir, Seq(30L))
+    def answers() = SimilarityOps
+      .annIvfFromIndexBatch(spark, dir, Seq(20L, 90L), 5, 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sorted.toSeq
+    val want = answers()
+    for (staged <- Seq(true, false)) {
+      // crash between the aside-move and the rename; the staged copy
+      // is the purge's (the live ids minus the dead one) or gone
+      Files.move(Paths.get(s"$dir/_ids"), Paths.get(s"$dir/_ids.old"))
+      if (staged)
+        spark.read.parquet(s"$dir/_ids.old").filter(col("id") =!= 30L)
+          .write.parquet(s"$dir/_compact.tmp/_ids")
+      else org.apache.hadoop.fs.FileUtil.fullyDelete(
+        new java.io.File(s"$dir/_compact.tmp"))
+      assert(answers() == want, s"staged copy present: $staged")
+      assert(Files.exists(Paths.get(s"$dir/_ids")) &&
+        !Files.exists(Paths.get(s"$dir/_ids.old")))
+    }
+    SimilarityOps.compactIvfIndex(spark, dir)
+    assert(answers() == want)
+    assert(!Files.exists(Paths.get(s"$dir/_compact.tmp")))
   }
 }

@@ -1,34 +1,39 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.operators.SimilarityOps
+import graft.operators.{IvfFixtures, SimilarityOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-
-import java.nio.file.Files
 
 /** Streaming retrieval over the stored IVF index: every streamed
   * probe's rows must equal the batch probe-by-vector answer over the
   * same index, across micro-batches, with zero retained state.
   */
-class AnnStreamsSpec extends SparkTestBase {
+class AnnStreamsSpec extends SparkTestBase with IvfFixtures {
 
   import spark.implicits._
 
-  private val dim = 4
+  private def probeVec(seed: Int): Seq[Double] = {
+    val r = new scala.util.Random(seed * 7919L + 13)
+    Seq.fill(dim)(r.nextDouble() * 2 - 1)
+  }
 
-  private def vecs(ids: Range) =
-    ids.map { i =>
-      val r = new scala.util.Random(i * 7919L + 13)
-      (i.toLong, Array.fill(dim)(r.nextDouble() * 2 - 1))
-    }.toDF("id", "v")
+  /** Per-probe (id, cosine) rows of a memory-sink table. */
+  private def streamed(table: String): Map[Long, Seq[(Long, Double)]] =
+    spark.table(table).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .groupBy(_._1).map { case (pid, rs) =>
+        pid -> rs.map(r => (r._2, r._3)).toSeq.sortBy(t => (-t._2, t._1))
+      }
+
+  private def batchAnswer(dir: String, seed: Int): Seq[(Long, Double)] =
+    SimilarityOps.annIvfFromIndexVector(spark, dir, probeVec(seed).toArray,
+        5, nprobe = 2)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      .sortBy(t => (-t._2, t._1))
 
   test("streamed probes answer identically to batch probe-by-vector") {
-    val dir = {
-      val p = Files.createTempDirectory("ann_stream")
-      p.toFile.deleteOnExit()
-      s"$p/idx"
-    }
+    val dir = tmp("ann_stream")
     SimilarityOps.buildIvfIndex(vecs(0 until 120), "id", "v", 4, dir)
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Seq[Double])]
@@ -37,10 +42,6 @@ class AnnStreamsSpec extends SparkTestBase {
     val q = out.writeStream.format("memory").queryName("ann_probe_out")
       .outputMode("append").start()
     try {
-      def probeVec(seed: Int): Seq[Double] = {
-        val r = new scala.util.Random(seed * 7919L + 13)
-        Seq.fill(dim)(r.nextDouble() * 2 - 1)
-      }
       // two micro-batches; probe 200/201/202 are request-time vectors
       // (200 coincides with stored row 200? ids stop at 119 — no
       // stored self anywhere)
@@ -48,18 +49,11 @@ class AnnStreamsSpec extends SparkTestBase {
       q.processAllAvailable()
       input.addData((202L, probeVec(202)))
       q.processAllAvailable()
-      val got = spark.table("ann_probe_out")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .groupBy(_._1)
+      val got = streamed("ann_probe_out")
       assert(got.keySet == Set(200L, 201L, 202L))
       Seq(200, 201, 202).foreach { s =>
-        val expect = SimilarityOps.annIvfFromIndexVector(spark, dir,
-            probeVec(s).toArray, 5, nprobe = 2)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-          .sortBy(t => (-t._2, t._1))
-        val rows = got(s.toLong).map(r => (r._2, r._3)).toSeq
-          .sortBy(t => (-t._2, t._1))
-        assert(rows == expect, s"probe $s diverged from batch answer")
+        assert(got(s.toLong) == batchAnswer(dir, s),
+          s"probe $s diverged from batch answer")
       }
       // stateless by construction: the group function never stores
       // anything, so the state store holds zero rows after both batches
@@ -71,11 +65,7 @@ class AnnStreamsSpec extends SparkTestBase {
   }
 
   test("streamed ingest: replays and tombstoned ids drop; index == rebuild") {
-    val dir = {
-      val p = Files.createTempDirectory("ann_ingest")
-      p.toFile.deleteOnExit()
-      s"$p/idx"
-    }
+    val dir = tmp("ann_ingest")
     SimilarityOps.buildIvfIndex(vecs(0 until 120), "id", "v", 4, dir)
     implicit val sqlCtx = spark.sqlContext
     def pairs(ids: Seq[Int]): Seq[(Long, Seq[Double])] = ids.map { i =>
@@ -104,11 +94,7 @@ class AnnStreamsSpec extends SparkTestBase {
     // shared assignToCodebook scoring rule makes this row-for-row, and
     // the tombstoned 125 was NOT resurrected (only its original,
     // pre-delete row remains, still masked by the tombstone)
-    val rebuilt = {
-      val p = Files.createTempDirectory("ann_ingest_rebuild")
-      p.toFile.deleteOnExit()
-      s"$p/idx"
-    }
+    val rebuilt = tmp("ann_ingest_rebuild")
     SimilarityOps.buildIvfIndex(vecs(0 until 150), "id", "v", 4, rebuilt)
     def rows(d: String) = spark.read.parquet(d)
       .select("id", "bucket", "v").collect()
@@ -124,11 +110,7 @@ class AnnStreamsSpec extends SparkTestBase {
   }
 
   test("ingest heals the data-committed/sidecar-lost crash window") {
-    val dir = {
-      val p = Files.createTempDirectory("ann_crash")
-      p.toFile.deleteOnExit()
-      s"$p/idx"
-    }
+    val dir = tmp("ann_crash")
     SimilarityOps.buildIvfIndex(vecs(0 until 120), "id", "v", 4, dir)
     // simulate a crash between appendToIvfIndex's data write and its
     // _ids extension: append, then remove exactly the sidecar files
@@ -167,5 +149,31 @@ class AnnStreamsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(sidecar == truth)
     assert((150L until 170L).forall(sidecar.contains))
+  }
+
+  test("streamed probes rank cells against the healed codebook across " +
+      "a pending split") {
+    val dir = tmp("ann_stream_split")
+    SimilarityOps.buildIvfIndex(vecs(0 until 160), "id", "v", 4, dir)
+    val preSplit = filesUnder(dir)
+    // the crash state "a split crash after data-apply heals on the next
+    // READ" pins: the pre-split codebook is live, the split pending
+    rewindSplit(dir, preSplit, splitLargest(dir))
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, Seq[Double])]
+    val q = AnnStreams.probeStream(
+        input.toDF().toDF("pid", "pv"), dir, k = 5, nprobe = 2)
+      .writeStream.format("memory").queryName("ann_probe_split")
+      .outputMode("append").start()
+    try {
+      val seeds = 1000 until 1016
+      input.addData(seeds.map(s => (s.toLong, probeVec(s))): _*)
+      q.processAllAvailable()
+      val got = streamed("ann_probe_split")
+      val differing = seeds.filter(s =>
+        got.getOrElse(s.toLong, Seq.empty) != batchAnswer(dir, s))
+      assert(differing.isEmpty,
+        s"${differing.size} of ${seeds.size} streamed probes diverged")
+    } finally q.stop()
   }
 }
