@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{GraftFunctions, ScaleHashes}
+import graft.sources.IndexLifecycle
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -473,7 +474,7 @@ object SimilarityOps {
     // never a checkpoint of the corpus-sized assignment (vectors
     // included) just to reuse two small columns
     writeIdsSidecar(vecs.sparkSession.read.parquet(dir)
-      .select("id", "bucket"), dir, overwrite = true)
+      .select("id", "bucket"), s"$dir/_ids", overwrite = true)
   }
 
   /** Append (id, bucket) rows to the `_ids` sidecar without touching
@@ -482,9 +483,9 @@ object SimilarityOps {
     */
   private[graft] def extendIdsSidecar(entries: DataFrame,
       dir: String): Unit =
-    writeIdsSidecar(entries, dir, overwrite = false)
+    writeIdsSidecar(entries, s"$dir/_ids", overwrite = false)
 
-  /** The id→bucket lookup sidecar `<root>/_ids`: (id, bucket)
+  /** Write the id→bucket lookup sidecar at `ids`: (id, bucket)
     * range-partitioned and sorted by id, so every parquet file/row-group
     * carries tight min/max id stats BY CONSTRUCTION (not layout luck)
     * and a probe's `id = ?` lookup is footer-metadata plus one row
@@ -492,12 +493,12 @@ object SimilarityOps {
     * add files covering only the new batch's id range; per-file pruning
     * is unaffected by how many appends landed.
     */
-  private def writeIdsSidecar(assigned: DataFrame, root: String,
+  private def writeIdsSidecar(assigned: DataFrame, ids: String,
       overwrite: Boolean): Unit =
     assigned.select(col("id"), col("bucket"))
       .repartitionByRange(col("id")).sortWithinPartitions(col("id"))
       .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"$root/_ids")
+      .parquet(ids)
 
   /** INCREMENTAL index append — the daily-ingest shape
     * (dedup_incremental's ANN counterpart): quantize ONLY the new
@@ -547,17 +548,18 @@ object SimilarityOps {
       dir: String): Unit = {
     val assigned = assigned0.localCheckpoint()
     assigned.write.mode("append").partitionBy("bucket").parquet(dir)
-    writeIdsSidecar(assigned.select("id", "bucket"), dir,
+    writeIdsSidecar(assigned.select("id", "bucket"), s"$dir/_ids",
       overwrite = false)
   }
 
   /** TOMBSTONE delete — the deletion-vector pattern (the third verb of
     * the index lifecycle, after build/append and before compact):
-    * deleting appends the ids to a `_tombstones` sidecar (one
-    * metadata-sized file per delete batch; no index data is read or
-    * rewritten, so a delete is O(batch) like an append), every probe
-    * path anti-joins candidates against the broadcast tombstone set,
-    * and [[compactIvfIndex]] physically purges the rows — rewriting
+    * deleting appends the ids to the shared `_tombstones` sidecar
+    * ([[graft.sources.IndexLifecycle]]; one metadata-sized file per
+    * delete batch; no index data is read or rewritten, so a delete is
+    * O(batch) like an append), every probe path anti-joins candidates
+    * against the broadcast tombstone set, and [[compactIvfIndex]]
+    * physically purges the rows — rewriting
     * only the buckets that actually hold deleted ids (located through
     * the `_ids` sidecar, a metadata-sized lookup) — then clears the
     * tombstones. Tombstone growth is therefore bounded by compaction
@@ -569,49 +571,37 @@ object SimilarityOps {
     require(deleteIds.nonEmpty, "empty deleteIds")
     openIndex(spark, dir)
     import spark.implicits._
-    deleteIds.distinct.toDF("id")
-      .coalesce(1)
-      .write.mode("append").parquet(s"$dir/_tombstones")
+    IndexLifecycle.writeTombstones(deleteIds.distinct.toDF("id"), dir)
   }
 
-  /** The `_tombstones` sidecar as a distinct id set; None when the
-    * index has no pending deletes (one existence check).
-    */
-  private[graft] def tombstonesDf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
-    val ts = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-    if (!ts.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(ts))
-      None
-    else Some(spark.read.parquet(ts.toString).select("id").distinct())
-  }
-
-  /** The one entry of every IVF verb. It heals — rolls back a crashed
-    * retrain ([[healRetrain]]), resolves sidecar swap residues and
-    * applies a pending split ([[applySplit]]), so a crashed writer
-    * never takes traffic down — then rejects an index still lacking
-    * `_codebook` or `_ids` ([[rejectLegacy]]), and returns the codebook
-    * every verb uses for both the [[liveIndex]] bucket filter and its
-    * cell ranking. Clean, it costs four existence checks and a listing:
-    * the codebook comes from a per-JVM memo guarded by the `_codebook`
-    * fingerprint ([[graft.sources.FileBloomIndex.fingerprint]]), which
-    * every retrain, split or rebuild flips.
+  /** The one entry of every IVF verb. It heals — completes or rolls
+    * back an interrupted retrain, applies a pending split
+    * ([[applySplit]]) and resolves interrupted `_codebook`/`_ids` swaps
+    * ([[IndexLifecycle.heal]]), so a crashed writer never takes traffic
+    * down — then rejects an index still lacking `_codebook` or `_ids`
+    * ([[rejectLegacy]]), and returns the codebook every verb uses for
+    * both the [[liveIndex]] bucket filter and its cell ranking. Clean,
+    * it costs four existence checks and a listing: the codebook comes
+    * from a per-JVM memo guarded by the `_codebook` fingerprint
+    * ([[IndexLifecycle.fingerprint]]), which every retrain, split or
+    * rebuild flips.
     */
   private[graft] def openIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Codebook = {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val fs = p(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healRetrain(fs, dir)
+    IndexLifecycle.heal(fs, retrainSlot(dir))
+    if (fs.exists(p(s"$dir/_split.next"))) applySplit(spark, fs, dir)
     val cbPath = p(s"$dir/_codebook")
-    def sidecars = fs.exists(cbPath) && fs.exists(p(s"$dir/_ids"))
-    if (fs.exists(p(s"$dir/_split.next")) || !sidecars) {
-      applySplit(spark, fs, dir)
-      if (!sidecars) rejectLegacy(dir)
-    }
-    val fp = graft.sources.FileBloomIndex.fingerprint(fs, cbPath)
+    // `&`, not `&&`: both sidecars heal
+    if (!(IndexLifecycle.heal(fs, IndexLifecycle.Slot(cbPath)) &
+        IndexLifecycle.heal(fs, IndexLifecycle.Slot(p(s"$dir/_ids")))))
+      rejectLegacy(dir)
+    val fp = IndexLifecycle.fingerprint(fs, cbPath)
     codebookMemo.get(dir) match {
       case Some((cached, arr)) if cached == fp => arr
       case _ =>
-        val arr = spark.read.parquet(cbPath.toString)
+        val arr = IndexLifecycle.readSidecar(spark, cbPath.toString)
           .select(col("id"), col("v")).collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
           .sortBy(_._1)
@@ -636,33 +626,13 @@ object SimilarityOps {
         "_codebook or _ids sidecar) — delete it and rebuild it with " +
         "buildIvfIndex")
 
-  /** Roll back a crashed [[retrainIvfIndex]] (the live dir renamed
-    * aside, the staged copy not yet in place), so a retrain that dies
-    * between its two renames heals on the next verb. Tolerant of
-    * concurrent healers (the loser's failed rename finds the dir
-    * already restored).
+  /** The slot [[retrainIvfIndex]] replaces the whole index through:
+    * siblings `<dir>.retrain.next` / `<dir>.retrain.old`.
     */
-  private def healRetrain(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) {
-      val old = new org.apache.hadoop.fs.Path(s"$dir.retrain.old")
-      if (fs.exists(old)) {
-        if (!fs.rename(old, p))
-          require(fs.exists(p), s"retrain rollback failed for $dir")
-        else {
-          // the rename can race the writer adopting its staged index
-          // at `dir`: if `dir` (re)appeared first, Hadoop moved the
-          // old copy INSIDE it. The adopted index is then live and the
-          // old copy disposable — put it back aside (the writer's
-          // final cleanup deletes it) or drop it.
-          val nested = new org.apache.hadoop.fs.Path(p, old.getName)
-          if (fs.exists(nested) && !fs.rename(nested, old))
-            fs.delete(nested, true)
-        }
-      }
-    }
-  }
+  private def retrainSlot(dir: String): IndexLifecycle.Slot =
+    IndexLifecycle.Slot(new org.apache.hadoop.fs.Path(dir),
+      new org.apache.hadoop.fs.Path(s"$dir.retrain.next"),
+      new org.apache.hadoop.fs.Path(s"$dir.retrain.old"))
 
   /** The stored index minus tombstoned rows — what every probe path
     * scans. The anti-join side is the tombstone set (compaction-
@@ -676,12 +646,8 @@ object SimilarityOps {
     */
   private[graft] def liveIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, cb: Codebook): DataFrame = {
-    val stored = spark.read.parquet(dir)
-      .filter(col("bucket").isin(cb.map(_._1.toInt).toSeq: _*))
-    tombstonesDf(spark, dir) match {
-      case Some(ts) => stored.join(broadcast(ts), Seq("id"), "left_anti")
-      case None => stored
-    }
+    IndexLifecycle.masked(spark, dir, "id", spark.read.parquet(dir)
+      .filter(col("bucket").isin(cb.map(_._1.toInt).toSeq: _*)), col("id"))
   }
 
   /** Probe a [[buildIvfIndex]] materialization: the probe row is a
@@ -793,7 +759,7 @@ object SimilarityOps {
     // sidecar once, which at that probe count IS the lookup's amortized
     // cost (2 longs/row — a sliver of the vector payload it replaces).
     val probeRows = {
-      val ids = spark.read.parquet(s"$dir/_ids")
+      val ids = IndexLifecycle.readSidecar(spark, s"$dir/_ids")
       val matched =
         (if (distinctPids.length <= 1000)
           ids.filter(col("id").isin(distinctPids: _*))
@@ -807,13 +773,14 @@ object SimilarityOps {
       // missing set broadcasts rather than an isin literal: at the
       // 10^6-probe workload a large stale fraction would otherwise
       // build a planning-killing In list.
-      val allDead = missing.isEmpty || tombstonesDf(spark, dir).exists { ts =>
-        val missingDf = {
-          import spark.implicits._
-          missing.toSeq.toDF("id")
+      val allDead = missing.isEmpty ||
+        IndexLifecycle.tombstones(spark, dir, "id").exists { ts =>
+          val missingDf = {
+            import spark.implicits._
+            missing.toSeq.toDF("id")
+          }
+          ts.join(broadcast(missingDf), "id").count() == missing.size
         }
-        ts.join(broadcast(missingDf), "id").count() == missing.size
-      }
       (if (allDead) stored.filter(col("bucket")
         .isin(matched.map(_.getInt(1)).distinct.toSeq: _*))
       else stored).join(broadcast(pidDf), "id")
@@ -853,9 +820,10 @@ object SimilarityOps {
     * threshold. Probe answers are identical before and after (pinned
     * in AnnIndexSpec). Pending [[deleteFromIvfIndex]] tombstones are
     * physically PURGED first — only the buckets holding deleted ids
-    * are rewritten, emptied bucket directories are removed, and the
-    * tombstone sidecar is cleared. Both `_ids` rewrites go through
-    * [[replaceIds]], never an in-place overwrite.
+    * are rewritten ([[IndexLifecycle.rewriteBuckets]]), emptied bucket
+    * directories are removed, and the tombstone sidecar is cleared.
+    * Both `_ids` rewrites go through [[replaceIds]], never an in-place
+    * overwrite.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxFilesPerBucket: Int = 4): Unit = {
@@ -865,97 +833,64 @@ object SimilarityOps {
     // half-applied split (children renamed in, parents not yet dropped)
     // would otherwise double-count the split rows
     openIndex(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parquetCount(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val idsDir = s"$dir/_ids"
     // PURGE pending tombstones first: rewrite ONLY the buckets that
     // hold deleted ids (located through the `_ids` sidecar — a
-    // metadata-sized lookup), drop the rows, remove
-    // bucket directories the purge emptied (dynamic overwrite only
-    // replaces partitions it WRITES, so an empty result leaves the
-    // stale directory behind), rewrite `_ids` without the deleted
-    // ids, and clear `_tombstones`. After this block the index is
-    // byte-equivalent to one never containing the deleted rows, and
-    // probes stop paying the anti-join.
-    val tsPath = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-    if (fs.exists(tsPath)) {
-      val ts = spark.read.parquet(s"$dir/_tombstones")
-        .select("id").distinct().localCheckpoint()
-      def locate(df: DataFrame): Array[Int] =
-        df.join(broadcast(ts), "id")
-          .select("bucket").distinct().collect().map(_.getInt(0))
+    // metadata-sized lookup), remove bucket directories the purge
+    // emptied, rewrite `_ids` without the deleted ids, and clear
+    // `_tombstones`. After this block the index is byte-equivalent to
+    // one never containing the deleted rows, and probes stop paying
+    // the anti-join.
+    IndexLifecycle.tombstones(spark, dir, "id").foreach { pending =>
+      val ts = pending.localCheckpoint()
       // the sidecar locate is only sound when the sidecar is COMPLETE
       // — an append that died between its data and `_ids` writes
       // leaves rows `_ids` lacks, and trusting it would SKIP their
       // buckets, leave deleted rows in place, and still clear the
       // tombstones (silent resurrection). Completeness is a
       // metadata-sized check: both counts answer from parquet footers.
-      val ids = spark.read.parquet(s"$dir/_ids")
+      val ids = IndexLifecycle.readSidecar(spark, idsDir)
       val complete = ids.count() == spark.read.parquet(dir).count()
-      val touched = locate(if (complete) ids else spark.read.parquet(dir))
-      if (touched.nonEmpty) {
-        val kept = spark.read.parquet(dir)
-          .filter(col("bucket").isin(touched.toSeq: _*)) // pruned read
-          .join(broadcast(ts), Seq("id"), "left_anti")
-          .localCheckpoint() // materialize BEFORE overwriting the source
-        val surviving = kept.select("bucket").distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (surviving.nonEmpty)
-          kept.repartition(surviving.size, col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket").parquet(dir)
-        (touched.toSet -- surviving).foreach(b =>
+      val touched = (if (complete) ids else spark.read.parquet(dir))
+        .join(broadcast(ts), "id")
+        .select("bucket").distinct().collect().map(_.getInt(0)).toSeq
+      if (touched.nonEmpty)
+        (touched.toSet -- IndexLifecycle.rewriteBuckets(spark, dir, "bucket",
+          touched, col("id"), ts)).foreach(b =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$dir/bucket=$b"), true))
-      }
       // complete sidecar: drop the dead ids; incomplete: REBUILD it
       // from the post-purge data (same column-pruned read
       // buildIvfIndex uses), which also repairs the crash window
       if (touched.nonEmpty || !complete)
         replaceIds(fs, dir,
-          if (complete) ids.join(broadcast(ts), Seq("id"), "left_anti")
+          if (complete) IndexLifecycle.mask(ids, col("id"), ts)
           else spark.read.parquet(dir).select("id", "bucket"))
-      fs.delete(tsPath, true)
+      IndexLifecycle.clearTombstones(fs, dir)
     }
-    val fat = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .filter(s => parquetCount(s.getPath) > maxFilesPerBucket)
-      .map(_.getPath.getName.stripPrefix("bucket=").toInt)
-    if (fat.nonEmpty) {
-      // localCheckpoint: materializes the fat buckets BEFORE the
-      // overwrite (Spark refuses to overwrite a path it is still
-      // reading, and rightly so) — the spill footprint is exactly the
-      // data being rewritten, the same bytes any staging scheme holds
-      spark.read.parquet(dir)
-        .filter(col("bucket").isin(fat: _*)) // partition-pruned read
-        .localCheckpoint()
-        .repartition(fat.length, col("bucket")) // ~one file per bucket
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(dir)
-    }
+    IndexLifecycle.compactBuckets(spark, fs, dir, "bucket", maxFilesPerBucket)
     // content unchanged by bucket compaction; rewrite only to restore
     // the sorted few-files layout the point lookup relies on
-    if (parquetCount(new org.apache.hadoop.fs.Path(s"$dir/_ids")) >
-        maxFilesPerBucket)
-      replaceIds(fs, dir, spark.read.parquet(s"$dir/_ids"))
+    if (IndexLifecycle.parquetFiles(fs, new org.apache.hadoop.fs.Path(idsDir))
+        > maxFilesPerBucket)
+      replaceIds(fs, dir, IndexLifecycle.readSidecar(spark, idsDir))
   }
 
-  /** Replace the live `_ids` with `entries`: the complete copy stages
-    * under `_compact.tmp` and swaps in through [[swapSidecar]], so
-    * `_ids` is never partly written. A crash mid-swap leaves the live
-    * copy moved aside; [[openIndex]] rolls it back, which answers as
-    * before the compaction (a purge's ids stay tombstoned until the
-    * swap completes, and the next purge rebuilds the then-incomplete
-    * sidecar).
+  /** Replace the live `_ids` with `entries`: the complete copy is
+    * written to `_ids.tmp`, staged as `_ids.next` and swapped in
+    * ([[IndexLifecycle.swap]]), so `_ids` is never partly written. A
+    * crash mid-swap heals on the next open by adopting `_ids.next`,
+    * which answers as the compaction would (a purge's ids stay
+    * tombstoned until the tombstones clear).
     */
   private def replaceIds(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       entries: DataFrame): Unit = {
-    val staged = s"$dir/_compact.tmp"
+    val staged = s"$dir/_ids.tmp"
     writeIdsSidecar(entries, staged, overwrite = true)
-    swapSidecar(fs, dir, "_ids", new org.apache.hadoop.fs.Path(s"$staged/_ids"))
-    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
+    val slot = IndexLifecycle.Slot(new org.apache.hadoop.fs.Path(s"$dir/_ids"))
+    IndexLifecycle.stage(fs, new org.apache.hadoop.fs.Path(staged), slot)
+    IndexLifecycle.swap(fs, slot)
   }
 
   /** SPLIT hot cells in place — the incremental lever between
@@ -1048,10 +983,10 @@ object SimilarityOps {
     // re-assigned from the data itself)
     val newAssign = spark.read.parquet(s"$tmp/data").select("id", "bucket")
     writeIdsSidecar(
-      spark.read.parquet(s"$dir/_ids")
+      IndexLifecycle.readSidecar(spark, s"$dir/_ids")
         .filter(!col("bucket").isin(hot.toSeq: _*))
         .unionByName(newAssign),
-      tmp, overwrite = true)
+      s"$tmp/_ids", overwrite = true)
     mapping.flatMap { case (b, kids, _) => kids.map(k => (b, k.toInt)) }
       .toDF("parent", "child").coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/_manifest")
@@ -1060,41 +995,28 @@ object SimilarityOps {
     // the marker) swaps it into the live layout
     require(!fs.exists(p(next)),
       s"$next still pending after heal — concurrent writer?")
-    require(fs.rename(p(tmp), p(next)), s"rename failed: $tmp -> $next")
+    // the apply publishes the staged sidecars as `<name>.next`: clear
+    // any a crashed compaction left, so the publish cannot nest
+    Seq("_codebook", "_ids").foreach(sc =>
+      fs.delete(IndexLifecycle.Slot(p(s"$dir/$sc")).next, true))
+    IndexLifecycle.moveStaged(fs, p(tmp), p(next))
     applySplit(spark, fs, dir)
     mapping.map { case (b, kids, _) => b -> kids.map(_.toInt) }
   }
 
-  /** Resolve sidecar swap residues, then apply a committed
-    * `_split.next` idempotently — run by the writer right after its
-    * commit rename and by every verb that finds the marker or a live
-    * sidecar missing (the heal, via [[openIndex]]).
-    *
-    * Residues: a crash between a [[swapSidecar]] aside-move and its
-    * rename leaves the live copy missing and `<name>.old` present. A
-    * pending split's staged copy rolls forward in step (2) below;
-    * anything else (a compaction's `_ids` swap) rolls back to `.old`.
-    * A lingering `.old` beside a present live copy is dropped.
-    *
-    * The apply: child bucket dirs rename in, `_codebook` and `_ids`
-    * swap, parent dirs drop once the codebook no longer names them,
-    * and the marker clears LAST so any crash resumes from here.
+  /** Apply a committed `_split.next` idempotently — run by the writer
+    * right after its commit rename and by every verb that finds the
+    * marker (the heal, via [[openIndex]]): child bucket dirs rename
+    * in, `_codebook` and `_ids` swap, parent dirs drop once the
+    * codebook no longer names them, and the marker clears LAST so any
+    * crash resumes from here. Each staged sidecar is published as its
+    * `<name>.next` and swapped in ([[IndexLifecycle.swap]]); a
+    * `<name>.next` an interrupted apply already published swaps as is.
     */
   private def applySplit(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val next = p(s"$dir/_split.next")
-    for (sc <- Seq("_codebook", "_ids")) {
-      val live = p(s"$dir/$sc")
-      val old = p(s"$dir/$sc.old")
-      if (fs.exists(old)) {
-        if (!fs.exists(live) && !fs.exists(p(s"$dir/_split.next/$sc"))) {
-          if (!fs.rename(old, live))
-            require(fs.exists(live), s"sidecar rollback failed for $live")
-        } else if (fs.exists(live)) fs.delete(old, true)
-      }
-    }
-    if (!fs.exists(next)) return
     // a concurrent healer may finish the whole apply (marker deleted)
     // between our exists check and this read — a healthy state, not an
     // error. The race can surface at ANALYSIS time (AnalysisException)
@@ -1103,7 +1025,7 @@ object SimilarityOps {
     // NonFatal + a marker re-check: marker gone = healed elsewhere,
     // marker still present = a real failure, rethrown loud.
     val man =
-      try spark.read.parquet(s"$dir/_split.next/_manifest")
+      try IndexLifecycle.readSidecar(spark, s"$dir/_split.next/_manifest")
         .collect().map(r => (r.getInt(0), r.getInt(1)))
       catch { case scala.util.control.NonFatal(e) =>
         if (!fs.exists(next)) return else throw e
@@ -1111,17 +1033,14 @@ object SimilarityOps {
     // (1) child data dirs in — absent source means already applied;
     // children are codebook-invisible until step (2), so this is safe
     // in any order
-    man.map(_._2).distinct.foreach { c =>
-      val src = p(s"$dir/_split.next/data/bucket=$c")
-      val dst = p(s"$dir/bucket=$c")
-      if (fs.exists(src) && !fs.rename(src, dst))
-        require(fs.exists(dst), s"rename failed: $src -> $dst")
-    }
-    // (2) sidecar swaps — a still-present staged copy means not yet
-    // swapped; the codebook swap is the COMMIT POINT for visibility
+    man.map(_._2).distinct.foreach(c => IndexLifecycle.moveIfPresent(fs,
+      p(s"$dir/_split.next/data/bucket=$c"), p(s"$dir/bucket=$c")))
+    // (2) sidecar swaps; the codebook swap is the COMMIT POINT for
+    // visibility
     for (sc <- Seq("_codebook", "_ids")) {
-      val src = p(s"$dir/_split.next/$sc")
-      if (fs.exists(src)) swapSidecar(fs, dir, sc, src)
+      val slot = IndexLifecycle.Slot(p(s"$dir/$sc"))
+      IndexLifecycle.moveIfPresent(fs, p(s"$dir/_split.next/$sc"), slot.next)
+      if (fs.exists(slot.next)) IndexLifecycle.swap(fs, slot)
     }
     // (3) parent dirs out — unreachable since the codebook swap
     // (cell probes rank codebook cids; liveIndex hides
@@ -1130,24 +1049,6 @@ object SimilarityOps {
       fs.delete(p(s"$dir/bucket=$b"), true))
     // (4) the marker clears LAST: any earlier crash resumes here
     fs.delete(next, true)
-  }
-
-  /** Replace the live sidecar `<dir>/<sc>` by the complete staged copy
-    * `src` through a `<sc>.old` aside-move — the one way to replace an
-    * IVF sidecar (the shard-swap discipline: losing a rename race to a
-    * concurrent healer is success when the destination exists).
-    * [[applySplit]] resolves the residue of a crash between the renames.
-    */
-  private def swapSidecar(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      sc: String, src: org.apache.hadoop.fs.Path): Unit = {
-    val live = new org.apache.hadoop.fs.Path(s"$dir/$sc")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/$sc.old")
-    fs.delete(old, true) // stale residue
-    if (fs.exists(live) && !fs.rename(live, old))
-      require(!fs.exists(live), s"rename failed: $live -> $old")
-    if (!fs.rename(src, live))
-      require(fs.exists(live), s"rename failed: $src -> $live")
-    fs.delete(old, true)
   }
 
   /** RETRAIN the coarse quantizer in place — the codebook-drift verb
@@ -1166,9 +1067,11 @@ object SimilarityOps {
     * argmin (the shuffle per Lloyd round is k·dims rows);
     * re-quantization is one map-side pass; the rewrite stages to a
     * sibling `<dir>.retrain.tmp` parquet (disk, not a block-manager
-    * checkpoint of the index) before replacing `dir`, so the peak
-    * footprint is the data being rewritten — which a full re-bucket
-    * inherently rewrites. Single-writer, like every lifecycle verb.
+    * checkpoint of the index), which replaces `dir` through the shared
+    * swap ([[IndexLifecycle.swap]] of `<dir>.retrain.next`), so the
+    * peak footprint is the data being rewritten — which a full
+    * re-bucket inherently rewrites. Single-writer, like every
+    * lifecycle verb.
     *
     * The result is row-for-row the index [[buildIvfIndex]] would
     * produce at the new codebook (pinned in AnnIndexSpec; the
@@ -1183,12 +1086,9 @@ object SimilarityOps {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val fs = p(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldDir = p(s"$dir.retrain.old")
-    // heal a crashed earlier retrain (the shared read-side rollback),
-    // then clear residues; staging is never adopted — the replay
-    // rebuilds it
+    // heal a crashed earlier retrain (the shared read-side heal); the
+    // staging is rebuilt from scratch
     val cb = openIndex(spark, dir)
-    fs.delete(oldDir, true)
     val tmp = s"$dir.retrain.tmp"
     fs.delete(p(tmp), true) // stale staging from a crashed run
     val live = liveIndex(spark, dir, cb).select(col("id"), col("v"))
@@ -1204,42 +1104,14 @@ object SimilarityOps {
     // discipline; underscore dirs stay invisible to the data read)
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     cents.write.mode("overwrite").parquet(s"$tmp/_codebook")
-    writeIdsSidecar(spark.read.parquet(tmp).select("id", "bucket"), tmp,
-      overwrite = true)
-    // swap via two metadata renames — the index is written ONCE (the
-    // first cut re-wrote it through the live path, 2x the IO), the
-    // old dir (pending _tombstones included: the retrain input was
-    // the live set, so dropping them IS the purge) retires wholesale,
-    // and the unreadable window shrinks from the whole rewrite to the
-    // instant between the renames (healed above on replay)
-    require(fs.rename(p(dir), oldDir), s"rename failed: $dir -> $oldDir")
-    // between the two renames a concurrent reader's open can
-    // restore `dir` from the .old copy; Hadoop FileSystems then treat
-    // rename(tmp, dir) as move-INTO (the staging nests inside the
-    // restored old index) rather than failing. Adopt in a guarded
-    // loop: move any healed dir back aside, detect-and-undo a nested
-    // landing, and finish only once the staged root verifiably IS
-    // `dir`.
-    var adopted = false
-    var attempts = 0
-    while (!adopted) {
-      attempts += 1
-      require(attempts <= 16,
-        s"retrain adoption lost the heal race $attempts times: $dir")
-      if (fs.exists(p(dir)) && !fs.rename(p(dir), oldDir))
-        require(!fs.exists(p(dir)), s"rename failed: $dir -> $oldDir")
-      if (fs.rename(p(tmp), p(dir))) {
-        val nested = new org.apache.hadoop.fs.Path(p(dir), p(tmp).getName)
-        if (fs.exists(nested))
-          // landed inside a healed old dir: pull the staging back out
-          // and retry the swap
-          require(fs.rename(nested, p(tmp)),
-            s"rename failed: $nested -> $tmp")
-        else adopted = true
-      } else require(fs.exists(p(dir)),
-        s"rename failed and $dir missing: $tmp -> $dir")
-    }
-    fs.delete(oldDir, true)
+    writeIdsSidecar(spark.read.parquet(tmp).select("id", "bucket"),
+      s"$tmp/_ids", overwrite = true)
+    // the index is written ONCE and replaces `dir` through two metadata
+    // renames; the old dir (pending _tombstones included: the retrain
+    // input was the live set, so dropping them IS the purge) retires
+    // wholesale
+    IndexLifecycle.stage(fs, p(tmp), retrainSlot(dir))
+    IndexLifecycle.swap(fs, retrainSlot(dir))
   }
 
   /** id→bucket point lookup against the `_ids` sidecar; None when the
@@ -1250,7 +1122,8 @@ object SimilarityOps {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probeId: Long): Option[Int] = {
     val ids = new org.apache.hadoop.fs.Path(s"$dir/_ids")
-    try spark.read.parquet(ids.toString).filter(col("id") === probeId)
+    try IndexLifecycle.readSidecar(spark, ids.toString)
+      .filter(col("id") === probeId)
       .collect().headOption.map(_.getInt(1))
     catch { case scala.util.control.NonFatal(e) =>
       // a concurrent sidecar SWAP (split/compact) can rename _ids away

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.functions.BloomAgg
+import graft.sources.IndexLifecycle.fsFor
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -60,9 +61,11 @@ import scala.collection.concurrent.TrieMap
   * are not in the index yet and the caller retries; partial
   * multi-shard application is safe for the same reason, since each
   * shard's merge is independently a superset of its current state).
-  * Each shard swap goes through `<name>.next`/`<name>.old` renames
-  * with roll-forward/roll-back healing on the read side — no window
-  * where the index is unreadable.
+  * Each shard swap, and a rebuild's swap of the whole `_blooms.d`
+  * root, goes through the shared [[IndexLifecycle.swap]], which every
+  * read heals ([[IndexLifecycle.heal]]) — no window where the index is
+  * unreadable. Tombstones, the purge's bucket rewrite and the
+  * fat-bucket compaction are [[IndexLifecycle]]'s too.
   */
 object FileBloomIndex {
 
@@ -98,16 +101,15 @@ object FileBloomIndex {
       .withColumn("key_col", lit(keyCol))
     val fs = fsFor(df.sparkSession, path)
     val staged = stageShards(blooms, path, bucketsPerShard)
-    // fresh build: assemble the COMPLETE new root under _blooms.stage,
-    // clear the previous root, then adopt the stage with ONE rename —
-    // readers see the old sidecar, nothing (loud), or the complete new
-    // root, never a partial shard set (a crash inside a per-shard
-    // adoption loop would otherwise serve partial filters silently =
-    // false negatives)
-    val stage = assembleStage(fs, path, staged, bucketsPerShard)
-    val root = shardRoot(path)
-    fs.delete(root, true)
-    checkedRename(fs, stage, root)
+    // fresh build: assemble the COMPLETE new root under _blooms.stage
+    // and replace the previous root through the shared swap — readers
+    // see the old sidecar or the complete new root, never a partial
+    // shard set (a crash inside a per-shard adoption loop would
+    // otherwise serve partial filters silently = false negatives)
+    val rootSlot = IndexLifecycle.Slot(shardRoot(path))
+    IndexLifecycle.stage(fs,
+      assembleStage(fs, path, staged, bucketsPerShard), rootSlot)
+    IndexLifecycle.swap(fs, rootSlot)
     // a rebuild may DROP shards whose stale cached filters would
     // otherwise linger forever (the fingerprint guard only covers
     // shards that still exist)
@@ -177,21 +179,10 @@ object FileBloomIndex {
         })
       }
       import spark.implicits._
-      val mergedDf = merged.toDF("bucket", "bloom")
+      replaceShards(fs, path, merged.toDF("bucket", "bloom")
         .withColumn("expected_items", lit(expected))
         .withColumn("fpp", lit(fppV))
-        .withColumn("key_col", lit(keyCol))
-      // stage EVERY touched shard's replacement as <name>.next before
-      // swapping ANY — a .next, once present, is always complete
-      // (rename is atomic) and always safe to adopt (superset merge)
-      val staged = stageShards(mergedDf, path, bps)
-      staged.foreach { case (lo, tmpDir) =>
-        val next = nextPath(path, lo, bps)
-        fs.delete(next, true) // stale residue from an older crash
-        checkedRename(fs, tmpDir, next)
-      }
-      fs.delete(hp(tmpRoot(path)), true)
-      staged.foreach { case (lo, _) => swapShard(fs, path, lo, bps) }
+        .withColumn("key_col", lit(keyCol)), bps)
     }
     afterSidecarSwap(path)
     // data LAST: see the crash-discipline note above
@@ -235,30 +226,8 @@ object FileBloomIndex {
       "nothing to delete")
     rejectLegacy(fsFor(spark, path), path)
     import spark.implicits._
-    keys.distinct.toDF("k")
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/_tombstones")
+    IndexLifecycle.writeTombstones(keys.distinct.toDF("k"), path)
   }
-
-  /** The `_tombstones` sidecar as a distinct key set; None when the
-    * index has no pending deletes (one existence check).
-    */
-  private[graft] def tombstonesDf(spark: SparkSession,
-      path: String): Option[DataFrame] =
-    if (!fsFor(spark, path).exists(hp(s"$path/_tombstones"))) None
-    else Some(spark.read.parquet(s"$path/_tombstones").select("k").distinct())
-
-  /** Mask tombstoned keys out of a frame whose `keyExpr` renders the
-    * index key as string — the one mask every read path shares.
-    */
-  private def maskTombstones(spark: SparkSession, path: String,
-      df: DataFrame, keyExpr: org.apache.spark.sql.Column): DataFrame =
-    tombstonesDf(spark, path) match {
-      case Some(ts) =>
-        df.join(broadcast(ts.withColumnRenamed("k", "_ts_k")),
-          keyExpr === col("_ts_k"), "left_anti")
-      case None => df
-    }
 
   /** Compact the small-file debt appends accrue — and physically PURGE
     * pending [[delete]] tombstones first: the buckets holding deleted
@@ -287,22 +256,8 @@ object FileBloomIndex {
     val fs = fsFor(spark, path)
     rejectLegacy(fs, path)
     purgeTombstones(spark, fs, path)
-    val dataRoot = hp(s"$path/data")
-    def parquetCount(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    val fat = fs.listStatus(dataRoot).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("fbib="))
-      .filter(s => parquetCount(s.getPath) > maxFilesPerBucket)
-      .map(_.getPath.getName.stripPrefix("fbib=").toInt)
-    if (fat.nonEmpty) {
-      spark.read.parquet(s"$path/data")
-        .filter(col("fbib").isin(fat: _*)) // partition-pruned read
-        .localCheckpoint()
-        .repartition(fat.length, col("fbib")) // ~one file per bucket
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("fbib").parquet(s"$path/data")
-    }
+    IndexLifecycle.compactBuckets(spark, fs, s"$path/data", "fbib",
+      maxFilesPerBucket)
   }
 
   /** The purge half of [[compact]]; see its scaladoc. The key column
@@ -312,8 +267,10 @@ object FileBloomIndex {
     */
   private def purgeTombstones(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val tsPath = hp(s"$path/_tombstones")
-    if (!fs.exists(tsPath)) return
+    val ts = IndexLifecycle.tombstones(spark, path, "k") match {
+      case Some(t) => t.localCheckpoint()
+      case None => return
+    }
     val shards = listShards(fs, path)
     if (shards.isEmpty)
       throw new IllegalArgumentException(
@@ -323,8 +280,6 @@ object FileBloomIndex {
     val expected = params.getLong(0)
     val fppV = params.getDouble(1)
     val keyCol = params.getString(2)
-    val ts = spark.read.parquet(s"$path/_tombstones")
-      .select("k").distinct().localCheckpoint()
     // this verb is about to delete data dirs: drop the listing memo
     // NOW so no same-JVM reader (or this method) can serve a stale
     // bucket set during the mutation window; the sidecar swap below
@@ -348,24 +303,11 @@ object FileBloomIndex {
       }
     if (touched.nonEmpty) {
       // (1) DATA: rewrite only the touched buckets without the dead
-      // rows (dynamic overwrite replaces exactly the partitions it
-      // writes; buckets the purge EMPTIES are deleted in step (3),
-      // AFTER the sidecar swap — until then their stale files stay
-      // masked by the tombstones, so every crash state is consistent)
-      val touchedRead = spark.read.option("basePath", s"$path/data")
-        .parquet(touched.map(b => s"$path/data/fbib=$b").toSeq: _*)
-      val kept = touchedRead.join(
-          broadcast(ts.withColumnRenamed("k", "_ts_k")),
-          touchedRead(keyCol).cast("string") === col("_ts_k"),
-          "left_anti")
-        .localCheckpoint() // materialize BEFORE overwriting the source
-      val surviving = kept.select(col("fbib").cast("int")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (surviving.nonEmpty)
-        kept.repartition(surviving.size, col("fbib"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("fbib").parquet(s"$path/data")
+      // rows; buckets the purge EMPTIES are deleted in step (3), AFTER
+      // the sidecar swap — until then their stale files stay masked by
+      // the tombstones, so every crash state is consistent
+      val surviving = IndexLifecycle.rewriteBuckets(spark, s"$path/data",
+        "fbib", touched.toSeq, col(keyCol).cast("string"), ts)
       // (2) SIDECAR: rebuild the touched buckets' blooms from the
       // REWRITTEN files read back (the write()-time consistency
       // discipline), replace them inside their shards, swap only
@@ -392,29 +334,19 @@ object FileBloomIndex {
             r.getAs[Array[Byte]]("bloom")).toMap
       }
       def dropShard(lo: Int): Unit = {
-        fs.delete(shardPath(path, lo, bps), true)
-        fs.delete(nextPath(path, lo, bps), true)
-        fs.delete(oldPath(path, lo, bps), true)
+        val s = shardSlot(path, lo, bps)
+        Seq(s.live, s.next, s.old).foreach(fs.delete(_, true))
         filterMemo.remove((path, shardName(lo, bps)))
       }
       val newRows = (oldTouched -- touched) ++ freshBlooms
       import spark.implicits._
-      if (newRows.nonEmpty) {
-        val mergedDf = newRows.toSeq.toDF("bucket", "bloom")
+      val swapped =
+        if (newRows.isEmpty) Set.empty[Int]
+        else replaceShards(fs, path, newRows.toSeq.toDF("bucket", "bloom")
           .withColumn("expected_items", lit(expected))
           .withColumn("fpp", lit(fppV))
-          .withColumn("key_col", lit(keyCol))
-        val staged = stageShards(mergedDf, path, bps)
-        staged.foreach { case (lo, tmpDir) =>
-          val next = nextPath(path, lo, bps)
-          fs.delete(next, true)
-          checkedRename(fs, tmpDir, next)
-        }
-        fs.delete(hp(tmpRoot(path)), true)
-        staged.foreach { case (lo, _) => swapShard(fs, path, lo, bps) }
-        (touchedLos -- staged.map(_._1).toSet).foreach(dropShard)
-      } else
-        touchedLos.foreach(dropShard)
+          .withColumn("key_col", lit(keyCol)), bps)
+      (touchedLos -- swapped).foreach(dropShard)
     }
     // (3) now that no bloom names them, drop the emptied bucket dirs —
     // and sweep any ORPHAN dir a crashed earlier purge left behind (a
@@ -436,7 +368,7 @@ object FileBloomIndex {
     // post-purge state is re-listed exactly once
     presentMemo.remove(path)
     // (4) tombstones LAST: every earlier crash state still masks
-    fs.delete(tsPath, true)
+    IndexLifecycle.clearTombstones(fs, path)
   }
 
   /** Candidate buckets for a one-column ("k") frame of key strings —
@@ -497,41 +429,8 @@ object FileBloomIndex {
   private def loOf(bucket: Int, bps: Int): Int =
     Math.floorDiv(bucket, bps) * bps
   private def shardName(lo: Int, bps: Int) = s"$lo-${lo + bps - 1}"
-  private def shardPath(path: String, lo: Int, bps: Int) =
-    hp(s"$path/_blooms.d/${shardName(lo, bps)}")
-  private def nextPath(path: String, lo: Int, bps: Int) =
-    hp(s"$path/_blooms.d/${shardName(lo, bps)}.next")
-  private def oldPath(path: String, lo: Int, bps: Int) =
-    hp(s"$path/_blooms.d/${shardName(lo, bps)}.old")
-
-  private def fsFor(spark: SparkSession, path: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-
-  private def checkedRename(fs: org.apache.hadoop.fs.FileSystem,
-      from: org.apache.hadoop.fs.Path,
-      to: org.apache.hadoop.fs.Path): Unit =
-    // a silently-failed rename would mask a half-applied swap as
-    // success — the one failure mode the .next/.old discipline cannot
-    // heal, so it must be LOUD (the read side then heals the residues).
-    // For UNCONTENDED staging renames only; contended heal/swap steps
-    // use [[renameOrHealed]].
-    require(fs.rename(from, to), s"rename failed: $from -> $to")
-
-  /** Rename for CONTENDED heal/swap steps: the single-writer contract
-    * covers writers, but every READ heals residues too, so two
-    * concurrent lookups (or a lookup racing an append's swap) may
-    * attempt the same rename — the loser's rename returns false while
-    * the winner has already produced the identical destination. Losing
-    * that race is success; a failed rename with NO destination is the
-    * real, loud failure.
-    */
-  private def renameOrHealed(fs: org.apache.hadoop.fs.FileSystem,
-      from: org.apache.hadoop.fs.Path,
-      to: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(from, to))
-      require(fs.exists(to),
-        s"rename failed and destination missing: $from -> $to")
+  private def shardSlot(path: String, lo: Int, bps: Int) =
+    IndexLifecycle.Slot(hp(s"$path/_blooms.d/${shardName(lo, bps)}"))
 
   /** Assemble staged shard dirs into a complete replacement root at
     * `_blooms.stage` (final shard names, ready for the one-rename
@@ -547,7 +446,7 @@ object FileBloomIndex {
     fs.delete(stage, true) // residue from a crashed earlier attempt
     require(fs.mkdirs(stage), s"cannot create $stage")
     staged.foreach { case (lo, tmpDir) =>
-      checkedRename(fs, tmpDir,
+      IndexLifecycle.moveStaged(fs, tmpDir,
         new org.apache.hadoop.fs.Path(stage, shardName(lo, bps)))
     }
     fs.delete(hp(tmpRoot(path)), true)
@@ -572,59 +471,31 @@ object FileBloomIndex {
       .sortBy(_._1)
   }
 
-  /** cur -> `<name>.old`, `<name>.next` -> cur, drop old;
-    * [[healShards]] completes an interrupted swap from either side.
+  /** Stage EVERY shard of the bloom rows `blooms` as its `<name>.next`
+    * before swapping ANY — a `.next`, once present, is always complete
+    * and always safe to adopt (a superset merge, or the purge's rebuilt
+    * blooms) — then swap them in. Returns the swapped shards' lows.
     */
-  private def swapShard(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      lo: Int, bps: Int): Unit = {
-    val cur = shardPath(path, lo, bps)
-    val next = nextPath(path, lo, bps)
-    val oldP = oldPath(path, lo, bps)
-    if (fs.exists(oldP)) fs.delete(oldP, true) // stale residue
-    // a concurrent reader's heal can complete the swap from under us
-    // (adopt next once cur is moved aside): a failed rename whose
-    // destination exists means the heal won with identical bytes
-    if (fs.exists(cur) && !fs.rename(cur, oldP))
-      require(!fs.exists(cur), s"rename failed: $cur -> $oldP")
-    renameOrHealed(fs, next, cur)
-    fs.delete(oldP, true)
+  private def replaceShards(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, blooms: DataFrame, bps: Int): Set[Int] = {
+    val staged = stageShards(blooms, path, bps)
+    staged.foreach { case (lo, tmpDir) =>
+      IndexLifecycle.stage(fs, tmpDir, shardSlot(path, lo, bps)) }
+    fs.delete(hp(tmpRoot(path)), true)
+    staged.foreach { case (lo, _) =>
+      IndexLifecycle.swap(fs, shardSlot(path, lo, bps)) }
+    staged.map(_._1).toSet
   }
 
-  /** Roll interrupted shard swaps forward (a fully-present `.next` is
-    * always safe to adopt — it only over-approximates) or back, and
-    * clear completed swaps' leftover `.old` copies. Cheap when clean:
-    * one listStatus, no renames.
-    */
-  private def healShards(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    val root = shardRoot(path)
-    if (!fs.exists(root)) return
-    val names = fs.listStatus(root).map(_.getPath.getName).toSet
-    names.filter(_.endsWith(".next")).foreach { n =>
-      val cur = n.stripSuffix(".next")
-      // cur present: serving it stays correct (the writer re-stages on
-      // replay) — leave residues alone
-      if (!names(cur)) {
-        renameOrHealed(fs, hp(s"$root/$n"), hp(s"$root/$cur"))
-        fs.delete(hp(s"$root/$cur.old"), true)
-      }
-    }
-    names.filter(_.endsWith(".old")).foreach { n =>
-      val cur = n.stripSuffix(".old")
-      if (!names(cur) && !names(s"$cur.next"))
-        renameOrHealed(fs, hp(s"$root/$n"), hp(s"$root/$cur"))
-    }
-  }
-
-  /** Live shards as (lo, bucketsPerShard, dir), healed and sorted.
-    * Empty when the index has no shard root.
+  /** Live shards as (lo, bucketsPerShard, dir), healed and sorted —
+    * the root swap of a rebuild first, then every shard swap, from one
+    * listing when clean. Empty when the index has no shard root.
     */
   private def listShards(fs: org.apache.hadoop.fs.FileSystem, path: String)
       : Seq[(Int, Int, org.apache.hadoop.fs.Path)] = {
-    healShards(fs, path)
     val root = shardRoot(path)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq
+    if (!IndexLifecycle.heal(fs, IndexLifecycle.Slot(root))) return Seq.empty
+    IndexLifecycle.healChildren(fs, root).toSeq
       .filter(s => s.isDirectory &&
         s.getPath.getName.matches("-?\\d+--?\\d+"))
       .map { s =>
@@ -675,16 +546,6 @@ object FileBloomIndex {
     TrieMap.empty[(String, String), (Seq[(String, Long, Long)],
       Array[(Int, BloomFilter)])]
 
-  /** A directory's fingerprint: (name, mtime, length) of every entry
-    * from one listStatus — metadata only. The guard of every per-JVM
-    * sidecar memo (this filter memo, the IVF codebook memo).
-    */
-  private[graft] def fingerprint(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
-    fs.listStatus(dir).toSeq
-      .map(s => (s.getPath.getName, s.getModificationTime, s.getLen))
-      .sortBy(_._1)
-
   /** Every bucket's filter, memoized per shard (see [[filterMemo]]).
     * Loud when the index has no sidecar.
     */
@@ -710,7 +571,7 @@ object FileBloomIndex {
     val shards = listShards(fs, path)
     if (shards.nonEmpty) {
       val withFp = shards.map { case (lo, cnt, dir) =>
-        (lo, cnt, dir, fingerprint(fs, dir)) }
+        (lo, cnt, dir, IndexLifecycle.fingerprint(fs, dir)) }
       val digest = withFp.map { case (_, _, dir, fp) =>
         dir.getName + fp.mkString("[", ",", "]") }.mkString(";")
       val loaded = scala.collection.mutable.Map
@@ -782,7 +643,8 @@ object FileBloomIndex {
     val pruned = spark.read.option("basePath", s"$path/data")
       .parquet(paths: _*)
       .select(col(keyCol).cast("string").as("k"))
-    maskTombstones(spark, path, pruned.join(kd, "k").distinct(), col("k"))
+    IndexLifecycle.masked(spark, path, "k",
+      pruned.join(kd, "k").distinct(), col("k"))
   }
 
   /** Which of `keys` already exist in the index — the batch-bounded
@@ -849,7 +711,7 @@ object FileBloomIndex {
         }
       else
         spark.read.option("basePath", s"$path/data").parquet(paths: _*)
-    maskTombstones(spark, path,
+    IndexLifecycle.masked(spark, path, "k",
       base.drop("fbib").filter(col(keyCol).cast("string").isin(keys: _*)),
       col(keyCol).cast("string"))
   }

@@ -51,16 +51,18 @@ object AnnStreams {
   /** One ingest micro-batch; see [[ingestSink]]. */
   def ingestBatch(batch: DataFrame, indexDir: String): Unit = {
     import graft.operators.SimilarityOps
+    import graft.sources.IndexLifecycle
     val spark = batch.sparkSession
     val cb = SimilarityOps.openIndex(spark, indexDir)
     if (batch.isEmpty) return
     import spark.implicits._
-    val known = spark.read.parquet(s"$indexDir/_ids").select("id")
+    val known = IndexLifecycle.readSidecar(spark, s"$indexDir/_ids")
+      .select("id")
     // batch-bounded driver-side id list; one row kept per id
     val deduped = batch.dropDuplicates("id").localCheckpoint()
     val batchIdSeq = deduped.select("id").collect().map(_.getLong(0)).toSeq
     val candidates =
-      SimilarityOps.tombstonesDf(spark, indexDir).fold(known)(known.union)
+      IndexLifecycle.tombstones(spark, indexDir, "id").fold(known)(known.union)
     val drop = (if (batchIdSeq.length <= 1000)
       candidates.filter(col("id").isin(batchIdSeq: _*))
     else candidates.join(broadcast(batchIdSeq.toDF("id")), "id"))

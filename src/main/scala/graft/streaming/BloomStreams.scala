@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.FileBloomIndex
+import graft.sources.{FileBloomIndex, IndexLifecycle}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -56,12 +56,8 @@ object BloomStreams {
     // fresh) insert, exactly the AnnStreams ingest rule: without this
     // a deleted key's re-arrival would append a masked row that the
     // next purge silently destroys
-    val live = FileBloomIndex.tombstonesDf(spark, indexDir) match {
-      case Some(ts) => b.join(
-        broadcast(ts.withColumnRenamed("k", "_ts_k")),
-        b(keyCol).cast("string") === col("_ts_k"), "left_anti")
-      case None => b
-    }
+    val live = IndexLifecycle.masked(spark, indexDir, "k", b,
+      b(keyCol).cast("string"))
     // replayed keys drop via a relational anti-join against the bulk
     // membership frame — never an isin literal (a fully-replayed batch
     // would put EVERY key in the list and explode the plan)

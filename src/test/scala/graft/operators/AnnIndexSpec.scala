@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.sources.IndexLifecycle.readSidecar
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -70,7 +71,7 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     // sidecar agrees with the stored assignment for every id (one row
     // per id), and the point lookup answers from it
-    val sidecar = spark.read.parquet(s"$dir/_ids").collect()
+    val sidecar = readSidecar(spark, s"$dir/_ids").collect()
       .map(r => r.getLong(0) -> r.getInt(1))
     assert(sidecar.length == truth.size && sidecar.toMap == truth)
     Seq(truth.keys.min, 80L, truth.keys.max).foreach(id =>
@@ -127,8 +128,10 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
       (df, df.collect())
     }
     // the pending-delete check is an existence check: no failed
-    // parquet resolution and its WARNs on an index without deletes
-    assert(!logged.exists(_.contains("_tombstones")), logged.mkString("\n"))
+    // parquet resolution and its WARNs on an index without deletes;
+    // and sidecar reads name no underscore root Spark would ignore
+    assert(!logged.exists(l => l.contains("_tombstones") ||
+      l.contains("All paths were ignored")), logged.mkString("\n"))
     // GroupedTopK emits a group's rows in heap order (unordered set
     // semantics, like the driver's sorted-rows hash gate): compare as
     // sorted rows
@@ -240,7 +243,7 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
       .annIvfFromIndexMultiProbe(spark, dir, pid, 8, 3)
       .collect().map(_.getLong(0)).toSeq == masked)
     // the rewritten _ids sidecar dropped the deleted ids
-    val sidecarIds = spark.read.parquet(s"$dir/_ids").select("id")
+    val sidecarIds = readSidecar(spark, s"$dir/_ids").select("id")
       .collect().map(_.getLong(0)).toSet
     assert(dead.take(3).forall(id => !sidecarIds.contains(id)))
     assert(sidecarIds == storedIds)
@@ -278,7 +281,7 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
     assert(!storedIds.contains(90L), "deleted row resurrected")
     assert(!Files.exists(Paths.get(s"$dir/_tombstones")))
     // ...and the purge rebuilt the sidecar to full coverage
-    val sidecarIds = spark.read.parquet(s"$dir/_ids").select("id")
+    val sidecarIds = readSidecar(spark, s"$dir/_ids").select("id")
       .collect().map(_.getLong(0)).toSet
     assert(sidecarIds == storedIds)
   }
@@ -319,7 +322,7 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
         "original stand-in codebook, never data)")
     // every row sits in its argmax cell of the NEW codebook under the
     // shared IVF scoring rule (dot(v,c)/|c|, ties to the lowest cid)
-    val cb = spark.read.parquet(s"$dir/_codebook")
+    val cb = readSidecar(spark, s"$dir/_codebook")
       .select("id", "v").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -415,7 +418,7 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
     assert(stored.map(_._1).sorted.toSeq == (4L until 160L).toSeq,
       "split must preserve every id exactly once")
     // the codebook swapped: parents out, children in
-    val cb = spark.read.parquet(s"$dir/_codebook")
+    val cb = readSidecar(spark, s"$dir/_codebook")
       .select("id", "v").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -452,7 +455,7 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
     assert(mapping1.nonEmpty)
     val kids1 = mapping1.flatMap(_._2)
     SimilarityOps.appendToIvfIndex(vecs(160 until 200), "id", "v", dir)
-    val cb = spark.read.parquet(s"$dir/_codebook")
+    val cb = readSidecar(spark, s"$dir/_codebook")
       .select("id", "v").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -530,8 +533,9 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     def assertFormat(after: String): Unit = {
       assert(Files.exists(Paths.get(s"$dir/_codebook")), s"$after: _codebook")
-      assert(pairs(s"$dir/_ids") == pairs(dir), s"$after: _ids != stored")
-      Seq("_ids.old", "_codebook.old", "_compact.tmp", "_split.next")
+      assert(pairs(s"$dir/_ids/*") == pairs(dir), s"$after: _ids != stored")
+      Seq("_ids.old", "_ids.next", "_ids.tmp", "_codebook.old",
+        "_codebook.next", "_split.next")
         .foreach(n => assert(!Files.exists(Paths.get(s"$dir/$n")),
           s"$after left $n"))
     }
@@ -631,19 +635,54 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
     val want = answers()
     for (staged <- Seq(true, false)) {
       // crash between the aside-move and the rename; the staged copy
-      // is the purge's (the live ids minus the dead one) or gone
+      // `_ids.next` is the purge's (the live ids minus the dead one),
+      // adopted by the heal, or absent, and `.old` restored
       Files.move(Paths.get(s"$dir/_ids"), Paths.get(s"$dir/_ids.old"))
       if (staged)
-        spark.read.parquet(s"$dir/_ids.old").filter(col("id") =!= 30L)
-          .write.parquet(s"$dir/_compact.tmp/_ids")
-      else org.apache.hadoop.fs.FileUtil.fullyDelete(
-        new java.io.File(s"$dir/_compact.tmp"))
+        readSidecar(spark, s"$dir/_ids.old").filter(col("id") =!= 30L)
+          .write.parquet(s"$dir/_ids.next")
       assert(answers() == want, s"staged copy present: $staged")
-      assert(Files.exists(Paths.get(s"$dir/_ids")) &&
-        !Files.exists(Paths.get(s"$dir/_ids.old")))
+      Seq("_ids.old", "_ids.next").foreach(n =>
+        assert(!Files.exists(Paths.get(s"$dir/$n")), s"$n, staged=$staged"))
+      assert(Files.exists(Paths.get(s"$dir/_ids")))
     }
     SimilarityOps.compactIvfIndex(spark, dir)
     assert(answers() == want)
-    assert(!Files.exists(Paths.get(s"$dir/_compact.tmp")))
+    assert(!Files.exists(Paths.get(s"$dir/_ids.next")))
+  }
+
+  test("a reader opening inside compact's _ids swap leaves one _ids") {
+    val dir = tmp("ann_ids_race")
+    SimilarityOps.buildIvfIndex(vecs(0 until 100), "id", "v", 4, dir)
+    SimilarityOps.deleteFromIvfIndex(spark, dir, Seq(30L, 60L))
+    val want = SimilarityOps
+      .annIvfFromIndexBatch(spark, dir, Seq(20L, 90L), 5, 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sorted.toSeq
+    // the reader's open lands between the writer's aside-move of `_ids`
+    // and its adoption of `_ids.next`
+    var opened = 0
+    graft.sources.IndexLifecycle.betweenRenames = live =>
+      if (live.getName == "_ids" && opened == 0) {
+        opened += 1
+        SimilarityOps.openIndex(spark, dir)
+      }
+    try SimilarityOps.compactIvfIndex(spark, dir)
+    finally graft.sources.IndexLifecycle.betweenRenames = _ => ()
+    assert(opened == 1, "the seam never ran")
+    def pairs(d: String) = spark.read.parquet(d).select("id", "bucket")
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(pairs(s"$dir/_ids/*") == pairs(dir))
+    assert(!pairs(dir).exists(r => r._1 == 30L || r._1 == 60L))
+    val nested = Files.list(Paths.get(s"$dir/_ids"))
+    try assert(nested.iterator().asScala.forall(p => !Files.isDirectory(p)),
+      "a directory nested inside _ids")
+    finally nested.close()
+    Seq("_ids.old", "_ids.next", "_ids.tmp").foreach(n =>
+      assert(!Files.exists(Paths.get(s"$dir/$n")), n))
+    assert(SimilarityOps
+      .annIvfFromIndexBatch(spark, dir, Seq(20L, 90L), 5, 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sorted.toSeq == want)
   }
 }

@@ -143,7 +143,8 @@ class AnnStreamsSpec extends SparkTestBase with IvfFixtures {
     assert(spark.read.parquet(dir).groupBy("id").count()
       .filter(col("count") > 1).count() == 0L)
     // ...and their sidecar entries were repaired from the stored data
-    val sidecar = spark.read.parquet(s"$dir/_ids")
+    val sidecar = graft.sources.IndexLifecycle.readSidecar(spark,
+      s"$dir/_ids")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val truth = spark.read.parquet(dir).select("id", "bucket")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
