@@ -41,18 +41,23 @@ object ReadCounters {
   * `format("zarr")` and the catalogs resolve to one too.
   *
   * Architecture (scale-first):
-  *   - one plan walk, [[GridPlanIndex]]: one `InputPartition` per
-  *     surviving chunk block, carrying only slice offsets and the
-  *     per-dim keep lists of exact dim filters — O(metadata) planning,
-  *     zero data reads before execution (the reference's 4-stage
-  *     laziness invariant, tests/test_reader.py:254-305). A restricted
-  *     table and runtime filters only narrow that walk;
+  *   - one plan walk, [[GridPlanIndex]]: the surviving chunk blocks,
+  *     each carrying only slice offsets and the per-dim keep lists of
+  *     exact dim filters, packed in plan order into byte-sized
+  *     `InputPartition`s by Spark's file-split rule — O(metadata)
+  *     planning, zero data reads before execution (the reference's
+  *     4-stage laziness invariant, tests/test_reader.py:254-305). A
+  *     restricted table and runtime filters only narrow that walk;
   *   - zone-map pruning of partitions happens at `planInputPartitions`
   *     using the filters Spark pushed down (non-separable filters stay
   *     residual, so pruning only needs soundness — the analogue of
   *     DataFusion Inexact);
   *   - one reader, [[GridColumnarReader]]: every partition, dense,
-  *     dim-filtered or TopN, streams `ColumnarBatch`es;
+  *     dim-filtered, TopN or aggregating, streams `ColumnarBatch`es,
+  *     one block in memory at a time;
+  *   - SUM/COUNT/AVG over float variables, grouped by dims under exact
+  *     dim filters, push down as a partial aggregate the reader folds
+  *     per block ([[PartialAgg]]); Spark keeps the final combine;
   *   - projection pushdown reaches storage: the reader reads only
   *     requested variables from the store (A8), and a COUNT(*)-style
   *     empty projection reads no variable data at all (A9/lib.rs:609-614);
@@ -98,6 +103,7 @@ class GridScanBuilder(store: GridStore, chunks: Map[String, Int],
   private var required: StructType = fullSchema
   private var metaAggs: Option[Seq[MetaAgg]] = None
   private var metaGroupBy: Seq[String] = Nil
+  private var partialAgg: Option[PartialAgg] = None
   private var limit: Int = -1
   private var topKeys: Seq[(String, Boolean)] = Nil
 
@@ -129,20 +135,16 @@ class GridScanBuilder(store: GridStore, chunks: Map[String, Int],
     * dims' surviving counts and extrema restrict to the group's own
     * coordinate. The reference only metadata-answers the unfiltered
     * global count (tests/test_stats.py:78-91). Data-variable aggregates
-    * are never pushed; neither are group sets larger than 2^20 rows
-    * (the answer would still be exact, but shipping millions of
-    * driver-built rows through one task loses to a scan).
+    * never push completely (see `toPartialAgg`); neither do group sets
+    * larger than 2^20 rows (the answer would still be exact, but
+    * shipping millions of driver-built rows through one task loses to
+    * a scan). A restricted table (`onlyBlocks`) never answers from
+    * metadata: its rows are a subset of the grid's.
     */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    val groups = agg.groupByExpressions().toSeq.map {
-      case nr: NamedReference if nr.fieldNames().length == 1 &&
-        groupDims.contains(nr.fieldNames()(0)) => Some(nr.fieldNames()(0))
-      case _ => None
-    }
-    pushed.forall(f =>
-      SeparableDimFilters.isSeparable(f, store.schema, groupDims)) &&
+    val groups = groupDimsOf(agg)
+    onlyBlocks.isEmpty && exactFiltersOnly &&
       groups.forall(_.isDefined) &&
       groups.flatten.map(d => store.schema.dim(d).size.toLong)
         .product <= (1L << 20) &&
@@ -171,16 +173,62 @@ class GridScanBuilder(store: GridStore, chunks: Map[String, Int],
     }
   }
 
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+  private def exactFiltersOnly: Boolean =
+    pushed.forall(f => SeparableDimFilters.isSeparable(f, store.schema, groupDims))
+
+  // per grouping expression: the dim it names, None for anything else
+  private def groupDimsOf(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+    : Seq[Option[String]] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
+    agg.groupByExpressions().toSeq.map {
+      case nr: NamedReference if nr.fieldNames().length == 1 &&
+        groupDims.contains(nr.fieldNames()(0)) => Some(nr.fieldNames()(0))
+      case _ => None
+    }
+  }
+
+  /** The partial form (Spark keeps the final aggregate): SUM, COUNT(var)
+    * and COUNT(*) over float/double variables — AVG arrives here already
+    * split into SUM and COUNT — grouped by dims, under exact dim filters
+    * only. Float sums accumulate in double like Spark's `Sum`; integer
+    * SUM (ANSI overflow), DISTINCT, MIN/MAX and expressions decline.
+    */
+  private def toPartialAgg(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+    : Option[PartialAgg] = {
+    import org.apache.spark.sql.connector.expressions.NamedReference
+    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Sum}
+    def floatVar(c: org.apache.spark.sql.connector.expressions.Expression)
+      : Option[String] = c match {
+      case nr: NamedReference if nr.fieldNames().length == 1 =>
+        groupVars.find(v => v.name == nr.fieldNames()(0) &&
+          (v.dtype == GDouble || v.dtype == GFloat)).map(_.name)
+      case _ => None
+    }
+    val fns = agg.aggregateExpressions().toSeq.map {
+      case s: Sum if !s.isDistinct => floatVar(s.column()).map(PartialSum)
+      case c: Count if !c.isDistinct => floatVar(c.column()).map(_ => PartialCount)
+      case _: CountStar => Some(PartialCount)
+      case _ => None
+    }
+    val groups = groupDimsOf(agg)
+    if (exactFiltersOnly && fns.nonEmpty && fns.forall(_.isDefined) &&
+      groups.forall(_.isDefined))
+      Some(PartialAgg(groups.flatten, fns.flatten))
+    else None
+  }
+
+  override def pushAggregation(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
     if (supportCompletePushDown(agg)) {
       metaAggs = Some(agg.aggregateExpressions().flatMap(toMetaAgg).toSeq)
-      metaGroupBy = agg.groupByExpressions().toSeq.map(
-        _.asInstanceOf[NamedReference].fieldNames()(0))
+      metaGroupBy = groupDimsOf(agg).flatten
       true
-    } else false
-  }
+    } else {
+      partialAgg = toPartialAgg(agg)
+      partialAgg.isDefined
+    }
 
   /** Advisory per-partition limit; Spark only pushes it when nothing but
     * projections sit between LIMIT and the scan, so residual filters
@@ -220,11 +268,11 @@ class GridScanBuilder(store: GridStore, chunks: Map[String, Int],
   }
 
   override def build(): Scan = metaAggs match {
-    case Some(aggs) if onlyBlocks.isEmpty =>
+    case Some(aggs) =>
       new MetaAggScan(store, chunks, groupDims, aggs, pushed, metaGroupBy)
-    case _ =>
+    case None =>
       new GridScan(store, chunks, groupDims, groupVars, required, pushed,
-        limit, topKeys, onlyBlocks)
+        limit, topKeys, onlyBlocks, partialAgg)
   }
 }
 
@@ -232,6 +280,26 @@ sealed trait MetaAgg extends Serializable
 case object MetaCountStar extends MetaAgg
 final case class MetaMinDim(dim: String) extends MetaAgg
 final case class MetaMaxDim(dim: String) extends MetaAgg
+
+/** A partial aggregate computed inside the grid scan: per block, one
+  * row per group of `groupBy` dims holding the group's coordinates and
+  * then one value per function — SUM as a double (NULL never occurs: a
+  * group exists only where it has cells), COUNT as a long.
+  */
+final case class PartialAgg(groupBy: Seq[String], fns: Seq[PartialFn]) {
+  def vars: Seq[String] = fns.collect { case PartialSum(v) => v }.distinct
+  override def toString: String =
+    fns.mkString("[", ",", "]") +
+      (if (groupBy.isEmpty) "" else groupBy.mkString(" groupBy=[", ",", "]"))
+}
+sealed trait PartialFn extends Serializable
+final case class PartialSum(v: String) extends PartialFn {
+  override def toString: String = s"SUM($v)"
+}
+// COUNT(var) and COUNT(*) alike: float variables hold no NULLs
+case object PartialCount extends PartialFn {
+  override def toString: String = "COUNT"
+}
 
 /** Complete metadata-aggregate pushdown: one partition, zero data
   * access. Without filters, COUNT(*) is the product of dim sizes and
@@ -365,25 +433,29 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
     groupDims: Seq[String], groupVars: Seq[VarDef],
     required: StructType, staticFilters: Array[Filter], limit: Int = -1,
     topKeys: Seq[(String, Boolean)] = Nil,
-    onlyBlocks: Option[Seq[Seq[(Int, Int)]]] = None)
+    onlyBlocks: Option[Seq[Seq[(Int, Int)]]] = None,
+    partialAgg: Option[PartialAgg] = None)
   extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
   /** Join-driven runtime pruning (the DSv2 analogue of dynamic partition
     * pruning): Spark hands over IN-sets of join keys collected from a
-    * completed broadcast side, and partition planning re-prunes with
-    * them — a grid×dim-table join reads only the chunks holding matching
-    * coordinates. Runtime filters prune BLOCKS only (never the cells
-    * within a surviving block), so the statistics and the shipped keep
-    * lists — both fixed before runtime filters exist — stay valid.
+    * completed broadcast side, and partition planning re-prunes and
+    * re-packs the blocks with them. Runtime filters prune BLOCKS only
+    * (never the cells within a surviving block), so the statistics and
+    * the shipped keep lists — both fixed before runtime filters exist —
+    * stay valid. Only non-float dims prune this way: Spark wraps a float
+    * join key in NaN/zero normalization, which translates to no source
+    * filter, so a join on lat/lon hands over nothing.
     */
   override def filterAttributes(): Array[
       org.apache.spark.sql.connector.expressions.NamedReference] =
+    // must be resolvable against the scan OUTPUT (the pruned columns, or
+    // a pushed aggregate's group dims); string dims included — runtime
+    // IN lists evaluate exactly and StrBounds zone-map prune in UTF-8
+    // binary order
     groupDims.filter(d =>
-      // must be resolvable against the scan OUTPUT (pruned columns);
-      // string dims included — runtime IN lists evaluate exactly and
-      // StrBounds zone-map prune in UTF-8 binary order
-      required.fieldNames.contains(d))
+      partialAgg.fold(required.fieldNames.contains(d))(_.groupBy.contains(d)))
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
       .toArray
 
@@ -405,20 +477,37 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
     * may carry runtime filters, which prune blocks but never the cells
     * within a surviving block.
     */
-  private def planned(ix: GridPlanIndex): IndexedSeq[Planned] =
+  private def planned(ix: GridPlanIndex): IndexedSeq[GridBlock] =
     ix.surviving.iterator
-      .map(i => Planned(planIndex.slices(i), planIndex.relKeep(i),
+      .map(i => GridBlock(planIndex.slices(i), planIndex.relKeep(i),
         planIndex.blockRows(i)))
-      .filter(p => whitelist.forall(_.contains(p.block)))
+      .filter(b => whitelist.forall(_.contains(b.slices)))
       .toIndexedSeq
 
   // static view: what's known at planning time (stats, explain);
   // runtime filters only prune further
-  private lazy val staticPlanned: IndexedSeq[Planned] = planned(planIndex)
+  private lazy val staticPlanned: IndexedSeq[GridBlock] = planned(planIndex)
+  private lazy val staticPacked: IndexedSeq[Seq[GridBlock]] = pack(staticPlanned)
 
   private lazy val anyDimFilter: Boolean = staticPlanned.exists(_.keep.nonEmpty)
 
-  override def readSchema(): StructType = required
+  // what each block reads: the projection, or the pushed aggregate's
+  // group dims and summed variables
+  private val readCols: Seq[String] =
+    partialAgg.fold(required.fieldNames.toSeq)(a => a.groupBy ++ a.vars)
+
+  // bytes per matching cell: the fixed width of what a block reads
+  private lazy val cellWidth: Long = math.max(8, readCols.map(widthOf).sum)
+
+  override def readSchema(): StructType = partialAgg.fold(required) { a =>
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
+    StructType(a.groupBy.map(d =>
+      StructField(d, store.schema.dim(d).coords.gridType.sparkType)) ++
+      a.fns.map {
+        case PartialSum(v) => StructField(s"sum($v)", DoubleType)
+        case PartialCount => StructField("count", LongType, nullable = false)
+      })
+  }
 
   override def toBatch: Batch = this
 
@@ -428,18 +517,51 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
   private lazy val storeBc =
     org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(store)
 
+  /** Blocks in plan order, cut into partitions by Spark's file-split
+    * rule (`FilePartition.maxSplitBytes`): the target is
+    * `min(filesMaxPartitionBytes, max(filesOpenCostInBytes, total /
+    * minPartitionNum))`, a block costs its matching cells times the
+    * cell width plus one open cost, and a partition closes before the
+    * block that would overflow it. Plan order is kept, so a partition's
+    * blocks stay in C-order and per-block TopN/limit still hold.
+    */
+  private def pack(blocks: IndexedSeq[GridBlock]): IndexedSeq[Seq[GridBlock]] = {
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = SQLConf.get
+    val open = conf.filesOpenCostInBytes
+    def bytes(b: GridBlock): Long = b.rows * cellWidth + open
+    val minParts = conf.filesMinPartitionNum
+      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(
+        org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+    val target = math.min(conf.filesMaxPartitionBytes,
+      math.max(open, blocks.iterator.map(bytes).sum / minParts))
+    val out = IndexedSeq.newBuilder[Seq[GridBlock]]
+    var cur = Vector.empty[GridBlock]
+    var size = 0L
+    blocks.foreach { b =>
+      if (cur.nonEmpty && size + bytes(b) > target) {
+        out += cur; cur = Vector.empty; size = 0L
+      }
+      cur :+= b
+      size += bytes(b)
+    }
+    if (cur.nonEmpty) out += cur
+    out.result()
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
     // runtime filters are arbitrary, so re-index with them included
-    // (O(total coords), cheap); both indexes share one chunk grid
-    val blocks =
-      if (runtimeFilters.isEmpty) staticPlanned
-      else planned(new GridPlanIndex(store, groupDims, chunks, groupVars,
-        filters.toSeq))
-    blocks.map(p =>
-      GridInputPartition(storeBc, groupDims, p.block, required.fieldNames,
-        limit,
+    // (O(total coords), cheap) and re-pack the survivors; both indexes
+    // share one chunk grid
+    val packed =
+      if (runtimeFilters.isEmpty) staticPacked
+      else pack(planned(new GridPlanIndex(store, groupDims, chunks, groupVars,
+        filters.toSeq)))
+    packed.map(bs =>
+      GridInputPartition(storeBc, groupDims, bs, readCols.toArray, limit,
         topKeys.map { case (d, desc) => (groupDims.indexOf(d), desc) },
-        p.keep): InputPartition).toArray
+        partialAgg): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -450,14 +572,21 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
 
   /** Exact statistics from chunk metadata (A9): row count = sum of block
     * products after pruning; bytes = rows x fixed width of the pruned
-    * schema. Feeds Catalyst's broadcast-join selection.
+    * schema. Under a pushed aggregate, the rows the scan emits: per
+    * block, the product of the grouped dims' surviving counts (one for a
+    * global aggregate). Feeds Catalyst's broadcast-join selection.
     */
   override def estimateStatistics(): Statistics = new Statistics {
     // exact even under dim filters: per block, the matching cell count
     // is the product of per-dim surviving list sizes
-    private val rows = staticPlanned.iterator.map(_.rows).sum
-    private val width = math.max(8,
-      required.fieldNames.map(widthOf).sum)
+    private val (rows, width) = partialAgg match {
+      case None => (staticPlanned.iterator.map(_.rows).sum, cellWidth)
+      case Some(a) =>
+        val gi = a.groupBy.map(groupDims.indexOf)
+        (staticPlanned.iterator
+          .map(b => gi.foldLeft(1L)((p, d) => p * b.len(d))).sum,
+          math.max(8L, a.groupBy.map(widthOf).sum + 8L * a.fns.size))
+    }
     override def sizeInBytes(): OptionalLong = OptionalLong.of(rows * width)
     override def numRows(): OptionalLong = OptionalLong.of(rows)
   }
@@ -476,24 +605,35 @@ class GridScan(store: GridStore, chunks: Map[String, Int],
     else " exactDimFilters=" + staticFilters.filter(f =>
       SeparableDimFilters.isSeparable(f, store.schema, groupDims))
       .mkString("[", ",", "]")
+    val pa = partialAgg.fold("")(a => s" pushedPartialAgg=$a")
     s"GridScan dims=[${groupDims.mkString(",")}] " +
-      s"partitions=${staticPlanned.size}/${planIndex.totalBlocks} cols=[${required.fieldNames.mkString(",")}]$tn$ef"
+      s"partitions=${staticPlanned.size}/${planIndex.totalBlocks} " +
+      s"tasks=${staticPacked.size} cols=[${readCols.mkString(",")}]$tn$ef$pa"
   }
 }
 
-/** One chunk block: slice offsets + a broadcast handle to the store
-  * (coordinate arrays ship once per executor, not once per task).
-  * Bounds/row counts are planning-time only and deliberately not
-  * shipped. `topKeys` are (dim index, descending) sort keys of a pushed
-  * partial TopN; `dimKeep` (when non-empty) holds per-dim surviving
-  * RELATIVE indices of exactly-pushed separable dim filters.
+/** One planned (surviving) chunk block: its (start, len) slices, the
+  * RELATIVE surviving indices of exactly-pushed dim filters (Nil = every
+  * dim full), and its exact matching-cell count.
+  */
+final case class GridBlock(slices: Seq[(Int, Int)], keep: Seq[Array[Int]],
+    rows: Long) {
+  /** Surviving index count along dim `d`. */
+  def len(d: Int): Int = if (keep.isEmpty) slices(d)._2 else keep(d).length
+}
+
+/** A run of surviving chunk blocks, in plan order, packed up to the
+  * scan's byte target, plus a broadcast handle to the store (coordinate
+  * arrays ship once per executor, not once per task). `topKeys` are
+  * (dim index, descending) sort keys of a pushed partial TopN; it and
+  * `limit` apply per block. `agg` is a pushed partial aggregate.
   */
 final case class GridInputPartition(
     storeBc: org.apache.spark.broadcast.Broadcast[GridStore],
     groupDims: Seq[String],
-    block: Seq[(Int, Int)], requiredCols: Array[String],
+    blocks: Seq[GridBlock], requiredCols: Array[String],
     limit: Int = -1, topKeys: Seq[(Int, Boolean)] = Nil,
-    dimKeep: Seq[Array[Int]] = Nil) extends InputPartition {
+    agg: Option[PartialAgg] = None) extends InputPartition {
   def store: GridStore = storeBc.value
 }
 
@@ -507,37 +647,26 @@ object GridReaderFactory extends PartitionReaderFactory {
     new GridColumnarReader(partition.asInstanceOf[GridInputPartition])
 }
 
-/** The one reader over a [[GridInputPartition]]: `ColumnarBatch`es of
-  * at most 65,536 rows (the reference's batch size, df.py:278-280).
-  *
-  * Cells come from one walk that yields runs of flat C-order offsets
-  * into the block. Each dim iterates over a RELATIVE index list: the
-  * surviving indices of exactly-pushed dim filters (all indices when
-  * none), sorted by coordinate for TopN sort-key dims. Sort-key dims
-  * are the outermost loops (priority order) and the rest stay in
-  * C-order, so a TopN partition emits its local top-N first and stops
-  * at `limit`. The trailing dims that are walked whole and in storage
-  * order fold into one contiguous run (a dense block is a single run);
-  * otherwise the innermost walked dim splits into runs of consecutive
-  * indices. Data variables bulk-copy each unit-step run out of the
-  * chunk's flat array, and coordinates fill from the flat offset by
-  * stride (flat f -> per-dim index (f / stride_k) % shape_k; reference
-  * df.py:241-250,331-336). Only the requested variables are read (A8),
-  * none at all for an empty projection (COUNT(*), A9).
+/** One block's matching cells as runs of flat C-order offsets into the
+  * block. Each dim iterates over a RELATIVE index list: the surviving
+  * indices of exactly-pushed dim filters (all indices when none), sorted
+  * by coordinate for TopN sort-key dims. Sort-key dims are the outermost
+  * loops (priority order) and the rest stay in C-order, so a TopN walk
+  * yields its local top-N first and stops at `limit`. The trailing dims
+  * that are walked whole and in storage order fold into one contiguous
+  * run (a dense block is a single run); otherwise the innermost walked
+  * dim splits into runs of consecutive indices. Without sort keys every
+  * run is contiguous (`step` 1).
   */
-class GridColumnarReader(part: GridInputPartition)
-  extends PartitionReader[ColumnarBatch] {
+private[sources] final class BlockWalk(schema: GridSchema,
+    groupDims: Seq[String], block: GridBlock,
+    topKeys: Seq[(Int, Boolean)], limit: Int) {
 
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-
-  ReadCounters.partitionsOpened.increment()
-
-  private val schema = part.store.schema
-  private val shape: Array[Int] = part.block.map(_._2).toArray
-  private val starts: Array[Int] = part.block.map(_._1).toArray
+  val shape: Array[Int] = block.slices.map(_._2).toArray
+  val starts: Array[Int] = block.slices.map(_._1).toArray
   private val nd = shape.length
   // C-order strides over the block shape (last dim fastest)
-  private val strides: Array[Long] = {
+  val strides: Array[Long] = {
     val s = new Array[Long](nd)
     var acc = 1L
     var k = nd - 1
@@ -545,43 +674,22 @@ class GridColumnarReader(part: GridInputPartition)
     s
   }
 
-  private sealed trait ColSrc
-  private case class DimCol(dimIdx: Int, coords: CoordArray) extends ColSrc
-  // natNull: time/duration variables surface the NaT sentinel
-  // (Long.MinValue) as SQL NULL; for plain long variables the same bit
-  // pattern is a legitimate value and copies through untouched
-  private case class VarCol(data: AnyRef, natNull: Boolean) extends ColSrc
-
-  private val cols: Array[(ColSrc, org.apache.spark.sql.types.DataType)] =
-    part.requiredCols.map { c =>
-      val di = part.groupDims.indexOf(c)
-      if (di >= 0) {
-        val coords = schema.dim(c).coords
-        (DimCol(di, coords), coords.gridType.sparkType)
-      } else {
-        ReadCounters.recordVarRead(c)
-        val v = schema.vars.find(_.name == c).get
-        (VarCol(part.store.readVar(c, part.block),
-          v.dtype == GTimestamp || v.dtype == GDuration), v.dtype.sparkType)
-      }
-    }
-
-  // --- the walk: sort-key dims first, then the rest in C-order ---------
+  // --- sort-key dims first, then the rest in C-order -------------------
   private val order: Array[Int] = {
-    val keys = part.topKeys.map(_._1)
+    val keys = topKeys.map(_._1)
     (keys ++ (0 until nd).filterNot(keys.contains)).toArray
   }
   private val lists: Array[Array[Int]] = order.map { d =>
     val base =
-      if (part.dimKeep.isEmpty) Array.range(0, shape(d)) else part.dimKeep(d)
-    part.topKeys.find(_._1 == d).fold(base)(k => sortedByCoord(d, base, k._2))
+      if (block.keep.isEmpty) Array.range(0, shape(d)) else block.keep(d)
+    topKeys.find(_._1 == d).fold(base)(k => sortedByCoord(d, base, k._2))
   }
 
   private def sortedByCoord(d: Int, base: Array[Int], desc: Boolean): Array[Int] = {
     val st = starts(d)
     def sorted[T](v: Array[T])(implicit ord: Ordering[T]): Array[Int] =
       base.sortBy(j => v(st + j))(if (desc) ord.reverse else ord)
-    schema.dim(part.groupDims(d)).coords match {
+    schema.dim(groupDims(d)).coords match {
       case DoubleCoords(v) => sorted(v)
       case FloatCoords(v) => sorted(v)
       case IntCoords(v) => sorted(v)
@@ -612,7 +720,7 @@ class GridColumnarReader(part: GridInputPartition)
   private val outer = if (split) nd - 1 else nd - folded
   // inner runs, relative to the outer position: flat start and length;
   // consecutive cells of a run are `step` apart
-  private val (runStart, runLen, step): (Array[Long], Array[Int], Long) =
+  private val (runStart, runLen, stepLen): (Array[Long], Array[Int], Long) =
     if (!split)
       (Array(0L), Array((nd - folded until nd).foldLeft(1)(_ * shape(_))), 1L)
     else {
@@ -622,17 +730,18 @@ class GridColumnarReader(part: GridInputPartition)
       (cuts.map(l(_) * st).toArray,
         (cuts :+ l.length).sliding(2).map(p => p(1) - p(0)).toArray, st)
     }
+  def step: Long = stepLen
 
   private val total: Long = {
     val cells = lists.take(outer).foldLeft(runLen.sum.toLong)(_ * _.length)
-    if (part.limit >= 0) math.min(cells, part.limit.toLong) else cells
+    if (limit >= 0) math.min(cells, limit.toLong) else cells
   }
 
   private val counter = new Array[Int](outer) // odometer over outer dims
   private var base = outerBase()
   private var run = 0
-  private var pos = 0 // cells of `run` already emitted
-  private var emitted = 0L
+  private var pos = 0 // cells of `run` already walked
+  private var walked = 0L
 
   private def outerBase(): Long = {
     var f = 0L
@@ -652,68 +761,170 @@ class GridColumnarReader(part: GridInputPartition)
     base = outerBase()
   }
 
-  // sized to the partition: a 3-row TopN partition needs 3-row vectors
-  private val batchRows = math.min(65536L, total).toInt
-  private val vectors: Array[OnHeapColumnVector] =
-    cols.map { case (_, dt) => new OnHeapColumnVector(batchRows, dt) }
-  private var batch: ColumnarBatch = _
+  /** Flat offset of the first cell of the run [[next]] returned last. */
+  var start: Long = 0L
 
-  override def next(): Boolean = {
-    if (emitted >= total) return false
-    val m = math.min(batchRows.toLong, total - emitted).toInt
-    vectors.foreach(_.reset())
-    var row = 0
-    while (row < m) {
-      val len = math.min(runLen(run) - pos, m - row)
-      fill(row, base + runStart(run) + pos * step, len)
-      row += len
-      pos += len
-      if (pos == runLen(run)) {
-        pos = 0
-        run += 1
-        if (run == runLen.length) { run = 0; advanceOuter() }
+  /** The next run of at most `max` cells, `step` apart from `start`;
+    * 0 once the walk is done.
+    */
+  def next(max: Int): Int = {
+    if (walked >= total) return 0
+    val len = math.min(math.min(runLen(run) - pos, max).toLong,
+      total - walked).toInt
+    start = base + runStart(run) + pos * stepLen
+    pos += len
+    walked += len
+    if (pos == runLen(run)) {
+      pos = 0
+      run += 1
+      if (run == runLen.length) { run = 0; advanceOuter() }
+    }
+    len
+  }
+}
+
+/** The one reader over a [[GridInputPartition]]: it opens the
+  * partition's blocks one at a time, walks each with a [[BlockWalk]]
+  * and streams `ColumnarBatch`es of at most 65,536 rows (the
+  * reference's batch size, df.py:280).
+  *
+  * Cell rows: data variables bulk-copy each unit-step run out of the
+  * chunk's flat array, and coordinates fill from the flat offset by
+  * stride (flat f -> per-dim index (f / stride_k) % shape_k; reference
+  * df.py:241-250,331-336). Only the requested variables are read (A8),
+  * none at all for an empty projection (COUNT(*), A9).
+  *
+  * Under a pushed [[PartialAgg]] the same runs feed per-block
+  * accumulators instead: a group is a combination of the grouped dims'
+  * surviving indices, its slot their C-order rank, so no hashing; each
+  * run splits where a grouped index changes (multiples of the smallest
+  * grouped stride), and each group sums its cells in walk order, the
+  * order Spark's `Sum` would add them. A block then emits one row per
+  * group (every group of a dense block has cells).
+  */
+class GridColumnarReader(part: GridInputPartition)
+  extends PartitionReader[ColumnarBatch] {
+
+  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+  import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+
+  private val schema = part.store.schema
+
+  private sealed trait ColSrc
+  private case class DimCol(dimIdx: Int, coords: CoordArray) extends ColSrc
+  // natNull: time/duration variables surface the NaT sentinel
+  // (Long.MinValue) as SQL NULL; for plain long variables the same bit
+  // pattern is a legitimate value and copies through untouched. `k`
+  // indexes the open block's variable arrays.
+  private case class VarCol(k: Int, natNull: Boolean) extends ColSrc
+
+  private def dimCol(d: String): (ColSrc, DataType) = {
+    val coords = schema.dim(d).coords
+    (DimCol(part.groupDims.indexOf(d), coords), coords.gridType.sparkType)
+  }
+
+  // the variables each block reads (a pushed aggregate's summed ones)
+  private val vars: Array[String] =
+    part.requiredCols.filterNot(part.groupDims.contains)
+  // cell rows: the projection; pushed aggregate: the group dims
+  private val cols: Array[(ColSrc, DataType)] = part.agg match {
+    case Some(a) => a.groupBy.map(dimCol).toArray
+    case None => part.requiredCols.map { c =>
+      if (part.groupDims.contains(c)) dimCol(c)
+      else {
+        val v = schema.vars.find(_.name == c).get
+        (VarCol(vars.indexOf(c), v.dtype == GTimestamp || v.dtype == GDuration),
+          v.dtype.sparkType)
       }
     }
-    emitted += m
-    ReadCounters.rowsEmitted.add(m)
-    batch = new ColumnarBatch(vectors.map(v =>
-      v: org.apache.spark.sql.vectorized.ColumnVector), m)
-    true
+  }
+  private val types: Array[DataType] = cols.map(_._2) ++
+    part.agg.toSeq.flatMap(_.fns.map {
+      case PartialSum(_) => DoubleType
+      case PartialCount => LongType
+    })
+
+  // sized to the partition: a 3-row TopN partition needs 3-row vectors
+  private val batchRows: Int = math.min(65536L, part.agg match {
+    case Some(a) =>
+      val gi = a.groupBy.map(part.groupDims.indexOf)
+      part.blocks.map(b => gi.foldLeft(1L)((p, d) => p * b.len(d)))
+        .foldLeft(1L)(math.max)
+    case None => part.blocks.map(b =>
+      if (part.limit >= 0) math.min(b.rows, part.limit.toLong) else b.rows).sum
+  }).toInt
+  private val vectors: Array[OnHeapColumnVector] =
+    types.map(new OnHeapColumnVector(batchRows, _))
+  private var batch: ColumnarBatch = _
+
+  // --- one open block at a time ----------------------------------------
+  private val pending = part.blocks.iterator
+  private var block: GridBlock = _
+  private var walk: BlockWalk = _
+  private var data: Array[AnyRef] = _ // the open block's variables
+
+  /** Opens the next block and reads its variables; false when none is
+    * left. The previous block's arrays are dropped first.
+    */
+  private def open(): Boolean = {
+    walk = null
+    data = null
+    pending.hasNext && {
+      block = pending.next()
+      ReadCounters.partitionsOpened.increment()
+      walk = new BlockWalk(schema, part.groupDims, block, part.topKeys,
+        part.limit)
+      data = vars.map { v =>
+        ReadCounters.recordVarRead(v)
+        part.store.readVar(v, block.slices)
+      }.toArray
+      true
+    }
+  }
+
+  override def next(): Boolean = {
+    vectors.foreach(_.reset())
+    val m = part.agg.fold(nextCells())(nextGroups)
+    m > 0 && {
+      ReadCounters.rowsEmitted.add(m)
+      batch = new ColumnarBatch(vectors.map(v =>
+        v: org.apache.spark.sql.vectorized.ColumnVector), m)
+      true
+    }
+  }
+
+  private def nextCells(): Int = {
+    var m = 0
+    while (m < batchRows && (walk != null || open())) {
+      val len = walk.next(batchRows - m)
+      if (len == 0) walk = null
+      else { fill(m, walk.start, len); m += len }
+    }
+    m
   }
 
   /** Rows `row until row + len` <- the cells at flat offsets
-    * `start + r * step` (block row counts are bounded by chunk sizing).
+    * `start + r * step` of the open block (block row counts are bounded
+    * by chunk sizing).
     */
   private def fill(row: Int, start: Long, len: Int): Unit = {
+    val step = walk.step
     def flat(r: Int): Int = (start + r * step).toInt
     var c = 0
     while (c < cols.length) {
       val vec = vectors(c)
       cols(c)._1 match {
         case DimCol(d, coords) =>
-          val stride = strides(d)
-          val size = shape(d)
-          val st = starts(d)
-          def at(r: Int): Int = st + (((start + r * step) / stride) % size).toInt
-          var r = 0
-          coords match {
-            case DoubleCoords(v) => while (r < len) { vec.putDouble(row + r, v(at(r))); r += 1 }
-            case FloatCoords(v) => while (r < len) { vec.putFloat(row + r, v(at(r))); r += 1 }
-            case IntCoords(v) => while (r < len) { vec.putInt(row + r, v(at(r))); r += 1 }
-            case LongCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
-            case TimeCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
-            case DurationCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
-            case StringCoords(v) =>
-              while (r < len) {
-                val b = v(at(r)).getBytes("UTF-8")
-                vec.putByteArray(row + r, b, 0, b.length); r += 1
-              }
-          }
-        case VarCol(data, natNull) =>
+          val stride = walk.strides(d)
+          val size = walk.shape(d)
+          val st = walk.starts(d)
+          putCoords(vec, row, len, coords,
+            r => st + (((start + r * step) / stride) % size).toInt)
+        case VarCol(k, natNull) =>
           val bulk = step == 1L
           val off = start.toInt
           var r = 0
-          data match {
+          data(k) match {
             case a: Array[Double] =>
               if (bulk) vec.putDoubles(row, len, a, off)
               else while (r < len) { vec.putDouble(row + r, a(flat(r))); r += 1 }
@@ -746,15 +957,138 @@ class GridColumnarReader(part: GridInputPartition)
     }
   }
 
+  /** Rows `row until row + len` <- the coordinates at indices `at(r)`. */
+  private def putCoords(vec: OnHeapColumnVector, row: Int, len: Int,
+      coords: CoordArray, at: Int => Int): Unit = {
+    var r = 0
+    coords match {
+      case DoubleCoords(v) => while (r < len) { vec.putDouble(row + r, v(at(r))); r += 1 }
+      case FloatCoords(v) => while (r < len) { vec.putFloat(row + r, v(at(r))); r += 1 }
+      case IntCoords(v) => while (r < len) { vec.putInt(row + r, v(at(r))); r += 1 }
+      case LongCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
+      case TimeCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
+      case DurationCoords(v) => while (r < len) { vec.putLong(row + r, v(at(r))); r += 1 }
+      case StringCoords(v) =>
+        while (r < len) {
+          val b = v(at(r)).getBytes("UTF-8")
+          vec.putByteArray(row + r, b, 0, b.length); r += 1
+        }
+    }
+  }
+
+  // --- pushed partial aggregate ----------------------------------------
+  private var groups: Groups = _ // the open block's groups, being emitted
+  private var slot = 0 // next group of `groups` to emit
+
+  /** One block's groups: C-order slots over the grouped dims' surviving
+    * indices, each with its cell count and per-variable sums.
+    */
+  private final class Groups(a: PartialAgg) {
+    private val gi: Array[Int] = a.groupBy.map(part.groupDims.indexOf).toArray
+    private val keep: Array[Array[Int]] = gi.map(d =>
+      if (block.keep.isEmpty) Array.range(0, walk.shape(d)) else block.keep(d))
+    private val coords: Array[CoordArray] =
+      a.groupBy.map(schema.dim(_).coords).toArray
+    private val n: Array[Int] = keep.map(_.length)
+    val slots: Int = n.product
+    // slot of group (p_0, .., p_k) = sum of p_j * mult(j)
+    private val mult: Array[Int] = n.indices.map(j => n.drop(j + 1).product).toArray
+    // per grouped dim: relative index -> position in its keep list
+    private val rank: Array[Array[Int]] = gi.indices.map { j =>
+      val r = new Array[Int](walk.shape(gi(j)))
+      keep(j).indices.foreach(p => r(keep(j)(p)) = p)
+      r
+    }.toArray
+    // grouped indices change only at multiples of the smallest grouped
+    // stride (every larger stride is a multiple of it)
+    private val seg: Long =
+      if (gi.isEmpty) Long.MaxValue else gi.map(walk.strides).min
+    private val counts = new Array[Long](slots)
+    val sums: Array[Array[Double]] = Array.fill(data.length)(new Array[Double](slots))
+    private val doubles = data.map { case x: Array[Double] => x; case _ => null }
+    private val floats = data.map { case x: Array[Float] => x; case _ => null }
+    // per function: the sums it reads, or -1 for a count
+    private val sumOf: Array[Int] = a.fns.map {
+      case PartialSum(v) => vars.indexOf(v)
+      case PartialCount => -1
+    }.toArray
+
+    private def slotOf(f: Long): Int = {
+      var s = 0
+      var j = 0
+      while (j < gi.length) {
+        s += rank(j)(((f / walk.strides(gi(j))) % walk.shape(gi(j))).toInt) * mult(j)
+        j += 1
+      }
+      s
+    }
+
+    /** Adds the contiguous cells `start until start + len`. */
+    def add(start: Long, len: Int): Unit = {
+      val end = start + len
+      var f = start
+      while (f < end) {
+        val e = math.min(end, (f / seg + 1) * seg)
+        val s = slotOf(f)
+        counts(s) += e - f
+        var v = 0
+        while (v < sums.length) {
+          var acc = sums(v)(s)
+          var i = f.toInt
+          val d = doubles(v)
+          if (d != null) while (i < e) { acc += d(i); i += 1 }
+          else {
+            val x = floats(v)
+            while (i < e) { acc += x(i).toDouble; i += 1 }
+          }
+          sums(v)(s) = acc
+          v += 1
+        }
+        f = e
+      }
+    }
+
+    /** Row `row` <- group `s`: its coordinates, then the aggregates. */
+    def emit(row: Int, s: Int): Unit = {
+      var j = 0
+      while (j < gi.length) {
+        val abs = walk.starts(gi(j)) + keep(j)((s / mult(j)) % n(j))
+        putCoords(vectors(j), row, 1, coords(j), _ => abs)
+        j += 1
+      }
+      var k = 0
+      while (k < sumOf.length) {
+        val vec = vectors(gi.length + k)
+        if (sumOf(k) >= 0) vec.putDouble(row, sums(sumOf(k))(s))
+        else vec.putLong(row, counts(s))
+        k += 1
+      }
+    }
+  }
+
+  /** Accumulates the next block whole; false when none is left. */
+  private def accumulate(a: PartialAgg): Boolean = open() && {
+    require(walk.step == 1L, "an aggregating walk has no sort keys")
+    groups = new Groups(a)
+    var len = walk.next(Int.MaxValue)
+    while (len > 0) { groups.add(walk.start, len); len = walk.next(Int.MaxValue) }
+    data = null
+    slot = 0
+    true
+  }
+
+  private def nextGroups(a: PartialAgg): Int = {
+    var m = 0
+    while (m < batchRows && (groups != null || accumulate(a))) {
+      while (m < batchRows && slot < groups.slots) {
+        groups.emit(m, slot); m += 1; slot += 1
+      }
+      if (slot == groups.slots) groups = null
+    }
+    m
+  }
+
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = vectors.foreach(_.close())
 }
-
-/** One planned (surviving) block of a grid scan: slices, shipped
-  * RELATIVE surviving indices (Nil = every dim full), and its exact
-  * matching-cell count. Top-level (not nested in the scan) so the
-  * synthesized equality carries no outer-instance type test.
-  */
-private[sources] final case class Planned(block: Seq[(Int, Int)],
-    keep: Seq[Array[Int]], rows: Long)

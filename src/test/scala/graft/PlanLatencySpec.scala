@@ -31,7 +31,10 @@ class PlanLatencySpec extends SparkTestBase {
     val plan = df.queryExecution.executedPlan
     val parts = plan.collectFirst {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.size.toLong
+        // blocks, not tasks: the scan packs many blocks per partition
+        b.inputPartitions.map {
+          case g: graft.sources.GridInputPartition => g.blocks.size.toLong
+        }.sum
     }.getOrElse(sys.error("no BatchScanExec in plan"))
     (parts, (System.nanoTime() - t0) / 1e6)
   }
@@ -49,12 +52,12 @@ class PlanLatencySpec extends SparkTestBase {
       java.time.Instant.ofEpochSecond(18262L * 86400L))
     val sel = df.filter(col("time") === ts && col("lat") >= 0.0)
     val (selParts, selMs) = planMillis(sel)
-    info(f"selective planning over 1e5 chunks: $selMs%.0f ms, $selParts partitions")
+    info(f"selective planning over 1e5 chunks: $selMs%.0f ms, $selParts blocks")
     assert(selParts == 50L)
 
     // unfiltered: all 1e5 partitions enumerated
     val (allParts, allMs) = planMillis(df.select("temperature"))
-    info(f"full planning over 1e5 chunks: $allMs%.0f ms, $allParts partitions")
+    info(f"full planning over 1e5 chunks: $allMs%.0f ms, $allParts blocks")
     assert(allParts == 100000L)
 
     // hard budgets (driver-side, per query; local[4] CI machine —
@@ -97,7 +100,7 @@ class PlanLatencySpec extends SparkTestBase {
       java.time.Instant.ofEpochSecond(18262L * 86400L))
     val sel = df.filter(col("time") === ts && col("lat") >= 0.0)
     val (selParts, selMs) = planMillis(sel)
-    info(f"selective planning over 1e6 chunks: $selMs%.0f ms, $selParts partitions")
+    info(f"selective planning over 1e6 chunks: $selMs%.0f ms, $selParts blocks")
     assert(selParts == 50L)
     assert(selMs < 1500.0, f"selective planning too slow: $selMs%.0f ms")
   }

@@ -1,5 +1,6 @@
 package graft.grid
 
+import graft.TempDirs
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the byte-shuffle filter, and the end-to-end ZarrGridStore blosc
   * write/open path.
   */
-class BloscSpec extends AnyFunSuite {
+class BloscSpec extends AnyFunSuite with TempDirs {
 
   private def doubles(n: Int): Array[Byte] = {
     val bb = ByteBuffer.allocate(n * 8).order(ByteOrder.LITTLE_ENDIAN)
@@ -191,8 +192,7 @@ class BloscSpec extends AnyFunSuite {
   }
 
   test("ZarrGridStore writes and reopens a blosc tree") {
-    val root = Files.createTempDirectory("zarr_blosc")
-    root.toFile.deleteOnExit()
+    val root = tempDir("zarr_blosc")
     val path = root.resolve("store").toString
     val store = ZarrGridStore.write(Fixtures.linearGrid, path,
       Map("t" -> 6, "lat" -> 5), "blosc")

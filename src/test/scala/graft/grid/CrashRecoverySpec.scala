@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.{SparkTestBase, XarrayContext}
+import graft.{SparkTestBase, TempDirs, XarrayContext}
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -27,7 +27,7 @@ import scala.util.Random
   * retry wrote. (A crash INSIDE one backed-up replace is pinned by
   * ZarrUnalignedAppendSpec.)
   */
-class CrashRecoverySpec extends SparkTestBase {
+class CrashRecoverySpec extends SparkTestBase with TempDirs {
 
   private val trials = 8
 
@@ -54,8 +54,7 @@ class CrashRecoverySpec extends SparkTestBase {
       val axisChunk = Seq(6, 4)(trial % 2)
       val cut = Seq(12, 9)(trial / 2 % 2)
       val comp = Seq("zstd", "none")(trial / 4)
-      val base = Files.createTempDirectory(s"crash_$trial")
-      base.toFile.deleteOnExit()
+      val base = tempDir(s"crash_$trial")
       val root = base.resolve("store").toString
       def rows(lo: Int, hi: Int) = ctx.dataFrame(
         s"crash$trial@$root/$lo", Fixtures.linearGridSlice(lo, hi),

@@ -1,11 +1,9 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.V3
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
-
-import java.nio.file.Files
 
 /** Layout-heterogeneous concatenation: one concat view over a blosc
   * Zarr v2 tree and a SHARDED Zarr v3 tree — the GridStore trait is the
@@ -13,11 +11,10 @@ import java.nio.file.Files
   * chunk grid and zone maps regardless of on-disk layout. A real fleet
   * migrates layouts over time; the view must not care.
   */
-class MixedConcatSpec extends SparkTestBase {
+class MixedConcatSpec extends SparkTestBase with TempDirs {
 
   test("zarr v2 + sharded v3 members concat and prune per member") {
-    val base = Files.createTempDirectory("mixed_concat")
-    base.toFile.deleteOnExit()
+    val base = tempDir("mixed_concat")
     // two t-slabs of the same 24x12x10 linear grid, two layouts
     val m1 = ZarrGridStore.write(Fixtures.linearGridSlice(0, 16),
       base.resolve("z2").toString, Map("t" -> 4), "blosc")

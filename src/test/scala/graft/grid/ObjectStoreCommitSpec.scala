@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.V3
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.functions._
@@ -17,13 +17,9 @@ import java.nio.file.{Files, Path => JPath}
   * scheme, so the detection and the protocol under test are the
   * production code paths end to end.
   */
-class ObjectStoreCommitSpec extends SparkTestBase {
+class ObjectStoreCommitSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): JPath = {
-    val p = Files.createTempDirectory("mock_s3")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): JPath = tempDir("mock_s3")
 
   private def withMockS3[T](body: => T): T = {
     val hc = spark.sparkContext.hadoopConfiguration

@@ -1,5 +1,6 @@
 package graft.grid
 
+import graft.TempDirs
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +16,7 @@ import java.nio.file.Files
   * shard packing is a pure function of the entry set, so the identity
   * must hold shard file for shard file.
   */
-class StatsSidecarPropertySpec extends AnyFunSuite {
+class StatsSidecarPropertySpec extends AnyFunSuite with TempDirs {
 
   private val conf = new org.apache.hadoop.conf.Configuration()
 
@@ -33,8 +34,7 @@ class StatsSidecarPropertySpec extends AnyFunSuite {
   }
 
   private def freshRoot(): String = {
-    val p = Files.createTempDirectory("stats_prop")
-    p.toFile.deleteOnExit()
+    val p = tempDir("stats_prop")
     p.toString
   }
 

@@ -1,5 +1,6 @@
 package graft.grid
 
+import graft.TempDirs
 import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,13 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * instead of a listing walk, identical results to the unconsolidated
   * open, and the writer/retrofit that produces it.
   */
-class ZarrConsolidatedSpec extends AnyFunSuite {
+class ZarrConsolidatedSpec extends AnyFunSuite with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_consol")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_consol")
 
   private def freshTree(): String = {
     val root = tmp().resolve("store").toString

@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
 
@@ -12,13 +12,9 @@ import java.nio.file.{Files, Path, Paths}
   * endiannesses), CF time decode, and the end-to-end registration with
   * chunk-open pruning pins.
   */
-class ZarrGridStoreSpec extends SparkTestBase {
+class ZarrGridStoreSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_spec")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_spec")
 
   private def put(root: Path, rel: String, content: String): Unit = {
     val p = root.resolve(rel)

@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.V3
 import org.apache.spark.sql.functions._
 
@@ -13,13 +13,9 @@ import java.nio.file.{Files, Path}
   * otherwise fails with the subgroup names instead of a blind
   * "nested groups unsupported".
   */
-class ZarrNestedGroupSpec extends SparkTestBase {
+class ZarrNestedGroupSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_nested")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_nested")
 
   private def subDf(base: Double) = {
     import spark.implicits._

@@ -1,5 +1,6 @@
 package graft.grid
 
+import graft.TempDirs
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,13 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * archives use for scaled variables (int16 + scale_factor/add_offset +
   * _FillValue), which the reference reads via xarray's decode_cf.
   */
-class ZarrPackedSpec extends AnyFunSuite {
+class ZarrPackedSpec extends AnyFunSuite with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_packed")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_packed")
 
   private def put(root: Path, rel: String, content: String): Unit = {
     val p = root.resolve(rel)

@@ -1,12 +1,12 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.V3
 import org.apache.spark.sql.functions._
 
 import java.nio.ByteBuffer
 import java.nio.ByteOrder
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 /** 0-d (SCALAR) zarr arrays — xarray scalar variables, most famously
   * rioxarray's `spatial_ref` CRS variable that sits in practically
@@ -16,13 +16,9 @@ import java.nio.file.{Files, Path}
   * tests/test_sql.py:434-456). Before this, any tree containing one
   * failed to open at all.
   */
-class ZarrScalarVarSpec extends SparkTestBase {
+class ZarrScalarVarSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_scalar")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_scalar")
 
   private val conf = GridIO.driverConf()
 

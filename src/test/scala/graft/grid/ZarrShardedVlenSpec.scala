@@ -1,11 +1,11 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.V3
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 /** Sharded v3 vlen-utf8 string arrays (write + read), the row-scatter
   * string path (the sink's vlen branches, plain and sharded, live from
@@ -13,13 +13,9 @@ import java.nio.file.{Files, Path}
   * inner-chunk index entries of one shard merge into a single range
   * GET.
   */
-class ZarrShardedVlenSpec extends SparkTestBase {
+class ZarrShardedVlenSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_shvlen")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_shvlen")
 
   test("sharded v3 string array round-trips store-to-store") {
     val root = tmp().resolve("st").toString

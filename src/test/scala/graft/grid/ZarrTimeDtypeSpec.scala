@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
 
@@ -13,13 +13,9 @@ import java.nio.file.{Files, Path}
   * zarr-python emits for numpy arrays without CF encoding (reference
   * xarray_sql/df.py:395, tests/test_cft.py:165-170).
   */
-class ZarrTimeDtypeSpec extends SparkTestBase {
+class ZarrTimeDtypeSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_m8")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_m8")
 
   private val conf = GridIO.driverConf()
 

@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.V3
 import org.apache.spark.sql.functions._
 
@@ -14,13 +14,9 @@ import java.nio.file.{Files, Path}
   * Before this, time vars degraded to plain int64 on write (timestamps
   * came back as raw micros longs).
   */
-class ZarrTimeVarWriteSpec extends SparkTestBase {
+class ZarrTimeVarWriteSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_m8w")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_m8w")
 
   private val epoch = 1609459200L // 2021-01-01 UTC, seconds
 

@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.TreeBytes.assertTreesEqual
 import graft.grid.ZarrLayout.V3
 import org.apache.spark.sql.functions._
@@ -16,13 +16,9 @@ import scala.jdk.CollectionConverters._
   * write of the same data: the strongest equivalence the format allows
   * (metadata, coordinate arrays, every chunk payload).
   */
-class ZarrUnalignedAppendSpec extends SparkTestBase {
+class ZarrUnalignedAppendSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_unaligned")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_unaligned")
 
   private def gridDf = new graft.XarrayContext(spark).dataFrame(
     "ua_grid", Fixtures.linearGrid, Map("t" -> 6), Seq("t", "lat", "lon"))

@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.V3
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
@@ -14,13 +14,9 @@ import java.nio.file.{Files, Path}
   * pruning through the registered scan, and clear rejections (sharding,
   * unknown codecs).
   */
-class ZarrV3Spec extends SparkTestBase {
+class ZarrV3Spec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_v3")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_v3")
 
   private def put(root: Path, rel: String, content: String): Unit = {
     val p = root.resolve(rel)

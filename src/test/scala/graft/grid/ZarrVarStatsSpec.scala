@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.V3
 import graft.XarrayContext
 import graft.sources.ReadCounters
@@ -14,13 +14,9 @@ import java.nio.file.{Files, Path, Paths}
   * data-variable zone maps and metadata SUM/AVG now work on the
   * reference's PRIMARY format, not just the engine's own binary one.
   */
-class ZarrVarStatsSpec extends SparkTestBase {
+class ZarrVarStatsSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_vstats")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_vstats")
 
   test("v2 + v3 writes record stats; scan prunes on a var predicate") {
     for ((root, store) <- Seq(

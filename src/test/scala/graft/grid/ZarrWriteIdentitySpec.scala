@@ -1,10 +1,8 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.TreeBytes.assertTreesEqual
 import graft.grid.ZarrLayout.{V2, V3}
-
-import java.nio.file.Files
 
 /** The one Zarr writer, cell by cell: for every layout (v2, v3, v3
   * sharded) each write operation — the driver loop, the executor-side
@@ -12,7 +10,7 @@ import java.nio.file.Files
   * byte-identical to the driver write of the same layout, every file
   * included (metadata, chunks or shards, `.graft-stats.json`).
   */
-class ZarrWriteIdentitySpec extends SparkTestBase {
+class ZarrWriteIdentitySpec extends SparkTestBase with TempDirs {
 
   private val chunks = Map("t" -> 6, "lat" -> 5)
 
@@ -34,8 +32,7 @@ class ZarrWriteIdentitySpec extends SparkTestBase {
   for ((name, layout, comp) <- layouts; (op, run) <- ops)
     test(s"$name $op: tree is byte-identical to the driver write") {
       assert(spark.sparkContext.defaultParallelism >= 1) // session up
-      val dir = Files.createTempDirectory("zarr_identity")
-      dir.toFile.deleteOnExit()
+      val dir = tempDir("zarr_identity")
       val driver = dir.resolve("driver").toString
       val got = dir.resolve(op).toString
       ZarrGridStore.write(Fixtures.linearGrid, driver, chunks, comp, layout)

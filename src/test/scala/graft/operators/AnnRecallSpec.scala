@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 import scala.util.Random
 
@@ -12,7 +12,7 @@ import scala.util.Random
   * the candidate set only grows (fewer than k items beat it globally,
   * so fewer than k beat it in any candidate subset).
   */
-class AnnRecallSpec extends SparkTestBase {
+class AnnRecallSpec extends SparkTestBase with TempDirs {
 
   private val n = 400
   private val dim = 32
@@ -88,8 +88,7 @@ class AnnRecallSpec extends SparkTestBase {
     }
     val all = vectors ++ drift
     val dir = {
-      val p = java.nio.file.Files.createTempDirectory("ann_drift")
-      p.toFile.deleteOnExit()
+      val p = tempDir("ann_drift")
       s"$p/idx"
     }
     SimilarityOps.buildIvfIndex(vectors.toDF("id", "v"), "id", "v",
@@ -134,8 +133,7 @@ class AnnRecallSpec extends SparkTestBase {
       (i.toLong, v)
     }
     val dir = {
-      val p = java.nio.file.Files.createTempDirectory("ann_split_recall")
-      p.toFile.deleteOnExit()
+      val p = tempDir("ann_split_recall")
       s"$p/idx"
     }
     SimilarityOps.buildIvfIndex(skew.toDF("id", "v"), "id", "v",

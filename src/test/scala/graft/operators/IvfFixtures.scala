@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 
 import java.nio.file.{Files, Paths}
@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * vectors, temporary index dirs, byte snapshots, and the reconstructed
   * crash window of a hot-cell split.
   */
-trait IvfFixtures { self: SparkTestBase =>
+trait IvfFixtures extends TempDirs { self: SparkTestBase =>
 
   protected val dim = 4
 
@@ -26,8 +26,7 @@ trait IvfFixtures { self: SparkTestBase =>
   }
 
   protected def tmp(prefix: String): String = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
+    val p = tempDir(prefix)
     s"$p/idx"
   }
 

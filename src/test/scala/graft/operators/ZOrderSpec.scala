@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** Pins for the z-order write layout.
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * rectangle must intersect only a minority of file boxes — the
   * file-skipping a footer-stats reader performs.
   */
-class ZOrderSpec extends SparkTestBase {
+class ZOrderSpec extends SparkTestBase with TempDirs {
 
   private val sf = "/root/testdata/sf0.01"
 
@@ -100,8 +100,7 @@ class ZOrderSpec extends SparkTestBase {
       val y = if (i % 20 == 0) (i + 1) * 1000.0 else (i % 997) / 1000.0
       (i.toLong, (i % 100).toLong, y)
     }.toDF("id", "x", "y")
-    val base = java.nio.file.Files.createTempDirectory("zskew")
-    base.toFile.deleteOnExit()
+    val base = tempDir("zskew")
     ZOrder.writeZOrdered(rows, "x", "y", s"$base/minmax", 16)
     ZOrder.writeZOrderedEquiDepth(rows, "x", "y", s"$base/eq", 16)
     def boxes(p: String): Seq[(Long, Long, Double, Double)] =

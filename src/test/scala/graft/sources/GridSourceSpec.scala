@@ -20,6 +20,32 @@ class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     body
   }
 
+  private def withConf[T](conf: Map[String, String])(body: => T): T = {
+    val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  // (name, session conf, tasks expected for n blocks): the default
+  // split (anywhere from one task to one per block), one block per
+  // partition, every block in one partition
+  private val packings: Seq[(String, Map[String, String], Int => Range)] = Seq(
+    ("default packing", Map.empty, n => 1 to n),
+    ("one block per task",
+      Map("spark.sql.files.maxPartitionBytes" -> "1"), n => n to n),
+    ("one task", Map("spark.sql.files.minPartitionNum" -> "1"), _ => 1 to 1))
+
+  /** (planned blocks, packed tasks) from the scan description. */
+  private def packedCounts(df: DataFrame): (Int, Int) = {
+    val m = "partitions=(\\d+)/\\d+ tasks=(\\d+)".r
+      .findFirstMatchIn(df.queryExecution.executedPlan.toString)
+      .getOrElse(fail(df.queryExecution.executedPlan.toString))
+    (m.group(1).toInt, m.group(2).toInt)
+  }
+
   test("pivot: row count = product of dims; cell values match the law") {
     val store = Fixtures.airSmall
     val df = ctx.dataFrame("air_pivot", store, Map("time" -> 6),
@@ -553,7 +579,6 @@ class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
             case other => fail(s"unexpected var $other")
           }
         }
-      val df = ctx.dataFrame(s"reader_${g.name}", g.store, g.chunks, dims)
       def got(q: DataFrame): Seq[Seq[Any]] = q.collect().toSeq.map(_.toSeq.map {
         case t: Timestamp => DateTimeUtils.fromJavaTimestamp(t)
         case v => v
@@ -575,28 +600,82 @@ class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         }.take(g.k)
       }
       def byString(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
-      withClue(s"[${g.name}] ") {
-        assert(byString(got(df)) == byString(cells), "dense")
-        val f = df.filter(g.filter)
-        assert(f.queryExecution.executedPlan.toString
-          .contains("exactDimFilters"))
-        assert(byString(got(f)) == byString(cells.filter(g.keep)), "filter")
-        assert(topN(df, dims, desc = false) ==
-          sorted(cells, dims, desc = false), "TopN asc")
-        assert(topN(df, dims, desc = true) ==
-          sorted(cells, dims, desc = true), "TopN desc")
-        // the last dim leading: the walk's innermost dim is then strided
-        // (and, filtered, split into runs)
-        assert(topN(df, dims.reverse, desc = false) ==
-          sorted(cells, dims.reverse, desc = false), "TopN last dim first")
-        assert(topN(f, dims.reverse, desc = true) ==
-          sorted(cells.filter(g.keep), dims.reverse, desc = true),
-          "TopN + filter")
-        val lim = got(df.limit(g.k))
-        assert(lim.size == math.min(g.k, cells.size), "limit")
-        assert(byString(lim).toSet.subsetOf(byString(cells).toSet), "limit")
+      // every case under three packings: the session default, one block
+      // per partition, and every block in one partition
+      packings.foreach { case (pk, conf, tasks) =>
+        withConf(conf) {
+          val df = ctx.dataFrame(s"reader_${g.name}", g.store, g.chunks, dims)
+          withClue(s"[${g.name}, $pk] ") {
+            val (blocks, planned) = packedCounts(df)
+            assert(tasks(blocks).contains(planned), s"$planned tasks")
+            assert(byString(got(df)) == byString(cells), "dense")
+            val f = df.filter(g.filter)
+            assert(f.queryExecution.executedPlan.toString
+              .contains("exactDimFilters"))
+            assert(byString(got(f)) == byString(cells.filter(g.keep)), "filter")
+            assert(topN(df, dims, desc = false) ==
+              sorted(cells, dims, desc = false), "TopN asc")
+            assert(topN(df, dims, desc = true) ==
+              sorted(cells, dims, desc = true), "TopN desc")
+            // the last dim leading: the walk's innermost dim is then strided
+            // (and, filtered, split into runs)
+            assert(topN(df, dims.reverse, desc = false) ==
+              sorted(cells, dims.reverse, desc = false), "TopN last dim first")
+            assert(topN(f, dims.reverse, desc = true) ==
+              sorted(cells.filter(g.keep), dims.reverse, desc = true),
+              "TopN + filter")
+            val lim = got(df.limit(g.k))
+            assert(lim.size == math.min(g.k, cells.size), "limit")
+            assert(byString(lim).toSet.subsetOf(byString(cells).toSet), "limit")
+          }
+        }
       }
     }
+  }
+
+  // 64 time chunks of one step over 8 x: 64 equal blocks, v = 8 t + x
+  private lazy val grid64 = graft.grid.SyntheticGridStore(
+    graft.grid.GridSchema(
+      Seq(graft.grid.DimDef("t", graft.grid.IntCoords(Array.range(0, 64))),
+        graft.grid.DimDef("x", graft.grid.IntCoords(Array.range(0, 8)))),
+      Seq(graft.grid.VarDef("v", Seq("t", "x"), graft.grid.GDouble))),
+    Map("v" -> Fixtures.AffineLaw(0.0, Seq(8.0, 1.0))))
+
+  private def gridParts(df: DataFrame): Seq[Seq[GridInputPartition]] =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.partitions.map(_.map(_.asInstanceOf[GridInputPartition]))
+    }.flatten
+
+  test("packing: 64 equal blocks plan into N to N+1 tasks, in block order") {
+    val df = ctx.dataFrame("pack64", grid64, Map("t" -> 1), Seq("t", "x"))
+    val n = spark.sparkContext.defaultParallelism
+    val parts = gridParts(df).flatten
+    assert(parts.size == n || parts.size == n + 1, s"${parts.size} tasks")
+    // each partition holds a run of consecutive blocks, in order
+    assert(parts.flatMap(_.blocks.map(_.slices.head._1)) == (0 until 64))
+    counted {
+      assert(df.collect().map(_.getDouble(2)).toSeq ==
+        (0 until 512).map(_.toDouble))
+      assert(ReadCounters.partitionsOpened.sum() == 64L)
+    }
+  }
+
+  test("packing: a runtime-filtered scan re-packs only the surviving blocks") {
+    val df = ctx.dataFrame("packrt", grid64, Map("t" -> 1), Seq("t", "x"))
+    // probe keys t = 10 and t = 50; the build side filters something so
+    // DPP considers the join (see the runtime filtering test above)
+    val probe = graft.SparkTestBase.spark.range(0, 2)
+      .select(expr("CAST(10 + id * 40 AS INT)").as("k"))
+      .filter(col("k") > -1)
+    val joined = df.join(broadcast(probe), col("t") === col("k"))
+    counted {
+      assert(joined.collect().length == 2 * 8)
+      assert(ReadCounters.partitionsOpened.sum() == 2L,
+        joined.queryExecution.executedPlan.toString)
+    }
+    val blocks = gridParts(joined).flatten.flatMap(_.blocks.map(_.slices.head._1))
+    assert(blocks == Seq(10, 50), joined.queryExecution.executedPlan.toString)
   }
 
   test("restricted scan under a variable predicate plans like the full walk") {

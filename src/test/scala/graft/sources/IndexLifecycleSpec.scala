@@ -1,12 +1,8 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileUtil, FilterFileSystem, Path,
-  RawLocalFileSystem}
-import org.scalatest.BeforeAndAfterAll
-
-import java.nio.file.Files
+import org.apache.hadoop.fs.{FilterFileSystem, Path, RawLocalFileSystem}
 
 /** The shared swap and heal of [[IndexLifecycle]] on bare directories
   * (no index built): a swap crashed after any step heals to the old or
@@ -14,11 +10,7 @@ import java.nio.file.Files
   * swap leave one live copy, and a `.next` only ever appears complete.
   * Each copy is a directory holding one file named after its version.
   */
-class IndexLifecycleSpec extends SparkTestBase with BeforeAndAfterAll {
-
-  private lazy val base = Files.createTempDirectory("lifecycle")
-
-  override def afterAll(): Unit = FileUtil.fullyDelete(base.toFile)
+class IndexLifecycleSpec extends SparkTestBase with TempDirs {
 
   private case object Crash extends RuntimeException
 
@@ -35,7 +27,7 @@ class IndexLifecycleSpec extends SparkTestBase with BeforeAndAfterAll {
   private def fixture(): (HookedFs, IndexLifecycle.Slot) = {
     val fs = new HookedFs
     fs.initialize(java.net.URI.create("file:///"), new Configuration())
-    val root = Files.createTempDirectory(base, "slot").toUri.getPath
+    val root = tempDir("slot").toUri.getPath
     (fs, IndexLifecycle.Slot(new Path(s"$root/live")))
   }
 
@@ -174,7 +166,7 @@ class IndexLifecycleSpec extends SparkTestBase with BeforeAndAfterAll {
   test("readSidecar reads an underscore dir, an empty part file included, " +
       "with no ignored-path WARN") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(base, "sidecar").toString
+    val dir = tempDir("sidecar").toString
     Seq(1L, 2L).toDF("id").write.parquet(s"$dir/_full")
     Seq.empty[Long].toDF("id").coalesce(1).write.parquet(s"$dir/_empty")
     val ((full, empty), logged) = graft.LogCapture.lines(

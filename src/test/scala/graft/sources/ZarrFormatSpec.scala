@@ -1,21 +1,18 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.{Fixtures, ZarrGridStore, ZarrLayout}
 import org.apache.spark.sql.functions._
-
-import java.nio.file.Files
 
 /** The plain-Spark read surface: `spark.read.format("zarr").load(root)`
   * with no XarrayContext — short-name registration, v2/v3
   * auto-detection, pruning through the DSv2 scan, and the `dims`
   * group selector.
   */
-class ZarrFormatSpec extends SparkTestBase {
+class ZarrFormatSpec extends SparkTestBase with TempDirs {
 
   private def v2Root(): String = {
-    val root = Files.createTempDirectory("zarr_fmt")
-    root.toFile.deleteOnExit()
+    val root = tempDir("zarr_fmt")
     val p = root.resolve("store").toString
     ZarrGridStore.write(Fixtures.linearGrid, p,
       Map("t" -> 6, "lat" -> 5), "blosc")
@@ -43,8 +40,7 @@ class ZarrFormatSpec extends SparkTestBase {
   }
 
   test("v3 sharded trees load through the same format") {
-    val root = Files.createTempDirectory("zarr_fmt_v3")
-    root.toFile.deleteOnExit()
+    val root = tempDir("zarr_fmt_v3")
     val p = root.resolve("store").toString
     ZarrGridStore.write(Fixtures.linearGrid, p, Map("t" -> 6), "zstd:3",
       ZarrLayout.V3(Map("t" -> 2)))
@@ -53,8 +49,7 @@ class ZarrFormatSpec extends SparkTestBase {
   }
 
   test("store cache self-invalidates when the tree mutates") {
-    val root = Files.createTempDirectory("zarr_fmt_mut")
-    root.toFile.deleteOnExit()
+    val root = tempDir("zarr_fmt_mut")
     val p = root.resolve("store").toString
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), p,
       Map("t" -> 6), "zstd:3")

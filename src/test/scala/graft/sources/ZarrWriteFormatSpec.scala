@@ -1,24 +1,20 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.{Fixtures, GridIO, ZarrGridStore, ZarrLayout}
 import graft.grid.TreeBytes.assertTreesEqual
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 /** The plain-Spark WRITE surface: `df.write.format("zarr")` — output
   * byte-identical to the `writeFromRows` API path, overwrite/append
   * mode semantics, coordinate inference, and clear errors.
   */
-class ZarrWriteFormatSpec extends SparkTestBase {
+class ZarrWriteFormatSpec extends SparkTestBase with TempDirs {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("zarr_wfmt")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = tempDir("zarr_wfmt")
 
   private def gridDf = new graft.XarrayContext(spark).dataFrame(
     "wfmt_grid", Fixtures.linearGrid, Map("t" -> 6), Seq("t", "lat", "lon"))

@@ -1,18 +1,16 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.sources.FileBloomIndex
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-
-import java.nio.file.Files
 
 /** Streaming ingest into the bloom index: across micro-batches —
   * including a REPLAYED batch — the index must end byte-equivalent in
   * answers to a one-shot build over the distinct union, with no
   * duplicated rows.
   */
-class BloomStreamsSpec extends SparkTestBase {
+class BloomStreamsSpec extends SparkTestBase with TempDirs {
 
   import spark.implicits._
 
@@ -24,8 +22,7 @@ class BloomStreamsSpec extends SparkTestBase {
 
   test("streamed batches + replay == one-shot build, no duplicate rows") {
     val dir = {
-      val p = Files.createTempDirectory("bloom_stream")
-      p.toFile.deleteOnExit()
+      val p = tempDir("bloom_stream")
       s"$p/idx"
     }
     FileBloomIndex.write(docs(0 until 40), "id", layout, dir, 64L)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{SparkTestBase, XarrayContext}
+import graft.{SparkTestBase, TempDirs, XarrayContext}
 import graft.grid._
 import graft.sources.ReadCounters
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -19,7 +19,7 @@ object GridStreamsSpec {
   }
 }
 
-class GridStreamsSpec extends SparkTestBase {
+class GridStreamsSpec extends SparkTestBase with TempDirs {
 
   final case class Cell(t: Int, lat: Double, lon: Double, air: Double)
 
@@ -45,8 +45,7 @@ class GridStreamsSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-stream-append").toString + "/store"
+    val root = tempDir("graft-stream-append").toString + "/store"
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 6), "zstd")
 
@@ -104,8 +103,7 @@ class GridStreamsSpec extends SparkTestBase {
     hc.set("fs.s3a.impl", classOf[MockS3FileSystem].getName)
     MockS3FileSystem.reset()
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft-szarr")
-      dir.toFile.deleteOnExit()
+      val dir = tempDir("graft-szarr")
       val root = "s3a:" + dir.toString + "/store"
       ZarrGridStore.writeFromRows(
         cellsDf(slab(0, 7)), Fixtures.linearGridSlice(0, 7).schema,
@@ -151,8 +149,7 @@ class GridStreamsSpec extends SparkTestBase {
   }
 
   test("tailCells: timestamp/duration variables surface as external types") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-tail-ts").toString + "/store"
+    val root = tempDir("graft-tail-ts").toString + "/store"
     val schema = GridSchema(
       Seq(DimDef("t", IntCoords((0 until 8).toArray))),
       Seq(VarDef("obs_ts", Seq("t"), GTimestamp),
@@ -190,8 +187,7 @@ class GridStreamsSpec extends SparkTestBase {
   }
 
   test("tailCells: restart from checkpoint delivers each cell exactly once") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-tail-restart").toString
+    val base = tempDir("graft-tail-restart").toString
     val root = base + "/store"
     val ckpt = base + "/ckpt"
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
@@ -230,7 +226,7 @@ class GridStreamsSpec extends SparkTestBase {
     */
   private def tornStore(tag: String): (String, String) = {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory(tag).toString
+    val base = tempDir(tag).toString
     val live = base + "/live"
     val twin = base + "/twin"
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), live,
@@ -293,8 +289,7 @@ class GridStreamsSpec extends SparkTestBase {
   }
 
   test("tailCells: appended chunks arrive as later stream batches") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-tail").toString + "/store"
+    val root = tempDir("graft-tail").toString + "/store"
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 6), "zstd")
     val q = GridStreams.tailCells(spark, root, "air")
@@ -322,8 +317,7 @@ class GridStreamsSpec extends SparkTestBase {
   }
 
   test("tailCells: blosc tree streams cells; padded edges dropped") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ztail").toString + "/store"
+    val root = tempDir("graft-ztail").toString + "/store"
     // ragged t edge (12 = 5+5+2): the stored edge chunk is PADDED per
     // the v2 spec; the stream must drop the padding cells
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
@@ -346,7 +340,7 @@ class GridStreamsSpec extends SparkTestBase {
   }
 
   test("tailCells: hand-copied forecast cycle arrives as a later batch") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ztail2")
+    val base = tempDir("graft-ztail2")
     val root = base.resolve("store").toString
     val full = base.resolve("full").toString
     // chunk-aligned initial extent (file streams never re-deliver a
