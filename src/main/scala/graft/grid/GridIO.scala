@@ -131,7 +131,10 @@ object GridIO {
   }
 
   def writeString(path: String, s: String, conf: Configuration): Unit =
-    write(path, s.getBytes(java.nio.charset.StandardCharsets.UTF_8), conf)
+    write(path, utf8(s), conf)
+
+  private[grid] def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   def readLines(path: String, conf: Configuration): Seq[String] =
     new String(readAllBytes(path, conf),
@@ -204,15 +207,41 @@ object GridIO {
       conf: Configuration): Unit = {
     val d = new Path(dst)
     val f = fs(d, conf)
-    val bak = new Path(dst + ".appendbak")
+    val bak = new Path(backupOf(dst))
+    replaceTestHook(s"before $dst")
     if (f.exists(d)) {
       f.delete(bak, false) // residue of an even earlier crash
       require(f.rename(d, bak), s"backup rename failed: $dst")
+      replaceTestHook(s"aside $dst")
     }
     rename(src, dst, conf)
+    replaceTestHook(s"in $dst")
     f.delete(bak, false)
     ()
   }
+
+  /** Where [[replaceWithBackup]] keeps `dst` while it is moved aside. */
+  private def backupOf(dst: String): String = dst + ".appendbak"
+
+  /** The first of `paths` that exists, else the first whose live file a
+    * [[replaceWithBackup]] in progress (or crashed) has moved aside to
+    * its backup: the file as last committed. The live files are checked
+    * once more when no backup exists either — the replacement can land,
+    * and its backup be deleted, between the two checks. A caller that
+    * reads a returned backup and finds it gone should look again: the
+    * replacement has landed by then.
+    */
+  def liveOrBackup(paths: Seq[String], conf: Configuration): Option[String] = {
+    def live = paths.find(exists(_, conf))
+    live.orElse(paths.map(backupOf).find(exists(_, conf))).orElse(live)
+  }
+
+  /** Test seam: runs at each step of [[replaceWithBackup]] — `before
+    * <dst>`, `aside <dst>` (live file moved to its backup) and `in
+    * <dst>` (staged file moved in, backup not yet deleted) — so a spec
+    * can crash the commit at any of them. No-op in production.
+    */
+  private[grid] var replaceTestHook: String => Unit = _ => ()
 
   /** Commit-protocol selection for [[commitStaged]]. On filesystems
     * where rename is an atomic metadata op (local, HDFS, viewfs, ABFS)
@@ -266,43 +295,56 @@ object GridIO {
     } finally in.close()
   }
 
-  /** Commit staged append files into the store — the shared protocol
-    * of the Zarr v2 and v3 append paths. `pairs` are (absolute src,
-    * absolute dst); `mkdirParents` creates nested destination dirs (the
-    * v3 `c/` layout).
+  /** Commit an append into the store — the shared protocol of the
+    * Zarr v2 and v3 append paths. `pairs` are staged chunk files
+    * (absolute src, absolute dst); `files` are the metadata files the
+    * append replaces (absolute dst, new bytes), in commit order. They
+    * land after every chunk, so a reader that opens through
+    * consolidated metadata sees the old extent until the consolidated
+    * metadata moves in. `mkdirParents` creates
+    * nested destination dirs (the v3 `c/` layout).
     *
-    * Rename mode (atomic-rename filesystems): EVERY destination is
-    * recorded in the staging tree's `.replace-manifest` first, then
-    * each staged file moves in via [[replaceWithBackup]]. Existing
-    * destinations — a merged edge chunk, or orphan chunks landed by a
-    * CRASHED earlier commit of this same logical append — are replaced
-    * safely (plain rename would refuse an existing destination on HDFS
-    * and make retries fail forever), and a crash mid-commit heals at
-    * the next [[sweepStaging]]. Cost: one existence HEAD per staged
-    * file — the price of retry-idempotent commits.
+    * Rename mode (atomic-rename filesystems): no live file is
+    * rewritten in place. Each of `files` is first written into the
+    * staging tree; then EVERY destination, chunks and metadata alike,
+    * is recorded in the staging tree's `.replace-manifest`, written
+    * once before any move; then each staged file moves in via
+    * [[replaceWithBackup]]. Existing destinations — a merged edge
+    * chunk, the metadata files, or orphan chunks landed by a CRASHED
+    * earlier commit of this same logical append — are replaced safely
+    * (plain rename would refuse an existing destination on HDFS and
+    * make retries fail forever), and a crash at any point of the
+    * commit heals at the next [[sweepStaging]], so the caller deletes
+    * the staging tree only after this returns. Replacing by rename
+    * also sidesteps ext4's `auto_da_alloc`, which forces a data flush
+    * on every truncate-and-rewrite of an existing file. Cost: one
+    * existence HEAD per moved file — the price of retry-idempotent
+    * commits.
     *
     * Put mode (copy-rename object stores, [[usePutCommit]]): each
-    * staged file STREAMS over its destination in one atomic
-    * whole-object PUT. No backups and no manifest — every crash window
-    * leaves either the old or the new object, never a torn one, and a
-    * retried append re-puts byte-identical content. The staged source
-    * files stay until the caller deletes the staging tree, so a crash
-    * mid-commit is retried from intact inputs.
+    * staged chunk STREAMS over its destination in one atomic
+    * whole-object PUT, and each metadata file is one direct overwrite
+    * PUT. No staging copy of the metadata, no backups and no manifest —
+    * every crash window leaves either the old or the new object, never
+    * a torn one, and a retried append re-puts byte-identical content.
+    * The staged chunks stay until the caller deletes the staging tree,
+    * so a crash mid-commit is retried from intact inputs.
     */
   def commitStaged(staging: String, pairs: Seq[(String, String)],
-      mkdirParents: Boolean, conf: Configuration): Unit = {
-    if (pairs.isEmpty) return
-    if (usePutCommit(pairs.head._2, conf)) {
+      files: Seq[(String, Array[Byte])], mkdirParents: Boolean,
+      conf: Configuration): Unit = {
+    def parentOf(dst: String) = dst.substring(0, dst.lastIndexOf('/'))
+    val dsts = pairs.map(_._2) ++ files.map(_._1)
+    if (dsts.isEmpty) return
+    if (usePutCommit(dsts.head, conf)) {
       // Hadoop's FileSystem API has no portable server-side copy, and
       // a single-object S3A rename (which WOULD copy server-side)
       // refuses an existing destination — so the commit primitive
       // stays the streamed overwrite PUT. But PUTs to distinct
-      // objects are independent and latency-bound, so the loop runs
-      // on a bounded thread pool: a large slab commit pays
+      // objects are independent and latency-bound, so the chunk loop
+      // runs on a bounded thread pool: a large slab commit pays
       // ~ceil(n/16) round-trip latencies instead of the serial sum.
-      if (mkdirParents)
-        pairs.foreach(p =>
-          mkdirs(p._2.substring(0, p._2.lastIndexOf('/')), conf))
+      if (mkdirParents) dsts.map(parentOf).distinct.foreach(mkdirs(_, conf))
       val par = math.min(16, pairs.size)
       if (par <= 1)
         pairs.foreach { case (src, dst) => copyOverwrite(src, dst, conf) }
@@ -323,12 +365,17 @@ object GridIO {
           }
         } finally pool.shutdownNow()
       }
+      // in order, serially: the consolidated metadata lands last
+      files.foreach { case (dst, bytes) => write(dst, bytes, conf) }
     } else {
-      writeString(s"$staging/.replace-manifest",
-        pairs.map(_._2).mkString("\n"), conf)
-      pairs.foreach { case (src, dst) =>
-        if (mkdirParents)
-          mkdirs(dst.substring(0, dst.lastIndexOf('/')), conf)
+      val staged = files.zipWithIndex.map { case ((dst, bytes), i) =>
+        val src = s"$staging/.meta/$i"
+        write(src, bytes, conf)
+        (src, dst)
+      }
+      writeString(s"$staging/.replace-manifest", dsts.mkString("\n"), conf)
+      (pairs ++ staged).foreach { case (src, dst) =>
+        if (mkdirParents) mkdirs(parentOf(dst), conf)
         replaceWithBackup(src, dst, conf)
       }
     }
@@ -338,7 +385,7 @@ object GridIO {
   private def healReplace(dst: String, conf: Configuration): Unit = {
     val d = new Path(dst)
     val f = fs(d, conf)
-    val bak = new Path(dst + ".appendbak")
+    val bak = new Path(backupOf(dst))
     if (f.exists(bak)) {
       if (f.exists(d)) f.delete(bak, false)
       else require(f.rename(bak, d), s"recovery rename failed: $bak")

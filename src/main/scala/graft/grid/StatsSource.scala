@@ -417,6 +417,24 @@ object StatsSource {
       conf: org.apache.hadoop.conf.Configuration): Unit =
     GridIO.delete(s"$root/$Sidecar", conf)
 
+  /** The files a stats write lands, as paths relative to the store
+    * root: `perVar` in landing order (shard files, then per-var
+    * files), the root manifest LAST — readers never consult a per-var
+    * file the writer has not finished — and `deletes` once they have
+    * all landed (shard files no longer referenced, per-var files of
+    * variables left without entries, the manifest when no variable
+    * has stats).
+    */
+  private[grid] final case class Files(perVar: Seq[(String, Array[Byte])],
+      manifest: Option[Array[Byte]], deletes: Seq[String]) {
+    /** Write and delete in place — for a tree no reader has opened. */
+    def land(root: String, conf: org.apache.hadoop.conf.Configuration): Unit = {
+      (perVar ++ manifest.map(Sidecar -> _)).foreach { case (rel, bytes) =>
+        GridIO.write(s"$root/$rel", bytes, conf) }
+      deletes.foreach(rel => GridIO.delete(s"$root/$rel", conf))
+    }
+  }
+
   /** Full-tree stats write (one-shot writers): per-var files for every
     * variable with entries, stale files dropped for those without,
     * manifest last. Entries group by variable ONCE — handing the full
@@ -426,27 +444,28 @@ object StatsSource {
   def write(root: String, schema: GridSchema, entries: Seq[Entry],
       conf: org.apache.hadoop.conf.Configuration): Unit = {
     val byVar = entries.groupBy(varOf)
-    writeManifest(root, schema.vars.flatMap(v =>
-      writeVar(root, v, byVar.getOrElse(v.name, Seq.empty), conf)
-        .map(v.name -> _)), conf)
+    withManifest(schema.vars.map(v =>
+      v.name -> varFiles(root, v, byVar.getOrElse(v.name, Seq.empty), conf)))
+      .land(root, conf)
   }
 
-  /** Rewrite the sidecar after an append: per TOUCHED variable, old
-    * entries ++ new entries (new wins on the shared edge-chunk key).
-    * Only the growing variables' files are read and rewritten —
-    * untouched variables' files stay on disk unread and their
-    * fingerprints carry forward, which is what keeps append O(slab),
-    * not O(tree), at 10⁸ chunks. Appending to a foreign tree that never
-    * had a sidecar still creates one covering the appended chunks
-    * (partial coverage is sound: absent keys serve no bounds).
+  /** The sidecar after an append, as [[Files]] for the append's commit
+    * to land: per TOUCHED variable, old entries ++ new entries (new
+    * wins on the shared edge-chunk key). Only the growing variables'
+    * files are read and rewritten — untouched variables' files stay on
+    * disk unread and their fingerprints carry forward, which is what
+    * keeps append O(slab), not O(tree), at 10⁸ chunks. Appending to a
+    * foreign tree that never had a sidecar still creates one covering
+    * the appended chunks (partial coverage is sound: absent keys serve
+    * no bounds).
     */
   def merge(root: String, schema: GridSchema, old: StatsSource,
       newEntries: Seq[Entry], conf: org.apache.hadoop.conf.Configuration)
-      : Unit = {
+      : Files = {
     val touched = newEntries.map(varOf).toSet
     val threshold = conf.getInt(ShardEntriesKey, DefaultShardEntries)
     val rewritten = touched.toSeq.sorted.flatMap { vn =>
-      schema.vars.find(_.name == vn).flatMap { v =>
+      schema.vars.find(_.name == vn).map { v =>
         val news = newEntries.filter(varOf(_) == vn)
         val replaced = news.map(_._1).toSet
         // SUFFIX merge for sharded variables: the slab's smallest
@@ -466,16 +485,45 @@ object StatsSource {
             if (live == 0 || pres.map(_.n).sum + live <= threshold) None
             else Some((pres, suffix))
         }
-        (suffixPath match {
-          case Some((pres, suffix)) => writeVar(root, v, suffix, conf, pres)
+        vn -> (suffixPath match {
+          case Some((pres, suffix)) => varFiles(root, v, suffix, conf, pres)
           case None =>
-            writeVar(root, v,
+            varFiles(root, v,
               old.entriesFor(vn).filterNot(e => replaced(e._1)) ++ news, conf)
-        }).map(vn -> _)
+        })
       }
     }
-    writeManifest(root, rewritten ++
-      (old.varNames -- touched).toSeq.map(vn => vn -> old.fpOf(vn)), conf)
+    withManifest(rewritten ++ (old.varNames -- touched).toSeq.map(vn =>
+      vn -> VarFiles(Some(old.fpOf(vn)), Seq.empty, Seq.empty)))
+  }
+
+  /** One variable's share of a stats write: the per-var file's
+    * fingerprint (None when the variable keeps no file) and its
+    * [[Files]] halves.
+    */
+  private final case class VarFiles(fp: Option[String],
+      writes: Seq[(String, Array[Byte])], deletes: Seq[String])
+
+  /** Every variable's files and the root manifest. `vars` carry each
+    * per-var file's fingerprint, which readers use as the bytes-served
+    * staleness guard. No variable with stats: no manifest.
+    */
+  private def withManifest(vars: Seq[(String, VarFiles)]): Files = {
+    val fps = vars.flatMap { case (n, f) => f.fp.map(n -> _) }.sortBy(_._1)
+    val manifest =
+      if (fps.isEmpty) None
+      else {
+        val top = mapper.createObjectNode()
+        top.put("version", 2)
+        val arr = top.putArray("vars")
+        fps.foreach(v => arr.add(v._1))
+        val fo = top.putObject("fp")
+        fps.foreach { case (n, fp) => fo.put(n, fp) }
+        Some(GridIO.utf8(mapper.writeValueAsString(top)))
+      }
+    Files(vars.flatMap(_._2.writes), manifest,
+      vars.flatMap(_._2.deletes) ++
+        (if (manifest.isEmpty) Seq(Sidecar) else Nil))
   }
 
   /** `kind` tag per dtype, mirroring chunkStats boxing: long-kind
@@ -497,9 +545,6 @@ object StatsSource {
   private def statsFp(bytes: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
       .take(8).map(b => f"$b%02x").mkString
-
-  private def fpOfString(s: String): String =
-    statsFp(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Parse one variable's version-2 stats node (`kind`/`stats`/`sums`)
     * into store-keyed maps.
@@ -554,22 +599,21 @@ object StatsSource {
     mapper.writeValueAsString(vn)
   }
 
-  /** Write one variable's stats from its (key, bounds, sum) entries;
-    * deletes stale files when there is nothing to record. Small entry
+  /** One variable's stats files from its (key, bounds, sum) entries;
+    * stale files delete when there is nothing to record. Small entry
     * lists write the single version-2 per-var file; lists over
     * [[ShardEntriesKey]] split by leading chunk index into range shard
     * files plus a version-3 shard directory, so a reader pruning a
     * range of a skew-heavy variable reads O(touched shards), not the
     * whole list. Shard packing is a pure function of the entry set
     * (numeric-sorted leading-index groups, greedily packed), so a
-    * merge rewrite stays byte-identical to a one-shot write. Returns
-    * the written per-var file's content fingerprint, or None when no
-    * file exists for the variable.
+    * merge rewrite stays byte-identical to a one-shot write. Nothing
+    * is written here: the caller lands the returned files.
     */
-  private def writeVar(root: String, v: VarDef, entries: Seq[Entry],
+  private def varFiles(root: String, v: VarDef, entries: Seq[Entry],
       conf: org.apache.hadoop.conf.Configuration,
-      preserved: Seq[ShardRef] = Seq.empty): Option[String] = {
-    val p = s"$root/${v.name}/$Sidecar"
+      preserved: Seq[ShardRef] = Seq.empty): VarFiles = {
+    val rel = s"${v.name}/$Sidecar"
     val es = entries.flatMap { case (key, mm, sm) =>
       key.split(" ", 2) match {
         case Array(nm, ci) if nm == v.name &&
@@ -597,19 +641,18 @@ object StatsSource {
     // the merge pays O(touched-suffix) shard writes, not O(var)
     val oldShards: Map[String, String] =
       try {
-        val node = parseJson(GridIO.readAllBytes(p, conf))
+        val node = parseJson(GridIO.readAllBytes(s"$root/$rel", conf))
         if (node.path("version").asInt(0) == 3)
           node.path("shards").elements().asScala
             .map(s => s.path("file").asText() -> s.path("fp").asText())
             .toMap
         else Map.empty
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    if (es.isEmpty) {
-      GridIO.delete(p, conf)
-      oldShards.keys.foreach(f => GridIO.delete(s"$root/${v.name}/$f", conf))
-      return None
-    }
+    if (es.isEmpty)
+      return VarFiles(None, Seq.empty,
+        rel +: oldShards.keys.toSeq.map(f => s"${v.name}/$f"))
     val threshold = conf.getInt(ShardEntriesKey, DefaultShardEntries)
+    val shardWrites = Seq.newBuilder[(String, Array[Byte])]
     val (json, newShards) =
       if (preserved.isEmpty && es.size <= threshold)
         (varStatsJson(v, es), Seq.empty[String])
@@ -645,39 +688,20 @@ object StatsSource {
         preserved.foreach(addRef)
         val files = shards.map { case (lo, hi, ses) =>
           val file = f".graft-stats.$lo%012d-$hi%012d.json"
-          val body = varStatsJson(v, ses.sortBy(_._1))
-          val fp = fpOfString(body)
-          // byte-identical shard already on disk: skip the PUT
+          val body = GridIO.utf8(varStatsJson(v, ses.sortBy(_._1)))
+          val fp = statsFp(body)
+          // byte-identical shard already on disk: skip the write
           if (!oldShards.get(file).contains(fp))
-            GridIO.writeString(s"$root/${v.name}/$file", body, conf)
+            shardWrites += s"${v.name}/$file" -> body
           addRef(ShardRef(lo, hi, file, fp, ses.size.toLong))
           file
         }
         (mapper.writeValueAsString(top),
           preserved.map(_.file) ++ files.toSeq)
       }
-    GridIO.writeString(p, json, conf)
-    oldShards.keysIterator.filterNot(newShards.toSet).foreach(f =>
-      GridIO.delete(s"$root/${v.name}/$f", conf))
-    Some(fpOfString(json))
-  }
-
-  /** Root manifest — written LAST so readers never consult a per-var
-    * file the writer has not finished. `vars` carries each variable's
-    * per-var-file fingerprint, which readers use as the bytes-served
-    * staleness guard. No variable with stats: no manifest.
-    */
-  private def writeManifest(root: String, vars: Seq[(String, String)],
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    if (vars.isEmpty) { dropManifest(root, conf); return }
-    val top = mapper.createObjectNode()
-    top.put("version", 2)
-    val sorted = vars.sortBy(_._1)
-    val arr = top.putArray("vars")
-    sorted.foreach(v => arr.add(v._1))
-    val fo = top.putObject("fp")
-    sorted.foreach { case (n, fp) => fo.put(n, fp) }
-    GridIO.writeString(s"$root/$Sidecar", mapper.writeValueAsString(top),
-      conf)
+    val bytes = GridIO.utf8(json)
+    VarFiles(Some(statsFp(bytes)), shardWrites.result() :+ (rel -> bytes),
+      oldShards.keys.toSeq.filterNot(newShards.toSet)
+        .map(f => s"${v.name}/$f"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.grid
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.jdk.CollectionConverters._
@@ -286,48 +287,63 @@ object ZarrGridStore {
     * instead of a directory listing plus two round trips per array —
     * at ARCO-ERA5's ~273 arrays that is hundreds of object-store
     * requests saved before the first chunk is touched. Falls back to
-    * the per-array listing walk when `.zmetadata` is absent.
+    * the per-array listing walk when `.zmetadata` is absent. While an
+    * append's commit has moved `.zmetadata` (or the v3 root
+    * `zarr.json`) aside, just before the replacement moves in, its
+    * backup is read instead: the tree as last committed
+    * ([[GridIO.liveOrBackup]]). A file that vanishes between the check
+    * and the read (the commit moved on) sends the open round once more.
     */
   def open(root: String, hconf: SerializableHadoopConf): ZarrGridStore = {
     val conf = hconf.value
     val cleanRoot = root.stripSuffix("/")
     val consolidatedPath = s"$cleanRoot/.zmetadata"
-    if (GridIO.exists(consolidatedPath, conf)) {
-      val node = parseJson(GridIO.readAllBytes(consolidatedPath, conf))
-      require(node.path("zarr_consolidated_format").asInt(0) == 1,
-        s"unsupported zarr_consolidated_format " +
-          s"${node.path("zarr_consolidated_format")}")
-      val meta = node.path("metadata")
-      require(meta.isObject, s"$consolidatedPath: no metadata object")
-      require(meta.path(".zgroup").path("zarr_format").asInt(0) == 2,
-        s"unsupported zarr_format in consolidated .zgroup")
-      val allArrays = meta.properties().asScala.map(_.getKey)
-        .filter(_.endsWith("/.zarray")).map(_.stripSuffix("/.zarray"))
-        .toSeq.sorted
-      // hierarchical trees: nested keys belong to SUBGROUPS (each a
-      // full zarr root of its own — open it by path or via the
-      // provider's `group` option); the root dataset is the root-level
-      // arrays, exactly xarray's open_zarr(root) reading
-      val (nested, arrayNames) = allArrays.partition(_.contains("/"))
-      if (arrayNames.isEmpty) {
-        val groups = nested.map(_.takeWhile(_ != '/')).distinct.sorted
-        throw new IllegalArgumentException(
-          s"no arrays at the root of $cleanRoot" + (if (groups.nonEmpty)
-            s"; tree has subgroups (${groups.mkString(", ")}) — open " +
-              "one via .option(\"group\", <name>) or the subgroup path"
-          else ""))
+    def attempt(): ZarrGridStore =
+      GridIO.liveOrBackup(Seq(consolidatedPath, s"$cleanRoot/zarr.json"),
+        conf) match {
+        case Some(p) if p.startsWith(consolidatedPath) =>
+          openConsolidated(cleanRoot, p, hconf)
+        case Some(p) => ZarrV3.open(cleanRoot, hconf, p)
+        case None => openListed(cleanRoot, hconf)
       }
-      val metas = arrayNames.map { n =>
-        n -> parseArrayNode(n, meta.get(s"$n/.zarray"),
-          Option(meta.get(s"$n/.zattrs")))
-      }.toMap
-      val dsAttrs = Option(meta.get(".zattrs")).map(attrMap)
-        .getOrElse(Map.empty[String, String])
-      assemble(cleanRoot, metas, dsAttrs, hconf)
-    } else if (GridIO.exists(s"$cleanRoot/zarr.json", conf)) {
-      // a v3 tree (zarr.json root metadata) — same GridStore surface
-      ZarrV3.open(cleanRoot, hconf)
-    } else openListed(cleanRoot, hconf)
+    try attempt()
+    catch { case _: java.io.FileNotFoundException => attempt() }
+  }
+
+  private def openConsolidated(cleanRoot: String, consolidatedPath: String,
+      hconf: SerializableHadoopConf): ZarrGridStore = {
+    val conf = hconf.value
+    val node = parseJson(GridIO.readAllBytes(consolidatedPath, conf))
+    require(node.path("zarr_consolidated_format").asInt(0) == 1,
+      s"unsupported zarr_consolidated_format " +
+        s"${node.path("zarr_consolidated_format")}")
+    val meta = node.path("metadata")
+    require(meta.isObject, s"$consolidatedPath: no metadata object")
+    require(meta.path(".zgroup").path("zarr_format").asInt(0) == 2,
+      s"unsupported zarr_format in consolidated .zgroup")
+    val allArrays = meta.properties().asScala.map(_.getKey)
+      .filter(_.endsWith("/.zarray")).map(_.stripSuffix("/.zarray"))
+      .toSeq.sorted
+    // hierarchical trees: nested keys belong to SUBGROUPS (each a
+    // full zarr root of its own — open it by path or via the
+    // provider's `group` option); the root dataset is the root-level
+    // arrays, exactly xarray's open_zarr(root) reading
+    val (nested, arrayNames) = allArrays.partition(_.contains("/"))
+    if (arrayNames.isEmpty) {
+      val groups = nested.map(_.takeWhile(_ != '/')).distinct.sorted
+      throw new IllegalArgumentException(
+        s"no arrays at the root of $cleanRoot" + (if (groups.nonEmpty)
+          s"; tree has subgroups (${groups.mkString(", ")}) — open " +
+            "one via .option(\"group\", <name>) or the subgroup path"
+        else ""))
+    }
+    val metas = arrayNames.map { n =>
+      n -> parseArrayNode(n, meta.get(s"$n/.zarray"),
+        Option(meta.get(s"$n/.zattrs")))
+    }.toMap
+    val dsAttrs = Option(meta.get(".zattrs")).map(attrMap)
+      .getOrElse(Map.empty[String, String])
+    assemble(cleanRoot, metas, dsAttrs, hconf)
   }
 
   /** Names of the DIRECT subgroups of a zarr root (v2 `.zgroup`
@@ -712,8 +728,8 @@ object ZarrGridStore {
     else if (a.stored.contains(StoredVlenStr)) {
       // vlen-utf8: decompressed size is unknown a priori (self-framed)
       val n = a.chunkShape.product
-      val decoded =
-        decodeVlen(path, decompressedUnknown(path, raw, a.compressor), n)
+      val decoded = decodeVlen(path,
+        decompressedUnknown(path, raw, a.compressor), n, grownPrefix(a))
       a.transposeOrder match {
         case Some(order) => untranspose(decoded, a.chunkShape, order)
         case None => decoded
@@ -721,7 +737,11 @@ object ZarrGridStore {
     } else {
       val n = a.chunkShape.product
       val expected = n * a.storedWidth
-      val bytes = decompressed(path, raw, a.compressor, expected)
+      val bytes = decompressed(path, raw, a.compressor, expected) match {
+        case b if b.length > expected && grownPrefix(a) =>
+          java.util.Arrays.copyOf(b, expected)
+        case b => b
+      }
       require(bytes.length == expected,
         s"chunk $path decodes to ${bytes.length} bytes, expected $expected")
       // undo the numcodecs filter pipeline in reverse write order
@@ -733,6 +753,22 @@ object ZarrGridStore {
         case None => decoded
       }
     }
+
+  /** A coordinate array (1-d, indexed by its own name) in this writer's
+    * coordinate layout: one uncompressed little-endian chunk spanning
+    * it, elements stored as decoded (or vlen strings). An append lands
+    * such an array's grown chunk before the consolidated metadata that
+    * declares the new length ([[appendFromRows]]), so a reader holding
+    * the old metadata decodes the declared prefix of a longer payload —
+    * the old values, at their old positions. Fixed-width strings are
+    * excluded: a longer label widens every element. A data variable's
+    * over-long chunk stays an error.
+    */
+  private def grownPrefix(a: ZarrArrayMeta): Boolean =
+    a.dims == Seq(a.name) && a.chunkShape == a.shape &&
+      a.compressor.isEmpty && a.filters.isEmpty &&
+      a.transposeOrder.isEmpty && !a.bigEndian &&
+      (a.stored.isEmpty || a.stored.contains(StoredVlenStr))
 
   /** Undo a stored axis permutation: the flat input is C-order over the
     * PERMUTED shape (stored axis i = logical axis `order(i)`); the
@@ -1136,13 +1172,15 @@ object ZarrGridStore {
       s"$path: unsupported compressor $other")
   }
 
-  /** numcodecs VLenUTF8 chunk payload -> the chunk's `n` strings. */
+  /** numcodecs VLenUTF8 chunk payload -> the chunk's `n` strings (the
+    * first `n` of more when `prefix`).
+    */
   private[grid] def decodeVlen(path: String, bytes: Array[Byte],
-      n: Int): Array[String] = {
+      n: Int, prefix: Boolean = false): Array[String] = {
     require(bytes.length >= 4, s"$path: truncated vlen-utf8 chunk")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val items = bb.getInt
-    require(items == n,
+    require(items == n || (prefix && items > n),
       s"$path: vlen-utf8 chunk holds $items items, expected $n")
     val out = new Array[String](n)
     var i = 0
@@ -1937,7 +1975,11 @@ object ZarrGridStore {
     if (schema.attrs.nonEmpty)
       GridIO.writeString(s"$cleanRoot/.zattrs", attrsJson(schema.attrs), conf)
 
-    schema.dims.foreach(d => writeCoord(cleanRoot, d, conf))
+    schema.dims.foreach { d =>
+      GridIO.mkdirs(s"$cleanRoot/${d.name}", conf)
+      coordFiles(d).foreach { case (rel, bytes) =>
+        GridIO.write(s"$cleanRoot/$rel", bytes, conf) }
+    }
 
     schema.vars.foreach { v =>
       val dir = s"$cleanRoot/${v.name}"
@@ -2049,37 +2091,47 @@ object ZarrGridStore {
     * the slab's rows scatter through [[GridWriter.writeVar]]'s
     * one-shuffle reverse pivot STRAIGHT onto the store-global chunk
     * grid in a staging tree beside the store (executors write the
-    * chunk files, flat-named), then every staged chunk moves to its
-    * layout key, the growing dimension's coordinate array and each
-    * growing variable's metadata shape are rewritten, and the tree
-    * re-consolidates — the incremental-ingest path
-    * `df.write.format("zarr").mode("append")` rides on. The existing
-    * extent need NOT be chunk-aligned: when the old extent ends inside
-    * a chunk, the owning executor read-modify-writes that edge chunk
+    * chunk files, flat-named). The append then builds every metadata
+    * file it replaces in memory — the grown coordinate array,
+    * each growing variable's shape, the merged stats sidecar and the
+    * consolidated metadata (from the tree's consolidated document, not
+    * a re-read of each live file) — and [[GridIO.commitStaged]] lands
+    * chunks and metadata through one staged commit: NO live file is
+    * rewritten in place, a metadata file the tree already holds as
+    * rebuilt is skipped, and `.zmetadata` (v3: the root `zarr.json`)
+    * moves in last but for the stats manifest — the commit point for
+    * every reader that opens through consolidated metadata. This is
+    * the incremental-ingest path `df.write.format("zarr")
+    * .mode("append")` rides on. The existing extent need NOT be
+    * chunk-aligned: when the old extent ends inside a chunk, the
+    * owning executor read-modify-writes that edge chunk
     * ([[EdgeMergeSink]]) exactly as xarray's `to_zarr(append_dim=...)`
     * does, and the result is byte-identical to a one-shot write.
     * Sharded variables stage whole SHARDS (stored-file granularity), so
     * an unaligned old extent costs one decode + re-encode per edge
-    * SHARD. Non-growing dims must carry identical coordinates; the tree
-    * must use this writer's chunk keys and a plain little-endian
-    * C-order unpacked encoding for every growing variable (anything
-    * else fails loudly up front — staged chunks are encoded plain, and
-    * silently mixing encodings inside one array corrupts it). Appended
-    * edge chunks pad with NaN/0 like every other write. SINGLE WRITER
-    * per store: staging is uniquely suffixed, so a crashed append
-    * leaves an inert `.staging-*` tree (swept by the next append) —
-    * plus, if the crash hit the commit phase of an UNALIGNED append,
-    * at most a half-replaced edge chunk protected by a `.appendbak`
-    * backup, which the next append's staging sweep restores (a reader
-    * in between may see that one chunk as fill; nothing is lost). A
-    * competing append that commits during staging is detected via a
-    * metadata version stamp and aborts this append loudly.
+    * SHARD. Non-growing dims must carry
+    * identical coordinates; the tree must use this writer's chunk keys
+    * and a plain little-endian C-order unpacked encoding for every
+    * growing variable (anything else fails loudly up front — staged
+    * chunks are encoded plain, and silently mixing encodings inside one
+    * array corrupts it). Appended edge chunks pad with NaN/0 like every
+    * other write. SINGLE WRITER per store: staging is uniquely
+    * suffixed, so a crashed append leaves an inert `.staging-*` tree —
+    * plus, if the crash hit the commit, at most one file moved aside to
+    * its backup ([[GridIO.replaceWithBackup]]) — which the next
+    * append's staging sweep heals first (a reader in between may see a
+    * chunk moved aside as fill; nothing is lost). A competing append
+    * that commits during staging is detected via a metadata version
+    * stamp and aborts this append loudly.
     */
   def appendFromRows(df: org.apache.spark.sql.DataFrame,
       slabSchema: GridSchema, root: String,
       along: String): ZarrGridStore = {
     val conf = GridIO.driverConf()
     val cleanRoot = root.stripSuffix("/")
+    // heal a crashed earlier commit first: it may restore metadata
+    // files the layout probe, the version stamp and the open read
+    GridIO.sweepStaging(cleanRoot, conf)
     val layout = ZarrLayout.of(cleanRoot, conf)
     // optimistic concurrency key, captured BEFORE open reads the
     // store's metadata: a competing append that commits between the
@@ -2148,7 +2200,6 @@ object ZarrGridStore {
       }
     }
 
-    GridIO.sweepStaging(cleanRoot, conf)
     val staging = cleanRoot + ".staging-" +
       java.util.UUID.randomUUID().toString.take(8)
     val globalSize = exDim.size + slabDim.size
@@ -2176,50 +2227,41 @@ object ZarrGridStore {
     appendTestHook(cleanRoot)
     checkNoConcurrentAppend(cleanRoot, staging, versionPath, versionKey,
       conf)
-    // the manifest DELETES before any chunk moves — a crash mid-commit
-    // leaves no manifest (per-var files unreachable, no stats, sound)
-    // instead of stale bounds for the replaced edge chunk. The open's
-    // StatsSource keeps serving the merge below: its loads check the
-    // very bytes they read against the fingerprints it opened with,
-    // so they need no manifest, and prefix shards stay unread
+    // every replaced metadata file's new bytes, built in memory: the
+    // grown coordinate array, each growing variable's shape, the merged
+    // stats (untouched chunks keep their entries, the merged edge chunk
+    // and new chunks take the append's recomputed stats) and the
+    // consolidated metadata
+    val combined = DimDef(along, concatCoords(exDim.coords, slabDim.coords),
+      exDim.calendar, exDim.units, exDim.attrs)
+    val metadata = layout.appendedMetadata(cleanRoot, existing.schema,
+      combined, growing.map { v =>
+        val a = existing.arrays(v.name)
+        val axisPos = v.dims.indexOf(along)
+        v.name -> a.shape.updated(axisPos, a.shape(axisPos) + slabDim.size)
+      }, conf)
+    val stats = StatsSource.merge(cleanRoot, existing.schema,
+      existing.statsSource, newEntries, conf)
+    // the manifest DELETES before any file moves and moves in LAST,
+    // after the consolidated metadata — a crash in between leaves no
+    // manifest (per-var files unreachable, no stats, sound) instead of
+    // stale bounds for the replaced edge chunk next to either extent
     StatsSource.dropManifest(cleanRoot, conf)
     // staged chunks already carry store-global keys; the shared commit
-    // protocol (manifest + replaceWithBackup) makes the move crash-
-    // healable and retry-idempotent — merged edge chunks and orphans
-    // of a crashed earlier commit both replace safely
+    // protocol moves them in, then every metadata file — nothing live
+    // is rewritten in place, and a crash anywhere heals at the next
+    // append's sweep
     GridIO.commitStaged(staging,
       growing.flatMap { v =>
         GridIO.listNames(s"$staging/${v.name}", conf).map(fn =>
           (s"$staging/${v.name}/$fn",
             s"$cleanRoot/${v.name}/${layout.chunkKey(fn)}"))
+      }, (stats.perVar ++ metadata ++
+        stats.manifest.map(StatsSource.Sidecar -> _)).map {
+        case (rel, bytes) => s"$cleanRoot/$rel" -> bytes
       }, mkdirParents = layout.nestedKeys, conf)
+    stats.deletes.foreach(rel => GridIO.delete(s"$cleanRoot/$rel", conf))
     GridIO.delete(staging, conf)
-    // grow the coordinate array: overwrite IN PLACE (single chunk +
-    // metadata) — no delete first, so there is no crash window where
-    // the tree has no coordinate array at all. A stale extra chunk
-    // file from a foreign multi-chunk coord is ignored by readers (the
-    // rewritten metadata declares one chunk).
-    val combined = DimDef(along, concatCoords(exDim.coords, slabDim.coords),
-      exDim.calendar, exDim.units, exDim.attrs)
-    layout.writeCoord(cleanRoot, combined, conf)
-    growing.foreach { v =>
-      val a = existing.arrays(v.name)
-      val axisPos = v.dims.indexOf(along)
-      val metaPath = s"$cleanRoot/${v.name}/${layout.metaFile}"
-      val za = parseJson(GridIO.readAllBytes(metaPath, conf)).asInstanceOf[
-        com.fasterxml.jackson.databind.node.ObjectNode]
-      val sh = za.putArray("shape")
-      a.shape.updated(axisPos, a.shape(axisPos) + slabDim.size)
-        .foreach(sh.add)
-      GridIO.writeString(metaPath, new ObjectMapper().writeValueAsString(za),
-        conf)
-    }
-    // merged sidecar: untouched chunks keep their entries, the merged
-    // edge chunk and new chunks take the append's recomputed stats
-    // (same key -> the new entry wins)
-    StatsSource.merge(cleanRoot, existing.schema, existing.statsSource,
-      newEntries, conf)
-    layout.consolidateAppended(cleanRoot, existing.schema, conf)
     open(cleanRoot)
   }
 
@@ -2381,8 +2423,17 @@ object ZarrGridStore {
   def consolidate(root: String,
       conf: org.apache.hadoop.conf.Configuration): Unit = {
     val cleanRoot = root.stripSuffix("/")
-    val mapper = new ObjectMapper()
-    val top = mapper.createObjectNode()
+    GridIO.writeString(s"$cleanRoot/.zmetadata",
+      new ObjectMapper().writeValueAsString(listedMetadata(cleanRoot, conf)),
+      conf)
+  }
+
+  /** The consolidated-metadata document of the v2 tree at `cleanRoot`,
+    * read from its metadata files.
+    */
+  private def listedMetadata(cleanRoot: String,
+      conf: org.apache.hadoop.conf.Configuration): ObjectNode = {
+    val top = new ObjectMapper().createObjectNode()
     top.put("zarr_consolidated_format", 1)
     val meta = top.putObject("metadata")
     def add(rel: String): Unit = {
@@ -2395,8 +2446,47 @@ object ZarrGridStore {
     GridIO.listNames(cleanRoot, conf).filterNot(_.startsWith("."))
       .sorted.foreach { n => add(s"$n/.zarray"); add(s"$n/.zattrs") }
     require(meta.has(".zgroup"), s"not a Zarr v2 group: $cleanRoot")
-    GridIO.writeString(s"$cleanRoot/.zmetadata",
-      mapper.writeValueAsString(top), conf)
+    top
+  }
+
+  /** Every metadata file a v2 append replaces, (path relative to the
+    * root, new bytes), in commit order: the grown coordinate array, each
+    * growing variable's `.zarray` at its new shape, and `.zmetadata`
+    * last — the tree's consolidated document (read once; rebuilt from
+    * the metadata files only when the tree has none) with these nodes
+    * swapped in, so no live metadata file is re-read. A coordinate
+    * metadata file whose node the tree already holds as written (its
+    * `.zattrs`, typically) is left out; one from another writer (CF
+    * units other than this writer's, say) is replaced, since the grown
+    * chunk is encoded in this writer's units.
+    */
+  private[grid] def appendMetadata(cleanRoot: String, grown: DimDef,
+      shapes: Seq[(String, Seq[Int])],
+      conf: org.apache.hadoop.conf.Configuration)
+      : Seq[(String, Array[Byte])] = {
+    val mapper = new ObjectMapper()
+    val top =
+      try parseJson(GridIO.readAllBytes(s"$cleanRoot/.zmetadata", conf))
+        .asInstanceOf[ObjectNode]
+      catch {
+        case _: java.io.FileNotFoundException =>
+          listedMetadata(cleanRoot, conf)
+      }
+    val meta = top.get("metadata").asInstanceOf[ObjectNode]
+    def isMeta(rel: String) =
+      rel.endsWith("/.zarray") || rel.endsWith("/.zattrs")
+    val files = coordFiles(grown).filterNot { case (rel, bytes) =>
+      isMeta(rel) && Option(meta.get(rel)).contains(parseJson(bytes)) } ++
+      shapes.map { case (v, shape) =>
+        val za = meta.get(s"$v/.zarray").asInstanceOf[ObjectNode]
+        val sh = za.putArray("shape")
+        shape.foreach(sh.add)
+        s"$v/.zarray" -> GridIO.utf8(mapper.writeValueAsString(za))
+      }
+    files.foreach { case (rel, bytes) =>
+      if (isMeta(rel)) meta.set[JsonNode](rel, parseJson(bytes))
+    }
+    files :+ (".zmetadata" -> GridIO.utf8(mapper.writeValueAsString(top)))
   }
 
   /** Encode one dimension's coordinate payload + the attrs that tell a
@@ -2426,48 +2516,43 @@ object ZarrGridStore {
         s"${d.name}: string coordinates unsupported in Zarr stores")
     }
 
-  private[grid] def writeCoord(root: String, d: DimDef,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val dir = s"$root/${d.name}"
-    GridIO.mkdirs(dir, conf)
+  /** One v2 coordinate array as files, (path relative to the root,
+    * bytes): single chunk `0`, uncompressed, plus `.zarray`/`.zattrs`.
+    */
+  private[grid] def coordFiles(d: DimDef): Seq[(String, Array[Byte])] = {
+    val dir = d.name
     val n = d.size
-    d.coords match {
+    val (zarray, attrs, chunk) = d.coords match {
       case StringCoords(vs) =>
         // fixed-width UTF-32 ("<U<n>", numpy's unicode layout): what
         // xarray writes for string coordinate arrays
         val nchars = math.max(1,
           vs.map(s0 => s0.codePointCount(0, s0.length))
             .foldLeft(0)(math.max))
-        GridIO.writeString(s"$dir/.zarray",
-          zarrayJson(Seq(n), Seq(math.max(n, 1)), s"<U$nchars", None,
-            "null"), conf)
-        GridIO.writeString(s"$dir/.zattrs",
-          attrsJson(d.attrs, Some(Seq(d.name))), conf)
-        if (n > 0) {
-          val bb = ByteBuffer.allocate(n * nchars * 4)
-            .order(ByteOrder.LITTLE_ENDIAN)
-          vs.foreach { s0 =>
-            var written = 0
-            var i = 0
-            while (i < s0.length) {
-              val cp = s0.codePointAt(i)
-              bb.putInt(cp)
-              written += 1
-              i += Character.charCount(cp)
-            }
-            while (written < nchars) { bb.putInt(0); written += 1 }
+        val bb = ByteBuffer.allocate(n * nchars * 4)
+          .order(ByteOrder.LITTLE_ENDIAN)
+        vs.foreach { s0 =>
+          var written = 0
+          var i = 0
+          while (i < s0.length) {
+            val cp = s0.codePointAt(i)
+            bb.putInt(cp)
+            written += 1
+            i += Character.charCount(cp)
           }
-          GridIO.write(s"$dir/0", bb.array(), conf)
+          while (written < nchars) { bb.putInt(0); written += 1 }
         }
-        return
-      case _ => ()
+        (zarrayJson(Seq(n), Seq(math.max(n, 1)), s"<U$nchars", None, "null"),
+          attrsJson(d.attrs, Some(Seq(d.name))), bb.array())
+      case _ =>
+        val (data, dtype, extraAttrs) = coordPayload(d)
+        (zarrayJson(Seq(n), Seq(math.max(n, 1)), dtypeString(dtype), None,
+          "null"), attrsJson(d.attrs ++ extraAttrs, Some(Seq(d.name))),
+          toLE(data, dtype))
     }
-    val (data, dtype, extraAttrs) = coordPayload(d)
-    GridIO.writeString(s"$dir/.zarray", zarrayJson(Seq(n), Seq(math.max(n, 1)),
-      dtypeString(dtype), None, "null"), conf)
-    GridIO.writeString(s"$dir/.zattrs",
-      attrsJson(d.attrs ++ extraAttrs, Some(Seq(d.name))), conf)
-    if (n > 0) GridIO.write(s"$dir/0", toLE(data, dtype), conf)
+    Seq(s"$dir/.zarray" -> GridIO.utf8(zarray),
+      s"$dir/.zattrs" -> GridIO.utf8(attrs)) ++
+      (if (n > 0) Seq(s"$dir/0" -> chunk) else Nil)
   }
 
   /** `none | zlib[:level] | gzip[:level] | zstd[:level] |

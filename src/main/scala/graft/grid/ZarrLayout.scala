@@ -23,9 +23,6 @@ sealed trait ZarrLayout extends Serializable {
       chunks: Map[String, Int], comp: Option[(String, Int)],
       conf: Configuration): Unit
 
-  /** (Re)write one coordinate array in place: single chunk, metadata. */
-  def writeCoord(cleanRoot: String, d: DimDef, conf: Configuration): Unit
-
   /** Inner chunk shape of a sharded data variable, None when unsharded. */
   def innerShape(v: VarDef, chunkSz: Seq[Int]): Option[Seq[Int]]
 
@@ -41,7 +38,7 @@ sealed trait ZarrLayout extends Serializable {
   def nestedKeys: Boolean
 
   /** Per-array metadata file: an append's version stamp and the shape
-    * it rewrites.
+    * it replaces.
     */
   def metaFile: String
 
@@ -53,11 +50,17 @@ sealed trait ZarrLayout extends Serializable {
   /** Consolidated metadata after a fresh write's chunks landed. */
   def consolidateWritten(cleanRoot: String, conf: Configuration): Unit
 
-  /** Consolidated metadata after an append rewrote coordinates and
-    * shapes; `schema` is the pre-append dataset (its array order).
+  /** Every metadata file an append replaces, (path relative to the
+    * root, new bytes), in commit order with the consolidated metadata
+    * last: the coordinate array `grown`, each growing variable's
+    * metadata at its new shape (`shapes`), and the consolidated
+    * metadata built from these nodes in memory. `schema` is the
+    * pre-append dataset. Nothing is written here: the append's staged
+    * commit lands the files.
     */
-  def consolidateAppended(cleanRoot: String, schema: GridSchema,
-      conf: Configuration): Unit
+  def appendedMetadata(cleanRoot: String, schema: GridSchema,
+      grown: DimDef, shapes: Seq[(String, Seq[Int])],
+      conf: Configuration): Seq[(String, Array[Byte])]
 }
 
 object ZarrLayout {
@@ -70,8 +73,6 @@ object ZarrLayout {
         chunks: Map[String, Int], comp: Option[(String, Int)],
         conf: Configuration): Unit =
       ZarrGridStore.writeShell(schema, cleanRoot, chunks, comp, conf)
-    def writeCoord(cleanRoot: String, d: DimDef, conf: Configuration): Unit =
-      ZarrGridStore.writeCoord(cleanRoot, d, conf)
     def innerShape(v: VarDef, chunkSz: Seq[Int]): Option[Seq[Int]] = None
     def chunkKey(ciDotted: String): String = ciDotted
     val scalarKey = "0"
@@ -86,9 +87,10 @@ object ZarrLayout {
       }
     def consolidateWritten(cleanRoot: String, conf: Configuration): Unit =
       ZarrGridStore.consolidate(cleanRoot, conf)
-    def consolidateAppended(cleanRoot: String, schema: GridSchema,
-        conf: Configuration): Unit =
-      ZarrGridStore.consolidate(cleanRoot, conf)
+    def appendedMetadata(cleanRoot: String, schema: GridSchema,
+        grown: DimDef, shapes: Seq[(String, Seq[Int])],
+        conf: Configuration): Seq[(String, Array[Byte])] =
+      ZarrGridStore.appendMetadata(cleanRoot, grown, shapes, conf)
   }
 
   /** Zarr v3: `zarr.json` per array, default `c/a/b` keys, the
@@ -107,11 +109,6 @@ object ZarrLayout {
         chunks: Map[String, Int], comp: Option[(String, Int)],
         conf: Configuration): Unit =
       ZarrV3.writeMetadataShell(schema, cleanRoot, chunks, comp, this, conf)
-    def writeCoord(cleanRoot: String, d: DimDef, conf: Configuration): Unit = {
-      ZarrV3.writeCoordArray(cleanRoot, d,
-        new com.fasterxml.jackson.databind.ObjectMapper(), conf)
-      ()
-    }
     def innerShape(v: VarDef, chunkSz: Seq[Int]): Option[Seq[Int]] =
       if (shardInner.isEmpty || v.dims.isEmpty) None // scalars: no shards
       else Some(v.dims.zip(chunkSz).map { case (d, outer) =>
@@ -135,12 +132,14 @@ object ZarrLayout {
       }
     def consolidateWritten(cleanRoot: String, conf: Configuration): Unit =
       () // the shell already wrote the inline consolidated root
-    def consolidateAppended(cleanRoot: String, schema: GridSchema,
-        conf: Configuration): Unit =
+    def appendedMetadata(cleanRoot: String, schema: GridSchema,
+        grown: DimDef, shapes: Seq[(String, Seq[Int])],
+        conf: Configuration): Seq[(String, Array[Byte])] =
       // the writer's metadata order (dims, then vars) keeps the rebuilt
       // root byte-identical to a one-shot write of the grown dataset
-      ZarrV3.reconsolidateRoot(cleanRoot,
-        schema.dims.map(_.name) ++ schema.vars.map(_.name), conf)
+      ZarrV3.appendMetadata(cleanRoot,
+        schema.dims.map(_.name) ++ schema.vars.map(_.name), grown, shapes,
+        conf)
   }
 
   /** The layout of the existing tree at `cleanRoot`. */

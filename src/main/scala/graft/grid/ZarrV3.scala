@@ -54,14 +54,22 @@ object ZarrV3 {
 
   // ---- open ----------------------------------------------------------
 
-  def open(root: String): ZarrGridStore =
-    open(root, new SerializableHadoopConf(GridIO.driverConf()))
+  def open(root: String): ZarrGridStore = {
+    val cleanRoot = root.stripSuffix("/")
+    open(cleanRoot, new SerializableHadoopConf(GridIO.driverConf()),
+      s"$cleanRoot/zarr.json")
+  }
 
-  def open(root: String, hconf: SerializableHadoopConf): ZarrGridStore = {
+  /** `rootPath` is the root metadata document to read: `zarr.json`, or
+    * its backup while an append's commit has moved it aside
+    * ([[GridIO.liveOrBackup]]).
+    */
+  def open(root: String, hconf: SerializableHadoopConf,
+      rootPath: String): ZarrGridStore = {
     val conf = hconf.value
     val cleanRoot = root.stripSuffix("/")
     val rootMeta = ZarrGridStore.parseJson(
-      GridIO.readAllBytes(s"$cleanRoot/zarr.json", conf))
+      GridIO.readAllBytes(rootPath, conf))
     require(rootMeta.path("zarr_format").asInt(0) == 3,
       s"unsupported zarr_format ${rootMeta.path("zarr_format")} in " +
         s"$cleanRoot/zarr.json")
@@ -401,15 +409,44 @@ object ZarrV3 {
 
   // ---- write ---------------------------------------------------------
 
-  /** Rebuild the root `zarr.json` (group attributes preserved, inline
-    * consolidated metadata refreshed from the per-array files, in the
-    * given array order).
+  /** Every metadata file a v3 append replaces, (path relative to the
+    * root, new bytes), in commit order: the grown coordinate array
+    * (its `zarr.json` carries the grown shape, so every file of it
+    * changes), each growing variable's `zarr.json` at its new shape,
+    * and the root `zarr.json` last — group attributes preserved, its
+    * inline consolidated metadata with these nodes swapped in, so no
+    * live array metadata is re-read. A root without consolidated metadata
+    * gets it, built from the per-array files in `order` (the
+    * pre-append dataset's dims, then vars; unlisted arrays sorted
+    * after).
     */
-  private[grid] def reconsolidateRoot(cleanRoot: String,
-      order: Seq[String], conf: org.apache.hadoop.conf.Configuration): Unit = {
+  private[grid] def appendMetadata(cleanRoot: String, order: Seq[String],
+      grown: DimDef, shapes: Seq[(String, Seq[Int])],
+      conf: org.apache.hadoop.conf.Configuration)
+      : Seq[(String, Array[Byte])] = {
     val mapper = new ObjectMapper()
     val rootMeta = ZarrGridStore.parseJson(
       GridIO.readAllBytes(s"$cleanRoot/zarr.json", conf))
+    val nodes = scala.collection.mutable.LinkedHashMap.empty[String, JsonNode]
+    rootMeta.path("consolidated_metadata").path("metadata") match {
+      case m if m.isObject =>
+        m.properties().asScala.foreach(e => nodes(e.getKey) = e.getValue)
+      case _ =>
+        val listed = GridIO.listNames(cleanRoot, conf)
+          .filterNot(_.startsWith("."))
+          .filter(n => GridIO.exists(s"$cleanRoot/$n/zarr.json", conf))
+        (order.filter(listed.contains) ++ listed.filterNot(order.contains)
+          .sorted).foreach(n => nodes(n) = ZarrGridStore.parseJson(
+            GridIO.readAllBytes(s"$cleanRoot/$n/zarr.json", conf)))
+    }
+    val (coordNode, coordFiles) = coordArrayFiles(grown, mapper)
+    nodes(grown.name) = coordNode
+    val files = coordFiles ++ shapes.map { case (v, shape) =>
+      val node = nodes(v).asInstanceOf[ObjectNode]
+      val sh = node.putArray("shape")
+      shape.foreach(sh.add)
+      s"$v/zarr.json" -> GridIO.utf8(mapper.writeValueAsString(node))
+    }
     val top = mapper.createObjectNode()
     top.put("zarr_format", 3)
     top.put("node_type", "group")
@@ -421,14 +458,8 @@ object ZarrV3 {
     consolidated.put("kind", "inline")
     consolidated.put("must_understand", false)
     val metaNode = consolidated.putObject("metadata")
-    val listed = GridIO.listNames(cleanRoot, conf)
-      .filterNot(_.startsWith("."))
-      .filter(n => GridIO.exists(s"$cleanRoot/$n/zarr.json", conf))
-    (order.filter(listed.contains) ++ listed.filterNot(order.contains).sorted)
-      .foreach(n => metaNode.set[JsonNode](n, ZarrGridStore.parseJson(
-        GridIO.readAllBytes(s"$cleanRoot/$n/zarr.json", conf))))
-    GridIO.writeString(s"$cleanRoot/zarr.json",
-      mapper.writeValueAsString(top), conf)
+    nodes.foreach { case (n, m) => metaNode.set[JsonNode](n, m) }
+    files :+ ("zarr.json" -> GridIO.utf8(mapper.writeValueAsString(top)))
   }
 
   private[grid] def parseV3Compressor(
@@ -457,7 +488,11 @@ object ZarrV3 {
     // coordinate arrays: single chunk, uncompressed (metadata-sized);
     // string coordinates take zarr-python 3's native vlen-utf8 layout
     schema.dims.foreach { d =>
-      arrayMetaNodes += d.name -> writeCoordArray(cleanRoot, d, mapper, conf)
+      val (meta, files) = coordArrayFiles(d, mapper)
+      GridIO.mkdirs(s"$cleanRoot/${d.name}", conf)
+      files.foreach { case (rel, bytes) =>
+        GridIO.write(s"$cleanRoot/$rel", bytes, conf) }
+      arrayMetaNodes += d.name -> meta
     }
 
     schema.vars.foreach { v =>
@@ -491,11 +526,11 @@ object ZarrV3 {
 
   /** One coordinate array: single chunk, uncompressed (vlen-utf8 for
     * string coords). Returns the array's metadata node for the
-    * consolidated root.
+    * consolidated root and its files, (path relative to the root,
+    * bytes).
     */
-  private[grid] def writeCoordArray(cleanRoot: String, d: DimDef,
-      mapper: ObjectMapper,
-      conf: org.apache.hadoop.conf.Configuration): ObjectNode = {
+  private[grid] def coordArrayFiles(d: DimDef, mapper: ObjectMapper)
+      : (ObjectNode, Seq[(String, Array[Byte])]) = {
     val n = d.size
     val (payload, dtype, extraAttrs) = d.coords match {
       case StringCoords(vs) =>
@@ -507,11 +542,9 @@ object ZarrV3 {
     }
     val meta = arrayJson(mapper, Seq(n), Seq(math.max(n, 1)), dtype,
       None, Seq(d.name), d.attrs ++ extraAttrs)
-    GridIO.mkdirs(s"$cleanRoot/${d.name}", conf)
-    GridIO.writeString(s"$cleanRoot/${d.name}/zarr.json",
-      mapper.writeValueAsString(meta), conf)
-    if (n > 0) GridIO.write(s"$cleanRoot/${d.name}/c/0", payload, conf)
-    meta
+    (meta, Seq(s"${d.name}/zarr.json" ->
+      GridIO.utf8(mapper.writeValueAsString(meta))) ++
+      (if (n > 0) Seq(s"${d.name}/c/0" -> payload) else Nil))
   }
 
   /** One shard's bytes: per-inner-chunk compressed streams followed by

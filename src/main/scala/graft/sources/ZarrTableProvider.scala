@@ -180,9 +180,9 @@ private[sources] object ZarrWrite {
     require(shardInner.isEmpty || format == "v3",
       "zarr write: shards requires .option(\"format\", \"v3\")")
     val conf = GridIO.driverConf()
-    val exists = GridIO.exists(s"$root/.zmetadata", conf) ||
-      GridIO.exists(s"$root/.zgroup", conf) ||
-      GridIO.exists(s"$root/zarr.json", conf)
+    // a root an append's commit has moved aside is still a tree
+    val exists = GridIO.liveOrBackup(Seq(s"$root/.zmetadata",
+      s"$root/.zgroup", s"$root/zarr.json"), conf).isDefined
 
     // 0-d (scalar) variables: listed columns carry one constant value
     // (rioxarray's `spatial_ref` pattern) and write as shape-[] arrays
@@ -244,34 +244,51 @@ private[sources] object ZarrWrite {
   }
 
   /** GridSchema of the pivoted DataFrame: coordinates are the sorted
-    * distinct values of each dim column (ascending — one metadata-sized
-    * job per dim), variables are every remaining column.
+    * distinct values of each dim column (ascending, as
+    * `distinct().orderBy()` gives them; every dim in one aggregate),
+    * variables are every remaining column. A NULL dim value fails.
     */
   private[sources] def inferGridSchema(df: DataFrame,
       dims: Seq[String], scalarVars: Seq[String] = Seq.empty): GridSchema = {
-    import df.sparkSession.implicits._
     import org.apache.spark.sql.functions._
     val fieldType = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val dimDefs = dims.map { d =>
-      val coords: CoordArray = fieldType(d) match {
-        case DoubleType =>
-          DoubleCoords(df.select(col(d)).distinct().orderBy(col(d))
-            .as[Double].collect())
-        case FloatType =>
-          FloatCoords(df.select(col(d)).distinct().orderBy(col(d))
-            .as[Float].collect())
-        case IntegerType =>
-          IntCoords(df.select(col(d)).distinct().orderBy(col(d))
-            .as[Int].collect())
-        case LongType =>
-          LongCoords(df.select(col(d)).distinct().orderBy(col(d))
-            .as[Long].collect())
-        case TimestampType =>
-          TimeCoords(df.select(unix_micros(col(d)).as(d)).distinct()
-            .orderBy(col(d)).as[Long].collect())
+    val float = dims.map(d =>
+      fieldType(d) == DoubleType || fieldType(d) == FloatType)
+    val keys = dims.zip(float).map { case (d, fl) =>
+      fieldType(d) match {
+        // distinct() folds -0.0 into 0.0 and every NaN into one (Spark
+        // normalizes float grouping keys); collect_set keeps -0.0 and
+        // 0.0 apart and each NaN, so NaNs leave the set (counted below,
+        // re-added last, where the ascending order puts NaN)
+        case t if fl =>
+          when(!isnan(col(d)),
+            when(col(d) === 0, lit(0).cast(t)).otherwise(col(d)))
+        case IntegerType | LongType => col(d)
+        case TimestampType => unix_micros(col(d))
         case other => throw new IllegalArgumentException(
           s"zarr write: dim '$d' has unsupported type $other " +
             "(double/float/int/long/timestamp)")
+      }
+    }
+    val n = dims.size
+    val aggs = keys.map(k => array_sort(collect_set(k))) ++
+      dims.map(d => count(when(col(d).isNull, 1))) ++
+      dims.zip(float).map { case (d, fl) =>
+        if (fl) count(when(isnan(col(d)), 1)) else lit(0L) }
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val dimDefs = dims.zipWithIndex.map { case (d, i) =>
+      require(row.getLong(n + i) == 0,
+        s"zarr write: dim '$d' holds NULL values (a coordinate cannot be " +
+          "NULL)")
+      val nan = row.getLong(2 * n + i) > 0
+      val coords: CoordArray = fieldType(d) match {
+        case DoubleType => DoubleCoords(
+          row.getSeq[Double](i).toArray ++ (if (nan) Seq(Double.NaN) else Nil))
+        case FloatType => FloatCoords(
+          row.getSeq[Float](i).toArray ++ (if (nan) Seq(Float.NaN) else Nil))
+        case IntegerType => IntCoords(row.getSeq[Int](i).toArray)
+        case LongType => LongCoords(row.getSeq[Long](i).toArray)
+        case _ => TimeCoords(row.getSeq[Long](i).toArray)
       }
       DimDef(d, coords)
     }

@@ -163,8 +163,8 @@ object GridStreams {
     * sharded v3 — [[graft.grid.ZarrGridStore.decodeChunkPayload]] is
     * the shared path); scaled variables surface in their logical
     * masked-double form, and PADDED edge cells are dropped (they are
-    * storage, not data). Chunk files the writer REWRITES in place (an
-    * unaligned append's merged edge chunk) are not re-delivered: the
+    * storage, not data). Chunk files the writer REPLACES (an unaligned
+    * append's merged edge chunk) are not re-delivered: the
     * file source tracks paths, so tail stores that grow by whole
     * chunks.
     *

@@ -31,15 +31,15 @@ object GridSurface {
 
   val both: Seq[GridSurface] = Seq(Context, Format)
 
-  /** `src` written as a fresh Zarr tree chunked by `chunks`. With
+  /** `src` written as a fresh Zarr tree chunked by `chunks`, under
+    * `dir` (the calling suite's [[TempDirs.tempDir]]). With
     * `stats = false` the value-stats sidecar is dropped, as on a tree
     * from another writer: data-variable predicates then decide nothing
     * from metadata.
     */
-  def tree(src: GridStore, chunks: Map[String, Int],
+  def tree(dir: java.nio.file.Path, src: GridStore, chunks: Map[String, Int],
       stats: Boolean = true): ZarrGridStore = {
-    val root = java.nio.file.Files.createTempDirectory("graft-surface")
-      .resolve("z").toString
+    val root = dir.resolve("z").toString
     val store = ZarrGridStore.write(src, root, chunks)
     if (stats) store
     else {

@@ -8,24 +8,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver's parquet read of that dir fails visibly) and the shared JSON
   * escaping must survive control characters in exception messages / SQL.
   */
-class VerifyArtifactsSpec extends AnyFunSuite {
+class VerifyArtifactsSpec extends AnyFunSuite with TempDirs {
 
   test("writeError pins the marker at <outDir>/<name>/_ERROR.txt") {
-    val out = Files.createTempDirectory("graft-verify-spec")
-    try {
-      val p: Path =
-        Verify.writeError(out.toString, "events_hourly", "boom: analysis")
-      assert(p === out.resolve("events_hourly").resolve("_ERROR.txt"))
-      assert(Files.readString(p) === "boom: analysis")
-      // repeat write (e.g. retried run) overwrites, does not throw
-      Verify.writeError(out.toString, "events_hourly", "boom 2")
-      assert(Files.readString(p) === "boom 2")
-    } finally {
-      out.toFile.listFiles().foreach { d =>
-        Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-      }
-      Files.deleteIfExists(out)
-    }
+    val out = tempDir("graft-verify-spec")
+    val p: Path =
+      Verify.writeError(out.toString, "events_hourly", "boom: analysis")
+    assert(p === out.resolve("events_hourly").resolve("_ERROR.txt"))
+    assert(Files.readString(p) === "boom: analysis")
+    // repeat write (e.g. retried run) overwrites, does not throw
+    Verify.writeError(out.toString, "events_hourly", "boom 2")
+    assert(Files.readString(p) === "boom 2")
   }
 
   test("JsonUtil escapes quotes, backslashes, and control chars") {

@@ -1,12 +1,12 @@
 package graft.grid
 
-import graft.{GridSurface, SparkTestBase, XarrayContext}
+import graft.{GridSurface, SparkTestBase, TempDirs, XarrayContext}
 import graft.functions.RollingFingerprint
 import graft.operators.SkewOps
 import graft.sources.ReadCounters
 import org.apache.spark.sql.functions._
 
-class LazyGridViewSpec extends SparkTestBase {
+class LazyGridViewSpec extends SparkTestBase with TempDirs {
 
   private lazy val ctx = new XarrayContext(spark)
 
@@ -107,7 +107,8 @@ class LazyGridViewSpec extends SparkTestBase {
     // airSmall's lat axis DESCENDS (75 -> 50): the store fast path
     // preserves that order, discovery sorts ascending — an observable
     // discriminator for which strategy auto picked
-    val tree = GridSurface.tree(Fixtures.airSmall, Map("time" -> 6))
+    val tree = GridSurface.tree(tempDir("surface"), Fixtures.airSmall,
+      Map("time" -> 6))
     onBothSurfaces { s =>
       val df = s.read(spark, tree, Seq("time", "lat", "lon"))
       val pure = LazyGridView.auto(df, Seq("time", "lat", "lon"), Seq("air"))

@@ -1,14 +1,12 @@
 package graft.grid
 
-import graft.{SparkTestBase, XarrayContext}
+import graft.{SparkTestBase, TempDirs, XarrayContext}
 import org.apache.spark.sql.functions._
-
-import java.nio.file.Files
 
 /** Full-circle: Zarr tree -> SQL -> reverse pivot (template + fill) ->
   * array store -> Zarr tree. The "sinks" surface of SURVEY §2B.
   */
-class RoundTripSpec extends SparkTestBase {
+class RoundTripSpec extends SparkTestBase with TempDirs {
 
   test("template reverse pivot fills uncovered cells and keeps template order") {
     val ctx = new XarrayContext(spark)
@@ -47,7 +45,7 @@ class RoundTripSpec extends SparkTestBase {
       Seq("t", "lat", "lon"))
     // SQL transform: double the variable, then scatter back to a NEW
     // chunked Zarr tree without collecting it
-    val out = Files.createTempDirectory("graft-gw").toString
+    val out = tempDir("graft-gw").toString
     val schema = GridSchema(
       Fixtures.linearGrid.schema.dims,
       Seq(VarDef("air2", Seq("t", "lat", "lon"), GDouble)))
@@ -76,7 +74,7 @@ class RoundTripSpec extends SparkTestBase {
       assert(slab(a * 48 + b * 8 + c) == law(Array(5 + a, 3 + b, 1 + c)) * 2.0)
 
     // missing cells prefill NaN; duplicate cells reject
-    val sparseOut = Files.createTempDirectory("graft-gw2").toString
+    val sparseOut = tempDir("graft-gw2").toString
     val sparse = ZarrGridStore.writeFromRows(
       df.filter(col("t") < 2).select(col("t"), col("lat"), col("lon"),
         col("air").as("air2")),
@@ -90,7 +88,7 @@ class RoundTripSpec extends SparkTestBase {
         df.select(col("t"), col("lat"), col("lon"), col("air").as("air2"))
           .union(df.select(col("t"), col("lat"), col("lon"),
             col("air").as("air2"))),
-        schema, Map("t" -> 6), Files.createTempDirectory("graft-gw3").toString)
+        schema, Map("t" -> 6), tempDir("graft-gw3").toString)
     }
     assert(dup.getMessage.contains("duplicate cell") ||
       dup.getCause != null)
@@ -98,7 +96,7 @@ class RoundTripSpec extends SparkTestBase {
 
   test("distributed append: staged chunks rename past the extent") {
     val ctx = new XarrayContext(spark)
-    val root = Files.createTempDirectory("graft-gwappend").toString + "/store"
+    val root = tempDir("graft-gwappend").toString + "/store"
     ZarrGridStore.write(Fixtures.linearGridSlice(0, 12), root,
       Map("t" -> 6), "zstd")
     val airDir = new java.io.File(root, "air")
@@ -138,7 +136,7 @@ class RoundTripSpec extends SparkTestBase {
     val ctx = new XarrayContext(spark)
     val df = ctx.dataFrame("fc_gw_src", Fixtures.forecastGrid,
       Map("lead" -> 2), Seq("time", "lead"))
-    val out = Files.createTempDirectory("graft-gw-dur").toString
+    val out = tempDir("graft-gw-dur").toString
     // executors encode with the declared compressor; open() recovers it
     ZarrGridStore.writeFromRows(df.select(col("time"), col("lead"), col("fc")),
       Fixtures.forecastGrid.schema, Map("lead" -> 2), out, "zstd")
@@ -160,7 +158,7 @@ class RoundTripSpec extends SparkTestBase {
 
   test("disk -> SQL -> grid -> store -> disk round trip") {
     val ctx = new XarrayContext(spark)
-    val dir1 = Files.createTempDirectory("graft-rt1").toString
+    val dir1 = tempDir("graft-rt1").toString
     val disk = ZarrGridStore.write(Fixtures.linearGrid, dir1, Map("t" -> 6))
     val df = ctx.dataFrame("rt_disk", disk, disk.chunkMap,
       Seq("t", "lat", "lon"))
@@ -182,7 +180,7 @@ class RoundTripSpec extends SparkTestBase {
     assert(got == law(Array(7, 2, 2)))
 
     // and it persists back to disk losslessly
-    val dir2 = Files.createTempDirectory("graft-rt2").toString
+    val dir2 = tempDir("graft-rt2").toString
     val disk2 = ZarrGridStore.write(mem, dir2, Map("t" -> 4))
     val a = mem.readVar("air", Seq((4, 4), (0, 12), (0, 10)))
       .asInstanceOf[Array[Double]]
@@ -193,7 +191,7 @@ class RoundTripSpec extends SparkTestBase {
 
   test("rechunk compacts a fragmented store; values, stats, pruning survive") {
     val ctx = new XarrayContext(spark)
-    val base = Files.createTempDirectory("graft-rechunk").toString
+    val base = tempDir("graft-rechunk").toString
     // fragmented: 24 t-steps in 8 chunks of 3 (the post-append shape)
     val frag = ZarrGridStore.writeFromRows(
       ctx.dataFrame("rc_src", Fixtures.linearGrid, Map("t" -> 6),
@@ -224,7 +222,7 @@ class RoundTripSpec extends SparkTestBase {
   test("rechunk round-trips values for randomized chunk specs") {
     val ctx = new XarrayContext(spark)
     val rnd = new scala.util.Random(1234)
-    val base = Files.createTempDirectory("graft-rechunk-rand").toString
+    val base = tempDir("graft-rechunk-rand").toString
     for (case_ <- 0 until 6) {
       // random 2-D shape, random source and destination chunkings
       // (including unchunked dims and non-divisible chunk sizes)
@@ -252,7 +250,7 @@ class RoundTripSpec extends SparkTestBase {
 
   test("rechunk handles multi-dim-group stores and inherits the codec") {
     val ctx = new XarrayContext(spark)
-    val base = Files.createTempDirectory("graft-rechunk-mixed").toString
+    val base = tempDir("graft-rechunk-mixed").toString
     // t2m over (time, lat), pressure over (time, lat, level) — two
     // pivot tables, one store
     val src = ZarrGridStore.write(Fixtures.mixedDims, s"$base/src",

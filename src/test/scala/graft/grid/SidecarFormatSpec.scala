@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.grid.ZarrLayout.{V2, V3}
 
 import java.nio.file.{Files, Path}
@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 /** The writer-format invariant the stats reader rests on: every writer
   * emits only the current stats format.
   */
-class SidecarFormatSpec extends SparkTestBase {
+class SidecarFormatSpec extends SparkTestBase with TempDirs {
 
   /** An fp for every manifest var, `n` on every shard ref, no v1 body. */
   private def checkStats(root: Path): Unit = {
@@ -34,7 +34,7 @@ class SidecarFormatSpec extends SparkTestBase {
     def schema(lo: Int, hi: Int) = GridSchema(
       Seq(DimDef("t", IntCoords((lo until hi).toArray))),
       Seq(VarDef("x", Seq("t"), GDouble)))
-    val dir = Files.createTempDirectory("sidecar_fmt")
+    val dir = tempDir("sidecar_fmt")
     try for (((layout, comp), i) <- Seq(V2 -> "zlib",
         V3(Map("t" -> 2)) -> "zstd:3").zipWithIndex) {
       val Seq(w, wd, rs) = Seq("w", "wd", "rs").map(o => dir.resolve(s"$o$i"))

@@ -127,7 +127,7 @@ class StatsSidecarPropertySpec extends AnyFunSuite with TempDirs {
       val merged = freshRoot()
       StatsSource.write(merged, schema, oldE, c)
       val oldSrc = StatsSource.open(merged, new SerializableHadoopConf(c))
-      StatsSource.merge(merged, schema, oldSrc, newE, c)
+      StatsSource.merge(merged, schema, oldSrc, newE, c).land(merged, c)
       allStatsBytes(merged) == allStatsBytes(oneShot)
     }
 
@@ -159,7 +159,7 @@ class StatsSidecarPropertySpec extends AnyFunSuite with TempDirs {
     StatsSource.write(merged, schema, base, c)
     val src = StatsSource.open(merged, new SerializableHadoopConf(c))
     GridIO.Counters.reset()
-    StatsSource.merge(merged, schema, src, news, c)
+    StatsSource.merge(merged, schema, src, news, c).land(merged, c)
     // reads: per-var shard dir (suffixSplit) + 2 suffix shards + the
     // writer's own stale-layout re-read of the shard dir = 4, never
     // the 1 + 8 a full load pays

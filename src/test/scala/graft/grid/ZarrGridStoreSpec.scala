@@ -221,6 +221,35 @@ class ZarrGridStoreSpec extends SparkTestBase with TempDirs {
       ZarrGridStore.open(empty.toString)).getMessage.contains(".zgroup"))
   }
 
+  test("an over-long chunk: a coordinate reads its prefix, a variable fails") {
+    // an append lands a coordinate's grown chunk before the metadata
+    // that declares the new length; no such window exists for a data
+    // variable, whose over-long chunk stays an error
+    val root = tmp()
+    def le(vs: Double*): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(vs.size * 8)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      vs.foreach(bb.putDouble)
+      bb.array()
+    }
+    put(root, ".zgroup", """{"zarr_format":2}""")
+    Seq("t", "v").foreach { a =>
+      put(root, s"$a/.zarray",
+        """{"zarr_format":2,"shape":[3],"chunks":[3],"dtype":"<f8",
+          |"compressor":null,"fill_value":null,"order":"C",
+          |"filters":null}""".stripMargin)
+      put(root, s"$a/.zattrs", """{"_ARRAY_DIMENSIONS":["t"]}""")
+      putBytes(root, s"$a/0", le(1.0, 2.0, 3.0, 4.0))
+    }
+    val store = ZarrGridStore.open(root.toString)
+    assert(store.schema.dim("t").coords.asInstanceOf[DoubleCoords]
+      .values.toSeq == Seq(1.0, 2.0, 3.0))
+    val err = intercept[IllegalArgumentException](
+      store.readVar("v", Seq((0, 3))))
+    assert(err.getMessage.contains("decodes to 32 bytes, expected 24"),
+      err.getMessage)
+  }
+
   test("registered zarr store prunes chunk opens on a dim predicate") {
     val root = tmp().resolve("reg").toString
     val store = ZarrGridStore.write(Fixtures.linearGrid, root,

@@ -479,4 +479,50 @@ class ZarrTimeDtypeSpec extends SparkTestBase with TempDirs {
     val big = store.readVar("big", Seq((0, 6))).asInstanceOf[Array[Long]]
     assert(big(4) == (1L << 41) + 4L)
   }
+
+  /** Append hours 24..29 to a 24-hour [[Fixtures.writeM8Tree]]-shaped
+    * tree and check the grown time axis and `temp` read back whole.
+    */
+  private def appendSixHoursAndCheck(root: String): Unit = {
+    val epoch2021us = 1609459200L * 1000000L
+    val hour = 3600000000L
+    val rows = spark.range(24, 30).select(
+      expr(s"timestamp_micros($epoch2021us + id * $hour)").as("time"),
+      (lit(15.0) + col("id") * 0.5).as("temp"))
+    val slab = GridSchema(
+      Seq(DimDef("time", TimeCoords((24 until 30)
+        .map(k => epoch2021us + k * hour).toArray))),
+      Seq(VarDef("temp", Seq("time"), GDouble)))
+    ZarrGridStore.appendFromRows(rows, slab, root, "time")
+    val store = ZarrGridStore.open(root)
+    val tc = store.schema.dim("time").coords.asInstanceOf[TimeCoords]
+    assert(tc.values.toSeq == (0 until 30).map(k => epoch2021us + k * hour))
+    val temp = store.readVar("temp", Seq((0, 30))).asInstanceOf[Array[Double]]
+    assert(temp.toSeq == (0 until 30).map(15.0 + 0.5 * _))
+  }
+
+  test("append to a <M8[ns] time axis re-encodes the coordinate (v2)") {
+    val root = tmp().resolve("m8_append").toString
+    Fixtures.writeM8Tree(root)
+    appendSixHoursAndCheck(root)
+  }
+
+  test("append to an int64 'hours since 1900' time axis re-encodes it (v2)") {
+    val root = tmp().resolve("cf_append").toString
+    Fixtures.writeM8Tree(root)
+    // another writer's CF encoding of the same hours
+    GridIO.writeString(s"$root/time/.zarray",
+      """{"zarr_format":2,"shape":[24],"chunks":[24],"dtype":"<i8",
+        |"compressor":null,"fill_value":null,"order":"C",
+        |"filters":null}""".stripMargin, conf)
+    GridIO.writeString(s"$root/time/.zattrs",
+      """{"_ARRAY_DIMENSIONS":["time"],"units":"hours since 1900-01-01",
+        |"calendar":"proleptic_gregorian"}""".stripMargin, conf)
+    val hours1900To2021 = 1060680L // 44195 days
+    val tb = ByteBuffer.allocate(24 * 8).order(ByteOrder.LITTLE_ENDIAN)
+    (0 until 24).foreach(k => tb.putLong(hours1900To2021 + k))
+    GridIO.write(s"$root/time/0", tb.array(), conf)
+    ZarrGridStore.consolidate(root, conf)
+    appendSixHoursAndCheck(root)
+  }
 }

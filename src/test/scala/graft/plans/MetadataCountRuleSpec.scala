@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{GridSurface, SparkTestBase}
+import graft.{GridSurface, SparkTestBase, TempDirs}
 import graft.grid.{Fixtures, ZarrGridStore}
 import graft.sources.ReadCounters
 import org.apache.spark.sql.SparkSession
@@ -10,16 +10,16 @@ import org.apache.spark.sql.functions._
   * metadata when every partition falls provably inside or outside the
   * predicate region, and bails to the normal pruned scan otherwise.
   */
-class MetadataCountRuleSpec extends SparkTestBase {
+class MetadataCountRuleSpec extends SparkTestBase with TempDirs {
 
   private lazy val session: SparkSession = SparkTestBase.withExtensions
 
   // pruneGrid: 100 days x 5 lats, 4 time chunks of 25 days; the second
   // tree carries no value stats
-  private lazy val pruneTree = GridSurface.tree(Fixtures.pruneGrid,
-    Map("time" -> 25))
-  private lazy val pruneTreeNoStats = GridSurface.tree(Fixtures.pruneGrid,
-    Map("time" -> 25), stats = false)
+  private lazy val pruneTree = GridSurface.tree(tempDir("surface"),
+    Fixtures.pruneGrid, Map("time" -> 25))
+  private lazy val pruneTreeNoStats = GridSurface.tree(tempDir("surface"),
+    Fixtures.pruneGrid, Map("time" -> 25), stats = false)
 
   private def df(s: GridSurface, store: ZarrGridStore = pruneTree) =
     s.read(session, store, Seq("time", "lat"))
@@ -109,7 +109,8 @@ class MetadataCountRuleSpec extends SparkTestBase {
     // grade constant per time chunk ("g0".."g3"): equality and range
     // predicates fully classify every chunk, so the COUNT is pure
     // metadata — the includes() dual works for StrBounds too
-    val store = GridSurface.tree(Fixtures.gradeGrid, Map("time" -> 25))
+    val store = GridSurface.tree(tempDir("surface"), Fixtures.gradeGrid,
+      Map("time" -> 25))
     onBothSurfaces { s =>
       val df = this.df(s, store)
       ReadCounters.reset()

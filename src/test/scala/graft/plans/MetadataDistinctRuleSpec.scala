@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{GridSurface, SparkTestBase}
+import graft.{GridSurface, SparkTestBase, TempDirs}
 import graft.grid.Fixtures
 import graft.sources.ReadCounters
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,13 +13,13 @@ import org.apache.spark.sql.functions._
   * under non-separable predicates or over data variables bails to the
   * normal scan.
   */
-class MetadataDistinctRuleSpec extends SparkTestBase {
+class MetadataDistinctRuleSpec extends SparkTestBase with TempDirs {
 
   private lazy val session: SparkSession = SparkTestBase.withExtensions
 
   // pruneGrid: 100 days x 5 lats (-90, -45, 0, 45, 90), 4 time chunks
-  private lazy val pruneTree = GridSurface.tree(Fixtures.pruneGrid,
-    Map("time" -> 25))
+  private lazy val pruneTree = GridSurface.tree(tempDir("surface"),
+    Fixtures.pruneGrid, Map("time" -> 25))
 
   private def df(s: GridSurface): DataFrame =
     s.read(session, pruneTree, Seq("time", "lat"))
@@ -126,7 +126,8 @@ class MetadataDistinctRuleSpec extends SparkTestBase {
 
   test("STRING-dim DISTINCT: UTF8String coords, filtered, scanless") {
     // stationGrid: 8 string stations x 10 timestamps
-    val store = GridSurface.tree(Fixtures.stationGrid, Map("time" -> 5))
+    val store = GridSurface.tree(tempDir("surface"), Fixtures.stationGrid,
+      Map("time" -> 5))
     onBothSurfaces { s =>
       val sg = s.read(session, store, Seq("station", "time"))
       ReadCounters.reset()

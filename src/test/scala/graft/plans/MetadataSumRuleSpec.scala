@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{GridSurface, SparkTestBase}
+import graft.{GridSurface, SparkTestBase, TempDirs}
 import graft.grid._
 import graft.sources.ReadCounters
 import org.apache.spark.sql.SparkSession
@@ -11,14 +11,14 @@ import org.apache.spark.sql.functions._
   * inside/outside the predicate region, boundary chunks alone scanned
   * otherwise, NaN chunks always scanned so IEEE semantics survive.
   */
-class MetadataSumRuleSpec extends SparkTestBase {
+class MetadataSumRuleSpec extends SparkTestBase with TempDirs {
 
   private lazy val session: SparkSession = SparkTestBase.withExtensions
 
   // linearGrid written as a Zarr tree: t 0..23 (4 chunks of 6), lat 12,
   // lon 10; air = 200 + t + 2*iLat + 3*jLon (exact integer-valued doubles)
   private lazy val diskStore: ZarrGridStore =
-    GridSurface.tree(Fixtures.linearGrid, Map("t" -> 6))
+    GridSurface.tree(tempDir("surface"), Fixtures.linearGrid, Map("t" -> 6))
 
   private def airSum(ts: Range): Double =
     (for (t <- ts; i <- 0 until 12; j <- 0 until 10)
@@ -76,7 +76,7 @@ class MetadataSumRuleSpec extends SparkTestBase {
     }
     val g = Fixtures.linearGrid
     val src = SyntheticGridStore(g.schema, Map("air" -> nanLaw))
-    val store = GridSurface.tree(src, Map("t" -> 6))
+    val store = GridSurface.tree(tempDir("surface"), src, Map("t" -> 6))
     assert(store.sums.size == 3) // chunk 3 refused (non-finite)
     onBothSurfaces { s =>
       val ndf = df(s, store)
@@ -139,7 +139,8 @@ class MetadataSumRuleSpec extends SparkTestBase {
     // grade constant per chunk fully classifies every chunk, so
     // SUM(reading) WHERE grade = 'g1' folds the included chunk's
     // recorded sum — zero partitions opened, exact integer value
-    val store = GridSurface.tree(Fixtures.gradeGrid, Map("time" -> 25))
+    val store = GridSurface.tree(tempDir("surface"), Fixtures.gradeGrid,
+      Map("time" -> 25))
     onBothSurfaces { s =>
       val gdf = s.read(session, store, Seq("time", "lat"))
       ReadCounters.reset()

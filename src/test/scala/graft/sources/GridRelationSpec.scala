@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{GridSurface, SparkTestBase}
+import graft.{GridSurface, SparkTestBase, TempDirs}
 import graft.grid.Fixtures
 import org.apache.spark.sql.functions._
 
@@ -8,12 +8,13 @@ import org.apache.spark.sql.functions._
   * metadata rewrites open the same chunks through `format("zarr")` as
   * through a registered [[graft.XarrayContext]] DataFrame.
   */
-class GridRelationSpec extends SparkTestBase {
+class GridRelationSpec extends SparkTestBase with TempDirs {
 
   private lazy val session = SparkTestBase.withExtensions
 
   // linearGrid: t 0..23 in 4 chunks of 6, lat 12, lon 10
-  private lazy val tree = GridSurface.tree(Fixtures.linearGrid, Map("t" -> 6))
+  private lazy val tree = GridSurface.tree(tempDir("surface"),
+    Fixtures.linearGrid, Map("t" -> 6))
 
   test("metadata probe opens the same chunks on both surfaces") {
     val probe = Seq(

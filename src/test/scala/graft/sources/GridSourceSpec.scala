@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{SparkTestBase, XarrayContext}
+import graft.{SparkTestBase, TempDirs, XarrayContext}
 import graft.grid.{Fixtures, GridResult}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * pushdown to storage (:1274-1415), COUNT(*) without data reads
   * (:1395-1415), stats-driven broadcast joins (tests/test_stats.py:94-124).
   */
-class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper
+    with TempDirs {
 
   private lazy val ctx = new XarrayContext(spark)
 
@@ -683,7 +684,8 @@ class GridSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     // linearGrid t-chunks of 6 with value stats: air = 200 + t + 2i + 3j,
     // so chunk c spans [200 + 6c, 254 + 6c] and air < 215 excludes c = 3
-    val store = graft.GridSurface.tree(Fixtures.linearGrid, Map("t" -> 6))
+    val store = graft.GridSurface.tree(tempDir("surface"),
+      Fixtures.linearGrid, Map("t" -> 6))
     val gt = new GridTable("restricted", store, store.chunkMap,
       Seq("t", "lat", "lon"))
     val blocks = (1 to 3).map(c => Seq((6 * c, 6), (0, 12), (0, 10)))

@@ -237,4 +237,58 @@ class ZarrWriteFormatSpec extends SparkTestBase with TempDirs {
     assert(back.filter(col("t") === 7).select("seen").collect()
       .head.getTimestamp(0).getTime == (1609459200L + 7 * 60) * 1000L)
   }
+
+  test("inferred coordinates equal distinct().orderBy(): -0.0, NaN, timestamps") {
+    import spark.implicits._
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val ds = Seq(3.0, -0.0, 0.0, nan, -inf, inf, 3.0, -1.5, nan, -0.0)
+    val df = ds.zipWithIndex.map { case (d, k) =>
+      (d, d.toFloat, k % 4 - 2, (k % 3).toLong * -7L,
+        // pre-epoch, epoch and post-epoch instants, each repeated
+        new java.sql.Timestamp((k % 3 - 1) * 3155760000000L + k % 2 * 1000L),
+        k.toDouble)
+    }.toDF("d", "f", "i", "l", "ts", "v")
+    // -0.0 alone (no +0.0 beside it) must fold to 0.0 as well
+    val negZero = Seq((-0.0, -0.0f, 1.0), (2.0, 2.0f, 2.0)).toDF("d", "f", "v")
+    def bits(c: graft.grid.CoordArray): Seq[Long] = c match {
+      case graft.grid.DoubleCoords(v) => v.toSeq.map(java.lang.Double.doubleToLongBits)
+      case graft.grid.FloatCoords(v) =>
+        v.toSeq.map(x => java.lang.Float.floatToIntBits(x).toLong)
+      case graft.grid.IntCoords(v) => v.toSeq.map(_.toLong)
+      case graft.grid.LongCoords(v) => v.toSeq
+      case graft.grid.TimeCoords(v) => v.toSeq
+      case other => fail(s"unexpected coords $other")
+    }
+    def reference(df: org.apache.spark.sql.DataFrame, d: String): Seq[Long] = {
+      val c = df.select(col(d)).distinct().orderBy(col(d))
+      df.schema(d).dataType match {
+        case org.apache.spark.sql.types.DoubleType => c.as[Double].collect()
+          .toSeq.map(java.lang.Double.doubleToLongBits)
+        case org.apache.spark.sql.types.FloatType => c.as[Float].collect()
+          .toSeq.map(x => java.lang.Float.floatToIntBits(x).toLong)
+        case org.apache.spark.sql.types.IntegerType =>
+          c.as[Int].collect().toSeq.map(_.toLong)
+        case org.apache.spark.sql.types.LongType => c.as[Long].collect().toSeq
+        case _ => df.select(unix_micros(col(d)).as(d)).distinct()
+          .orderBy(col(d)).as[Long].collect().toSeq
+      }
+    }
+    Seq(df -> Seq("d", "f", "i", "l", "ts"), negZero -> Seq("d", "f"))
+      .foreach { case (frame, dims) =>
+        val schema = ZarrWrite.inferGridSchema(frame, dims)
+        dims.foreach(d => assert(bits(schema.dim(d).coords) ==
+          reference(frame, d), d))
+      }
+  }
+
+  test("a NULL dim value fails naming the dim") {
+    val df = spark.range(0, 6).select(
+      when(col("id") === 3, lit(null)).otherwise(col("id").cast("double"))
+        .as("lat"), col("id").cast("int").as("t"), col("id").as("x"))
+    val e = intercept[IllegalArgumentException](
+      ZarrWrite.inferGridSchema(df, Seq("t", "lat")))
+    assert(e.getMessage.contains("'lat'") && e.getMessage.contains("NULL"),
+      e.getMessage)
+  }
 }
