@@ -27,6 +27,20 @@ case object GTimestamp extends GridType { val sparkType = TimestampType; val byt
 case object GDuration extends GridType { val sparkType = DayTimeIntervalType(); val byteWidth = 8 }
 case object GString extends GridType { val sparkType = StringType; val byteWidth = 16 }
 
+object GridType {
+  /** The grid type a Spark column of type `dt` writes as, if any. */
+  def of(dt: DataType): Option[GridType] = dt match {
+    case DoubleType => Some(GDouble)
+    case FloatType => Some(GFloat)
+    case IntegerType => Some(GInt)
+    case LongType => Some(GLong)
+    case TimestampType => Some(GTimestamp)
+    case _: DayTimeIntervalType => Some(GDuration)
+    case StringType => Some(GString) // vlen-utf8 (v2 |O, v3 "string")
+    case _ => None
+  }
+}
+
 /** A 1-D dimension-coordinate array (the axis labels of one dimension).
   * May be ascending or descending (descending axes are load-bearing in the
   * reference, e.g. NCEP latitude 75 -> 15; reference df.py:455-460).

@@ -2082,15 +2082,28 @@ object ZarrGridStore {
     writeTree(schema, root, chunks, compressor, layout,
       scalarValueFromRows(df, _)) { sinks =>
       sinks.flatMap { case (v, sink) =>
-        GridWriter.writeVar(df, schema, chunks, sink, v)
+        val s = GridWriter.scatter(df, v, v.dims.map(schema.dim),
+          sink.chunkSz, None)
+        s.requireKnownCoords()
+        s.assemble(sink)
       }
     }
 
   /** Distributed DataFrame → Zarr APPEND along one dimension, for v2
-    * and v3 trees alike (the tree's own [[ZarrLayout]] is detected):
-    * the slab's rows scatter through [[GridWriter.writeVar]]'s
-    * one-shuffle reverse pivot STRAIGHT onto the store-global chunk
-    * grid in a staging tree beside the store (executors write the
+    * and v3 trees alike (the tree's own [[ZarrLayout]] is detected).
+    * `df` carries the store's dim columns of every variable it grows
+    * and one column per growing variable; nothing else about the slab
+    * is declared, so it is evaluated once. The slab's rows scatter
+    * through [[GridWriter.scatter]]'s one-shuffle reverse pivot with
+    * `along` bound late: the non-growing dims are the store's own
+    * coordinates, the variables are `df`'s other columns, and the map
+    * stage learns the slab's `along` labels. The driver then ranks the
+    * labels and runs every slab check before a chunk is staged: NULL,
+    * NaN and overlapping labels fail (-0.0 is 0.0, so it overlaps a
+    * stored 0.0), a non-growing value the store lacks fails, and so
+    * does a slab that leaves one of the store's non-growing coordinates
+    * uncovered. The reduce scatters straight onto the store-global
+    * chunk grid in a staging tree beside the store (executors write the
     * chunk files, flat-named). The append then builds every metadata
     * file it replaces in memory — the grown coordinate array,
     * each growing variable's shape, the merged stats sidecar and the
@@ -2109,14 +2122,13 @@ object ZarrGridStore {
     * does, and the result is byte-identical to a one-shot write.
     * Sharded variables stage whole SHARDS (stored-file granularity), so
     * an unaligned old extent costs one decode + re-encode per edge
-    * SHARD. Non-growing dims must carry
-    * identical coordinates; the tree must use this writer's chunk keys
-    * and a plain little-endian C-order unpacked encoding for every
-    * growing variable (anything else fails loudly up front — staged
-    * chunks are encoded plain, and silently mixing encodings inside one
-    * array corrupts it). Appended edge chunks pad with NaN/0 like every
-    * other write. SINGLE WRITER per store: staging is uniquely
-    * suffixed, so a crashed append leaves an inert `.staging-*` tree —
+    * SHARD. The tree must use this writer's chunk keys and a plain
+    * little-endian C-order unpacked encoding for every growing variable
+    * (anything else fails loudly up front — staged chunks are encoded
+    * plain, and silently mixing encodings inside one array corrupts
+    * it). Appended edge chunks pad with NaN/0 like every other write.
+    * SINGLE WRITER per store: staging is uniquely suffixed, so a
+    * crashed append leaves an inert `.staging-*` tree —
     * plus, if the crash hit the commit, at most one file moved aside to
     * its backup ([[GridIO.replaceWithBackup]]) — which the next
     * append's staging sweep heals first (a reader in between may see a
@@ -2124,8 +2136,7 @@ object ZarrGridStore {
     * that commits during staging is detected via a metadata version
     * stamp and aborts this append loudly.
     */
-  def appendFromRows(df: org.apache.spark.sql.DataFrame,
-      slabSchema: GridSchema, root: String,
+  def appendFromRows(df: org.apache.spark.sql.DataFrame, root: String,
       along: String): ZarrGridStore = {
     val conf = GridIO.driverConf()
     val cleanRoot = root.stripSuffix("/")
@@ -2141,17 +2152,22 @@ object ZarrGridStore {
     val versionKey = GridIO.statusOf(versionPath, conf)
     val existing = open(cleanRoot)
     val exDim = existing.schema.dim(along)
-    val slabDim = slabSchema.dim(along)
-    require(slabDim.size > 0, s"empty slab on $along")
-    rejectOverlappingSlab(exDim, slabDim, along)
-    // non-growing dims must match coordinate-for-coordinate
-    slabSchema.dims.filterNot(_.name == along).foreach { d =>
-      val ex = existing.schema.dim(d.name)
-      require(coordValues(ex.coords) == coordValues(d.coords),
-        s"dim ${d.name} of the slab differs from the store")
+    val storeDims = existing.schema.dimNames.toSet
+    // the slab's variables are its non-dim columns, each a store
+    // variable spanning the axis; their dims and dtypes are the store's
+    val growing = df.columns.toSeq.filterNot(storeDims).map { c =>
+      val a = existing.arrays.getOrElse(c,
+        throw new IllegalArgumentException(
+          s"variable $c does not exist in the store"))
+      require(a.dims.contains(along), s"variable $c does not span $along")
+      require(GridType.of(df.schema(c).dataType).contains(a.dtype),
+        s"$c: slab type ${df.schema(c).dataType.simpleString} vs stored " +
+          a.dtype)
+      VarDef(c, a.dims, a.dtype)
     }
-    val growing = slabSchema.vars.filter(_.dims.contains(along))
     require(growing.nonEmpty, s"no slab variable spans $along")
+    growing.flatMap(_.dims).distinct.foreach(d => require(
+      df.columns.contains(d), s"the slab has no column for dim $d"))
     // every STORE variable spanning the axis must grow with it, or the
     // tree's shapes would silently diverge from the coordinate array
     existing.schema.vars.filter(_.dims.contains(along)).foreach { sv =>
@@ -2161,17 +2177,7 @@ object ZarrGridStore {
     }
     layout.requireAppendKeys(existing, growing)
     growing.foreach { v =>
-      val a = existing.arrays.getOrElse(v.name,
-        throw new IllegalArgumentException(
-          s"variable ${v.name} does not exist in the store"))
-      require(a.dtype == v.dtype,
-        s"${v.name}: slab dtype ${v.dtype} vs stored ${a.dtype}")
-      // dims must match as an ORDERED list: the scatter keys and
-      // C-orders chunks in the slab variable's own dim order, so a
-      // permuted slab would silently write transposed data
-      require(a.dims == v.dims,
-        s"${v.name}: slab dims (${v.dims.mkString(",")}) must equal " +
-          s"stored dims (${a.dims.mkString(",")})")
+      val a = existing.arrays(v.name)
       // staged chunks/shards are encoded plain little-endian,
       // unfiltered, C-order, unpacked, unscaled (string variables: the
       // vlen-utf8 layout this writer emits) — reject trees declaring
@@ -2200,30 +2206,59 @@ object ZarrGridStore {
       }
     }
 
+    // map stages: each variable's cells keyed by the stored-file grid
+    // (= shard grid when sharded; per-var, so variables may chunk the
+    // axis differently) with `along` bound late
+    val scattered = growing.map(v => GridWriter.scatter(df, v,
+      v.dims.map(existing.schema.dim), existing.arrays(v.name).chunkShape,
+      Some(along)))
+    // every slab check runs here, before any chunk is staged
+    val kind = exDim.coords.gridType
+    scattered.foreach { s =>
+      s.requireKnownCoords()
+      require(!s.seen.nulls(s.v.dims.indexOf(along)),
+        s"slab $along holds NULL values (a coordinate cannot be NULL)")
+      s.uncovered.foreach { case (d, got, want) =>
+        throw new IllegalArgumentException(s"dim $d of the slab differs " +
+          s"from the store: the slab covers $got of its $want coordinates")
+      }
+    }
+    val labelSet = scattered.head.seen.labels
+    require(scattered.forall(_.seen.labels == labelSet),
+      s"the slab's variables carry different $along labels")
+    val labels = Labels.sorted(kind,
+      labelSet.toArray(new Array[java.lang.Long](0)).map(_.longValue))
+    require(labels.nonEmpty, s"empty slab on $along")
+    require(!labels.exists(Labels.isNaN(kind, _)),
+      s"slab $along holds NaN (an axis label cannot be NaN)")
+    val slabCoords = Labels.coords(kind, labels)
+    rejectOverlappingSlab(exDim, labels, along)
+
     val staging = cleanRoot + ".staging-" +
       java.util.UUID.randomUUID().toString.take(8)
-    val globalSize = exDim.size + slabDim.size
-    val newEntries = growing.flatMap { v =>
-      GridIO.mkdirs(s"$staging/${v.name}", conf)
-      val a = existing.arrays(v.name)
-      // the stored-file grid (= shard grid when sharded) keys the
-      // scatter; per-var, so variables may chunk the axis differently
-      val varChunks = v.dims.zip(a.chunkShape).toMap
-      val axisPos = v.dims.indexOf(along)
-      val alongChunk = a.chunkShape(axisPos)
-      val edgeLen = exDim.size % alongChunk
-      // flat staging names: the commit below maps them to layout keys
-      val base = GridWriter.ZarrSink(staging, v.dtype, a.chunkShape,
-        a.sharding.map(_.innerShape),
-        a.sharding.map(_.innerCompressor).getOrElse(a.compressor),
-        identity)
-      val sink =
-        if (edgeLen > 0) EdgeMergeSink(base, cleanRoot, a, axisPos,
-          exDim.size / alongChunk, edgeLen)
-        else base
-      GridWriter.writeVar(df, slabSchema, varChunks, sink, v,
-        globalAlong = Some((along, exDim.size, globalSize)))
-    }
+    val globalSize = exDim.size + labels.length
+    val ranks = new LabelIndex(labels)
+    val newEntries =
+      try scattered.flatMap { s =>
+        val v = s.v
+        GridIO.mkdirs(s"$staging/${v.name}", conf)
+        val a = existing.arrays(v.name)
+        val axisPos = v.dims.indexOf(along)
+        val alongChunk = a.chunkShape(axisPos)
+        val edgeLen = exDim.size % alongChunk
+        // flat staging names: the commit below maps them to layout keys
+        val base = GridWriter.ZarrSink(staging, v.dtype, a.chunkShape,
+          a.sharding.map(_.innerShape),
+          a.sharding.map(_.innerCompressor).getOrElse(a.compressor),
+          identity)
+        val sink =
+          if (edgeLen > 0) EdgeMergeSink(base, cleanRoot, a, axisPos,
+            exDim.size / alongChunk, edgeLen)
+          else base
+        s.assemble(sink, ranks, exDim.size, globalSize)
+      } catch {
+        case e: Throwable => GridIO.delete(staging, conf); throw e
+      }
     appendTestHook(cleanRoot)
     checkNoConcurrentAppend(cleanRoot, staging, versionPath, versionKey,
       conf)
@@ -2232,13 +2267,13 @@ object ZarrGridStore {
     // stats (untouched chunks keep their entries, the merged edge chunk
     // and new chunks take the append's recomputed stats) and the
     // consolidated metadata
-    val combined = DimDef(along, concatCoords(exDim.coords, slabDim.coords),
+    val combined = DimDef(along, concatCoords(exDim.coords, slabCoords),
       exDim.calendar, exDim.units, exDim.attrs)
     val metadata = layout.appendedMetadata(cleanRoot, existing.schema,
       combined, growing.map { v =>
         val a = existing.arrays(v.name)
         val axisPos = v.dims.indexOf(along)
-        v.name -> a.shape.updated(axisPos, a.shape(axisPos) + slabDim.size)
+        v.name -> a.shape.updated(axisPos, a.shape(axisPos) + labels.length)
       }, conf)
     val stats = StatsSource.merge(cleanRoot, existing.schema,
       existing.statsSource, newEntries, conf)
@@ -2375,27 +2410,18 @@ object ZarrGridStore {
   /** Appending a slab whose `along` coordinates overlap the store
     * would silently DUPLICATE axis labels (the coordinate array just
     * concatenates) and double-count those steps in every later scan —
-    * [[appendFromRows]] calls this to reject it. Compares internal
-    * values, so no external-box mismatch can slip an overlap through.
+    * [[appendFromRows]] calls this to reject it. Compares [[Labels]],
+    * so no external-box mismatch can slip an overlap through and -0.0
+    * meets a stored 0.0.
     */
-  private[grid] def rejectOverlappingSlab(exDim: DimDef, slabDim: DimDef,
+  private[grid] def rejectOverlappingSlab(exDim: DimDef, slab: Array[Long],
       along: String): Unit = {
-    val have = coordValues(exDim.coords).toSet
-    val dup = coordValues(slabDim.coords).filter(have)
+    val have = Labels.of(exDim.coords).toSet
+    val dup = slab.filter(have).map(Labels.show(exDim.coords.gridType, _))
     require(dup.isEmpty,
       s"slab $along coordinates overlap the store " +
-        s"(${dup.take(3).mkString(", ")}${if (dup.size > 3) ", ..." else ""})" +
+        s"(${dup.take(3).mkString(", ")}${if (dup.length > 3) ", ..." else ""})" +
         " — duplicate axis labels would double-count those steps")
-  }
-
-  private[grid] def coordValues(c: CoordArray): Seq[Any] = c match {
-    case DoubleCoords(v) => v.toSeq
-    case FloatCoords(v) => v.toSeq
-    case IntCoords(v) => v.toSeq
-    case LongCoords(v) => v.toSeq
-    case TimeCoords(v) => v.toSeq
-    case DurationCoords(v) => v.toSeq
-    case StringCoords(v) => v.toSeq
   }
 
   private[grid] def concatCoords(a: CoordArray, b: CoordArray): CoordArray =

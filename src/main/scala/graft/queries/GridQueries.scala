@@ -618,7 +618,7 @@ object GridQueries {
         graft.grid.ZarrGridStore.appendFromRows(
           ctx.dataFrame(s"append_slab@$root/$lo", slab,
             Map("t" -> 6), Seq("t", "lat", "lon")),
-          slab.schema, root, "t")
+          root, "t")
       }
       append(9, 19)
       val appended = append(19, 24)

@@ -54,10 +54,11 @@ import scala.jdk.CollectionConverters._
   * otherwise grows it along `appendDim`
   * ([[graft.grid.ZarrGridStore.appendFromRows]]). Spark's DSv2 path
   * rejects ErrorIfExists/Ignore for path-based TableProviders, so
-  * those modes are unavailable by construction. Dimension coordinates
-  * are the sorted distinct values of the `dims` columns (one small
-  * distinct job per dim); cells absent from the DataFrame fill with
-  * NaN/0 and duplicate cells fail loudly.
+  * those modes are unavailable by construction. A new tree's dimension
+  * coordinates are the sorted distinct values of the `dims` columns
+  * (one distinct over every dim); an append takes the store's and
+  * learns the slab's labels inside its scatter. Cells absent from the
+  * DataFrame fill with NaN/0 and duplicate cells fail loudly.
   */
 class ZarrTableProvider extends TableProvider with DataSourceRegister {
 
@@ -127,8 +128,8 @@ class ZarrTable(options: CaseInsensitiveStringMap,
 }
 
 /** The write side of `df.write.format("zarr")`: schema inference from
-  * the DataFrame (dims option -> coordinate discovery via one small
-  * DISTINCT job per dim) and dispatch to the distributed writers.
+  * the DataFrame for a new tree (dims option -> coordinate discovery via
+  * one DISTINCT over every dim) and dispatch to the distributed writers.
   */
 private[sources] object ZarrWrite {
 
@@ -196,9 +197,9 @@ private[sources] object ZarrWrite {
         s"zarr write: '$c' cannot be both a dim and a scalar variable")
     }
 
-    val schema = inferGridSchema(df, dims, scalarVars)
     def create(): Unit = {
-      ZarrGridStore.writeFromRows(df, schema, chunks, root, compressor,
+      ZarrGridStore.writeFromRows(df, inferGridSchema(df, dims, scalarVars),
+        chunks, root, compressor,
         if (format == "v3") ZarrLayout.V3(shardInner) else ZarrLayout.V2)
       ()
     }
@@ -220,7 +221,9 @@ private[sources] object ZarrWrite {
         "zarr write: scalarVars cannot be appended (a 0-d variable " +
           "does not span the append dim); write scalars with " +
           "mode(\"overwrite\") or at tree creation")
-      ZarrGridStore.appendFromRows(df, schema, root, along)
+      // no inference: the store declares the dims, the scatter learns
+      // the slab's labels, so the slab is evaluated once
+      ZarrGridStore.appendFromRows(df, root, along)
     }
     // a group write maintains the HIERARCHY: every ancestor between
     // the path root and the subgroup gets minimal group metadata (of
@@ -245,65 +248,39 @@ private[sources] object ZarrWrite {
 
   /** GridSchema of the pivoted DataFrame: coordinates are the sorted
     * distinct values of each dim column (ascending, as
-    * `distinct().orderBy()` gives them; every dim in one aggregate),
-    * variables are every remaining column. A NULL dim value fails.
+    * `distinct().orderBy()` gives them), variables are every remaining
+    * column. One codegen'd distinct over (dim ordinal, label) finds
+    * them, with the scatter's label normalization ([[Labels]]: -0.0
+    * folds into 0.0 and every NaN into one, sorted last). A NULL dim
+    * value fails.
     */
   private[sources] def inferGridSchema(df: DataFrame,
       dims: Seq[String], scalarVars: Seq[String] = Seq.empty): GridSchema = {
     import org.apache.spark.sql.functions._
     val fieldType = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val float = dims.map(d =>
-      fieldType(d) == DoubleType || fieldType(d) == FloatType)
-    val keys = dims.zip(float).map { case (d, fl) =>
-      fieldType(d) match {
-        // distinct() folds -0.0 into 0.0 and every NaN into one (Spark
-        // normalizes float grouping keys); collect_set keeps -0.0 and
-        // 0.0 apart and each NaN, so NaNs leave the set (counted below,
-        // re-added last, where the ascending order puts NaN)
-        case t if fl =>
-          when(!isnan(col(d)),
-            when(col(d) === 0, lit(0).cast(t)).otherwise(col(d)))
-        case IntegerType | LongType => col(d)
-        case TimestampType => unix_micros(col(d))
-        case other => throw new IllegalArgumentException(
-          s"zarr write: dim '$d' has unsupported type $other " +
-            "(double/float/int/long/timestamp)")
-      }
+    val kinds = dims.map(d => fieldType(d) match {
+      case DoubleType | FloatType | IntegerType | LongType | TimestampType =>
+        GridType.of(fieldType(d)).get
+      case other => throw new IllegalArgumentException(
+        s"zarr write: dim '$d' has unsupported type $other " +
+          "(double/float/int/long/timestamp)")
+    })
+    val pairs = dims.zip(kinds).zipWithIndex.map { case ((d, k), i) =>
+      struct(lit(i).as("d"), Labels.column(df, d, k).as("l"))
     }
-    val n = dims.size
-    val aggs = keys.map(k => array_sort(collect_set(k))) ++
-      dims.map(d => count(when(col(d).isNull, 1))) ++
-      dims.zip(float).map { case (d, fl) =>
-        if (fl) count(when(isnan(col(d)), 1)) else lit(0L) }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val dimDefs = dims.zipWithIndex.map { case (d, i) =>
-      require(row.getLong(n + i) == 0,
+    val found = df.select(inline(array(pairs: _*))).distinct().collect()
+      .groupBy(_.getInt(0))
+    val dimDefs = dims.zip(kinds).zipWithIndex.map { case ((d, k), i) =>
+      val rows = found.getOrElse(i, Array.empty)
+      require(!rows.exists(_.isNullAt(1)),
         s"zarr write: dim '$d' holds NULL values (a coordinate cannot be " +
           "NULL)")
-      val nan = row.getLong(2 * n + i) > 0
-      val coords: CoordArray = fieldType(d) match {
-        case DoubleType => DoubleCoords(
-          row.getSeq[Double](i).toArray ++ (if (nan) Seq(Double.NaN) else Nil))
-        case FloatType => FloatCoords(
-          row.getSeq[Float](i).toArray ++ (if (nan) Seq(Float.NaN) else Nil))
-        case IntegerType => IntCoords(row.getSeq[Int](i).toArray)
-        case LongType => LongCoords(row.getSeq[Long](i).toArray)
-        case _ => TimeCoords(row.getSeq[Long](i).toArray)
-      }
-      DimDef(d, coords)
+      DimDef(d, Labels.coords(k, Labels.sorted(k, rows.map(_.getLong(1)))))
     }
     val vars = df.columns.toSeq.filterNot(dims.contains).map { c =>
-      val dt = fieldType(c) match {
-        case DoubleType => GDouble
-        case FloatType => GFloat
-        case IntegerType => GInt
-        case LongType => GLong
-        case TimestampType => GTimestamp
-        case _: DayTimeIntervalType => GDuration
-        case StringType => GString // vlen-utf8 (v2 |O, v3 "string")
-        case other => throw new IllegalArgumentException(
-          s"zarr write: variable '$c' has unsupported type $other")
-      }
+      val dt = GridType.of(fieldType(c)).getOrElse(
+        throw new IllegalArgumentException(
+          s"zarr write: variable '$c' has unsupported type ${fieldType(c)}"))
       VarDef(c, if (scalarVars.contains(c)) Seq.empty else dims, dt)
     }
     require(vars.exists(_.dims.nonEmpty),

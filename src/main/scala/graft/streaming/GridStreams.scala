@@ -18,8 +18,8 @@ object GridStreams {
   /** A foreachBatch writer appending each micro-batch to the Zarr tree
     * at `root` along `along` (v2 or v3 — appendFromRows dispatches by
     * layout): the streaming head of a cloud archive. `rows` carries the
-    * store's dim columns and one column per data variable; the slab
-    * schema derives from the store itself per batch. Inherits
+    * store's dim columns and one column per data variable; dims and
+    * dtypes come from the store itself. Inherits
     * everything the batch append has: unaligned batches
     * read-modify-write the edge chunk, the commit protocol is
     * scheme-aware (renames on HDFS/local, atomic whole-object PUTs on
@@ -33,10 +33,9 @@ object GridStreams {
       (batch: DataFrame, _: Long) => appendBatch(batch, root, along)
     }
 
-  /** One micro-batch: drop already-present `along` values, build the
-    * slab schema from the store's own (non-along dims verbatim, vars
-    * verbatim, `along` = the batch's new coordinates ascending), and
-    * run the distributed unaligned append.
+  /** One micro-batch: drop already-present `along` values, check the
+    * remaining steps are complete, and run the distributed unaligned
+    * append (which learns the batch's `along` labels itself).
     *
     * Replay-safe: foreachBatch is at-least-once, so `along` values the
     * store already carries are dropped before appending — a replayed
@@ -70,14 +69,7 @@ object GridStreams {
     require(got == expect,
       s"micro-batch covers $got of $expect cells for its $along steps; " +
         "slabs must arrive complete within one batch")
-    val slabDims = existing.schema.dims.map { d =>
-      if (d.name != along) d
-      else DimDef(along, internalCoords(d.coords, alongVals),
-        d.calendar, d.units, d.attrs)
-    }
-    ZarrGridStore.appendFromRows(fresh,
-      GridSchema(slabDims, existing.schema.vars, existing.schema.attrs),
-      root, along)
+    ZarrGridStore.appendFromRows(fresh, root, along)
     ()
   }
 
@@ -130,25 +122,6 @@ object GridStreams {
       }
       case _ => bad()
     }
-  }
-
-  /** External (Row) coordinate values -> a CoordArray of the same kind
-    * as `template` (the inverse of [[LazyGridView.externalCoord]] for
-    * the axis types a streaming append can grow).
-    */
-  private def internalCoords(template: CoordArray,
-      vals: IndexedSeq[Any]): CoordArray = template match {
-    case _: IntCoords => IntCoords(vals.map(
-      internalValue(template, "along", _).asInstanceOf[Int]).toArray)
-    case _: LongCoords => LongCoords(vals.map(
-      internalValue(template, "along", _).asInstanceOf[Long]).toArray)
-    case _: DoubleCoords => DoubleCoords(vals.map(
-      internalValue(template, "along", _).asInstanceOf[Double]).toArray)
-    case _: TimeCoords => TimeCoords(vals.map(
-      internalValue(template, "along", _).asInstanceOf[Long]).toArray)
-    case other => throw new IllegalArgumentException(
-      s"streaming zarr append cannot grow a " +
-        s"${other.getClass.getSimpleName} axis")
   }
 
   /** Tail a growing Zarr tree as a STREAM — the read side of the

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{Bench, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -20,8 +21,11 @@ import java.util.concurrent.atomic.AtomicInteger
   * Without `--exec` each query's formatted physical plan is printed
   * unexecuted. With `--exec` each query runs once to warm its staging,
   * then again under a job counter: the line `[exec] <query> jobs=<n>
-  * time=<s>` precedes the final adaptive plan of that run (reused
-  * exchanges, runtime join changes). `--exec` collects the result, so
+  * time=<s> compiles=<n>` precedes the final adaptive plan of that run
+  * (reused exchanges, runtime join changes). `compiles` counts the
+  * generated classes Janino compiled during that warm run: above zero,
+  * the session's codegen cache (`spark.sql.codegen.cache.maxEntries`)
+  * evicted classes the first run built. `--exec` collects the result, so
   * use it on queries with small results. `--out` writes
   * `<dir>/<query>.txt` per query instead of printing. No query names
   * means every query.
@@ -58,13 +62,16 @@ object ExplainAll {
             // listener events arrive asynchronously: let the warm run's
             // jobs land before the counter resets
             Thread.sleep(300); jobs.set(0)
+            val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
             val t0 = System.nanoTime()
             // collect() executes THIS DataFrame's own QueryExecution, so
             // the explain below shows its final adaptive plan
             df.collect()
             val dt = (System.nanoTime() - t0) / 1e9
+            val compiles =
+              CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
             Thread.sleep(300)
-            f"[exec] $n jobs=${jobs.get} time=$dt%.3f%n"
+            f"[exec] $n jobs=${jobs.get} time=$dt%.3f compiles=$compiles%n"
           }
           head + df.queryExecution.explainString(FormattedMode)
         } catch { case e: Throwable => s"explain failed: $e\n" }

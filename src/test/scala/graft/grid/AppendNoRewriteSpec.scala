@@ -40,8 +40,7 @@ class AppendNoRewriteSpec extends SparkTestBase with TempDirs {
       Files.createLink(link, f)
       (root.relativize(f).toString, link, Files.readAllBytes(f))
     }
-    ZarrGridStore.appendFromRows(rows(cut, 24),
-      Fixtures.linearGridSlice(cut, 24).schema, root.toString, "t")
+    ZarrGridStore.appendFromRows(rows(cut, 24), root.toString, "t")
 
     recorded.foreach { case (rel, link, bytes) =>
       assert(java.util.Arrays.equals(Files.readAllBytes(link), bytes),

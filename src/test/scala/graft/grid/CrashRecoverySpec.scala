@@ -80,8 +80,7 @@ class CrashRecoverySpec extends SparkTestBase with TempDirs {
         ()
       }
       def append(at: String, lo: Int, hi: Int): ZarrGridStore =
-        ZarrGridStore.appendFromRows(rows(lo, hi),
-          Fixtures.linearGridSlice(lo, hi).schema, at, "t")
+        ZarrGridStore.appendFromRows(rows(lo, hi), at, "t")
 
       // ---- the protocol's steps, from an uncrashed append ----
       val copy = base.resolve("copy").toString
@@ -120,8 +119,8 @@ class CrashRecoverySpec extends SparkTestBase with TempDirs {
       // coordinate chunk) reads as fill until its replacement moves in
       val torn = tornChunk(crashAt)
       if (!torn)
-        assert(ZarrGridStore.coordValues(reopened.schema.dim("t").coords) ==
-          (0 until extent), s"$desc: coordinates")
+        assert(reopened.schema.dim("t").coords.asInstanceOf[IntCoords]
+          .values.toSeq == (0 until extent), s"$desc: coordinates")
       val full = Seq((0, extent), (0, 12), (0, 10))
       val got = reopened.readVar("air", full).asInstanceOf[Array[Double]]
       val want = Fixtures.linearGridSlice(0, extent).readVar("air", full)
@@ -186,8 +185,8 @@ class CrashRecoverySpec extends SparkTestBase with TempDirs {
         seen += step -> extent
         assert(extent == 9 || extent == 24, s"$label $step: extent $extent")
         if (!tornChunk(step)) {
-          assert(ZarrGridStore.coordValues(store.schema.dim("t").coords) ==
-            (0 until extent), s"$label $step: coordinates")
+          assert(store.schema.dim("t").coords.asInstanceOf[IntCoords]
+            .values.toSeq == (0 until extent), s"$label $step: coordinates")
           val full = Seq((0, extent), (0, 12), (0, 10))
           assert(store.readVar("air", full).asInstanceOf[Array[Double]]
             .sameElements(Fixtures.linearGridSlice(0, extent)
@@ -195,8 +194,7 @@ class CrashRecoverySpec extends SparkTestBase with TempDirs {
             s"$label $step: values")
         }
       }
-      try ZarrGridStore.appendFromRows(rows(9, 24),
-        Fixtures.linearGridSlice(9, 24).schema, root, "t")
+      try ZarrGridStore.appendFromRows(rows(9, 24), root, "t")
       finally GridIO.replaceTestHook = _ => ()
       val steps = seen.result()
       // the consolidated metadata is the commit point

@@ -74,7 +74,9 @@ class MockS3FileSystem extends RawLocalFileSystem {
     if (!overwrite && target.exists())
       throw new IOException(s"$f already exists")
     val parent = target.getParentFile
-    if (parent != null && !parent.exists() && !parent.mkdirs())
+    // two executor tasks may create the same parent at once: losing
+    // that race is not a failure (an object store has no directories)
+    if (parent != null && !parent.mkdirs() && !parent.isDirectory)
       throw new IOException(s"mkdirs failed for $parent")
     val inflight = new java.io.File(parent,
       s".inflight-${target.getName}-${MockS3FileSystem.seq.incrementAndGet()}")

@@ -67,8 +67,7 @@ class ObjectStoreCommitSpec extends SparkTestBase with TempDirs {
       ZarrGridStore.writeFromRows(rows(0, 7), schema(0, 7),
         Map("t" -> 4), root, "zstd:3")
       MockS3FileSystem.reset() // count the APPEND only
-      val grown = ZarrGridStore.appendFromRows(rows(7, 10), schema(7, 10),
-        root, "t")
+      val grown = ZarrGridStore.appendFromRows(rows(7, 10), root, "t")
       assert(MockS3FileSystem.renameCalls.get() == 0,
         "append used rename on an object store (copy+delete emulation)")
       assert(grown.schema.dim("t").size == 10)
@@ -102,7 +101,7 @@ class ObjectStoreCommitSpec extends SparkTestBase with TempDirs {
       ZarrGridStore.appendTestHook =
         _ => MockS3FileSystem.failNextPutClose.set(true)
       intercept[Exception] {
-        ZarrGridStore.appendFromRows(rows(7, 10), schema(7, 10), root, "t")
+        ZarrGridStore.appendFromRows(rows(7, 10), root, "t")
       }
       ZarrGridStore.appendTestHook = _ => ()
       // the store still opens on the OLD extent with the OLD values —
@@ -114,8 +113,7 @@ class ObjectStoreCommitSpec extends SparkTestBase with TempDirs {
         .toSeq == (0 until 7).map(_ * 2.0))
       // the retried append sweeps the staging residue and lands exactly
       MockS3FileSystem.reset()
-      val grown = ZarrGridStore.appendFromRows(rows(7, 10), schema(7, 10),
-        root, "t")
+      val grown = ZarrGridStore.appendFromRows(rows(7, 10), root, "t")
       assert(MockS3FileSystem.renameCalls.get() == 0)
       assert(grown.schema.dim("t").size == 10)
       assert(grown.readVar("x", Seq((0, 10))).asInstanceOf[Array[Double]]
@@ -132,8 +130,8 @@ class ObjectStoreCommitSpec extends SparkTestBase with TempDirs {
       ZarrGridStore.writeFromRows(rows(0, 7), schema(0, 7), Map("t" -> 4),
         root, "zstd:3", V3())
       MockS3FileSystem.reset()
-      val grown = ZarrGridStore.appendFromRows(rows(7, 10), schema(7, 10),
-        root, "t") // the tree's v3 layout is detected
+      // the tree's v3 layout is detected
+      val grown = ZarrGridStore.appendFromRows(rows(7, 10), root, "t")
       assert(MockS3FileSystem.renameCalls.get() == 0)
       assert(grown.readVar("x", Seq((0, 10))).asInstanceOf[Array[Double]]
         .toSeq == (0 until 10).map(_ * 2.0))

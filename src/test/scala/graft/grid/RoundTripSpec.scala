@@ -110,8 +110,7 @@ class RoundTripSpec extends SparkTestBase with TempDirs {
     def slabDf(lo: Int, hi: Int) = ctx.dataFrame(s"gw_slab$lo",
       Fixtures.linearGridSlice(lo, hi), Map("t" -> 6),
       Seq("t", "lat", "lon"))
-    val appended = ZarrGridStore.appendFromRows(slabDf(12, 24),
-      Fixtures.linearGridSlice(12, 24).schema, root, "t")
+    val appended = ZarrGridStore.appendFromRows(slabDf(12, 24), root, "t")
     assert(appended.schema.dim("t").size == 24)
     // old chunk files untouched (same mtime), two new ones
     val after = chunkMtimes

@@ -47,8 +47,7 @@ class SidecarFormatSpec extends SparkTestBase with TempDirs {
       Seq(w, wd, rs).foreach(checkStats)
       // unaligned (10 % 4 != 0), then aligned (12 % 4 == 0)
       Seq((10, 12), (12, 20)).foreach { case (lo, hi) =>
-        ZarrGridStore.appendFromRows(rows(lo, hi), schema(lo, hi),
-          rs.toString, "t")
+        ZarrGridStore.appendFromRows(rows(lo, hi), rs.toString, "t")
         checkStats(rs)
       }
     } finally hconf.unset(StatsSource.ShardEntriesKey)

@@ -489,11 +489,7 @@ class ZarrTimeDtypeSpec extends SparkTestBase with TempDirs {
     val rows = spark.range(24, 30).select(
       expr(s"timestamp_micros($epoch2021us + id * $hour)").as("time"),
       (lit(15.0) + col("id") * 0.5).as("temp"))
-    val slab = GridSchema(
-      Seq(DimDef("time", TimeCoords((24 until 30)
-        .map(k => epoch2021us + k * hour).toArray))),
-      Seq(VarDef("temp", Seq("time"), GDouble)))
-    ZarrGridStore.appendFromRows(rows, slab, root, "time")
+    ZarrGridStore.appendFromRows(rows, root, "time")
     val store = ZarrGridStore.open(root)
     val tc = store.schema.dim("time").coords.asInstanceOf[TimeCoords]
     assert(tc.values.toSeq == (0 until 30).map(k => epoch2021us + k * hour))

@@ -95,10 +95,7 @@ class ZarrTimeVarWriteSpec extends SparkTestBase with TempDirs {
       Seq(DimDef("t", IntCoords((0 until 7).toArray))),
       schema.vars)
     ZarrGridStore.writeFromRows(first, s7, Map("t" -> 5), root, "zstd:3")
-    val slab = GridSchema(
-      Seq(DimDef("t", IntCoords((7 until 12).toArray))),
-      schema.vars)
-    val grown = ZarrGridStore.appendFromRows(rest, slab, root, "t")
+    val grown = ZarrGridStore.appendFromRows(rest, root, "t")
     assert(grown.schema.dim("t").size == 12)
     checkStore(grown)
   }

@@ -83,20 +83,19 @@ class ZarrUnalignedAppendSpec extends SparkTestBase with TempDirs {
   }
 
   test("API path: second unaligned append onto a ragged v2 store") {
-    // drive ZarrGridStore.appendFromRows directly (dim-sliced slabs,
-    // per-slab schemas) to pin the non-format-surface entry point
+    // drive ZarrGridStore.appendFromRows directly (dim-sliced slabs)
+    // to pin the non-format-surface entry point
     val dir = tmp()
     val root = dir.resolve("api").toString
     val df = gridDf
     val schemaAll = Fixtures.linearGrid.schema
-    def slabSchema(t0: Int, t1: Int) =
-      Fixtures.linearGridSlice(t0, t1).schema
     ZarrGridStore.writeFromRows(df.filter(col("t") < 4),
-      slabSchema(0, 4), Map("t" -> 6, "lat" -> 5), root, "zlib:6")
+      Fixtures.linearGridSlice(0, 4).schema, Map("t" -> 6, "lat" -> 5),
+      root, "zlib:6")
     ZarrGridStore.appendFromRows(
-      df.filter(col("t") >= 4 && col("t") < 9), slabSchema(4, 9), root, "t")
+      df.filter(col("t") >= 4 && col("t") < 9), root, "t")
     ZarrGridStore.appendFromRows(
-      df.filter(col("t") >= 9), slabSchema(9, 24), root, "t")
+      df.filter(col("t") >= 9), root, "t")
     val oneShot = dir.resolve("oneshot").toString
     ZarrGridStore.writeFromRows(df, schemaAll,
       Map("t" -> 6, "lat" -> 5), oneShot, "zlib:6")
@@ -122,8 +121,7 @@ class ZarrUnalignedAppendSpec extends SparkTestBase with TempDirs {
     val v2root = d2.resolve("grow").toString
     ZarrGridStore.writeFromRows(df(0, 7), schema(0, 7), Map("t" -> 5),
       v2root, "zstd:3")
-    val v2 = ZarrGridStore.appendFromRows(df(7, 12), schema(7, 12),
-      v2root, "t")
+    val v2 = ZarrGridStore.appendFromRows(df(7, 12), v2root, "t")
     assert(v2.readVar("label", Seq((0, 12))).asInstanceOf[Array[String]]
       .sameElements(expect))
     ZarrGridStore.writeFromRows(df(0, 12), schema(0, 12), Map("t" -> 5),
@@ -137,8 +135,7 @@ class ZarrUnalignedAppendSpec extends SparkTestBase with TempDirs {
     val v3root = d3.resolve("grow").toString
     ZarrGridStore.writeFromRows(df(0, 7), schema(0, 7), Map("t" -> 6),
       v3root, "zstd:3", V3(Map("t" -> 2)))
-    val v3 = ZarrGridStore.appendFromRows(df(7, 12), schema(7, 12),
-      v3root, "t")
+    val v3 = ZarrGridStore.appendFromRows(df(7, 12), v3root, "t")
     assert(v3.readVar("label", Seq((0, 12))).asInstanceOf[Array[String]]
       .sameElements(expect))
     assert(v3.arrays("label").sharding.isDefined)
@@ -167,12 +164,12 @@ class ZarrUnalignedAppendSpec extends SparkTestBase with TempDirs {
       // winner's
       ZarrGridStore.appendTestHook = { _ =>
         ZarrGridStore.appendTestHook = _ => () // no reentrant interleave
-        ZarrGridStore.appendFromRows(df(7, 12), schema(7, 12), root, "t")
+        ZarrGridStore.appendFromRows(df(7, 12), root, "t")
         ()
       }
       try {
         val e = intercept[java.util.ConcurrentModificationException] {
-          ZarrGridStore.appendFromRows(df(7, 14), schema(7, 14), root, "t")
+          ZarrGridStore.appendFromRows(df(7, 14), root, "t")
         }
         assert(e.getMessage.contains("concurrent append"), e.getMessage)
       } finally ZarrGridStore.appendTestHook = _ => ()
@@ -247,8 +244,7 @@ class ZarrUnalignedAppendSpec extends SparkTestBase with TempDirs {
     // REPLACE it, not fail "rename failed" forever
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/x/2"),
       Array[Byte](9, 9, 9))
-    val grown = ZarrGridStore.appendFromRows(df(7, 12), schema(7, 12),
-      root, "t")
+    val grown = ZarrGridStore.appendFromRows(df(7, 12), root, "t")
     assert(grown.readVar("x", Seq((0, 12))).asInstanceOf[Array[Double]]
       .sameElements(Array.tabulate(12)(t => 10.0 + t)))
   }
@@ -289,11 +285,8 @@ class ZarrUnalignedAppendSpec extends SparkTestBase with TempDirs {
           "\"index_location\":\"start\"").getBytes("UTF-8"))
     }
     val slab = (6 until 9).map(t => (t, 10.0 + t)).toDF("t", "x")
-    val slabSchema = GridSchema(
-      Seq(DimDef("t", IntCoords((6 until 9).toArray))),
-      Seq(VarDef("x", Seq("t"), GDouble)))
     val e = intercept[IllegalArgumentException] {
-      ZarrGridStore.appendFromRows(slab, slabSchema, root, "t")
+      ZarrGridStore.appendFromRows(slab, root, "t")
     }
     assert(e.getMessage.contains("shard index layout"), e.getMessage)
   }
@@ -331,11 +324,8 @@ class ZarrUnalignedAppendSpec extends SparkTestBase with TempDirs {
 
     import spark.implicits._
     val slab = Seq((4.0, 9.0), (5.0, 10.0)).toDF("t", "v")
-    val slabSchema = GridSchema(
-      Seq(DimDef("t", DoubleCoords(Array(4.0, 5.0)))),
-      Seq(VarDef("v", Seq("t"), GDouble)))
     val err = intercept[IllegalArgumentException] {
-      ZarrGridStore.appendFromRows(slab, slabSchema, root, "t")
+      ZarrGridStore.appendFromRows(slab, root, "t")
     }
     assert(err.getMessage.contains("little-endian"), err.getMessage)
   }

@@ -106,11 +106,8 @@ class ZarrVarStatsSpec extends SparkTestBase with TempDirs {
       Map("t" -> 4), root, "zstd:3")
     // edge chunk 1 holds t=4..6 before the append
     assert(first.varBounds("x", Seq((4, 3))).contains((8.0, 12.0)))
-    val slab = GridSchema(
-      Seq(DimDef("t", IntCoords((7 until 10).toArray))),
-      Seq(VarDef("x", Seq("t"), GDouble)))
     val grown = ZarrGridStore.appendFromRows(
-      df.filter(col("t") >= 7), slab, root, "t")
+      df.filter(col("t") >= 7), root, "t")
     // merged edge chunk t=4..7, new chunk t=8..9 — stats recomputed
     assert(grown.varBounds("x", Seq((4, 4))).contains((8.0, 14.0)))
     assert(grown.varBounds("x", Seq((8, 2))).contains((16.0, 18.0)))
@@ -136,10 +133,7 @@ class ZarrVarStatsSpec extends SparkTestBase with TempDirs {
     val first = ZarrGridStore.writeFromRows(obsDf(0, 7, -1), s7,
       Map("t" -> 4), root, "zstd:3")
     assert(first.varBounds("obs", Seq((4, 3))).nonEmpty) // edge has stats
-    val slab = GridSchema(
-      Seq(DimDef("t", IntCoords((7 until 10).toArray))),
-      Seq(VarDef("obs", Seq("t"), GTimestamp)))
-    val grown = ZarrGridStore.appendFromRows(obsDf(7, 10, 7), slab,
+    val grown = ZarrGridStore.appendFromRows(obsDf(7, 10, 7),
       root, "t") // t=7 is NaT and lands in the merged edge chunk 1
     assert(grown.varBounds("obs", Seq((4, 4))).isEmpty,
       "stale pre-append bounds survived a NaT-voided edge merge")
@@ -229,12 +223,8 @@ class ZarrVarStatsSpec extends SparkTestBase with TempDirs {
     val yBefore = Files.readAllBytes(yStats)
     val yMtime = Files.getLastModifiedTime(yStats)
     val xBefore = Files.readAllBytes(xStats)
-    val slab = GridSchema(
-      Seq(DimDef("t", IntCoords((7 until 10).toArray)),
-        DimDef("s", IntCoords((0 until 3).toArray))),
-      Seq(VarDef("x", Seq("t"), GDouble)))
     val slabDf = (7 until 10).map(t => (t, t * 2.0)).toDF("t", "x")
-    val grown = ZarrGridStore.appendFromRows(slabDf, slab, root, "t")
+    val grown = ZarrGridStore.appendFromRows(slabDf, root, "t")
     // y's file: byte-identical AND not rewritten (mtime unchanged) —
     // the append was O(slab vars), not O(tree vars)
     assert(Files.readAllBytes(yStats).sameElements(yBefore))
@@ -268,12 +258,8 @@ class ZarrVarStatsSpec extends SparkTestBase with TempDirs {
     // compares the very bytes served, so no filesystem timing (an
     // append within the same mtime tick) can fool it.
     val before = ZarrGridStore.open(root)
-    val slab = GridSchema(
-      Seq(DimDef("t", IntCoords((7 until 10).toArray)),
-        DimDef("s", IntCoords((0 until 3).toArray))),
-      Seq(VarDef("x", Seq("t"), GDouble)))
     ZarrGridStore.appendFromRows(
-      (7 until 10).map(t => (t, t * 2.0)).toDF("t", "x"), slab, root, "t")
+      (7 until 10).map(t => (t, t * 2.0)).toDF("t", "x"), root, "t")
     GridIO.Counters.reset()
     // x's stats file changed under the handle: degrade, loudly not
     // wrongly — a merged edge-chunk SUM would overcount its extent
@@ -328,12 +314,9 @@ class ZarrVarStatsSpec extends SparkTestBase with TempDirs {
         finally l.close()
       }
       val before = shardMtimes
-      val slab = GridSchema(
-        Seq(DimDef("t", IntCoords((16 until 18).toArray))),
-        Seq(VarDef("x", Seq("t"), GDouble)))
       val grown = ZarrGridStore.appendFromRows(
         (16 until 18).map(t => (t, t * 3.0)).toDF("t", "x"),
-        slab, root, "t")
+        root, "t")
       assert(grown.varBounds("x", Seq((16, 2))).contains((48.0, 51.0)))
       assert(grown.varBounds("x", Seq((0, 2))).contains((0.0, 3.0)))
       val after = shardMtimes

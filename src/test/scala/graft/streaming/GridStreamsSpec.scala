@@ -38,8 +38,7 @@ class GridStreamsSpec extends SparkTestBase with TempDirs {
 
   /** A distributed append of linear-grid slab [t0, t1) to `root`. */
   private def appendSlab(root: String, t0: Int, t1: Int): ZarrGridStore =
-    ZarrGridStore.appendFromRows(cellsDf(slab(t0, t1)),
-      Fixtures.linearGridSlice(t0, t1).schema, root, "t")
+    ZarrGridStore.appendFromRows(cellsDf(slab(t0, t1)), root, "t")
 
   test("streaming append sink: micro-batches extend the store along t") {
     implicit val sqlCtx = spark.sqlContext
