@@ -37,18 +37,6 @@ object ChunkGrid {
     }
   }
 
-  /** Blocks restricted to the dims of one variable group, plus exact row
-    * counts (product of block lengths — the reference's exact-statistics
-    * trick, lib.rs:139-151).
-    */
-  def groupBlocks(
-      schema: GridSchema,
-      groupDims: Seq[String],
-      chunks: Map[String, Int]): Seq[Seq[(Int, Int)]] = {
-    val sub = GridSchema(groupDims.map(schema.dim), Seq.empty)
-    blocks(sub, chunks)
-  }
-
   def rowCount(block: Seq[(Int, Int)]): Long =
     block.foldLeft(1L)((acc, b) => acc * b._2)
 

@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.sources.Utf8Order
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Iterated byte-pair-encoding MERGE TRAINING (Sennrich et al. 2016,
   * arXiv:1508.07909) — the N-round loop `bpe_merge_pairs`' single
@@ -11,17 +18,20 @@ import org.apache.spark.sql.functions._
   * contract), and repeats on the evolved vocabulary; the output is the
   * ordered merge table a tokenizer ships with.
   *
-  * Scale shape: the corpus is scanned ONCE — the word-frequency
-  * aggregate — and every round after that is vocabulary-sized
-  * (thousands-to-millions of rows, not the corpus), with
-  * `localCheckpoint` truncating the loop lineage (the [[GraphOps]]
-  * driver-loop idiom). The per-round winner is ONE collected row.
-  * [[train]] runs one Spark job pair per merge, so its cap is 1,000
-  * merges; a REAL tokenizer vocabulary (30k-50k merges) goes through
-  * [[trainBatched]], which learns up to `batch` mutually
-  * NON-INTERACTING merges per round (disjoint symbol sets commute, so
-  * one application pass realizes all of them) — round count ≪ merge
-  * count, the batching every production BPE trainer ships.
+  * Scale shape: SQL scans the corpus ONCE — the word-frequency
+  * aggregate — into a pinned vocabulary RDD. Every round after that is
+  * vocabulary-sized (thousands-to-millions of rows, not the corpus) and
+  * ONE RDD job that plans no query: pair counts summed by
+  * `reduceByKey`, the winner ranked by `takeOrdered` (ONE row back to
+  * the driver), the merge mapped over the vocabulary by
+  * [[applyMerges]]. A lazy local checkpoint every CKPT_EVERY rounds
+  * bounds the lineage; the pins are released when training returns.
+  * [[train]] caps at 1,000 merges; a REAL tokenizer vocabulary
+  * (30k-50k merges) goes through [[trainBatched]], which learns up to
+  * `batch` mutually NON-INTERACTING merges per round (disjoint symbol
+  * sets commute, so one application pass realizes all of them) — round
+  * count ≪ merge count, the batching every production BPE trainer
+  * ships.
   *
   * Determinism (hash-gate parity with DuckDB): counts are exact longs;
   * the winner is (cnt DESC, a, b) with binary-UTF8 string order on
@@ -41,9 +51,12 @@ import org.apache.spark.sql.functions._
 object BpeTrain {
 
   def train(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
+    require(nMerges >= 1 && nMerges <= 1000, s"nMerges out of range: $nMerges")
     val spark = docs.sparkSession
     import spark.implicits._
-    trainLoop(docs, textCol, nMerges)._1.toDF("step", "a", "b", "cnt")
+    loop(docs, textCol, nMerges, batch = 1, window = 1, "merge")(_ => ())._1
+      .map { case (step, _, a, b, cnt) => (step, a, b, cnt) }
+      .toDF("step", "a", "b", "cnt")
   }
 
   /** Tokenizer APPLICATION — the other half a tokenizer ships: learn
@@ -56,48 +69,10 @@ object BpeTrain {
     */
   def subwordCounts(docs: DataFrame, textCol: String, nMerges: Int,
       topK: Int): DataFrame = {
-    require(topK >= 1, s"topK=$topK")
-    val vocab = trainLoop(docs, textCol, nMerges)._2
-    vocab.select(explode(split(col("w"), " ")).as("token"), col("f"))
-      .groupBy("token").agg(sum("f").as("n"))
-      .orderBy(col("n").desc, col("token")).limit(topK)
-  }
-
-  private def trainLoop(docs: DataFrame, textCol: String, nMerges: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
     require(nMerges >= 1 && nMerges <= 1000, s"nMerges out of range: $nMerges")
-    var vocab = initialVocab(docs, textCol)
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (step <- 1 to nMerges) {
-      val top = pairCounts(vocab)
-        .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-        .collect()
-      require(top.nonEmpty,
-        s"vocabulary exhausted at merge $step of $nMerges — every word " +
-          "is a single symbol")
-      val (a, b, cnt) =
-        (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-      merges += ((step, a, b, cnt))
-      // literal pair values ride as lit() columns — never parsed, so
-      // symbols containing quotes/regex metacharacters are inert
-      val doubled =
-        concat(lit(" "), replace(col("w"), lit(" "), lit("  ")), lit(" "))
-      val applied = replace(doubled,
-        lit(s" $a  $b "), lit(s" $a$b "))
-      vocab = vocab
-        .select(trim(regexp_replace(applied, " +", " ")).as("w"), col("f"))
-      // checkpoint every few rounds, not every round: the eager
-      // per-round checkpoint was a whole extra Spark job per merge for
-      // lineage the next rounds replay as a handful of vocab-sized
-      // string projections anyway. Every CKPT_EVERY rounds the chain
-      // truncates (plan depth and replay work stay bounded); between
-      // checkpoints each winner-collect simply re-applies <= CKPT_EVERY
-      // projections over the pinned vocabulary — map-side, tiny
-      // against the per-job scheduling cost it replaces. LAZY: the
-      // next winner collect materializes (and persists) it.
-      if (step % CKPT_EVERY == 0) vocab = vocab.localCheckpoint(false)
-    }
-    (merges.result(), vocab)
+    require(topK >= 1, s"topK=$topK")
+    loop(docs, textCol, nMerges, batch = 1, window = 1, "merge")(
+      topTokens(docs.sparkSession, _, topK))._2
   }
 
   /** Lineage-truncation interval for the training loops. */
@@ -106,17 +81,16 @@ object BpeTrain {
   /** BATCHED merge training — the 30k-50k-vocabulary path: each round
     * counts pairs ONCE over the current vocabulary, ranks them
     * (cnt DESC, a, b), and learns up to `batch` merges whose symbol
-    * sets are mutually disjoint, applying them all in ONE pass (a
-    * chain of `batch` nested replaces in a single projection —
-    * disjoint merges commute, so one pass equals any sequential
-    * order). Selection is the CONSERVATIVE disjoint rule over the
-    * top-`window` ranked pairs: a pair is taken iff NO higher-ranked
-    * WINDOW pair shares a symbol with it (conflict with a rejected
-    * earlier pair still disqualifies) — deliberately non-iterative, so
-    * the whole round is one relational expression both engines replay
-    * identically; rank 1 is always taken, so every round makes
-    * progress. The window bounds the driver's collect to `window`
-    * rows per round.
+    * sets are mutually disjoint, applying them all in ONE pass (the
+    * `batch` replaces chained over one padded string — disjoint merges
+    * commute, so one pass equals any sequential order). Selection is
+    * the CONSERVATIVE disjoint rule over the top-`window` ranked
+    * pairs: a pair is taken iff NO higher-ranked WINDOW pair shares a
+    * symbol with it (conflict with a rejected earlier pair still
+    * disqualifies) — deliberately non-iterative, so the whole round is
+    * one relational expression the oracle replays identically; rank 1
+    * is always taken, so every round makes progress. The window bounds
+    * the driver's collect to `window` rows per round.
     *
     * Out: (round, ord, a, b, cnt) — `ord` is the merge's 1-based rank
     * within its round; application order within a round follows `ord`
@@ -126,7 +100,7 @@ object BpeTrain {
       batch: Int, window: Int = 0): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    batchedLoop(docs, textCol, rounds, batch, window)._1
+    loop(docs, textCol, rounds, batch, window, "round")(_ => ())._1
       .toDF("round", "ord", "a", "b", "cnt")
   }
 
@@ -137,88 +111,151 @@ object BpeTrain {
   def subwordCountsBatched(docs: DataFrame, textCol: String, rounds: Int,
       batch: Int, topK: Int, window: Int = 0): DataFrame = {
     require(topK >= 1, s"topK=$topK")
-    val vocab = batchedLoop(docs, textCol, rounds, batch, window)._2
-    vocab.select(explode(split(col("w"), " ")).as("token"), col("f"))
-      .groupBy("token").agg(sum("f").as("n"))
-      .orderBy(col("n").desc, col("token")).limit(topK)
+    loop(docs, textCol, rounds, batch, window, "round")(
+      topTokens(docs.sparkSession, _, topK))._2
   }
 
-  private def batchedLoop(docs: DataFrame, textCol: String, rounds: Int,
-      batch: Int, window: Int)
-      : (Seq[(Int, Int, String, String, Long)], DataFrame) = {
+  /** The round loop of both trainers ([[train]] is `batch = window =
+    * 1`, one merge per round): each round ranks the current
+    * vocabulary's top `window` pairs in one RDD job, selects the
+    * round's merges, and maps them over the vocabulary. `finish` reads
+    * the final vocabulary before the pinned RDDs are released.
+    */
+  private def loop[T](docs: DataFrame, textCol: String, rounds: Int,
+      batch: Int, window: Int, unit: String)(
+      finish: RDD[(String, Long)] => T)
+      : (Seq[(Int, Int, String, String, Long)], T) = {
     require(rounds >= 1 && rounds <= 10000, s"rounds out of range: $rounds")
     require(batch >= 1 && batch <= 4096, s"batch out of range: $batch")
     val w0 = if (window <= 0) batch * 8 else window
     require(w0 >= batch, s"window=$w0 < batch=$batch")
-    var vocab = initialVocab(docs, textCol)
     val merges = Seq.newBuilder[(Int, Int, String, String, Long)]
-    for (round <- 1 to rounds) {
-      val top = pairCounts(vocab)
-        .orderBy(col("cnt").desc, col("a"), col("b")).limit(w0)
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      require(top.nonEmpty,
-        s"vocabulary exhausted at round $round of $rounds — every word " +
-          "is a single symbol")
-      val selected = top.zipWithIndex.collect {
-        case ((a, b, cnt), idx) if !top.take(idx).exists { case (c, d, _) =>
-          // interacting = sharing an input symbol, OR one merge's
-          // OUTPUT being the other's input (an output feeding a
-          // same-round input would let the single chained pass merge
-          // adjacencies the counts never saw, breaking commutation --
-          // unreachable for global greedy BPE as far as we can prove,
-          // but the guard costs nothing and makes the claim
-          // unconditional)
-          c == a || c == b || d == a || d == b ||
-            c + d == a || c + d == b || a + b == c || a + b == d
-        } => (a, b, cnt)
-      }.take(batch)
-      selected.zipWithIndex.foreach { case ((a, b, cnt), j) =>
-        merges += ((round, j + 1, a, b, cnt))
+    var vocab = initialVocab(docs, textCol)
+    val pins = ArrayBuffer[RDD[_]](vocab)
+    try {
+      for (round <- 1 to rounds) {
+        val top = topPairs(vocab, w0)
+        require(top.nonEmpty,
+          s"vocabulary exhausted at $unit $round of $rounds — every word " +
+            "is a single symbol")
+        val selected = top.zipWithIndex.collect {
+          case ((a, b, cnt), idx) if !top.take(idx).exists { case (c, d, _) =>
+            // interacting = sharing an input symbol, OR one merge's
+            // OUTPUT being the other's input (an output feeding a
+            // same-round input would let the single chained pass merge
+            // adjacencies the counts never saw, breaking commutation --
+            // unreachable for global greedy BPE as far as we can prove,
+            // but the guard costs nothing and makes the claim
+            // unconditional)
+            c == a || c == b || d == a || d == b ||
+              c + d == a || c + d == b || a + b == c || a + b == d
+          } => (a, b, cnt)
+        }.take(batch)
+        selected.zipWithIndex.foreach { case ((a, b, cnt), j) =>
+          merges += ((round, j + 1, a, b, cnt))
+        }
+        val ms = selected.toSeq.map { case (a, b, _) => (a, b) }
+        vocab = vocab.map { case (w, f) => (applyMerges(w, ms), f) }
+        // between checkpoints each round's job replays <= CKPT_EVERY
+        // string maps over the last pin — map-side and tiny; the local
+        // checkpoint persists inside the next job that computes it
+        if (round % CKPT_EVERY == 0) {
+          vocab = vocab.localCheckpoint()
+          pins += vocab
+        }
       }
-      val doubled =
-        concat(lit(" "), replace(col("w"), lit(" "), lit("  ")), lit(" "))
-      val applied = selected.foldLeft(doubled) { case (acc, (a, b, _)) =>
-        replace(acc, lit(s" $a  $b "), lit(s" $a$b "))
-      }
-      vocab = vocab
-        .select(trim(regexp_replace(applied, " +", " ")).as("w"), col("f"))
-      // same interval checkpointing as trainLoop (one job per
-      // CKPT_EVERY rounds instead of one per round); a batched round's
-      // replay is one projection of `batch` nested replaces
-      if (round % CKPT_EVERY == 0) vocab = vocab.localCheckpoint(false)
-    }
-    (merges.result(), vocab)
+      (merges.result(), finish(vocab))
+    } finally pins.foreach(_.unpersist(blocking = false))
   }
 
   /** One corpus scan: word frequencies as space-separated
     * character-symbol strings — the round-0 vocabulary both trainers
-    * start from.
+    * start from, pinned. With adaptive execution the aggregate's
+    * shuffle runs here; round 1's job computes and caches the rest.
     */
-  private def initialVocab(docs: DataFrame, textCol: String): DataFrame =
+  private def initialVocab(docs: DataFrame, textCol: String)
+      : RDD[(String, Long)] =
     docs
       .select(explode(split(lower(col(textCol)), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("f"))
       .select(trim(regexp_replace(col("word"), "(.)", "$1 ")).as("w"),
         col("f"))
-      // LAZY: plan truncation now, blocks persist when round 1's
-      // winner collect first computes them — the eager count was one
-      // extra scheduled job per training build whose output nothing
-      // read before that collect anyway
-      .localCheckpoint(false)
+      .queryExecution.toRdd
+      .map(r => (r.getString(0), r.getLong(1)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** Adjacent-symbol pair counts over the current vocabulary —
-    * frequency-weighted, vocabulary-sized.
+  /** The top `n` adjacent-symbol pairs of the vocabulary by
+    * frequency-weighted count, (cnt DESC, a, b) — one RDD job.
     */
-  private def pairCounts(vocab: DataFrame): DataFrame =
-    vocab.select(col("f"), split(col("w"), " ").as("sy"))
-      .filter(size(col("sy")) >= 2)
-      .select(col("f"), explode(expr(
-        "transform(sequence(1, size(sy) - 1), " +
-          "i -> struct(sy[i-1] AS a, sy[i] AS b))")).as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum("f").as("cnt"))
+  private def topPairs(vocab: RDD[(String, Long)], n: Int)
+      : Array[(String, String, Long)] =
+    vocab
+      .flatMap { case (w, f) =>
+        val sy = w.split(" ", -1)
+        Iterator.range(1, sy.length).map(i => ((sy(i - 1), sy(i)), f))
+      }
+      .reduceByKey((x, y) => Math.addExact(x, y))
+      .takeOrdered(n)(Ordering.by((p: ((String, String), Long)) =>
+        (-p._2, p._1._1, p._1._2))(Ordering.Tuple3(Ordering.Long, Utf8, Utf8)))
+      .map { case ((a, b), cnt) => (a, b, cnt) }
+
+  /** The final vocabulary's top `topK` subwords, (n DESC, token), as
+    * the table the SQL form `explode(split(w, " ")) ... groupBy(token)
+    * .agg(sum(f)) ... limit(topK)` returns — one RDD job.
+    */
+  private def topTokens(spark: SparkSession, vocab: RDD[(String, Long)],
+      topK: Int): DataFrame = {
+    val top = vocab
+      .flatMap { case (w, f) => w.split(" ", -1).iterator.map(_ -> f) }
+      .reduceByKey((x, y) => Math.addExact(x, y))
+      .takeOrdered(topK)(Ordering.by((t: (String, Long)) => (-t._2, t._1))(
+        Ordering.Tuple2(Ordering.Long, Utf8)))
+    spark.createDataFrame(top.toSeq.map { case (t, n) => Row(t, n) }.asJava,
+      StructType(Seq(StructField("token", StringType, nullable = false),
+        StructField("n", LongType))))
+  }
+
+  /** UTF-8 binary string order, which Spark's `orderBy` and DuckDB's
+    * `ORDER BY` both use — not UTF-16's `String.compareTo`, which
+    * differs past the BMP. Counts rank first, negated (all positive).
+    */
+  private val Utf8: Ordering[String] = Utf8Order.compare(_, _)
+
+  /** A round's merges applied to one space-separated symbol string —
+    * the SQL chain it replaces, exactly: pad and double every
+    * separator, `replace` " a  b " with " ab " for each merge in order
+    * (literal, left-to-right, non-overlapping), collapse runs of spaces
+    * and trim spaces only (Spark's `trim`; `String.trim` would also
+    * strip control characters).
+    */
+  private[operators] def applyMerges(w: String,
+      merges: Seq[(String, String)]): String = {
+    val padded = merges.foldLeft(" " + w.replace(" ", "  ") + " ") {
+      case (s, (a, b)) => s.replace(s" $a  $b ", s" $a$b ")
+    }
+    val out = new java.lang.StringBuilder(padded.length)
+    var sep = false
+    padded.foreach { ch =>
+      if (ch == ' ') sep = out.length > 0
+      else {
+        if (sep) out.append(' ')
+        sep = false
+        out.append(ch)
+      }
+    }
+    out.toString
+  }
+
+  /** The oracles' round-0 vocabulary, [[initialVocab]] in DuckDB. */
+  private val InitCte =
+    """v0 AS (
+      |  SELECT trim(regexp_replace(word, '(.)', '\1 ', 'g')) AS w, f
+      |  FROM (
+      |    SELECT word, CAST(COUNT(*) AS BIGINT) AS f FROM (
+      |      SELECT unnest(string_split(lower(text), ' ')) AS word
+      |      FROM documents) t
+      |    WHERE length(word) > 0 GROUP BY word) wf)""".stripMargin
 
   /** The DuckDB replay of [[train]] for a FIXED merge count: one CTE
     * chain per round (pairs → winner → applied vocabulary), the same
@@ -228,14 +265,6 @@ object BpeTrain {
     * learn the same merges.
     */
   def oracleSql(nMerges: Int): String = {
-    val init =
-      """v0 AS (
-        |  SELECT trim(regexp_replace(word, '(.)', '\1 ', 'g')) AS w, f
-        |  FROM (
-        |    SELECT word, CAST(COUNT(*) AS BIGINT) AS f FROM (
-        |      SELECT unnest(string_split(lower(text), ' ')) AS word
-        |      FROM documents) t
-        |    WHERE length(word) > 0 GROUP BY word) wf)""".stripMargin
     val rounds = (1 to nMerges).map { i =>
       val p = i - 1
       s"""p$i AS (
@@ -257,7 +286,7 @@ object BpeTrain {
     val out = (1 to nMerges)
       .map(i => s"SELECT CAST($i AS INTEGER) AS step, a, b, cnt FROM w$i")
       .mkString("\nUNION ALL\n")
-    s"WITH $init,\n${rounds.mkString(",\n")}\n$out\nORDER BY step"
+    s"WITH $InitCte,\n${rounds.mkString(",\n")}\n$out\nORDER BY step"
   }
 
   /** The [[trainBatched]] replay: per round — the ranked window, the
@@ -271,14 +300,6 @@ object BpeTrain {
     */
   def batchedOracleSql(rounds: Int, batch: Int, window: Int = 0): String = {
     val w0 = if (window <= 0) batch * 8 else window
-    val init =
-      """v0 AS (
-        |  SELECT trim(regexp_replace(word, '(.)', '\1 ', 'g')) AS w, f
-        |  FROM (
-        |    SELECT word, CAST(COUNT(*) AS BIGINT) AS f FROM (
-        |      SELECT unnest(string_split(lower(text), ' ')) AS word
-        |      FROM documents) t
-        |    WHERE length(word) > 0 GROUP BY word) wf)""".stripMargin
     val rs = (1 to rounds).map { i =>
       val p = i - 1
       s"""t$i AS (
@@ -318,7 +339,7 @@ object BpeTrain {
       .map(i => s"SELECT CAST($i AS INTEGER) AS round, ord, a, b, cnt " +
         s"FROM m$i")
       .mkString("\nUNION ALL\n")
-    s"WITH $init,\n${rs.mkString(",\n")}\n$out\nORDER BY round, ord"
+    s"WITH $InitCte,\n${rs.mkString(",\n")}\n$out\nORDER BY round, ord"
   }
 
   /** The [[subwordCountsBatched]] replay: the batched per-round CTE
@@ -326,30 +347,27 @@ object BpeTrain {
     * frequency-weighted.
     */
   def batchedEncodeOracleSql(rounds: Int, batch: Int, topK: Int,
-      window: Int = 0): String = {
-    val base = batchedOracleSql(rounds, batch, window)
-    val cut = base.lastIndexOf("\nSELECT CAST(1 AS INTEGER) AS round")
-    require(cut > 0, "batched oracle chain anchor missing")
-    base.substring(0, cut) +
-      s"""
-         |SELECT token, CAST(SUM(f) AS BIGINT) AS n FROM (
-         |  SELECT unnest(string_split(w, ' ')) AS token, f
-         |  FROM v$rounds) t
-         |GROUP BY token ORDER BY n DESC, token LIMIT $topK""".stripMargin
-  }
+      window: Int = 0): String =
+    encodeTail(batchedOracleSql(rounds, batch, window), "round", rounds, topK)
 
   /** The [[subwordCounts]] replay: the same per-round CTE chain, then
     * the final vocabulary's symbols exploded and frequency-weighted.
     */
-  def encodeOracleSql(nMerges: Int, topK: Int): String = {
-    val base = oracleSql(nMerges)
-    val cut = base.lastIndexOf("\nSELECT CAST(1 AS INTEGER) AS step")
+  def encodeOracleSql(nMerges: Int, topK: Int): String =
+    encodeTail(oracleSql(nMerges), "step", nMerges, topK)
+
+  /** A training oracle's CTE chain, its output select (first column
+    * `first`) replaced by the final vocabulary `v<last>`'s subword counts.
+    */
+  private def encodeTail(base: String, first: String, last: Int,
+      topK: Int): String = {
+    val cut = base.lastIndexOf(s"\nSELECT CAST(1 AS INTEGER) AS $first")
     require(cut > 0, "oracle chain anchor missing")
     base.substring(0, cut) +
       s"""
          |SELECT token, CAST(SUM(f) AS BIGINT) AS n FROM (
          |  SELECT unnest(string_split(w, ' ')) AS token, f
-         |  FROM v$nMerges) t
+         |  FROM v$last) t
          |GROUP BY token ORDER BY n DESC, token LIMIT $topK""".stripMargin
   }
 }

@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.Utf8Order
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** Batch-perceptron TRAINING over a hashed feature matrix — the
   * learn-the-filter half `domain_classify` (inference against fixed
@@ -23,21 +30,16 @@ import org.apache.spark.sql.functions._
   * sacrifice exactly this: per-row update order and libm `exp` both
   * diverge across engines.
   *
-  * Scale shape: the feature matrix builds in ONE corpus scan (map-side
-  * token hash + one (id, f) count aggregate), pivots DOC-MAJOR — one
-  * row per example, its features as an array<struct<f,x>> — and is
-  * pinned once (localCheckpoint — at 100 TB a persisted table). Each
-  * round is then a single map-side pass: the score folds over the
-  * row's own feature array against the weights carried as a plan
-  * LITERAL (the weights live on the driver anyway — that is the batch
-  * perceptron's contract), the misclassified filter is row-local, and
-  * the only exchange is the gradient's groupBy(f), which partial
-  * aggregation caps at nFeatures rows per task before the shuffle.
-  * One job and one nFeatures-sized exchange per round — the flat
-  * (id, f, x) shape paid two matrix-sized exchanges per round (score
-  * groupBy(id) + the gradient's re-shuffle of the matrix by id) for
-  * the same integer algebra (guide §2.3/§2.4: aggregate before you
-  * shuffle; remove shuffles outright).
+  * Scale shape: SQL reads the flat feature matrix once (validating
+  * every feature id), and an RDD pivots it DOC-MAJOR — one element per
+  * example, its features as parallel primitive arrays — pinned while
+  * training runs. Each round is ONE RDD job that plans no query
+  * ([[fit]]): the weights ride the closure (they live on the driver
+  * anyway — the batch perceptron's contract) and each task returns one
+  * nFeatures-long gradient whatever the matrix size; the pivot's
+  * shuffle runs inside round 1's job. Arithmetic follows the SQL it
+  * replaced: the score wraps on overflow, while y·score and the
+  * gradient's products and sums raise `ArithmeticException` (ANSI).
   *
   * In: features (id, y, f, x) with y ∈ {+1, −1}, integer counts x,
   * f ∈ [0, nFeatures). Out: (iter, f, w) for iter 1..iters — the full
@@ -45,60 +47,101 @@ import org.apache.spark.sql.functions._
   */
 object Perceptron {
 
-  /** Doc-major pivot of the flat (id, label, f, x) matrix: one row per
-    * example, its features as array<struct<f,x>>. Array order is
-    * whatever collect_list saw — every consumer folds the array with
-    * integer sums, which are order-free, so results are deterministic.
-    * Pinned once (localCheckpoint); every round reads it map-side.
+  /** One example: its label and its features as parallel arrays. */
+  private final case class Doc[L](y: L, fs: Array[Int], xs: Array[Long])
+
+  /** Doc-major pivot of the flat (id, label, f, x) matrix, persisted.
+    * `read` takes the label from field 1, and an example's label is the
+    * `least` of its rows' (constant per id by contract; the SQL pivot
+    * took their MIN). The id groups as a one-field row, so any id type
+    * groups by value. Feature order within an example is whatever the
+    * shuffle delivered: every consumer sums integers, order-free.
     */
-  private def pivotMat(features: DataFrame, labelCol: String,
-      nFeatures: Int): DataFrame =
+  private def pivotMat[L](features: DataFrame, label: Column,
+      nFeatures: Int)(read: (InternalRow, Int) => L)(
+      least: (L, L) => L): RDD[Doc[L]] =
     features
-      .select(col("id"), col(labelCol),
+      .select(struct(col("id")), label,
         // fail FAST and identically across all three training paths on
         // a contract-violating feature id: the flat-matrix join form
         // silently scored an out-of-range f as weight 0, while the
-        // pivoted fold would have array-indexed past the weight vector
-        // (driver AIOOBE in the gradient, null-poisoned scores) — an
+        // doc-major fold would index past the weight vector — an
         // inconsistent, late, and unlabeled failure either way
         when(col("f") >= 0 && col("f") < nFeatures, col("f").cast("int"))
           .otherwise(raise_error(concat(
             lit(s"perceptron feature id out of [0, $nFeatures): "),
-            col("f")))).as("f"),
-        col("x").cast("long").as("x"))
-      .groupBy("id")
-      .agg(min(col(labelCol)).as(labelCol), // constant per id
-        collect_list(struct(col("f"), col("x"))).as("fs"))
-      .localCheckpoint(true)
+            col("f")))),
+        col("x").cast("long"))
+      .queryExecution.toRdd
+      .map(r => (r.getStruct(0, 1).copy(),
+        (read(r, 1), r.getInt(2), r.getLong(3))))
+      .groupByKey()
+      .map { case (_, rows) =>
+        Doc(rows.iterator.map(_._1).reduce(least),
+          rows.iterator.map(_._2).toArray, rows.iterator.map(_._3).toArray)
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** ⟨w, x_row⟩ as a row-local fold over the feature array, the
-    * weights riding as one plan literal (they live on the driver
-    * between rounds anyway). No join, no exchange. Native one-pass
-    * expression ([[graft.functions.FeatureDot]]) — the composable
-    * aggregate() fold was an interpreted CodegenFallback lambda per
-    * element, the exact hot-spot class round 14 eliminated elsewhere.
+  /** ⟨w, x⟩ — wrapping on overflow, like the SQL fold it replaces. */
+  private def score(d: Doc[_], w: Array[Long]): Long = {
+    var s = 0L
+    for (i <- d.fs.indices) s += d.xs(i) * w(d.fs(i))
+    s
+  }
+
+  /** `iters` fused rounds of `k` batch perceptrons over one pinned
+    * matrix, `y(label, c)` the ±1 label of class c: each round is ONE
+    * `treeAggregate` whose closure carries the weights, folding every
+    * (example, class) margin and, when it is <= 0, y·x into that class's
+    * gradient. `each` sees every round's weights; the last are returned.
+    * Margins and gradients raise on overflow, like the ANSI SQL form.
     */
-  private def scoreCol(w: Array[Long]): Column =
-    graft.functions.FeatureDot.feature_dot(col("fs"), w)
+  private def fit[L](mat: RDD[Doc[L]], k: Int, nFeatures: Int,
+      iters: Int)(y: (L, Int) => Long)(
+      each: (Int, Array[Array[Long]]) => Unit): Array[Array[Long]] = {
+    var w = Array.fill(k)(new Array[Long](nFeatures))
+    for (i <- 1 to iters) {
+      val ws = w
+      val grad = mat.treeAggregate(Array.fill(k)(new Array[Long](nFeatures)))(
+        (g, d) => {
+          for (c <- 0 until k) {
+            val yc = y(d.y, c)
+            if (Math.multiplyExact(yc, score(d, ws(c))) <= 0)
+              for (j <- d.fs.indices) g(c)(d.fs(j)) = Math.addExact(
+                g(c)(d.fs(j)), Math.multiplyExact(yc, d.xs(j)))
+          }
+          g
+        },
+        (g1, g2) => {
+          for (c <- 0 until k; f <- 0 until nFeatures)
+            g1(c)(f) = Math.addExact(g1(c)(f), g2(c)(f))
+          g1
+        })
+      w = Array.tabulate(k, nFeatures)((c, f) => ws(c)(f) + grad(c)(f))
+      each(i, w)
+    }
+    w
+  }
 
   def train(features: DataFrame, nFeatures: Int, iters: Int): DataFrame = {
     val spark = features.sparkSession
     import spark.implicits._
-    trainLoop(features, nFeatures, iters)._1.toDF("iter", "f", "w")
+    trainLoop(features, nFeatures, iters)((_, _) => ())._1
+      .toDF("iter", "f", "w")
   }
 
   /** Train, then score every example against the FINAL weights and
     * report the exact confusion counts — the end-to-end
     * train-and-evaluate a pipeline gates a learned filter on before
     * routing a corpus with it. pred = sign(score) with 0 → −1
-    * (matching the training margin's <=). Out: (y, pred, n).
+    * (matching the training margin's <=). Out: (y, pred, n), y as long.
     */
   def trainConfusion(features: DataFrame, nFeatures: Int,
       iters: Int): DataFrame = {
-    val (_, mat, w) = trainLoop(features, nFeatures, iters)
-    mat.select(col("y"),
-        when(scoreCol(w) > 0, 1L).otherwise(-1L).as("pred"))
-      .groupBy("y", "pred").agg(count(lit(1)).as("n"))
+    val (_, counts) = trainLoop(features, nFeatures, iters) { (mat, w) =>
+      mat.map(d => (d.y, if (score(d, w) > 0) 1L else -1L)).countByValue()
+    }
+    confusion(features, "y", LongType, counts)
   }
 
   /** ONE-VS-REST multiclass — the lang-router shape: one binary batch
@@ -109,18 +152,15 @@ object Perceptron {
     * SMALLEST class — integer scores, so the tie rule is exact on both
     * engines. Out: (cls, pred, n) — the exact multiclass confusion.
     *
-    * Scale shape: the matrix pins once, and the K trainings FUSE —
-    * each round scores every (example, class) pair in ONE aggregate
-    * against the broadcast K·nFeatures-row weight table and folds the
-    * per-(class, feature) gradient in one more, so the JOB COUNT is
-    * iters·2 regardless of K (per-class loops would pay K·iters·2; at
-    * K=100 that is 100× the scheduling and scan overhead for the same
-    * algebra — classes train independently, but their synchronized
-    * rounds share scans). Weights never shuffle; the driver holds
-    * K·nFeatures longs, bounded by the require below. The fused math
-    * is EXACTLY the per-class batch perceptron (integer sums are
-    * order-free), pinned in PerceptronSpec against the public binary
-    * trainer. The final scoring pass is two more hash aggregates.
+    * Scale shape: the matrix pins once, and the K trainings FUSE into
+    * one job per round ([[fit]]), so the JOB COUNT is iters + 1
+    * regardless of K (per-class loops would pay K·iters; at K=100 that
+    * is 100× the scheduling and scan overhead for the same algebra —
+    * classes train independently, but their synchronized rounds share
+    * scans). The driver holds K·nFeatures longs, bounded by the require
+    * below. The fused math is EXACTLY the per-class batch perceptron
+    * (integer sums are order-free), pinned in PerceptronSpec against
+    * the public binary trainer.
     */
   def ovrConfusion(features: DataFrame, classes: Seq[String],
       nFeatures: Int, iters: Int): DataFrame = {
@@ -130,82 +170,59 @@ object Perceptron {
     require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
     require(classes.length.toLong * iters * nFeatures <= (1L << 20),
       "classes * iters * nFeatures exceeds the 2^20 driver-side budget")
-    val mat = pivotMat(features, "cls", nFeatures)
-    // per-class ±1 label, derivable row-locally from cls
-    def yc(c: String): Column = when(col("cls") === c, 1L).otherwise(-1L)
-    var w: Map[String, Array[Long]] =
-      classes.map(_ -> Array.fill[Long](nFeatures)(0L)).toMap
-    for (_ <- 1 to iters) {
-      // all K classes fold in ONE map-side pass: per row, K scores
-      // against K literal weight arrays, K misclassified flags, then
-      // one exploded gradient aggregate whose partial caps each task's
-      // output at nFeatures rows x K sums — job count iters·1, the
-      // only exchange nFeatures-sized, regardless of K
-      val flagged = mat.select(
-        Seq(col("cls"), col("fs")) ++ classes.zipWithIndex.map {
-          case (c, k) => ((yc(c) * scoreCol(w(c))) <= 0).as(s"m$k")
-        }: _*)
-      val gs = classes.zipWithIndex.map { case (c, k) =>
-        sum(when(col(s"m$k"), yc(c) * col("s.x"))).as(s"g$k")
-      }
-      val grad = flagged
-        .select(Seq(col("cls"), explode(col("fs")).as("s")) ++
-          classes.indices.map(k => col(s"m$k")): _*)
-        .groupBy(col("s.f").as("f"))
-        .agg(gs.head, gs.tail: _*)
-        .collect()
-      w = classes.zipWithIndex.map { case (c, k) =>
-        val arr = w(c).clone()
-        grad.foreach { r =>
-          if (!r.isNullAt(k + 1)) arr(r.getInt(0)) += r.getLong(k + 1)
-        }
-        c -> arr
-      }.toMap
-    }
-    // final argmax scoring, map-side: least over (-score, c) structs
-    // == min(struct(-score, c)) — integer scores, exact tie rule
-    val preds = classes.map(c =>
-      struct((-scoreCol(w(c))).as("ns"), lit(c).as("c")))
-    val predCol = // least() needs >= 2 args; K == 1 predicts the class
-      if (preds.size == 1) lit(classes.head)
-      else least(preds: _*).getField("c")
-    mat.select(col("cls"), predCol.as("pred"))
-      .groupBy("cls", "pred").agg(count(lit(1)).as("n"))
+    val cs = classes.toArray
+    val mat = pivotMat(features, col("cls"), nFeatures)(
+      (r, i) => if (r.isNullAt(i)) null else r.getString(i))(
+      (a, b) => if (a == null || (b != null && Utf8Order.compare(b, a) < 0)) b
+        else a)
+    val counts = try {
+      // a null cls is -1 for every class, as `cls === c` is not true
+      val w = fit(mat, cs.length, nFeatures, iters)(
+        (cls, c) => if (cls == cs(c)) 1L else -1L)((_, _) => ())
+      // argmax = the first minimum of -score over the classes in UTF-8
+      // order (SQL's least over (-score, class)); the negation raises
+      // on overflow like SQL's
+      val byUtf8 =
+        cs.indices.sortWith((x, y) => Utf8Order.compare(cs(x), cs(y)) < 0)
+      mat.map { d =>
+        val best = if (cs.length == 1) 0
+          else byUtf8.minBy(c => Math.negateExact(score(d, w(c))))
+        (d.y, cs(best))
+      }.countByValue()
+    } finally mat.unpersist(blocking = false)
+    confusion(features, "cls", StringType, counts)
   }
 
-  private def trainLoop(features: DataFrame, nFeatures: Int, iters: Int)
-      : (Seq[(Int, Int, Long)], DataFrame, Array[Long]) = {
+  /** The (label, pred, n) confusion table from its counts — the schema
+    * of the `groupBy(label, pred).agg(count)` it replaces.
+    */
+  private def confusion(features: DataFrame, label: String,
+      tpe: DataType, counts: Iterable[((Any, Any), Long)]): DataFrame =
+    features.sparkSession.createDataFrame(
+      counts.map { case ((y, p), n) => Row(y, p, n) }.toSeq.asJava,
+      StructType(Seq(StructField(label, tpe),
+        StructField("pred", tpe, nullable = false),
+        StructField("n", LongType, nullable = false))))
+
+  private def trainLoop[T](features: DataFrame, nFeatures: Int, iters: Int)(
+      finish: (RDD[Doc[Long]], Array[Long]) => T): (Seq[(Int, Int, Long)], T) = {
     require(nFeatures >= 1 && nFeatures <= (1 << 16),
       s"nFeatures out of range: $nFeatures")
     require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
     // weights AND their full evolution live on the driver (that is
-    // what makes the broadcast-per-round shape work) — bound the
+    // what makes the weights-in-the-closure shape work) — bound the
     // materialization, not just each factor
     require(iters.toLong * nFeatures <= (1L << 20),
       s"iters * nFeatures = ${iters.toLong * nFeatures} exceeds the " +
         "2^20 driver-side weight-evolution budget")
-    val mat = pivotMat(features, "y", nFeatures)
-    var w = Array.fill[Long](nFeatures)(0L)
-    val out = Seq.newBuilder[(Int, Int, Long)]
-    for (i <- 1 to iters) {
-      w = oneRound(mat, w)
-      out ++= w.zipWithIndex.map { case (v, f) => (i, f, v) }
-    }
-    (out.result(), mat, w)
-  }
-
-  /** One batch-perceptron round over the doc-major matrix: row-local
-    * score fold + misclassified filter, then the gradient's
-    * groupBy(f) — partial aggregation caps the exchange at nFeatures
-    * rows per task. ONE job, no joins.
-    */
-  private def oneRound(mat: DataFrame, w: Array[Long]): Array[Long] = {
-    val grad = mat.filter(col("y") * scoreCol(w) <= 0)
-      .select(col("y"), explode(col("fs")).as("s"))
-      .groupBy(col("s.f").as("f"))
-      .agg(sum(col("y") * col("s.x")).as("g"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    w.zipWithIndex.map { case (v, f) => v + grad.getOrElse(f, 0L) }
+    val mat = pivotMat(features, col("y").cast("long"), nFeatures)(
+      _.getLong(_))(math.min)
+    try {
+      val out = Seq.newBuilder[(Int, Int, Long)]
+      val w = fit(mat, 1, nFeatures, iters)((y, _) => y)((i, wi) =>
+        out ++= wi(0).zipWithIndex.map { case (v, f) => (i, f, v) })
+      (out.result(), finish(mat, w(0)))
+    } finally mat.unpersist(blocking = false)
   }
 
   /** The DuckDB replay for a FIXED round count: `featCte` must define

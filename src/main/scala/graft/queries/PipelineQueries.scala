@@ -1340,8 +1340,8 @@ object PipelineQueries {
     // and sigmoid exp would both break engine parity) learns
     // is-it-English weights over 16 md5-nibble-hashed token features
     // in 3 rounds. ONE corpus scan builds the feature matrix; each
-    // round is two matrix-sized aggregates with the 16-row weight
-    // table broadcast. The oracle replays all 3 rounds relationally.
+    // round is one RDD aggregate with the 16 weights in its closure.
+    // The oracle replays all 3 rounds relationally.
     "perceptron_train" -> ((s, d) =>
       graft.operators.Perceptron.train(perceptronFeats(s, d),
         nFeatures = 16, iters = 3)),

@@ -243,12 +243,17 @@ object IndexLifecycle {
 
   // ---- sidecar reads ----
 
-  /** Read the parquet sidecar directory `dir`. Through its part files:
-    * Spark ignores, with a WARN, a root path whose own name starts
-    * with `_`, which every sidecar name does.
+  /** Read the parquet sidecar directory `dir` through its part files,
+    * listed once: Spark ignores (with a WARN) a root path named `_…`,
+    * as every sidecar is, and stats a lone glob path literally, logging
+    * a stack trace. A missing `dir` throws `FileNotFoundException`.
     */
-  def readSidecar(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/*")
+  def readSidecar(spark: SparkSession, dir: String): DataFrame = {
+    val path = new Path(dir)
+    val parts = fsFor(spark, dir).listStatus(path).toSeq.map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+    spark.read.parquet(parts.map(n => new Path(path, n).toString): _*)
+  }
 
   /** A directory's fingerprint: (name, mtime, length) of every entry
     * from one listStatus — metadata only. The guard of every per-JVM

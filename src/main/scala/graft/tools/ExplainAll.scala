@@ -15,7 +15,7 @@ import java.util.concurrent.atomic.AtomicInteger
   * are wide and the metadata rewrites fire.
   *
   * {{{
-  * runMain graft.tools.ExplainAll [--exec] [--out <dir>] <sfDir> [query ...]
+  * runMain graft.tools.ExplainAll [--exec [--passes <n>]] [--out <dir>] <sfDir> [query ...]
   * }}}
   *
   * Without `--exec` each query's formatted physical plan is printed
@@ -29,20 +29,28 @@ import java.util.concurrent.atomic.AtomicInteger
   * use it on queries with small results. `--out` writes
   * `<dir>/<query>.txt` per query instead of printing. No query names
   * means every query.
+  * `--exec --passes <n>` instead builds and runs the listed queries
+  * round-robin to the `noop` sink, n passes in one session, printing
+  * `[pass <p>] <query> jobs=<n> compiles=<n>` (build jobs included) and
+  * a pass total: a whole pass may not fit the codegen cache where each
+  * query alone does, and warm passes' compiles count what it evicted.
   */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val exec = args.contains("--exec")
-    val out = args.indexOf("--out") match {
+    def value(flag: String): Option[String] = args.indexOf(flag) match {
       case -1 => None
       case i => Some(args(i + 1))
     }
+    val out = value("--out")
+    val passes = value("--passes").map(_.toInt)
     val positional = args.zipWithIndex.collect {
       case (a, i) if !a.startsWith("--") &&
-        (i == 0 || args(i - 1) != "--out") => a
+        (i == 0 || !Set("--out", "--passes")(args(i - 1))) => a
     }
-    require(positional.nonEmpty,
-      "usage: ExplainAll [--exec] [--out <dir>] <sfDir> [query ...]")
+    require(positional.nonEmpty && (passes.isEmpty || exec),
+      "usage: ExplainAll [--exec [--passes <n>]] [--out <dir>] <sfDir> " +
+        "[query ...]")
     val sfDir = positional.head
     val names = if (positional.length > 1) positional.tail.toSeq
       else SparkEntry.queries.keys.toSeq
@@ -52,6 +60,24 @@ object ExplainAll {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     })
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    if (passes.isDefined) {
+      for (p <- 1 to passes.get) {
+        val counts = names.map { n =>
+          Thread.sleep(300); jobs.set(0) // let earlier job events land
+          val c0 = compiles
+          SparkEntry.queries(n)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          Thread.sleep(300)
+          println(s"[pass $p] $n jobs=${jobs.get} compiles=${compiles - c0}")
+          (jobs.get, compiles - c0)
+        }
+        println(s"[pass $p] total jobs=${counts.map(_._1).sum} " +
+          s"compiles=${counts.map(_._2).sum}")
+      }
+      spark.stop()
+      return
+    }
     out.foreach(d => Files.createDirectories(Paths.get(d)))
     names.foreach { n =>
       val text =
@@ -62,16 +88,15 @@ object ExplainAll {
             // listener events arrive asynchronously: let the warm run's
             // jobs land before the counter resets
             Thread.sleep(300); jobs.set(0)
-            val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+            val compiled = compiles
             val t0 = System.nanoTime()
             // collect() executes THIS DataFrame's own QueryExecution, so
             // the explain below shows its final adaptive plan
             df.collect()
             val dt = (System.nanoTime() - t0) / 1e9
-            val compiles =
-              CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+            val compiledNow = compiles - compiled
             Thread.sleep(300)
-            f"[exec] $n jobs=${jobs.get} time=$dt%.3f compiles=$compiles%n"
+            f"[exec] $n jobs=${jobs.get} time=$dt%.3f compiles=$compiledNow%n"
           }
           head + df.queryExecution.explainString(FormattedMode)
         } catch { case e: Throwable => s"explain failed: $e\n" }

@@ -161,9 +161,9 @@ object ScaleSmoke {
       // ann_ivf_deleted/purged pattern
       "bloom_lookup_deleted", "bloom_lookup_purged",
       // perceptron training: one corpus scan for the feature matrix,
-      // then per-round matrix-sized aggregates with a 16-row
-      // broadcast weight table — should track the matrix linearly;
-      // the confusion gate adds one more matrix-sized scoring pass
+      // then one matrix-sized RDD aggregate per round, the 16 weights
+      // in its closure — should track the matrix linearly; the
+      // confusion gate adds one more matrix-sized scoring pass
       "perceptron_train", "perceptron_confusion",
       // kNN labeling: the DPP-pruned batch probe + a neighbor-sized
       // label join and vote — should stay flat like the other probes

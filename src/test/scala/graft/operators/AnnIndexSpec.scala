@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkTestBase
 import graft.sources.IndexLifecycle.readSidecar
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -129,9 +130,11 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
     }
     // the pending-delete check is an existence check: no failed
     // parquet resolution and its WARNs on an index without deletes;
-    // and sidecar reads name no underscore root Spark would ignore
+    // and sidecar reads name no underscore root Spark would ignore,
+    // nor any sidecar path at all
     assert(!logged.exists(l => l.contains("_tombstones") ||
-      l.contains("All paths were ignored")), logged.mkString("\n"))
+      l.contains("All paths were ignored") || l.contains(s"$dir/_")),
+      logged.mkString("\n"))
     // GroupedTopK emits a group's rows in heap order (unordered set
     // semantics, like the driver's sorted-rows hash gate): compare as
     // sorted rows
@@ -529,11 +532,13 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
   test("writer-format invariant: every verb leaves _codebook and an " +
       "_ids equal to the stored (id, bucket) set") {
     val dir = tmp("ann_format")
-    def pairs(d: String) = spark.read.parquet(d).select("id", "bucket")
+    def pairs(df: DataFrame) = df.select("id", "bucket")
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    def stored = pairs(spark.read.parquet(dir))
     def assertFormat(after: String): Unit = {
       assert(Files.exists(Paths.get(s"$dir/_codebook")), s"$after: _codebook")
-      assert(pairs(s"$dir/_ids/*") == pairs(dir), s"$after: _ids != stored")
+      assert(pairs(readSidecar(spark, s"$dir/_ids")) == stored,
+        s"$after: _ids != stored")
       Seq("_ids.old", "_ids.next", "_ids.tmp", "_codebook.old",
         "_codebook.next", "_split.next")
         .foreach(n => assert(!Files.exists(Paths.get(s"$dir/$n")),
@@ -551,7 +556,7 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
     assertFormat("delete")
     SimilarityOps.compactIvfIndex(spark, dir)
     assertFormat("purge")
-    assert(!pairs(dir).exists(r => r._1 == 5L || r._1 == 120L))
+    assert(!stored.exists(r => r._1 == 5L || r._1 == 120L))
     splitLargest(dir)
     assertFormat("split")
     SimilarityOps.retrainIvfIndex(spark, dir, k = 3, iters = 1)
@@ -670,10 +675,11 @@ class AnnIndexSpec extends SparkTestBase with IvfFixtures
     try SimilarityOps.compactIvfIndex(spark, dir)
     finally graft.sources.IndexLifecycle.betweenRenames = _ => ()
     assert(opened == 1, "the seam never ran")
-    def pairs(d: String) = spark.read.parquet(d).select("id", "bucket")
+    def pairs(df: DataFrame) = df.select("id", "bucket")
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(pairs(s"$dir/_ids/*") == pairs(dir))
-    assert(!pairs(dir).exists(r => r._1 == 30L || r._1 == 60L))
+    def stored = pairs(spark.read.parquet(dir))
+    assert(pairs(readSidecar(spark, s"$dir/_ids")) == stored)
+    assert(!stored.exists(r => r._1 == 30L || r._1 == 60L))
     val nested = Files.list(Paths.get(s"$dir/_ids"))
     try assert(nested.iterator().asScala.forall(p => !Files.isDirectory(p)),
       "a directory nested inside _ids")

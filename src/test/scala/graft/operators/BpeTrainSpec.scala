@@ -1,12 +1,16 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.graftspec.JobLog
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 
 /** The BPE training loop's semantic pins: greedy left-to-right merge
   * order (the overlap case "a b a b" merges BOTH pairs; "l l l"
   * merges the FIRST two), frequency-weighted winner selection with
   * (cnt DESC, a, b) tie order, and multi-round evolution where later
-  * rounds merge symbols EARLIER rounds created.
+  * rounds merge symbols EARLIER rounds created. The Scala merge
+  * function equals the SQL chain it replaced, and rounds plan no query.
   */
 class BpeTrainSpec extends SparkTestBase {
 
@@ -138,5 +142,79 @@ class BpeTrainSpec extends SparkTestBase {
     assert(twoRounds.head == handTop,
       s"round-2 winner ${twoRounds.head} != by-hand $handTop — " +
         "single-pass application diverged from sequential")
+  }
+
+  test("tie-break orders strings by UTF-8 bytes, not UTF-16 units") {
+    // U+FFFD is EF BF BD and U+1F600 is F0 9F 98 80 in UTF-8, so UTF-8
+    // puts U+FFFD first; UTF-16 (high surrogate D83D) puts U+1F600 first
+    val t = BpeTrain.train(docs("x\uD83D\uDE00 x\uFFFD"), "text", 1)
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    assert(t == Seq(("x", "\uFFFD")), t.toString)
+  }
+
+  test("applyMerges equals the SQL merge chain it replaces") {
+    // the per-round SQL the trainers ran before, kept as the oracle:
+    // pad and double separators, one literal replace per merge,
+    // collapse runs of spaces, Spark's space-only trim
+    def chain(ms: Seq[(Column, Column)]): Column = {
+      val doubled =
+        concat(lit(" "), replace(col("w"), lit(" "), lit("  ")), lit(" "))
+      val applied = ms.foldLeft(doubled) { case (acc, (a, b)) =>
+        replace(acc, concat(lit(" "), a, lit("  "), b, lit(" ")),
+          concat(lit(" "), a, b, lit(" ")))
+      }
+      trim(regexp_replace(applied, " +", " "))
+    }
+    val rnd = new scala.util.Random(16)
+    // regex metacharacters, quotes, a control character, non-BMP
+    // symbols (surrogate pairs) and plain letters
+    val alphabet = Seq("a", "b", ".", "*", "+", "?", "(", ")", "[", "]",
+      "|", "\\", "^", "$", "'", "\"", "\t", "\uFFFD", "\uD83D\uDE00",
+      "\uD834\uDD1E")
+    def sym(): String =
+      Seq.fill(1 + rnd.nextInt(2))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    val cases = Seq.fill(400) {
+      val sy =
+        if (rnd.nextInt(3) != 0) Seq.fill(1 + rnd.nextInt(7))(sym())
+        else { // a run of one symbol
+          val s = sym()
+          Seq.fill(2 + rnd.nextInt(6))(s)
+        }
+      def pick(): (String, String) =
+        if (sy.size >= 2 && rnd.nextInt(4) != 0) {
+          val i = rnd.nextInt(sy.size - 1)
+          (sy(i), sy(i + 1))
+        } else (sym(), sym())
+      val ((a1, b1), (a2, b2)) = (pick(), pick())
+      (sy.mkString(" "), a1, b1, a2, b2)
+    }
+    val rows = cases.toDF("w", "a1", "b1", "a2", "b2")
+      .select(col("w"), col("a1"), col("b1"), col("a2"), col("b2"),
+        chain(Seq((col("a1"), col("b1")))),
+        chain(Seq((col("a1"), col("b1")), (col("a2"), col("b2")))))
+      .collect()
+    assert(rows.length == cases.size)
+    var merged = 0
+    rows.foreach { r =>
+      val (w, m1, m2) =
+        (r.getString(0), (r.getString(1), r.getString(2)), (r.getString(3), r.getString(4)))
+      assert(BpeTrain.applyMerges(w, Seq(m1)) == r.getString(5), s"$w / $m1")
+      assert(BpeTrain.applyMerges(w, Seq(m1, m2)) == r.getString(6),
+        s"$w / $m1, $m2")
+      if (r.getString(5) != w) merged += 1
+    }
+    assert(merged > cases.size / 3, s"only $merged cases merged anything")
+  }
+
+  test("rounds plan nothing: 2 and 6 merges start the same SQL " +
+      "executions, and each round is one job") {
+    val d = docs("the cat sat on the mat", "the rat ate the oat",
+      "in on at the an then")
+    def run(n: Int): JobLog =
+      JobLog(spark.sparkContext)(BpeTrain.train(d, "text", n).collect())._1
+    val (two, six) = (run(2), run(6))
+    assert(two.sqlExecutions == six.sqlExecutions,
+      s"${two.sqlExecutions} vs ${six.sqlExecutions} SQL executions")
+    assert(six.jobs - two.jobs == 4, s"${two.jobs} vs ${six.jobs} jobs")
   }
 }

@@ -1,12 +1,14 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.graftspec.JobLog
 
 /** Batch-perceptron laws on a hand-computable fixture: round 1 updates
   * from EVERY example (w0 = 0 scores everything 0, and 0 counts as
   * misclassified — the <= in the margin test), a separating weight
   * vector is a fixed point, and the emitted rows are the full integer
-  * weight evolution.
+  * weight evolution. Overflow follows the SQL the rounds replaced, and
+  * rounds plan no query.
   */
 class PerceptronSpec extends SparkTestBase {
 
@@ -103,5 +105,50 @@ class PerceptronSpec extends SparkTestBase {
       assert(sql.contains(s"w${k}_$i AS"), s"missing w${k}_$i")
     assert(!sql.contains("w2_1 AS") && !sql.contains("w0_3 AS"))
     assert(sql.contains("ORDER BY score DESC, c"))
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("overflow: the score wraps; y·score and gradient sums raise") {
+    def feats(rows: (Long, Long, Int, Long)*) = rows.toDF("id", "y", "f", "x")
+    // round 2 scores 2^32 · 2^32 = 2^64, which wraps to 0: a margin of
+    // 0 is misclassified, so the weight doubles
+    val wrap = Perceptron.train(feats((1L, 1L, 0, 1L << 32)), 1, 2)
+      .collect().map(r => (r.getInt(0), r.getLong(2))).sortBy(_._1).toSeq
+    assert(wrap == Seq((1, 1L << 32), (2, 1L << 33)), wrap.toString)
+    // w1 = 3·2^31 - 2^31 = 2^32; round 2 scores example 2 as
+    // 2^31 · 2^32 = 2^63, which wraps to Long.MinValue, and
+    // -1 · Long.MinValue overflows
+    val margin = intercept[Exception](Perceptron.train(
+      feats((1L, 1L, 0, 3L << 31), (2L, -1L, 0, 1L << 31)), 1, 2))
+    assert(causes(margin).exists(_.isInstanceOf[ArithmeticException]),
+      margin.toString)
+    // round 1's gradient sums Long.MaxValue + 1
+    val grad = intercept[Exception](Perceptron.train(
+      feats((1L, 1L, 0, Long.MaxValue), (2L, 1L, 0, 1L)), 1, 1))
+    assert(causes(grad).exists(_.isInstanceOf[ArithmeticException]),
+      grad.toString)
+  }
+
+  test("a feature id outside [0, nFeatures) fails, naming it") {
+    val e = intercept[Exception](Perceptron.train(
+      Seq((1L, 1L, 5, 1L)).toDF("id", "y", "f", "x"), 2, 1))
+    assert(causes(e).exists(t => Option(t.getMessage).exists(
+      _.contains("perceptron feature id out of [0, 2): 5"))), e.toString)
+  }
+
+  test("rounds plan nothing: 1 and 4 iterations start the same SQL " +
+      "executions, and each round is one job") {
+    val feats = Seq(
+      (1L, 1L, 0, 2L),
+      (2L, -1L, 1, 3L),
+      (3L, 1L, 0, 1L), (3L, 1L, 1, 1L)).toDF("id", "y", "f", "x")
+    def run(iters: Int): JobLog = JobLog(spark.sparkContext)(
+      Perceptron.train(feats, nFeatures = 2, iters).collect())._1
+    val (one, four) = (run(1), run(4))
+    assert(one.sqlExecutions == four.sqlExecutions,
+      s"${one.sqlExecutions} vs ${four.sqlExecutions} SQL executions")
+    assert(four.jobs - one.jobs == 3, s"${one.jobs} vs ${four.jobs} jobs")
   }
 }

@@ -40,9 +40,11 @@ class FileBloomIndexSpec extends SparkTestBase {
         .select("doc_id").collect().map(_.getLong(0)).toSeq))
     // the pending-delete check is an existence check: no failed
     // parquet resolution and its WARNs on an index without deletes;
-    // and sidecar reads name no underscore root Spark would ignore
+    // and sidecar reads name no underscore root Spark would ignore,
+    // nor any sidecar path at all
     assert(!logged.exists(l => l.contains("_tombstones") ||
-      l.contains("All paths were ignored")), logged.mkString("\n"))
+      l.contains("All paths were ignored") || l.contains(s"$idx/_")),
+      logged.mkString("\n"))
     for ((key, got) <- keys.zip(gots)) {
       val want = Tables.documents(spark, sf)
         .filter(col("doc_id") === key.toLong)
