@@ -18,20 +18,18 @@ import scala.jdk.CollectionConverters._
   * contract), and repeats on the evolved vocabulary; the output is the
   * ordered merge table a tokenizer ships with.
   *
-  * Scale shape: SQL scans the corpus ONCE — the word-frequency
-  * aggregate — into a pinned vocabulary RDD. Every round after that is
-  * vocabulary-sized (thousands-to-millions of rows, not the corpus) and
-  * ONE RDD job that plans no query: pair counts summed by
+  * Scale shape: ONE corpus scan counts word frequencies into a pinned
+  * vocabulary RDD; every round is vocabulary-sized (not corpus-sized)
+  * and ONE RDD job that plans no query: pair counts summed by
   * `reduceByKey`, the winner ranked by `takeOrdered` (ONE row back to
-  * the driver), the merge mapped over the vocabulary by
-  * [[applyMerges]]. A lazy local checkpoint every CKPT_EVERY rounds
-  * bounds the lineage; the pins are released when training returns.
-  * [[train]] caps at 1,000 merges; a REAL tokenizer vocabulary
-  * (30k-50k merges) goes through [[trainBatched]], which learns up to
-  * `batch` mutually NON-INTERACTING merges per round (disjoint symbol
-  * sets commute, so one application pass realizes all of them) — round
-  * count ≪ merge count, the batching every production BPE trainer
-  * ships.
+  * the driver), the merge mapped over the vocabulary by [[applyMerges]].
+  * A lazy local checkpoint every CKPT_EVERY rounds bounds the lineage;
+  * the pins are released when training returns. [[train]] caps at
+  * 1,000 merges; a REAL tokenizer vocabulary (30k-50k merges) goes
+  * through [[trainBatched]], which learns up to `batch` mutually
+  * NON-INTERACTING merges per round (disjoint symbol sets commute, so
+  * one application pass realizes all of them) — round count ≪ merge
+  * count, the batching every production BPE trainer ships.
   *
   * Determinism (hash-gate parity with DuckDB): counts are exact longs;
   * the winner is (cnt DESC, a, b) with binary-UTF8 string order on
@@ -116,10 +114,9 @@ object BpeTrain {
   }
 
   /** The round loop of both trainers ([[train]] is `batch = window =
-    * 1`, one merge per round): each round ranks the current
-    * vocabulary's top `window` pairs in one RDD job, selects the
-    * round's merges, and maps them over the vocabulary. `finish` reads
-    * the final vocabulary before the pinned RDDs are released.
+    * 1`): each round ranks the vocabulary's top `window` pairs in one RDD
+    * job, selects the round's merges and maps them over the vocabulary.
+    * `finish` reads the final vocabulary before the pins are released.
     */
   private def loop[T](docs: DataFrame, textCol: String, rounds: Int,
       batch: Int, window: Int, unit: String)(
@@ -156,34 +153,33 @@ object BpeTrain {
         }
         val ms = selected.toSeq.map { case (a, b, _) => (a, b) }
         vocab = vocab.map { case (w, f) => (applyMerges(w, ms), f) }
-        // between checkpoints each round's job replays <= CKPT_EVERY
-        // string maps over the last pin — map-side and tiny; the local
-        // checkpoint persists inside the next job that computes it
+        // a round's job replays <= CKPT_EVERY map-side string maps over
+        // the last pin; a local checkpoint persists in the next job
         if (round % CKPT_EVERY == 0) {
           vocab = vocab.localCheckpoint()
           pins += vocab
         }
       }
       (merges.result(), finish(vocab))
-    } finally pins.foreach(_.unpersist(blocking = false))
+    } finally pins.foreach(_.unpersist(blocking = true))
   }
 
-  /** One corpus scan: word frequencies as space-separated
-    * character-symbol strings — the round-0 vocabulary both trainers
-    * start from, pinned. With adaptive execution the aggregate's
-    * shuffle runs here; round 1's job computes and caches the rest.
+  /** The round-0 vocabulary, pinned: word frequencies as symbol strings,
+    * from ONE corpus scan in round 1's job. SQL lowercases; the rest makes
+    * the Java calls of Spark's `split(_, ' ')` and `trim(regexp_replace(
+    * word, '(.)', '$1 '))` (`applyMerges` with no merges is that `trim`).
     */
-  private def initialVocab(docs: DataFrame, textCol: String)
+  private[operators] def initialVocab(docs: DataFrame, textCol: String)
       : RDD[(String, Long)] =
-    docs
-      .select(explode(split(lower(col(textCol)), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("f"))
-      .select(trim(regexp_replace(col("word"), "(.)", "$1 ")).as("w"),
-        col("f"))
-      .queryExecution.toRdd
-      .map(r => (r.getString(0), r.getLong(1)))
+    docs.select(lower(col(textCol))).queryExecution.toRdd
+      .flatMap(r => if (r.isNullAt(0)) Iterator.empty
+        else r.getString(0).split(" ", -1).iterator.filter(_.nonEmpty))
+      .map(_ -> 1L).reduceByKey(_ + _)
+      .map { case (w, f) =>
+        (applyMerges(OneChar.matcher(w).replaceAll("$1 "), Nil), f) }
       .persist(StorageLevel.MEMORY_AND_DISK)
+
+  private val OneChar = java.util.regex.Pattern.compile("(.)")
 
   /** The top `n` adjacent-symbol pairs of the vocabulary by
     * frequency-weighted count, (cnt DESC, a, b) — one RDD job.

@@ -5,9 +5,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinterop.ShuffleInterop
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Batch-perceptron TRAINING over a hashed feature matrix — the
@@ -31,13 +33,11 @@ import scala.jdk.CollectionConverters._
   * diverge across engines.
   *
   * Scale shape: SQL reads the flat feature matrix once (validating
-  * every feature id), and an RDD pivots it DOC-MAJOR — one element per
-  * example, its features as parallel primitive arrays — pinned while
-  * training runs. Each round is ONE RDD job that plans no query
-  * ([[fit]]): the weights ride the closure (they live on the driver
-  * anyway — the batch perceptron's contract) and each task returns one
-  * nFeatures-long gradient whatever the matrix size; the pivot's
-  * shuffle runs inside round 1's job. Arithmetic follows the SQL it
+  * every feature id); inside round 1's job its rows shuffle by id and
+  * pivot DOC-MAJOR (per example, features as parallel primitive
+  * arrays), pinned while training runs. Each round is ONE RDD job that
+  * plans no query ([[fit]]): the weights ride the closure and each task
+  * returns one nFeatures-long gradient. Arithmetic follows the SQL it
   * replaced: the score wraps on overflow, while y·score and the
   * gradient's products and sums raise `ArithmeticException` (ANSI).
   *
@@ -50,17 +50,17 @@ object Perceptron {
   /** One example: its label and its features as parallel arrays. */
   private final case class Doc[L](y: L, fs: Array[Int], xs: Array[Long])
 
-  /** Doc-major pivot of the flat (id, label, f, x) matrix, persisted.
-    * `read` takes the label from field 1, and an example's label is the
-    * `least` of its rows' (constant per id by contract; the SQL pivot
-    * took their MIN). The id groups as a one-field row, so any id type
-    * groups by value. Feature order within an example is whatever the
-    * shuffle delivered: every consumer sums integers, order-free.
+  /** Doc-major pivot of the flat (id, label, f, x) matrix, persisted;
+    * its `UnsafeRow`s shuffle by the hash of the id, a one-field row, so
+    * any id type groups by value. `read` takes the label from field 1;
+    * an example's label is the `least` of its rows' (constant per id by
+    * contract). Feature order is whatever the shuffle delivered: every
+    * consumer sums integers, order-free.
     */
   private def pivotMat[L](features: DataFrame, label: Column,
       nFeatures: Int)(read: (InternalRow, Int) => L)(
-      least: (L, L) => L): RDD[Doc[L]] =
-    features
+      least: (L, L) => L): RDD[Doc[L]] = {
+    val rows = features
       .select(struct(col("id")), label,
         // fail FAST and identically across all three training paths on
         // a contract-violating feature id: the flat-matrix join form
@@ -73,14 +73,21 @@ object Perceptron {
             col("f")))),
         col("x").cast("long"))
       .queryExecution.toRdd
-      .map(r => (r.getStruct(0, 1).copy(),
-        (read(r, 1), r.getInt(2), r.getLong(3))))
-      .groupByKey()
-      .map { case (_, rows) =>
-        Doc(rows.iterator.map(_._1).reduce(least),
-          rows.iterator.map(_._2).toArray, rows.iterator.map(_._3).toArray)
+    val parts = rows.getNumPartitions.max(1)
+    ShuffleInterop.shuffleRows(rows.map(r => (Math.floorMod(
+      r.getStruct(0, 1).hashCode, parts), r)), parts, 4, mapStageNow = false)
+      .mapPartitions { in =>
+        val byId = mutable.HashMap.empty[InternalRow, Seq[(L, Int, Long)]]
+        in.foreach { r =>
+          val id = r.getStruct(0, 1)
+          byId(id.copy()) = (read(r, 1), r.getInt(2), r.getLong(3)) +:
+            byId.getOrElse(id, Nil)
+        }
+        byId.valuesIterator.map(rs => Doc(rs.map(_._1).reduce(least),
+          rs.map(_._2).toArray, rs.map(_._3).toArray))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** ⟨w, x⟩ — wrapping on overflow, like the SQL fold it replaces. */
   private def score(d: Doc[_], w: Array[Long]): Long = {
@@ -93,8 +100,8 @@ object Perceptron {
     * matrix, `y(label, c)` the ±1 label of class c: each round is ONE
     * `treeAggregate` whose closure carries the weights, folding every
     * (example, class) margin and, when it is <= 0, y·x into that class's
-    * gradient. `each` sees every round's weights; the last are returned.
-    * Margins and gradients raise on overflow, like the ANSI SQL form.
+    * gradient (raising on overflow, like ANSI SQL). `each` sees every
+    * round's weights; the last are returned.
     */
   private def fit[L](mat: RDD[Doc[L]], k: Int, nFeatures: Int,
       iters: Int)(y: (L, Int) => Long)(
@@ -154,13 +161,11 @@ object Perceptron {
     *
     * Scale shape: the matrix pins once, and the K trainings FUSE into
     * one job per round ([[fit]]), so the JOB COUNT is iters + 1
-    * regardless of K (per-class loops would pay K·iters; at K=100 that
-    * is 100× the scheduling and scan overhead for the same algebra —
-    * classes train independently, but their synchronized rounds share
-    * scans). The driver holds K·nFeatures longs, bounded by the require
-    * below. The fused math is EXACTLY the per-class batch perceptron
-    * (integer sums are order-free), pinned in PerceptronSpec against
-    * the public binary trainer.
+    * regardless of K (per-class loops would pay K·iters: 100× the
+    * scheduling and scans at K=100 for the same algebra). The driver
+    * holds K·nFeatures longs, bounded by the require below. The fused
+    * math is EXACTLY the per-class batch perceptron (integer sums are
+    * order-free), pinned in PerceptronSpec against the binary trainer.
     */
   def ovrConfusion(features: DataFrame, classes: Seq[String],
       nFeatures: Int, iters: Int): DataFrame = {
@@ -189,7 +194,7 @@ object Perceptron {
           else byUtf8.minBy(c => Math.negateExact(score(d, w(c))))
         (d.y, cs(best))
       }.countByValue()
-    } finally mat.unpersist(blocking = false)
+    } finally mat.unpersist(blocking = true)
     confusion(features, "cls", StringType, counts)
   }
 
@@ -222,7 +227,7 @@ object Perceptron {
       val w = fit(mat, 1, nFeatures, iters)((y, _) => y)((i, wi) =>
         out ++= wi(0).zipWithIndex.map { case (v, f) => (i, f, v) })
       (out.result(), finish(mat, w(0)))
-    } finally mat.unpersist(blocking = false)
+    } finally mat.unpersist(blocking = true)
   }
 
   /** The DuckDB replay for a FIXED round count: `featCte` must define

@@ -14,16 +14,17 @@ object ShuffleInterop {
 
   /** `rows` (`UnsafeRow`s of `numFields` fields, each keyed by its
     * target partition) shuffled into `parts` partitions. Returns once
-    * the map stage has run (one job); reading the result is the reduce.
+    * the map stage has run (one job) unless `mapStageNow` is false, when
+    * the first job reading the result runs it; reading is the reduce.
     */
   def shuffleRows(rows: RDD[(Int, InternalRow)], parts: Int,
-      numFields: Int): RDD[InternalRow] = {
+      numFields: Int, mapStageNow: Boolean = true): RDD[InternalRow] = {
     val shuffled = new ShuffledRDD[Int, InternalRow, InternalRow](rows,
       new Partitioner {
         def numPartitions: Int = parts
         def getPartition(key: Any): Int = key.asInstanceOf[Int]
       }).setSerializer(new UnsafeRowSerializer(numFields))
-    if (rows.partitions.nonEmpty)
+    if (mapStageNow && rows.partitions.nonEmpty)
       rows.sparkContext.submitMapStage(shuffled.dependencies.head
         .asInstanceOf[ShuffleDependency[Int, InternalRow, InternalRow]]).get()
     shuffled.values

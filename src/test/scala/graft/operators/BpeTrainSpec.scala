@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * merges the FIRST two), frequency-weighted winner selection with
   * (cnt DESC, a, b) tie order, and multi-round evolution where later
   * rounds merge symbols EARLIER rounds created. The Scala merge
-  * function equals the SQL chain it replaced, and rounds plan no query.
+  * function and round-0 vocabulary equal the SQL they replaced, and
+  * rounds plan no query.
   */
 class BpeTrainSpec extends SparkTestBase {
 
@@ -150,6 +151,31 @@ class BpeTrainSpec extends SparkTestBase {
     val t = BpeTrain.train(docs("x\uD83D\uDE00 x\uFFFD"), "text", 1)
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     assert(t == Seq(("x", "\uFFFD")), t.toString)
+  }
+
+  test("initialVocab equals the SQL vocabulary it replaces") {
+    // the round-0 SQL the trainers ran before, kept as the oracle
+    def sqlVocab(d: org.apache.spark.sql.DataFrame) =
+      d.select(explode(split(lower(col("text")), " ")).as("word"))
+        .filter(length(col("word")) > 0)
+        .groupBy("word").agg(count(lit(1)).as("f"))
+        .select(trim(regexp_replace(col("word"), "(.)", "$1 ")), col("f"))
+        .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    val rnd = new scala.util.Random(16)
+    // spaces (runs, leading, trailing), line terminators regex `.` skips,
+    // tabs, case folds, non-BMP symbols, regex metacharacters
+    val alphabet = Seq(" ", " ", " ", "a", "B", "\n", "\r", "\u0085",
+      "\u2028", "\t", "\u0130", "\u01C5", "\uD83D\uDE00", ".", "$", "\\",
+      "(", "\uFFFD")
+    val texts = Seq.fill(300)(
+      Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+    val d = (texts :+ null).toDF("text")
+    val vocab = BpeTrain.initialVocab(d, "text")
+    val got = try vocab.collect().sorted.toSeq
+      finally vocab.unpersist(blocking = true)
+    val want = sqlVocab(d)
+    assert(want.exists(_._1.contains("\n")) && want.exists(_._2 > 1))
+    assert(got == want)
   }
 
   test("applyMerges equals the SQL merge chain it replaces") {

@@ -110,6 +110,32 @@ class PerceptronSpec extends SparkTestBase {
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
 
+  test("the pivot groups each id by value across input partitions") {
+    // string and null ids, each example's rows spread over 4 input
+    // partitions; the reference groups by id in plain Scala
+    val rnd = new scala.util.Random(7)
+    val ids = Seq("a", "b", "c", "d", "e", null)
+    val rows = Seq.fill(60)((ids(rnd.nextInt(ids.size)), rnd.nextInt(4),
+      1L + rnd.nextInt(3)))
+    val label = (id: String) => if (id == null || id < "c") 1L else -1L
+    val flat = rows.map { case (id, f, x) => (id, label(id), f, x) }
+      .toDF("id", "y", "f", "x")
+    var w = Array.fill(4)(0L)
+    val want = (1 to 3).flatMap { i =>
+      val g = Array.fill(4)(0L)
+      for ((id, rs) <- rows.groupBy(_._1); y = label(id)
+        if y * rs.map { case (_, f, x) => x * w(f) }.sum <= 0;
+        (_, f, x) <- rs) g(f) += y * x
+      w = w.zip(g).map { case (a, b) => a + b }
+      w.indices.map(f => (i, f, w(f)))
+    }
+    for (d <- Seq(flat.repartition(4, $"f"), flat.coalesce(1))) {
+      val got = Perceptron.train(d, nFeatures = 4, iters = 3).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+      assert(got == want, got.toString)
+    }
+  }
+
   test("overflow: the score wraps; y·score and gradient sums raise") {
     def feats(rows: (Long, Long, Int, Long)*) = rows.toDF("id", "y", "f", "x")
     // round 2 scores 2^32 · 2^32 = 2^64, which wraps to 0: a margin of
