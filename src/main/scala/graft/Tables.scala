@@ -13,30 +13,20 @@ import org.apache.spark.sql.functions._
   * loaded schema rather than assuming either encoding.
   */
 object Tables {
-  /** Per-(session, path) memo of the RESOLVED parquet relation — the
-    * catalog behavior a registered table gets: file listing and footer
-    * schema are read once per session, not once per query build. Every
-    * action still reads rows from the files (no data caching — only
-    * resolution metadata is reused); a production deployment gets the
-    * same effect from a real catalog table or the filesource listing
-    * cache. Keyed on `sessionUUID` — unique per session, unlike the
-    * identity hash previously used here, which can collide between two
-    * live sessions and would then serve a relation resolved under
-    * another session's confs (parquet schema conversion honors session
-    * confs, e.g. `nanosAsLong`, so a relation resolved under one
-    * session must never serve another). Input corpus tables are
-    * immutable for a session's lifetime, which is what makes the memo
-    * sound; mutable index/sidecar directories (bloom, IVF) keep their
-    * own fingerprint-guarded read paths and never come through here.
+  /** Resolved parquet relations per (session, path): file listing and
+    * footer schema are read once per session; every action still reads
+    * rows from the files. Fingerprint: none (build-once), sound only for
+    * paths immutable for a session's lifetime — the mutable bloom and
+    * IVF index dirs never come through here. The key holds
+    * `sessionUUID` because a relation resolved under one session's
+    * confs (e.g. `nanosAsLong`) must never serve another.
     */
-  private val relCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private val relations = new Memo[(String, String), Unit, DataFrame]
 
   /** Memoized `spark.read.parquet(path)` for write-once paths. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    relCache.getOrElseUpdate(
-      (org.apache.spark.sql.graftinterop.ColumnInterop.sessionUUID(spark),
-        path), spark.read.parquet(path))
+    relations.get((org.apache.spark.sql.graftinterop.ColumnInterop
+      .sessionUUID(spark), path), ())(spark.read.parquet(path))
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     readParquet(spark, s"$dir/$name.parquet")

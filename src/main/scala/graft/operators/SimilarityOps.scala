@@ -581,8 +581,8 @@ object SimilarityOps {
     * down — then rejects an index still lacking `_codebook` or `_ids`
     * ([[rejectLegacy]]), and returns the codebook every verb uses for
     * both the [[liveIndex]] bucket filter and its cell ranking. Clean,
-    * it costs four existence checks and a listing: the codebook comes
-    * from a per-JVM memo guarded by the `_codebook` fingerprint
+    * it costs four existence checks and a listing; the codebook is
+    * memoized per index dir under the `_codebook` fingerprint
     * ([[IndexLifecycle.fingerprint]]), which every retrain, split or
     * rebuild flips.
     */
@@ -597,21 +597,15 @@ object SimilarityOps {
     if (!(IndexLifecycle.heal(fs, IndexLifecycle.Slot(cbPath)) &
         IndexLifecycle.heal(fs, IndexLifecycle.Slot(p(s"$dir/_ids")))))
       rejectLegacy(dir)
-    val fp = IndexLifecycle.fingerprint(fs, cbPath)
-    codebookMemo.get(dir) match {
-      case Some((cached, arr)) if cached == fp => arr
-      case _ =>
-        val arr = IndexLifecycle.readSidecar(spark, cbPath.toString)
-          .select(col("id"), col("v")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-        codebookMemo.put(dir, (fp, arr))
-        arr
-    }
+    codebooks.get(dir, IndexLifecycle.fingerprint(fs, cbPath))(
+      IndexLifecycle.readSidecar(spark, cbPath.toString)
+        .select(col("id"), col("v")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1))
   }
 
-  private val codebookMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, Long, Long)], Codebook)]
+  private val codebooks =
+    new graft.Memo[String, Seq[(String, Long, Long)], Codebook]
 
   /** An opened codebook: (cid, centroid) rows sorted by cid. */
   private[graft] type Codebook = Array[(Long, Array[Double])]

@@ -21,6 +21,26 @@ object GridQueries {
     new XarrayContext(s).dataFrame(
       "linear_grid", Fixtures.linearGrid, Map("t" -> 6), Seq("t", "lat", "lon"))
 
+  /** The `dims` group of a fixture tree staged once per JVM under
+    * `name` (`write` fills the store root it is handed), opened through
+    * the same versioned store memo as `format("zarr")` loads: one open
+    * per tree version serves every build. `label` names the table.
+    */
+  private def stagedGrid(s: SparkSession, name: String, label: String,
+      dims: Seq[String])(write: String => Unit): DataFrame = {
+    val root = QueryTmp.staged(name)(base => write(s"$base/store")) + "/store"
+    val store = graft.sources.ZarrTableProvider.open(root)
+    new XarrayContext(s).dataFrame(s"$label@$root", store, store.chunkMap,
+      dims)
+  }
+
+  /** [[Fixtures.linearGrid]] chunked t=6 with the writer's default zlib:
+    * one tree for the metadata-aggregate and value-stats queries.
+    */
+  private def linearT6(s: SparkSession, label: String): DataFrame =
+    stagedGrid(s, "graft_linear_t6", label, Seq("t", "lat", "lon"))(
+      graft.grid.ZarrGridStore.write(Fixtures.linearGrid, _, Map("t" -> 6)))
+
   // pivoted table reconstructed in DuckDB: dims t (0..23), i (0..11), j (0..9)
   private val oracleGrid =
     """grid AS (
@@ -690,13 +710,7 @@ object GridQueries {
     // — Verify's plain session computes the identical result through
     // the scanned plan, which is what the oracle gates)
     "pivot_grid_metasum" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_metasum_grid")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
-          s"$base/store", Map("t" -> 6))) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"metasum_grid@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+      linearT6(s, "metasum_grid")
         .filter(col("t").between(3, 20))
         .agg(sum(col("air")).as("sum_air"))
     }),
@@ -706,25 +720,13 @@ object GridQueries {
     // combined by the evaluator's own single final division
     // (MetadataSumRuleSpec pins the 2-of-4-chunks read behavior)
     "pivot_grid_metamean" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_metamean_grid")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
-          s"$base/store", Map("t" -> 6))) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"metamean_grid@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+      linearT6(s, "metamean_grid")
         .filter(col("t").between(3, 20))
         .agg(avg(col("air")).as("mean_air"))
     }),
 
     "pivot_grid_varstats" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_varstats_grid")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
-          s"$base/store", Map("t" -> 6))) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"varstats_linear_grid@$root", store,
-          store.chunkMap, Seq("t", "lat", "lon"))
+      linearT6(s, "varstats_linear_grid")
         .filter(col("air") >= 255.0)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -735,13 +737,7 @@ object GridQueries {
     // .graft-stats.json sidecar, and the var predicate prunes chunk
     // FILES (open counts pinned in ZarrVarStatsSpec)
     "pivot_grid_zarr_varstats" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_varstats")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
-          s"$base/store", Map("t" -> 6), "zlib")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_varstats@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+      linearT6(s, "zarr_varstats")
         .filter(col("air") >= 255.0)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -753,13 +749,9 @@ object GridQueries {
     // half the chunks in UTF-8 binary order (open counts pinned in
     // ZarrVarStatsSpec) — the string analogue of pivot_grid_zarr_varstats
     "pivot_grid_zarr_strstats" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_strstats")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.gradeGrid,
-          s"$base/store", Map("time" -> 25), "zlib")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_strstats@$root", store, store.chunkMap,
-          Seq("time", "lat"))
+      stagedGrid(s, "graft_zarr_strstats", "zarr_strstats", Seq("time", "lat"))(
+        graft.grid.ZarrGridStore.write(Fixtures.gradeGrid, _, Map("time" -> 25),
+          "zlib"))
         .filter(col("grade") >= "g2" && col("grade").startsWith("g"))
         .select(col("time"), col("lat"), col("grade"))
     }),
@@ -907,14 +899,10 @@ object GridQueries {
     // chunk partitions) + zstd decode. Mirrors the reference's Zarr write
     // + read round trip (reference xarray_sql/reader.py:192-337).
     "pivot_grid_disk" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_disk_grid")(base =>
+      stagedGrid(s, "graft_disk_grid", "disk_linear_grid",
+          Seq("t", "lat", "lon"))(
         graft.grid.ZarrGridStore.writeFromRows(grid(s),
-          Fixtures.linearGrid.schema, Map("t" -> 6), s"$base/store",
-          "zstd")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"disk_linear_grid@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+          Fixtures.linearGrid.schema, Map("t" -> 6), _, "zstd"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -926,15 +914,13 @@ object GridQueries {
     // the residual string IN filter evaluates on the decoded coords —
     // the same query shape as pivot_grid_station on the in-memory store
     "pivot_grid_station_zarr" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_station")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.stationGrid,
-          s"$base/store", Map("station" -> 4), "zlib")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s).fromDataset("stations_zarr", store,
-        Map("station" -> 4))
-      s.sql("""SELECT station, time, reading FROM stations_zarr
-              |WHERE station IN ('st_1','st_4')
-              |AND time >= timestamp'2020-01-04 00:00:00'""".stripMargin)
+      stagedGrid(s, "graft_zarr_station", "stations_zarr",
+          Seq("station", "time"))(
+        graft.grid.ZarrGridStore.write(Fixtures.stationGrid, _,
+          Map("station" -> 4), "zlib"))
+        .filter(col("station").isin("st_1", "st_4") &&
+          col("time") >= lit("2020-01-04 00:00:00").cast("timestamp"))
+        .select(col("station"), col("time"), col("reading"))
     }),
 
     // SQL result -> cloud Zarr with NO driver materialization: the
@@ -966,13 +952,9 @@ object GridQueries {
     // through the Zarr/fsspec abstraction (xarray_sql/reader.py:192-337,
     // README.md:96-105); here the tree is parsed natively on the JVM.
     "pivot_grid_zarr" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_grid")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
-          s"$base/store", Map("t" -> 6, "lat" -> 5), "zlib")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_grid@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+      stagedGrid(s, "graft_zarr_grid", "zarr_grid", Seq("t", "lat", "lon"))(
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, _,
+          Map("t" -> 6, "lat" -> 5), "zlib"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -983,14 +965,10 @@ object GridQueries {
     // opens (README.md:76-77); ZarrGridStore.open auto-detects the
     // version
     "pivot_grid_zarr_v3" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_v3_grid")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, s"$base/store",
-          Map("t" -> 6, "lat" -> 5), "zstd:3",
-          graft.grid.ZarrLayout.V3())) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_v3_grid@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+      stagedGrid(s, "graft_zarr_v3_grid", "zarr_v3_grid",
+          Seq("t", "lat", "lon"))(
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, _,
+          Map("t" -> 6, "lat" -> 5), "zstd:3", graft.grid.ZarrLayout.V3()))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -1002,7 +980,6 @@ object GridQueries {
       val root = QueryTmp.staged("graft_zarr_fmt_grid")(base =>
         graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
           s"$base/store", Map("t" -> 6, "lat" -> 5), "zstd:3")) + "/store"
-      graft.sources.ZarrTableProvider.invalidate(root)
       s.read.format("zarr").load(root)
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
@@ -1063,14 +1040,11 @@ object GridQueries {
     // count. The scan prunes at shard granularity; every surviving
     // shard decodes through the index/inner-codec path
     "pivot_grid_zarr_sharded" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_shard_grid")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, s"$base/store",
+      stagedGrid(s, "graft_zarr_shard_grid", "zarr_shard_grid",
+          Seq("t", "lat", "lon"))(
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, _,
           Map("t" -> 6, "lat" -> 5), "zstd:3",
-          graft.grid.ZarrLayout.V3(Map("t" -> 2, "lat" -> 5)))) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_shard_grid@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+          graft.grid.ZarrLayout.V3(Map("t" -> 2, "lat" -> 5))))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -1080,13 +1054,10 @@ object GridQueries {
     // (reference perf_tests/open_era5.py:7-8): exercises the pure-JVM
     // Blosc container decode on every unpruned chunk read
     "pivot_grid_zarr_blosc" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_blosc_grid")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
-          s"$base/store", Map("t" -> 6, "lat" -> 5), "blosc")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_blosc_grid@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+      stagedGrid(s, "graft_zarr_blosc_grid", "zarr_blosc_grid",
+          Seq("t", "lat", "lon"))(
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, _,
+          Map("t" -> 6, "lat" -> 5), "blosc"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -1096,13 +1067,10 @@ object GridQueries {
     // exercises the pure-JVM BloscLz token decode and the bit-matrix
     // unshuffle on every unpruned chunk read
     "pivot_grid_zarr_blosclz" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_blosclz_grid")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.linearGrid,
-          s"$base/store", Map("t" -> 6, "lat" -> 5), "blosc:blosclz:bit")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_blosclz_grid@$root", store, store.chunkMap,
-          Seq("t", "lat", "lon"))
+      stagedGrid(s, "graft_zarr_blosclz_grid", "zarr_blosclz_grid",
+          Seq("t", "lat", "lon"))(
+        graft.grid.ZarrGridStore.write(Fixtures.linearGrid, _,
+          Map("t" -> 6, "lat" -> 5), "blosc:blosclz:bit"))
         .filter(col("t") >= 12)
         .select(col("t").cast("long").as("t"), col("lat"), col("lon"),
           col("air"))
@@ -1154,14 +1122,10 @@ object GridQueries {
     // the string variable — the layout zarr-python 3 emits by default
     // for any string array
     "pivot_grid_zarr_vlen" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_vlen")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.stationQualityGrid,
-          s"$base/store", Map("station" -> 4, "time" -> 5), "zstd:3",
-          graft.grid.ZarrLayout.V3())) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_vlen@$root", store, store.chunkMap,
-          Seq("station", "time"))
+      stagedGrid(s, "graft_zarr_vlen", "zarr_vlen", Seq("station", "time"))(
+        graft.grid.ZarrGridStore.write(Fixtures.stationQualityGrid, _,
+          Map("station" -> 4, "time" -> 5), "zstd:3",
+          graft.grid.ZarrLayout.V3()))
         .filter(col("quality") =!= "bad" &&
           col("time") >= lit("2020-01-04").cast("timestamp"))
         .select(col("station"), col("time"), col("reading"), col("quality"))
@@ -1172,13 +1136,10 @@ object GridQueries {
     // 2 writes for string arrays): v2 writer emits it, the reader
     // decodes filter + fill, and the identical query gates both paths
     "pivot_grid_zarr_vlen_v2" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_vlen_v2")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.stationQualityGrid,
-          s"$base/store", Map("station" -> 4, "time" -> 5), "zstd:3")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_vlen_v2@$root", store, store.chunkMap,
-          Seq("station", "time"))
+      stagedGrid(s, "graft_zarr_vlen_v2", "zarr_vlen_v2",
+          Seq("station", "time"))(
+        graft.grid.ZarrGridStore.write(Fixtures.stationQualityGrid, _,
+          Map("station" -> 4, "time" -> 5), "zstd:3"))
         .filter(col("quality") =!= "bad" &&
           col("time") >= lit("2020-01-04").cast("timestamp"))
         .select(col("station"), col("time"), col("reading"), col("quality"))
@@ -1190,14 +1151,11 @@ object GridQueries {
     // object per shard at archive scale, inner-chunk ranged reads (with
     // byte-adjacent entries coalesced into single GETs) on the way back
     "pivot_grid_zarr_vlen_sharded" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_zarr_vlen_sh")(base =>
-        graft.grid.ZarrGridStore.write(Fixtures.stationQualityGrid,
-          s"$base/store", Map("station" -> 4, "time" -> 5), "zstd:3",
-          graft.grid.ZarrLayout.V3(Map("station" -> 2)))) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"zarr_vlen_sh@$root", store, store.chunkMap,
-          Seq("station", "time"))
+      stagedGrid(s, "graft_zarr_vlen_sh", "zarr_vlen_sh",
+          Seq("station", "time"))(
+        graft.grid.ZarrGridStore.write(Fixtures.stationQualityGrid, _,
+          Map("station" -> 4, "time" -> 5), "zstd:3",
+          graft.grid.ZarrLayout.V3(Map("station" -> 2))))
         .filter(col("quality") =!= "bad" &&
           col("time") >= lit("2020-01-04").cast("timestamp"))
         .select(col("station"), col("time"), col("reading"), col("quality"))
@@ -1257,12 +1215,8 @@ object GridQueries {
     // real TIMESTAMP column, and a range filter prunes on the µs zone
     // maps — reference df.py:395 handles the same dtype natively
     "pivot_grid_m8time" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_m8time")(base =>
-        Fixtures.writeM8Tree(s"$base/store")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"m8time@$root", store, store.chunkMap,
-          Seq("time"))
+      stagedGrid(s, "graft_m8time", "m8time", Seq("time"))(
+        Fixtures.writeM8Tree(_))
         .filter(col("time") >= lit("2021-01-01 12:00:00").cast("timestamp"))
         .select(col("time"), col("temp"))
     }),
@@ -1271,12 +1225,8 @@ object GridQueries {
     // geoscience archive carries: 0/1 ints, queried as `mask = 1`,
     // masking a sibling variable's aggregate
     "pivot_grid_bool_mask" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_boolmask")(base =>
-        Fixtures.writeBoolMaskTree(s"$base/store")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"boolmask@$root", store, store.chunkMap,
-          Seq("t"))
+      stagedGrid(s, "graft_boolmask", "boolmask", Seq("t"))(
+        Fixtures.writeBoolMaskTree(_))
         .filter(col("mask") === 1)
         .agg(count(lit(1)).as("n_masked"),
           sum("temp").as("sum_temp"))
@@ -1312,12 +1262,8 @@ object GridQueries {
     // its decode_cf reverses): offsets decode to timestamps lazily at
     // chunk-read time, _FillValue cells surface as SQL NULL
     "pivot_grid_cfvar" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_cfvar")(base =>
-        Fixtures.writeCfTimeVarTree(s"$base/store")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"cfvar@$root", store, store.chunkMap,
-          Seq("t"))
+      stagedGrid(s, "graft_cfvar", "cfvar", Seq("t"))(
+        Fixtures.writeCfTimeVarTree(_))
         .filter(col("obs").isNull ||
           col("obs") < lit("2021-01-01 12:00:00").cast("timestamp"))
         .select(col("t"), col("obs"), col("temp"))
@@ -1355,12 +1301,8 @@ object GridQueries {
     // across the null cells (IS NULL picks up every NaT hour, the
     // comparison silently skips them), matching xarray's NaT handling
     "pivot_grid_m8nat" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_m8nat")(base =>
-        Fixtures.writeM8NatTree(s"$base/store")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"m8nat@$root", store, store.chunkMap,
-          Seq("time"))
+      stagedGrid(s, "graft_m8nat", "m8nat", Seq("time"))(
+        Fixtures.writeM8NatTree(_))
         .filter(col("obs").isNull ||
           col("obs") < lit("2021-01-01 12:00:00").cast("timestamp"))
         .select(col("time"), col("obs"))
@@ -1370,11 +1312,7 @@ object GridQueries {
     // overflow past Long.Max (pinned in ZarrTimeDtypeSpec); values
     // past 2^40 prove genuine 64-bit width survives the pivot
     "pivot_grid_u8" -> ((s, _) => {
-      val root = QueryTmp.staged("graft_u8")(base =>
-        Fixtures.writeU8Tree(s"$base/store")) + "/store"
-      val store = graft.grid.ZarrGridStore.open(root)
-      new XarrayContext(s)
-        .dataFrame(s"u8@$root", store, store.chunkMap, Seq("i"))
+      stagedGrid(s, "graft_u8", "u8", Seq("i"))(Fixtures.writeU8Tree(_))
         .filter(col("i") >= 2)
         .select(col("i"), col("cnt"))
     }),

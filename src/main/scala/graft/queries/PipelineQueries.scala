@@ -358,9 +358,9 @@ object PipelineQueries {
   /** The image components staged once per JVM — the [[stagedClusters]]
     * discipline: the iterative min-label loop runs in ONE job chain
     * and its consumers read the materialized (id, cluster) table
-    * (nested staged build: pairs stage inside the cluster stage,
-    * reentrant on the QueryTmp.staged monitor). The oracle still
-    * replays the whole chain relationally, so the gate is unchanged.
+    * (nested staged build: pairs stage inside the cluster stage). The
+    * oracle still replays the whole chain relationally, so the gate is
+    * unchanged.
     */
   private def stagedDhashClusters(s: SparkSession, d: String): DataFrame =
     staged(s, d, "dhcc") {
@@ -378,21 +378,16 @@ object PipelineQueries {
     * on disk. Results never change: every consumer uses these as
     * pre-filters whose false positives are weeded by an exact join.
     */
-  private val objRegistry =
-    scala.collection.mutable.HashMap.empty[String, Any]
+  private val stagedObjects = new graft.Memo[String, Unit, Any]
 
   private def stagedObj[T](s: SparkSession, d: String, name: String)(
-      build: => T): T = {
+      build: => T): T =
     // sessionUUID, not identityHashCode: the hash can collide between
     // two live sessions, which would hand one session an object built
-    // under another's confs (same fix as Tables.relCache)
-    val key = s.sparkContext.applicationId + "|" +
+    // under another's confs
+    stagedObjects.get(s.sparkContext.applicationId + "|" +
       org.apache.spark.sql.graftinterop.ColumnInterop.sessionUUID(s) +
-      "|" + d + "|" + name
-    objRegistry.synchronized {
-      objRegistry.getOrElseUpdate(key, build).asInstanceOf[T]
-    }
-  }
+      "|" + d + "|" + name, ())(build).asInstanceOf[T]
 
   /** Build-once staging per (application, corpus dir, name) through
     * [[QueryTmp.staged]]: `build` writes whatever layout it wants (e.g.
@@ -411,8 +406,8 @@ object PipelineQueries {
 
   private def staged(s: SparkSession, d: String, name: String)(
       build: => DataFrame): DataFrame =
-    // staged paths are write-once per JVM (QueryTmp.staged serializes
-    // the build), so the resolved relation is memoizable like a base table
+    // staged paths are write-once per JVM, so the resolved relation is
+    // memoizable like a base table
     Tables.readParquet(s, stagedPath(s, d, name)(p => build.write.parquet(p)))
 
   /** The jaccardPairs -> connected-components labelling, staged once

@@ -29,8 +29,10 @@ object QueryTmp {
     p.toString
   }
 
-  private val stagedDirs =
-    scala.collection.mutable.HashMap.empty[(String, String), String]
+  /** Committed staged dirs per (`scope`, `name`); build-once
+    * (constant fingerprint).
+    */
+  private[graft] val staging = new graft.Memo[(String, String), Unit, String]
 
   /** Build-once staging: the first call for (`scope`, `name`) creates a
     * fresh dir (temp-dir prefix `name`), runs `build` against it, and
@@ -39,21 +41,11 @@ object QueryTmp {
     * is paid once per JVM (or per `scope`, e.g. one application and
     * corpus) instead of once per bench rep, so the benched number is
     * the read cost, not fixture I/O. Queries whose gate IS a write keep
-    * per-invocation [[dir]]s. The monitor serializes concurrent first
-    * builds, and is reentrant: one staged build may consume another.
+    * per-invocation [[dir]]s.
     */
   def staged(name: String, scope: String = "")(
-      build: String => Unit): String = synchronized {
-    stagedDirs.getOrElseUpdate((scope, name),
-      { val p = dir(name); build(p); p })
-  }
-
-  /** The committed JVM-wide staged dir for `name`, if built in this JVM
-    * — test introspection (a tmpdir prefix listing would be flaky
-    * against residue of killed JVMs or concurrent suites).
-    */
-  private[graft] def stagedLookup(name: String): Option[String] =
-    synchronized(stagedDirs.get(("", name)))
+      build: String => Unit): String =
+    staging.get((scope, name), ()) { val p = dir(name); build(p); p }
 
   private def deleteTree(p: Path): Unit =
     try {

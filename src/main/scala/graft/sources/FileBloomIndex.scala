@@ -6,8 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
-import scala.collection.concurrent.TrieMap
-
 /** File-level bloom index: per-bucket bloom filters over a
   * high-cardinality key column, for point lookups on a key the
   * physical LAYOUT is not organized by.
@@ -41,10 +39,8 @@ import scala.collection.concurrent.TrieMap
   * (the format of earlier builds) is rejected by every verb, naming
   * [[write]], rather than served or extended.
   *
-  * Read paths deserialize each shard once per JVM: a
-  * fingerprint-guarded memo (file names + mtimes + lengths from one
-  * listStatus — metadata only, zero data bytes) serves repeated
-  * lookups, and an append invalidates exactly the shards it swapped.
+  * Read paths deserialize each shard once per JVM ([[shardFilters]]),
+  * so repeated lookups read zero sidecar data bytes.
   *
   * The bloom law (no false negatives) makes pruning EXACT on the
   * miss side: a bucket the filter rejects provably lacks the key, so
@@ -113,7 +109,7 @@ object FileBloomIndex {
     // a rebuild may DROP shards whose stale cached filters would
     // otherwise linger forever (the fingerprint guard only covers
     // shards that still exist)
-    filterMemo.keys.filter(_._1 == path).foreach(filterMemo.remove)
+    shardFilters.dropWhere(_._1 == path)
   }
 
   /** Incremental ingest: MERGE the batch's blooms into the sidecar
@@ -192,7 +188,7 @@ object FileBloomIndex {
     // listing WITHOUT the batch's new bucket dirs under the post-swap
     // digest; no later digest change would evict it, so drop it here
     // (uncontended, the swap already rotated the digest: no extra list)
-    presentMemo.remove(path)
+    bucketListings.drop(path)
   }
 
   /** Test seam: runs between an append's sidecar swap and its data
@@ -284,7 +280,7 @@ object FileBloomIndex {
     // NOW so no same-JVM reader (or this method) can serve a stale
     // bucket set during the mutation window; the sidecar swap below
     // rotates the digest, so post-purge readers re-list exactly once
-    presentMemo.remove(path)
+    bucketListings.drop(path)
     // locate: bloom-candidate buckets for the tombstoned keys
     // (executor-side, a superset), then an exact pruned confirm —
     // only buckets PROVABLY holding dead rows rewrite
@@ -336,7 +332,7 @@ object FileBloomIndex {
       def dropShard(lo: Int): Unit = {
         val s = shardSlot(path, lo, bps)
         Seq(s.live, s.next, s.old).foreach(fs.delete(_, true))
-        filterMemo.remove((path, shardName(lo, bps)))
+        shardFilters.drop((path, shardName(lo, bps)))
       }
       val newRows = (oldTouched -- touched) ++ freshBlooms
       import spark.implicits._
@@ -366,7 +362,7 @@ object FileBloomIndex {
     // a reader may have re-listed (and memoized) between the sidecar
     // swap and the deletes above — drop the entry once more so the
     // post-purge state is re-listed exactly once
-    presentMemo.remove(path)
+    bucketListings.drop(path)
     // (4) tombstones LAST: every earlier crash state still masks
     IndexLifecycle.clearTombstones(fs, path)
   }
@@ -384,16 +380,13 @@ object FileBloomIndex {
       .distinct().collect().map(_.getInt(0)).sorted
   }
 
-  /** Data-root listing memo for [[existingBucketPaths]], keyed by the
-    * sidecar fingerprint digest (see [[loadFiltersFp]]): the bucket
-    * dir SET only changes through verbs that also swap sidecar shard
-    * dirs, so an unchanged digest serves the listing with zero
-    * metadata round-trips. Append drops the entry after its data
-    * write and purge around its data-dir deletes, so a lookup racing
-    * either verb cannot pin a stale listing under the new digest.
+  /** Data-root listings for [[existingBucketPaths]] per index path;
+    * fingerprint: the sidecar digest of [[loadFiltersFp]]. The bucket
+    * dir set only changes through verbs that also swap sidecar shard
+    * dirs, and append and purge drop the entry around their data
+    * writes and deletes.
     */
-  private val presentMemo =
-    TrieMap.empty[String, (String, Set[String])]
+  private val bucketListings = new graft.Memo[String, String, Set[String]]
 
   /** Bucket dirs that actually EXIST, as read paths: a bloom may
     * transiently name a bucket whose dir a purge already removed (the
@@ -404,19 +397,12 @@ object FileBloomIndex {
   private def existingBucketPaths(fs: org.apache.hadoop.fs.FileSystem,
       path: String, buckets: Seq[Int], fpDigest: String): Seq[String] = {
     if (buckets.isEmpty) return Seq.empty
-    val present = presentMemo.get(path) match {
-      case Some((d, p)) if d == fpDigest => p
-      case _ =>
-        // ONE listStatus of the data root (not one exists() RPC per
-        // candidate — on an object store that would charge every
-        // lookup a metadata round-trip per bucket, forever, to guard
-        // a rare crash window), then memoized until the sidecar
-        // fingerprints move
-        val p = fs.listStatus(hp(s"$path/data")).toSeq
-          .map(_.getPath.getName).toSet
-        presentMemo.put(path, (fpDigest, p))
-        p
-    }
+    // ONE listStatus of the data root (not one exists() RPC per
+    // candidate — on an object store that would charge every lookup a
+    // metadata round-trip per bucket, forever, to guard a rare crash
+    // window), then memoized until the sidecar fingerprints move
+    val present = bucketListings.get(path, fpDigest)(
+      fs.listStatus(hp(s"$path/data")).toSeq.map(_.getPath.getName).toSet)
     buckets.collect { case b if present(s"fbib=$b") =>
       s"$path/data/fbib=$b" }
   }
@@ -533,20 +519,16 @@ object FileBloomIndex {
 
   // ---- per-JVM filter memo ----
 
-  /** Deserialized filters per (index path, shard), guarded by the
-    * shard's file fingerprint (names + mtimes + lengths from one
-    * listStatus — metadata only): repeated lookups in a session read
-    * ZERO sidecar data bytes (pinned in FileBloomIndexSpec), and an
-    * append invalidates exactly the shards it swapped (the swap
-    * replaces the shard dir, so every fingerprint facet changes).
-    * BloomFilter reads are thread-safe (mightContain only reads the
-    * bit array), so sharing one instance across queries is sound.
+  /** Deserialized filters per (index path, shard); fingerprint: the
+    * shard dir's file names, mtimes and lengths from one listStatus
+    * (metadata only). A swap replaces the shard dir, so every facet
+    * changes. BloomFilter reads are thread-safe (mightContain only
+    * reads the bit array), so one instance serves every query.
     */
-  private val filterMemo =
-    TrieMap.empty[(String, String), (Seq[(String, Long, Long)],
-      Array[(Int, BloomFilter)])]
+  private val shardFilters = new graft.Memo[(String, String),
+    Seq[(String, Long, Long)], Array[(Int, BloomFilter)]]
 
-  /** Every bucket's filter, memoized per shard (see [[filterMemo]]).
+  /** Every bucket's filter, memoized per shard (see [[shardFilters]]).
     * Loud when the index has no sidecar.
     */
   private[graft] def loadFilters(spark: SparkSession,
@@ -556,7 +538,7 @@ object FileBloomIndex {
   /** [[loadFilters]] plus the sidecar FINGERPRINT DIGEST the filters
     * were validated against (every shard's name + file fingerprints,
     * already computed for the per-shard memo guard — no extra
-    * metadata round-trip). The digest keys [[presentMemo]]: every
+    * metadata round-trip). The digest guards [[bucketListings]]: every
     * mutation that can change the data-bucket dir set (write, append,
     * tombstone purge) swaps or drops sidecar shard dirs in the same
     * operation, so an unchanged digest proves the bucket listing is
@@ -577,10 +559,9 @@ object FileBloomIndex {
       val loaded = scala.collection.mutable.Map
         .empty[String, Array[(Int, BloomFilter)]]
       val misses = withFp.filter { case (_, _, dir, fp) =>
-        filterMemo.get((path, dir.getName)) match {
-          case Some((cachedFp, filters)) if cachedFp == fp =>
-            loaded(dir.getName) = filters; false
-          case _ => true
+        shardFilters.peek((path, dir.getName), fp) match {
+          case Some(filters) => loaded(dir.getName) = filters; false
+          case None => true
         }
       }
       if (misses.nonEmpty) {
@@ -591,7 +572,7 @@ object FileBloomIndex {
         misses.foreach { case (lo, cnt, dir, fp) =>
           val mine = rows.filter { case (b, _) => b >= lo && b < lo + cnt }
             .sortBy(_._1)
-          filterMemo.put((path, dir.getName), (fp, mine))
+          shardFilters.put((path, dir.getName), fp, mine)
           loaded(dir.getName) = mine
         }
       }

@@ -10,7 +10,6 @@ import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 /** Standard-Spark entry point for Zarr trees:
@@ -290,26 +289,16 @@ private[sources] object ZarrWrite {
 }
 
 object ZarrTableProvider {
-  // DSv2 calls inferSchema and getTable with the same options in one
-  // load(); cache the opened store per root so the tree's metadata is
-  // fetched once, not once per callback. Entries are metadata-sized and
-  // SELF-INVALIDATING: the key carries the root metadata file's
-  // (length, mtime), so a mutated tree (append, rewrite,
-  // re-consolidate) is re-opened on the next load() — one metadata HEAD
-  // per load() is the price, hundreds of per-array reads the saving.
-  private val cache =
-    new ConcurrentHashMap[(String, Long, Long), ZarrGridStore]()
+  /** Opened stores per root; fingerprint: [[versionOf]]. */
+  private val stores = new graft.Memo[String, (Long, Long), ZarrGridStore]
 
-  /** Drop every cached open of `root`. Loads revalidate automatically
-    * against the root metadata version; this exists for tests and for
-    * stores mutated through side channels that preserve metadata
-    * length + mtime.
+  /** The store at `root`, opened once per tree version. DSv2 calls
+    * inferSchema and getTable with the same options in one load(), and
+    * the staged grid queries re-open their trees on every build: both
+    * share this open instead of re-reading the tree's metadata.
     */
-  def invalidate(root: String): Unit = {
-    val clean = root.stripSuffix("/")
-    cache.keySet.removeIf(_._1 == clean)
-    ()
-  }
+  private[graft] def open(root: String): ZarrGridStore =
+    stores.get(root, versionOf(root))(ZarrGridStore.open(root))
 
   /** Resolve the effective tree root: `group` selects a subgroup of a
     * hierarchical tree (xarray's open_zarr/to_zarr `group=` spelling) —
@@ -329,7 +318,7 @@ object ZarrTableProvider {
     }.getOrElse(base)
   }
 
-  /** Content-version key of a tree: length + mtime of whichever root
+  /** Content version of a tree: length + mtime of whichever root
     * metadata file the open path would read first. Any append or
     * rewrite rewrites that file.
     */
@@ -347,11 +336,7 @@ object ZarrTableProvider {
       throw new IllegalArgumentException(
         "zarr: no path given (use spark.read.format(\"zarr\").load(<root>))"))
     val root = groupRoot(path, options)
-    val (len, mtime) = versionOf(root)
-    val key = (root, len, mtime)
-    // drop superseded versions of the same root before (re-)opening
-    cache.keySet.removeIf(k => k._1 == root && k != key)
-    val store = cache.computeIfAbsent(key, _ => ZarrGridStore.open(root))
+    val store = open(root)
     val groupDims = Option(options.get("dims")) match {
       case Some(ds) =>
         val dims = ds.split(",").map(_.trim).filter(_.nonEmpty).toSeq

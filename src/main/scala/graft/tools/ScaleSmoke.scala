@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 scale smoke for the heavy-tail pipeline queries: builds a 10x
@@ -22,14 +21,7 @@ object ScaleSmoke {
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
       "/root/repo/tmp-scale/sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus)
 
     val docs1 = s"$sf1Dir/documents.parquet"
     if (!new java.io.File(docs1).exists()) {

@@ -23,18 +23,17 @@ class ConcurrentEvalSpec extends SparkTestBase {
     // round-11 STAGED fixtures: two concurrent FIRST evaluations must
     // serialize the build (QueryTmp.staged) and share one committed
     // store — plus the group query goes through the zarr provider's
-    // path-keyed cache concurrently
+    // root-keyed store memo concurrently
     "pivot_grid_group", "pivot_grid_zarr",
     // round-12 continuation staged fixtures: the z-ordered events
     // table, the PQ codebook+codes pair (whose first build NESTS a
-    // second staged build — reentrant on the QueryTmp.staged monitor),
+    // second staged build of another key),
     // and the composed IVF-PQ consumer of both kmeans and PQ stages
     "zorder_prune", "embed_pq", "ann_ivfpq",
     // round-12 fourth continuation staged fixtures: the bloom index
     // (point build; the incremental and compacted variants NEST a
     // write+append(+compact) sequence in one staged build) and the
-    // SQ8 probe (whose codes stage nests the quantizer stage —
-    // reentrant on the QueryTmp.staged monitor)
+    // SQ8 probe (whose codes stage nests the quantizer stage)
     "bloom_point_lookup", "bloom_lookup_incremental",
     "bloom_lookup_compacted", "ann_sq8",
     // round-13 staged fixtures: the retrained IVF index (build +

@@ -30,9 +30,9 @@ class GridQueryE2ESpec extends SparkTestBase {
     // t >= 12 with t chunked by 6 over 0..23 -> scan opens 2 of 4 chunks
     assert(ReadCounters.partitionsOpened.sum() == 2L)
     // the scan provably hit zstd chunk files written by the writer —
-    // resolve the staged dir through the registry, not a tmpdir
+    // resolve the staged dir through the staging memo, not a tmpdir
     // listing (robust against residue of killed JVMs)
-    val root = graft.queries.QueryTmp.stagedLookup("graft_disk_grid")
+    val root = QueryTmp.staging.peek(("", "graft_disk_grid"), ())
       .getOrElse(fail("disk fixture was not staged")) + "/store"
     val files = new java.io.File(root, "air").listFiles()
     assert(files != null &&
